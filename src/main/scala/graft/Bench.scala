@@ -98,32 +98,8 @@ object Bench {
           false
         }
       val dt = (System.nanoTime() - t0) / 1e9
-      // drop this query's cached/broadcast state so later queries
-      // aren't taxed by its heap residue. Runs PER EXECUTION (untimed
-      // — dt is already captured): localCheckpoint RDDs and per-round
-      // broadcasts are reclaimed by the async ContextCleaner only
-      // after their references are collected, and the iterative
-      // queries (connected components) otherwise degrade rep-over-rep
-      // as checkpoint blocks pile up (measured: 8 s → 19 s → 26 s
-      // across three reps of q69).
-      try spark.catalog.clearCache() catch { case _: Throwable => }
-      // clearCache only empties the SQL CacheManager; localCheckpoint
-      // blocks are RDD-level persists invisible to it. Unpersist them
-      // explicitly and SYNCHRONOUSLY (blocking=true): non-blocking
-      // removal raced the next query's allocation AND the GC-driven
-      // ContextCleaner, which re-requested removal of already-gone
-      // blocks ("Asked to remove block rdd_*, which does not exist"
-      // warnings in the r4 driver tail).
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      catch { case _: Throwable => }
-      // GC enqueues the dead references; the ContextCleaner drains
-      // the queue ASYNCHRONOUSLY, so give it a beat before the next
-      // query starts allocating — without the pause the iterative
-      // queries still crept rep-over-rep (checkpoint blocks from
-      // rep N alive through rep N+1).
-      System.gc()
-      Thread.sleep(200)
+      // per execution, untimed (dt is already captured)
+      Sessions.release(spark)
       if (ok) {
         timesBy(name) = timesBy(name) :+ dt
         startsBy(name) = startsBy(name) :+ tWall
@@ -167,12 +143,7 @@ object Bench {
         try { materialize(fn(spark, sfDir)); true }
         catch { case _: Throwable => false }
       val dt = (System.nanoTime() - t0) / 1e9
-      try spark.catalog.clearCache() catch { case _: Throwable => }
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      catch { case _: Throwable => }
-      System.gc()
-      Thread.sleep(200)
+      Sessions.release(spark)
       if (ok) {
         timesBy(name) = timesBy(name) :+ dt
         startsBy(name) = startsBy(name) :+ tWall

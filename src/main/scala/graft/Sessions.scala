@@ -46,4 +46,22 @@ object Sessions {
       sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "true"))
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.cleaner.periodicGC.interval", "60s")
+
+  /** Drop one query's cached and checkpointed state before the next
+    * starts. `clearCache` empties only the SQL CacheManager, so every
+    * persistent RDD (localCheckpoint blocks) is unpersisted too, and
+    * SYNCHRONOUSLY — non-blocking removal raced the next query and the
+    * ContextCleaner (r4 driver tail). GC then enqueues the dead
+    * references and the async cleaner needs a beat to drain them;
+    * without it iterative queries crept rep-over-rep (q69: 8 s → 19 s
+    * → 26 s). Best effort: a failure here must not fail the caller.
+    */
+  def release(spark: SparkSession): Unit = {
+    try spark.catalog.clearCache() catch { case _: Throwable => }
+    try spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    catch { case _: Throwable => }
+    System.gc()
+    Thread.sleep(200)
+  }
 }

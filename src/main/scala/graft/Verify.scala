@@ -35,12 +35,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // queries that persist intermediates (dedup shingle relations)
-      // must not pin the heap for the rest of the run; localCheckpoint
-      // blocks are RDD-level persists that clearCache doesn't see
-      try spark.catalog.clearCache() catch { case _: Throwable => }
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      catch { case _: Throwable => }
+      // must not pin the heap for the rest of the run
+      Sessions.release(spark)
     }
     import graft.tools.Json.{str => q}
     val json = SparkEntry.oracleSql

@@ -50,7 +50,7 @@ final class KnowledgeGraph(spark: SparkSession, dir: String,
         // the reused plan can never go stale in-session.
         KnowledgeGraph.resolvedIndexed(spark, full) {
           Artifact.ensure(full)(tmp =>
-            build.write.mode("overwrite").parquet(tmp))
+            build.write.parquet(tmp))
         }
     }
 

@@ -1,32 +1,29 @@
 package graft.operators
 
 import java.io.File
-import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardCopyOption}
-import java.util.UUID
+import java.nio.file.{Files, Paths}
 
-/** Atomic publish-once protocol for persisted derived artifacts
-  * (cluster labels, IVF indexes, shingle relations).
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
+
+/** Publish-once protocol for persisted derived artifacts (cluster
+  * labels, IVF indexes, shingle relations).
   *
   * The naive `if (!exists) write(path)` is a non-atomic
   * check-then-write: two concurrent consumers can both miss the
   * completeness marker and overwrite the same path while a third
-  * reads it, observing a partial directory. The protocol here is the
-  * standard one (same shape as Spark's own FileOutputCommitter v1
-  * job-commit rename):
+  * reads it, observing a partial directory. [[ensure]] builds through
+  * [[Publish]] (stage into a hidden sibling, swap in on success) and
+  * adds what a build-once artifact needs on top:
   *
-  *   1. build into a unique SIBLING temp dir (same filesystem, so the
-  *      rename below is a metadata-only atomic move),
-  *   2. atomically rename it onto the final path,
-  *   3. a loser of a cross-process race gets FileAlreadyExists /
-  *      DirectoryNotEmpty from the rename, re-checks completeness,
-  *      and discards its own build — the artifacts are deterministic,
-  *      so whichever build won is bit-identical.
-  *
-  * In-process, a per-path lock serializes builders so a parallel
-  * query runner (q69/q90/q125 all ensuring the same labels) builds
-  * once instead of three times. On an object store (the 100 TB
-  * deployment) step 2 becomes the store's atomic rename or a
-  * conditional-put manifest commit; the protocol shape is unchanged.
+  *   - in-process, a per-path lock serializes builders, so a parallel
+  *     query runner (q69/q90/q125 all ensuring the same labels) builds
+  *     once instead of three times;
+  *   - a loser of a cross-process race finds the artifact complete
+  *     after its build and discards its own copy — the artifacts are
+  *     deterministic, so whichever build won is bit-identical;
+  *   - an INCOMPLETE destination (a crashed or pre-protocol writer's
+  *     partial files) is replaced like any prior generation.
   */
 object Artifact {
   private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
@@ -57,10 +54,10 @@ object Artifact {
     } catch { case _: Exception => () }
 
   /** Ensure a complete artifact exists at `path`: if `isComplete(path)`
-    * is false, run `build(tmpDir)` against a unique sibling temp dir
-    * and atomically rename it into place. Safe under concurrent
-    * callers in this JVM (per-path lock) and across JVMs (rename
-    * losers verify completeness and discard).
+    * is false, run `build(tmp)` against a [[Publish]] staging dir and
+    * swap it into place. Safe under concurrent callers in this JVM
+    * (per-path lock) and across JVMs (a loser that finds the artifact
+    * complete drops its own build).
     */
   def ensure(path: String, isComplete: String => Boolean = complete)
             (build: String => Unit): Unit = {
@@ -68,48 +65,19 @@ object Artifact {
     val lock = locks.computeIfAbsent(path, _ => new Object)
     lock.synchronized {
       if (isComplete(path)) return
-      // reclaim debris from dead builders (a hard-killed JVM never
-      // reaches the finally below, and each attempt uses a fresh UUID
-      // so nothing else would ever delete the old temp dirs). The
-      // per-path lock only serializes THIS JVM — another process may
-      // be mid-build right now, so only sweep dirs whose entire tree
-      // has been quiet for longer than any live build could be: a
-      // live writer creates part files continuously, keeping its
-      // newest mtime fresh, while a dead builder's tree goes stale.
-      val parent = new File(path).getParentFile
-      val prefix = s"${new File(path).getName}.inprogress-"
-      val staleMs = 30L * 60 * 1000
-      val now = System.currentTimeMillis()
-      Option(parent.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith(prefix) && now - newestMtime(f) > staleMs)
-        .foreach(deleteRecursively)
-      val tmp = s"$path.inprogress-${UUID.randomUUID().toString.take(8)}"
-      try {
-        build(tmp)
+      val conf = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+        .fold(new org.apache.hadoop.conf.Configuration())(_.sessionState.newHadoopConf())
+      Publish.stageAndSwap(conf, Seq(path), isComplete) { staged =>
+        build(staged.head)
         // builds that assemble the directory by hand (moving bare
         // part-files) produce no _SUCCESS marker, so `complete` would
         // stay false forever and every resolve would rebuild and
-        // re-publish (and a cross-JVM reader could see the shared dir
-        // deleted mid-read). The build lambda ran to completion, so
-        // the directory IS complete — stamp it if the writer didn't.
-        val built = new File(tmp)
-        if (built.isDirectory) { new File(built, "_SUCCESS").createNewFile(); () }
-        try publish(tmp, path)
-        catch {
-          // another process published first; ours is identical — drop it
-          case (_: FileAlreadyExistsException | _: java.nio.file.FileSystemException)
-              if isComplete(path) => ()
-          // the destination exists but is INCOMPLETE (a crashed or
-          // pre-protocol writer left partial files, so no concurrent
-          // ensure can be mid-publish): replace the debris with our
-          // complete build — without this, every retry fails until
-          // someone deletes the directory by hand
-          case (_: FileAlreadyExistsException | _: java.nio.file.FileSystemException)
-              if new File(path).exists() && !isComplete(path) =>
-            deleteRecursively(new File(path))
-            publish(tmp, path)
-        }
-      } finally deleteRecursively(new File(tmp))
+        // re-publish. The build ran to completion, so the directory IS
+        // complete — stamp it if the writer didn't.
+        val dir = new Path(staged.head)
+        val fs = dir.getFileSystem(conf)
+        if (fs.isDirectory(dir)) { fs.createNewFile(new Path(dir, "_SUCCESS")); () }
+      }
     }
   }
 
@@ -119,9 +87,7 @@ object Artifact {
     * index appender) and therefore accepts hdfs:// / s3a:// paths:
     * a `java.io.File` check there would silently report "absent" for
     * every remote path, making the caller treat a populated archive
-    * as empty. (The [[ensure]] protocol itself stays local-FS by
-    * design — its atomic-rename publish is documented to map onto an
-    * object store's rename/conditional-put, not to run against one.)
+    * as empty.
     */
   def hadoopDirExists(spark: org.apache.spark.sql.SparkSession,
                       path: String): Boolean = {
@@ -218,9 +184,6 @@ object Artifact {
     }
     b.toString
   }
-
-  private def publish(tmp: String, path: String): Unit =
-    Files.move(Paths.get(tmp), Paths.get(path), StandardCopyOption.ATOMIC_MOVE)
 
   private def newestMtime(f: File): Long = {
     val children =

@@ -845,7 +845,7 @@ object Dedup {
     def ok(p: String) = Artifact.complete(p) && Artifact.metaMatches(p, meta)
     Artifact.ensure(full, ok) { tmp =>
       jaccardPairs(docs, idName, textName, n, threshold, maxShingleFreq,
-        shingles).write.mode("overwrite").parquet(tmp)
+        shingles).write.parquet(tmp)
       Artifact.writeMeta(tmp, meta)
     }
     spark.read.parquet(full)
@@ -888,7 +888,7 @@ object Dedup {
     def ok(p: String) = Artifact.complete(p) && Artifact.metaMatches(p, meta)
     Artifact.ensure(full, ok) { tmp =>
       jaccardClusters(docs, idName, textName, n, threshold, maxShingleFreq,
-        shingles).write.mode("overwrite").parquet(tmp)
+        shingles).write.parquet(tmp)
       Artifact.writeMeta(tmp, meta)
     }
     spark.read.parquet(full)
@@ -917,7 +917,7 @@ object Dedup {
     def ok(p: String) = Artifact.complete(p) && Artifact.metaMatches(p, meta)
     Artifact.ensure(full, ok) { tmp =>
       hashedShingleSets(docs, idName, textName, n)
-        .write.mode("overwrite").parquet(tmp)
+        .write.parquet(tmp)
       Artifact.writeMeta(tmp, meta)
     }
     // the field-metadata check proves the parquet round-trip preserved

@@ -42,35 +42,27 @@ object InvertedIndex {
     * archive (fixed hash parameters) only approximate: per-document
     * index state has no globally-trained component at all. Batch and
     * archive id spaces must be disjoint (a re-ingested id would
-    * double-count its term frequencies) — ENFORCED with a loud
-    * rejection before any file is written, the requireShingleN /
-    * requireBandParams discipline: one semi-join against the archived
-    * ids, `take(1)` so the driver stops pulling partitions at the
-    * first surfaced overlap (the scan side of the semi-join still
-    * reads the archived index — O(archive) per append, a build-time
-    * step off every query path). Not crash-atomic — run
-    * inside the caller's publish step (an [[Artifact.ensure]] build),
-    * like every other append here. Each append lands one file set —
-    * fold the postings with [[graft.sources.Compaction
-    * .compactAppends]] between appends at high cadence.
+    * double-count its term frequencies) — ENFORCED in-row: any
+    * clashing id raises a [[Publish]] guard inside the append job, so
+    * nothing commits (the scan side of the semi-join reads the
+    * archived ids — O(archive) per append, a build-time step off every
+    * query path). Each append lands one file set — fold the postings
+    * with [[graft.sources.Compaction.compactAppends]] between appends
+    * at high cadence.
     */
   def appendPostings(indexPath: String, newDocs: DataFrame,
                      idName: String, text: Column): Unit = {
+    val spark = newDocs.sparkSession
+    val postings = build(newDocs, idName, text)
     // bootstrap: appending to a not-yet-existing index creates
-    // generation 0 (the pre-guard behavior — nothing to clash with).
-    // Hadoop-FS check: the read/write below accept remote indexPaths,
-    // and a java.io.File check would silently skip the guard there
-    if (Artifact.hadoopDirExists(newDocs.sparkSession, indexPath)) {
-      val archivedIds = newDocs.sparkSession.read.parquet(indexPath)
-        .select(col(idName))
-      val clash = newDocs.select(col(idName))
-        .join(archivedIds, Seq(idName), "left_semi").take(1)
-      require(clash.isEmpty,
-        s"appendPostings: batch re-ingests archived $idName " +
-          s"${clash.head.get(0)} — id spaces must be disjoint")
-    }
-    build(newDocs, idName, text)
-      .write.mode("append").parquet(indexPath)
+    // generation 0 (nothing to clash with). Hadoop-FS check: the
+    // read/write accept remote indexPaths, and a java.io.File check
+    // would silently skip the guard there
+    val out =
+      if (!Artifact.hadoopDirExists(spark, indexPath)) postings
+      else Similarity.withIdsDisjointGuard(postings, newDocs, spark, indexPath,
+        idName, "appendPostings")
+    Publish.guarded(out.write.mode("append").parquet(indexPath))
   }
 
   /** Document frequency per term — the index's dictionary. */

@@ -149,8 +149,8 @@ object NbClassify {
 
   /** Train and persist the model as generation 0: per-(class, token)
     * counts under `modelPath/counts/batch=0` and per-class doc counts
-    * under `modelPath/classdocs/batch=0`. Published atomically
-    * ([[Artifact.ensure]] in callers that need absence-checks).
+    * under `modelPath/classdocs/batch=0`, published together through
+    * [[Publish]].
     */
   def buildNbModel(train: DataFrame, labelName: String, text: Column,
                    modelPath: String): Unit =
@@ -159,9 +159,11 @@ object NbClassify {
   /** Append a labeled batch as the model's next generation `gen`.
     * Overwrite semantics per generation — an at-least-once retry of
     * the same `gen` replaces rather than double-counts (the streaming
-    * sink discipline). The caller owns generation numbering; writing
-    * a batch under TWO different gens double-counts it, loudly
-    * impossible to distinguish from intent — hence the explicit id.
+    * sink discipline), and a rejected batch (a NULL label) leaves the
+    * generation it would replace as it was. The caller owns generation
+    * numbering; writing a batch under TWO different gens double-counts
+    * it, loudly impossible to distinguish from intent — hence the
+    * explicit id.
     */
   def appendNbModel(batch: DataFrame, labelName: String, text: Column,
                     modelPath: String, gen: Long): Unit = {
@@ -173,16 +175,17 @@ object NbClassify {
   private def writeNbGeneration(df: DataFrame, labelName: String,
                                 text: Column, modelPath: String,
                                 gen: Long): Unit = {
-    val nullLab = df.filter(col(labelName).isNull).take(1)
-    require(nullLab.isEmpty,
-      s"NB model generation $gen: a NULL $labelName row — label it or " +
-        "filter it explicitly")
-    val tok = df.select(col(labelName).as("c"),
-      explode(TextFns.tokens(text)).as("token"))
-    tok.groupBy(col("c"), col("token")).agg(count(lit(1)).as("ct"))
-      .write.mode("overwrite").parquet(s"$modelPath/counts/batch=$gen")
-    df.groupBy(col(labelName).as("c")).agg(count(lit(1)).as("nd"))
-      .write.mode("overwrite").parquet(s"$modelPath/classdocs/batch=$gen")
+    val c = when(col(labelName).isNull, Publish.raise(lit(
+        s"NB model generation $gen: a NULL $labelName row — label it or " +
+          "filter it explicitly")))
+      .otherwise(col(labelName)).as("c")
+    Publish.dirs(df.sparkSession, Seq(s"$modelPath/counts/batch=$gen",
+        s"$modelPath/classdocs/batch=$gen")) { case Seq(counts, classdocs) =>
+      df.select(c, explode(TextFns.tokens(text)).as("token"))
+        .groupBy(col("c"), col("token")).agg(count(lit(1)).as("ct"))
+        .write.parquet(counts)
+      df.groupBy(c).agg(count(lit(1)).as("nd")).write.parquet(classdocs)
+    }
   }
 
   /** Predict from the persisted model: re-aggregate the accumulated

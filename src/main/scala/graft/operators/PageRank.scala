@@ -99,7 +99,7 @@ object PageRank {
       Artifact.ensure(ep) { tmp =>
         val e = edges
         e.join(e.groupBy(col("src")).agg(count(lit(1)).as("__deg")), "src")
-          .write.mode("overwrite").parquet(tmp)
+          .write.parquet(tmp)
       }
       // derive nodes from the just-PUBLISHED edges parquet, not the raw
       // edge DAG: the inner degree join keeps every edge, so the
@@ -110,7 +110,7 @@ object PageRank {
         val nodes = e.select(col("src").as("id"))
           .union(e.select(col("dst").as("id"))).distinct()
         nodes.crossJoin(broadcast(nodes.agg(count(lit(1)).as("__n"))))
-          .write.mode("overwrite").parquet(tmp)
+          .write.parquet(tmp)
       }
     }
     (spark.read.parquet(ep), spark.read.parquet(np))

@@ -89,7 +89,7 @@ object RangeJoin {
     def binned(df: DataFrame, s: String, e: String): DataFrame = {
       val checked = df.filter(
         when(col(s) <= col(e), lit(true))
-          .otherwise(raise_error(concat(
+          .otherwise(Publish.raise(concat(
             lit(s"inverted interval in $s/$e: "), col(s), lit(" > "), col(e)))))
       checked.withColumn("__bin", explode(sequence(bin(col(s)), bin(col(e)))))
     }
@@ -132,7 +132,7 @@ object RangeJoin {
     val opens = when(runMax.isNull || col(start) > runMax + lit(maxGap), 1L).otherwise(0L)
     df.filter(
         when(col(start) <= col(end), lit(true))
-          .otherwise(raise_error(concat(
+          .otherwise(Publish.raise(concat(
             lit(s"inverted interval in $start/$end: "), col(start), lit(" > "), col(end)))))
       .withColumn("__island", sum(opens).over(order))
       .groupBy(col(key), col("__island"))

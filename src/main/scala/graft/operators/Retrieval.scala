@@ -59,7 +59,7 @@ object Retrieval {
         .agg(sort_array(collect_list(keyed)).as("__l"))
         .select(posexplode(col("__l")).as(Seq("__p", "__e")))
         .select(col("__e.__id").as(idName),
-          when(col("__p") >= maxN, raise_error(lit(
+          when(col("__p") >= maxN, Publish.raise(lit(
             s"rrf: input ranking exceeds maxN=$maxN rows — RRF fuses " +
               "k-bounded top-N lists; pre-truncate the ranking or pass " +
               "a larger maxN (silent truncation would change fused " +

@@ -150,9 +150,8 @@ object SegmentOps {
   def bootstrapCdcChunkArchive(docs: DataFrame, idName: String,
                                text: Column, boundary256: Int,
                                archivePath: String): Unit = {
-    cdcChunkArchive(docs, idName, text, boundary256)
-      .write.mode("overwrite").parquet(s"$archivePath/batch=-1")
-    ()
+    Publish.parquet(cdcChunkArchive(docs, idName, text, boundary256),
+      s"$archivePath/batch=-1")
   }
 
   /** Batch-over-archive [[dedupSegmentsCdc]] — the continuous-
@@ -176,10 +175,10 @@ object SegmentOps {
     * anti-join the batch's own just-appended fingerprints (the flat-
     * append failure mode: `fresh` empties and every document silently
     * reports n_kept=0); (2) the dedup output is computed against that
-    * pre-append view and materialized, and the novel fingerprints are
-    * materialized too (localCheckpoint — the write job must not scan
-    * the directory it is about to mutate); (3) the novel fingerprints
-    * OVERWRITE `batch=<batchId>` — a retry reproduces byte-identical
+    * pre-append view and materialized (localCheckpoint — the shared
+    * chunk relation is released before the caller consumes it);
+    * (3) the novel fingerprints replace `batch=<batchId>` through
+    * [[Publish]] — a retry reproduces byte-identical
     * content; a NEW batch must use a fresh id. Pre-existing
     * generations stay byte-identical (spec-pinned), and the archive
     * equals `cdcChunkArchive(history ∪ batch)` as a set afterwards.
@@ -221,17 +220,11 @@ object SegmentOps {
     val (out0, freshMd5) =
       dedupSegsVsArchive(batch, idName, text, boundary256, arch, Some(segs))
     val out = out0.localCheckpoint(true)
-    // materialize the novel fingerprints BEFORE the write mutates the
-    // directory their plan scans (partition pruning already skips the
-    // own-generation dir, but an eventually-consistent store or a
-    // re-planned relation must not be able to observe the overwrite)
-    val fresh = freshMd5.localCheckpoint(true)
     // generation sized to the trigger's input partitioning (the
     // neardupBatch small-file rule — the fingerprint relation is tiny
     // relative to the batch text)
     val genParts = math.max(1, batch.rdd.getNumPartitions)
-    fresh.repartition(genParts)
-      .write.mode("overwrite").parquet(s"$archivePath/batch=$batchId")
+    Publish.parquet(freshMd5.repartition(genParts), s"$archivePath/batch=$batchId")
     segs.unpersist()
     out
   }

@@ -403,19 +403,22 @@ object Similarity {
   def buildIvfIndex(embeddings: DataFrame, idName: String, vecName: String,
                     nlist: Int, indexPath: String): Unit = {
     val spark = embeddings.sparkSession
-    val cents = trainCentroids(embeddings, idName, vecName, nlist)
-    embeddings.withColumn("__cid", nearestCid(col(vecName), cents))
-      .write.mode("overwrite").partitionBy("__cid")
-      .parquet(s"$indexPath/vectors")
-    writeCentroids(spark, cents, indexPath)
-    // build-time per-list baseline (occupancy + mean residual): the
-    // reference point [[ivfDriftReport]] measures append drift
-    // against. Computed from the WRITTEN vectors table (the
-    // assignment pass is not repeated) — list-count-sized.
-    listStats(spark.read.parquet(s"$indexPath/vectors"), cents, vecName)
-      .withColumnRenamed("n", "n_build")
-      .withColumnRenamed("resid_e6", "resid_build_e6")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/stats")
+    Publish.dirs(spark, Seq("vectors", "centroids", "stats")
+        .map(d => s"$indexPath/$d")) { case Seq(vectors, centroids, stats) =>
+      val emb = nonNullVecs(embeddings, vecName, "buildIvfIndex")
+      val cents = trainCentroids(emb, idName, vecName, nlist)
+      emb.withColumn("__cid", nearestCid(col(vecName), cents))
+        .write.partitionBy("__cid").parquet(vectors)
+      writeCentroids(spark, cents, centroids)
+      // build-time per-list baseline (occupancy + mean residual): the
+      // reference point [[ivfDriftReport]] measures append drift
+      // against. Computed from the WRITTEN vectors table (the
+      // assignment pass is not repeated) — list-count-sized.
+      listStats(spark.read.parquet(vectors), cents, vecName)
+        .withColumnRenamed("n", "n_build")
+        .withColumnRenamed("resid_e6", "resid_build_e6")
+        .coalesce(1).write.parquet(stats)
+    }
   }
 
   /** Build the IVF index only if it is not already on disk (vectors
@@ -428,8 +431,8 @@ object Similarity {
     def ok(p: String) =
       Artifact.complete(s"$p/vectors") && Artifact.complete(s"$p/centroids") &&
         Artifact.complete(s"$p/stats")
-    // all pieces publish together: build under a temp root, rename
-    // the ROOT into place (Artifact.ensure), so a reader never sees
+    // all pieces publish together: build under a staged root, swap the
+    // ROOT into place (Artifact.ensure), so a reader never sees
     // vectors without the sidecars
     Artifact.ensure(indexPath, ok) { tmp =>
       buildIvfIndex(embeddings, idName, vecName, nlist, tmp)
@@ -527,33 +530,40 @@ object Similarity {
     * documented debt: after enough appends the lists no longer
     * reflect the data distribution and recall degrades — re-train by
     * rebuilding (ensureIvfIndex on the union) when probe recall
-    * drops. Not crash-atomic: a failed append can leave partial files
-    * in the vectors table; run it inside the caller's
-    * publish-or-retry step (e.g. an [[Artifact.ensure]] build, as
-    * q186 does).
+    * drops. A NULL vector has no nearest list and is rejected by an
+    * in-row [[Publish]] guard before the append commits.
     */
   def appendIvfIndex(spark: org.apache.spark.sql.SparkSession,
                      indexPath: String, newEmbeddings: DataFrame,
                      idName: String, vecName: String): Unit = {
     val cents = readCentroids(spark, indexPath)
-    newEmbeddings.select(col(idName), col(vecName))
+    Publish.guarded(nonNullVecs(newEmbeddings.select(col(idName), col(vecName)),
+        vecName, "appendIvfIndex")
       .withColumn("__cid", nearestCid(col(vecName), cents))
       .write.mode("append").partitionBy("__cid")
-      .parquet(s"$indexPath/vectors")
+      .parquet(s"$indexPath/vectors"))
   }
 
+  /** The centroid sidecar, written into the (staged) directory `dir`. */
   private def writeCentroids(spark: org.apache.spark.sql.SparkSession,
-                             cents: Seq[Array[Float]],
-                             indexPath: String): Unit = {
+                             cents: Seq[Array[Float]], dir: String): Unit = {
     import scala.jdk.CollectionConverters._
     val rows = cents.zipWithIndex.map { case (c, i) =>
       org.apache.spark.sql.Row(i, c.toSeq)
     }.asJava
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "cid INT, centroid ARRAY<FLOAT>")
-    spark.createDataFrame(rows, schema)
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/centroids")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(dir)
   }
+
+  /** In-row guard for the nearest-cell writes: a NULL vector has no
+    * nearest cell (the fused kernels return NULL, which would land in
+    * a default partition or a NULL code row).
+    */
+  private def nonNullVecs(df: DataFrame, vecName: String, who: String): DataFrame =
+    df.withColumn(vecName, when(col(vecName).isNull, Publish.raise(lit(
+      s"$who: a NULL $vecName has no nearest cell — drop or embed it first")))
+      .otherwise(col(vecName)))
 
   /** Partial rebuild of DRIFTED lists — the remedy [[ivfDriftReport]]
     * points at, without paying a full re-train + full-table rewrite
@@ -574,8 +584,9 @@ object Similarity {
     * RE-BASELINES only the rebuilt rows, so a subsequent
     * [[ivfDriftReport]] measures drift against the rebuilt state.
     * Probe-side recall/serve-cost recovery vs a full rebuild is
-    * measured in ProbeMaintain (SCALING.md). Not crash-atomic — run
-    * inside the caller's publish step, like every append path here.
+    * measured in ProbeMaintain (SCALING.md). The list rewrite and each
+    * sidecar publish atomically one after another; a crash between
+    * them leaves the sidecars one rebuild behind the lists.
     */
   def rebuildIvfLists(spark: org.apache.spark.sql.SparkSession,
                       indexPath: String, idName: String, vecName: String,
@@ -631,19 +642,10 @@ object Similarity {
     // re-assign among the retrained slots ONLY: the overwrite below
     // replaces partitions present in the written data — a member
     // routed into an unflagged list would clobber that whole list
-    val reassigned = members
+    val landed = rewriteLists(members
       .withColumn("__cid",
-        element_at(typedlit(slotCids), nearestCid(col(vecName), newCents) + 1))
-    // materialize before overwriting the relation it was read from
-    val out = reassigned.localCheckpoint(true)
-    out.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__cid").parquet(vecsPath)
-    // a retrained slot that captured no members is not in the written
-    // data, so dynamic overwrite leaves its STALE directory — drop it
-    val landed = out.select(col("__cid")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    out.unpersist()
+        element_at(typedlit(slotCids), nearestCid(col(vecName), newCents) + 1)),
+      vecsPath)
     dropStaleListDirs(spark, vecsPath, cids.filterNot(landed))
     // sidecars: swap the flagged slots' centroids, append the new
     // slots; re-baseline the rebuilt rows of the drift-stats sidecar
@@ -651,7 +653,7 @@ object Similarity {
     val updCents = cents.zipWithIndex.map { case (c, i) =>
       cidToSlot.get(i).map(newCents).getOrElse(c)
     } ++ newCents.drop(cids.size)
-    writeCentroids(spark, updCents, indexPath)
+    Publish.dir(spark, s"$indexPath/centroids")(writeCentroids(spark, updCents, _))
     val fresh = listStats(
         spark.read.parquet(vecsPath).filter(col("__cid").isin(slotCids: _*)),
         updCents, vecName)
@@ -659,10 +661,19 @@ object Similarity {
       .withColumnRenamed("resid_e6", "resid_build_e6")
     val kept = spark.read.parquet(s"$indexPath/stats")
       .filter(!col("cid").isin(cids: _*))
-    val stats = kept.unionByName(fresh).localCheckpoint(true)
-    stats.coalesce(1).write.mode("overwrite").parquet(s"$indexPath/stats")
-    stats.unpersist()
-    ()
+    Publish.parquet(kept.unionByName(fresh).coalesce(1), s"$indexPath/stats")
+  }
+
+  /** Dynamic-overwrite the `__cid` lists present in `reassigned` (it
+    * may read the very lists it replaces: Spark stages the written
+    * partitions and swaps them at commit) and return the cids that
+    * landed, observed on the write job itself.
+    */
+  private def rewriteLists(reassigned: DataFrame, table: String): Set[Int] = {
+    val obs = org.apache.spark.sql.Observation()
+    Publish.partitions(
+      reassigned.observe(obs, collect_set(col("__cid")).as("cids")), table, "__cid")
+    obs.get("cids").asInstanceOf[scala.collection.Seq[Int]].toSet
   }
 
   private[graft] def readCentroids(spark: org.apache.spark.sql.SparkSession,
@@ -802,31 +813,43 @@ object Similarity {
 
   /** Build the PQ index: the code table (`path/codes`: id + numSub
     * ints — the narrow relation a 100 TB query scans) and the
-    * codebook sidecar (`path/codebooks`). Published atomically via
-    * [[Artifact]] like the IVF index.
+    * codebook sidecar (`path/codebooks`), published through
+    * [[Publish]] like the IVF index.
     */
   def buildPqIndex(embeddings: DataFrame, idName: String, vecName: String,
                    numSub: Int, k: Int, path: String): Unit = {
     val spark = embeddings.sparkSession
-    val books = trainPqCodebooks(embeddings, idName, vecName, numSub, k)
-    // ONE corpus pass: the code-table write carries the build-time
-    // per-subspace stats baseline — the reference point
-    // [[pqDriftReport]] measures codebook drift against — as
-    // `observe()` metrics on the write job itself (guide §1.2: the
-    // stats baseline was a SECOND full corpus pass running alongside
-    // the write; the residual of the chosen cell is computable from
-    // the row's own codes column, so it rides the write for the cost
-    // of one zip_with per subspace per row). Arithmetic is
-    // single-sourced with pqListStats ([[pqResidE6]] per row,
-    // [[pqStatsFinal]] for the mean), so the written baseline is
-    // bit-identical to the dedicated pass's.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val (codesDf, obs) = observedCodes(embeddings, idName, vecName, books,
-      0 until numSub)
-    val codesF = Future {
-      codesDf.write.mode("overwrite").parquet(s"$path/codes")
+    Publish.dirs(spark, Seq("codes", "codebooks", "stats").map(d => s"$path/$d")) {
+      case Seq(codes, codebooks, stats) =>
+        val emb = nonNullVecs(embeddings, vecName, "buildPqIndex")
+        val books = trainPqCodebooks(emb, idName, vecName, numSub, k)
+        // ONE corpus pass: the code-table write carries the build-time
+        // per-subspace stats baseline — the reference point
+        // [[pqDriftReport]] measures codebook drift against — as
+        // `observe()` metrics on the write job itself (guide §1.2: the
+        // stats baseline was a SECOND full corpus pass running alongside
+        // the write; the residual of the chosen cell is computable from
+        // the row's own codes column, so it rides the write for the cost
+        // of one zip_with per subspace per row). Arithmetic is
+        // single-sourced with pqListStats ([[pqResidE6]] per row,
+        // [[pqStatsFinal]] for the mean), so the written baseline is
+        // bit-identical to the dedicated pass's.
+        import scala.concurrent.{Await, Future}
+        import scala.concurrent.ExecutionContext.Implicits.global
+        val (codesDf, obs) = observedCodes(emb, idName, vecName, books,
+          0 until numSub)
+        val codesF = Future(codesDf.write.parquet(codes))
+        writeCodebooks(spark, books, codebooks)
+        Await.result(codesF, scala.concurrent.duration.Duration.Inf)
+        statsFromObservation(spark, obs, 0 until numSub)
+          .withColumnRenamed("n", "n_build")
+          .withColumnRenamed("resid_e6", "resid_build_e6")
+          .coalesce(1).write.parquet(stats)
     }
+  }
+
+  private def writeCodebooks(spark: org.apache.spark.sql.SparkSession,
+                             books: Seq[Seq[Array[Float]]], dir: String): Unit = {
     import scala.jdk.CollectionConverters._
     val rows = books.zipWithIndex.flatMap { case (cs, s) =>
       cs.zipWithIndex.map { case (c, i) => org.apache.spark.sql.Row(s, i, c.toSeq) }
@@ -834,12 +857,7 @@ object Similarity {
     spark.createDataFrame(rows,
         org.apache.spark.sql.types.StructType.fromDDL(
           "sub INT, code INT, centroid ARRAY<FLOAT>"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-    Await.result(codesF, scala.concurrent.duration.Duration.Inf)
-    statsFromObservation(spark, obs, 0 until numSub)
-      .withColumnRenamed("n", "n_build")
-      .withColumnRenamed("resid_e6", "resid_build_e6")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
+      .coalesce(1).write.parquet(dir)
   }
 
   /** Per-row quantization residual of subspace `s` (×1e6, long):
@@ -1022,31 +1040,28 @@ object Similarity {
     * duplicate code rows). Codebook drift is the documented debt: a
     * shifted ingest distribution encodes against stale cells and ADC
     * ranking degrades — rebuild (ensurePqIndex over the union) when
-    * the re-rank stage stops hiding it. Not crash-atomic — run inside
-    * the caller's publish step. Each append lands one file set — fold
-    * the code table with [[graft.sources.Compaction.compactAppends]]
-    * between appends at high cadence.
+    * the re-rank stage stops hiding it. Each append lands one file set
+    * — fold the code table with [[graft.sources.Compaction
+    * .compactAppends]] between appends at high cadence.
     */
   def appendPqIndex(spark: org.apache.spark.sql.SparkSession,
                     indexPath: String, newEmbeddings: DataFrame,
                     idName: String, vecName: String): Unit = {
     val books = readPqCodebooks(spark, indexPath)
     val dim = books.size * books.head.head.length
-    // both guards ride the append job (in-row dim raise + id-clash
-    // union subtree) — they were two dedicated jobs per append and
-    // still reject before any file lands (guardedJob)
+    // every guard rides the append job (in-row NULL/dim raises +
+    // id-clash union subtree) and rejects before any file lands
     val codes = when(size(col(vecName)) =!= dim,
-        raise_error(format_string(
+        Publish.raise(format_string(
           s"appendPqIndex: batch has dimension %d but the codebooks " +
             s"encode $dim — not the same embedding space",
           size(col(vecName)))).cast("array<int>"))
       .otherwise(pqEncode(col(vecName), books))
     val out = withIdsDisjointGuard(
-      newEmbeddings.select(col(idName), codes.as("codes")),
+      nonNullVecs(newEmbeddings, vecName, "appendPqIndex")
+        .select(col(idName), codes.as("codes")),
       newEmbeddings, spark, s"$indexPath/codes", idName, "appendPqIndex")
-    guardedJob(Seq("not the same embedding space", IdsDisjointMarker)) {
-      out.write.mode("append").parquet(s"$indexPath/codes")
-    }
+    Publish.guarded(out.write.mode("append").parquet(s"$indexPath/codes"))
   }
 
   /** Partial PQ rebuild — the maintenance remedy for a
@@ -1085,9 +1100,9 @@ object Similarity {
     * directions loud-checked — because the code table is rewritten
     * from it; the stats sidecar re-baselines only the flagged rows
     * (the rebuildIvfLists device), so a subsequent [[pqDriftReport]]
-    * measures against the rebuilt state. Not crash-atomic — run
-    * inside the caller's publish step, like every maintenance path
-    * here.
+    * measures against the rebuilt state. Codes, codebooks and stats
+    * publish together through [[Publish]]; the dimensionality and
+    * id-set guards are in-row raises inside that write.
     */
   def rebuildPqSubspaces(spark: org.apache.spark.sql.SparkSession,
                          indexPath: String, embeddings: DataFrame,
@@ -1104,103 +1119,78 @@ object Similarity {
       s"rebuildPqSubspaces: unknown sub(s) ${unknown.mkString(",")} " +
         s"(numSub=$numSub)")
     val dim = numSub * w
-    val badDim = embeddings
-      .select(size(col(vecName)).as("d")).filter(col("d") =!= dim)
-      .take(1)
-    require(badDim.isEmpty,
-      s"rebuildPqSubspaces: corpus has dimension ${badDim.headOption
-        .map(_.get(0)).getOrElse("?")} but the codebooks encode $dim — " +
-        "not the same embedding space")
-    // the code table is REWRITTEN from `embeddings`, so the relation
-    // must be exactly the indexed corpus: a missing id would silently
-    // drop its code row, an extra id would silently append one
-    val codesPath = s"$indexPath/codes"
-    val codeIds = spark.read.parquet(codesPath).select(col(idName))
-    val embIds = embeddings.select(col(idName))
-    // both set-difference guards in ONE job (ids are unique on both
-    // sides — code rows by the append guard, corpus by contract): a
-    // full-outer join counts each direction's misses at once, where
-    // the two except().count() forms scanned both relations twice
-    val miss = codeIds.withColumn("__c", lit(1))
-      .join(embIds.withColumn("__e", lit(1)), Seq(idName), "full_outer")
-      .agg(sum(when(col("__e").isNull, 1L).otherwise(0L)).as("__missing"),
-        sum(when(col("__c").isNull, 1L).otherwise(0L)).as("__extra"))
-      .head()
-    val missing = Option(miss.get(0)).fold(0L)(_.asInstanceOf[Long])
-    require(missing == 0L,
-      s"rebuildPqSubspaces: $missing indexed id(s) absent from the " +
-        "embeddings relation — pass the same corpus the index codes")
-    val extra = Option(miss.get(1)).fold(0L)(_.asInstanceOf[Long])
-    require(extra == 0L,
-      s"rebuildPqSubspaces: $extra embedding id(s) not in the index — " +
-        "append first (appendPqIndex), then rebuild")
-    // one Lloyd refinement over JUST the flagged subspaces, seeded by
-    // the frozen cells (the trainPqCodebooks refinement convention)
-    val subRel = embeddings.select(posexplode(array(subs.map(s =>
-        struct(lit(s).as("sub"), slice(col(vecName), s * w + 1, w).as("sv"))
-      ): _*)).as(Seq("__i", "__r")))
-      .select(col("__r.sub").as("sub"), col("__r.sv").as("sv"))
-    val assigned = subRel.withColumn("code",
-      subs.tail.foldLeft(nearestCodeL2(col("sv"), books(subs.head))) {
-        (acc, s) =>
-          when(col("sub") === s, nearestCodeL2(col("sv"), books(s)))
-            .otherwise(acc)
-      })
-    val means = assigned
-      .select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("d", "x")))
-      .groupBy(col("sub"), col("code"), col("d")).agg(avg(col("x")).as("m"))
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
-    val byCell = means.groupBy(t => (t._1, t._2))
-    val retrained: Map[Int, Seq[Array[Float]]] = subs.map { s =>
-      s -> books(s).indices.map { c =>
-        byCell.get((s, c)) match {
-          case Some(cell) =>
-            val arr = new Array[Float](w)
-            cell.foreach(t => arr(t._3) = t._4.toFloat)
-            arr
-          case None => books(s)(c) // empty cell keeps its frozen seed
+    // in-row guards, raised by the first job that reads the relation:
+    // dimensionality on every pass; on the re-encode also id-set
+    // equality — the code table is REWRITTEN from `embeddings`, so a
+    // missing id would silently drop its code row and an extra id
+    // would silently append one
+    val emb = embeddings.withColumn(vecName,
+      when(size(col(vecName)) =!= dim, Publish.raise(format_string(
+        s"rebuildPqSubspaces: corpus has dimension %d but the codebooks " +
+          s"encode $dim — not the same embedding space", size(col(vecName)))))
+      .otherwise(col(vecName)))
+    val codeIds = spark.read.parquet(s"$indexPath/codes").select(col(idName))
+    val id = col(idName).cast("string")
+    Publish.dirs(spark, Seq("codes", "codebooks", "stats")
+        .map(d => s"$indexPath/$d")) { case Seq(codes, codebooks, stats) =>
+      // one Lloyd refinement over JUST the flagged subspaces, seeded by
+      // the frozen cells (the trainPqCodebooks refinement convention)
+      val subRel = emb.select(posexplode(array(subs.map(s =>
+          struct(lit(s).as("sub"), slice(col(vecName), s * w + 1, w).as("sv"))
+        ): _*)).as(Seq("__i", "__r")))
+        .select(col("__r.sub").as("sub"), col("__r.sv").as("sv"))
+      val assigned = subRel.withColumn("code",
+        subs.tail.foldLeft(nearestCodeL2(col("sv"), books(subs.head))) {
+          (acc, s) =>
+            when(col("sub") === s, nearestCodeL2(col("sv"), books(s)))
+              .otherwise(acc)
+        })
+      val means = assigned
+        .select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("d", "x")))
+        .groupBy(col("sub"), col("code"), col("d")).agg(avg(col("x")).as("m"))
+        .collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
+      val byCell = means.groupBy(t => (t._1, t._2))
+      val retrained: Map[Int, Seq[Array[Float]]] = subs.map { s =>
+        s -> books(s).indices.map { c =>
+          byCell.get((s, c)) match {
+            case Some(cell) =>
+              val arr = new Array[Float](w)
+              cell.foreach(t => arr(t._3) = t._4.toFloat)
+              arr
+            case None => books(s)(c) // empty cell keeps its frozen seed
+          }
         }
-      }
-    }.toMap
-    val merged: Seq[Seq[Array[Float]]] =
-      books.zipWithIndex.map { case (cs, s) => retrained.getOrElse(s, cs) }
-    // ONE corpus pass (the buildPqIndex discipline): the re-encode
-    // write carries the flagged-row stats re-baseline as observe()
-    // metrics, so the dedicated pqListStats corpus pass is gone; the
-    // codebook-sidecar write overlaps the re-encode (guide §2.6).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val (codesDf, obs) = observedCodes(embeddings, idName, vecName, merged,
-      subs)
-    val codesF = Future {
-      codesDf.write.mode("overwrite").parquet(codesPath)
+      }.toMap
+      val merged: Seq[Seq[Array[Float]]] =
+        books.zipWithIndex.map { case (cs, s) => retrained.getOrElse(s, cs) }
+      // ONE corpus pass (the buildPqIndex discipline): the re-encode
+      // write carries the flagged-row stats re-baseline as observe()
+      // metrics; the codebook-sidecar write overlaps the re-encode
+      // (guide §2.6). Unflagged codebook rows stay value-identical
+      // (spec-pinned).
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val (codesDf, obs) = observedCodes(emb, idName, vecName, merged, subs)
+      val codesF = Future(withSameIdsGuard(codesDf, embeddings, codeIds, idName,
+        when(col("__missing"), format_string("rebuildPqSubspaces: indexed id " +
+          "%s absent from the embeddings relation — pass the same corpus the " +
+          "index codes", id))
+        .otherwise(format_string("rebuildPqSubspaces: embedding id %s not in " +
+          "the index — append first (appendPqIndex), then rebuild", id)))
+        .write.parquet(codes))
+      writeCodebooks(spark, merged, codebooks)
+      Await.result(codesF, scala.concurrent.duration.Duration.Inf)
+      // stats: re-baseline ONLY the flagged rows (driver-sized, from the
+      // write's observed metrics); unflagged rows keep their stored
+      // baseline
+      val fresh = statsFromObservation(spark, obs, subs)
+        .withColumnRenamed("n", "n_build")
+        .withColumnRenamed("resid_e6", "resid_build_e6")
+      spark.read.parquet(s"$indexPath/stats")
+        .filter(!col("sub").isin(subs: _*))
+        .unionByName(fresh).coalesce(1).write.parquet(stats)
     }
-    // codebook sidecar: flagged rows swapped, unflagged rows
-    // value-identical (spec-pinned)
-    import scala.jdk.CollectionConverters._
-    val rows = merged.zipWithIndex.flatMap { case (cs, s) =>
-      cs.zipWithIndex.map { case (c, i) =>
-        org.apache.spark.sql.Row(s, i, c.toSeq) }
-    }.asJava
-    spark.createDataFrame(rows,
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "sub INT, code INT, centroid ARRAY<FLOAT>"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/codebooks")
-    Await.result(codesF, scala.concurrent.duration.Duration.Inf)
-    // stats: re-baseline ONLY the flagged rows (now driver-sized, from
-    // the write's observed metrics); unflagged rows keep their stored
-    // baseline. localCheckpoint before the overwrite — the kept rows
-    // are READ from the file this write replaces.
-    val fresh = statsFromObservation(spark, obs, subs)
-      .withColumnRenamed("n", "n_build")
-      .withColumnRenamed("resid_e6", "resid_build_e6")
-    val kept = spark.read.parquet(s"$indexPath/stats")
-      .filter(!col("sub").isin(subs: _*))
-    val stats = kept.unionByName(fresh).localCheckpoint(true)
-    stats.coalesce(1).write.mode("overwrite").parquet(s"$indexPath/stats")
-    stats.unpersist()
-    ()
   }
 
   /** ADC search over the PQ index: score every code row against the
@@ -1406,9 +1396,11 @@ object Similarity {
     */
   def initSemanticCentroids(embeddings: DataFrame, idName: String,
                             vecName: String, nlist: Int,
-                            stateDir: String): Unit =
-    writeCentroids(embeddings.sparkSession,
-      trainCentroids(embeddings, idName, vecName, nlist), stateDir)
+                            stateDir: String): Unit = {
+    val spark = embeddings.sparkSession
+    Publish.dir(spark, s"$stateDir/centroids")(writeCentroids(spark,
+      trainCentroids(embeddings, idName, vecName, nlist), _))
+  }
 
   /** The batch-vs-archive core of continuous SemDeDup
     * ([[graft.streaming.StreamOps]]' semanticDedupBatch and any
@@ -1532,24 +1524,28 @@ object Similarity {
     */
   def buildSq8Index(embeddings: DataFrame, idName: String, vecName: String,
                     indexPath: String): Unit = {
-    val scales = sq8Scales(embeddings, vecName)
-    embeddings.select(col(idName),
-        graft.functions.VecFns.packInt8(
-          sq8Quantize(col(vecName), scales)).as("codes"))
-      .write.mode("overwrite").parquet(s"$indexPath/codes")
-    writeSq8Scales(embeddings.sparkSession, scales, indexPath)
+    val spark = embeddings.sparkSession
+    Publish.dirs(spark, Seq(s"$indexPath/codes", s"$indexPath/scales")) {
+      case Seq(codes, scalesDir) =>
+        val scales = sq8Scales(embeddings, vecName)
+        embeddings.select(col(idName),
+            graft.functions.VecFns.packInt8(
+              sq8Quantize(col(vecName), scales)).as("codes"))
+          .write.parquet(codes)
+        writeSq8Scales(spark, scales, scalesDir)
+    }
   }
 
+  /** The scales sidecar, written into the (staged) directory `dir`. */
   private def writeSq8Scales(spark: org.apache.spark.sql.SparkSession,
-                             scales: Array[Double], indexPath: String): Unit = {
+                             scales: Array[Double], dir: String): Unit = {
     import scala.jdk.CollectionConverters._
     val rows = scales.toSeq.zipWithIndex.map { case (m, d) =>
       org.apache.spark.sql.Row(d, m)
     }.asJava
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "dim INT, scale DOUBLE")
-    spark.createDataFrame(rows, schema)
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/scales")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(dir)
   }
 
   /** Planning-pass half of a STREAMED SQ8 index: freeze the scales
@@ -1561,9 +1557,11 @@ object Similarity {
     * [[graft.streaming.StreamOps.sq8CodesSink]].
     */
   def initSq8Scales(embeddings: DataFrame, vecName: String,
-                    indexPath: String): Unit =
-    writeSq8Scales(embeddings.sparkSession,
-      sq8Scales(embeddings, vecName), indexPath)
+                    indexPath: String): Unit = {
+    val spark = embeddings.sparkSession
+    Publish.dir(spark, s"$indexPath/scales")(
+      writeSq8Scales(spark, sq8Scales(embeddings, vecName), _))
+  }
 
   /** Build the SQ8 index only if absent — both halves publish
     * atomically under [[Artifact.ensure]] so a reader never sees
@@ -1578,31 +1576,6 @@ object Similarity {
     }
   }
 
-  /** Run an append/write whose plan carries in-row `raise_error`
-    * guards, rethrowing a fired guard as the IllegalArgumentException
-    * the pre-flight `require` form threw. The guards were dedicated
-    * jobs per append (dim take(1), clip posexplode aggregations, the
-    * id-disjointness semi-join); folded into the append job they cost
-    * one expression per row and zero extra job round-trips, and they
-    * still reject BEFORE any file lands — a raised row aborts the
-    * task, the job, and the committer's temporary output, so in
-    * append mode the existing table is untouched and nothing new
-    * commits.
-    */
-  private def guardedJob[A](markers: Seq[String])(body: => A): A =
-    try body catch {
-      case e: Throwable =>
-        var c: Throwable = e
-        while (c != null) {
-          val m = c.getMessage
-          if (m != null && markers.exists(m.contains))
-            throw new IllegalArgumentException(
-              m.stripPrefix("[USER_RAISED_EXCEPTION] ").trim, e)
-          c = c.getCause
-        }
-        throw e
-    }
-
   /** Shared append guard, as a zero-row-unless-violated subtree to
     * union onto the append write: a replayed/overlapping batch would
     * silently duplicate rows in a code/vector table and every serve
@@ -1611,24 +1584,42 @@ object Similarity {
     * the semi join (the payload never shuffles on the guard's
     * account).
     */
-  private def withIdsDisjointGuard(out: DataFrame, newRows: DataFrame,
+  private[operators] def withIdsDisjointGuard(out: DataFrame, newRows: DataFrame,
                                    spark: org.apache.spark.sql.SparkSession,
                                    existingTable: String, idName: String,
                                    caller: String): DataFrame = {
     val clash = newRows.select(col(idName))
       .join(spark.read.parquet(existingTable).select(col(idName)),
         Seq(idName), "left_semi")
-    val cols = out.schema.fields.zipWithIndex.map { case (f, i) =>
-      if (i == 0)
-        raise_error(format_string(
-          s"$caller: batch re-ingests indexed $idName %s — id spaces " +
-            "must be disjoint", col(idName).cast("string")))
-          .cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }
-    out.unionByName(clash.select(cols.toSeq: _*))
+    withGuardRows(out, clash, format_string(s"$caller: batch re-ingests " +
+      s"indexed $idName %s — id spaces must be disjoint", col(idName).cast("string")))
   }
-  private val IdsDisjointMarker = "id spaces must be disjoint"
+
+  /** Rewrite guard for a table recoded from `corpus`: the two id sets
+    * must be equal. A full-outer join of the ids alone (the payload
+    * never shuffles on the guard's account) marks each side; `text`
+    * sees `idName` and `__missing` (the id is indexed but absent from
+    * the corpus).
+    */
+  private def withSameIdsGuard(out: DataFrame, corpus: DataFrame,
+                               indexIds: DataFrame, idName: String,
+                               text: Column): DataFrame =
+    withGuardRows(out, corpus.select(col(idName), lit(true).as("__e"))
+      .join(indexIds.select(col(idName), lit(true).as("__c")), Seq(idName), "full_outer")
+      .filter(col("__e").isNull || col("__c").isNull)
+      .select(col(idName), col("__e").isNull.as("__missing")), text)
+
+  /** `out` plus one raising row per row of `violations` (zero rows
+    * unless violated): the guard fires DURING the write, before it
+    * commits.
+    */
+  private def withGuardRows(out: DataFrame, violations: DataFrame,
+                            text: Column): DataFrame = {
+    val cols = out.schema.fields.zipWithIndex.map { case (f, i) =>
+      (if (i == 0) Publish.raise(text) else lit(null)).cast(f.dataType).as(f.name)
+    }
+    out.unionByName(violations.select(cols.toSeq: _*))
+  }
 
   /** First clipping (dim, |x|) pair of a row against frozen per-dim
     * scales, for the SQ8 appends' in-row clip guards: empty when the
@@ -1656,30 +1647,27 @@ object Similarity {
     * debt, and it fails LOUDLY instead of clipping: a batch dimension
     * whose max |x_d| exceeds the frozen scale_d would code outside
     * int8 and silently corrupt every ranking involving it — one
-    * dim-sized aggregate rejects the batch up front (rebuild via
-    * [[buildSq8Index]] on the union when it trips). A batch wider
-    * than the index's dimensionality is rejected the same way. Not
-    * crash-atomic — run inside the caller's publish step, like every
-    * other append here. Each append lands one file set — fold the
-    * code table with [[graft.sources.Compaction.compactAppends]]
-    * between appends at high cadence.
+    * in-row guard rejects the batch before the append commits
+    * (rebuild via [[buildSq8Index]] on the union when it trips). A
+    * batch wider than the index's dimensionality is rejected the same
+    * way. Each append lands one file set — fold the code table with
+    * [[graft.sources.Compaction.compactAppends]] between appends at
+    * high cadence.
     */
   def appendSq8Index(spark: org.apache.spark.sql.SparkSession,
                      indexPath: String, newEmbeddings: DataFrame,
                      idName: String, vecName: String): Unit = {
     val scales = readSq8Scales(spark, indexPath)
     // all three guards ride the append job (in-row dim/clip raises +
-    // id-clash union subtree) — they were a posexplode aggregation
-    // and a semi-join job per append; still reject before any file
-    // lands (guardedJob)
+    // id-clash union subtree) and reject before any file lands
     val viol = sq8ClipViolation(col(vecName), scales)
     val codes = when(size(col(vecName)) > scales.length,
-        raise_error(format_string(
+        Publish.raise(format_string(
           s"appendSq8Index: batch has dimension %d beyond the index's " +
             s"${scales.length} — not the same embedding space",
           size(col(vecName)) - 1)).cast("binary"))
       .when(size(viol) > 0,
-        raise_error(format_string(
+        Publish.raise(format_string(
           s"appendSq8Index: batch max |x_%d| = %.6g exceeds the frozen " +
             "scale %.6g — codes would clip; rebuild the index over the " +
             "union instead",
@@ -1692,10 +1680,7 @@ object Similarity {
     val out = withIdsDisjointGuard(
       newEmbeddings.select(col(idName), codes.as("codes")),
       newEmbeddings, spark, s"$indexPath/codes", idName, "appendSq8Index")
-    guardedJob(Seq("not the same embedding space", "codes would clip",
-        IdsDisjointMarker)) {
-      out.write.mode("append").parquet(s"$indexPath/codes")
-    }
+    Publish.guarded(out.write.mode("append").parquet(s"$indexPath/codes"))
   }
 
   /** The scales sidecar (dim-sized driver state — the centroid/
@@ -1743,27 +1728,19 @@ object Similarity {
   def buildIvfSq8Index(embeddings: DataFrame, idName: String, vecName: String,
                        nlist: Int, indexPath: String): Unit = {
     val spark = embeddings.sparkSession
-    val cents = trainCentroids(embeddings, idName, vecName, nlist)
-    val scales = sq8Scales(embeddings, vecName)
-    embeddings.withColumn("__cid", nearestCid(col(vecName), cents))
-      .select(col(idName), col("__cid"),
-        graft.functions.VecFns.packInt8(
-          sq8Quantize(col(vecName), scales)).as("codes"))
-      .write.mode("overwrite").partitionBy("__cid")
-      .parquet(s"$indexPath/codes")
-    import scala.jdk.CollectionConverters._
-    val cRows = cents.zipWithIndex.map { case (c, i) =>
-      org.apache.spark.sql.Row(i, c.toSeq)
-    }.asJava
-    spark.createDataFrame(cRows, org.apache.spark.sql.types.StructType
-        .fromDDL("cid INT, centroid ARRAY<FLOAT>"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/centroids")
-    val sRows = scales.toSeq.zipWithIndex.map { case (m, d) =>
-      org.apache.spark.sql.Row(d, m)
-    }.asJava
-    spark.createDataFrame(sRows, org.apache.spark.sql.types.StructType
-        .fromDDL("dim INT, scale DOUBLE"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/scales")
+    Publish.dirs(spark, Seq("codes", "centroids", "scales")
+        .map(d => s"$indexPath/$d")) { case Seq(codes, centroids, scalesDir) =>
+      val emb = nonNullVecs(embeddings, vecName, "buildIvfSq8Index")
+      val cents = trainCentroids(emb, idName, vecName, nlist)
+      val scales = sq8Scales(emb, vecName)
+      emb.withColumn("__cid", nearestCid(col(vecName), cents))
+        .select(col(idName), col("__cid"),
+          graft.functions.VecFns.packInt8(
+            sq8Quantize(col(vecName), scales)).as("codes"))
+        .write.partitionBy("__cid").parquet(codes)
+      writeCentroids(spark, cents, centroids)
+      writeSq8Scales(spark, scales, scalesDir)
+    }
   }
 
   /** Build the IVF-SQ8 index only if absent; all three pieces publish
@@ -1789,8 +1766,8 @@ object Similarity {
     * BIT-IDENTICAL to building over the union with the same sidecars
     * (spec-pinned). Centroid drift and scale clipping are the two
     * documented debts; the first degrades recall gradually (rebuild
-    * when probes miss), the second fails loudly here. Not
-    * crash-atomic — run inside the caller's publish step. Each append
+    * when probes miss), the second fails loudly here, as does a NULL
+    * vector (no nearest list). Each append
     * lands one file set inside each receiving list — fold with
     * [[graft.sources.Compaction.compactAppends]] (leaf-wise, list
     * dirs preserved) between appends at high cadence.
@@ -1803,12 +1780,12 @@ object Similarity {
     // all three guards ride the append job (the appendSq8Index fold)
     val viol = sq8ClipViolation(col(vecName), scales)
     val codes = when(size(col(vecName)) > scales.length,
-        raise_error(format_string(
+        Publish.raise(format_string(
           s"appendIvfSq8Index: batch dimension %d beyond the index's " +
             s"${scales.length} — not the same embedding space",
           size(col(vecName)) - 1)).cast("binary"))
       .when(size(viol) > 0,
-        raise_error(format_string(
+        Publish.raise(format_string(
           s"appendIvfSq8Index: batch max |x_%d| = %.6g exceeds the " +
             "frozen scale %.6g — codes would clip; rebuild over the union",
           element_at(viol, 1).getField("d"),
@@ -1818,15 +1795,12 @@ object Similarity {
       .otherwise(graft.functions.VecFns.packInt8(
         sq8Quantize(col(vecName), scales)))
     val out = withIdsDisjointGuard(
-      newEmbeddings
+      nonNullVecs(newEmbeddings, vecName, "appendIvfSq8Index")
         .withColumn("__cid", nearestCid(col(vecName), cents))
         .select(col(idName), col("__cid"), codes.as("codes")),
       newEmbeddings, spark, s"$indexPath/codes", idName, "appendIvfSq8Index")
-    guardedJob(Seq("not the same embedding space", "codes would clip",
-        IdsDisjointMarker)) {
-      out.write.mode("append").partitionBy("__cid")
-        .parquet(s"$indexPath/codes")
-    }
+    Publish.guarded(out.write.mode("append").partitionBy("__cid")
+      .parquet(s"$indexPath/codes"))
   }
 
   /** Partial list rebuild for the COMPOSED IVF×SQ8 index —
@@ -1845,8 +1819,8 @@ object Similarity {
     * Hadoop-FS-deleted with a required result. `splitTo` grows the
     * slot count for occupancy control, capped at [[RebuildSlotCap]].
     * The composed index keeps no stats sidecar, so there is nothing
-    * to re-baseline. Not crash-atomic — run inside the caller's
-    * publish step, like every append path here.
+    * to re-baseline. The list rewrite and the centroid sidecar publish
+    * atomically one after the other.
     */
   def rebuildIvfSq8Lists(spark: org.apache.spark.sql.SparkSession,
                          indexPath: String, idName: String,
@@ -1888,24 +1862,16 @@ object Similarity {
       farthestSeeds(members, idName, "__vec", slots))
     val slotCids: Seq[Int] =
       cids ++ (cents.size until cents.size + (slots - cids.size))
-    val reassigned = members
+    val landed = rewriteLists(members
       .withColumn("__cid",
         element_at(typedlit(slotCids), nearestCid(col("__vec"), newCents) + 1))
-      .select(col(idName), col("__cid"), col("codes"))
-    val out = reassigned.localCheckpoint(true)
-    out.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__cid").parquet(codesPath)
-    val landed = out.select(col("__cid")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    out.unpersist()
+      .select(col(idName), col("__cid"), col("codes")), codesPath)
     dropStaleListDirs(spark, codesPath, cids.filterNot(landed))
     val cidToSlot = slotCids.zipWithIndex.toMap
     val updCents = cents.zipWithIndex.map { case (c, i) =>
       cidToSlot.get(i).map(newCents).getOrElse(c)
     } ++ newCents.drop(cids.size)
-    writeCentroids(spark, updCents, indexPath)
-    ()
+    Publish.dir(spark, s"$indexPath/centroids")(writeCentroids(spark, updCents, _))
   }
 
   /** Query-time half of the composed index: pick the nprobe nearest
@@ -2083,16 +2049,32 @@ object Similarity {
     * summation order could flip a bit for a value within one ulp of
     * it; min/max cannot), while still centering dimensions whose
     * range is not sign-symmetric. One posexplode + keyed min/max —
-    * dim-sized driver state (the scales/centroid discipline).
+    * dim-sized driver state (the scales/centroid discipline). The
+    * same aggregate counts the vectors reaching each dimension, so a
+    * RAGGED corpus ([[binQuantize]] would code its missing dimensions
+    * as 0 bits, quietly) is rejected for free: the first dimension
+    * then counts more vectors than the last.
     */
-  def binThresholds(embeddings: DataFrame, vecName: String): Array[Double] = {
+  def binThresholds(embeddings: DataFrame, vecName: String): Array[Double] =
+    binDimStats(embeddings, vecName, "binThresholds")
+      .map(r => (r.getDouble(1) + r.getDouble(2)) / 2.0)
+
+  /** Per-dimension (dim, min, max) rows of a vector corpus, ordered by
+    * dim; rejects an empty or ragged corpus (see [[binThresholds]]).
+    */
+  private def binDimStats(embeddings: DataFrame, vecName: String,
+                          who: String): Array[org.apache.spark.sql.Row] = {
     val rows = embeddings
       .select(posexplode(col(vecName).cast("array<double>")).as(Seq("dim", "x")))
       .groupBy(col("dim"))
-      .agg(((min(col("x")) + max(col("x"))) / lit(2.0)).as("t"))
+      .agg(min(col("x")).as("mn"), max(col("x")).as("mx"), count(lit(1)).as("n"))
       .orderBy(col("dim")).collect()
-    require(rows.nonEmpty, "binThresholds over an empty corpus")
-    rows.map(_.getDouble(1))
+    require(rows.nonEmpty, s"$who over an empty corpus")
+    if (rows.head.getLong(3) != rows.last.getLong(3))
+      throw new IllegalArgumentException(s"$who: ${rows.head.getLong(3) -
+        rows.last.getLong(3)} vector(s) shorter than ${rows.length} " +
+        "dimensions — ragged embedding corpus")
+    rows
   }
 
   /** Binarize a vector column against per-dimension thresholds and
@@ -2144,7 +2126,6 @@ object Similarity {
                  queryId: Long, k: Int, rerank: Int): DataFrame = {
     require(k >= 1 && rerank >= k, s"need 1 <= k <= rerank, got k=$k rerank=$rerank")
     val thr = binThresholds(embeddings, vecName)
-    requireBinDim(embeddings, vecName, thr.length, "binaryTopK")
     val qRows = embeddings.filter(col(idName) === queryId)
       .select(binQuantize(col(vecName), thr).as("q"), col(vecName))
     val qHead = qRows.take(1)
@@ -2170,59 +2151,46 @@ object Similarity {
     * (`indexPath/codes`) plus the dim-sized thresholds sidecar
     * (`indexPath/thresholds`) — the buildSq8Index layout one tier
     * smaller. A stage-1 scan over this table reads 1 bit per
-    * dimension: 1/32 of the float bytes (1/8 of SQ8's).
+    * dimension: 1/32 of the float bytes (1/8 of SQ8's). Both halves
+    * publish together through [[Publish]]: a rejected corpus leaves
+    * any prior index at `indexPath` as it was.
     */
   def buildBinaryIndex(embeddings: DataFrame, idName: String, vecName: String,
                        indexPath: String): Unit = {
-    val thr = binThresholds(embeddings, vecName)
-    // dim guard rides the codes write as an in-row raise (it was a
-    // dedicated take(1) job): the target is a NEW index directory, so
-    // unlike the rebin path there is no prior state an aborted
-    // overwrite could destroy, and the guard still fires before
-    // anything commits (guardedJob rethrows the original
-    // IllegalArgumentException)
-    val code = when(size(col(vecName)) =!= thr.length,
-        raise_error(format_string(
-          s"buildBinaryIndex: corpus has a vector of dimension %d but " +
-            s"the thresholds code ${thr.length} dimensions — ragged " +
-            "embedding corpus",
-          size(col(vecName)))).cast("array<bigint>"))
-      .otherwise(binQuantize(col(vecName), thr))
-    guardedJob(Seq("ragged embedding corpus")) {
-      embeddings.select(col(idName), code.as("code"))
-        .write.mode("overwrite").parquet(s"$indexPath/codes")
+    val spark = embeddings.sparkSession
+    Publish.dirs(spark, Seq(s"$indexPath/codes", s"$indexPath/thresholds")) {
+      case Seq(codes, thresholds) =>
+        val thr = binThresholds(embeddings, vecName)
+        binCodes(embeddings, idName, vecName, thr, "buildBinaryIndex")
+          .write.parquet(codes)
+        writeBinThresholds(spark, thr, thresholds)
     }
-    writeBinThresholds(embeddings.sparkSession, thr, indexPath)
   }
 
-  /** Loud dimensionality guard for the binary tier's build/ad-hoc
-    * paths: [[binQuantize]]'s zip_with null-pads a vector shorter (or
-    * silently truncates one longer) than the thresholds array, coding
-    * the missing dimensions as 0 bits — a ragged corpus would
-    * mis-code QUIETLY. The append path already guards
-    * ([[appendBinaryIndex]]); this is the same check for the paths
-    * that derive thresholds themselves.
+  /** (id, code) under `thr`, with the in-row dimensionality guard:
+    * [[binQuantize]]'s zip_with null-pads a vector shorter (or
+    * truncates one longer) than the thresholds, coding the difference
+    * as 0 bits — quietly.
     */
-  private def requireBinDim(embeddings: DataFrame, vecName: String,
-                            dim: Int, who: String): Unit = {
-    val bad = embeddings.select(size(col(vecName)).as("d"))
-      .filter(col("d") =!= dim).take(1)
-    require(bad.isEmpty,
-      s"$who: corpus has a vector of dimension ${bad.headOption.map(_.get(0))
-        .getOrElse("?")} but the thresholds code $dim dimensions — " +
-        "ragged embedding corpus")
-  }
+  private def binCodes(df: DataFrame, idName: String, vecName: String,
+                       thr: Array[Double], who: String): DataFrame =
+    df.select(col(idName), when(size(col(vecName)) =!= thr.length,
+        Publish.raise(format_string(
+          s"$who: a vector has dimension %d but the index codes " +
+            s"${thr.length} — not the same embedding space",
+          size(col(vecName)))).cast("array<bigint>"))
+      .otherwise(binQuantize(col(vecName), thr)).as("code"))
 
+  /** The thresholds sidecar, written into the (staged) directory `dir`. */
   private def writeBinThresholds(spark: org.apache.spark.sql.SparkSession,
-                                 thr: Array[Double], indexPath: String): Unit = {
+                                 thr: Array[Double], dir: String): Unit = {
     import scala.jdk.CollectionConverters._
     val rows = thr.toSeq.zipWithIndex.map { case (t, d) =>
       org.apache.spark.sql.Row(d, t)
     }.asJava
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "dim INT, thr DOUBLE")
-    spark.createDataFrame(rows, schema)
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/thresholds")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(dir)
   }
 
   /** The thresholds sidecar (dim-sized driver state). */
@@ -2244,18 +2212,20 @@ object Similarity {
     * (min/max commute, one midpoint op, one subtraction), so the
     * whole report replays exactly in SQL — a FULL-oracle row, unlike
     * the k-means-derived IVF/PQ baselines. One posexplode + one keyed
-    * agg; dim-sized output.
+    * agg, run eagerly (it also rejects a ragged corpus, or one whose
+    * dimensionality is not the index's); dim-sized output.
     */
   def binDriftReport(spark: org.apache.spark.sql.SparkSession,
                      indexPath: String, embeddings: DataFrame,
                      vecName: String, deltaFrac: Double = 0.25): DataFrame = {
+    import scala.jdk.CollectionConverters._
     val thr = readBinThresholds(spark, indexPath)
-    requireBinDim(embeddings, vecName, thr.length, "binDriftReport")
-    embeddings
-      .select(posexplode(col(vecName).cast("array<double>"))
-        .as(Seq("dim", "x")))
-      .groupBy(col("dim"))
-      .agg(min(col("x")).as("__mn"), max(col("x")).as("__mx"))
+    val stats = binDimStats(embeddings, vecName, "binDriftReport")
+    require(stats.length == thr.length,
+      s"binDriftReport: corpus has dimension ${stats.length} but the " +
+        s"thresholds code ${thr.length} dimensions — ragged embedding corpus")
+    spark.createDataFrame(stats.toSeq.asJava, org.apache.spark.sql.types.StructType
+        .fromDDL("dim INT, __mn DOUBLE, __mx DOUBLE, n BIGINT"))
       .select(col("dim").cast("long").as("dim"),
         element_at(typedlit(thr.toSeq), col("dim").cast("int") + 1).as("thr"),
         ((col("__mn") + col("__mx")) / lit(2.0)).as("mid_now"),
@@ -2274,9 +2244,11 @@ object Similarity {
     * [[graft.streaming.StreamOps.binCodesSink]].
     */
   def initBinThresholds(embeddings: DataFrame, vecName: String,
-                        indexPath: String): Unit =
-    writeBinThresholds(embeddings.sparkSession,
-      binThresholds(embeddings, vecName), indexPath)
+                        indexPath: String): Unit = {
+    val spark = embeddings.sparkSession
+    Publish.dir(spark, s"$indexPath/thresholds")(
+      writeBinThresholds(spark, binThresholds(embeddings, vecName), _))
+  }
 
   /** Build the binary index only if absent — both halves publish
     * atomically under [[Artifact.ensure]] (the ensureSq8Index
@@ -2301,26 +2273,17 @@ object Similarity {
     * appends from a shifted distribution binarize against stale
     * midpoints and stage-1 recall decays — rebuild over the union
     * when re-rank repair stops hiding it (the binary analogue of the
-    * [[ivfDriftReport]] trigger). Not crash-atomic — run inside the
-    * caller's publish step.
+    * [[ivfDriftReport]] trigger).
     */
   def appendBinaryIndex(spark: org.apache.spark.sql.SparkSession,
                         indexPath: String, newEmbeddings: DataFrame,
                         idName: String, vecName: String): Unit = {
     val thr = readBinThresholds(spark, indexPath)
     // both guards ride the append job (the appendPqIndex fold)
-    val code = when(size(col(vecName)) =!= thr.length,
-        raise_error(format_string(
-          s"appendBinaryIndex: batch has dimension %d but the index " +
-            s"codes ${thr.length} — not the same embedding space",
-          size(col(vecName)))).cast("array<bigint>"))
-      .otherwise(binQuantize(col(vecName), thr))
     val out = withIdsDisjointGuard(
-      newEmbeddings.select(col(idName), code.as("code")),
+      binCodes(newEmbeddings, idName, vecName, thr, "appendBinaryIndex"),
       newEmbeddings, spark, s"$indexPath/codes", idName, "appendBinaryIndex")
-    guardedJob(Seq("not the same embedding space", IdsDisjointMarker)) {
-      out.write.mode("append").parquet(s"$indexPath/codes")
-    }
+    Publish.guarded(out.write.mode("append").parquet(s"$indexPath/codes"))
   }
 
   /** Re-bin a drifted binary index — the remedy [[binDriftReport]]'s
@@ -2333,31 +2296,31 @@ object Similarity {
     * dimensionality, and ID-SET EQUALITY between the corpus and the
     * code table — re-binning from a corpus that lost or gained rows
     * would silently shrink or grow the index behind the serve path's
-    * back. Write order: codes first, thresholds LAST — a crash in
-    * between leaves a report that reads DIRTY (prompting a re-run),
-    * never one that reads clean over mixed-generation codes. Not
-    * crash-atomic — run inside the caller's publish step, like every
-    * maintenance path here.
+    * back. Both are in-row raises inside the re-code write, and codes
+    * and thresholds publish together through [[Publish]] (codes
+    * first, thresholds LAST — a crash between the two swaps leaves a
+    * report that reads DIRTY, prompting a re-run, never one that
+    * reads clean over mixed-generation codes).
     */
   def rebinBinaryIndex(spark: org.apache.spark.sql.SparkSession,
                        indexPath: String, embeddings: DataFrame,
                        idName: String, vecName: String): Unit = {
     val thrOld = readBinThresholds(spark, indexPath)
-    requireBinDim(embeddings, vecName, thrOld.length, "rebinBinaryIndex")
     val codeIds = spark.read.parquet(s"$indexPath/codes").select(col(idName))
-    val corpusIds = embeddings.select(col(idName))
-    val missing = codeIds.join(corpusIds, Seq(idName), "left_anti").count()
-    val extra = corpusIds.join(codeIds, Seq(idName), "left_anti").count()
-    require(missing == 0 && extra == 0,
-      s"rebinBinaryIndex: corpus and code table disagree — $missing " +
-        s"indexed id(s) absent from the corpus, $extra corpus id(s) " +
-        "absent from the index; re-bin from exactly the corpus the " +
-        "index serves")
-    val thr = binThresholds(embeddings, vecName)
-    embeddings.select(col(idName),
-        binQuantize(col(vecName), thr).as("code"))
-      .write.mode("overwrite").parquet(s"$indexPath/codes")
-    writeBinThresholds(spark, thr, indexPath)
+    Publish.dirs(spark, Seq(s"$indexPath/codes", s"$indexPath/thresholds")) {
+      case Seq(codes, thresholds) =>
+        val thr = binThresholds(embeddings, vecName)
+        require(thr.length == thrOld.length,
+          s"rebinBinaryIndex: corpus has dimension ${thr.length} but the " +
+            s"index codes ${thrOld.length} — not the same embedding space")
+        withSameIdsGuard(binCodes(embeddings, idName, vecName, thr,
+            "rebinBinaryIndex"), embeddings, codeIds, idName, format_string(
+            "rebinBinaryIndex: corpus and code table disagree on id %s — " +
+              "re-bin from exactly the corpus the index serves",
+            col(idName).cast("string")))
+          .write.parquet(codes)
+        writeBinThresholds(spark, thr, thresholds)
+    }
   }
 
   /** Query-time half of the persisted tier: stage 1 ranks by Hamming

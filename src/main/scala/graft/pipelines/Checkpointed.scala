@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.Tables
-import graft.operators.Artifact
+import graft.operators.{Artifact, Publish}
 import graft.ops.RelOps._
 import graft.sources.CsvIO
 
@@ -32,8 +32,7 @@ object Checkpointed {
     // relation downstream. Only trust a committed checkpoint.
     if (resume && Artifact.complete(path)) spark.read.parquet(path)
     else {
-      val df = compute
-      df.write.mode("overwrite").parquet(path)
+      Publish.parquet(compute, path)
       spark.read.parquet(path)
     }
   }
@@ -98,10 +97,10 @@ object Checkpointed {
     val rcCsv = s"$ckptDir/s3_related_customers_csv"
     val candCsv = s"$ckptDir/s5_candidates_csv"
     if (!Artifact.complete(rcCsv) || !Artifact.complete(candCsv)) {
-      // fresh-run branch: materialize the six parquet steps, then
-      // publish the two reload inputs as CSV checkpoints
+      // fresh-run branch: materialize the six parquet steps (each
+      // step writes eagerly), then publish the two reload inputs as CSV
+      // checkpoints
       relatedCandidates(spark, dir, ckptDir, segment, minQty, resume = true)
-        .write.format("noop").mode("overwrite").save()
       Artifact.ensure(rcCsv)(tmp => CsvIO.write(
         spark.read.parquet(stepPath(ckptDir, "s3_related_customers")), tmp))
       Artifact.ensure(candCsv)(tmp => CsvIO.write(

@@ -1,7 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.operators.Publish
 
 /** Table-maintenance file layout — the jobs that keep a 100 TB
   * parquet corpus scannable:
@@ -45,8 +48,7 @@ object Compaction {
   def compact(spark: SparkSession, inDir: String, outDir: String,
               targetBytes: Long): Int = {
     val n = math.max(1, math.ceil(dirBytes(inDir).toDouble / targetBytes).toInt)
-    spark.read.parquet(inDir).coalesce(n)
-      .write.mode(SaveMode.Overwrite).parquet(outDir)
+    Publish.parquet(spark.read.parquet(inDir).coalesce(n), outDir)
     parquetFiles(outDir).size
   }
 
@@ -59,10 +61,9 @@ object Compaction {
     */
   def clusteredWrite(df: DataFrame, outDir: String, partCol: String,
                      sortCol: String): Unit =
-    df.repartition(col(partCol))
+    Publish.dir(df.sparkSession, outDir)(df.repartition(col(partCol))
       .sortWithinPartitions(col(partCol), col(sortCol))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(partCol).parquet(outDir)
+      .write.partitionBy(partCol).parquet(_))
 
   /** Z-value of two numeric columns: each is range-normalized to 16
     * bits against the relation's own [min, max] (a 1-row broadcast
@@ -103,14 +104,13 @@ object Compaction {
     val bounds = df.agg(
       min(col(colA)).as("__loa"), max(col(colA)).as("__hia"),
       min(col(colB)).as("__lob"), max(col(colB)).as("__hib"))
-    df.crossJoin(broadcast(bounds))
+    Publish.parquet(df.crossJoin(broadcast(bounds))
       .withColumn("__z", zValue(col(colA), col(colB),
         col("__loa"), col("__hia"), col("__lob"), col("__hib")))
       .drop("__loa", "__hia", "__lob", "__hib")
       .repartitionByRange(numFiles, col("__z"))
       .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode(SaveMode.Overwrite).parquet(outDir)
+      .drop("__z"), outDir)
   }
 
   // ---------------- streaming batch=<id> compaction ----------------
@@ -127,7 +127,7 @@ object Compaction {
     *    committed frontier ([[graft.streaming.StreamOps
     *    .committedFrontier]]): a committed batch can never be
     *    replayed (the checkpoint skips it), so folding it can never
-    *    race a retry's `batch=<id>` overwrite. The one possibly-
+    *    race a retry's `batch=<id>` publish. The one possibly-
     *    uncommitted generation stays in place for its retry.
     *  - **The read is unchanged, bit for bit.** Batch data files never
     *    contain the `batch` column (it is directory-encoded), so the
@@ -136,16 +136,16 @@ object Compaction {
     *    bid` archive reads exclude real generations only; a base id
     *    never collides with a trigger id).
     *  - **Crash-safe via a fold manifest.** The folded directory NAMES
-    *    are written INSIDE the new base before its atomic rename, so
-    *    the manifest commits with the data; the delete half is an
+    *    are written INSIDE the new base before [[Publish]] swaps it in,
+    *    so the manifest commits with the data; the delete half is an
     *    idempotent replay of the manifest ([[repairBatchCompaction]],
     *    run again at the start of every compaction). A crash after
-    *    the rename leaves duplicates visible only until the next
+    *    the swap leaves duplicates visible only until the next
     *    repair — run `repairBatchCompaction` before serving reads if
     *    a compaction may have died.
     *  - **Single maintainer.** Run between triggers (the maintenance
-    *    window); repair deletes any `.compact-*` debris, so two
-    *    concurrent compactions of one directory are not supported.
+    *    window); two concurrent compactions of one directory are not
+    *    supported.
     *
     * Returns the new base generation id, or None when no committed
     * generation was available to fold. I/O is Hadoop-FS throughout
@@ -155,7 +155,7 @@ object Compaction {
   def compactBatches(spark: SparkSession, dir: String, upTo: Long,
                      targetBytes: Long = 128L << 20): Option[Long] = {
     repairBatchCompaction(spark, dir)
-    val root = new org.apache.hadoop.fs.Path(dir)
+    val root = new Path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) return None
     val gens = batchGens(fs, root)
@@ -167,19 +167,14 @@ object Compaction {
       fs.getContentSummary(p).getLength
     }.sum
     val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    val tmp = new org.apache.hadoop.fs.Path(root,
-      s".compact-${java.util.UUID.randomUUID().toString.take(8)}")
-    spark.read.parquet(foldable.map(_._2.toString): _*)
-      .coalesce(n)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    // the manifest rides the same atomic rename as the data
-    val manifest = foldable.map(_._2.getName).sorted.mkString("", "\n", "\n")
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(tmp, "_graft_folded"), true)
-    try out.write(manifest.getBytes("UTF-8")) finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(root, s"batch=$newGen")
-    require(fs.rename(tmp, dst),
-      s"compactBatches: publish rename $tmp -> $dst failed")
+    Publish.dir(spark, s"$dir/batch=$newGen") { staged =>
+      spark.read.parquet(foldable.map(_._2.toString): _*)
+        .coalesce(n).write.parquet(staged)
+      // the manifest rides the same swap as the data
+      val manifest = foldable.map(_._2.getName).sorted.mkString("", "\n", "\n")
+      val out = fs.create(new Path(staged, "_graft_folded"), true)
+      try out.write(manifest.getBytes("UTF-8")) finally out.close()
+    }
     // the delete half — an idempotent manifest replay
     repairBatchCompaction(spark, dir)
     Some(newGen)
@@ -187,38 +182,32 @@ object Compaction {
 
   /** Replay any committed-but-unfinished fold: delete directories a
     * base generation's `_graft_folded` manifest names (they were
-    * folded into that base; a crash between the base's rename and the
-    * deletes leaves them visible as duplicates), and remove
-    * `.compact-*` debris from builds that never committed. Idempotent;
+    * folded into that base; a crash between the base's swap and the
+    * deletes leaves them visible as duplicates), and repair the
+    * [[Publish]] debris of folds that never swapped in. Idempotent;
     * safe to run before any read of the directory.
     */
   def repairBatchCompaction(spark: SparkSession, dir: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
+    val root = new Path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) return
-    fs.listStatus(root).foreach { st =>
-      if (st.isDirectory && st.getPath.getName.startsWith(".compact-")) {
-        fs.delete(st.getPath, true); ()
-      }
-    }
+    Publish.repair(fs, root)
     batchGens(fs, root).filter(_._1 < 0).foreach { case (_, base) =>
-      val m = new org.apache.hadoop.fs.Path(base, "_graft_folded")
+      val m = new Path(base, "_graft_folded")
       if (fs.exists(m)) {
         val in = fs.open(m)
         val names =
           try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
           finally in.close()
         names.filter(_.nonEmpty).foreach { name =>
-          val victim = new org.apache.hadoop.fs.Path(root, name)
+          val victim = new Path(root, name)
           if (fs.exists(victim)) { fs.delete(victim, true); () }
         }
       }
     }
   }
 
-  private def batchGens(fs: org.apache.hadoop.fs.FileSystem,
-                        root: org.apache.hadoop.fs.Path)
-      : Seq[(Long, org.apache.hadoop.fs.Path)] = {
+  private def batchGens(fs: FileSystem, root: Path): Seq[(Long, Path)] = {
     val Gen = """batch=(-?\d+)""".r
     fs.listStatus(root).toSeq.collect {
       case st if st.isDirectory =>
@@ -243,149 +232,90 @@ object Compaction {
     * one file set per append (the [[graft.operators.Similarity]]
     * SQ8/PQ/IVF-SQ8 code tables and [[graft.operators.InvertedIndex
     * .appendPostings]] — layouts with no `batch=` generations for
-    * [[compactBatches]] to fold): every LEAF directory holding more
-    * than one data file rewrites in place to ~`targetBytes` files.
-    * Partitioned tables (`__cid=` lists) compact leaf by leaf, so
-    * partition directories, their names, and the rows inside each
-    * are untouched as relations — the read is row-identical before
-    * and after (CompactionSpec pins the full content) and a leaf
-    * already at one file is SKIPPED (byte-identical, never rewritten
-    * — an IVF-SQ8 list untouched since its build keeps its bytes).
+    * [[compactBatches]] to fold): every LEAF directory (no child
+    * directories) holding more than one data file is republished
+    * through [[Publish]] as ~`targetBytes` files, its non-data files
+    * (`_SUCCESS`, sidecars) carried over. Partitioned tables (`__cid=`
+    * lists) compact leaf by leaf, so partition directories, their
+    * names, and the rows inside each are untouched as relations — the
+    * read is row-identical before and after (CompactionSpec pins the
+    * full content) and a leaf already at one file is SKIPPED
+    * (byte-identical, never rewritten — an IVF-SQ8 list untouched
+    * since its build keeps its bytes).
     *
-    * Crash safety (the [[compactBatches]] manifest discipline, leaf-
-    * scoped): the compacted files build inside the leaf's dot-dir
-    * `.compact-<uuid>` — invisible to every parquet reader — then a
-    * `_graft_fold` manifest naming the OLD files commits the fold,
-    * the new files rename in (atomic per file), and the manifest
-    * replay deletes the olds. A crash before the manifest leaves only
-    * invisible debris (repair discards it); after, repair COMPLETES
-    * the fold — both via [[repairAppendCompaction]], run here first
-    * and safe to run before any read. Duplicates are visible only
-    * between the first rename-in and the last old-file delete of a
-    * crashed fold — run repair before serving if a compaction may
-    * have died, and keep a single maintainer per directory (the
-    * compactBatches contract). Returns the number of leaves folded.
-    * I/O is Hadoop-FS throughout (remote table paths).
+    * Crash safety is the [[Publish]] swap's, per leaf: a fold that
+    * dies before its swap leaves only invisible staging debris, and
+    * one that dies mid-swap is completed by [[repairAppendCompaction]]
+    * (run here first; safe before any read). Keep a single maintainer
+    * per directory (the compactBatches contract). Returns the number
+    * of leaves folded. I/O is Hadoop-FS throughout (remote table
+    * paths).
     */
   def compactAppends(spark: SparkSession, dir: String,
                      targetBytes: Long = 128L << 20): Int = {
     repairAppendCompaction(spark, dir)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val root = new Path(dir)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = root.getFileSystem(conf)
     if (!fs.exists(root)) return 0
-    var folded = 0
-    dataLeaves(fs, root).foreach { case (leaf, files) =>
-      if (files.size > 1) {
+    dataLeaves(fs, root).count { case (leaf, entries) =>
+      val (files, rest) = entries.partition(st => isData(st.getPath.getName))
+      files.size > 1 && {
         val bytes = files.map(_.getLen).sum
         val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-        val tmp = new org.apache.hadoop.fs.Path(leaf,
-          s".compact-${java.util.UUID.randomUUID().toString.take(8)}")
-        // read the files explicitly: a leaf under a partitioned root
-        // must fold WITHOUT resolving partition columns (the files
-        // themselves never carry them)
-        spark.read.parquet(files.map(_.getPath.toString): _*)
-          .coalesce(n)
-          .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        // manifest commits the fold: from here repair completes it
-        val manifest = files.map(_.getPath.getName).sorted
-          .mkString("", "\n", "\n")
-        val out = fs.create(
-          new org.apache.hadoop.fs.Path(tmp, "_graft_fold"), true)
-        try out.write(manifest.getBytes("UTF-8")) finally out.close()
-        finishLeafFold(fs, leaf, tmp)
-        folded += 1
+        Publish.dir(spark, leaf.toString) { staged =>
+          // read the files explicitly: a leaf under a partitioned root
+          // must fold WITHOUT resolving partition columns (the files
+          // themselves never carry them)
+          spark.read.parquet(files.map(_.getPath.toString): _*)
+            .coalesce(n).write.parquet(staged)
+          rest.foreach { st =>
+            val dst = new Path(staged, st.getPath.getName)
+            if (!fs.exists(dst)) FileUtil.copy(fs, st.getPath, fs, dst, false, conf)
+          }
+        }
+        true
       }
     }
-    folded
   }
 
-  /** Replay any committed-but-unfinished [[compactAppends]] leaf fold
-    * (move remaining compacted files in, delete the manifest-named
-    * old files, drop the dot-dir) and discard uncommitted `.compact-*`
-    * debris (no manifest — the fold never happened). Idempotent; safe
-    * before any read.
+  /** Repair the [[Publish]] debris of interrupted [[compactAppends]]
+    * leaf folds of `dir` itself or anywhere under it. Idempotent;
+    * safe before any read.
     */
   def repairAppendCompaction(spark: SparkSession, dir: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
+    val root = new Path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return
-    def walk(p: org.apache.hadoop.fs.Path): Unit = {
+    Publish.repair(fs, root.getParent, Some(root.getName))
+    def walk(p: Path): Unit = {
+      Publish.repair(fs, p)
       fs.listStatus(p).foreach { st =>
-        if (st.isDirectory) {
-          if (st.getPath.getName.startsWith(".compact-")) {
-            val m = new org.apache.hadoop.fs.Path(st.getPath, "_graft_fold")
-            if (fs.exists(m)) finishLeafFold(fs, p, st.getPath)
-            else require(fs.delete(st.getPath, true),
-              s"repairAppendCompaction: could not drop debris ${st.getPath}")
-          } else walk(st.getPath)
-        }
-      }
-    }
-    walk(root)
-  }
-
-  /** The commit half of one leaf fold: rename the tmp dir's data
-    * files into the leaf, delete the old files its `_graft_fold`
-    * manifest names, drop the tmp dir. Idempotent — every step skips
-    * what a previous attempt already did; every FS mutation's result
-    * is required (the loud-failure discipline).
-    */
-  private def finishLeafFold(fs: org.apache.hadoop.fs.FileSystem,
-                             leaf: org.apache.hadoop.fs.Path,
-                             tmp: org.apache.hadoop.fs.Path): Unit = {
-    val m = new org.apache.hadoop.fs.Path(tmp, "_graft_fold")
-    val in = fs.open(m)
-    val olds =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).toList
-      finally in.close()
-    fs.listStatus(tmp).foreach { st =>
-      val n = st.getPath.getName
-      if (!st.isDirectory && n.endsWith(".parquet") &&
-          !n.startsWith("_") && !n.startsWith(".")) {
-        val dst = new org.apache.hadoop.fs.Path(leaf, n)
-        require(fs.rename(st.getPath, dst),
-          s"compactAppends: publish rename ${st.getPath} -> $dst failed")
-      }
-    }
-    olds.foreach { name =>
-      val victim = new org.apache.hadoop.fs.Path(leaf, name)
-      if (fs.exists(victim))
-        require(fs.delete(victim, false),
-          s"compactAppends: could not delete folded file $victim")
-    }
-    require(fs.delete(tmp, true),
-      s"compactAppends: could not drop fold dir $tmp")
-  }
-
-  /** Every directory under `root` (root included) that directly holds
-    * visible parquet data files, with those files' statuses. Dot- and
-    * underscore-prefixed entries are invisible to parquet readers and
-    * are skipped.
-    */
-  private def dataLeaves(fs: org.apache.hadoop.fs.FileSystem,
-                         root: org.apache.hadoop.fs.Path)
-      : Seq[(org.apache.hadoop.fs.Path,
-             Seq[org.apache.hadoop.fs.FileStatus])] = {
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(org.apache.hadoop.fs.Path,
-              Seq[org.apache.hadoop.fs.FileStatus])]
-    def visibleFile(n: String) = !n.startsWith("_") && !n.startsWith(".")
-    // Spark's hidden-path rule: a "_"-prefixed DIRECTORY is still
-    // data when it is a partition dir (contains "=", e.g. "__cid=3")
-    def visibleDir(n: String) =
-      n.contains("=") || (!n.startsWith("_") && !n.startsWith("."))
-    def walk(p: org.apache.hadoop.fs.Path): Unit = {
-      val entries = fs.listStatus(p)
-      val files = entries.filter(st => !st.isDirectory &&
-        visibleFile(st.getPath.getName) &&
-        st.getPath.getName.endsWith(".parquet")).toSeq
-      if (files.nonEmpty) out += (p -> files)
-      entries.foreach { st =>
         if (st.isDirectory && visibleDir(st.getPath.getName)) walk(st.getPath)
       }
     }
-    walk(root)
-    out.toSeq
+    if (fs.exists(root)) walk(root)
+  }
+
+  private def isData(n: String) =
+    n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+
+  // Spark's hidden-path rule: a "_"-prefixed DIRECTORY is still data
+  // when it is a partition dir (contains "=", e.g. "__cid=3")
+  private def visibleDir(n: String) =
+    n.contains("=") || (!n.startsWith("_") && !n.startsWith("."))
+
+  /** Every directory under `root` (root included) that has no child
+    * directories and directly holds visible parquet data files, with
+    * all of its file entries.
+    */
+  private def dataLeaves(fs: FileSystem, root: Path): Seq[(Path, Seq[FileStatus])] = {
+    val entries = fs.listStatus(root).toSeq
+    val (dirs, files) = entries.partition(_.isDirectory)
+    val here =
+      if (dirs.isEmpty && files.exists(st => isData(st.getPath.getName)))
+        Seq(root -> files)
+      else Nil
+    here ++ dirs.filter(st => visibleDir(st.getPath.getName))
+      .flatMap(st => dataLeaves(fs, st.getPath))
   }
 }

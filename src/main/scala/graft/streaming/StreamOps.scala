@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.Publish
+
 /** Structured Streaming surface. The reference has no streaming
   * (SURVEY.md §2.10); this is north-star capability: the same events
   * schema processed as an unbounded stream with event-time semantics.
@@ -64,13 +66,22 @@ object StreamOps {
     * back-fill the earlier ones' task tails). Callers pass only jobs
     * with DISJOINT output paths and no read-after-write between them;
     * shared cached inputs are safe (BlockManager computes each cached
-    * block once under a per-block lock). EVERY job is awaited to
-    * completion before the first failure rethrows: propagating out of
-    * a foreachBatch body while a sibling write is still running would
-    * let Structured Streaming replay the batch against a zombie
-    * writer on the same `batch=<bid>` path (a shared `_temporary`
-    * dir under the parquet committer) — awaiting all first restores
-    * the serial form's no-concurrent-writer-on-retry property.
+    * block once under a per-block lock) unless NESTED (below). EVERY
+    * job is awaited to completion before the first failure rethrows:
+    * propagating out of a foreachBatch body while a sibling write is
+    * still running would let Structured Streaming replay the batch
+    * against a zombie writer on the same `batch=<bid>` path (a shared
+    * `_temporary` dir under the parquet committer) — awaiting all
+    * first restores the serial form's no-concurrent-writer-on-retry
+    * property.
+    *
+    * Jobs passed together must not build NESTED caches concurrently:
+    * when the inner cache's build fails, Spark's CachedRDDBuilder
+    * re-caches its dependents while holding its own lock, and the
+    * concurrent builder of the dependent cache holds that lock while
+    * waiting on the inner one — the trigger hangs instead of failing.
+    * Callers run a job that builds the inner cache (its own write)
+    * before the jobs that read the outer one.
     */
   private def inParallel(jobs: (() => Unit)*): Unit = {
     import scala.concurrent.{Await, Future}
@@ -114,31 +125,6 @@ object StreamOps {
       math.max(session, 1)))
     withStatePartitions(spark, w)(body)
   }
-
-  /** Run a write whose plan carries an in-row `raise_error` guard,
-    * rethrowing a fired guard as the `IllegalArgumentException` the
-    * pre-flight `require` form threw (loud-failure type preserved for
-    * callers and specs). The guards were dedicated 1-row jobs per
-    * trigger (a posexplode aggregation, a take(1), a semi-join probe);
-    * folded into the state-write job they cost one expression per row
-    * and ZERO extra job round-trips (guide §1.2 — stop paying whole
-    * jobs for 1-row answers), and they still fire BEFORE anything
-    * commits: a raised row aborts the task, the job, and the parquet
-    * committer's temporary output.
-    */
-  private def guardedWrite(marker: String)(write: => Unit): Unit =
-    try write catch {
-      case e: Throwable =>
-        var c: Throwable = e
-        while (c != null) {
-          val m = c.getMessage
-          if (m != null && m.contains(marker))
-            throw new IllegalArgumentException(
-              m.stripPrefix("[USER_RAISED_EXCEPTION] ").trim, e)
-          c = c.getCause
-        }
-        throw e
-    }
 
   /** Tumbling event-time window counts with a watermark: late events
     * beyond 1 hour are dropped and state is bounded — the property
@@ -307,11 +293,9 @@ object StreamOps {
     * Delivery semantics: `foreachBatch` is at-least-once on retry —
     * and this apply is IDEMPOTENT (re-merging the same collapsed
     * batch is a fixed point), so the snapshot is exactly-once in
-    * effect. The merged result is eagerly materialized
-    * (localCheckpoint) before the overwrite so the read side of the
-    * rewrite never races the write side; a table format (or an
-    * HDFS-atomic tmp-dir rename) replaces this single-directory swap
-    * at cluster scale.
+    * effect. The merged snapshot publishes through [[Publish]]: it is
+    * staged beside the target, so the merge reads the snapshot it
+    * replaces without materializing it first.
     */
   def upsertBatch(batch: DataFrame, targetDir: String, key: String,
                   versionCol: String): Unit = {
@@ -326,9 +310,7 @@ object StreamOps {
       if (snapshotEntries(spark, targetDir).exists(_.endsWith(".parquet")))
         graft.operators.Upsert.scd1(spark.read.parquet(targetDir), collapsed, key)
       else collapsed
-    val out = merged.localCheckpoint(true)
-    out.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(targetDir)
-    out.unpersist()
+    Publish.parquet(merged, targetDir)
     }
   }
 
@@ -378,13 +360,18 @@ object StreamOps {
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, bid: Long) =>
-        withTriggerWidth(batch) {
-          graft.operators.InvertedIndex.build(batch, idName, col(textName))
-            .write.mode("overwrite").parquet(s"$indexDir/batch=$bid")
-        }
+        postingsBatch(batch, bid, indexDir, idName, textName)
       }
     trigger.fold(w)(w.trigger).start()
   }
+
+  /** One trigger of [[postingsSink]], idempotent under replay. */
+  private[graft] def postingsBatch(batch: DataFrame, bid: Long, indexDir: String,
+                                   idName: String, textName: String): Unit =
+    withTriggerWidth(batch) {
+      Publish.parquet(graft.operators.InvertedIndex.build(
+        batch, idName, col(textName)), s"$indexDir/batch=$bid")
+    }
 
   /** Streaming SQ8 vector ingest — the [[postingsSink]] discipline on
     * the code tier, completing the continuous-ingest family's VECTOR
@@ -447,7 +434,7 @@ object StreamOps {
       p => p.getField("d") >= lit(scales.length) ||
         p.getField("m") > element_at(scLit, p.getField("d") + 1))
     val codes = when(size(viol) > 0,
-        raise_error(format_string(
+        Publish.raise(format_string(
           s"sq8CodesSink batch $bid: |x_%d| = %.6g outside the frozen " +
             s"scales (dim count ${scales.length}) — codes would clip; " +
             "re-plan the scales and rebuild",
@@ -455,10 +442,8 @@ object StreamOps {
           element_at(viol, 1).getField("m"))).cast("binary"))
       .otherwise(graft.functions.VecFns.packInt8(
         graft.operators.Similarity.sq8Quantize(col(vecName), scales)))
-    guardedWrite("codes would clip") {
-      batch.select(col(idName), codes.as("codes"))
-        .write.mode("overwrite").parquet(s"$indexPath/codes/batch=$bid")
-    }
+    Publish.parquet(batch.select(col(idName), codes.as("codes")),
+      s"$indexPath/codes/batch=$bid")
   }
 
   /** Streaming BINARY-code ingest — the 1-bit tier's member of the
@@ -505,15 +490,13 @@ object StreamOps {
     val thr = thr0.getOrElse(
       graft.operators.Similarity.readBinThresholds(spark, indexPath))
     val code = when(size(col(vecName)) =!= thr.length,
-        raise_error(format_string(
+        Publish.raise(format_string(
           s"binCodesSink batch $bid: a vector has dimension %d but the " +
             s"index codes ${thr.length} — not the same embedding space",
           size(col(vecName)))).cast("array<bigint>"))
       .otherwise(graft.operators.Similarity.binQuantize(col(vecName), thr))
-    guardedWrite("not the same embedding space") {
-      batch.select(col(idName), code.as("code"))
-        .write.mode("overwrite").parquet(s"$indexPath/codes/batch=$bid")
-    }
+    Publish.parquet(batch.select(col(idName), code.as("code")),
+      s"$indexPath/codes/batch=$bid")
   }
 
   /** Streaming near-dup maintenance — the continuous-ingest fold of
@@ -619,11 +602,11 @@ object StreamOps {
     val genParts = math.max(1, batch.rdd.getNumPartitions)
     // disjoint outputs over the shared cached chunk relation —
     // concurrent (inParallel)
-    inParallel(
-      () => out.repartition(genParts)
-        .write.mode("overwrite").parquet(s"$stateDir/clean/batch=$bid"),
-      () => freshMd5.repartition(genParts)
-        .write.mode("overwrite").parquet(s"$fpDir/batch=$bid"))
+    Publish.dirs(spark, Seq(s"$stateDir/clean/batch=$bid", s"$fpDir/batch=$bid")) {
+      case Seq(clean, fp) => inParallel(
+        () => out.repartition(genParts).write.parquet(clean),
+        () => freshMd5.repartition(genParts).write.parquet(fp))
+    }
     segs.unpersist()
     ()
   }
@@ -709,20 +692,17 @@ object StreamOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (kept, rows) = Similarity.semanticDedupVsArchive(
       batch, idName, vecName, tau, cents, arch, Some(rowsShared))
-    // id-clash guard folded into BOTH state writes (it was a dedicated
-    // semi-join take(1) job per trigger): a zero-row-unless-violated
-    // guard subtree unions into each write — ids only through the semi
-    // join, so the payload never shuffles on its account — and any
-    // clash row raises DURING the writes, before either job commits
-    // (exactly the pre-flight guard's nothing-written-on-clash
-    // semantics, minus its job round-trip). Same loud
-    // IllegalArgumentException via guardedWrite.
+    // id-clash guard folded into BOTH state writes: a zero-row-unless-
+    // violated guard subtree unions into each write — ids only through
+    // the semi join, so the payload never shuffles on its account —
+    // and any clash row raises DURING the staged writes, before either
+    // generation is published
     val clashIds = rowsShared.select(col("id"))
       .join(arch.select(col("id")), Seq("id"), "left_semi")
     def withClashGuard(df: DataFrame): DataFrame = {
       val guardCols = df.schema.fields.zipWithIndex.map { case (f, i) =>
         if (i == 0)
-          raise_error(format_string(
+          Publish.raise(format_string(
             s"semanticDedupBatch: batch $bid re-delivers already-ingested " +
               "id %s — generations' id spaces must be disjoint (a retry " +
               "reuses its OWN batch id)", col("id").cast("string")))
@@ -734,13 +714,11 @@ object StreamOps {
     val genParts = math.max(1, batch.rdd.getNumPartitions)
     // disjoint outputs over the shared cached assignment relation —
     // concurrent (inParallel)
-    inParallel(
-      () => guardedWrite("re-delivers")(
-        withClashGuard(rows).repartition(genParts)
-          .write.mode("overwrite").parquet(s"$vecsDir/batch=$bid")),
-      () => guardedWrite("re-delivers")(
-        withClashGuard(kept).repartition(genParts)
-          .write.mode("overwrite").parquet(s"$stateDir/kept/batch=$bid")))
+    Publish.dirs(spark, Seq(s"$vecsDir/batch=$bid", s"$stateDir/kept/batch=$bid")) {
+      case Seq(v, k) => inParallel(
+        () => withClashGuard(rows).repartition(genParts).write.parquet(v),
+        () => withClashGuard(kept).repartition(genParts).write.parquet(k))
+    }
     rowsShared.unpersist()
     ()
   }
@@ -799,17 +777,18 @@ object StreamOps {
     // side is the cached shingle relation, a narrow dependency); the
     // exchange is pair-relation-sized, i.e. tiny
     // the three effect writes have disjoint outputs and share only the
-    // cached shB/bdB relations — run them concurrently (inParallel)
-    inParallel(
-      () => Dedup.minhashNearDupsIncremental(batch, idName, textName,
-          archSh, archBd, threshold, k, bands, shingleN,
-          batchShingles = Some(shB), batchBands = Some(bdB))
-        .repartition(genParts)
-        .write.mode("overwrite").parquet(s"$stateDir/pairs/batch=$bid"),
-      () => shB.coalesce(genParts).write.mode("overwrite")
-        .parquet(s"$shDir/batch=$bid"),
-      () => bdB.coalesce(genParts).write.mode("overwrite")
-        .parquet(s"$bdDir/batch=$bid"))
+    // cached shB/bdB relations; shB's own write builds the cache bdB
+    // reads, then the other two run concurrently ([[inParallel]])
+    Publish.dirs(spark, Seq(s"$stateDir/pairs/batch=$bid",
+        s"$shDir/batch=$bid", s"$bdDir/batch=$bid")) { case Seq(pairs, sh, bd) =>
+      shB.coalesce(genParts).write.parquet(sh)
+      inParallel(
+        () => Dedup.minhashNearDupsIncremental(batch, idName, textName,
+            archSh, archBd, threshold, k, bands, shingleN,
+            batchShingles = Some(shB), batchBands = Some(bdB))
+          .repartition(genParts).write.parquet(pairs),
+        () => bdB.coalesce(genParts).write.parquet(bd))
+    }
     shB.unpersist(); bdB.unpersist()
     ()
   }  // withTriggerWidth
@@ -948,28 +927,30 @@ object StreamOps {
       .join(ndDrop, Seq(idName), "left_anti")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // 3+4+archive appends: five effect writes with disjoint outputs
-    // over the shared cached relations (survivors, shB, bdB) — run
-    // them concurrently (inParallel): redaction, SQ8 codes of the
+    // over the shared cached relations (survivors, shB, bdB) — run them
+    // concurrently (inParallel) once the archive writes of shB and bdB
+    // built the caches survivors reads: redaction, SQ8 codes of the
     // survivors' vectors under the frozen scales, and the archive
     // appends of ALL batch documents' fingerprint and shingle state
     // (gates reference dropped documents too)
     val scales = scales0.getOrElse(
       Similarity.readSq8Scales(spark, s"$stateDir/sq8"))
     val q = Similarity.sq8Quantize(col(vecName), scales)
-    inParallel(
-      () => Tagging.redactDocs(survivors, idName, col(textName), patterns,
-          token)
-        .write.mode("overwrite").parquet(s"$stateDir/curated/batch=$bid"),
-      () => survivors.select(col(idName))
-        .join(embeddings, Seq(idName))
-        .select(col(idName),
-          graft.functions.VecFns.packInt8(q).as("codes"),
-          aggregate(q, lit(0L), (a, x) => a + x).as("code_sum"))
-        .write.mode("overwrite").parquet(s"$stateDir/sq8/codes/batch=$bid"),
-      () => fpB.write.mode("overwrite").parquet(s"$stateDir/fp/batch=$bid"),
-      () => shB.write.mode("overwrite")
-        .parquet(s"$stateDir/shingles/batch=$bid"),
-      () => bdB.write.mode("overwrite").parquet(s"$stateDir/bands/batch=$bid"))
+    Publish.dirs(spark, Seq("curated", "sq8/codes", "fp", "shingles", "bands")
+        .map(d => s"$stateDir/$d/batch=$bid")) {
+      case Seq(curated, codes, fp, sh, bd) =>
+        inParallel(() => shB.write.parquet(sh), () => fpB.write.parquet(fp))
+        bdB.write.parquet(bd)
+        inParallel(
+          () => Tagging.redactDocs(survivors, idName, col(textName), patterns,
+              token).write.parquet(curated),
+          () => survivors.select(col(idName))
+            .join(embeddings, Seq(idName))
+            .select(col(idName),
+              graft.functions.VecFns.packInt8(q).as("codes"),
+              aggregate(q, lit(0L), (a, x) => a + x).as("code_sum"))
+            .write.parquet(codes))
+    }
     survivors.unpersist(); shB.unpersist(); bdB.unpersist()
     ()
   }
@@ -1036,12 +1017,7 @@ object StreamOps {
           if (flatHistory)
             foldInto(spark.read.parquet(targetDir), collapsed, key, versionCol)
           else openAll(collapsed, versionCol)
-        merged.foreach { case (m, _) =>
-          val out = m.localCheckpoint(true)
-          out.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(targetDir)
-          out.unpersist()
-        }
+        merged.foreach { case (m, _) => Publish.parquet(m, targetDir) }
       case Some(n) =>
         require(n > 0, s"historyBuckets must be positive, got $n")
         require(!flatHistory, s"$targetDir holds an unpartitioned history " +
@@ -1064,11 +1040,7 @@ object StreamOps {
               readFrontier(spark, targetDir))
           } else openAll(collapsed, versionCol)
         merged.foreach { case (m, asOf) =>
-          val out = m.withColumn("__b", bucket).localCheckpoint(true)
-          out.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__b").parquet(targetDir)
-          out.unpersist()
+          Publish.partitions(m.withColumn("__b", bucket), targetDir, "__b")
           writeFrontier(spark, targetDir, asOf)
         }
     }

@@ -72,7 +72,7 @@ class ArtifactSpec extends AnyFunSuite {
 
   test("orphan .inprogress-* temp dirs from dead builders are reclaimed") {
     val path = freshPath("c")
-    val orphan = new File(s"$path.inprogress-deadbeef")
+    val orphan = new File(new File(path).getParentFile, ".c.stage-deadbeef")
     require(orphan.mkdirs())
     val part = new File(orphan, "part-00000")
     Files.writeString(part.toPath, "zombie")
@@ -90,7 +90,7 @@ class ArtifactSpec extends AnyFunSuite {
     val path = freshPath("c2")
     // recent mtime = another process could be mid-build right now;
     // deleting it would yank the staging dir out from under its write
-    val live = new File(s"$path.inprogress-cafef00d")
+    val live = new File(new File(path).getParentFile, ".c2.stage-cafef00d")
     require(live.mkdirs())
     Files.writeString(new File(live, "part-00000").toPath, "concurrent")
     Artifact.ensure(path)(fakeBuild("mine"))

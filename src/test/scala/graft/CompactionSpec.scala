@@ -273,32 +273,36 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("compactAppends crash repair: committed fold completes, uncommitted debris discarded") {
-    val leafDir = tmp("foldrepair")
+    val leafDir = tmp("foldrepair") + "/leaf"
     val leaf = new org.apache.hadoop.fs.Path(leafDir)
+    val parent = leaf.getParent
     val fs = leaf.getFileSystem(spark.sessionState.newHadoopConf())
     // two visible data files
     spark.range(0, 50).coalesce(1).write.mode("append").parquet(leafDir)
     spark.range(50, 100).coalesce(1).write.mode("append").parquet(leafDir)
     val olds = Compaction.parquetFiles(leafDir).map(_.getName).sorted
     assert(olds.size == 2)
-    // a COMMITTED fold that crashed before publishing: compacted data
-    // + manifest inside the dot-dir, nothing renamed in yet
-    val tmpDir = s"$leafDir/.compact-test1"
-    spark.range(0, 100).coalesce(1).write.mode("overwrite").parquet(tmpDir)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(tmpDir, "_graft_fold"), true)
-    out.write(olds.mkString("", "\n", "\n").getBytes("UTF-8")); out.close()
-    // an UNCOMMITTED build (no manifest) — pure debris
-    spark.range(0, 7).coalesce(1).write.mode("overwrite")
-      .parquet(s"$leafDir/.compact-test2")
+    // a COMMITTED fold that crashed mid-swap: the compacted leaf is
+    // staged and the old leaf already moved aside, nothing renamed in
+    spark.range(0, 100).coalesce(1).write
+      .parquet(s"$parent/.leaf.stage-0000c0de")
+    assert(fs.rename(leaf, new org.apache.hadoop.fs.Path(parent, ".leaf.old-0000c0de")))
+    // an UNCOMMITTED build (staged, never swapped) of a dead builder —
+    // pure debris once quiet past the stale window
+    val dead = s"$parent/.leaf.stage-0000dead"
+    spark.range(0, 7).coalesce(1).write.parquet(dead)
+    val old = System.currentTimeMillis() - 2 * graft.operators.Publish.StaleMs
+    Compaction.parquetFiles(dead).foreach(f => require(f.setLastModified(old)))
+    new java.io.File(dead).listFiles().foreach(f => require(f.setLastModified(old)))
+    require(new java.io.File(dead).setLastModified(old))
     Compaction.repairAppendCompaction(spark, leafDir)
     assert(spark.read.parquet(leafDir).select("id")
       .collect().map(_.getLong(0)).sorted.toSeq == (0L until 100L),
       "repair did not complete the committed fold")
     assert(Compaction.parquetFiles(leafDir).map(_.getName)
-      .forall(n => !olds.contains(n)), "manifest-named old files survive")
-    assert(Option(new java.io.File(leafDir).listFiles()).get
-      .forall(f => !f.getName.startsWith(".compact-")),
+      .forall(n => !olds.contains(n)), "folded old files survive")
+    assert(Option(new java.io.File(parent.toUri.getPath).listFiles()).get
+      .forall(f => !f.getName.startsWith(".leaf.")),
       "fold dirs not cleaned up")
     // repair is idempotent
     Compaction.repairAppendCompaction(spark, leafDir)

@@ -22,24 +22,17 @@ object Probe {
         .write.format("noop").mode("overwrite").save()
     // replicate the bench's between-rep release protocol so reps here
     // measure what the bench measures (see Bench.scala)
-    def release(): Unit = {
-      try spark.catalog.clearCache() catch { case _: Throwable => }
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      catch { case _: Throwable => }
-      System.gc(); Thread.sleep(200)
-    }
 
     val q = graft.SparkEntry.queries(name)(spark, dir)
     println(s"[probe] $name plan:")
     q.explain("formatted")
     run() // warm codegen
-    release()
+    graft.Sessions.release(spark)
     (1 to 5).foreach { i =>
       val t0 = System.nanoTime()
       run()
       println(f"[probe] $name rep $i ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      release()
+      graft.Sessions.release(spark)
     }
     spark.stop()
   }

@@ -27,9 +27,7 @@ object ProbeIter {
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        System.gc(); Thread.sleep(200)
+        graft.Sessions.release(spark)
         f"$dt%.1f"
       }
       println(s"[probe] $name reps=${times.mkString(",")}")

@@ -36,13 +36,6 @@ object ProbeKnnStages {
       println(f"[probe] $name%-42s $dt%9.2f s  rows=$n")
       dt
     }
-    def cleanup(): Unit = {
-      try spark.catalog.clearCache() catch { case _: Throwable => }
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      catch { case _: Throwable => }
-      System.gc(); Thread.sleep(200)
-    }
 
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val all = emb.select(col("vec_id").as("id"), col("embedding").as("v"))
@@ -50,7 +43,7 @@ object ProbeKnnStages {
     // full operator reference number first (same call ProbeScale100 makes)
     time("knnJoin full (reference)")(
       Similarity.knnJoin(emb, "vec_id", "embedding", k, numBits, bands).count())
-    cleanup()
+    graft.Sessions.release(spark)
 
     // ---- cumulative stages (each re-runs the prefix, deltas = stage cost)
     def contracted() = Dedup.contractBy(all, "id", "v")
@@ -58,7 +51,7 @@ object ProbeKnnStages {
     val t1 = time("S1 contractBy (groups count)") {
       val (groups, _) = contracted(); groups.count()
     }
-    cleanup()
+    graft.Sessions.release(spark)
 
     def reps(groups: DataFrame) = groups.select(col("rid").as("id"), col("v"))
     def sigged(groups: DataFrame) = reps(groups).select(col("id"), col("v"),
@@ -79,7 +72,7 @@ object ProbeKnnStages {
     val t2 = time("S2 +band self-join, bare pairs") {
       val (groups, _) = contracted(); repPairsBare(groups).count()
     }
-    cleanup()
+    graft.Sessions.release(spark)
 
     def repPairs(groups: DataFrame) = {
       val vecs = sigged(groups).select(col("id"), col("v"))
@@ -92,7 +85,7 @@ object ProbeKnnStages {
     val t3 = time("S3 +payload join-back + cosine") {
       val (groups, _) = contracted(); repPairs(groups).count()
     }
-    cleanup()
+    graft.Sessions.release(spark)
 
     def materialized(df: DataFrame): DataFrame = {
       val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -134,7 +127,7 @@ object ProbeKnnStages {
       if (membersOpt.isEmpty) { println("[probe] clone-free corpus — no expansion"); 0L }
       else cands(groups, membersOpt).count()
     }
-    cleanup()
+    graft.Sessions.release(spark)
 
     val t5 = time("S5 +final top-k window (full)") {
       val (groups, membersOpt) = contracted()
@@ -144,7 +137,7 @@ object ProbeKnnStages {
         .withColumn("__rn", row_number().over(win))
         .filter(col("__rn") <= k).drop("__rn").count()
     }
-    cleanup()
+    graft.Sessions.release(spark)
 
     println(f"[probe] stage deltas: contract=$t1%.1f band=${t2 - t1}%.1f " +
       f"payload=${t3 - t2}%.1f expand=${t4 - t3}%.1f window=${t5 - t4}%.1f")

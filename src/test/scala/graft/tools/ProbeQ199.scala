@@ -95,11 +95,7 @@ object ProbeQ199 {
         exact.crossJoin(broadcast(verdict))
           .write.format("noop").mode("overwrite").save()
       }
-      try spark.catalog.clearCache() catch { case _: Throwable => }
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      catch { case _: Throwable => }
-      System.gc(); Thread.sleep(200)
+      graft.Sessions.release(spark)
     }
     spark.stop()
   }

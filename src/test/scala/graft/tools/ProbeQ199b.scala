@@ -75,11 +75,7 @@ object ProbeQ199b {
         bdB.write.mode("overwrite").parquet(s"$scratch/tmp_bd")
       }
       shB.unpersist(); bdB.unpersist()
-      try spark.catalog.clearCache() catch { case _: Throwable => }
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      catch { case _: Throwable => }
-      System.gc(); Thread.sleep(200)
+      graft.Sessions.release(spark)
     }
     spark.stop()
   }

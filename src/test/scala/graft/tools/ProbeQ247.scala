@@ -101,11 +101,7 @@ object ProbeQ247 {
         exact.crossJoin(broadcast(recall)).crossJoin(broadcast(dominated))
           .write.format("noop").mode("overwrite").save()
       }
-      try spark.catalog.clearCache() catch { case _: Throwable => }
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      catch { case _: Throwable => }
-      System.gc(); Thread.sleep(200)
+      graft.Sessions.release(spark)
     }
     spark.stop()
   }

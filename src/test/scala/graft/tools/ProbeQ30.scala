@@ -107,9 +107,7 @@ object ProbeQ30 {
         graft.SparkEntry.queries("q30_jaccard_pairs")(spark, dir)
           .write.format("noop").mode("overwrite").save()
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      System.gc(); Thread.sleep(200)
+      graft.Sessions.release(spark)
     }
     spark.stop()
   }

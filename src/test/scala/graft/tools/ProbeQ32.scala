@@ -27,19 +27,12 @@ object ProbeQ32 {
       println(f"[probe] $label%-40s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
       r
     }
-    def release(): Unit = {
-      try spark.catalog.clearCache() catch { case _: Throwable => }
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      catch { case _: Throwable => }
-      System.gc(); Thread.sleep(200)
-    }
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     // warm
     sec("warm full q32")(
       noop(graft.SparkEntry.queries("q32_simhash_neardups")(spark, dir)))
-    release()
+    graft.Sessions.release(spark)
     (1 to 2).foreach { rep =>
       println(s"[probe] ---- rep $rep ----")
       val docs = graft.Tables(spark, dir).documents
@@ -54,10 +47,10 @@ object ProbeQ32 {
       sec("8-band ham3 from cached hashes")(
         noop(Dedup.simhashNearDups(docs, "doc_id", "text", maxHamming = 3,
           bands = 8, hashes = Some(sh))))
-      release()
+      graft.Sessions.release(spark)
       sec("full q32")(
         noop(graft.SparkEntry.queries("q32_simhash_neardups")(spark, dir)))
-      release()
+      graft.Sessions.release(spark)
     }
     spark.stop()
   }

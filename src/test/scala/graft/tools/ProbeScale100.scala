@@ -60,11 +60,7 @@ object ProbeScale100 {
       val n = f
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"[probe] $name%-40s $dt%9.2f s  rows=$n")
-      try spark.catalog.clearCache() catch { case _: Throwable => }
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      catch { case _: Throwable => }
-      System.gc(); Thread.sleep(200)
+      graft.Sessions.release(spark)
       dt
     }
 

@@ -60,10 +60,7 @@ object ProbeScaleGraph {
       val n = f
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"[probe] $name%-34s $dt%8.2f s  rows=$n")
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      catch { case _: Throwable => }
-      System.gc(); Thread.sleep(200)
+      graft.Sessions.release(spark)
       dt
     }
 
