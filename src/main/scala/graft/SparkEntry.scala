@@ -1,24 +1,21 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.api.{ClientApi, KnowledgeGraph}
-import graft.functions.{ChemFns, TextFns, VecFns}
-import graft.operators.{Artifact, AsofJoin, Association, Bfs, Bloom, Chunking, Dedup, FreqSketch, Funnel, InvertedIndex, Mixing, Multimodal, NbClassify, Outliers, PageRank, Quality, Quantize, RangeJoin, Resample, Retrieval, SegmentOps, Similarity, Skyline, Tagging, TextMetrics, UnigramLm, Upsert}
-import graft.ops.RelOps
-import graft.pipelines.{Checkpointed, Repurpose}
-import graft.sources.{CsvIO, JsonlIO}
+import graft.pipelines.Repurpose
+import graft.registry.{GraphQueries, KgQueries, PipelineQueries, Query, RelationalQueries,
+  StreamingQueries, Support, TextQueries, VectorQueries}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Every operator row of SURVEY.md §2 (plus the north-star LLM-data-
-  * pipeline extensions) has a named query here; each SQL-expressible
-  * one has a DuckDB oracle twin in `oracleSql` with IDENTICAL column
-  * names and ordering. Non-SQL-expressible ops (sketches, ANN, UDF
-  * paths) are rows-only checked and covered by ScalaTest specs.
+  * pipeline extensions) has a named query. Each query is one [[Query]]
+  * record in its family's registry under `graft.registry`: its name,
+  * its builder and its DuckDB oracle SQL, with IDENTICAL column names
+  * and ordering. Every query has a full oracle; sketch/ANN queries
+  * carry envelope oracles (the DuckDB-exact side plus guarantee
+  * verdicts pinned TRUE) and also assert in-query invariants
+  * ([[invariantEvidence]]).
   */
 object SparkEntry {
 
@@ -31,10257 +28,23 @@ object SparkEntry {
     // candidate set is empty at that scale; q22 uses it at sf0.01+).
     Repurpose.candidateParts(spark, "/root/testdata/sf0.001", segment = "HOUSEHOLD")
 
-  private def t(s: SparkSession, dir: String) = Tables(s, dir)
+  /** Every registered query, family by family. */
+  private[graft] lazy val registry: Seq[Query] =
+    RelationalQueries.all ++ TextQueries.all ++ VectorQueries.all ++
+      GraphQueries.all ++ StreamingQueries.all ++ KgQueries.all ++
+      PipelineQueries.all
 
-  /** In-query invariants for the rows-only (no-oracle) queries: the
-    * driver only sees row counts for sketch/ANN ops, so each one
-    * asserts its own correctness contract (subset-of-exact, recall
-    * floor, banding completeness) at construction time and THROWS on
-    * violation — turning "rows > 0" into a meaningful signal. Each
-    * check runs once per JVM per key; a failed check re-arms so
-    * retries re-validate.
-    */
-  /** Derived on-disk artifacts (CSV checkpoint, endpoint shards, IVF
-    * index) live in tmpdir under a tag of the SOURCE table's size and
-    * mtime, so regenerated testdata or two dirs with colliding
-    * hashCodes can never serve stale or cross-wired fixtures — the
-    * path changes with the data and the artifact is rebuilt.
-    */
-  private def fixturePath(prefix: String, dir: String, sourceTables: String*): String = {
-    def stat(f: java.io.File): (Long, Long) =
-      if (f.isDirectory) {
-        val kids = Option(f.listFiles()).getOrElse(Array.empty).map(stat)
-        (kids.map(_._1).sum, (f.lastModified() +: kids.map(_._2)).max)
-      } else (f.length(), f.lastModified())
-    // fold EVERY source table into the tag: an artifact built from
-    // three tables keyed on one would survive regeneration of the
-    // other two and serve stale rows against a fresh oracle
-    val tag0 = sourceTables.foldLeft(dir.hashCode.toLong << 32) { (acc, tbl) =>
-      val (len, mtime) = stat(new java.io.File(dir, s"$tbl.parquet"))
-      (acc * 1000003L) ^ (len * 1000003L) ^ mtime
-    }
-    val tag = java.lang.Long.toHexString(tag0)
-    val tmpdir = System.getProperty("java.io.tmpdir")
-    val path = s"$tmpdir/graft_${prefix}_$tag"
-    // Retention: regenerated source data changes the tag, stranding
-    // the previous generation's directories forever (the round-6
-    // audit found three full generations under /tmp). Every path this
-    // process has handed out stays protected; any OTHER same-family
-    // dir that has also been mtime-quiet for the sweep window is a
-    // superseded generation — reclaim it. Deterministic artifacts
-    // make a mistaken delete self-healing (the next ensure rebuilds).
-    val live = Option(liveFixtures.putIfAbsent(prefix,
-        java.util.concurrent.ConcurrentHashMap.newKeySet[String]()))
-      .getOrElse(liveFixtures.get(prefix))
-    live.add(path)
-    import scala.jdk.CollectionConverters._
-    Artifact.sweep(tmpdir, s"graft_${prefix}_", live.asScala.toSet)
-    path
-  }
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
 
-  /** Every fixture path handed out by this JVM, per family prefix —
-    * the sweep's keep-set, so concurrently-used corpora (the bench
-    * warms sf0.001 then times sf0.1) never reclaim each other.
-    */
-  private val liveFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      java.util.Set[String]]()
-
-  /** Shared jaccard-cluster label relation for the dedup family (q69
-    * reports it, q90 prunes with it): built once per input dir via the
-    * persisted-artifact path, so the expensive prefix-join + connected
-    * components runs a single time per corpus instead of once per
-    * consumer. Parameters are pinned here so every consumer sees the
-    * same relation.
-    */
-  private def jaccardLabels(s: SparkSession, dir: String): DataFrame =
-    Dedup.ensureClusterLabels(t(s, dir).documents, "doc_id", "text",
-      n = JaccardShingleN, threshold = 0.6, maxShingleFreq = Long.MaxValue,
-      fixturePath("jacclabels", dir, "documents"),
-      shingles = Some(sharedShingles(s, dir)))
-
-  /** Shared hashed-shingle relation (id, sh) for the n-gram family:
-    * q30's pair join, the q69/q90/q125 label build, and both
-    * decontamination consumers (q65, q125) all read ONE persisted
-    * shingling of the corpus instead of re-tokenizing it per query —
-    * the first checkpoint a 100 TB text pipeline would materialize.
-    * n is pinned to 3 here so every consumer shares the same artifact.
-    */
-  /** THE pinned shingle width for the whole n-gram jaccard family:
-    * one constant threads through the ensureShingleSets build AND
-    * every consumer. Dedup additionally enforces the width at runtime
-    * (field metadata on the relation + a parameter sidecar on the
-    * persisted artifact — see the contract on Dedup.jaccardPairs), so
-    * a drifted constant would throw rather than corrupt results.
-    */
-  private val JaccardShingleN = 3
-
-  /** KG whose association edges read the per-corpus persisted index
-    * (the reference server's own shape: scores are precomputed by an
-    * ETL, the API scans them) — shared by every KG query.
-    */
-  private def kgIndexed(s: SparkSession, dir: String): KnowledgeGraph =
-    KnowledgeGraph(s, dir,
-      fixturePath("kgidx", dir, "lineitem", "orders", "customer"))
-
-  private def sharedShingles(s: SparkSession, dir: String): DataFrame =
-    Dedup.ensureShingleSets(t(s, dir).documents, "doc_id", "text",
-      n = JaccardShingleN, fixturePath("shingles", dir, "documents"))
-
-  /** Persisted exact-pair relation at the corpus's standard dedup
-    * threshold — standing pipeline state like the shingle and label
-    * artifacts, shared by every consumer that KEYS on the exact pair
-    * set (q31's envelope, q183's oracle side, q191's batch fold).
-    * q30 deliberately does NOT read it: that row benches the live
-    * PPJoin that BUILDS this artifact.
-    */
-  private def sharedPairs(s: SparkSession, dir: String): DataFrame =
-    Dedup.ensureJaccardPairs(t(s, dir).documents, "doc_id", "text",
-      n = JaccardShingleN, threshold = 0.6, maxShingleFreq = Long.MaxValue,
-      fixturePath("jacpairs", dir, "documents"),
-      shingles = Some(sharedShingles(s, dir)))
-
-  /** Persisted exact curation-survivor set — fingerprint keep-first
-    * minus near-dup later-side drops (off [[sharedPairs]]): the batch
-    * "device" q216's gate-equivalence verdict compares the streamed
-    * survivor set against. Standing pipeline state like the shingle
-    * and pair artifacts — built ONCE per corpus generation, so the
-    * benched stream replay pays two anti-joins against a cached
-    * relation instead of recomputing a corpus-wide fingerprint window
-    * every rep (the round-14 `weak` flag on q216's bench billing).
-    */
-  private def sharedCurationExact(s: SparkSession, dir: String): DataFrame = {
-    val path = fixturePath("cursurv", dir, "documents")
-    Artifact.ensure(path) { tmp =>
-      val docs = t(s, dir).documents
-      val fpW = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("fp")).orderBy(col("doc_id"))
-      val fpKeep = docs
-        .select(col("doc_id"), TextFns.fingerprint(col("text")).as("fp"))
-        .withColumn("__rn", row_number().over(fpW))
-        .filter(col("__rn") === 1).select(col("doc_id"))
-      val ndDrop = sharedPairs(s, dir)
-        .select(greatest(col("id_a"), col("id_b")).as("doc_id")).distinct()
-      fpKeep.join(ndDrop, Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").parquet(tmp)
-    }
-    s.read.parquet(path)
-  }
-
-  /** One-row (subset_of_exact, recall_ok) verdict over pair relations
-    * keyed (id_a, id_b): `got` emits nothing outside `exKeys` and
-    * recovers at least `floor` of it (vacuously true on an empty
-    * exact set). Plan-fused — the envelope oracles pin these booleans
-    * TRUE, so the check must ride the query, never a count-require
-    * job. Shared by the near-dup envelopes (q31, q199).
-    */
-  private def subsetRecallVerdict(got: DataFrame, exKeys: DataFrame,
-                                  floor: Double): DataFrame =
-    got.join(exKeys, Seq("id_a", "id_b"), "left_anti")
-      .agg(count(lit(1)).as("__fp"))
-      .crossJoin(got.join(exKeys, Seq("id_a", "id_b"), "left_semi")
-        .agg(count(lit(1)).as("__hit")))
-      .crossJoin(exKeys.agg(count(lit(1)).as("__n")))
-      .select((col("__fp") === 0L).as("subset_of_exact"),
-        (col("__n") === 0L || col("__hit") >= col("__n") * floor)
-          .as("recall_ok"))
-
-  /** One-row recall-floor verdict over (query_id, nn_id) retrieval
-    * pairs: the banded candidates recover at least `floor` of the
-    * exact rows — vacuously true on an empty exact set (sum() over
-    * zero rows is NULL, which would otherwise turn the pinned-TRUE
-    * verdict into NULL, the subsetRecallVerdict guard). Shared by
-    * the KNN envelopes (q36, q88).
-    */
-  private def hitFloorVerdict(exact: DataFrame, banded: DataFrame,
-                              floor: Double): DataFrame =
-    exact.select(col("query_id"), col("nn_id"))
-      .join(banded.select(col("query_id"), col("nn_id"), lit(1).as("__hit")),
-        Seq("query_id", "nn_id"), "left")
-      .agg((count(lit(1)) === 0L ||
-        sum(coalesce(col("__hit"), lit(0))).cast("double")
-          >= count(lit(1)).cast("double") * floor).as("ann_recall_ok"))
-
-  /** Materialize a multi-consumer relation once, passing through when
-    * an EQUIVALENT plan is already cached (`storageLevel` consults the
-    * CacheManager with plan matching): the no-op re-persist logs a
-    * `CacheManager: Asked to cache already cached data` WARN per call,
-    * and the bench tail is pinned WARN-free (ProbeWarnScan machine-
-    * checks it). The collision is real, not hypothetical — the
-    * SelfCheck fixture blocks run against [[SelfCheck.FixtureDir]]
-    * (sf0.001), so any run AT sf0.001 sees the main body re-derive
-    * plans the fixture block already cached.
-    */
-  private def materializedOnce(df: DataFrame): DataFrame =
-    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
-    else {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count(); p
-    }
-
-  /** Persisted 4-file document backlog in doc_id order (one id-range
-    * bucket per file, mtimes spaced so maxFilesPerTrigger=1 replays
-    * them oldest-first) — the shared SOURCE for the streaming-ingest
-    * twins (q195 index maintenance, q199 near-dup maintenance).
-    */
-  private def ensureDocBacklog(s: SparkSession, dir: String): String = {
-    val src = fixturePath("postsrc", dir, "documents")
-    Artifact.ensure(src) { tmp =>
-      val d = t(s, dir).documents.select(col("doc_id"), col("text"))
-      val bounds = d.agg(min(col("doc_id")), max(col("doc_id"))).head()
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val base = System.currentTimeMillis() - 3600L * 1000
-      (1 to 4).foreach { b =>
-        val part = s"$tmp/_b$b"
-        d.filter((floor((col("doc_id") - lit(lo)) * lit(4)
-            / lit(hi - lo + 1)) + lit(1)).cast("int") === b)
-          .coalesce(1).write.mode("overwrite").parquet(part)
-        val f = new java.io.File(part).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(tmp, s"b$b.parquet")
-        java.nio.file.Files.move(f.toPath, dst.toPath)
-        dst.setLastModified(base + b * 2000L)
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(part))
-      }
-    }
-    src
-  }
-
-  /** Persisted 4-file EMBEDDINGS backlog (vec_id-range buckets,
-    * mtimes spaced oldest-first) — the vector-ingest source for the
-    * streaming SQ8 twin (q212), mirroring [[ensureDocBacklog]].
-    */
-  private def ensureEmbBacklog(s: SparkSession, dir: String): String = {
-    val src = fixturePath("embbacklog", dir, "embeddings")
-    Artifact.ensure(src) { tmp =>
-      val e = t(s, dir).embeddings.select(col("vec_id"), col("embedding"))
-      val bounds = e.agg(min(col("vec_id")), max(col("vec_id"))).head()
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val base = System.currentTimeMillis() - 3600L * 1000
-      (1 to 4).foreach { b =>
-        val part = s"$tmp/_b$b"
-        e.filter((floor((col("vec_id") - lit(lo)) * lit(4)
-            / lit(hi - lo + 1)) + lit(1)).cast("int") === b)
-          .coalesce(1).write.mode("overwrite").parquet(part)
-        val f = new java.io.File(part).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(tmp, s"b$b.parquet")
-        java.nio.file.Files.move(f.toPath, dst.toPath)
-        dst.setLastModified(base + b * 2000L)
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(part))
-      }
-    }
-    src
-  }
-
-  /** Persisted 4-file SEMANTIC-DEDUP backlog: three ascending
-    * vec_id-range terciles of the embeddings corpus, then a fourth
-    * batch of EXACT CLONES (vec_id%8==0 under +1000000 ids) — the
-    * guaranteed cross-batch duplication fixture (same vector → same
-    * cluster, cosine 1.0). Ascending ids across files is the backlog
-    * contract the incremental gates require; mtimes spaced
-    * oldest-first so maxFilesPerTrigger=1 ingests in order.
-    */
-  private def ensureSemBacklog(s: SparkSession, dir: String): String = {
-    val src = fixturePath("sembacklog", dir, "embeddings")
-    Artifact.ensure(src) { tmp =>
-      val e = t(s, dir).embeddings.select(col("vec_id"), col("embedding"))
-      val bounds = e.agg(min(col("vec_id")), max(col("vec_id"))).head()
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val base = System.currentTimeMillis() - 3600L * 1000
-      def land(df: org.apache.spark.sql.DataFrame, b: Int): Unit = {
-        val part = s"$tmp/_b$b"
-        df.coalesce(1).write.mode("overwrite").parquet(part)
-        val f = new java.io.File(part).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = new java.io.File(tmp, s"b$b.parquet")
-        java.nio.file.Files.move(f.toPath, dst.toPath)
-        dst.setLastModified(base + b * 2000L)
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(part))
-      }
-      (1 to 3).foreach { b =>
-        land(e.filter((floor((col("vec_id") - lit(lo)) * lit(3)
-          / lit(hi - lo + 1)) + lit(1)).cast("int") === b), b)
-      }
-      land(e.filter(col("vec_id") % 8 === 0)
-        .select((col("vec_id") + lit(1000000L)).as("vec_id"),
-          col("embedding")), 4)
-    }
-    src
-  }
-
-  private object SelfCheck {
-    /** One invariant's outcome: which check ran, whether it held, and
-      * the values it measured — the evidence Verify dumps next to the
-      * parquet results so the driver's `no_oracle` rows carry proof
-      * that the invariants RAN AND PASSED (not merely "rows > 0").
-      */
-    final case class Evidence(key: String, passed: Boolean,
-                              measured: Seq[String], error: Option[String])
-    private val done = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    private val records =
-      new java.util.concurrent.ConcurrentHashMap[String, Evidence]()
-    private val notes =
-      new ThreadLocal[scala.collection.mutable.ArrayBuffer[String]]
-    val FixtureDir = "/root/testdata/sf0.001"
-    def fixtureExists: Boolean = new java.io.File(FixtureDir).isDirectory
-
-    /** Record a measured value for the invariant currently running —
-      * a no-op outside a check body.
-      */
-    def note(msg: String): Unit =
-      Option(notes.get()).foreach { b => b += msg; () }
-
-    def once(key: String)(check: => Unit): Unit =
-      if (done.add(key)) {
-        try record(key)(check)
-        catch { case e: Throwable => done.remove(key); throw e }
-      }
-
-    /** Like [[once]] but re-runs (and re-records) on every call — for
-      * invariants cheap enough to validate per invocation.
-      */
-    def every(key: String)(check: => Unit): Unit = record(key)(check)
-
-    private def record(key: String)(body: => Unit): Unit = {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      notes.set(buf)
-      try {
-        body
-        records.put(key, Evidence(key, passed = true, buf.toSeq, None))
-        ()
-      } catch {
-        case e: Throwable =>
-          records.put(key, Evidence(key, passed = false, buf.toSeq,
-            Some(Option(e.getMessage).getOrElse(e.getClass.getName))))
-          throw e
-      } finally notes.remove()
-    }
-
-    def evidence: Seq[Evidence] =
-      records.values.toArray(Array.empty[Evidence]).toSeq.sortBy(_.key)
-  }
+  lazy val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracle).toMap
 
   /** Evidence trail of every in-query invariant this JVM has run —
     * (check key, passed, measured values, error). Verify serializes it
-    * to `invariants.json` so CORRECTNESS consumers can distinguish
-    * "unverifiable by DuckDB" from "unverified".
+    * to `invariants.json`.
     */
   def invariantEvidence: Seq[(String, Boolean, String, String)] =
-    SelfCheck.evidence.map(e =>
+    Support.SelfCheck.evidence.map(e =>
       (e.key, e.passed, e.measured.mkString("; "), e.error.getOrElse("")))
-
-  // ---- shared expression helpers (keep Spark & oracle in lockstep) ----
-  private def epochTs(c: Column): Column = c.cast("double")
-
-  /** Order-independent money sum: casting each term to DECIMAL before
-    * summing makes the aggregate exact (no fp accumulation), so Spark's
-    * parallel sum and DuckDB's sequential sum agree bit-for-bit at the
-    * round(2) boundary. The oracle twin is
-    * `CAST(round(sum(CAST(x AS DECIMAL(18,4))),2) AS DOUBLE)`.
-    */
-  private def moneySum(term: Column): Column =
-    round(sum(term.cast("decimal(18,4)")), 2).cast("double")
-
-  /** Canonical co-purchase edge relation (parts ordered together,
-    * p_size cut keeps the demo graph bench-sized), persisted once per
-    * corpus — q134 and q135 both consume it, so the quadratic-per-
-    * order pair join runs once and every rerun reads parquet (the
-    * q100/q119 shared-graph-artifact pattern).
-    */
-  private def coPurchaseEdges(s: SparkSession, dir: String): DataFrame = {
-    val path = fixturePath("copurchase", dir, "lineitem", "part")
-    Artifact.ensure(path) { tmp =>
-      val tt = t(s, dir)
-      val smallParts = tt.part.filter(col("p_size") <= 15).select(col("p_partkey"))
-      val li = tt.lineitem
-        .join(smallParts, col("l_partkey") === col("p_partkey"))
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-      val pairs = li.as("a")
-        .join(li.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("src"), col("b.p").as("dst"))
-      graft.operators.Graphs.undirected(pairs, "src", "dst")
-        .write.mode("overwrite").parquet(tmp)
-    }
-    s.read.parquet(path)
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---------------- §2.4 aggregations (A1/A2) ----------------
-    "q01_pricing_summary" -> ((s, dir) => {
-      t(s, dir).lineitem
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          round(sum(col("l_quantity")), 2).as("sum_qty"),
-          moneySum(col("l_extendedprice")).as("sum_base_price"),
-          moneySum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("sum_disc_price"),
-          round(avg(col("l_quantity")), 4).as("avg_qty"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-
-    // ---------------- P3 threshold filter ----------------
-    "q02_threshold_filter" -> ((s, dir) => {
-      RelOps.thresholdFilter(t(s, dir).lineitem, col("l_quantity"), 45.0)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-          round(col("l_extendedprice"), 2).as("price"))
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-
-    // ---------------- S2 search + relevance rank + O1/O2 ----------------
-    "q03_search_rank" -> ((s, dir) => {
-      RelOps.topK(
-        RelOps.search(t(s, dir).part, col("p_name"), "red"),
-        10, Seq(col("p_retailprice").desc, col("p_partkey").asc))
-        .select(col("p_partkey"), col("p_name"), round(col("p_retailprice"), 2).as("price"))
-    }),
-
-    // ---------------- S3 point lookup ----------------
-    "q04_point_lookup" -> ((s, dir) => {
-      t(s, dir).customer.filter(col("c_custkey") === 42)
-        .select(col("c_custkey"), col("c_name"), round(col("c_acctbal"), 2).as("acctbal"))
-    }),
-
-    // ---------------- S4 batch lookup via semi join ----------------
-    "q05_batch_semi" -> ((s, dir) => {
-      val keys = t(s, dir).customer.filter(col("c_acctbal") > 9500)
-        .select(col("c_custkey").as("o_custkey"))
-      RelOps.semi(t(s, dir).orders, keys, Seq("o_custkey"))
-        .select(col("o_orderkey"), col("o_custkey"), round(col("o_totalprice"), 2).as("total"))
-        .orderBy("o_orderkey")
-    }),
-
-    // ---------------- P4 blocklist anti-filter ----------------
-    "q06_blocklist" -> ((s, dir) => {
-      RelOps.blocklist(t(s, dir).customer, col("c_mktsegment"),
-        Seq("AUTOMOBILE", "HOUSEHOLD"))
-        .select(col("c_custkey"), col("c_mktsegment"))
-        .orderBy("c_custkey")
-    }),
-
-    // ---------------- SO5 dedup keep-first (deterministic) ----------------
-    "q07_first_order_per_cust" -> ((s, dir) => {
-      RelOps.dedupKeepFirst(t(s, dir).orders,
-        Seq(col("o_custkey")), Seq(col("o_orderdate").asc, col("o_orderkey").asc))
-        .select(col("o_custkey"), col("o_orderkey"),
-          col("o_orderdate").cast("timestamp").cast("long").as("first_ts"))
-        .orderBy("o_custkey")
-    }),
-
-    // ---------------- J1/J3 fan-out joins ----------------
-    "q08_region_orders" -> ((s, dir) => {
-      val tt = t(s, dir)
-      val (r, n) = (tt.region, tt.nation)
-      val joined = r
-        .join(n, n("n_regionkey") === r("r_regionkey"))
-        .join(tt.customer, col("c_nationkey") === col("n_nationkey"))
-        .join(tt.orders, col("o_custkey") === col("c_custkey"))
-      joined.groupBy(col("r_name"))
-        .agg(count(lit(1)).as("n_orders"),
-          moneySum(col("o_totalprice")).as("sum_total"))
-        .orderBy("r_name")
-    }),
-
-    // ---------------- J11 join on differently-named keys ----------------
-    "q09_brand_quantity" -> ((s, dir) => {
-      val tt = t(s, dir)
-      tt.part.join(tt.lineitem, col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"))
-        .agg(round(sum(col("l_quantity")), 2).as("sum_qty"), count(lit(1)).as("n_lines"))
-        .orderBy("p_brand")
-    }),
-
-    // ---------------- SO1 set difference ----------------
-    "q10_part_diff" -> ((s, dir) => {
-      val tt = t(s, dir)
-      def partsOf(seg: String) = tt.lineitem
-        .join(tt.orders, col("o_orderkey") === col("l_orderkey"))
-        .join(tt.customer, col("c_custkey") === col("o_custkey"))
-        .filter(col("c_mktsegment") === seg)
-        .select(col("l_partkey").as("p_key")).distinct()
-      partsOf("BUILDING").except(partsOf("MACHINERY")).orderBy("p_key")
-    }),
-
-    // ---------------- SO2 set intersection ----------------
-    "q11_part_intersect" -> ((s, dir) => {
-      val tt = t(s, dir)
-      def partsOf(seg: String) = tt.lineitem
-        .join(tt.orders, col("o_orderkey") === col("l_orderkey"))
-        .join(tt.customer, col("c_custkey") === col("o_custkey"))
-        .filter(col("c_mktsegment") === seg)
-        .select(col("l_partkey").as("p_key")).distinct()
-      partsOf("BUILDING").intersect(partsOf("MACHINERY")).orderBy("p_key")
-    }),
-
-    // ---------------- A1/A2 count + count distinct ----------------
-    "q12_distinct_counts" -> ((s, dir) => {
-      t(s, dir).lineitem.groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("l_suppkey")).as("n_supp"),
-          countDistinct(col("l_partkey")).as("n_part"))
-        .orderBy("l_returnflag")
-    }),
-
-    // ---------------- A3 collect per group (sorted for determinism) ----------------
-    "q13_collect_nations" -> ((s, dir) => {
-      val tt = t(s, dir)
-      val joined = tt.customer.join(tt.nation, col("n_nationkey") === col("c_nationkey"))
-      RelOps.collectPerGroup(joined, Seq(col("c_mktsegment")), col("n_name"), "nations_arr")
-        .select(col("c_mktsegment"), array_join(col("nations_arr"), ",").as("nations"))
-        .orderBy("c_mktsegment")
-    }),
-
-    // ---------------- O2 top-1 global ----------------
-    "q14_top_order" -> ((s, dir) => {
-      RelOps.topK(t(s, dir).orders, 1,
-        Seq(col("o_totalprice").desc, col("o_orderkey").asc))
-        .select(col("o_orderkey"), col("o_custkey"), round(col("o_totalprice"), 2).as("total"))
-    }),
-
-    // ---------------- O3 top-1 per group ----------------
-    "q15_top_order_per_cust" -> ((s, dir) => {
-      RelOps.firstPerGroup(t(s, dir).orders, Seq(col("o_custkey")),
-        Seq(col("o_totalprice").desc, col("o_orderkey").asc))
-        .select(col("o_custkey"), col("o_orderkey"), round(col("o_totalprice"), 2).as("total"))
-        .orderBy("o_custkey")
-    }),
-
-    // ---------------- P10 coalesce fallback (null-producing left join) ----------------
-    "q16_revenue_fallback" -> ((s, dir) => {
-      val tt = t(s, dir)
-      val rev = tt.lineitem.filter(col("l_returnflag") === "R")
-        .groupBy(col("l_partkey"))
-        .agg(moneySum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("r"))
-      tt.part.join(rev, col("l_partkey") === col("p_partkey"), "left")
-        .select(col("p_partkey"), coalesce(col("r"), lit(0.0)).as("returned_rev"))
-        .orderBy("p_partkey")
-    }),
-
-    // ---------------- F4 JSON navigation ----------------
-    "q17_json_extract" -> ((s, dir) => {
-      t(s, dir).events
-        .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
-        .groupBy(col("event_type"))
-        .agg(round(avg(col("k")), 4).as("avg_k"), count(lit(1)).as("n"))
-        .orderBy("event_type")
-    }),
-
-    // ---------------- SO4 union-all accumulate ----------------
-    "q18_union_status" -> ((s, dir) => {
-      val o = t(s, dir).orders
-      val a = o.filter(col("o_totalprice") > 40000).select(col("o_orderstatus").as("status"))
-      val b = o.filter(col("o_orderpriority") === "1-URGENT").select(col("o_orderstatus").as("status"))
-      a.unionByName(b).groupBy(col("status")).agg(count(lit(1)).as("n")).orderBy("status")
-    }),
-
-    // ---------------- §2.8 window analytics (rank/lag/running sum) ----------------
-    "q19_order_rank" -> ((s, dir) => {
-      val byPrice = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      val byDate = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
-      t(s, dir).orders
-        .select(col("o_custkey"), col("o_orderkey"),
-          rank().over(byPrice).cast("long").as("price_rank"),
-          lag(col("o_orderkey"), 1).over(byDate).as("prev_orderkey"),
-          round(sum(col("o_totalprice")).over(
-            byDate.rowsBetween(Window.unboundedPreceding, Window.currentRow)), 2)
-            .as("running_total"))
-        .orderBy("o_custkey", "o_orderkey")
-    }),
-
-    // ---------------- event-time tumbling window (batch) ----------------
-    "q20_hourly_events" -> ((s, dir) => {
-      t(s, dir).events
-        .groupBy(date_trunc("hour", col("ts")).cast("long").as("hour_ts"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"), moneySum(col("value")).as("sum_value"))
-        .orderBy("hour_ts", "event_type")
-    }),
-
-    // ---------------- sessionization in batch (gap > 30 min) ----------------
-    "q21_sessions" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts").asc, col("event_id").asc)
-      t(s, dir).events
-        .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-        .withColumn("new_session",
-          when(col("prev_ts").isNull ||
-            epochTs(col("ts")) - epochTs(col("prev_ts")) > 1800.0, 1).otherwise(0))
-        .groupBy(col("user_id"))
-        .agg(sum(col("new_session")).as("n_sessions"), count(lit(1)).as("n_events"))
-        .orderBy("user_id")
-    }),
-
-    // ---------------- §3.1 pipeline: candidate parts ----------------
-    "q22_candidate_parts" -> ((s, dir) => Repurpose.candidateParts(s, dir)),
-
-    // ---------------- §3.2 pipeline: related candidates + phase-2 merge ----------------
-    "q23_related_candidates" -> ((s, dir) => Repurpose.relatedCandidates(s, dir)),
-
-    // ---------------- text: language stats ----------------
-    "q24_lang_stats" -> ((s, dir) => {
-      t(s, dir).documents.groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), round(avg(col("n_chars")), 4).as("avg_chars"))
-        .orderBy("lang")
-    }),
-
-    // ---------------- text: token counting ----------------
-    "q25_token_counts" -> ((s, dir) => {
-      t(s, dir).documents
-        .select(col("doc_id"), TextFns.tokenCount(col("text")).cast("long").as("n_tokens"))
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- text: quality scoring facets ----------------
-    "q26_quality" -> ((s, dir) => {
-      t(s, dir).documents
-        .select(col("doc_id"),
-          TextFns.tokenCount(col("text")).cast("long").as("n_tokens"),
-          round(TextFns.distinctTokenRatio(col("text")), 4).as("diversity"),
-          (TextFns.tokenCount(col("text")).between(20, 1000) &&
-            TextFns.distinctTokenRatio(col("text")) > 0.3).as("is_quality"))
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- text: language ID heuristic ----------------
-    // Deterministic marker-token argmax — fully oracle-backed (the
-    // DuckDB twin mirrors the distinct-intersection scoring and the
-    // earlier-language tie-break as a cascading CASE). Self-check
-    // additionally asserts the heuristic carries real signal —
-    // accuracy vs the labeled lang column well above the 1-in-5
-    // chance floor (measured ~0.41 on the synthetic corpus).
-    "q27_langid" -> ((s, dir) => {
-      SelfCheck.once(s"q27/$dir") {
-        val acc = t(s, dir).documents
-          .agg(avg(when(TextFns.langId(col("text")) === col("lang"), 1.0)
-            .otherwise(0.0)))
-          .head().getDouble(0)
-        require(acc >= 0.3, f"q27 langid accuracy $acc%.3f below 0.3 floor")
-        SelfCheck.note(f"langid accuracy $acc%.3f vs gold labels (floor 0.3)")
-      }
-      t(s, dir).documents
-        .select(col("doc_id"), col("lang"), TextFns.langId(col("text")).as("pred_lang"))
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- text: document fingerprint ----------------
-    "q28_fingerprints" -> ((s, dir) => {
-      t(s, dir).documents
-        .select(col("doc_id"), TextFns.fingerprint(col("text")).as("fp"))
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- dedup: exact groups ----------------
-    "q29_exact_dedup" -> ((s, dir) => {
-      Dedup.exactDupGroups(t(s, dir).documents, col("doc_id"), col("text"))
-        .select(col("fp"), col("canonical_id"), col("n_dups"))
-        .orderBy("canonical_id")
-    }),
-
-    // ---------------- dedup: exact n-gram Jaccard pairs ----------------
-    "q30_jaccard_pairs" -> ((s, dir) => {
-      Dedup.jaccardPairs(t(s, dir).documents, "doc_id", "text",
-        n = JaccardShingleN, threshold = 0.6, maxShingleFreq = Long.MaxValue,
-        shingles = Some(sharedShingles(s, dir)))
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ---------------- dedup: MinHash + LSH (FULL-oracle envelope) ----------------
-    // The q91/q105 envelope pattern: the hashed rows are the EXACT
-    // Jaccard>=t pair set (DuckDB-recomputable — the q30 relation,
-    // same shared-shingle artifact) plus two verdict booleans the
-    // oracle pins TRUE: subset_of_exact (every LSH-emitted pair is a
-    // true pair — candidate verification is exact, so false positives
-    // are impossible) and recall_ok (LSH recovered >= 80% of the
-    // exact pairs). Both verdicts are distributed anti-/semi-join
-    // counts over the FULL corpus at every SF — not fixture-limited.
-    // The sf0.001 brute-force fixture SelfCheck stays as independent
-    // ground truth for the exact side itself.
-    "q31_minhash_neardups" -> ((s, dir) => {
-      if (SelfCheck.fixtureExists) SelfCheck.once("q31/fixture") {
-        val docs = t(s, SelfCheck.FixtureDir).documents
-        val exact = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.6, Long.MaxValue)
-          .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        val mh = Dedup.minhashNearDups(docs, "doc_id", "text", 0.6)
-          .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        require((mh diff exact).isEmpty,
-          s"q31 false positives: ${(mh diff exact).take(5)}")
-        require(exact.isEmpty || (mh intersect exact).size >= exact.size * 0.8,
-          s"q31 recall ${(mh intersect exact).size}/${exact.size} below 0.8")
-        SelfCheck.note(s"subset of exact holds (0 false positives); " +
-          s"recall ${(mh intersect exact).size}/${exact.size} (floor 0.8)")
-      }
-      // the LSH pair relation is near-dup-sized but feeds three
-      // consumers — materialize once so the banded join kernel runs a
-      // single time, not per consumer; the exact side reads the
-      // persisted pair artifact (standing pipeline state — its three
-      // consumers are three scans of a tiny parquet)
-      def mat(df: DataFrame): DataFrame = materializedOnce(df)
-      val exact = sharedPairs(s, dir)
-      val mh = mat(Dedup.minhashNearDups(t(s, dir).documents, "doc_id", "text",
-          threshold = 0.6, shingleN = JaccardShingleN,
-          shingles = Some(sharedShingles(s, dir)))
-        .select(col("id_a"), col("id_b")))
-      val exKeys = exact.select(col("id_a"), col("id_b"))
-      val verdict = subsetRecallVerdict(mh, exKeys, floor = 0.8)
-      exact.crossJoin(broadcast(verdict))
-        .select(col("id_a"), col("id_b"), col("jaccard"),
-          col("subset_of_exact"), col("recall_ok"))
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ---------------- dedup: SimHash (FULL-oracle envelope) ----------------
-    // SimHash values are engine hashes (not SQL-recomputable), so the
-    // envelope hashes the GUARANTEES: one verdict row whose n_docs the
-    // oracle recomputes and whose booleans it pins TRUE —
-    // subset_of_ham8 (every emitted pair's hamming, RE-derived from
-    // the per-doc simhash relation, matches the emitted value and is
-    // <= 8: verification exactness) and complete_ham3 (no hamming<=3
-    // pair is missed, cross-checked against an INDEPENDENT 8×8-bit
-    // band decomposition of the same hashes, which the banding
-    // theorem makes complete for hamming<=7 ⊇ 3). Both checks are
-    // distributed joins over the FULL corpus at every SF; the
-    // sf0.001 brute-force fixture SelfCheck stays as the
-    // decomposition-independent ground truth.
-    "q32_simhash_neardups" -> ((s, dir) => {
-      if (SelfCheck.fixtureExists) SelfCheck.once("q32/fixture") {
-        val docs = t(s, SelfCheck.FixtureDir).documents
-        val sh = Dedup.simhash64(docs, "doc_id", col("text"))
-        val a = sh.select(col("doc_id").as("id_a"), col("simhash").as("ha"))
-        val b = sh.select(col("doc_id").as("id_b"), col("simhash").as("hb"))
-        def brute(maxHam: Int) = a.join(b, col("id_a") < col("id_b"))
-          .filter(bit_count(col("ha").bitwiseXOR(col("hb"))) <= maxHam)
-          .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        val banded = Dedup.simhashNearDups(docs, "doc_id", "text", maxHamming = 8)
-          .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        val b8 = brute(8); val b3 = brute(3)
-        require((banded diff b8).isEmpty, "q32 banded pairs beyond hamming 8")
-        require((b3 diff banded).isEmpty, "q32 banding missed a hamming<=3 pair")
-        SelfCheck.note(s"banded ${banded.size} pairs ⊆ brute hamming≤8 " +
-          s"(${b8.size}); all ${b3.size} hamming≤3 pairs recovered (banding theorem)")
-      }
-      val docs = t(s, dir).documents
-      // ONE simhash pass (the token-explode aggregation is the
-      // query's dominant scan) shared by the banded run, the recheck
-      // join, and the independent 8-band completeness run
-      val sh = materializedOnce(Dedup.simhash64(docs, "doc_id", col("text")))
-      // the banded pair relation feeds two consumers (recheck +
-      // completeness anti-join) — materialize so the band join runs once
-      val banded = materializedOnce(
-        Dedup.simhashNearDups(docs, "doc_id", "text", maxHamming = 8,
-          hashes = Some(sh)))
-      // subset/exactness: re-derive each emitted pair's hamming from
-      // the per-doc hash relation and demand agreement and the <= 8
-      // bound (empty output ⇒ vacuously true via coalesce)
-      val rechecked = banded
-        .join(sh.select(col("doc_id").as("id_a"), col("simhash").as("ha")), "id_a")
-        .join(sh.select(col("doc_id").as("id_b"), col("simhash").as("hb")), "id_b")
-        .agg(coalesce(every(
-          bit_count(col("ha").bitwiseXOR(col("hb"))) === col("hamming") &&
-            col("hamming") <= 8), lit(true)).as("subset_of_ham8"))
-      // completeness: the independent 8-band decomposition is complete
-      // for hamming<=7; none of its hamming<=3 pairs may be missing
-      // from the 4-band output
-      val missed = Dedup.simhashNearDups(docs, "doc_id", "text",
-          maxHamming = 3, bands = 8, hashes = Some(sh))
-        .select(col("id_a"), col("id_b"))
-        .join(banded.select(col("id_a"), col("id_b")),
-          Seq("id_a", "id_b"), "left_anti")
-        .agg((count(lit(1)) === 0L).as("complete_ham3"))
-      docs.agg(count(lit(1)).as("n_docs"))
-        .crossJoin(broadcast(rechecked))
-        .crossJoin(broadcast(missed))
-        .select(col("n_docs"), col("subset_of_ham8"), col("complete_ham3"))
-    }),
-
-    // ---------------- similarity: brute-force cosine top-k ----------------
-    "q33_cosine_topk" -> ((s, dir) => {
-      val emb = t(s, dir).embeddings
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head().getSeq[Float](0).toArray
-      Similarity.bruteTopK(emb, "vec_id", "embedding", q, 10, excludeId = 0L)
-    }),
-
-    // ---------------- similarity: ANN via hyperplane LSH (FULL-oracle envelope) ----------------
-    // The q91/q105 envelope: the hashed rows are the EXACT brute-force
-    // cosine top-10 (DuckDB-recomputable — the q33 relation) plus the
-    // ANN guarantee pinned TRUE: the LSH-pruned scan recovered at
-    // least 3 of the true top-10 (the documented floor on these
-    // weakly-clustered synthetic vectors; measured 5/10 at every SF).
-    // The verdict is a plan-fused semi-join count, checked on the
-    // full corpus at every execution — not a once-per-JVM self-check.
-    "q34_ann_topk" -> ((s, dir) => {
-      val emb = t(s, dir).embeddings
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head().getSeq[Float](0).toArray
-      val brute = Similarity.bruteTopK(emb, "vec_id", "embedding", q, 10,
-        excludeId = 0L)
-      val ann = Similarity.annTopK(emb, "vec_id", "embedding", q, 10,
-          numBits = 16, probeHamming = 6, excludeId = 0L)
-        .select(col("vec_id"))
-      val verdict = brute.select(col("vec_id"))
-        .join(ann, Seq("vec_id"), "left_semi")
-        .agg((count(lit(1)) >= 3L).as("ann_recall_ok"))
-      brute.crossJoin(broadcast(verdict))
-        .select(col("vec_id"), col("cosine"), col("ann_recall_ok"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-    }),
-
-    // ---------------- similarity: IVF ANN via persisted index (FULL-oracle envelope) ----------------
-    // Build-once, query-many: the index is the corpus partitioned by
-    // its coarse-quantizer assignment; the query scans nprobe/nlist
-    // of the partitions (directory pruning), never recomputing the
-    // assignment. Envelope row (the q34 pattern): the exact brute
-    // top-10 keyed-hash-identical to DuckDB, with the pruned scan's
-    // recall floor (>= 6/10, measured 9-10/10 at every SF) pinned
-    // TRUE by a plan-fused semi-join count on every execution.
-    "q50_ivf_topk" -> ((s, dir) => {
-      val emb = t(s, dir).embeddings
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head().getSeq[Float](0).toArray
-      val idx = fixturePath("ivf", dir, "embeddings")
-      Similarity.ensureIvfIndex(emb, "vec_id", "embedding", nlist = 16, idx)
-      val brute = Similarity.bruteTopK(emb, "vec_id", "embedding", q, 10,
-        excludeId = 0L)
-      val ivf = Similarity.ivfTopKIndexed(s, idx, "vec_id", "embedding", q, 10,
-          nprobe = 4, excludeId = 0L)
-        .select(col("vec_id"))
-      val verdict = brute.select(col("vec_id"))
-        .join(ivf, Seq("vec_id"), "left_semi")
-        .agg((count(lit(1)) >= 6L).as("ivf_recall_ok"))
-      brute.crossJoin(broadcast(verdict))
-        .select(col("vec_id"), col("cosine"), col("ivf_recall_ok"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-    }),
-
-    // ---------------- similarity: per-label centroids ----------------
-    "q35_label_centroids" -> ((s, dir) => {
-      Similarity.labelCentroids(t(s, dir).embeddings, "label", "embedding")
-        .orderBy("label", "dim")
-    }),
-
-    // ---------------- similarity: LSH KNN join (rows-only) ----------------
-    "q36_knn_join" -> ((s, dir) => {
-      // Self-check (sf0.001 fixture): structural contract — at most k
-      // neighbors per id, no self-pairs, and every reported cosine
-      // matches an exact recomputation from the vectors (catches any
-      // wiring/banding bug even though LSH recall itself is
-      // data-dependent on the weakly-clustered fixture).
-      if (SelfCheck.fixtureExists) SelfCheck.once("q36/fixture") {
-        val emb = t(s, SelfCheck.FixtureDir).embeddings
-        val knn = Similarity.knnJoin(emb, "vec_id", "embedding", k = 3,
-          numBits = 32, bands = 4)
-        val overK = knn.groupBy("id").agg(count(lit(1)).as("n"))
-          .filter(col("n") > 3).count()
-        require(overK == 0, s"q36 $overK ids exceed k=3 neighbors")
-        require(knn.filter(col("id") === col("nn_id")).count() == 0,
-          "q36 self-pairs present")
-        val va = emb.select(col("vec_id").as("id"), col("embedding").as("ea"))
-        val vb = emb.select(col("vec_id").as("nn_id"), col("embedding").as("eb"))
-        val bad = knn.join(va, "id").join(vb, "nn_id")
-          .filter(abs(col("cosine") - round(VecFns.cosine(col("ea"), col("eb")), 6))
-            > 1e-9).count()
-        require(bad == 0, s"q36 $bad pairs with wrong cosine values")
-        SelfCheck.note(s"k-bound (≤3 per id), no self-pairs, and all " +
-          s"${knn.count()} reported cosines match exact recomputation")
-      }
-      // FULL-oracle envelope (the q34 pattern generalized to a JOIN):
-      // hashed rows are the EXACT top-3 for a deterministic 1-in-50
-      // audit sample of query ids (DuckDB-recomputable — one broadcast
-      // batch scan, linear in the corpus), with the LSH join's recall
-      // over that sample pinned >= 10% as a plan-fused verdict
-      // (measured 20-30% at every SF on these weakly-clustered
-      // synthetic vectors — ≥2× margin). The full banded knnJoin still
-      // executes on every run — it feeds the verdict — so the bench
-      // keeps measuring the operator itself.
-      // 8-bit bands (64 sig bits / 8 bands): ~n/256 per bucket keeps
-      // the candidate self-join near-linear; 8 bands instead of 4
-      // doubles the recall at the same per-bucket size.
-      // the audit sample is CAPPED (id < 6400 ∧ id ≡ 0 mod 50 ⇒ ≤128
-      // probes at ANY corpus size — a no-op at test SFs where max id
-      // < 6400): an uncapped 1-in-50 sample would make the exact side
-      // n²/50 at data scale instead of a bounded-×-n broadcast scan
-      val emb = t(s, dir).embeddings
-      val ann = Similarity.knnJoin(emb, "vec_id", "embedding", k = 3,
-        numBits = 64, bands = 8)
-      val audit = col("vec_id") % 50 === 0 && col("vec_id") < 6400
-      val exact = Similarity.bruteTopKBatch(
-        emb.filter(audit), emb, "vec_id", "embedding", 3)
-      val annSample = ann.filter(col("id") % 50 === 0 && col("id") < 6400)
-        .select(col("id").as("query_id"), col("nn_id"))
-      val verdict = hitFloorVerdict(exact, annSample, floor = 0.1)
-      exact.crossJoin(broadcast(verdict))
-        .select(col("query_id").as("id"), col("nn_id"), col("cosine"),
-          col("ann_recall_ok"))
-        .orderBy(col("id"), col("cosine").desc, col("nn_id"))
-    }),
-
-    // ---------------- multimodal: binary payload pipeline ----------------
-    "q37_media_features" -> ((s, dir) => {
-      val media = Multimodal.mediaFromDocuments(t(s, dir).documents)
-      Multimodal.decodeFeatures(s, media).toDF()
-        .select(col("media_id"), col("kind"), col("n_bytes"), col("frame_count"))
-        .orderBy("media_id")
-    }),
-
-    // ---------------- multimodal: real container decode ----------------
-    // The payloads are genuine BMP / WAV / concatenated-BMP binaries;
-    // the query parses them (magic, LE headers, row padding, RIFF
-    // chunk walk) and reports integer-exact stats over the DECODED
-    // pixels/samples. The oracle recomputes the same stats straight
-    // from the source byte stream — it matches only if encode→decode
-    // round-trips bit-exactly AND the stats are computed over the
-    // true decoded values. ORACLE PRECONDITION: the oracle indexes
-    // CHARACTERS (substr/unicode) while Spark encodes UTF-8 BYTES, so
-    // the differential check is valid only on ASCII corpora (the
-    // generated documents table is — verified octet_length==length at
-    // every SF). The Spark side itself is byte-correct for any input.
-    "q124_media_decode" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      // Assert the oracle's validity preconditions instead of assuming
-      // them: (a) ASCII — the oracle indexes characters, Spark bytes;
-      // (b) every doc is >= 2 bytes — an empty text yields no px/smp
-      // rows in the oracle (the doc would vanish from its result) and
-      // a 1-byte audio payload would read unicode('') = -1 into sum_b.
-      SelfCheck.once(s"q124/$dir") {
-        // coalesce: over ZERO rows sum/min are SQL NULL and the getters
-        // would NPE instead of reporting the real problem
-        val r = docs.agg(
-          coalesce(sum(when(octet_length(col("text")) =!= length(col("text")), 1)
-            .otherwise(0)), lit(0L)).as("non_ascii"),
-          coalesce(min(octet_length(col("text"))), lit(0)).as("min_bytes"),
-          count(lit(1)).as("n_docs")).head()
-        require(r.getLong(2) > 0L, "q124 precondition: documents table is empty")
-        require(r.getLong(0) == 0L,
-          "q124 oracle precondition violated: non-ASCII documents present")
-        require(r.getInt(1) >= 2,
-          s"q124 oracle precondition violated: min doc length ${r.get(1)} < 2 bytes")
-        SelfCheck.note(s"oracle preconditions over ${r.getLong(2)} docs: " +
-          s"0 non-ASCII, min doc length ${r.getInt(1)} ≥ 2 bytes")
-      }
-      val media = Multimodal.mediaFromDocuments(docs)
-      Multimodal.decodeFeatures(s, media).toDF()
-        .select(col("media_id"), col("kind"), col("width"), col("height"),
-          col("n_units"), col("sum_a"), col("sum_b"), col("sum_c"))
-        .orderBy("media_id")
-    }),
-
-    // ---------------- conditional agg / error rates ----------------
-    "q38_error_rates" -> ((s, dir) => {
-      t(s, dir).events.groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(when(col("event_type") === "error", 1).otherwise(0)).as("n_errors"),
-          round(sum(when(col("event_type") === "error", 1).otherwise(0)).cast("double") /
-            count(lit(1)).cast("double"), 4).as("error_rate"))
-        .orderBy("user_id")
-    }),
-
-    // ---------------- SO5 on events: first event per (user, type) ----------------
-    "q39_first_event" -> ((s, dir) => {
-      RelOps.dedupKeepFirst(t(s, dir).events,
-        Seq(col("user_id"), col("event_type")),
-        Seq(col("ts").asc, col("event_id").asc))
-        .select(col("user_id"), col("event_type"), col("event_id"))
-        .orderBy("user_id", "event_type")
-    }),
-
-    // ---------------- A2 at scale: approx distinct (rows-only) ----------------
-    // Self-check: the HLL estimate must land within 10% of the exact
-    // count (HLL++ default rsd is 5%).
-    // FULL-oracle envelope (the q105 discipline): the HLL estimate is
-    // sketch-internal, but its error contract is a SQL row — the
-    // exact distinct count rides under the hash next to a boolean
-    // the oracle pins TRUE
-    "q40_approx_distinct" -> ((s, dir) =>
-      t(s, dir).lineitem.agg(
-        countDistinct(col("l_partkey")).as("exact_parts"),
-        (abs(approx_count_distinct(col("l_partkey"))
-            - countDistinct(col("l_partkey")))
-          <= countDistinct(col("l_partkey")) * 0.1).as("hll_within_10pct"))),
-
-    // ---------------- P1 nested struct/array round-trip ----------------
-    // build array<struct> per customer, explode it back, re-aggregate:
-    // must equal the direct aggregation (proves collect_list/struct/
-    // explode navigation without needing nested source data)
-    "q41_nested_roundtrip" -> ((s, dir) => {
-      val nested = t(s, dir).orders
-        .groupBy(col("o_custkey"))
-        .agg(collect_list(struct(col("o_orderkey"), col("o_totalprice"))).as("os"))
-      nested.select(col("o_custkey"), explode(col("os")).as("o"))
-        .groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("n_orders"),
-          moneySum(col("o.o_totalprice")).as("sum_total"))
-        .orderBy("o_custkey")
-    }),
-
-    // ---------------- S8 JSON decode via from_json (typed) ----------------
-    "q42_from_json" -> ((s, dir) => {
-      t(s, dir).events
-        .withColumn("j", from_json(col("props"),
-          org.apache.spark.sql.types.StructType.fromDDL("k INT")))
-        .groupBy(col("event_type"))
-        .agg(round(avg(col("j.k")), 4).as("avg_k"), count(lit(1)).as("n"))
-        .orderBy("event_type")
-    }),
-
-    // ---------------- O4 pagination: page 2 by relevance ----------------
-    // offset+limit (not a global row_number window): Spark plans this
-    // as per-partition top-(offset+limit) + a driver-side merge of
-    // offset+limit rows per partition — no single-partition sort of
-    // the whole relation, so the page cost is O(page), not O(table).
-    "q43_page2" -> ((s, dir) => {
-      t(s, dir).part
-        .orderBy(col("p_retailprice").desc, col("p_partkey").asc)
-        .offset(10).limit(10)
-        .select(col("p_partkey"), col("p_name"), round(col("p_retailprice"), 2).as("price"))
-    }),
-
-    // ---------------- embedding-cosine near-dup pairs (exact baseline) ----------------
-    // O(n²) broadcast nested-loop BY DESIGN: this is the exact oracle
-    // baseline for the scale path, q36 (Similarity.knnJoin — banded
-    // LSH, near-linear). The row-count guard makes it impossible to
-    // run the quadratic form on corpus-scale data by accident.
-    "q44_embedding_neardups" -> ((s, dir) => {
-      // deterministic third-slice: this is the exact all-pairs BASELINE
-      // (the production path is q36's banded knnJoin) — registering it
-      // over a capped slice keeps the quadratic oracle honest without
-      // the quadratic dominating the bench (pair count drops 9×)
-      val emb = t(s, dir).embeddings.select(col("vec_id"), col("embedding"))
-        .filter(col("vec_id") % 3 === 0)
-      val n = emb.count()
-      require(n <= 100000,
-        s"q44 is the exact O(n²) baseline (n=$n): at corpus scale use " +
-          "Similarity.knnJoin (q36_knn_join), the banded-LSH production path")
-      val a = emb.select(col("vec_id").as("id_a"), col("embedding").as("ea"))
-      val b = emb.select(col("vec_id").as("id_b"), col("embedding").as("eb"))
-      a.join(broadcast(b), col("id_a") < col("id_b"))
-        .withColumn("cosine", round(VecFns.cosine(col("ea"), col("eb")), 6))
-        .filter(col("cosine") >= 0.35)
-        .select(col("id_a"), col("id_b"), col("cosine"))
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ---------------- BPE-ish subword token counting ----------------
-    "q45_subword_counts" -> ((s, dir) => {
-      t(s, dir).documents
-        .select(col("doc_id"),
-          size(TextFns.subwordTokens(col("text"))).cast("long").as("n_subtokens"))
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- S2 entity-filtered union search ----------------
-    // the reference's search(queryString, entityNames=[...]) over the
-    // union type Target|Drug|Disease: tag column + per-entity arms
-    "q47_entity_search" -> ((s, dir) => {
-      val tt = t(s, dir)
-      val entities = tt.part
-        .select(lit("part").as("entity"), col("p_partkey").as("id"), col("p_name").as("name"))
-        .unionByName(tt.supplier
-          .select(lit("supplier").as("entity"), col("s_suppkey").as("id"), col("s_name").as("name")))
-        .unionByName(tt.customer
-          .select(lit("customer").as("entity"), col("c_custkey").as("id"), col("c_name").as("name")))
-      RelOps.search(entities, col("name"), "1")
-        .filter(col("entity").isin("supplier", "customer"))
-        .orderBy("entity", "id")
-    }),
-
-    // ---------------- F3 formatted output ----------------
-    "q48_format" -> ((s, dir) => {
-      t(s, dir).supplier
-        .select(col("s_suppkey"),
-          format_string("%s | bal %.2f", col("s_name"), col("s_acctbal")).as("label"))
-        .orderBy("s_suppkey")
-    }),
-
-    // ---------------- rollup subtotals (north-star analytics) ----------------
-    "q52_rollup" -> ((s, dir) => {
-      t(s, dir).lineitem
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"), moneySum(col("l_extendedprice")).as("sum_price"))
-        .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-    }),
-
-    // ---------------- min/max aggregates over numbers and timestamps ----------------
-    "q53_minmax" -> ((s, dir) => {
-      val tt = t(s, dir)
-      tt.part.join(tt.lineitem, col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"))
-        .agg(round(min(col("p_retailprice")), 2).as("min_price"),
-          round(max(col("p_retailprice")), 2).as("max_price"),
-          min(col("l_shipdate").cast("timestamp").cast("long")).as("first_ship"),
-          max(col("l_shipdate").cast("timestamp").cast("long")).as("last_ship"))
-        .orderBy("p_brand")
-    }),
-
-    // ---------------- MapType navigation (KeyValue shape) ----------------
-    "q54_map_props" -> ((s, dir) => {
-      t(s, dir).events
-        .withColumn("m", from_json(col("props"),
-          org.apache.spark.sql.types.DataType.fromDDL("map<string,int>")))
-        .select(col("event_id"), map_keys(col("m")).getItem(0).as("first_key"),
-          element_at(col("m"), "k").as("k_value"))
-        .orderBy("event_id")
-    }),
-
-    // ---------------- capstone: training-corpus prep pipeline ----------------
-    // language gate → quality gate → exact-dedup keep-first → per-lang
-    // corpus stats: the composed shape of a pretraining data-prep job
-    // ---------------- capstone: full training-corpus preparation ----------------
-    // The complete pre-training data flow in one relation: near-dup
-    // pruning via the SHARED cluster-label artifact (the q69/q90
-    // relation — built once, consumed here a third time), benchmark
-    // decontamination, benchmark-holdout removal, and quality gating,
-    // rolled up to the per-language token budget a mixing step would
-    // consume. Contamination is computed on the full corpus (a doc's
-    // contamination status is independent of dedup survival), so the
-    // drops compose as two anti-joins — each linear, keyed shuffles.
-    "q125_training_corpus" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      val labels = jaccardLabels(s, dir)
-      val dupDrop = labels.filter(col("id") =!= col("canonical_id"))
-        .select(col("id").as("doc_id"))
-      val bench = docs.filter(col("doc_id") % 50 === 0)
-      val sh = sharedShingles(s, dir)
-      val contamDrop = Dedup.contamination(docs, bench, "doc_id", "text",
-          n = JaccardShingleN, minShared = 3, docShingles = Some(sh),
-          benchShingles = Some(sh.filter(col("id") % 50 === 0)))
-        .select(col("doc_id")).distinct()
-      docs.join(dupDrop, Seq("doc_id"), "left_anti")
-        .join(contamDrop, Seq("doc_id"), "left_anti")
-        .filter(col("doc_id") % 50 =!= 0)
-        .filter(TextFns.tokenCount(col("text")).between(10, 1000) &&
-          TextFns.distinctTokenRatio(col("text")) > 0.2)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("docs_kept"),
-          sum(TextFns.tokenCount(col("text")).cast("long")).as("total_tokens"))
-        .orderBy("lang")
-    }),
-
-    "q51_corpus_prep" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      val gated = docs
-        .filter(col("lang").isin("en", "de", "es", "fr", "zh"))
-        .filter(TextFns.tokenCount(col("text")).between(10, 1000) &&
-          TextFns.distinctTokenRatio(col("text")) > 0.2)
-      val kept = gated.join(
-        gated.groupBy(TextFns.fingerprint(col("text")).as("fp"))
-          .agg(min(col("doc_id")).as("doc_id"))
-          .select("doc_id"),
-        Seq("doc_id"), "left_semi")
-      kept.groupBy(col("lang"))
-        .agg(count(lit(1)).as("docs_kept"),
-          sum(TextFns.tokenCount(col("text")).cast("long")).as("total_tokens"),
-          round(avg(col("n_chars")), 4).as("avg_chars"))
-        .orderBy("lang")
-    }),
-
-    // ---------------- KG client-api: disease → targets (J1+P3+SO5) ----------------
-    "q49_kg_disease_targets" -> ((s, dir) => {
-      val kg = kgIndexed(s, dir)
-      ClientApi.getDiseaseTargets(kg,
-        ClientApi.getDiseaseIds(kg, "BUILDING"), minScore = 0.33)
-        .orderBy("id")
-    }),
-
-    // ---------------- S5→F4→P10→F5: the ChEMBL enrichment chain ----------------
-    // Mirrors /root/reference/chembl_to_smile.py:21-48 +
-    // chembl_to_molecule_type.py:16-26: lookup-table left join (S5) →
-    // JSON navigation to molecule_structures.canonical_smiles (F4) →
-    // name coalesce fallback (P10) → SMILES canonicalization UDF +
-    // is-canonical check (F5). The molecule fixture is derived
-    // deterministically from `part`, with deliberate gaps (30% of keys
-    // absent, a third of names null) so the left-join/coalesce paths
-    // are really exercised; the SMILES literals were chosen so the
-    // UDF's canonical form is hand-computable in the DuckDB twin.
-    "q55_chembl_enrichment" -> ((s, dir) => {
-      val base = t(s, dir).part.filter(col("p_partkey") <= 300)
-      val smilesLit = element_at(
-        array(lit("C2CC2"), lit("C1CC1"), lit("c1ccccc1"),
-          lit("C3CC3C1CC1"), lit("CC(=O)O")),
-        (col("p_partkey") % 5 + 1).cast("int"))
-      val molecules = base.filter(col("p_partkey") % 10 < 7)
-        .select(col("p_partkey").as("mol_key"),
-          when(col("p_partkey") % 3 =!= 0, concat(lit("MOL "), col("p_name"))).as("mol_name"),
-          concat(lit("{\"molecule_structures\":{\"canonical_smiles\":\""),
-            smilesLit, lit("\"}}")).as("mol_json"))
-      base.select(col("p_partkey"))
-        .join(molecules, col("p_partkey") === col("mol_key"), "left")
-        .withColumn("smiles",
-          get_json_object(col("mol_json"), "$.molecule_structures.canonical_smiles"))
-        .select(col("p_partkey"),
-          coalesce(col("mol_name"), lit("UNKNOWN")).as("name"),
-          col("smiles"),
-          ChemFns.canonicalSmiles(col("smiles")).as("canonical_smiles"),
-          coalesce(ChemFns.isCanonical(col("smiles")), lit(false)).as("is_canonical"))
-        .orderBy("p_partkey")
-    }),
-
-    // ---------------- J7 two-level nested expand ----------------
-    // Mirrors /root/reference/opentargets_query_targets_for_drug.py
-    // :37-40 (drug → mechanismsOfAction.rows[] → targets[]): build
-    // the real array<struct<action_type, array<target>>> column with
-    // collect_set/collect_list, then navigate it back down with a
-    // DOUBLE explode. The oracle is the flat distinct-triple query the
-    // round-trip must reproduce.
-    "q56_mechanism_targets" -> ((s, dir) => {
-      val tt = t(s, dir)
-      val facts = tt.lineitem.select(col("l_suppkey"), col("l_partkey"))
-        .join(tt.part.select(col("p_partkey"), col("p_brand")),
-          col("l_partkey") === col("p_partkey"))
-      val perMech = facts.groupBy(col("l_suppkey"), col("p_brand"))
-        .agg(sort_array(collect_set(col("l_partkey"))).as("targets"))
-      val nested = perMech.groupBy(col("l_suppkey"))
-        .agg(sort_array(collect_list(
-          struct(col("p_brand").as("action_type"), col("targets")))).as("mechanisms"))
-      nested
-        .select(col("l_suppkey").as("drug_key"), explode(col("mechanisms")).as("m"))
-        .select(col("drug_key"), col("m.action_type").as("action_type"),
-          explode(col("m.targets")).as("target_key"))
-        .orderBy("drug_key", "action_type", "target_key")
-    }),
-
-    // ---------------- S6/S7 CSV checkpoint round-trip ----------------
-    // The reference checkpoints every step to CSV and reloads it
-    // (/root/reference/x2.2.py:361-405). Write a real step with
-    // CsvIO, read it back with an explicit schema, aggregate — the
-    // oracle is the same aggregation over the direct (un-checkpointed)
-    // query, so the round-trip must be lossless.
-    "q57_csv_roundtrip" -> ((s, dir) => {
-      val step = t(s, dir).orders.filter(col("o_totalprice") > 40000)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"))
-      val path = fixturePath("csv_step", dir, "orders")
-      CsvIO.write(step, path)
-      val back = CsvIO.read(s, path, Some(org.apache.spark.sql.types.StructType.fromDDL(
-        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING")))
-      back.groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n"), countDistinct(col("o_custkey")).as("n_cust"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // ---------------- KG client-api: target → diseases (J2+P5) ----------------
-    // getTargetDiseases over the q49 target set, excluding the main
-    // disease (opentargets_client_api.py:158-186).
-    "q58_kg_target_diseases" -> ((s, dir) => {
-      val kg = kgIndexed(s, dir)
-      val mains = ClientApi.getDiseaseIds(kg, "BUILDING")
-      val targets = ClientApi.getDiseaseTargets(kg, mains, minScore = 0.33).select("id")
-      ClientApi.getTargetDiseases(kg, targets, minScore = 0.1, excludeDiseaseIds = mains)
-        .orderBy("id")
-    }),
-
-    // ---------------- KG client-api: disease → drugs (J3) ----------------
-    "q59_kg_disease_drugs" -> ((s, dir) => {
-      val kg = kgIndexed(s, dir)
-      ClientApi.getDiseaseDrugs(kg, ClientApi.getDiseaseIds(kg, "AUTOMOBILE"))
-        .orderBy("id")
-    }),
-
-    // ---------------- KG client-api: drug info + linked-target list (A3) ----------------
-    "q60_kg_drug_info" -> ((s, dir) => {
-      val kg = kgIndexed(s, dir)
-      ClientApi.getDrugInfo(kg, kg.drugs.select("id"))
-        .select(col("id"), col("name"),
-          array_join(col("linked_targets"), ",").as("linked_targets"))
-        .orderBy("id")
-    }),
-
-    // ---------------- KG client-api: drug → first linked target (O3) ----------------
-    "q61_kg_drug_first_target" -> ((s, dir) => {
-      val kg = kgIndexed(s, dir)
-      ClientApi.getDrugFirstTarget(kg, kg.drugs.select("id")).orderBy("id")
-    }),
-
-    // ---------------- KG client-api: drug → all targets (J4+SO5) ----------------
-    "q62_kg_drug_targets" -> ((s, dir) => {
-      val kg = kgIndexed(s, dir)
-      ClientApi.getDrugTargets(kg, kg.drugs.select("id")).orderBy("id")
-    }),
-
-    // ---------------- S5 live-source analogue: DataSourceV2 endpoint scan ----------------
-    // The reference's defining op — a remote paginated entity lookup
-    // (query_opentargets.py) — through the real DataSourceV2
-    // connector: the part catalog is staged as the endpoint's JSONL
-    // shards, then queried with a server-side search filter and field
-    // selection (both pushed into the page requests; see
-    // EntityEndpointSpec for the plan assertions). Oracle is the same
-    // search over the parquet table.
-    "q64_endpoint_search" -> ((s, dir) => {
-      val ep = fixturePath("endpoint", dir, "part")
-      if (!new java.io.File(ep, "_SUCCESS").exists()) {
-        t(s, dir).part.select(col("p_partkey"), col("p_name"), col("p_brand"))
-          .coalesce(2).write.mode("overwrite").json(ep)
-      }
-      s.read.format("entity-endpoint")
-        .option("path", ep)
-        .option("schema", "p_partkey BIGINT, p_name STRING, p_brand STRING")
-        .option("pageSize", "250")
-        .load()
-        .filter(col("p_name").contains("red"))
-        .select(col("p_partkey"), col("p_name"), col("p_brand"))
-        .orderBy("p_partkey")
-    }),
-
-    // ---------------- decontamination: corpus × benchmark n-gram overlap ----------------
-    // The training-pipeline gate that keeps evaluation data out of the
-    // corpus: every (doc, benchmark doc) pair sharing >= 3 distinct
-    // 3-gram shingles. Benchmark side broadcast — one linear scan of
-    // the corpus, no self-join.
-    "q65_contamination" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      val bench = docs.filter(col("doc_id") % 50 === 0)
-      // the benchmark is drawn from the corpus, so BOTH sides read the
-      // shared shingle artifact — the bench side is a filter over it
-      val sh = sharedShingles(s, dir)
-      Dedup.contamination(docs, bench, "doc_id", "text",
-        n = JaccardShingleN, minShared = 3,
-        docShingles = Some(sh),
-        benchShingles = Some(sh.filter(col("id") % 50 === 0)))
-        .orderBy("doc_id", "bench_id")
-    }),
-
-    // ---------------- PII scrubbing (emails/phones → typed tokens) ----------------
-    // The synthetic corpus carries no PII, so the query plants a
-    // deterministic email+phone per doc, then counts and redacts —
-    // the oracle recomputes both, so the regex passes must agree
-    // byte-for-byte across engines.
-    "q66_pii_redaction" -> ((s, dir) => {
-      t(s, dir).documents
-        .select(col("doc_id"),
-          concat(col("text"), lit(" contact user"), col("doc_id").cast("string"),
-            lit("@example.com or 555-123-4567 now")).as("text2"))
-        .select(col("doc_id"),
-          TextFns.emailCount(col("text2")).cast("long").as("n_emails"),
-          md5(TextFns.redactPii(col("text2"))).as("redacted_fp"))
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- deterministic hash-based sampling ----------------
-    // Reproducible across engines, retries, and partitionings (unlike
-    // rand() sampling): keep rows whose md5(key) starts with 0/1/2 —
-    // a 3/16 stratified-auditable sample.
-    "q67_hash_sample" -> ((s, dir) => {
-      t(s, dir).documents
-        .filter(TextFns.hashSample(col("doc_id"), Seq("0", "1", "2")))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_sampled"), countDistinct(col("doc_id")).as("n_docs"))
-        .orderBy("lang")
-    }),
-
-    // ---------------- sequence packing into fixed token budgets ----------------
-    // Documents → 2048-token training sequences over 8 parallel
-    // packing streams; one window cumsum, no driver loop. Output is
-    // the per-bin fill profile.
-    "q68_sequence_packing" -> ((s, dir) => {
-      val assigned = graft.operators.Packing.packGreedy(
-        t(s, dir).documents
-          .select(col("doc_id"), TextFns.tokenCount(col("text")).as("nt")),
-        col("doc_id"), col("nt"), buckets = 8, budgetTokens = 2048L)
-      assigned.groupBy(col("bucket"), col("bin"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("sum_tokens"))
-        .orderBy("bucket", "bin")
-    }),
-
-    // ---------------- dedup-cluster resolution (connected components) ----------------
-    // Near-dup pairs → components → canonical doc per cluster: the
-    // step that turns "A≈B, B≈C" into "keep A". Iterative min-label
-    // propagation (two shuffles per round, no driver-side graph); the
-    // oracle recomputes the same components with a recursive CTE.
-    "q69_dup_clusters" -> ((s, dir) => {
-      // contracted CC: components over cluster representatives, labels
-      // expanded to members — never materializes the O(m²) member-pair
-      // relation the oracle's recursive CTE walks. Built once and
-      // persisted: q90 (corpus pruning) consumes the same relation.
-      jaccardLabels(s, dir).orderBy("id")
-    }),
-
-    // ---------------- KG client-api: target → pathways (J6) ----------------
-    "q63_kg_target_pathways" -> ((s, dir) => {
-      val kg = kgIndexed(s, dir)
-      val targets = ClientApi.getDiseaseTargets(kg,
-        ClientApi.getDiseaseIds(kg, "BUILDING"), minScore = 0.33).select("id")
-      ClientApi.getTargetPathways(kg, targets).orderBy("pathwayId")
-    }),
-
-    // ---------------- top terms per language (explode + windowed top-k) ----------------
-    "q46_top_terms" -> ((s, dir) => {
-      val toks = t(s, dir).documents
-        .select(col("lang"), explode(TextFns.tokens(col("text"))).as("token"))
-        .groupBy(col("lang"), col("token")).agg(count(lit(1)).as("n"))
-      val w = Window.partitionBy(col("lang")).orderBy(col("n").desc, col("token").asc)
-      toks.withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 5)
-        .select(col("lang"), col("token"), col("n"), col("rk"))
-        .orderBy("lang", "rk")
-    }),
-
-    // ---------------- intra-doc repetition metrics (Gopher-style quality) ----------------
-    "q70_repetition" -> ((s, dir) => {
-      TextMetrics.ngramRepetition(t(s, dir).documents, "doc_id", col("text"), n = 2)
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- domain-mixture resampling (deterministic per-source rates) ----------------
-    // Target mixture: src{i} keeps (i%4)*4+4 sixteenths (25/50/75/100%)
-    // — the rate formula is mirrored arithmetically in the oracle.
-    "q71_domain_mix" -> ((s, dir) => {
-      val rates = (0 until 20).map(i => s"src$i" -> ((i % 4) * 4 + 4)).toMap
-      Mixing.domainMix(t(s, dir).documents, col("doc_id"), col("source"), rates)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(TextFns.tokenCount(col("text")).cast("long")).as("n_tokens"))
-        .orderBy("source")
-    }),
-
-    // ---------------- sliding-window chunking (context-length training windows) ----------------
-    "q72_chunking" -> ((s, dir) => {
-      Chunking.slidingChunks(t(s, dir).documents, "doc_id", col("text"),
-          chunkSize = 64, stride = 32)
-        .select(col("doc_id"), col("chunk_idx"), col("chunk_tokens"),
-          md5(col("chunk_text")).as("chunk_md5"))
-        .orderBy("doc_id", "chunk_idx")
-    }),
-
-    // ---------------- int8 embedding quantization report ----------------
-    "q73_vec_quantize" -> ((s, dir) => {
-      Quantize.int8Report(t(s, dir).embeddings, "label", "embedding")
-        .orderBy("label")
-    }),
-
-    // ---------------- as-of join: last purchase before each click ----------------
-    // Temporal backward lookup via the single-shuffle union+window
-    // encoding (AsofJoin); the oracle is DuckDB's native ASOF JOIN.
-    "q74_asof_join" -> ((s, dir) => {
-      val ev = t(s, dir).events
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("event_id").as("p_id"))
-      AsofJoin.asofBackward(clicks, purchases, "user_id", "ts", "ts",
-          Seq("p_id", "ts"))
-        .select(col("event_id"), col("user_id"),
-          coalesce(col("asof_p_id"), lit(-1L)).as("purchase_event_id"),
-          coalesce(unix_micros(col("ts")) - unix_micros(col("asof_ts")),
-            lit(-1L)).as("gap_us"))
-        .orderBy("event_id")
-    }),
-
-    // ---------------- range join: clicks in the 5 min before each error ----------------
-    // Binned-interval equi-join (RangeJoin) instead of the O(n·m)
-    // BroadcastNestedLoop Spark would plan for the raw inequality.
-    "q75_range_join" -> ((s, dir) => {
-      val ev = t(s, dir).events
-      val errors = ev.filter(col("event_type") === "error")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).cast("double").as("v"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), unix_micros(col("ts")).cast("double").as("pv"),
-          col("event_id").as("click_id"))
-      val pairs = RangeJoin.trailingWindowJoin(errors, clicks, "user_id",
-        "v", "pv", width = 300e6, probeCols = Seq("click_id"))
-      val counts = pairs.groupBy(col("event_id"))
-        .agg(count(lit(1)).as("n_clicks"))
-      errors.join(counts, Seq("event_id"), "left")
-        .select(col("event_id"), col("user_id"),
-          coalesce(col("n_clicks"), lit(0L)).as("n_clicks"))
-        .orderBy("event_id")
-    }),
-
-    // ---------------- exact percentiles (linear interpolation) ----------------
-    "q76_percentiles" -> ((s, dir) => {
-      t(s, dir).lineitem
-        .groupBy(col("l_returnflag"))
-        .agg(round(percentile(col("l_quantity"), lit(0.5)), 6).as("p50"),
-          round(percentile(col("l_quantity"), lit(0.95)), 6).as("p95"),
-          round(percentile(col("l_extendedprice"), lit(0.99)), 6).as("p99_price"))
-        .orderBy("l_returnflag")
-    }),
-
-    // ---------------- CUBE subtotals (all grouping-set combinations) ----------------
-    "q77_cube" -> ((s, dir) => {
-      t(s, dir).lineitem
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("l_returnflag").asc_nulls_first,
-          col("l_linestatus").asc_nulls_first)
-    }),
-
-    // ---------------- pivot: long → wide reshape ----------------
-    "q78_pivot" -> ((s, dir) => {
-      t(s, dir).events
-        .groupBy(col("user_id"))
-        .pivot("event_type", Seq("click", "error", "purchase"))
-        .agg(count(lit(1)))
-        .select(col("user_id"),
-          coalesce(col("click"), lit(0L)).as("click"),
-          coalesce(col("error"), lit(0L)).as("error"),
-          coalesce(col("purchase"), lit(0L)).as("purchase"))
-        .orderBy("user_id")
-    }),
-
-    // ---------------- stratified deterministic sampling ----------------
-    // Per-language acceptance out of 256 md5 buckets — the sub-1/16
-    // refinement of q71's domain mix. Pure filter: no join, no
-    // shuffle; at corpus scale this runs inside the scan stage.
-    "q79_stratified_sample" -> ((s, dir) => {
-      Mixing.stratifiedSample(t(s, dir).documents, col("doc_id"), col("lang"),
-          Map("en" -> 64, "zh" -> 128), default256 = 192)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_sampled"),
-          min(Mixing.hexBucket256(col("doc_id"))).cast("long").as("min_bucket"),
-          max(Mixing.hexBucket256(col("doc_id"))).cast("long").as("max_bucket"))
-        .orderBy("lang")
-    }),
-
-    // ---------------- TF-IDF keyword per document ----------------
-    "q80_tfidf_top_term" -> ((s, dir) => {
-      TextMetrics.tfidfTop1(t(s, dir).documents, "doc_id", col("text"))
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- window frames: moving average + running total ----------------
-    // Cents-exact: `value` is 2-decimal by construction, so summing
-    // integer cents over the frames makes both window results
-    // bit-identical on every engine (double accumulation would hash-
-    // drift); the average divides the exact cents sum once at the end.
-    "q81_moving_stats" -> ((s, dir) => {
-      val ev = t(s, dir).events
-        .select(col("event_id"), col("user_id"), col("ts"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
-      val order = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val w3 = order.rowsBetween(-2, 0)
-      val run = order.rowsBetween(Window.unboundedPreceding, 0)
-      ev.select(col("event_id"), col("user_id"),
-          (floor(sum(col("cents")).over(w3) * lit(1e6) /
-            (lit(100.0) * count(lit(1)).over(w3)) + lit(0.5)) / lit(1e6)).as("mavg3"),
-          sum(col("cents")).over(run).as("run_cents"))
-        .orderBy("event_id")
-    }),
-
-    // ---------------- Matryoshka head: truncate-and-renormalize ----------------
-    "q82_matryoshka" -> ((s, dir) => {
-      val d16 = slice(col("embedding").cast("array<double>"), 1, 16)
-      def pin6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-      t(s, dir).embeddings.select(col("vec_id"),
-          pin6(VecFns.normHof(col("embedding"))).as("norm_full"),
-          pin6(VecFns.normHof(d16)).as("norm16"),
-          pin6(element_at(VecFns.matryoshka(col("embedding"), 16), 1)).as("c1_norm"))
-        .orderBy("vec_id")
-    }),
-
-    // ---------------- approx percentile: the sketch scale path for q76 ----------------
-    // percentile() is exact but buffers every group value in the agg
-    // state; approx_percentile's GK sketch is the bounded-memory form
-    // a 100 TB column needs. Self-check: at accuracy 10000 the rank
-    // error is ≤ 1e-4, so the sketch median must land inside the
-    // exact [p49, p51] band. Sketch internals are engine-specific →
-    // no SQL oracle; rows-only with a loud in-query gate.
-    // FULL-oracle envelope: the GK sketch's rank-error contract —
-    // approx p50 inside the exact [p49, p51] band — is the hashed
-    // row, with the band itself recomputed by DuckDB (quantile_cont
-    // matches Spark's interpolated percentile definition)
-    "q83_approx_percentiles" -> ((s, dir) =>
-      t(s, dir).lineitem
-        .groupBy(col("l_returnflag"))
-        .agg(percentile_approx(col("l_quantity"), lit(0.5), lit(10000))
-            .cast("double").as("pa"),
-          percentile(col("l_quantity"), lit(0.49)).as("lo"),
-          percentile(col("l_quantity"), lit(0.51)).as("hi"))
-        .select(col("l_returnflag"),
-          round(col("lo"), 6).as("lo_p49"),
-          round(col("hi"), 6).as("hi_p51"),
-          (col("pa") >= col("lo") && col("pa") <= col("hi"))
-            .as("p50_in_band"))
-        .orderBy("l_returnflag")),
-
-    // ---------------- corpus-LM quality: mean unigram surprisal ----------------
-    "q84_unigram_surprisal" -> ((s, dir) => {
-      TextMetrics.unigramSurprisal(t(s, dir).documents, "doc_id", col("text"))
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- frequent-items sketch: approx top terms per language ----------------
-    // approx_top_k tracks a bounded item set (constant memory per
-    // group at any corpus size) — the sketch complement of q46's
-    // exact windowed top-k. Self-check: the deterministic exact top-1
-    // token of every language must appear among the sketch's top 5,
-    // and its sketched count must equal the exact count. Sketch
-    // output order on tied counts is engine-specific → rows-only.
-    // approx_top_k under a FULL-oracle exactness envelope: with
-    // maxItemsTracked far above the vocabulary the sketch tracks
-    // every item exactly, so its returned set must CONTAIN the exact
-    // top-5 per language WITH exact counts — asserted under the
-    // driver's hash, not just in-query: rows are keyed by the
-    // DuckDB-computable exact top-5 and carry the sketch's count
-    // (sketch_n), which the oracle pins to n_exact. k=50 buffer: a
-    // tie GROUP at the rank-5 count can only evict an exact-top-5
-    // token from the sketch's returned set if more than 50 tokens
-    // share counts >= the boundary count — far past any plausible
-    // head-of-distribution tie in this corpus (k rows are
-    // parameter-sized either way).
-    "q91_approx_top_terms" -> ((s, dir) => {
-      val toks = t(s, dir).documents
-        .select(col("lang"), explode(TextFns.tokens(col("text"))).as("token"))
-      val approx = toks.groupBy(col("lang"))
-        .agg(expr("approx_top_k(token, 50, 100000)").as("top"))
-        .select(col("lang"), explode(col("top")).as("e"))
-        .select(col("lang"), col("e.item").as("token"),
-          col("e.count").cast("long").as("sketch_n"))
-      val exact = toks.groupBy(col("lang"), col("token"))
-        .agg(count(lit(1)).as("n_exact"))
-      val w = Window.partitionBy(col("lang"))
-        .orderBy(col("n_exact").desc, col("token").asc)
-      exact.withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 5)
-        .join(approx, Seq("lang", "token"), "left")
-        .select(col("lang"), col("rk"), col("token"), col("n_exact"),
-          col("sketch_n"))
-        .orderBy("lang", "rk")
-    }),
-
-    // ---------------- near-dup-pruned corpus: keep one doc per cluster ----------------
-    // The consuming end of the dedup family: resolve near-dup
-    // clusters, drop every non-canonical member, report the surviving
-    // corpus per language. At scale this is the step that actually
-    // shrinks the training set (the cluster labels are the q69
-    // relation; pruning is one anti-join).
-    "q90_neardup_prune" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      val labels = jaccardLabels(s, dir)
-      val drop = labels.filter(col("id") =!= col("canonical_id"))
-        .select(col("id").as("doc_id"))
-      docs.join(drop, Seq("doc_id"), "left_anti")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_kept"), sum(col("n_chars")).as("kept_chars"))
-        .orderBy("lang")
-    }),
-
-    // ---------------- incremental dedup: new batch vs archive fingerprints ----------------
-    // Even doc_ids play the archive (only their fingerprint column
-    // crosses the boundary), odd ids the incoming batch.
-    "q89_incremental_dedup" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      val seen = docs.filter(col("doc_id") % 2 === 0)
-        .select(TextFns.fingerprint(col("text")).as("fp")).distinct()
-      Dedup.dedupIncremental(docs.filter(col("doc_id") % 2 =!= 0), seen,
-          "doc_id", "text")
-        .select(col("doc_id"), col("lang"), col("fp"))
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- batch retrieval: query table × corpus top-k ----------------
-    // The serving shape: a batch of probe vectors retrieves top-k
-    // corpus neighbors through shared LSH bands — no corpus self-join.
-    "q88_cross_knn" -> ((s, dir) => {
-      // Self-check (sf0.001 fixture): structural contract — ≤ k rows
-      // per query, every neighbor drawn from the corpus side only,
-      // and reported cosines match exact recomputation.
-      if (SelfCheck.fixtureExists) SelfCheck.once("q88/fixture") {
-        val emb = t(s, SelfCheck.FixtureDir).embeddings
-        val qs = emb.filter(col("vec_id") % 10 === 0)
-        val corpus = emb.filter(col("vec_id") % 10 =!= 0)
-        val knn = Similarity.crossKnnJoin(qs, corpus, "vec_id", "embedding",
-          k = 3, numBits = 32, bands = 4)
-        val overK = knn.groupBy("query_id").agg(count(lit(1)).as("n"))
-          .filter(col("n") > 3).count()
-        require(overK == 0, s"q88 $overK queries exceed k=3 neighbors")
-        require(knn.filter(col("query_id") % 10 =!= 0).count() == 0 &&
-          knn.filter(col("nn_id") % 10 === 0).count() == 0,
-          "q88 sides leaked across the query/corpus split")
-        val va = qs.select(col("vec_id").as("query_id"), col("embedding").as("ea"))
-        val vb = corpus.select(col("vec_id").as("nn_id"), col("embedding").as("eb"))
-        val bad = knn.join(va, "query_id").join(vb, "nn_id")
-          .filter(abs(col("cosine") - round(VecFns.cosine(col("ea"), col("eb")), 6))
-            > 1e-9).count()
-        require(bad == 0, s"q88 $bad pairs with wrong cosine values")
-        SelfCheck.note(s"k-bound (≤3 per query), no side leaks across the " +
-          s"query/corpus split, all ${knn.count()} cosines match exact recomputation")
-      }
-      // FULL-oracle envelope (q36's pattern; here the probe batch IS
-      // the whole query side, so nothing is sampled): hashed rows are
-      // the exact top-3 per probe vector (one broadcast batch scan),
-      // the banded retrieval's recall over them pinned >= 10% as a
-      // plan-fused verdict (measured 27-33% at every SF) computed from
-      // the crossKnnJoin that still executes on every run.
-      // probe batch capped like q36's audit sample (≤128 probes at any
-      // corpus size; a no-op at test SFs) — the serving batch is a
-      // bounded input, the corpus is the thing that scales
-      val emb = t(s, dir).embeddings
-      val probes = emb.filter(col("vec_id") % 100 === 0 && col("vec_id") < 12800)
-      val corpus = emb.filter(col("vec_id") % 100 =!= 0)
-      val ann = Similarity.crossKnnJoin(probes, corpus,
-        "vec_id", "embedding", k = 3, numBits = 64, bands = 8)
-      val exact = Similarity.bruteTopKBatch(probes, corpus,
-        "vec_id", "embedding", 3)
-      val verdict = hitFloorVerdict(exact, ann, floor = 0.1)
-      exact.crossJoin(broadcast(verdict))
-        .select(col("query_id"), col("nn_id"), col("cosine"),
-          col("ann_recall_ok"))
-        .orderBy(col("query_id"), col("cosine").desc, col("nn_id"))
-    }),
-
-    // ---------------- HLL sketch rollup: merge pre-aggregated sketches ----------------
-    // The 100 TB distinct-count pattern: materialize one HLL sketch
-    // per fine-grain cell (lang × source), answer coarse queries by
-    // MERGING sketches — never re-scanning raw ids. doc_ids are
-    // unique and each doc has one source, so summing the disjoint
-    // cells' exact distincts gives the per-lang truth the sketch
-    // estimate must land within 5% of. Sketch bytes are
-    // engine-specific → rows-only with a loud in-query gate.
-    // FULL-oracle envelope: the per-(lang,source) sketches MERGE
-    // (hll_union_agg) into per-lang estimates — the rollup a 100 TB
-    // pipeline keeps instead of re-scanning; the hashed row is the
-    // exact rollup count plus the merged estimate's 5% error verdict
-    "q87_hll_rollup" -> ((s, dir) => {
-      val fine = t(s, dir).documents
-        .groupBy(col("lang"), col("source"))
-        .agg(hll_sketch_agg(col("doc_id")).as("sk"),
-          countDistinct(col("doc_id")).as("exact"))
-      fine.groupBy(col("lang"))
-        .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("approx"),
-          sum(col("exact")).as("exact"))
-        .select(col("lang"), col("exact").cast("long").as("exact_docs"),
-          (abs(col("approx") - col("exact")) <= col("exact") * 0.05)
-            .as("merged_within_5pct"))
-        .orderBy("lang")
-    }),
-
-    // ---------------- forward as-of join: next purchase after each click ----------------
-    "q86_asof_forward" -> ((s, dir) => {
-      val ev = t(s, dir).events
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("event_id").as("p_id"))
-      AsofJoin.asofForward(clicks, purchases, "user_id", "ts", "ts",
-          Seq("p_id", "ts"))
-        .select(col("event_id"), col("user_id"),
-          coalesce(col("asof_p_id"), lit(-1L)).as("next_purchase_id"),
-          coalesce(unix_micros(col("asof_ts")) - unix_micros(col("ts")),
-            lit(-1L)).as("wait_us"))
-        .orderBy("event_id")
-    }),
-
-    // ---------------- curriculum binning: per-language length deciles ----------------
-    "q85_length_deciles" -> ((s, dir) => {
-      val w = Window.partitionBy(col("lang"))
-        .orderBy(col("n_chars"), col("doc_id"))
-      t(s, dir).documents
-        .select(col("lang"), col("n_chars"),
-          ntile(10).over(w).cast("long").as("decile"))
-        .groupBy(col("lang"), col("decile"))
-        .agg(count(lit(1)).as("n"),
-          min(col("n_chars")).as("min_chars"),
-          max(col("n_chars")).as("max_chars"))
-        .orderBy("lang", "decile")
-    }),
-
-    // ---------------- SemDeDup: cluster-bounded semantic dedup ----------------
-    // Prune near-identical embeddings without an all-pairs scan: the
-    // coarse quantizer bounds the quadratic sweep to within-cluster
-    // pairs (k-means is not SQL-expressible → rows-only; the greedy
-    // keep-lowest-id invariant is checked in-query instead).
-    "q92_semantic_dedup" -> ((s, dir) => {
-      // Self-check (sf0.001 fixture): (a) survivors are a subset that
-      // partitions the corpus with the dropped set; (b) the invariant
-      // — no two SURVIVORS of one cluster within tau — holds exactly.
-      if (SelfCheck.fixtureExists) SelfCheck.once("q92/fixture") {
-        val emb = t(s, SelfCheck.FixtureDir).embeddings
-        val kept = Similarity.semanticDedup(emb, "vec_id", "embedding",
-          tau = 0.35, nlist = 8)
-        val nAll = emb.count(); val nKept = kept.count()
-        require(nKept >= 1 && nKept <= nAll, "q92 survivor count out of range")
-        require(kept.join(emb, Seq("vec_id"), "left_anti").count() == 0,
-          "q92 survivors contain ids not in the corpus")
-        val kv = kept.join(emb, Seq("vec_id"))
-          .select(col("cid"), col("vec_id"), col("embedding"))
-        val close = kv.select(col("cid"), col("vec_id").as("id_a"), col("embedding").as("ea"))
-          .join(kv.select(col("cid"), col("vec_id").as("id_b"), col("embedding").as("eb")),
-            Seq("cid"))
-          .filter(col("id_a") < col("id_b"))
-          .filter(round(VecFns.cosine(col("ea"), col("eb")), 6) >= 0.35)
-          .count()
-        require(close == 0, s"q92 $close surviving same-cluster pairs within tau")
-        SelfCheck.note(s"$nKept/$nAll survivors, all drawn from the corpus; " +
-          "no surviving same-cluster pair within tau=0.35")
-      }
-      // FULL-oracle envelope (the q32 pattern): cluster ids and the
-      // survivor set depend on engine-float k-means centroids (not
-      // SQL-recomputable), so the hashed row carries the corpus size
-      // the oracle recomputes plus the GUARANTEES pinned TRUE — both
-      // fixture invariants, re-proved as distributed joins over the
-      // FULL corpus at every SF: survivors ⊆ corpus with a sane
-      // count, and no two survivors of one cluster within tau (the
-      // SemDeDup contract). The sf0.001 fixture block above stays as
-      // the decomposition-independent ground truth.
-      val emb = t(s, dir).embeddings
-      val kept = materializedOnce(Similarity.semanticDedup(
-        emb, "vec_id", "embedding", tau = 0.35, nlist = 16))
-      val kv = kept.join(emb, Seq("vec_id"))
-        .select(col("cid"), col("vec_id"), col("embedding"))
-      kept.join(emb.select(col("vec_id")), Seq("vec_id"), "left_anti")
-        .agg(count(lit(1)).as("__alien"))
-        .crossJoin(kept.agg(count(lit(1)).as("__k")))
-        .crossJoin(emb.agg(count(lit(1)).as("__n")))
-        .crossJoin(kv.select(col("cid"), col("vec_id").as("id_a"),
-            col("embedding").as("ea"))
-          .join(kv.select(col("cid"), col("vec_id").as("id_b"),
-            col("embedding").as("eb")), Seq("cid"))
-          .filter(col("id_a") < col("id_b"))
-          .filter(round(VecFns.cosine(col("ea"), col("eb")), 6) >= 0.35)
-          .agg(count(lit(1)).as("__close")))
-        .select(col("__n").as("n_vecs"),
-          (col("__alien") === 0L && col("__k") >= 1L &&
-            col("__k") <= col("__n")).as("survivors_in_corpus"),
-          (col("__close") === 0L).as("no_close_survivors"))
-    }),
-
-    // ---------------- deterministic epoch shuffle + sharding ----------------
-    "q93_epoch_shuffle" -> ((s, dir) => {
-      Mixing.epochShuffle(t(s, dir).documents.select(col("doc_id"), col("lang")),
-          col("doc_id"), epoch = 1, numShards = 8)
-        .select(col("doc_id"), col("lang"),
-          col("shard").cast("long").as("shard"), col("pos").cast("long").as("pos"))
-        .orderBy("shard", "pos")
-    }),
-
-    // ---------------- temperature-based domain mixture (α = 0.5) ----------------
-    "q94_temperature_mix" -> ((s, dir) => {
-      Mixing.temperatureMix(t(s, dir).documents, col("doc_id"), col("lang"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_kept"), sum(col("n_chars")).as("kept_chars"))
-        .orderBy("lang")
-    }),
-
-    // ---------------- vocabulary coverage: per-doc OOV rate ----------------
-    "q95_oov_rate" -> ((s, dir) => {
-      TextMetrics.oovRate(t(s, dir).documents, "doc_id", col("text"),
-          vocabSize = 24)
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- per-class cap: deterministic hash-rank quota ----------------
-    "q96_label_cap" -> ((s, dir) => {
-      Mixing.capPerGroup(t(s, dir).embeddings.select(col("vec_id"), col("label")),
-          col("vec_id"), col("label"), cap = 20)
-        .select(col("vec_id"), col("label"))
-        .orderBy("label", "vec_id")
-    }),
-
-    // ---------------- JSONL checkpoint round-trip (S6/S7 in LLM interchange form) ----------------
-    "q97_jsonl_roundtrip" -> ((s, dir) => {
-      val step = t(s, dir).documents.filter(col("n_chars") > 200)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-      val path = fixturePath("jsonl_step", dir, "documents")
-      JsonlIO.write(step, path)
-      val back = JsonlIO.read(s, path, org.apache.spark.sql.types.StructType.fromDDL(
-        "doc_id BIGINT, source STRING, n_chars BIGINT"))
-      back.groupBy(col("source"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
-        .orderBy("source")
-    }),
-
-    // ---------------- sub-document dedup: corpus-wide duplicate segments ----------------
-    "q98_segment_dedup" -> ((s, dir) => {
-      SegmentOps.dedupSegments(t(s, dir).documents, "doc_id", col("text"), segTokens = 3)
-        .select(col("doc_id"), col("n_kept"), col("n_dropped"),
-          md5(col("clean_text")).as("clean_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- per-domain boilerplate stripping ----------------
-    "q99_boilerplate_strip" -> ((s, dir) => {
-      SegmentOps.stripBoilerplate(t(s, dir).documents, "doc_id", col("text"),
-          "source", segTokens = 2, maxDocFrac = 0.12)
-        .select(col("doc_id"), col("source"), col("n_kept"), col("n_dropped"),
-          md5(col("clean_text")).as("clean_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- link-graph centrality (exact fixed-point PageRank) ----------------
-    "q100_pagerank" -> ((s, dir) => {
-      // bipartite supplier↔part graph, both directions (no dangling
-      // nodes). The degree-annotated statics are persisted once per
-      // corpus (the bucketed-edge-table checkpoint of a production
-      // graph job); every rerun starts from the parquet artifact
-      // instead of re-deriving distinct nodes + degrees from lineitem.
-      def edges = {
-        val pairs = t(s, dir).lineitem.select(
-            concat(lit("S"), col("l_suppkey").cast("string")).as("src"),
-            concat(lit("P"), col("l_partkey").cast("string")).as("dst"))
-          .distinct()
-        pairs.union(pairs.select(col("dst").as("src"), col("src").as("dst")))
-      }
-      PageRank.ranksFromArtifact(s, fixturePath("prgraph", dir, "lineitem"),
-          edges, iters = 5)
-        .orderBy(col("rank").desc, col("id").asc).limit(20)
-    }),
-
-    // ---------------- SCD-1 snapshot merge (MERGE/upsert) ----------------
-    "q101_snapshot_merge" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      val base = docs.filter(col("doc_id") % 3 =!= 0)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-      val delta = docs.filter(col("doc_id") % 2 === 0)
-        .select(col("doc_id"), lit("delta").as("source"),
-          (col("n_chars") + 1000L).as("n_chars"))
-      Upsert.scd1(base, delta, "doc_id").orderBy("doc_id")
-    }),
-
-    // ---------------- CDC diff of two snapshots ----------------
-    "q102_cdc_diff" -> ((s, dir) => {
-      val prev = t(s, dir).documents.select(col("doc_id"), col("source"), col("n_chars"))
-      val next = prev.filter(col("doc_id") % 10 =!= 0)
-        .withColumn("n_chars",
-          when(col("doc_id") % 7 === 0, col("n_chars") + 1L).otherwise(col("n_chars")))
-        .unionByName(prev.filter(col("doc_id") % 11 === 0)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("source"), col("n_chars")))
-      Upsert.cdcDiff(prev, next, "doc_id").orderBy("doc_id")
-    }),
-
-    // ---------------- per-group winsorized statistics ----------------
-    "q103_winsorize" -> ((s, dir) => {
-      Outliers.winsorize(t(s, dir).documents, col("lang"), col("n_chars"), 0.05, 0.95)
-        .select(col("__g").as("lang"), col("n"), col("n_lo"), col("n_hi"), col("mean6"))
-        .orderBy("lang")
-    }),
-
-    // ---------------- per-group Tukey outlier fences ----------------
-    "q104_tukey_outliers" -> ((s, dir) => {
-      Outliers.tukeyFences(t(s, dir).documents, col("lang"), col("n_chars"))
-        .select(col("__g").as("lang"), col("n"), col("n_low"), col("n_high"),
-          col("lo_fence"), col("hi_fence"))
-        .orderBy("lang")
-    }),
-
-    // ---------------- count-min heavy hitters (sketch family) ----------------
-    // count-min heavy hitters under a FULL-oracle bound envelope:
-    // the estimates themselves are sketch-internal (DuckDB cannot
-    // reproduce them), but their GUARANTEES are SQL rows — exact ≤
-    // est (always, by construction) and est ≤ exact + ceil(eps·N)
-    // (the accuracy contract) ride under the driver's hash as
-    // envelope booleans next to the DuckDB-recomputed exact top-20.
-    "q105_cms_heavy_hitters" -> ((s, dir) => {
-      val toks = t(s, dir).documents
-        .select(explode(split(col("text"), " ")).as("token"))
-      // N for the eps·N slack comes from the sketch's own stream
-      // length — no second corpus scan
-      val (top, total) = FreqSketch.estimateTopKWithTotal(toks,
-        col("token"), 20, eps = 0.001, confidence = 0.99, seed = 42)
-      val slack = math.ceil(0.001 * total).toLong
-      top
-        .select(col("item").as("token"), col("exact_n").as("n_exact"),
-          (col("est_n") >= col("exact_n")).as("cms_lower_ok"),
-          (col("est_n") <= col("exact_n") + lit(slack)).as("cms_upper_ok"))
-        .orderBy(col("n_exact").desc, col("token").asc)
-    }),
-
-    // ---------------- small-file compaction round-trip ----------------
-    "q106_compaction_roundtrip" -> ((s, dir) => {
-      val docs = t(s, dir).documents.select(col("doc_id"), col("lang"), col("n_chars"))
-      val frag = fixturePath("frag", dir, "documents")
-      val comp = fixturePath("compact", dir, "documents")
-      if (!new java.io.File(comp).isDirectory) {
-        docs.repartition(16).write.mode("overwrite").parquet(frag)
-        graft.sources.Compaction.compact(s, frag, comp, 512L * 1024 * 1024)
-      }
-      s.read.parquet(comp).groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
-        .orderBy("lang")
-    }),
-
-    // ---------------- inverted-index construction ----------------
-    "q107_inverted_index" -> ((s, dir) => {
-      InvertedIndex.build(t(s, dir).documents, "doc_id", col("text"))
-        .orderBy("term", "doc_id")
-    }),
-
-    // ---------------- index-backed boolean search ----------------
-    "q108_index_search" -> ((s, dir) => {
-      val postings = InvertedIndex.build(t(s, dir).documents, "doc_id", col("text"))
-      InvertedIndex.searchAll(postings, "doc_id", Seq("spark", "window"))
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- behavioral analytics: funnel / cohort / transitions ----------------
-    "q109_funnel" -> ((s, dir) =>
-      Funnel.funnelStages(t(s, dir).events, col("user_id"), col("ts"),
-        col("event_type"), Seq("view", "click", "purchase"))),
-
-    "q110_cohort_retention" -> ((s, dir) =>
-      Funnel.cohortRetention(t(s, dir).events, col("user_id"), col("ts"))
-        // ISO string, not DATE: the comparator canonicalizes DATE
-        // columns differently per engine
-        .withColumn("cohort_week", date_format(col("cohort_week"), "yyyy-MM-dd"))
-        .orderBy("cohort_week", "week_offset")),
-
-    "q114_transitions" -> ((s, dir) =>
-      Funnel.transitions(t(s, dir).events, col("user_id"), col("ts"),
-        col("event_id"), col("event_type"))
-        .orderBy("event", "next_event")),
-
-    // ---------------- time-series gap-fill resample ----------------
-    "q111_resample" -> ((s, dir) => {
-      // daily grid per user over purchase values, forward-filled.
-      // (user, ts) made unique first (max value at a tied instant) so
-      // the as-of winner is deterministic — the AsofJoin tie contract.
-      val obs = t(s, dir).events.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts")).agg(max(col("value")).as("value"))
-      Resample.resampleFillForward(obs, "user_id", "ts", 86400L, Seq("value"))
-        .select(col("user_id"),
-          unix_timestamp(col("grid_ts")).as("grid_s"),
-          round(col("asof_value"), 6).as("value"))
-        .orderBy("user_id", "grid_s")
-    }),
-
-    // ---------------- equi-width histogram ----------------
-    "q112_histogram" -> ((s, dir) =>
-      Resample.histogram(t(s, dir).lineitem, col("l_returnflag"),
-          col("l_quantity"), 0.0, 50.0, 10)
-        .orderBy("grp", "bucket")),
-
-    // ---------------- Bloom-prefiltered incremental dedup ----------------
-    "q113_bloom_prefilter" -> ((s, dir) => {
-      // Same archive/batch split as q89; the Bloom pre-filter must be
-      // output-invisible (no false negatives), so the full DuckDB
-      // oracle is the PLAIN anti-join — the strongest possible check
-      // of the bloom path.
-      val docs = t(s, dir).documents
-      val archive = docs.filter(col("doc_id") % 2 === 0)
-        .select(TextFns.fingerprint(col("text")).as("fp")).distinct()
-      val batch = docs.filter(col("doc_id") % 2 =!= 0)
-        .select(col("doc_id"), TextFns.fingerprint(col("text")).as("fp"))
-      Bloom.prefilteredAntiJoin(batch, "fp", archive, "fp",
-          mBits = 1L << 20, k = 5)
-        .select(col("doc_id"), col("fp")).orderBy("doc_id")
-    }),
-
-    // ---------------- edit-distance similarity join ----------------
-    "q115_edit_neardups" -> ((s, dir) => {
-      // length-blocked exact Levenshtein join on a bounded slice
-      // (p_size = 1); oracle is the NAIVE all-pairs join — proves the
-      // blocking lossless end-to-end
-      val names = t(s, dir).part.filter(col("p_size") === 1)
-        .select(col("p_partkey"), col("p_name"))
-      graft.operators.EditJoin.editSimilarityJoin(names, "p_partkey", "p_name", 3)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ---------------- hopping-window aggregation ----------------
-    "q116_hopping" -> ((s, dir) =>
-      t(s, dir).events
-        .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value").cast("decimal(18,6)")), 4).cast("double").as("sum_value"))
-        .select(unix_timestamp(col("window.start")).as("win_start"),
-          col("event_type"), col("n"), col("sum_value"))
-        .orderBy("win_start", "event_type")),
-
-    // ---------------- debounce dedup (recrawl policy) ----------------
-    "q117_debounce" -> ((s, dir) => {
-      // keep an event iff no SAME (user, type) event occurred in the
-      // preceding hour — the recrawl/refetch suppression gate
-      val w = Window.partitionBy(col("user_id"), col("event_type"))
-        .orderBy(col("ts"), col("event_id"))
-      t(s, dir).events
-        .withColumn("__prev", lag(col("ts"), 1).over(w))
-        // µs-exact gap (unix_timestamp would truncate sub-second)
-        .filter(col("__prev").isNull ||
-          unix_micros(col("ts")) - unix_micros(col("__prev")) >= 3600L * 1000000)
-        .select(col("event_id"), col("user_id"), col("event_type"))
-        .orderBy("event_id")
-    }),
-
-    // ---------------- data-quality audit ----------------
-    "q118_quality_audit" -> ((s, dir) => {
-      import Quality.RowCheck
-      val tt = t(s, dir)
-      // all lineitem row checks fuse into ONE scan+agg; same for orders
-      val li = Quality.rowChecks(tt.lineitem, Seq(
-        RowCheck("not_null", "l_quantity", col("l_quantity").isNotNull),
-        RowCheck("range", "l_quantity", col("l_quantity").between(1, 50)),
-        RowCheck("range", "l_discount", col("l_discount").between(0, 0.1)),
-        RowCheck("accepted", "l_returnflag", col("l_returnflag").isin("A", "N", "R"))))
-      val ord = Quality.rowChecks(tt.orders, Seq(
-        RowCheck("not_null", "o_custkey", col("o_custkey").isNotNull),
-        RowCheck("accepted", "o_orderstatus", col("o_orderstatus").isin("F", "O", "P"))))
-      val uniq = Quality.uniqueCheck(tt.orders, "unique", Seq("o_orderkey"))
-        .unionByName(Quality.uniqueCheck(tt.lineitem, "unique",
-          Seq("l_orderkey", "l_linenumber")))
-      val refs = Quality.refCheck(tt.lineitem, "l_orderkey",
-          tt.orders, "o_orderkey", "ref")
-        .unionByName(Quality.refCheck(tt.orders, "o_custkey",
-          tt.customer, "c_custkey", "ref"))
-      li.unionByName(ord).unionByName(uniq).unionByName(refs)
-        .orderBy("check_name", "subject")
-    }),
-
-    // ---------------- BFS shortest hops ----------------
-    "q119_bfs_hops" -> ((s, dir) => {
-      // q100 and q119 traverse the SAME supplier↔part graph, so both
-      // read the one persisted static-graph artifact (built by
-      // whichever runs first) instead of re-deriving the distinct
-      // edge relation from lineitem per run
-      def rawEdges = {
-        val pairs = t(s, dir).lineitem.select(
-            concat(lit("S"), col("l_suppkey").cast("string")).as("src"),
-            concat(lit("P"), col("l_partkey").cast("string")).as("dst"))
-          .distinct()
-        pairs.union(pairs.select(col("dst").as("src"), col("src").as("dst")))
-      }
-      val edges = PageRank.ensureGraph(s,
-        fixturePath("prgraph", dir, "lineitem"), rawEdges)._1
-        .select(col("src"), col("dst"))
-      val seeds = s.range(1).select(lit("S1").as("id"))
-      Bfs.shortestHops(edges, seeds, maxHops = 3)
-        .orderBy("hops", "id")
-    }),
-
-    // ---------------- funnel with conversion deadline ----------------
-    "q120_funnel_windowed" -> ((s, dir) =>
-      Funnel.funnelStagesWithin(t(s, dir).events, col("user_id"), col("ts"),
-        col("event_type"), Seq("view", "click", "purchase"),
-        maxGapSec = Some(6L * 3600))),
-
-    // ---------------- entity resolution capstone ----------------
-    "q121_entity_resolution" -> ((s, dir) => {
-      // fuzzy blocking (lossless length-binned edit join) → connected
-      // components → min-id canonical entity + its name: the
-      // record-linkage pipeline as a composition of three registered
-      // operators, oracle-checked end-to-end
-      val names = t(s, dir).part.filter(col("p_size") === 1)
-        .select(col("p_partkey"), col("p_name"))
-      val pairs = graft.operators.EditJoin
-        .editSimilarityJoin(names, "p_partkey", "p_name", 3)
-        .select(col("id_a"), col("id_b"))
-      val labels = Dedup.dupClusters(pairs)
-      names.join(labels, names("p_partkey") === labels("id"), "left")
-        .select(col("p_partkey"),
-          coalesce(col("canonical_id"), col("p_partkey")).as("entity_id"))
-        .join(names.select(col("p_partkey").as("entity_id"),
-          col("p_name").as("canonical_name")), Seq("entity_id"))
-        .select(col("p_partkey"), col("entity_id"), col("canonical_name"))
-        .orderBy("p_partkey")
-    }),
-
-    // ---------------- last-touch attribution ----------------
-    "q122_attribution" -> ((s, dir) => {
-      // each purchase attributes to the LAST click of the same user
-      // within 6 h (as-of backward join); older or absent clicks
-      // leave the purchase unattributed (null)
-      val ev = t(s, dir).events
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("purchase_id"),
-          col("ts").as("purchase_ts"))
-      // unique (user, ts) click instants: max event_id wins a tie —
-      // the AsofJoin determinism contract
-      val clicks = ev.filter(col("event_type") === "click")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("click_id"))
-      AsofJoin.asofBackward(purchases, clicks, "user_id",
-          "purchase_ts", "ts", Seq("ts", "click_id"))
-        .select(col("purchase_id"), col("user_id"),
-          when(unix_micros(col("purchase_ts")) - unix_micros(col("asof_ts")) <=
-            6L * 3600 * 1000000, col("asof_click_id")).as("click_id"))
-        .orderBy("purchase_id")
-    }),
-
-    // ---------------- statistical aggregates: correlation / regression ----------------
-    "q123_correlation" -> ((s, dir) => {
-      // price-vs-quantity association per return flag — corr, the OLS
-      // slope, and stddev. Floating-point co-moment aggregates are NOT
-      // order-independent (Spark merges partials in parallel, DuckDB
-      // accumulates sequentially), so instead of corr()/regr_slope()
-      // we aggregate EXACT second moments: quantity is integral and
-      // extendedprice has exactly two decimals in this schema, so
-      // unit/cent-scaled integers summed as DECIMAL(38,0) are exact and
-      // order-independent in both engines. corr/slope/stddev are then a
-      // single scalar expression over identical exact sums, rounded
-      // once at output — the q84/q103 fixed-point convention applied to
-      // second moments. (corr is scale-invariant; the cent scaling only
-      // shows up as the /100 in the slope.)
-      val d = DecimalType(28, 0)
-      val m = t(s, dir).lineitem
-        .select(col("l_returnflag"),
-          col("l_quantity").cast("long").as("x"),
-          round(col("l_extendedprice") * 100, 0).cast("long").as("y"))
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("x").cast(d)).as("sx"),
-          sum(col("y").cast(d)).as("sy"),
-          sum((col("x") * col("y")).cast(d)).as("sxy"),
-          sum((col("x") * col("x")).cast(d)).as("sxx"),
-          sum((col("y") * col("y")).cast(d)).as("syy"))
-      val nD  = col("n").cast(DecimalType(20, 0))
-      val num = (nD * col("sxy") - col("sx") * col("sy")).cast("double")
-      val dxx = (nD * col("sxx") - col("sx") * col("sx")).cast("double")
-      val dyy = (nD * col("syy") - col("sy") * col("sy")).cast("double")
-      // `+ 0` normalizes IEEE signed zero (-0.0 + 0 = +0.0): Spark's
-      // Round (BigDecimal HALF_UP) drops the sign of a rounded-to-zero
-      // negative, DuckDB's multiply-divide round keeps it — same `+ 0`
-      // applied in the oracle SQL so both engines emit +0.0.
-      m.select(col("l_returnflag"),
-          (round(num / sqrt(dxx * dyy), 3) + lit(0d)).as("corr_qp"),
-          (round(num / dxx / lit(100d), 3) + lit(0d)).as("slope"),
-          (round(sqrt(dxx / (nD * (nD - 1)).cast("double")), 3) + lit(0d)).as("sd_qty"),
-          col("n"))
-        .orderBy("l_returnflag")
-    }),
-
-    // ---------------- checkpoint-resume lifecycle: x2.2 reload branch ----------------
-    // The last reference LIFECYCLE: phase 1 checkpoints its hand-off
-    // relations to CSV once per corpus; every execution of this query
-    // is the reload branch — resume from the CSV checkpoints (S6/S7)
-    // and run the phase-2 fan-outs + target merge (x2.2.py:249-341).
-    // Same star-schema mapping as q22/q23.
-    "q126_resume_phase2" -> ((s, dir) =>
-      Checkpointed.phase2(s, dir,
-        fixturePath("x2ckpt", dir, "lineitem", "orders", "customer"))),
-
-    // ---------------- string frontend: Graft.sql ----------------
-    // The reference's entire user interface is a query STRING handed
-    // to an engine (query_opentargets.py:4-16); these queries run
-    // through `Graft.sql` — text in, DataFrame out, full Catalyst in
-    // between. q127-q129 are written in the Spark∩DuckDB dialect so
-    // the SAME text is its own oracle; q130 exercises a registered
-    // native function (dot_product — VecExprs codegen kernel) whose
-    // oracle twin is DuckDB's list_dot_product.
-    "q127_sql_revenue" -> ((s, dir) => Graft.sql(s, dir, SqlRevenueByNation)),
-    "q128_sql_search_topk" -> ((s, dir) => Graft.sql(s, dir, SqlSearchTopK)),
-    "q129_sql_window" -> ((s, dir) => Graft.sql(s, dir, SqlWindowTop2)),
-    "q130_sql_native_fn" -> ((s, dir) => Graft.sql(s, dir,
-      SqlNeighborDot("dot_product(a.embedding, b.embedding)"))),
-
-    // ---------------- §2.10 streaming: batch-twin oracle parity ----------------
-    // The windowed-aggregation path run as a REAL stream — file
-    // source, AvailableNow trigger, complete-mode windowed agg into a
-    // memory sink — must hash-match q20's batch oracle. Event-time
-    // tumbling hour windows with the same decimal money-sum, so the
-    // only difference from q20 is the execution model. The memory
-    // sink holds only the AGGREGATED result (≤ hours × event types
-    // rows) on the driver — the production shape swaps it for a
-    // parquet/Kafka sink; everything upstream is distributed.
-    // The stream reads a once-per-corpus normalized parquet artifact
-    // (Tables.events normalizes storage encodings at the table
-    // boundary; readStream has no such hook, so the artifact IS the
-    // boundary).
-    "q131_stream_hourly" -> ((s, dir) => {
-      val src = fixturePath("streamsrc", dir, "events")
-      Artifact.ensure(src) { tmp =>
-        t(s, dir).events.write.mode("overwrite").parquet(tmp)
-      }
-      val schema = s.read.parquet(src).schema
-      val qname = "graft_stream_hourly"
-      // a previous invocation's stream under the same name must be
-      // gone before restart (AvailableNow terminates it; belt and
-      // braces for error paths)
-      s.streams.active.filter(_.name == qname).foreach(_.stop())
-      // state partitions sized to the query's key space (hours ×
-      // event types — dozens of keys), not the session's relational
-      // shuffle width: the store count is frozen from this conf at
-      // first run, and 32 inherited stores for a dozen-key agg is
-      // pure commit overhead (StreamOps.withStatePartitions doc)
-      graft.streaming.StreamOps.withStatePartitions(s, 8) {
-        val query = s.readStream.schema(schema).parquet(src)
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"), moneySum(col("value")).as("sum_value"))
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-      }
-      s.table(qname)
-        .select(col("window.start").cast("long").as("hour_ts"),
-          col("event_type"), col("n"), col("sum_value"))
-        .orderBy("hour_ts", "event_type")
-    }),
-
-    // ---------------- gap-based sessionization ----------------
-    "q132_sessionize" -> ((s, dir) =>
-      Funnel.sessionize(t(s, dir).events, col("user_id"), col("ts"),
-          col("event_id"), gapSec = 1800L)
-        .withColumnRenamed("user", "user_id")
-        .orderBy("user_id", "session_seq")),
-
-    // ---------------- unpivot (wide → long reshaping) ----------------
-    // the inverse of q78_pivot: stack() runs in-task inside the scan
-    // stage (one generator, no shuffle, no N-scans-for-N-attributes
-    // like the naive UNION ALL the oracle is written as)
-    "q133_unpivot_part" -> ((s, dir) =>
-      t(s, dir).part
-        .select(col("p_partkey"), expr(
-          "stack(2, 'retailprice', p_retailprice, " +
-            "'size', CAST(p_size AS DOUBLE)) AS (attr, val)"))
-        .orderBy("p_partkey", "attr")),
-
-    // ---------------- triangle counting ----------------
-    // cohesion of the co-purchase graph (parts ordered together) —
-    // degree-ordered orientation bounds the wedge relation at m^1.5
-    // (Graphs.scala doc); the naive neighbor self-join is Σd² and
-    // dies on the first hub. The edge relation is the shared
-    // persisted artifact (coPurchaseEdges); the operator takes any
-    // edge relation.
-    "q134_triangles" -> ((s, dir) =>
-      graft.operators.Graphs.triangleCount(coPurchaseEdges(s, dir))),
-
-    // ---------------- local clustering coefficients ----------------
-    // per-node neighborhood density on the SAME co-purchase graph —
-    // q134's closed-wedge relation exploded to all three corners
-    "q135_clustering_coeff" -> ((s, dir) =>
-      graft.operators.Graphs.clusteringCoefficients(coPurchaseEdges(s, dir))
-        .orderBy("node")),
-
-    // ---------------- §2.10 stream-stream interval join ----------------
-    // every click within the hour BEFORE each purchase, as a real
-    // stream-stream join (two file-source streams over the normalized
-    // events artifact, event-time watermarks, append sink) — the
-    // all-matches streaming twin of q122's latest-only attribution.
-    // The memory sink holds only the matched id pairs (33 at sf0.01);
-    // production swaps it for a parquet/Kafka sink.
-    "q136_stream_interval_join" -> ((s, dir) => {
-      val src = fixturePath("streamsrc", dir, "events")
-      Artifact.ensure(src) { tmp =>
-        t(s, dir).events.write.mode("overwrite").parquet(tmp)
-      }
-      val schema = s.read.parquet(src).schema
-      val qname = "graft_stream_interval"
-      s.streams.active.filter(_.name == qname).foreach(_.stop())
-      def stream = s.readStream.schema(schema).parquet(src)
-      val purchases = stream.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"),
-          col("user_id").as("p_user"), col("ts").as("p_ts"))
-      val clicks = stream.filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"),
-          col("user_id").as("c_user"), col("ts").as("c_ts"))
-      // a stream-stream join keeps FOUR state stores per partition;
-      // sized to the join's state budget instead of inheriting the
-      // session's 32 relational shuffle partitions (128 stores for a
-      // 371-row result — measured 2-3x the row's cost in pure
-      // store commits, ProbeStateParts / withStatePartitions doc)
-      graft.streaming.StreamOps.withStatePartitions(s, 8) {
-        val query = graft.streaming.StreamOps
-          .intervalJoin(purchases, clicks, "p_user", "c_user",
-            "p_ts", "c_ts", windowSec = 3600L)
-          .select(col("purchase_id"), col("click_id"))
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-      }
-      s.table(qname).orderBy("purchase_id", "click_id")
-    }),
-
-    // ---------------- BM25 ranked retrieval over the inverted index ----------------
-    // 'dup' is the corpus's one rare token (df 25/500 at sf0.01), so
-    // the idf weighting actually decides the ranking; the flat-df
-    // terms contribute mostly length normalization.
-    "q137_bm25_topk" -> ((s, dir) =>
-      InvertedIndex.bm25TopK(t(s, dir).documents, "doc_id", col("text"),
-        Seq("dup", "spark", "window"), k = 10)),
-
-    // ---------------- hybrid retrieval: BM25 ⊕ cosine via RRF ----------------
-    // doc 0 plays the query (its text terms drive the lexical list,
-    // its embedding the semantic list) and is excluded from both
-    // sides; the fused top-10 is the rows a RAG pipeline would fetch.
-    "q138_rrf_hybrid" -> ((s, dir) => {
-      val docs = t(s, dir).documents.filter(col("doc_id") =!= 0)
-      val lex = InvertedIndex.bm25TopK(docs, "doc_id", col("text"),
-        Seq("dup", "spark", "window"), k = 50)
-        .select(col("doc_id"), col("bm25").as("score"))
-      val emb = t(s, dir).embeddings
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head().getSeq[Float](0).toArray
-      val sem = Similarity.bruteTopK(emb, "vec_id", "embedding", q, 50, excludeId = 0L)
-        .select(col("vec_id").as("doc_id"), col("cosine").as("score"))
-      Retrieval.rrf(Seq(lex, sem), "doc_id", "score", k = 10)
-    }),
-
-    // ---------------- nearest-centroid classification audit ----------------
-    "q139_nearest_centroid" -> ((s, dir) =>
-      Similarity.nearestCentroidConfusion(t(s, dir).embeddings,
-        "vec_id", "label", "embedding")
-        .orderBy("true_label", "pred")),
-
-    // ---------------- fuzzy dimension linkage (Jaro-Winkler) ----------------
-    // Probe × small-dimension linkage: every customer scored against
-    // the broadcast supplier names, best match kept via one partial-
-    // aggregable min(struct) — no per-customer window shuffle. The
-    // (1-jw, s_name) struct ordering IS (jw desc, s_name asc):
-    // 1-x is monotone and the jw grid (1e-6 after rounding) is 10
-    // orders coarser than double rounding error.
-    "q140_jaro_linkage" -> ((s, dir) => {
-      // the broadcast cross join inherits the PROBE side's
-      // partitioning, and a dimension-sized parquet file is one
-      // partition — which would run all |C|×|S| scorings on one core
-      // (measured 43 s at sf0.1). Spread the probe first; at cluster
-      // scale the probe is already many-partitioned and this is a
-      // no-op-sized shuffle either way.
-      val c = t(s, dir).customer.select(col("c_custkey"), col("c_name"))
-        .repartition(s.sparkContext.defaultParallelism)
-      val sup = t(s, dir).supplier.select(col("s_name"))
-      val best = c.crossJoin(broadcast(sup))
-        .withColumn("jw", round(TextFns.jaroWinkler(col("c_name"), col("s_name")), 6))
-        .groupBy(col("c_custkey"), col("c_name"))
-        .agg(min(struct((lit(1.0) - col("jw")).as("ljw"),
-          col("s_name").as("sn"), col("jw").as("j"))).as("b"))
-        .select(col("c_custkey"), col("c_name"),
-          col("b.sn").as("best_supplier"), col("b.j").as("jw"))
-      best.orderBy("c_custkey")
-    }),
-
-    // ---------------- SCD-2 validity-versioned history ----------------
-    // History at v100 (one closed generation at v50-100 for the %5
-    // keys, current rows for the %3≠0 keys) advanced to the v200
-    // snapshot (%10≠0 survives, %7 keys change, %11 keys re-key as
-    // inserts) — updates, deletes, inserts, and re-inserts all occur.
-    "q141_scd2_history" -> ((s, dir) => {
-      val docs = t(s, dir).documents.select(col("doc_id"), col("source"), col("n_chars"))
-      val hist = docs.filter(col("doc_id") % 3 =!= 0)
-        .withColumn("valid_from", lit(100L))
-        .withColumn("valid_to", lit(null).cast("long"))
-        .unionByName(docs.filter(col("doc_id") % 5 === 0)
-          .withColumn("n_chars", col("n_chars") - 7L)
-          .withColumn("valid_from", lit(50L))
-          .withColumn("valid_to", lit(100L)))
-      val snap = docs.filter(col("doc_id") % 10 =!= 0)
-        .withColumn("n_chars",
-          when(col("doc_id") % 7 === 0, col("n_chars") + 1L).otherwise(col("n_chars")))
-        .unionByName(docs.filter(col("doc_id") % 11 === 0)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("source"), col("n_chars")))
-      Upsert.scd2Apply(hist, snap, "doc_id", asOf = 200L)
-        .orderBy(col("doc_id"), col("valid_from"))
-    }),
-
-    // ---------------- bigram-LM fluency scoring ----------------
-    "q142_bigram_surprisal" -> ((s, dir) =>
-      TextMetrics.bigramSurprisal(t(s, dir).documents, "doc_id", col("text"))
-        .orderBy("doc_id")),
-
-    // ---------------- percentile-rank feature normalization ----------------
-    // Curriculum features: a doc's length percentile WITHIN its
-    // language (percent_rank + cume_dist — exact rational arithmetic,
-    // ties share values, no float-parity risk).
-    "q143_percentile_norm" -> ((s, dir) => {
-      val w = Window.partitionBy(col("lang")).orderBy(col("n_chars"))
-      t(s, dir).documents
-        .select(col("doc_id"), col("lang"), col("n_chars"),
-          round(percent_rank().over(w), 6).as("pr"),
-          round(cume_dist().over(w), 6).as("cd"))
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- distributed BPE vocabulary learning ----------------
-    // Iterative argmax loop (like PageRank's iterations) — and since
-    // round 13 a FULL-oracle row: the training loop itself replays in
-    // DuckDB as 12 unrolled argmax CTE layers (bpeLearnOracleSql — the
-    // q201 greedy-unroll device; all-integer, bit-exact). The two
-    // self-checks stay as independent evidence: (a) fixture equality
-    // against a sequential in-JVM BPE reference — the full merge
-    // SEQUENCE must match exactly; (b) at every scale, the argmax pair
-    // count is provably non-increasing step-over-step (a merged
-    // token's new pairs inherit at most the merged pair's count), so a
-    // violation means the loop state corrupted.
-    "q144_bpe_merges" -> ((s, dir) => {
-      if (SelfCheck.fixtureExists) SelfCheck.once("q144/fixture") {
-        val fx = t(s, SelfCheck.FixtureDir).documents
-        val got = graft.operators.BpeLearn
-          .learnMerges(fx, col("text"), numMerges = 8)
-          .select("step", "left", "right", "pair_count")
-          .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-        val words = fx.select(explode(TextFns.tokens(col("text"))).as("w"))
-          .filter(length(col("w")) > 0)
-          .groupBy("w").count()
-          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-        val want = graft.operators.BpeLearn.learnMergesLocal(words, numMerges = 8)
-        require(got == want,
-          s"q144 distributed merges diverge from the sequential reference:\n$got\nvs\n$want")
-        SelfCheck.note(s"fixture merge sequence (8 steps) identical to sequential BPE")
-      }
-      val m = graft.operators.BpeLearn
-        .learnMerges(t(s, dir).documents, col("text"), numMerges = 12)
-      SelfCheck.every(s"q144/$dir") {
-        val counts = m.orderBy("step").select("pair_count")
-          .collect().map(_.getLong(0)).toSeq
-        val bad = counts.zip(counts.drop(1)).count { case (a, b) => b > a }
-        require(bad == 0, s"q144 pair counts increased step-over-step: $counts")
-        SelfCheck.note(s"12 merge steps, counts non-increasing " +
-          s"(${counts.headOption.getOrElse(-1L)} → ${counts.lastOption.getOrElse(-1L)})")
-      }
-      // step as BIGINT on both sides (the driver's hash is dtype-exact)
-      m.select(col("step").cast("long").as("step"), col("left"),
-          col("right"), col("merged"), col("pair_count"))
-        .orderBy("step")
-    }),
-
-    // ---------------- token-budget corpus cut ----------------
-    // Spend a 4000-token budget per language in deterministic md5
-    // priority order (q125 computes budgets; this cuts the corpus to
-    // them — the last step of training-mix assembly).
-    "q145_token_budget" -> ((s, dir) =>
-      Mixing.tokenBudgetSample(t(s, dir).documents, col("lang"), col("doc_id"),
-        TextFns.tokenCount(col("text")), budget = 4000L)
-        .orderBy("id")),
-
-    // ---------------- incremental aggregate-table maintenance ----------------
-    // The ORACLE here is the algebraic property itself: folding the
-    // delta batch's partial aggregates into the base rollup must
-    // equal a full recompute over the whole corpus (the base split at
-    // doc_id 50 leaves several (lang, source) cells delta-only, so
-    // the null arms of the fold are exercised).
-    "q146_incremental_agg" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      def rollup(df: DataFrame) = df.groupBy(col("lang"), col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-          min(col("n_chars")).as("min_chars"), max(col("n_chars")).as("max_chars"))
-      Upsert.incrementalAggMerge(
-        rollup(docs.filter(col("doc_id") < 50)),
-        rollup(docs.filter(col("doc_id") >= 50)),
-        keys = Seq("lang", "source"),
-        counts = Seq("n_docs"), sums = Seq("sum_chars"),
-        mins = Seq("min_chars"), maxs = Seq("max_chars"))
-        .orderBy("lang", "source")
-    }),
-
-    // ---------------- join-skew diagnosis ----------------
-    // "Which users would dominate an events⋈events self-join?" — the
-    // planning query behind the AQE-vs-saltedJoin decision.
-    "q147_join_skew" -> ((s, dir) => {
-      val ev = t(s, dir).events
-      RelOps.joinSkewReport(
-        ev.filter(col("event_type") === "click").select(col("user_id")),
-        ev.filter(col("event_type") === "purchase").select(col("user_id")),
-        "user_id", topN = 20)
-    }),
-
-    // ---------------- PQ-compressed ANN (FULL-oracle envelope) ----------------
-    // The 100 TB vector layout: the query scans the 8-int code table
-    // (a persisted artifact), re-ranks only `rerank` full vectors.
-    // Envelope row (the q34/q50 pattern): the hashed rows are the
-    // EXACT L2 top-10 (DuckDB recomputes via list_distance) plus two
-    // guarantees pinned TRUE on every execution — recall floor
-    // (>= 6/10 of the true neighbors surfaced by the ADC scan) and
-    // domination (the approximate path can only MISS neighbors,
-    // never beat the exact i-th distance). Rankings align via sorted-
-    // array folds (10-row aggregations — no unpartitioned window).
-    "q148_pq_topk" -> ((s, dir) => {
-      val emb = t(s, dir).embeddings
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head().getSeq[Float](0).toArray
-      val idx = fixturePath("pq", dir, "embeddings")
-      Similarity.ensurePqIndex(emb, "vec_id", "embedding", numSub = 8, k = 16, idx)
-      val exact = emb.filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), round(sqrt(
-          VecFns.dot(col("embedding"), col("embedding"))
-            - lit(2.0) * VecFns.dot(col("embedding"), typedlit(q))
-            + lit(q.map(x => x.toDouble * x).sum)), 6).as("l2"))
-        .orderBy(col("l2").asc, col("vec_id").asc).limit(10)
-      val pq = Similarity.pqTopK(s, idx, emb, "vec_id", "embedding", q, 10,
-        rerank = 100, excludeId = 0L)
-      def ranked(df: DataFrame, prefix: String): DataFrame =
-        df.agg(sort_array(collect_list(struct(col("l2").as("__d"),
-            col("vec_id").as("__id")))).as("a"))
-          .select(posexplode(col("a")).as(Seq("rk", "r")))
-          .select(col("rk"), col("r.__d").as(s"${prefix}_d"))
-      val dominated = ranked(exact, "ex").join(ranked(pq, "pq"), Seq("rk"))
-        .agg(coalesce(every(col("pq_d") >= col("ex_d") - 1e-9), lit(true))
-          .as("pq_dominated_ok"))
-      val recall = exact.select(col("vec_id"))
-        .join(pq.select(col("vec_id")), Seq("vec_id"), "left_semi")
-        .agg((count(lit(1)) >= 6L).as("pq_recall_ok"))
-      exact.crossJoin(broadcast(recall)).crossJoin(broadcast(dominated))
-        .select(col("vec_id"), col("l2"), col("pq_recall_ok"),
-          col("pq_dominated_ok"))
-        .orderBy(col("l2").asc, col("vec_id"))
-    }),
-
-    // ---------------- per-language domain drift (KL divergence) ----------------
-    "q149_domain_kl" -> ((s, dir) =>
-      TextMetrics.domainKl(t(s, dir).documents, "lang", col("text"))
-        .orderBy("lang")),
-
-    // ---------------- streaming SCD-2 history (driver-surface oracle) ----------------
-    // A versioned update stream (orders keyed by customer, version =
-    // order key) replayed through a real FILE source one file per
-    // micro-batch, folded into a parquet history by the scd2Sink /
-    // scd2Batch pair. Batch splits are EQUAL-WIDTH buckets of the
-    // version range — floor((v-lo)*4/(hi-lo+1))+1 over the 1-row
-    // min/max bounds, so both engines reconstruct the same four
-    // batches WITHOUT a global sort (the previous ntile(4) over an
-    // unpartitioned window moved all orders to one partition — the
-    // exact anti-pattern the engine refuses elsewhere). Every
-    // per-batch winner is a change row (versions are unique, and the
-    // version rides in the payload), valid_from = its batch's max
-    // version, valid_to = the key's next appearance (partial
-    // semantics: unobserved keys ride open). Exercises
-    // collapse-last-wins, close+open, insert, ride-through, and the
-    // multi-batch replay end to end.
-    "q150_stream_scd2" -> ((s, dir) => {
-      val src = fixturePath("scd2srcw", dir, "orders")
-      Artifact.ensure(src) { tmp =>
-        val bounds = t(s, dir).orders
-          .agg(min(col("o_orderkey")), max(col("o_orderkey"))).head()
-        val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-        val u = t(s, dir).orders.select(
-          col("o_custkey").as("id"),
-          col("o_totalprice").as("price"),
-          col("o_orderkey").as("v"),
-          (floor((col("o_orderkey") - lit(lo)) * lit(4)
-            / lit(hi - lo + 1)) + lit(1)).cast("int").as("b"))
-        val base = System.currentTimeMillis() - 3600L * 1000
-        (1 to 4).foreach { b =>
-          val part = s"$tmp/_b$b"
-          u.filter(col("b") === b).drop("b")
-            .coalesce(1).write.mode("overwrite").parquet(part)
-          val f = new java.io.File(part).listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          val dst = new java.io.File(tmp, s"b$b.parquet")
-          java.nio.file.Files.move(f.toPath, dst.toPath)
-          // the file stream orders the backlog by mtime — pin it
-          dst.setLastModified(base + b * 2000L)
-          org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(part))
-        }
-      }
-      val schema = s.read.parquet(src).schema
-      // fresh history + checkpoint per invocation: the fold must
-      // replay from scratch to be comparable run-over-run
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q150").toString
-      val updates = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      val query = graft.streaming.StreamOps.scd2Sink(updates,
-        s"$scratch/history", "id", "v", s"$scratch/ckpt",
-        Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      query.awaitTermination()
-      s.read.parquet(s"$scratch/history")
-        .select(col("id"), col("price"), col("v"),
-          col("valid_from"), col("valid_to"))
-        .orderBy("id", "valid_from")
-    }),
-
-    // ---------------- BPE encode: tokenize with a merge table ----------------
-    // The APPLY half of the q144 tokenizer: a pinned 18-merge table
-    // (vocabulary-shaped chains like t→ta→tab→table) applied in
-    // priority order by pure replace()-chain expressions in the scan
-    // stage; output is per-doc word and subword-token counts. The
-    // fixture self-check pins the distributed kernel against the
-    // sequential greedy encoder word by word.
-    "q151_bpe_encode" -> ((s, dir) => {
-      if (SelfCheck.fixtureExists) SelfCheck.once("q151/fixture") {
-        val docs = t(s, SelfCheck.FixtureDir).documents
-        val words = docs.select(explode(split(col("text"), " ")).as("w"))
-          .filter(length(col("w")) > 0).distinct()
-          .collect().map(_.getString(0)).toSeq.sorted
-        // one Spark job over the distinct vocabulary (each word is its
-        // own single-word doc), compared word-by-word with the
-        // sequential greedy reference
-        import scala.jdk.CollectionConverters._
-        val wordsDf = s.createDataFrame(
-          words.zipWithIndex.map { case (w, i) =>
-            org.apache.spark.sql.Row(i.toLong, w) }.asJava,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("doc_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("text",
-              org.apache.spark.sql.types.StringType))))
-        val viaSpark = graft.operators.BpeLearn
-          .encode(wordsDf, "doc_id", col("text"), BpeMerges)
-          .select(col("doc_id"), col("tokens"))
-          .collect()
-          .map(r => r.getLong(0) -> r.getSeq[String](1).toSeq).toMap
-        words.zipWithIndex.foreach { case (w, i) =>
-          val want = graft.operators.BpeLearn.encodeLocal(w, BpeMerges)
-          require(viaSpark(i.toLong) == want,
-            s"q151 encode('$w') = ${viaSpark(i.toLong)}, sequential reference = $want")
-        }
-        SelfCheck.note(s"BPE encode ≡ sequential greedy on all " +
-          s"${words.size} fixture vocabulary words")
-      }
-      graft.operators.BpeLearn
-        .encode(t(s, dir).documents, "doc_id", col("text"), BpeMerges)
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_words"),
-          sum(size(col("tokens"))).as("n_tokens"))
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- GraphQL-dialect frontend ----------------
-    // The reference's query language, executed end-to-end: query TEXT
-    // in (the candidate_drugs.py diseaseAssociatedDrugs template,
-    // verbatim shape), nested data object out, flattened here for the
-    // hash compare. The oracle reconstructs the same nested fold in
-    // SQL over the raw star schema — parser, resolver, ordering and
-    // aggregation all under the hash.
-    "q152_graphql_known_drugs" -> ((s, dir) => {
-      val res = graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """query diseaseAssociatedDrugs {
-             disease(efoId: "DIS_BUILDING") {
-               id
-               name
-               knownDrugs {
-                 count
-                 rows {
-                   phase
-                   drug { id name }
-                 }
-               }
-             }
-           }""")
-      res.select(col("id").as("disease_id"), col("name").as("disease_name"),
-          col("knownDrugs.count").as("n_rows"),
-          posexplode(col("knownDrugs.rows")).as(Seq("rn", "r")))
-        .select(col("disease_id"), col("disease_name"), col("n_rows"),
-          (col("rn") + 1).cast("long").as("rn"),
-          col("r.phase").as("phase"),
-          col("r.drug.id").as("drug_id"), col("r.drug.name").as("drug_name"))
-        .orderBy("rn")
-    }),
-    // the query_opentargets.py example query, id constants aside
-    "q153_graphql_pathways" -> ((s, dir) =>
-      graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """{
-             target(ensemblId: "TGT_1") {
-               id
-               approvedSymbol
-               pathways {
-                 pathway { id name }
-               }
-             }
-           }""")
-        .select(col("id"), col("approvedSymbol"),
-          posexplode(col("pathways")).as(Seq("rn", "r")))
-        .select(col("id"), col("approvedSymbol"),
-          (col("rn") + 1).cast("long").as("rn"),
-          col("r.pathway.id").as("pathway_id"),
-          col("r.pathway.name").as("pathway_name"))
-        .orderBy("rn")),
-    // the x2.py drug→targets direction: ordered rows, rank exposed
-    "q154_graphql_linked_targets" -> ((s, dir) =>
-      graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """{
-             drug(chemblId: "DRG_1") {
-               id
-               name
-               linkedTargets {
-                 count
-                 rows {
-                   rank
-                   target { id approvedSymbol }
-                 }
-               }
-             }
-           }""")
-        .select(col("id").as("drug_id"), col("name").as("drug_name"),
-          col("linkedTargets.count").as("n_rows"),
-          posexplode(col("linkedTargets.rows")).as(Seq("rn", "r")))
-        .select(col("drug_id"), col("drug_name"), col("n_rows"),
-          col("r.rank").cast("long").as("rank"),
-          col("r.target.id").as("target_id"),
-          col("r.target.approvedSymbol").as("target_name"))
-        .orderBy("rank")),
-    // the prompt_for_disease_targets template: score-descending rows
-    "q155_graphql_assoc_targets" -> ((s, dir) =>
-      graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """{
-             disease(efoId: "DIS_MACHINERY") {
-               associatedTargets {
-                 rows {
-                   target { id approvedSymbol }
-                   score
-                 }
-               }
-             }
-           }""")
-        .select(posexplode(col("associatedTargets.rows")).as(Seq("rn", "r")))
-        .select((col("rn") + 1).cast("long").as("rn"),
-          col("r.target.id").as("target_id"),
-          col("r.target.approvedSymbol").as("target_name"),
-          col("r.score").as("score"))
-        .orderBy("rn")),
-    // the x2.py:77-91 GetAssociatedDiseases template verbatim (id
-    // constant aside) — the last reference query template, now under
-    // its own oracle: target → associatedDiseases, score-descending
-    "q178_graphql_assoc_diseases" -> ((s, dir) =>
-      graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """query GetAssociatedDiseases {
-             target(ensemblId: "TGT_1" ) {
-               associatedDiseases {
-                 rows {
-                   disease {
-                     id
-                     name
-                   }
-                   score
-                 }
-               }
-             }
-           }""")
-        .select(posexplode(col("associatedDiseases.rows")).as(Seq("rn", "r")))
-        .select((col("rn") + 1).cast("long").as("rn"),
-          col("r.disease.id").as("disease_id"),
-          col("r.disease.name").as("disease_name"),
-          col("r.score").as("score"))
-        .orderBy("rn")),
-
-    // ---------------- corpus-curation capstone ----------------
-    // The full training-data curation pipeline as ONE composition of
-    // four registered operators — quality gate (q26 rule) → exact
-    // dedup keep-first (q29) → per-language token budget (q145) →
-    // epoch-shuffled shard layout (q93) — oracle-checked end to end.
-    // Every stage is a deterministic hash/window discipline, so the
-    // whole pipeline is reproducible run-over-run and engine-over-
-    // engine: the property a 100 TB curation run actually needs.
-    "q156_curation_capstone" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      val quality = docs.filter(
-        TextFns.tokenCount(col("text")).between(20, 1000) &&
-          TextFns.distinctTokenRatio(col("text")) > 0.3)
-      val deduped = Dedup.dedupExact(quality, "doc_id", "text")
-      val kept = Mixing.tokenBudgetSample(deduped, col("lang"), col("doc_id"),
-        TextFns.tokenCount(col("text")), budget = 3000)
-      Mixing.epochShuffle(
-          kept.select(col("id").as("doc_id"), col("grp").as("lang"),
-            col("n_tok")),
-          col("doc_id"), epoch = 1, numShards = 4)
-        .select(col("doc_id"), col("lang"), col("n_tok"),
-          col("shard").cast("long").as("shard"),
-          col("pos").cast("long").as("pos"))
-        .orderBy("shard", "pos")
-    }),
-
-    // the opentargets_query.py search shape: entity-filtered substring
-    // search with list-valued entityNames, hits ordered (name, id)
-    "q157_graphql_search" -> ((s, dir) =>
-      graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """{
-             search(queryString: "red", entityNames: ["target", "drug"]) {
-               total
-               hits { id name entity }
-             }
-           }""")
-        .select(col("total"), posexplode(col("hits")).as(Seq("rn", "r")))
-        .select(col("total"), (col("rn") + 1).cast("long").as("rn"),
-          col("r.id").as("id"), col("r.name").as("name"),
-          col("r.entity").as("entity"))
-        .orderBy("rn")),
-
-    // the x2.py prompt_get_drugs_for_target template verbatim (id
-    // constant aside): the Drug facet block — synonyms / drugType /
-    // isApproved / maximumClinicalTrialPhase, the last DERIVED from
-    // the knownDrugs edge rollup like the platform's own ETL
-    "q158_graphql_drug_facets" -> ((s, dir) =>
-      graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """{
-             target(ensemblId: "TGT_2") {
-               knownDrugs {
-                 rows {
-                   drug {
-                     id
-                     name
-                     synonyms
-                     drugType
-                     isApproved
-                     maximumClinicalTrialPhase
-                   }
-                 }
-               }
-             }
-           }""")
-        .select(posexplode(col("knownDrugs.rows")).as(Seq("rn", "r")))
-        .select((col("rn") + 1).cast("long").as("rn"),
-          col("r.drug.id").as("drug_id"), col("r.drug.name").as("name"),
-          array_join(col("r.drug.synonyms"), "|").as("synonyms"),
-          col("r.drug.drugType").as("drug_type"),
-          col("r.drug.isApproved").as("is_approved"),
-          col("r.drug.maximumClinicalTrialPhase").as("max_phase"))
-        .orderBy("rn")),
-
-    // ---------------- expectations gate with quarantine ----------------
-    // The write-audit-publish split: rows passing every check publish,
-    // rows failing ANY land in quarantine with a `failed_checks`
-    // evidence column. Output = the quarantine side + the publish-side
-    // count riding along as a constant column, so BOTH sides are under
-    // the hash.
-    "q159_quarantine" -> ((s, dir) => {
-      import Quality.RowCheck
-      val checks = Seq(
-        RowCheck("qty_le_30", "l_quantity", col("l_quantity") <= 30),
-        RowCheck("disc_le_05", "l_discount", col("l_discount") <= 0.05),
-        RowCheck("price_pos", "l_extendedprice", col("l_extendedprice") > 0))
-      val (pass, quar) = Quality.quarantine(t(s, dir).lineitem, checks)
-      val nPass = pass.agg(count(lit(1)).as("n_pass"))
-      quar.select(col("l_orderkey"), col("l_linenumber"), col("failed_checks"))
-        .crossJoin(broadcast(nPass))
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-
-    // ---------------- ORC storage roundtrip ----------------
-    // second columnar format next to parquet (q106/q97 cover
-    // compaction/JSONL): write-once ORC artifact, read back with
-    // predicates — the plan audit asserts they reach the ORC scan
-    "q160_orc_roundtrip" -> ((s, dir) => {
-      val path = fixturePath("orc", dir, "documents")
-      Artifact.ensure(path) { tmp =>
-        t(s, dir).documents.write.mode("overwrite").orc(tmp)
-      }
-      s.read.orc(path)
-        .filter(col("lang") === "en" && col("n_chars") > 500)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- file-stats manifest + skip scan ----------------
-    // The table-format data-skipping discipline: a range-clustered
-    // layout gives each file a tight n_chars interval, the manifest
-    // records per-file min/max, and the scan reads ONLY admitted
-    // files. Oracle = the plain filter (skipping must be invisible in
-    // the result); the in-query invariant asserts files were actually
-    // skipped and the pruned result equals the unpruned one.
-    "q161_manifest_skip" -> ((s, dir) => {
-      import graft.sources.FileManifest
-      val path = fixturePath("rangeclust", dir, "documents")
-      Artifact.ensure(path) { tmp =>
-        t(s, dir).documents
-          .repartitionByRange(8, col("n_chars"))
-          .sortWithinPartitions(col("n_chars"))
-          .write.mode("overwrite").parquet(tmp)
-      }
-      // the manifest is itself a persisted artifact (built once,
-      // source-tagged sidecar): the scan below resolves it instead of
-      // re-aggregating per-file stats on every query
-      val manifest =
-        FileManifest.ensureManifest(s, path, Seq("n_chars"), s"$path-manifest")
-      SelfCheck.every(s"q161/$dir") {
-        val total = manifest.count()
-        val admitted = FileManifest.admittedCount(manifest, "n_chars", 200, 260)
-        require(admitted < total && admitted >= 1,
-          s"q161 no skipping: admitted $admitted of $total files")
-        val pruned = FileManifest
-          .prunedScan(s, path, manifest, "n_chars", 200, 260).count()
-        val full = s.read.parquet(path)
-          .filter(col("n_chars").between(200, 260)).count()
-        require(pruned == full, s"q161 pruned $pruned != full $full")
-        SelfCheck.note(s"skip scan read $admitted of $total files; " +
-          s"pruned rows == unpruned rows ($full)")
-      }
-      // prune with the manifest already resolved above — calling
-      // FileManifest.scan here would resolve the artifact a second
-      // time per query (scan() is the one-call form for callers that
-      // don't hold the manifest; CompactionSpec covers it)
-      FileManifest.prunedScan(s, path, manifest, "n_chars", 200, 260)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- metadata count (manifest fast path) ----------------
-    // count(*) WHERE range answered FROM the manifest: fully-contained
-    // files contribute n_rows without being opened; only the (≤2 on a
-    // range tiling) boundary files are scanned. This is a metadata
-    // operation by design — the count resolves at planning time like
-    // SHOW STATS, and the oracle proves it exact against the full scan.
-    "q162_manifest_count" -> ((s, dir) => {
-      import graft.sources.FileManifest
-      val path = fixturePath("rangeclust", dir, "documents")
-      Artifact.ensure(path) { tmp =>
-        t(s, dir).documents
-          .repartitionByRange(8, col("n_chars"))
-          .sortWithinPartitions(col("n_chars"))
-          .write.mode("overwrite").parquet(tmp)
-      }
-      val manifest =
-        FileManifest.ensureManifest(s, path, Seq("n_chars"), s"$path-manifest")
-      val (n, boundary) = FileManifest
-        .prunedCount(s, path, manifest, "n_chars", 100, 400)
-      SelfCheck.every(s"q162/$dir") {
-        require(boundary <= 2,
-          s"q162 boundary files $boundary > 2 on a range tiling")
-        SelfCheck.note(s"metadata count scanned only $boundary boundary " +
-          s"file(s) of 8; n=$n")
-      }
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(
-        java.util.List.of(org.apache.spark.sql.Row(n)),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("n_rows",
-            org.apache.spark.sql.types.LongType))))
-    }),
-
-    // ---------------- GraphQL two-level connection ----------------
-    // The opentargets_query_targets_for_drug.py:4-21 query text
-    // verbatim (id constant aside): drug → mechanismsOfAction whose
-    // rows each carry a LIST of targets — the nested
-    // array<struct<targets: array<struct>, mechanismOfAction>>
-    // navigated back down with a double posexplode for the oracle.
-    "q163_graphql_mechanisms" -> ((s, dir) =>
-      graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """{
-             drug(chemblId: "DRG_7") {
-               id
-               name
-               mechanismsOfAction {
-                 rows {
-                   targets {
-                     id
-                     approvedSymbol
-                   }
-                   mechanismOfAction
-                 }
-               }
-             }
-           }""")
-        .select(col("id").as("drug_id"), col("name").as("drug_name"),
-          posexplode(col("mechanismsOfAction.rows")).as(Seq("rn", "r")))
-        .select(col("drug_id"), col("drug_name"),
-          (col("rn") + 1).cast("long").as("rn"),
-          col("r.mechanismOfAction").as("mechanism"),
-          posexplode(col("r.targets")).as(Seq("tn", "tgt")))
-        .select(col("drug_id"), col("drug_name"), col("rn"),
-          (col("tn") + 1).cast("long").as("tn"), col("mechanism"),
-          col("tgt.id").as("target_id"),
-          col("tgt.approvedSymbol").as("target_name"))
-        .orderBy("rn", "tn")),
-
-    // ---------------- GraphQL page: {index, size} ----------------
-    // The schema's Pagination input (opentargets.schema:1047-1050) on
-    // the q152 connection: page 2 of 10, count stays the TOTAL —
-    // the same slice the relational q43 takes with orderBy+offset+limit.
-    "q164_graphql_page" -> ((s, dir) =>
-      graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """{
-             disease(efoId: "DIS_BUILDING") {
-               id
-               knownDrugs(page: {index: 1, size: 10}) {
-                 count
-                 rows {
-                   phase
-                   drug { id name }
-                 }
-               }
-             }
-           }""")
-        .select(col("id").as("disease_id"),
-          col("knownDrugs.count").as("n_rows"),
-          posexplode(col("knownDrugs.rows")).as(Seq("rn", "r")))
-        .select(col("disease_id"), col("n_rows"),
-          (col("rn") + 1).cast("long").as("rn"),
-          col("r.phase").as("phase"), col("r.drug.id").as("drug_id"),
-          col("r.drug.name").as("drug_name"))
-        .orderBy("rn")),
-
-    // ---------------- GraphQL batch point-lookup root ----------------
-    // targets(ensemblIds: [...]) (opentargets.schema:1125-1148):
-    // the id LIST becomes one isin-filtered scan — N point lookups,
-    // one pass (the S4 plan; the reference loops one query per id,
-    // its own documented missed optimization, SURVEY §4.1). The
-    // absent id must simply not appear.
-    "q165_graphql_batch_targets" -> ((s, dir) =>
-      graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """{
-             targets(ensemblIds: ["TGT_3", "TGT_5", "TGT_8", "TGT_9999999"]) {
-               id
-               approvedSymbol
-             }
-           }""")
-        .select(posexplode(col("targets")).as(Seq("rn", "r")))
-        .select((col("rn") + 1).cast("long").as("rn"),
-          col("r.id").as("target_id"),
-          col("r.approvedSymbol").as("target_name"))
-        .orderBy("rn")),
-
-    // ---------------- bucketed SCD-2 history (layout invariance) ----------------
-    // The q150 replay folded into a KEY-BUCKET-PARTITIONED history
-    // (historyBuckets=8): per batch only the touched bucket
-    // directories rewrite (the fact-scale layout — see the scd2Batch
-    // scale contract), and the resulting history must be VALUE-
-    // IDENTICAL to the flat layout's — same oracle SQL as q150, so
-    // the layout choice is proven invisible under the driver's hash.
-    "q166_stream_scd2_bucketed" -> ((s, dir) => {
-      val src = fixturePath("scd2srcw", dir, "orders")
-      Artifact.ensure(src) { tmp =>
-        val bounds = t(s, dir).orders
-          .agg(min(col("o_orderkey")), max(col("o_orderkey"))).head()
-        val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-        val u = t(s, dir).orders.select(
-          col("o_custkey").as("id"),
-          col("o_totalprice").as("price"),
-          col("o_orderkey").as("v"),
-          (floor((col("o_orderkey") - lit(lo)) * lit(4)
-            / lit(hi - lo + 1)) + lit(1)).cast("int").as("b"))
-        val base = System.currentTimeMillis() - 3600L * 1000
-        (1 to 4).foreach { b =>
-          val part = s"$tmp/_b$b"
-          u.filter(col("b") === b).drop("b")
-            .coalesce(1).write.mode("overwrite").parquet(part)
-          val f = new java.io.File(part).listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          val dst = new java.io.File(tmp, s"b$b.parquet")
-          java.nio.file.Files.move(f.toPath, dst.toPath)
-          dst.setLastModified(base + b * 2000L)
-          org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(part))
-        }
-      }
-      val schema = s.read.parquet(src).schema
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q166").toString
-      val updates = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      val query = graft.streaming.StreamOps.scd2Sink(updates,
-        s"$scratch/history", "id", "v", s"$scratch/ckpt",
-        Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-        historyBuckets = Some(8))
-      query.awaitTermination()
-      SelfCheck.every(s"q166/$dir") {
-        val dirs = new java.io.File(s"$scratch/history").listFiles()
-          .count(_.getName.startsWith("__b="))
-        require(dirs >= 1 && dirs <= 8,
-          s"q166 expected a bucket-partitioned history, found $dirs dirs")
-        SelfCheck.note(s"history laid out in $dirs key-hash bucket dirs; " +
-          "values hash-equal to the flat q150 layout")
-      }
-      s.read.parquet(s"$scratch/history")
-        .select(col("id"), col("price"), col("v"),
-          col("valid_from"), col("valid_to"))
-        .orderBy("id", "valid_from")
-    }),
-
-    // ---------------- general interval-overlap join ----------------
-    // "Which purchase-attribution windows were open while each click
-    // window was live?" — interval × interval overlap per user, the
-    // temporal-algebra primitive q74/q75 (as-of, point-in-range)
-    // don't cover. Binned equi-join (both sides replicate per
-    // touched bin, first-shared-bin claims the pair) — the raw
-    // inequality predicate the DuckDB oracle runs would plan as a
-    // nested loop at scale.
-    "q167_interval_overlap" -> ((s, dir) => {
-      val ev = t(s, dir).events
-      def iv(tpe: String, lenUs: Long, sN: String, eN: String) =
-        ev.filter(col("event_type") === tpe)
-          .select(col("user_id"), col("event_id"),
-            unix_micros(col("ts")).as(sN),
-            (unix_micros(col("ts")) + lit(lenUs)).as(eN))
-      RangeJoin.intervalOverlapJoin(
-        iv("click", 300000000L, "ls", "le"),
-        iv("purchase", 600000000L, "rs", "re"),
-        "user_id", "ls", "le", "rs", "re",
-        binWidth = 600000000L, rightCols = Seq("event_id"))
-        .orderBy("event_id", "r_event_id")
-    }),
-
-    // ---------------- per-key interval coalescing ----------------
-    // Union of overlapping click windows per user → coverage islands
-    // ("total engaged time"). One keyed window + one keyed agg;
-    // contrast q113 sessionize, which islands POINT events by gap.
-    "q168_interval_merge" -> ((s, dir) => {
-      val ev = t(s, dir).events
-      RangeJoin.mergeIntervals(
-        ev.filter(col("event_type") === "click")
-          .select(col("user_id"), unix_micros(col("ts")).as("s"),
-            (unix_micros(col("ts")) + lit(600000000L)).as("e")),
-        "user_id", "s", "e")
-        .orderBy("user_id", "island_start")
-    }),
-
-    // ---------------- 2-D Pareto skyline ----------------
-    // Per return-flag frontier of (cheapest price, biggest quantity):
-    // one keyed sort + two running-min windows replace the quadratic
-    // NOT-EXISTS self-join the oracle runs. Fixed-point cents keep
-    // the RANGE-frame semantics exact (x' < x on longs).
-    "q169_pareto_skyline" -> ((s, dir) => {
-      val pts = t(s, dir).lineitem.select(
-        col("l_returnflag"),
-        round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
-        (-round(col("l_quantity"))).cast("long").as("neg_qty"))
-      Skyline.skyline2d(pts, Seq("l_returnflag"), "price_cents", "neg_qty")
-        .select(col("l_returnflag"), col("price_cents"),
-          (-col("neg_qty")).as("qty"))
-        .orderBy("l_returnflag", "price_cents")
-    }),
-
-    // ---------------- exact column profiler ----------------
-    // ANALYZE-TABLE in one aggregation job: all four columns' exact
-    // null/distinct/min/max ride a single 1-row agg (Catalyst's
-    // Expand multi-distinct rewrite — one scan) exploded to long form.
-    "q170_profile" -> ((s, dir) =>
-      Quality.profile(t(s, dir).orders,
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"))
-        .orderBy("column_name")),
-
-    // ---------------- approx column profiler (envelope) ----------------
-    // The data-scale twin of q170: HLL distinct estimates in ONE
-    // un-replicated scan (no Expand — PlanAuditSpec pins the shape)
-    // where the exact profiler's multi-distinct replicates the scan
-    // 5×. Envelope oracle (the q87 gate): the hashed rows are the
-    // EXACT profile plus a verdict that each estimate sits within the
-    // documented 3·rsd band (rsd 0.05 → 15%, floor of ±1 for the
-    // tiny-cardinality columns where HLL is exact anyway).
-    "q179_profile_approx" -> ((s, dir) => {
-      val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
-        "o_orderpriority")
-      val exact = Quality.profile(t(s, dir).orders, cols)
-      val approx = Quality.profileApprox(t(s, dir).orders, cols, rsd = 0.05)
-        .select(col("column_name"), col("n_distinct_approx"))
-      exact.join(broadcast(approx), "column_name")
-        .select(col("column_name"), col("n_rows"), col("n_null"),
-          col("n_distinct"), col("min_val"), col("max_val"),
-          (abs(col("n_distinct_approx") - col("n_distinct")).cast("double") <=
-            greatest(col("n_distinct") * 0.15, lit(1.0)))
-            .as("approx_within_3rsd"))
-        .orderBy("column_name")
-    }),
-
-    // ---------------- duplicated-span removal (exact substring dedup) ----------------
-    // Lee et al. 2022's span-dedup semantics as relational algebra
-    // (no suffix array): every 8-word span occurring more than once
-    // in the corpus is removed everywhere but its globally first
-    // occurrence (keep-first min (doc_id, pos)); contiguous removals
-    // merge into maximal regions (RangeJoin.mergeIntervals). FULL
-    // oracle: DuckDB replays span hashing (md5 of the space-joined
-    // words), the keep-first window, the island fold, and the
-    // cleaned-text md5 — every emitted number and fingerprint is
-    // engine-exact.
-    "q180_span_dedup" -> ((s, dir) => {
-      Dedup.spanDedup(t(s, dir).documents, "doc_id", "text", k = 8)
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- incremental span dedup (batch vs archive) ----------------
-    // The continuous-pipeline form: 3/4 of the corpus is history
-    // whose spans live in a compact hash archive; the remaining
-    // quarter arrives as a batch. Archived span content is removed
-    // outright (history is canonical), archive-fresh content
-    // keep-firsts within the batch. Full oracle: DuckDB replays the
-    // archive probe (NOT EXISTS), the fresh-rank window, and the
-    // same island fold + cleaned-md5 tail as q180.
-    "q181_span_dedup_incremental" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      val history = docs.filter(col("doc_id") % 4 =!= 3)
-      val batch = docs.filter(col("doc_id") % 4 === 3)
-      Dedup.spanDedupIncremental(batch,
-          Dedup.spanArchive(history, "doc_id", "text", k = 8),
-          "doc_id", "text", k = 8)
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- fuzzy decontamination (containment gate) ----------------
-    // The normalized-overlap complement of q65's absolute shared-count
-    // gate: exact shingle-set Jaccard AND containment |A∩B|/|B| per
-    // (doc, benchmark) pair, flagging on containment — the metric
-    // that catches a long document embedding a short benchmark item
-    // verbatim (containment 1.0, Jaccard ≈ 0). Benchmark drawn from
-    // the corpus, so both sides filter the one persisted shingle
-    // artifact; the benchmark side broadcasts — one linear corpus
-    // scan, exact answer, no LSH recall loss. FULL oracle: DuckDB
-    // recomputes raw-string shingle sets and both ratios. Threshold
-    // 0.05 is set for the synthetic corpus's overlap profile (10
-    // flagged pairs at sf0.01, nearest below-cut value 0.047619 —
-    // no boundary-tie risk); real pipelines run 0.5+.
-    "q182_fuzzy_contamination" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      val bench = docs.filter(col("doc_id") % 50 === 0)
-      val sh = sharedShingles(s, dir)
-      Dedup.contaminationFuzzy(docs, bench, "doc_id", "text",
-        n = JaccardShingleN, minContainment = 0.05,
-        docShingles = Some(sh),
-        benchShingles = Some(sh.filter(col("id") % 50 === 0)))
-        .orderBy("doc_id", "bench_id")
-    }),
-
-    // ---------------- incremental near-dup (batch vs archive LSH) ----------------
-    // The continuous-pipeline member of the minhash family (q89 exact
-    // / q181 spans / this fuzzy): 3/4 of the corpus is history whose
-    // state is two persisted relations — the shingle artifact and a
-    // compact banded-signature table — and the batch quarter is
-    // banded against that state, never re-banding or self-joining the
-    // archive. Envelope oracle (the q31 pattern): rows are keyed on
-    // the DuckDB-recomputable EXACT batch-touching pair set with its
-    // jaccard and partner class, and the LSH guarantees ride as
-    // booleans the oracle pins TRUE — subset-of-exact on (keys,
-    // jaccard, vs) (exact verification: zero false positives, exact
-    // values, correct classification) and the 0.8 recall floor.
-    "q183_incremental_neardups" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      val sh = sharedShingles(s, dir)
-      val shHist = sh.filter(col("id") % 4 =!= 3)
-      val batch = docs.filter(col("doc_id") % 4 === 3)
-      val archBands = Dedup.minhashBands(
-        Dedup.minhashSignaturesFromShingles(shHist, k = 32,
-          shingleN = JaccardShingleN))
-      def mat(df: DataFrame): DataFrame = materializedOnce(df)
-      val shBatch = sh.filter(col("id") % 4 === 3)
-      val inc = mat(Dedup.minhashNearDupsIncremental(batch, "doc_id", "text",
-          archiveShingles = shHist, archiveBands = archBands,
-          threshold = 0.6, k = 32, bands = 8, shingleN = JaccardShingleN,
-          batchShingles = Some(shBatch))
-        .select(least(col("id_a"), col("id_b")).as("id_a"),
-          greatest(col("id_a"), col("id_b")).as("id_b"),
-          col("jaccard"), col("vs")))
-      // exact side: the persisted pair artifact filtered to
-      // batch-touching pairs (standing pipeline state). When it was
-      // computed live, ONE filtered self-PPJoin beat the split form
-      // (jaccardJoin(batch, hist) + jaccardPairs(batch)): 7 s vs
-      // 9-11 s at sf0.1 — two PPJoin pipelines pay two freq tables
-      // and four ranked-prefix aggregations (SCALING.md)
-      val exact = mat(sharedPairs(s, dir)
-        .filter(col("id_a") % 4 === 3 || col("id_b") % 4 === 3)
-        .withColumn("vs", when(col("id_a") % 4 === 3 && col("id_b") % 4 === 3,
-          lit("batch")).otherwise(lit("archive"))))
-      val verdict = inc
-        .join(exact, Seq("id_a", "id_b", "jaccard", "vs"), "left_anti")
-        .agg(count(lit(1)).as("__fp"))
-        .crossJoin(inc.join(exact.select("id_a", "id_b"),
-            Seq("id_a", "id_b"), "left_semi")
-          .agg(count(lit(1)).as("__hit")))
-        .crossJoin(exact.agg(count(lit(1)).as("__n")))
-        .select((col("__fp") === 0L).as("subset_of_exact"),
-          (col("__n") === 0L || col("__hit") >= col("__n") * 0.8).as("recall_ok"))
-      exact.crossJoin(broadcast(verdict))
-        .select(col("id_a"), col("id_b"), col("jaccard"), col("vs"),
-          col("subset_of_exact"), col("recall_ok"))
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ---------------- PPS weighted subsampling (token-weighted) ----------------
-    // Deterministic Poisson sample with per-row inclusion probability
-    // ∝ token count at expected fraction 1/4 — every TOKEN equally
-    // likely to survive the cut, the compute-matched thinning rule
-    // ([[Mixing.weightedSample]]). FULL oracle: the gate uses only
-    // IEEE +,×,÷ over md5-digit uniforms and exact integer totals,
-    // all correctly rounded, so DuckDB replays the acceptance
-    // decision bit-for-bit.
-    "q184_weighted_sample" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      val w = size(split(col("text"), " ")).cast("long")
-      Mixing.weightedSample(docs, col("doc_id"), w, 1, 4)
-        .select(col("doc_id"), w.as("n_tok"),
-          round(col("p_keep"), 6).as("p_keep"))
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- content-defined chunking (gear-style CDC) ----------------
-    // Shift-robust chunk boundaries from word VALUES (md5 bucket <
-    // 32/256 ⇒ expected ~8-word chunks): an insertion re-chunks only
-    // its own chunk, so chunk identity — and therefore chunk-level
-    // dedup — survives edits that shift every downstream position.
-    // Output marks each chunk occurrence whose content already
-    // appeared earlier in global (doc, chunk) order, the keep-first
-    // rule chunk-store dedup applies. FULL oracle: DuckDB replays the
-    // boundary flags, the prefix-count window, the ordered chunk
-    // re-assembly, and the first-occurrence window.
-    "q185_cdc_chunks" -> ((s, dir) => {
-      val ch = Chunking.cdcChunks(t(s, dir).documents, "doc_id",
-        col("text"), boundary256 = 32)
-      val firstW = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("chunk_md5")).orderBy(col("id"), col("chunk_idx"))
-      ch.withColumn("is_dup", row_number().over(firstW) > 1)
-        .select(col("id").as("doc_id"), col("chunk_idx"),
-          col("start_pos"), col("n_words"), col("chunk_md5"), col("is_dup"))
-        .orderBy("doc_id", "chunk_idx")
-    }),
-
-    // ---------------- incremental IVF index append ----------------
-    // The vector-store maintenance path: 3/4 of the embeddings built
-    // the persisted inverted file; the remaining quarter arrives as a
-    // batch and is APPENDED — assigned to the existing centroids,
-    // landed as new files in the matching list partitions, no retrain
-    // and no rewrite (Similarity.appendIvfIndex; spec pins appended ≡
-    // rebuilt-with-same-centroids and history bit-untouched). The
-    // whole lifecycle runs inside one atomic artifact publish, so the
-    // query is idempotent. Envelope oracle (q50's pattern): rows are
-    // the exact brute-force top-10 over the FULL corpus; the verdict
-    // pins the appended index's recall floor under history-trained
-    // centroids.
-    "q186_ivf_append" -> ((s, dir) => {
-      val emb = t(s, dir).embeddings
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head().getSeq[Float](0).toArray
-      val idx = fixturePath("ivfapp", dir, "embeddings")
-      def ok(p: String) =
-        Artifact.complete(s"$p/vectors") && Artifact.complete(s"$p/centroids")
-      Artifact.ensure(idx, ok) { tmp =>
-        Similarity.buildIvfIndex(emb.filter(col("vec_id") % 4 =!= 3),
-          "vec_id", "embedding", nlist = 16, tmp)
-        Similarity.appendIvfIndex(s, tmp,
-          emb.filter(col("vec_id") % 4 === 3), "vec_id", "embedding")
-      }
-      val brute = Similarity.bruteTopK(emb, "vec_id", "embedding", q, 10,
-        excludeId = 0L)
-      val ivf = Similarity.ivfTopKIndexed(s, idx, "vec_id", "embedding", q, 10,
-          nprobe = 4, excludeId = 0L)
-        .select(col("vec_id"))
-      val verdict = brute.select(col("vec_id"))
-        .join(ivf, Seq("vec_id"), "left_semi")
-        .agg((count(lit(1)) >= 6L).as("ivf_recall_ok"))
-      brute.crossJoin(broadcast(verdict))
-        .select(col("vec_id"), col("cosine"), col("ivf_recall_ok"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-    }),
-
-    // ---------------- two-relation jaccard join (cross-corpus) ----------------
-    // The exact set-similarity JOIN: batch quarter × history
-    // three-quarters at Jaccard ≥ 0.5, prefix/length/positional
-    // filtered under ONE shared (df, shingle) order — neither side is
-    // self-joined, so the archive costs its prefix scan, never its
-    // quadratic interior (the cross-corpus sweep: new crawl ×
-    // curated corpus, plagiarism detection). Both sides filter the
-    // one persisted shingle artifact. FULL oracle: DuckDB recomputes
-    // the cross pair set from raw-string shingles.
-    "q187_jaccard_join" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      val sh = sharedShingles(s, dir)
-      Dedup.jaccardJoin(docs.filter(col("doc_id") % 4 === 3),
-          docs.filter(col("doc_id") % 4 =!= 3), "doc_id", "text",
-          n = JaccardShingleN, threshold = 0.5,
-          maxShingleFreq = Long.MaxValue,
-          leftShingles = Some(sh.filter(col("id") % 4 === 3)),
-          rightShingles = Some(sh.filter(col("id") % 4 =!= 3)))
-        .orderBy("id_l", "id_r")
-    }),
-
-    // ---------------- perceptual image dedup (blocked-mean aHash) ----------------
-    // Content hashes (q29) split two images differing in one pixel
-    // into unrelated buckets; the perceptual fingerprint buckets
-    // 64-block mean-threshold bits so near-identical images land
-    // within a small hamming distance. The REAL decode path feeds it
-    // (BMP parse per row); near-dup partners come from the 4×16-bit
-    // banded self-join (complete for hamming ≤ 3). FULL oracle:
-    // every bit of every hash AND the partner counts are replayed in
-    // DuckDB from the source text bytes — integer cross-product
-    // mean compares, no floats anywhere.
-    "q188_image_phash" -> ((s, dir) => {
-      val media = Multimodal.mediaFromDocuments(t(s, dir).documents)
-      val hashes = Multimodal.imageHashes(s, media)
-      val pairs = Multimodal.imageNearDups(hashes, maxHamming = 3)
-      val parts = pairs.select(col("id_a").as("media_id"))
-        .unionByName(pairs.select(col("id_b").as("media_id")))
-        .groupBy("media_id").agg(count(lit(1)).as("n_neardups"))
-      hashes.join(parts, Seq("media_id"), "left")
-        .select(col("media_id"), col("h1"), col("h2"),
-          coalesce(col("n_neardups"), lit(0L)).as("n_neardups"))
-        .orderBy("media_id")
-    }),
-
-    // ---------------- continuous-ingest capstone ----------------
-    // The round's incremental family composed as ONE batch-ingest
-    // pipeline, every gate archive-shaped: the batch quarter (1) drops
-    // exact duplicates against the archive's fingerprint table
-    // (keep-first within the batch), (2) drops near-duplicates of
-    // archived content via the two-relation PPJoin (exact, never
-    // self-joining the archive), (3) drops benchmark leaks by the
-    // containment gate, then (4) thins survivors with the PPS
-    // token-weighted sample at expected fraction 1/2 (totals over the
-    // survivors). Every stage is engine-exact, so the FULL pipeline
-    // replays as one DuckDB query — gates compose by anti-joins over
-    // independently-computed per-pair flags, which is also why the
-    // stages can run in any order without changing the kept set.
-    "q189_ingest_capstone" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      val sh = sharedShingles(s, dir)
-      val batch = docs.filter(col("doc_id") % 4 === 3)
-      val archive = docs.filter(col("doc_id") % 4 =!= 3)
-      val shBatch = sh.filter(col("id") % 4 === 3)
-      val seen = archive.select(TextFns.fingerprint(col("text")).as("fp"))
-        .distinct()
-      val s1 = Dedup.dedupIncremental(batch, seen, "doc_id", "text")
-        .select("doc_id")
-      // batch ids with an archived near-dup partner, read off the
-      // shared pair artifact (q187 benches the live two-relation
-      // PPJoin that this gate is semantically equal to — spec-pinned)
-      val nearFlag = sharedPairs(s, dir)
-        .filter((col("id_a") % 4 === 3) =!= (col("id_b") % 4 === 3))
-        .select(when(col("id_a") % 4 === 3, col("id_a"))
-          .otherwise(col("id_b")).as("doc_id"))
-        .distinct()
-      val contFlag = Dedup.contaminationFuzzy(batch,
-          docs.filter(col("doc_id") % 50 === 0), "doc_id", "text",
-          n = JaccardShingleN, minContainment = 0.5,
-          docShingles = Some(shBatch),
-          benchShingles = Some(sh.filter(col("id") % 50 === 0)))
-        .select("doc_id").distinct()
-      val survivors = batch
-        .join(s1, Seq("doc_id"), "left_semi")
-        .join(nearFlag, Seq("doc_id"), "left_anti")
-        .join(contFlag, Seq("doc_id"), "left_anti")
-      val w = size(split(col("text"), " ")).cast("long")
-      Mixing.weightedSample(survivors, col("doc_id"), w, 1, 2)
-        .select(col("doc_id"), col("lang"), w.as("n_tok"),
-          round(col("p_keep"), 6).as("p_keep"))
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- perceptual audio dedup (energy-envelope hash) ----------------
-    // q188's rule over the audio modality: 64 blocked-mean bits over
-    // the decoded samples' ABSOLUTE amplitudes (the energy envelope),
-    // same integer cross-product compares, same two-halves packing,
-    // same banded hamming pairing (shared `hammingNearDups`). FULL
-    // oracle: DuckDB rebuilds each 16-bit signed sample from the
-    // source bytes (the q124 reconstruction), then every hash bit and
-    // partner count.
-    // ---------------- sketch set algebra: HLL distinct intersection ----------------
-    // "How many keys are in BOTH segments" at sketch cost: HLL can
-    // union but not intersect, so the estimate is inclusion-exclusion
-    // (est_A + est_B − est_A∪B) — three parameter-sized sketches, no
-    // exact distinct over the fact table needed at data scale. The
-    // compounded error has no tight a-priori bound, so the envelope
-    // pins a GENEROUS one (each estimate within 10% of exact; the
-    // intersection within 10% of the larger segment) — the q91/q105
-    // pattern: rows keyed on the DuckDB-recomputable exact
-    // cardinalities, verdict booleans pinned TRUE. The exact columns
-    // exist to KEY the oracle; a 100 TB run keeps only the sketches.
-    "q196_hll_intersection" -> ((s, dir) => {
-      val li = t(s, dir).lineitem
-      val a = li.filter(col("l_quantity") >= 45)
-        .select(col("l_orderkey").as("k"))
-      val b = li.filter(col("l_returnflag") === "R")
-        .select(col("l_orderkey").as("k"))
-      val skA = a.agg(hll_sketch_agg(col("k")).as("sa"),
-        countDistinct(col("k")).as("n_a"))
-      val skB = b.agg(hll_sketch_agg(col("k")).as("sb"),
-        countDistinct(col("k")).as("n_b"))
-      val exact = a.intersect(b).agg(count(lit(1)).as("n_inter"))
-        .crossJoin(a.unionByName(b).agg(countDistinct(col("k")).as("n_union")))
-      val estA = hll_sketch_estimate(col("sa"))
-      val estB = hll_sketch_estimate(col("sb"))
-      val estU = hll_sketch_estimate(hll_union(col("sa"), col("sb")))
-      val estI = estA + estB - estU
-      skA.crossJoin(skB).crossJoin(exact)
-        .select(col("n_a"), col("n_b"), col("n_union"), col("n_inter"),
-          (abs(estA - col("n_a")) <= col("n_a") * 0.1).as("a_ok"),
-          (abs(estB - col("n_b")) <= col("n_b") * 0.1).as("b_ok"),
-          (abs(estU - col("n_union")) <= col("n_union") * 0.1).as("union_ok"),
-          (abs(estI - col("n_inter")) <=
-            greatest(col("n_a"), col("n_b")) * 0.1).as("inter_ok"))
-    }),
-
-    // ---------------- SQ8 scalar-quantized similarity (FULL oracle, bit-exact) ----------------
-    // The fourth ANN tier, and the only one that needs NO recall
-    // envelope: per-dimension symmetric int8 quantization (scale_d =
-    // corpus max|x_d|, code = round(x·127/scale)) and an EXACT int64
-    // dot-product ranking over the codes. Every step is either a
-    // single correctly-rounded IEEE op on shared doubles or integer
-    // arithmetic, so DuckDB reproduces scores bit-for-bit — no
-    // 6-decimal coarsening anywhere. Served from the PERSISTED code
-    // table since round 13 (the IVF/PQ artifact discipline): codes
-    // packed one byte per dimension (binary column), scales as a
-    // dim-sized sidecar — the ranking scan reads 1/4 the bytes of the
-    // float vectors AND never touches them (the query's own codes
-    // come from the code table). Bit-identical to the ad-hoc
-    // sq8TopK (SimilaritySpec pins it), so the oracle is unchanged.
-    "q197_sq8_topk" -> ((s, dir) => {
-      val idx = fixturePath("sq8", dir, "embeddings")
-      Similarity.ensureSq8Index(t(s, dir).embeddings, "vec_id", "embedding", idx)
-      Similarity.sq8TopKIndexed(s, idx, "vec_id", queryId = 0L, k = 10)
-    }),
-
-    // ---------------- contrastive hard-negative mining (FULL oracle) ----------------
-    // The training-pipeline retrieval shape contrastive learners need:
-    // for each probe, the top-3 highest-cosine corpus vectors with a
-    // DIFFERENT label ("close in embedding space, wrong class").
-    // Exact over the probe batch — broadcast probes × one corpus scan
-    // (linear; the q36/q88 batch geometry), ranked on the rounded
-    // cosine for a cross-engine-stable cut.
-    "q198_negative_mining" -> ((s, dir) => {
-      // probe batch capped (≤128 at any corpus size; no-op at test SFs)
-      val emb = t(s, dir).embeddings
-      Similarity.negativeMining(
-          emb.filter(col("vec_id") % 100 === 0 && col("vec_id") < 12800), emb,
-          "vec_id", "embedding", "label", k = 3)
-        .orderBy(col("query_id"), col("cosine").desc, col("nn_id"))
-    }),
-
-    // ---------------- streaming near-dup maintenance ----------------
-    // q183's stream twin, completing the continuous-ingest streaming
-    // family (q195 = index member, this = near-dup member): the
-    // 4-file backlog replays one file per trigger, each micro-batch
-    // bands against the persisted minhash archive and then APPENDS
-    // ITSELF as the archive's next generation (per-batch overwrite
-    // dirs — exactly-once effects under at-least-once foreachBatch).
-    // Banding predicates are deterministic functions of shingle sets,
-    // so the accumulated pair set equals the one-shot corpus operator
-    // (StreamOpsSpec pins the equality on a fixture stream); here the
-    // envelope carries q31's FULL oracle — rows keyed on the exact
-    // pair artifact, stream-accumulated subset/recall verdicts pinned
-    // TRUE.
-    "q199_stream_neardups" -> ((s, dir) => {
-      val src = ensureDocBacklog(s, dir)
-      val schema = s.read.parquet(src).schema
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q199").toString
-      val docsStream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      val query = graft.streaming.StreamOps.neardupSink(docsStream,
-        s"$scratch/state", "doc_id", "text", s"$scratch/ckpt",
-        Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-        threshold = 0.6, shingleN = JaccardShingleN)
-      query.awaitTermination()
-      SelfCheck.every(s"q199/$dir") {
-        // count batch DIRECTORIES, not distinct row values: a trigger
-        // whose slice has no near-dups still lands an (empty) batch dir
-        val nb = new java.io.File(s"$scratch/state/pairs").listFiles()
-          .count(f => f.isDirectory && f.getName.startsWith("batch="))
-        require(nb == 4, s"q199 expected 4 ingested batches, got $nb")
-        SelfCheck.note(s"near-dup pairs accumulated across $nb micro-batches, " +
-          "then every state relation compacted into one base generation; " +
-          "subset/recall verdicts vs the exact pair artifact ride the row")
-      }
-      // table maintenance: the pair relation (the one the read below
-      // goes through) folds its 4 committed generations per run; the
-      // archive's shingles/bands fold ONCE per session (the q216
-      // billing discipline — their fold feeds nothing downstream of
-      // this query, and the same compactBatches path is already
-      // benched per-rep through pairs here and through the
-      // q195/q212/q225 sinks; re-folding them per rep billed ~2 s of
-      // pure redundancy to the board's top row)
-      val foldedPairs = graft.streaming.StreamOps.compactIndex(
-        s, s"$scratch/state/pairs", s"$scratch/ckpt")
-      require(foldedPairs.contains(-1L),
-        s"q199 pairs compaction did not fold: $foldedPairs")
-      SelfCheck.once(s"q199/statefold/$dir") {
-        Seq("shingles", "bands").foreach { rel =>
-          val folded = graft.streaming.StreamOps.compactIndex(
-            s, s"$scratch/state/$rel", s"$scratch/ckpt")
-          require(folded.contains(-1L),
-            s"q199 $rel compaction did not fold: $folded")
-        }
-        SelfCheck.note("archive shingle/band generations folded to one " +
-          "base generation each; the pair fold runs per-rep on the " +
-          "read path")
-      }
-      val acc = s.read.parquet(s"$scratch/state/pairs")
-      val pairs = acc.select(
-          least(col("id_a"), col("id_b")).as("id_a"),
-          greatest(col("id_a"), col("id_b")).as("id_b")).distinct()
-      val exact = sharedPairs(s, dir)
-      val exKeys = exact.select(col("id_a"), col("id_b"))
-      val verdict = subsetRecallVerdict(pairs, exKeys, floor = 0.8)
-      exact.crossJoin(broadcast(verdict))
-        .select(col("id_a"), col("id_b"), col("jaccard"),
-          col("subset_of_exact"), col("recall_ok"))
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ---------------- incremental search-index append ----------------
-    // The retrieval member of the incremental family, and the one
-    // whose append is EXACT by construction: posting rows are
-    // per-document, and every BM25 statistic derives from the
-    // postings relation at query time, so the appended index answers
-    // bit-identically to a rebuild over the union (spec-pinned).
-    // Build-then-append runs inside one atomic artifact publish;
-    // the query replays q137's ranking over the appended index and
-    // carries q137's FULL oracle (full-corpus BM25 in SQL).
-    "q194_index_append" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      val idx = fixturePath("postidx", dir, "documents")
-      Artifact.ensure(idx) { tmp =>
-        InvertedIndex.build(docs.filter(col("doc_id") % 4 =!= 3),
-            "doc_id", col("text"))
-          .write.mode("overwrite").parquet(tmp)
-        InvertedIndex.appendPostings(tmp,
-          docs.filter(col("doc_id") % 4 === 3), "doc_id", col("text"))
-      }
-      InvertedIndex.bm25TopKIndexed(s.read.parquet(idx), "doc_id",
-        Seq("dup", "spark", "window"), k = 10)
-    }),
-
-    // ---------------- streaming search-index maintenance ----------------
-    // q194's stream twin: the corpus arrives as a 4-file backlog, one
-    // file per trigger, and each micro-batch's postings land in their
-    // own batch=<id> directory with overwrite semantics (retries
-    // replace, never double-count — exactly-once index effect under
-    // at-least-once foreachBatch). After the replay the directory IS
-    // the full corpus's posting relation, so the ranked answer
-    // carries q137's full-corpus BM25 oracle.
-    "q195_stream_index" -> ((s, dir) => {
-      val src = ensureDocBacklog(s, dir)
-      val schema = s.read.parquet(src).schema
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q195").toString
-      val docsStream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      val query = graft.streaming.StreamOps.postingsSink(docsStream,
-        s"$scratch/idx", "doc_id", "text", s"$scratch/ckpt",
-        Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      query.awaitTermination()
-      SelfCheck.every(s"q195/$dir") {
-        val nb = s.read.parquet(s"$scratch/idx")
-          .select("batch").distinct().count()
-        require(nb == 4, s"q195 expected 4 ingested batches, got $nb")
-        SelfCheck.note(s"index accumulated across $nb micro-batch dirs, " +
-          "then compacted into one base generation; ranked answer " +
-          "oracle-matched against the full corpus")
-      }
-      // table maintenance: fold the 4 committed trigger dirs into ONE
-      // base generation (the small-file fix at production cadence) —
-      // the oracle-matched read below goes THROUGH the compacted index
-      val folded = graft.streaming.StreamOps.compactIndex(
-        s, s"$scratch/idx", s"$scratch/ckpt")
-      require(folded.contains(-1L), s"q195 compaction did not fold: $folded")
-      InvertedIndex.bm25TopKIndexed(
-        s.read.parquet(s"$scratch/idx").drop("batch"), "doc_id",
-        Seq("dup", "spark", "window"), k = 10)
-    }),
-
-    // ---------------- per-group PPS weighted sampling ----------------
-    // q184's gate with PER-LANGUAGE normalization: every language is
-    // thinned to the same expected quarter while inclusion odds inside
-    // a language still scale with token count — the grouped form the
-    // global normalizer can't express (a token-heavy language would
-    // otherwise eat the whole budget). Same engine-exact IEEE gate;
-    // the totals relation is one row per language and broadcasts.
-    "q193_weighted_sample_grouped" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      val w = size(split(col("text"), " ")).cast("long")
-      Mixing.weightedSamplePerGroup(docs, col("doc_id"), col("lang"), w, 1, 4)
-        .select(col("doc_id"), col("lang"), w.as("n_tok"),
-          round(col("p_keep"), 6).as("p_keep"))
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- video near-dup (shared frame fingerprints) ----------------
-    // The third perceptual modality: every frame gets the q188
-    // blocked-mean fingerprint independently, and two videos pair
-    // when their DISTINCT frame-fingerprint sets share ≥ 2 entries —
-    // the keyframe-overlap scheme, robust to re-cuts/frame drops
-    // where a whole-stream hash is not. One fingerprint-keyed
-    // equality self-join (the q65 shape — bucketed, never all-pairs).
-    // FULL oracle: DuckDB rebuilds every frame's pixels from the
-    // source bytes and replays fingerprints, sets, and pair counts.
-    "q192_video_neardups" -> ((s, dir) => {
-      val media = Multimodal.mediaFromDocuments(t(s, dir).documents)
-      Multimodal.videoNearDups(
-          Multimodal.videoFrameHashes(s, media), minShared = 2)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ---------------- incremental cluster resolution ----------------
-    // The last step of continuous dedup: the archive's PERSISTED
-    // label table (its standing state — an ensureClusterLabels
-    // artifact over the history three-quarters) folds in the batch's
-    // new pair relation via Dedup.dupClustersIncremental: archived
-    // components contract to star edges, so the update graph is
-    // archive-members + new-pairs, never the historical pair
-    // relation. FULL oracle: the updated labels must equal the
-    // from-scratch connected components over the ENTIRE corpus's
-    // exact pair set (the q69 recursive-CTE oracle at t=0.6).
-    "q191_incremental_clusters" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      val sh = sharedShingles(s, dir)
-      val oldLabels = Dedup.ensureClusterLabels(
-        docs.filter(col("doc_id") % 4 =!= 3), "doc_id", "text",
-        n = JaccardShingleN, threshold = 0.6,
-        maxShingleFreq = Long.MaxValue,
-        fixturePath("archlabels", dir, "documents"),
-        shingles = Some(sh.filter(col("id") % 4 =!= 3)))
-      // batch-touching exact pairs from the persisted pair artifact
-      // (when computed live, one filtered self-PPJoin beat the split
-      // jaccardJoin+jaccardPairs form 8-8.5 s vs 11-12 s at sf0.1 —
-      // SCALING.md has both experiments)
-      val newPairs = sharedPairs(s, dir)
-        .filter(col("id_a") % 4 === 3 || col("id_b") % 4 === 3)
-      Dedup.dupClustersIncremental(newPairs, oldLabels).orderBy("id")
-    }),
-
-    "q190_audio_phash" -> ((s, dir) => {
-      val media = Multimodal.mediaFromDocuments(t(s, dir).documents)
-      val hashes = Multimodal.audioHashes(s, media)
-      val pairs = Multimodal.hammingNearDups(hashes, maxHamming = 3)
-      val parts = pairs.select(col("id_a").as("media_id"))
-        .unionByName(pairs.select(col("id_b").as("media_id")))
-        .groupBy("media_id").agg(count(lit(1)).as("n_neardups"))
-      hashes.join(parts, Seq("media_id"), "left")
-        .select(col("media_id"), col("h1"), col("h2"),
-          coalesce(col("n_neardups"), lit(0L)).as("n_neardups"))
-        .orderBy("media_id")
-    }),
-
-    // ---------------- unigram-LM vocabulary learning (hard-EM) ----------------
-    // The SentencePiece-family counterpart of q144's BPE: seed from
-    // frequent substrings, then Viterbi-EM rounds over the
-    // distinct-word relation (codegen kernel segmentation + one keyed
-    // agg per round; driver state = the vocab itself). Since round 13
-    // a FULL-oracle row: the whole hard-EM loop — seed, three Viterbi
-    // forward-DP + backtrack rounds, prune, re-estimate — replays in
-    // DuckDB as unrolled recursive-CTE layers (unigramLearnOracleSql),
-    // so (piece, cost_micro, n_uses) is recomputed end-to-end from raw
-    // text. The self-checks stay as independent evidence: (a) fixture
-    // equality against the sequential in-JVM reference — vocab, costs,
-    // use-counts AND the EM cost trace must match exactly — and (b) at
-    // every scale the hard-EM guarantee: corpus Viterbi cost
-    // non-increasing round over round.
-    "q171_unigram_learn" -> ((s, dir) => {
-      if (SelfCheck.fixtureExists) SelfCheck.once("q171/fixture") {
-        val fx = t(s, SelfCheck.FixtureDir).documents
-        val (gotDf, gotTrace) = UnigramLm.learnVocabWithTrace(
-          fx, col("text"), vocabSize = 80, maxPieceLen = 4, iters = 3)
-        val got = gotDf.collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
-        val wf = UnigramLm.distinctWords(fx, col("text"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
-        val (want, wantTrace) = UnigramLm.learnVocabLocal(
-          wf, vocabSize = 80, maxPieceLen = 4, iters = 3)
-        require(got == want.sortBy(_._1) && gotTrace == wantTrace,
-          s"q171 distributed EM diverges from the sequential reference:\n$got\nvs\n$want")
-        SelfCheck.note(s"fixture vocab (${got.size} pieces) + EM trace " +
-          "identical to sequential Viterbi-EM")
-      }
-      val (m, trace) = UnigramLm.learnVocabWithTrace(
-        t(s, dir).documents, col("text"), vocabSize = 200, maxPieceLen = 4, iters = 3)
-      SelfCheck.every(s"q171/$dir") {
-        val bad = trace.zip(trace.drop(1)).count { case (a, b) => b > a }
-        require(bad == 0, s"q171 EM corpus cost increased: $trace")
-        SelfCheck.note(s"corpus Viterbi cost ${trace.head} → ${trace.last} " +
-          s"micro-nats over ${trace.size} rounds, non-increasing")
-      }
-      m.orderBy(col("n_uses").desc, col("piece"))
-    }),
-
-    // ---------------- greedy subword encode (WordPiece inference) ----------------
-    // Tokenize with the pinned fixture-learned piece set: longest
-    // match at each position, single-char fallback — an in-task
-    // aggregate fold, and a FULL oracle row: DuckDB replays the same
-    // DP as a recursive CTE over (word, position) states.
-    "q172_unigram_encode" -> ((s, dir) => {
-      if (SelfCheck.fixtureExists) SelfCheck.once("q172/fixture") {
-        val fx = t(s, SelfCheck.FixtureDir).documents
-        val learned = UnigramLm.learnVocab(fx, col("text"),
-            vocabSize = 80, maxPieceLen = 4, iters = 3)
-          .filter(length(col("piece")) > 1)
-          .select("piece").collect().map(_.getString(0)).toSet
-        require(learned == UnigramPieces.toSet,
-          s"q172 pinned piece set drifted from the fixture-learned vocab: " +
-            s"learned=${learned.toSeq.sorted} pinned=${UnigramPieces.sorted}")
-        SelfCheck.note(s"pinned piece set ≡ fixture-learned unigram vocab " +
-          s"(${UnigramPieces.size} multi-char pieces)")
-      }
-      val words = UnigramLm.distinctWords(t(s, dir).documents, col("text"))
-      UnigramLm.encodeWords(words, UnigramPieces, maxLen = 4).orderBy("w")
-    }),
-
-    // ---------------- market-basket association rules ----------------
-    // Frequent brand pairs across orders with support / confidence /
-    // lift — pairs generated in-task per basket's distinct item set,
-    // counted in one keyed agg; the oracle runs the quadratic
-    // within-basket self-join instead. Fixed-point (×1e6, floor
-    // division) keeps every derived metric exact integer.
-    "q173_basket_rules" -> ((s, dir) => {
-      val li = t(s, dir).lineitem.select(col("l_orderkey"), col("l_partkey"))
-      val brands = li.join(
-        t(s, dir).part.select(col("p_partkey"), col("p_brand")),
-        li("l_partkey") === col("p_partkey"))
-      Association.pairRules(brands, "l_orderkey", "p_brand", minSupport = 100L)
-        .orderBy("item_a", "item_b")
-    }),
-
-    // ---------------- deterministic corpus split assignment ----------------
-    // Reproducible train/val/test by md5 bucket (80/10/10 in 256ths):
-    // a pure projection of the key — stable under corpus growth,
-    // repartitioning, and engines — audited per (lang, split).
-    "q174_split_assign" -> ((s, dir) =>
-      t(s, dir).documents
-        .select(col("lang"),
-          Mixing.splitAssign(col("doc_id"),
-            Seq(("train", 204), ("val", 26), ("test", 26))).as("split"),
-          TextFns.tokenCount(col("text")).cast("long").as("ntok"))
-        .groupBy(col("lang"), col("split"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("ntok")).as("n_tokens"))
-        .orderBy("lang", "split")),
-
-    // ---------------- arbitrary GROUPING SETS ----------------
-    // q52/q77 cover ROLLUP and CUBE; this is the general form —
-    // one dialect-common text both engines execute verbatim.
-    "q175_grouping_sets" -> ((s, dir) => Graft.sql(s, dir, SqlGroupingSets)),
-
-    // ---------------- per-group MAD robust-dispersion profile ----------------
-    // Exact lower-median rank selection (no interpolation, all
-    // integer arithmetic) → median, MAD, and |v−med| > 3·MAD outlier
-    // counts per language — the robust gate next to q103/q104's
-    // percentile-based ones.
-    "q176_mad_outliers" -> ((s, dir) =>
-      Outliers.madProfile(t(s, dir).documents, col("lang"), col("n_chars"))
-        .select(col("__g").as("lang"), col("n"), col("med"), col("mad"),
-          col("n_outliers"))
-        .orderBy("lang")),
-
-    // ---------------- schema-evolution merged read ----------------
-    // A 100 TB lake has generations of writers: the fixture holds two
-    // parquet generations of the documents table IN ONE DIRECTORY —
-    // gen-1 (even doc_ids) written before `n_chars` existed, gen-2
-    // (odd) with it. `mergeSchema` reconciles the file schemas at
-    // scan time; gen-1 rows surface NULL n_chars, and the per-lang
-    // audit must equal the oracle's recompute from the unsplit source
-    // (null-aware counts/sums prove the union semantics exact).
-    "q177_schema_evolution" -> ((s, dir) => {
-      val src = fixturePath("schemaevo", dir, "documents")
-      Artifact.ensure(src) { tmp =>
-        val d = t(s, dir).documents
-        def writeGen(df: DataFrame, name: String): Unit = {
-          val part = s"$tmp/_$name"
-          df.coalesce(1).write.mode("overwrite").parquet(part)
-          val f = new java.io.File(part).listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          java.nio.file.Files.move(f.toPath,
-            new java.io.File(tmp, s"$name.parquet").toPath)
-          org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(part))
-        }
-        writeGen(d.filter(col("doc_id") % 2 === 0)
-          .select(col("doc_id"), col("lang")), "gen1")
-        writeGen(d.filter(col("doc_id") % 2 === 1)
-          .select(col("doc_id"), col("lang"), col("n_chars")), "gen2")
-      }
-      s.read.option("mergeSchema", "true").parquet(src)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"), count(col("n_chars")).as("n_with"),
-          sum(col("n_chars")).as("sum_chars"))
-        .orderBy("lang")
-    }),
-
-    // ---------------- dictionary tagging (Aho-Corasick) ----------------
-    // The blocklist/topic-phrase scanner: N patterns matched in ONE
-    // automaton pass per document (codegen expression, dictionary
-    // rides the plan as model-sized state) instead of N contains()
-    // scans. ALL occurrences counted, overlapping included ("data
-    // data" twice in "data data data") — the semantics a positional
-    // SQL scan replays exactly and replace()-counting gets wrong. The
-    // dictionary mixes single words, phrases, and a pattern that is a
-    // strict substring of another (exercising the automaton's output
-    // links: every "data data" hit also hits "data" twice).
-    "q200_dictionary_tag" -> ((s, dir) => {
-      Tagging.patternStats(t(s, dir).documents, "lang", col("text"), DictPatterns)
-        .orderBy("lang", "pattern")
-    }),
-
-    // ---------------- MMR diversified retrieval ----------------
-    // Maximal Marginal Relevance over the q33 query: greedy top-5
-    // from a 32-candidate pool, λ=1/2 (ordering ≡ rel − maxSim, both
-    // ×1e6 longs — fully integer, so the oracle replays the greedy
-    // picks EXACTLY as five unrolled argmax layers). Distributed
-    // work: one corpus scan (pool) + one poolN² sim job; the greedy
-    // loop runs over parameter-sized driver state.
-    "q201_mmr_rerank" -> ((s, dir) => {
-      val emb = t(s, dir).embeddings
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head().getSeq[Float](0).toArray
-      Similarity.mmrTopK(emb, "vec_id", "embedding", q, k = 5, poolN = 32,
-          excludeId = 0L)
-        .orderBy("rank")
-    }),
-
-    // ---------------- perplexity-band pruning ----------------
-    // The standard LM-data curation step: score every document with
-    // corpus-LM mean surprisal (q84's engine-exact fixed-point
-    // metric) and keep the middle band per language — the low tail is
-    // boilerplate/repetition, the high tail is noise. Band edges are
-    // EXACT rank positions under a total order (surprisal, doc_id) —
-    // the q176 rank-selection discipline, replayable in SQL; at
-    // data scale the rank windows swap for approx quantile cuts (the
-    // q83 pattern) with the same downstream shape.
-    "q203_perplexity_prune" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      val sur = TextMetrics.unigramSurprisal(docs, "doc_id", col("text"))
-        .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-      val byLang = Window.partitionBy(col("lang"))
-      val ranked = sur
-        .withColumn("__rn", row_number().over(
-          byLang.orderBy(col("avg_surprisal").asc, col("doc_id").asc)))
-        .withColumn("__n", count(lit(1)).over(byLang))
-      ranked
-        .filter(col("__rn") > floor(col("__n") * 0.25).cast("long") &&
-          col("__rn") <= floor(col("__n") * 0.75).cast("long"))
-        .groupBy(col("lang"))
-        .agg(max(col("__n")).as("n_total"), count(lit(1)).as("n_kept"),
-          sum(col("n_tokens")).as("kept_tokens"),
-          min(col("avg_surprisal")).as("band_lo"),
-          max(col("avg_surprisal")).as("band_hi"))
-        .orderBy("lang")
-    }),
-
-    // ---------------- perplexity-band pruning, approx twin ----------------
-    // The DATA-SCALE path of q203 (whose exact per-language rank
-    // window sorts each language on one reducer — Zipf-skewed at
-    // 100 TB): band edges from ONE un-sorted partial-aggregable
-    // percentile_approx pass (#languages-sized output, broadcast
-    // back), filter in the scan stage. No sort, no window — the
-    // q170→q179 exact/approx split, PlanAuditSpec-pinned. Envelope
-    // oracle: the hashed rows are the exact per-language totals plus
-    // the GK-sketch guarantee pinned TRUE per language — each edge's
-    // VALUE-RANK RANGE [#(< edge)+1, #(<= edge)] must intersect the
-    // target rank ± n/accuracy (tie-robust: a clone plateau at an
-    // edge widens the value's own rank range, not the error bound).
-    "q204_perplexity_prune_approx" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      val acc = 10000
-      val sur = materializedOnce(
-        TextMetrics.unigramSurprisal(docs, "doc_id", col("text"))
-          .join(docs.select(col("doc_id"), col("lang")), "doc_id"))
-      val edges = TextMetrics.approxBandEdges(sur, "lang", "avg_surprisal",
-        0.25, 0.75, acc)
-      val sv = col("avg_surprisal")
-      def rankOk(q: Double, below: Column, atOrBelow: Column) = {
-        val tol = col("n_total").cast("double") / acc + 1.0
-        val target = col("n_total").cast("double") * q
-        (below.cast("double") <= target + tol) &&
-          (atOrBelow.cast("double") >= target - tol)
-      }
-      sur.join(broadcast(edges), "lang")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_total"),
-          sum(when(sv < col("edge_lo"), 1L).otherwise(0L)).as("__blo"),
-          sum(when(sv <= col("edge_lo"), 1L).otherwise(0L)).as("__alo"),
-          sum(when(sv < col("edge_hi"), 1L).otherwise(0L)).as("__bhi"),
-          sum(when(sv <= col("edge_hi"), 1L).otherwise(0L)).as("__ahi"),
-          max(col("edge_lo")).as("__elo"), max(col("edge_hi")).as("__ehi"))
-        .select(col("lang"), col("n_total"),
-          rankOk(0.25, col("__blo"), col("__alo")).as("lo_rank_ok"),
-          rankOk(0.75, col("__bhi"), col("__ahi")).as("hi_rank_ok"),
-          (col("__elo") <= col("__ehi")).as("band_ordered"))
-        .orderBy("lang")
-    }),
-
-    // ---------------- SQ8 retrieve + exact re-rank (FULL oracle) ----------------
-    // The production two-stage serve on the persisted SQ8 tier:
-    // stage 1 reads ONLY the packed code column (top-50 by exact
-    // int64 code dot), stage 2 re-ranks those 50 rows by rounded
-    // float cosine. Deterministic end to end — both stages replay in
-    // SQL, so unlike the PQ/IVF rerank shapes this needs no recall
-    // envelope: the quantized candidate stage is exact over the
-    // codes, and the re-rank repairs quantization for the final
-    // ordering.
-    "q206_sq8_rerank" -> ((s, dir) => {
-      val idx = fixturePath("sq8", dir, "embeddings")
-      val emb = t(s, dir).embeddings
-      Similarity.ensureSq8Index(emb, "vec_id", "embedding", idx)
-      Similarity.sq8TopKReranked(s, idx, emb, "vec_id", "embedding",
-        queryId = 0L, k = 10, rerank = 50)
-    }),
-
-    // ---------------- IVF × SQ8 composed index (FULL-oracle envelope) ----------------
-    // The FAISS-IVFSQ layout: code table partitioned by coarse-
-    // quantizer list (directory pruning) storing ONLY packed 1-byte
-    // codes — a query reads (nprobe/nlist) × 1/4 of the float corpus
-    // bytes. The served index has undergone a PARTIAL LIST REBUILD
-    // (its two most-occupied lists retrained from the persisted codes
-    // under the frozen scales — the composed-tier maintenance path,
-    // inside the one-time artifact publish), so the oracle also pins
-    // that a rebuilt composed index serves correctly. Envelope keyed
-    // on SQ8's OWN metric (stronger than the q50 brute-cosine form):
-    // the hashed rows are the UNPRUNED full-corpus SQ8 top-10 —
-    // bit-exact in DuckDB, q197's replay — plus two pruning
-    // guarantees pinned TRUE: recall floor (the probed lists recover
-    // >= 6/10 of the unpruned ranking) and per-rank domination
-    // (pruning can only LOSE candidates — the pruned i-th score never
-    // beats the unpruned i-th score).
-    "q207_ivfsq8_topk" -> ((s, dir) => {
-      val emb = t(s, dir).embeddings
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head().getSeq[Float](0).toArray
-      val idx = fixturePath("ivfsq8r", dir, "embeddings")
-      Artifact.ensure(idx) { tmp =>
-        Similarity.buildIvfSq8Index(emb, "vec_id", "embedding",
-          nlist = 16, tmp)
-        // retrain the two most-occupied lists in place — the codes
-        // are invariant (frozen scales); only list membership moves
-        val top2 = s.read.parquet(s"$tmp/codes")
-          .groupBy(col("__cid")).count()
-          .orderBy(col("count").desc, col("__cid").asc).limit(2)
-          .select(col("__cid")).collect().map(_.getInt(0)).toSeq
-        Similarity.rebuildIvfSq8Lists(s, tmp, "vec_id", top2)
-      }
-      val full = Similarity.sq8TopK(emb, "vec_id", "embedding", 0L, 10)
-      val pruned = Similarity.ivfSq8TopK(s, idx, "vec_id", q, 10,
-        nprobe = 4, excludeId = 0L)
-      val recall = full.select(col("vec_id"))
-        .join(pruned.select(col("vec_id")), Seq("vec_id"), "left_semi")
-        .agg((count(lit(1)) >= 6L).as("ivfsq8_recall_ok"))
-      def ranked(df: DataFrame, prefix: String): DataFrame =
-        df.agg(sort_array(collect_list(struct((-col("qscore")).as("__s"),
-            col("vec_id").as("__id")))).as("a"))
-          .select(posexplode(col("a")).as(Seq("rk", "r")))
-          .select(col("rk"), (-col("r.__s")).as(s"${prefix}_s"))
-      val dominated = ranked(full, "fu").join(ranked(pruned, "pr"), Seq("rk"), "left")
-        .agg(coalesce(every(coalesce(col("pr_s") <= col("fu_s"), lit(true))),
-          lit(true)).as("ivfsq8_dominated_ok"))
-      full.crossJoin(broadcast(recall)).crossJoin(broadcast(dominated))
-        .select(col("vec_id"), col("qscore"),
-          col("ivfsq8_recall_ok"), col("ivfsq8_dominated_ok"))
-        .orderBy(col("qscore").desc, col("vec_id"))
-    }),
-
-    // ---------------- filtered vector search (FULL oracle) ----------------
-    // The filtered-ANN shape every vector store needs, as a
-    // PRE-filter: the SQ8 code scan semi-joins the predicate's id set
-    // BEFORE ranking — exact top-k over the filtered corpus, always
-    // filled when survivors exist (post-filtering an unfiltered top-k
-    // both under-fills and loses the best filtered candidates).
-    // Deterministic integer ranking end to end → bit-exact oracle
-    // (q197's replay + the label predicate). The query vector itself
-    // is label-0's vec 0 — querying ACROSS categories, the normal
-    // query-by-example case.
-    "q208_sq8_filtered" -> ((s, dir) => {
-      val emb = t(s, dir).embeddings
-      val idx = fixturePath("sq8", dir, "embeddings")
-      Similarity.ensureSq8Index(emb, "vec_id", "embedding", idx)
-      Similarity.sq8TopKFiltered(s, idx, "vec_id",
-        emb.filter(col("label") === 1).select(col("vec_id")),
-        queryId = 0L, k = 10)
-    }),
-
-    // ---------------- dictionary redaction (FULL oracle) ----------------
-    // The WRITE side of q200's tagging: every dictionary match
-    // replaced by a token under leftmost-longest non-overlapping
-    // selection (the standard PII-scrub rule — "data data" wins over
-    // "data" at the same start, matches inside a consumed span are
-    // skipped). One automaton pass per row; the oracle replays the
-    // whole pipeline — all-occurrence match starts (q200's recursive
-    // device), the greedy selection (list-filter cursor recursion,
-    // the q171 list-state discipline), and the per-segment string
-    // rebuild — down to the md5 of every redacted document.
-    "q209_dictionary_redact" -> ((s, dir) => {
-      Tagging.redactDocs(t(s, dir).documents, "doc_id", col("text"),
-          DictPatterns, token = "[X]")
-        .select(col("doc_id"), col("n_redactions").cast("long").as("n_redactions"),
-          md5(col("redacted")).as("redacted_fp"),
-          length(col("redacted")).cast("long").as("n_chars_redacted"))
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- corpus datasheet (capstone, FULL oracle) ----------------
-    // The per-language data card a training-data platform publishes
-    // with every corpus release — one wide report composing the
-    // board's exact devices: volume (docs/tokens/chars), exact-dup
-    // pressure (distinct md5 fingerprints, the q29 device), the q26
-    // quality gate pass count, md5 split balance (the q174 device),
-    // and blocklist exposure (total q200-dictionary occurrences).
-    // Every facet is integer/string-exact, so the WHOLE datasheet
-    // replays as one DuckDB query. Two scans: the main aggregate and
-    // the automaton pass.
-    "q210_corpus_datasheet" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      val sp = Mixing.splitAssign(col("doc_id"),
-        Seq("train" -> 204, "val" -> 26, "test" -> 26))
-      val isQ = TextFns.tokenCount(col("text")).between(20, 1000) &&
-        TextFns.distinctTokenRatio(col("text")) > 0.3
-      val main = docs.groupBy(col("lang")).agg(
-        count(lit(1)).as("n_docs"),
-        sum(TextFns.tokenCount(col("text")).cast("long")).as("n_tokens"),
-        sum(length(col("text")).cast("long")).as("sum_chars"),
-        countDistinct(TextFns.fingerprint(col("text"))).as("__nfp"),
-        sum(when(isQ, 1L).otherwise(0L)).as("n_quality"),
-        sum(when(sp === "train", 1L).otherwise(0L)).as("n_train"),
-        sum(when(sp === "val", 1L).otherwise(0L)).as("n_val"),
-        sum(when(sp === "test", 1L).otherwise(0L)).as("n_test"))
-      val tags = Tagging.patternStats(docs, "lang", col("text"), DictPatterns)
-        .groupBy(col("lang"))
-        .agg(sum(col("occurrences")).as("blocklist_hits"))
-      main.join(broadcast(tags), Seq("lang"), "left")
-        .select(col("lang"), col("n_docs"), col("n_tokens"), col("sum_chars"),
-          (col("n_docs") - col("__nfp")).as("n_exact_dups"),
-          col("n_quality"), col("n_train"), col("n_val"), col("n_test"),
-          coalesce(col("blocklist_hits"), lit(0L)).as("blocklist_hits"))
-        .orderBy("lang")
-    }),
-
-    // ---------------- SQ8 batch serve (FULL oracle) ----------------
-    // The q88/q198 broadcast-batch geometry on the code tier: four
-    // probe ids' codes broadcast from the code table, ONE code-column
-    // scan, per-probe top-5 via a rank window (WindowGroupLimit keeps
-    // the cut map-side). Exact integer ranking — the oracle replays
-    // the quantization, the pairwise code dots, and the rank cut.
-    "q211_sq8_batch" -> ((s, dir) => {
-      val idx = fixturePath("sq8", dir, "embeddings")
-      Similarity.ensureSq8Index(t(s, dir).embeddings, "vec_id", "embedding", idx)
-      Similarity.sq8TopKBatch(s, idx, "vec_id",
-          probeIds = Seq(0L, 7L, 13L, 21L), k = 5)
-        .orderBy(col("query_id"), col("qscore").desc, col("nn_id"))
-    }),
-
-    // ---------------- streaming SQ8 vector ingest ----------------
-    // The continuous-ingest family's VECTOR member (q195 = index,
-    // q199 = near-dup): embeddings arrive as a 4-file backlog, one
-    // file per trigger; the planning pass froze the scales sidecar,
-    // each micro-batch lands packed codes in its own batch=<id>
-    // directory (overwrite — retries replace, the q195 exactly-once
-    // discipline), and after the replay the accumulated code table is
-    // BIT-IDENTICAL to the batch-built index, so serving through
-    // sq8TopKIndexed carries q197's bit-exact oracle verbatim.
-    "q212_stream_sq8_ingest" -> ((s, dir) => {
-      val src = ensureEmbBacklog(s, dir)
-      val schema = s.read.parquet(src).schema
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q212").toString
-      val idx = s"$scratch/idx"
-      Similarity.initSq8Scales(t(s, dir).embeddings, "embedding", idx)
-      val embStream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      val query = graft.streaming.StreamOps.sq8CodesSink(embStream, idx,
-        "vec_id", "embedding", s"$scratch/ckpt",
-        Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      query.awaitTermination()
-      SelfCheck.every(s"q212/$dir") {
-        val nb = s.read.parquet(s"$idx/codes")
-          .select("batch").distinct().count()
-        require(nb == 4, s"q212 expected 4 ingested batches, got $nb")
-        SelfCheck.note(s"code table accumulated across $nb micro-batch " +
-          "dirs, then compacted into one base generation; served top-k " +
-          "carries q197's bit-exact oracle")
-      }
-      // table maintenance: fold the 4 committed trigger dirs into one
-      // base generation; the bit-exact serve below reads THROUGH it
-      val folded = graft.streaming.StreamOps.compactIndex(
-        s, s"$idx/codes", s"$scratch/ckpt")
-      require(folded.contains(-1L), s"q212 compaction did not fold: $folded")
-      Similarity.sq8TopKIndexed(s, idx, "vec_id", queryId = 0L, k = 10)
-    }),
-
-    // ---------------- streaming curation capstone ----------------
-    // q189's stream twin — ONE foreachBatch pipeline composing the
-    // incremental family the way a production ingest actually runs:
-    // archive fingerprint anti-join → incremental near-dup gate →
-    // redaction → SQ8 codes, every per-batch effect an overwrite of
-    // its own batch=<id> directory (replay-idempotent; StreamOpsSpec
-    // replays a committed batch byte-identically). Because the
-    // backlog delivers ascending-id batches and every gate references
-    // ALL ingested documents, the accumulated survivor set equals the
-    // q189-style batch device over the whole corpus, so the row
-    // payload (redaction fingerprints + code sums) carries a FULL
-    // oracle; the gate-equivalence booleans ride the row pinned TRUE.
-    "q216_stream_curation" -> ((s, dir) => {
-      val src = ensureDocBacklog(s, dir)
-      val schema = s.read.parquet(src).schema
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q216").toString
-      val emb = t(s, dir).embeddings
-        .select(col("vec_id").as("doc_id"), col("embedding"))
-      Similarity.initSq8Scales(emb, "embedding", s"$scratch/state/sq8")
-      // two files per trigger: the multi-batch accumulation (batch 2's
-      // gates referencing batch 1's state) is exercised with HALF the
-      // per-trigger fixed cost — q199 keeps the 4-trigger form, and
-      // StreamOpsSpec carries the per-batch replay rigor; this row's
-      // job is the end-to-end pipeline under a full oracle (the r14
-      // bench flagged its cost class, not its plan)
-      val docsStream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2).parquet(src)
-      val query = graft.streaming.StreamOps.curationSink(docsStream, emb,
-        s"$scratch/state", "doc_id", "text", "embedding",
-        DictPatterns, token = "[X]", s"$scratch/ckpt",
-        Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-        threshold = 0.6, shingleN = JaccardShingleN)
-      query.awaitTermination()
-      SelfCheck.every(s"q216/$dir") {
-        val nb = new java.io.File(s"$scratch/state/curated").listFiles()
-          .count(f => f.isDirectory && f.getName.startsWith("batch="))
-        require(nb == 2, s"q216 expected 2 ingested batches, got $nb")
-        SelfCheck.note(s"curation pipeline ran $nb micro-batches; " +
-          "survivor payload carries the q189-device full oracle")
-      }
-      val cur = s.read.parquet(s"$scratch/state/curated").drop("batch")
-      val codes = s.read.parquet(s"$scratch/state/sq8/codes").drop("batch")
-        .select(col("doc_id"), col("code_sum"))
-      val rows = cur.join(codes, Seq("doc_id"), "left")
-      // gate-equivalence verdict vs the exact batch device — read off
-      // the PERSISTED survivor artifact ([[sharedCurationExact]]:
-      // fp keep-first ∖ exact-pair later-side drop, built once per
-      // corpus generation), so the benched replay pays two anti-joins
-      // against a cached relation, never the corpus-wide fingerprint
-      // window per rep. Plan-fused 1-row booleans, pinned TRUE.
-      val exact = sharedCurationExact(s, dir)
-      val verdict = rows.select(col("doc_id"))
-        .join(exact, Seq("doc_id"), "left_anti")
-        .agg(count(lit(1)).as("__extra"))
-        .crossJoin(exact.join(rows.select(col("doc_id")),
-            Seq("doc_id"), "left_anti")
-          .agg(count(lit(1)).as("__miss")))
-        .select((col("__extra") === 0L).as("no_extra_survivors"),
-          (col("__miss") === 0L).as("exact_survivors_kept"))
-      rows.crossJoin(broadcast(verdict))
-        .select(col("doc_id"),
-          col("n_redactions").cast("long").as("n_redactions"),
-          md5(col("redacted")).as("redacted_fp"),
-          col("code_sum"),
-          col("no_extra_survivors"), col("exact_survivors_kept"))
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- GraphQL fragments + aliases ----------------
-    // The dialect headroom a real Open Targets docs user hits: their
-    // examples factor row selections into named fragments. q152's
-    // diseaseAssociatedDrugs template re-expressed with the rows
-    // selection in a fragment (which itself spreads a nested drug
-    // fragment) and the connection under a response alias — fragments
-    // expand at PARSE time (resolved AST ≡ inlined, GraphQlSpec) and
-    // the alias renames only the output column, so the rows carry
-    // q152's oracle verbatim.
-    "q215_graphql_fragments" -> ((s, dir) => {
-      val res = graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """query diseaseAssociatedDrugs {
-             disease(efoId: "DIS_BUILDING") {
-               id
-               name
-               meds: knownDrugs {
-                 count
-                 rows { ...drugRow }
-               }
-             }
-           }
-           fragment drugRow on KnownDrug {
-             phase
-             ...drugRef
-           }
-           fragment drugRef on KnownDrug {
-             drug { id name }
-           }""")
-      res.select(col("id").as("disease_id"), col("name").as("disease_name"),
-          col("meds.count").as("n_rows"),
-          posexplode(col("meds.rows")).as(Seq("rn", "r")))
-        .select(col("disease_id"), col("disease_name"), col("n_rows"),
-          (col("rn") + 1).cast("long").as("rn"),
-          col("r.phase").as("phase"),
-          col("r.drug.id").as("drug_id"), col("r.drug.name").as("drug_name"))
-        .orderBy("rn")
-    }),
-
-    // ---------------- IVF centroid-drift report ----------------
-    // The rebuild trigger appendIvfIndex's scaladoc promised: per-list
-    // occupancy + mean residual vs the build-time baseline sidecar,
-    // one vectors-table scan, list-count-sized output. Two lifecycles
-    // measured: the corpus's own fresh index (every delta exactly 0 —
-    // the report must NOT cry wolf) and a drifted lifecycle where a
-    // distribution-shifted clone batch (dim 0 pushed hard — a new data
-    // mode) appends under frozen centroids. Envelope oracle (the
-    // q91/q105 pattern): row counts are DuckDB-computable, the
-    // report's guarantees ride as pinned-TRUE verdicts.
-    "q213_ivf_drift" -> ((s, dir) => {
-      val emb = t(s, dir).embeddings
-      val fresh = fixturePath("ivf", dir, "embeddings")
-      Similarity.ensureIvfIndex(emb, "vec_id", "embedding", nlist = 16, fresh)
-      val ap = fixturePath("ivfdrift", dir, "embeddings")
-      Artifact.ensure(ap) { tmp =>
-        Similarity.buildIvfIndex(emb, "vec_id", "embedding", nlist = 16, tmp)
-        Similarity.appendIvfIndex(s, tmp,
-          emb.select((col("vec_id") + 1000000L).as("vec_id"),
-            transform(col("embedding"),
-              (x, i) => when(i === 0, x + lit(8.0f)).otherwise(x))
-              .as("embedding")),
-          "vec_id", "embedding")
-      }
-      val freshV = Similarity.ivfDriftReport(s, fresh, "embedding")
-        .agg(sum(col("n_now")).as("n_fresh"),
-          (sum(when(col("drifted"), 1L).otherwise(0L)) === 0L)
-            .as("fresh_clean"))
-      val apV = Similarity.ivfDriftReport(s, ap, "embedding")
-        .agg(sum(col("n_now")).as("n_drifted_index"),
-          (sum(when(col("drifted"), 1L).otherwise(0L)) > 0L)
-            .as("drift_flagged"),
-          (sum(when(col("drifted") && col("n_now") <= col("n_build"), 1L)
-            .otherwise(0L)) === 0L).as("flagged_have_appends"))
-      freshV.crossJoin(apV)
-        .select(col("n_fresh"), col("n_drifted_index"), col("fresh_clean"),
-          col("drift_flagged"), col("flagged_have_appends"))
-    }),
-
-    // ---------------- GraphQL score-argument pushdown ----------------
-    // The pushdown the reference client itself missed: the schema
-    // declares scoreThreshold/orderByScore on association connections
-    // but candidate_drugs.py:98-109 fetches the full page and filters
-    // score >= 0.33 client-side. Here the q155 template carries the
-    // threshold INTO the connection fold — the edge relation filters
-    // before the rank-limited collect (P3 semantics at the dialect
-    // layer) and `count` is the filtered connection total.
-    "q214_graphql_score_pushdown" -> ((s, dir) =>
-      graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """{
-             disease(efoId: "DIS_MACHINERY") {
-               associatedTargets(scoreThreshold: 0.33) {
-                 count
-                 rows {
-                   target { id approvedSymbol }
-                   score
-                 }
-               }
-             }
-           }""")
-        .select(col("associatedTargets.count").as("n_rows"),
-          posexplode(col("associatedTargets.rows")).as(Seq("rn", "r")))
-        .select(col("n_rows"), (col("rn") + 1).cast("long").as("rn"),
-          col("r.target.id").as("target_id"),
-          col("r.target.approvedSymbol").as("target_name"),
-          col("r.score").as("score"))
-        .orderBy("rn")),
-
-    // ---------------- binary (1-bit) quantization: two-stage serve (FULL oracle) ----------------
-    // The smallest quantization tier (float -> SQ8 -> PQ -> 1-bit):
-    // per-dimension midpoint binarization packs 64 dims into ONE
-    // int64 word, stage 1 ranks by Hamming distance (xor+popcount,
-    // all codegen'd built-ins), stage 2 re-ranks the top-50 by exact
-    // rounded cosine — the q206 shape at 1/8 of SQ8's scan bytes.
-    // Deterministic end to end (midpoint thresholds are order-
-    // independent min/max stats; bits are exact double comparisons;
-    // Hamming is integer math), so the full serve replays in SQL
-    // with no recall envelope.
-    "q217_binary_rerank" -> ((s, dir) => {
-      Similarity.binaryTopK(t(s, dir).embeddings, "vec_id", "embedding",
-        queryId = 0L, k = 10, rerank = 50)
-    }),
-
-    // ---------------- binary tier: persisted-index serve (FULL oracle) ----------------
-    // The production half: codes + thresholds persist once
-    // (ensureBinaryIndex, atomic under the Artifact protocol), stage 1
-    // reads ONLY the packed int64 code column — 1/32 of the float
-    // bytes — and the floats are touched just for the 50-row re-rank.
-    // Quantization is a pure function of (vector, thresholds), so the
-    // indexed serve is BIT-IDENTICAL to q217's ad-hoc form
-    // (spec-pinned); the oracle is q217's verbatim.
-    "q218_binary_indexed" -> ((s, dir) => {
-      val emb = t(s, dir).embeddings
-      val idx = fixturePath("binq", dir, "embeddings")
-      Similarity.ensureBinaryIndex(emb, "vec_id", "embedding", idx)
-      Similarity.binaryTopKIndexed(s, idx, emb, "vec_id", "embedding",
-        queryId = 0L, k = 10, rerank = 50)
-    }),
-
-    // ---------------- Naive Bayes language ID (trained classifier, FULL oracle) ----------------
-    // The fastText-class lang-ID gate as pure relational algebra:
-    // train on the even-id half (two keyed aggs -> model RELATIONS,
-    // zero driver state), score the odd-id half (broadcast model
-    // join + integer fixed-point log-prob sums — the surprisal
-    // exactness device), argmin per doc with (score, label) ties.
-    // Like the BPE/unigram-LM learners, training itself replays in
-    // SQL, so the trained model's every prediction is a full oracle.
-    "q219_nb_langid" -> ((s, dir) => {
-      val d = t(s, dir).documents
-      NbClassify.nbPredict(d.filter(col("doc_id") % 2 === 0),
-        d.filter(col("doc_id") % 2 === 1), "doc_id", "lang", col("text"))
-    }),
-
-    // ---------------- incremental NB model maintenance (FULL oracle) ----------------
-    // The index family's maintenance story applied to a MODEL: NB's
-    // sufficient statistics are additive counts, so the persisted
-    // model is count relations in batch=<gen> generations — appending
-    // a labeled batch writes one new generation, and predicting from
-    // the accumulated table is BIT-IDENTICAL to retraining on the
-    // union (sum of per-generation counts = counts over the union).
-    // Here: generation 0 = doc_id % 4 == 0, generation 1 = % 4 == 2;
-    // their union is exactly q219's even-id train split, so the
-    // oracle is q219's VERBATIM.
-    "q227_nb_incremental" -> ((s, dir) => {
-      val d = t(s, dir).documents
-      val model = fixturePath("nbmodel", dir, "documents")
-      Artifact.ensure(model) { tmp =>
-        NbClassify.buildNbModel(d.filter(col("doc_id") % 4 === 0),
-          "lang", col("text"), tmp)
-        NbClassify.appendNbModel(d.filter(col("doc_id") % 4 === 2),
-          "lang", col("text"), tmp, gen = 1L)
-      }
-      NbClassify.nbPredictIndexed(s, model,
-        d.filter(col("doc_id") % 2 === 1), "doc_id", "lang", col("text"))
-    }),
-
-    // ---------------- Naive Bayes evaluation report (FULL oracle) ----------------
-    // The confusion matrix + per-class fractions a classifier gate
-    // ships with: one keyed agg over q219's predictions + a
-    // per-actual-class window total.
-    "q220_nb_confusion" -> ((s, dir) => {
-      val d = t(s, dir).documents
-      NbClassify.nbConfusion(
-        NbClassify.nbPredict(d.filter(col("doc_id") % 2 === 0),
-          d.filter(col("doc_id") % 2 === 1), "doc_id", "lang", col("text")),
-        "lang")
-    }),
-
-    // ---------------- GraphQL directives (dialect extension) ----------------
-    // `@skip(if:)` / `@include(if:)` — the two spec-defined
-    // executable directives, resolved at PARSE time (literal or
-    // variable conditions — the q205 discipline): q152's template
-    // with the rows selection behind a variable-driven @include and a
-    // debug field behind @skip(if: true). The resolved AST is
-    // identical to the inlined q152 query (GraphQlSpec pins plan
-    // equality), so the rows carry q152's oracle verbatim.
-    "q221_graphql_directives" -> ((s, dir) => {
-      val res = graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """query diseaseAssociatedDrugs($withRows: Boolean!) {
-             disease(efoId: "DIS_BUILDING") {
-               id
-               name
-               debugName: name @skip(if: true)
-               knownDrugs {
-                 count
-                 rows @include(if: $withRows) {
-                   phase
-                   drug { id name }
-                 }
-               }
-             }
-           }""", Map("withRows" -> "true"))
-      res.select(col("id").as("disease_id"), col("name").as("disease_name"),
-          col("knownDrugs.count").as("n_rows"),
-          posexplode(col("knownDrugs.rows")).as(Seq("rn", "r")))
-        .select(col("disease_id"), col("disease_name"), col("n_rows"),
-          (col("rn") + 1).cast("long").as("rn"),
-          col("r.phase").as("phase"),
-          col("r.drug.id").as("drug_id"), col("r.drug.name").as("drug_name"))
-        .orderBy("rn")
-    }),
-
-    // ---------------- streaming binary-code ingest ----------------
-    // The 1-bit tier's continuous-ingest member (q212's device one
-    // tier smaller): thresholds frozen by a planning pass, 4
-    // micro-batches land packed codes in their own batch= dirs, the
-    // committed generations fold into one base generation, and the
-    // served two-stage top-k reads THROUGH the compacted streamed
-    // table — binarization is pure-function-of-(vector, thresholds),
-    // so the serve carries q217's bit-exact oracle VERBATIM.
-    "q225_stream_binary_ingest" -> ((s, dir) => {
-      val src = ensureEmbBacklog(s, dir)
-      val schema = s.read.parquet(src).schema
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q225").toString
-      val idx = s"$scratch/idx"
-      val emb = t(s, dir).embeddings
-      Similarity.initBinThresholds(emb, "embedding", idx)
-      val embStream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      val query = graft.streaming.StreamOps.binCodesSink(embStream, idx,
-        "vec_id", "embedding", s"$scratch/ckpt",
-        Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      query.awaitTermination()
-      SelfCheck.every(s"q225/$dir") {
-        val nb = s.read.parquet(s"$idx/codes")
-          .select("batch").distinct().count()
-        require(nb == 4, s"q225 expected 4 ingested batches, got $nb")
-        SelfCheck.note(s"binary code table accumulated across $nb " +
-          "micro-batch dirs, compacted, then served q217's oracle")
-      }
-      val folded = graft.streaming.StreamOps.compactIndex(
-        s, s"$idx/codes", s"$scratch/ckpt")
-      require(folded.contains(-1L), s"q225 compaction did not fold: $folded")
-      Similarity.binaryTopKIndexed(s, idx, emb, "vec_id", "embedding",
-        queryId = 0L, k = 10, rerank = 50)
-    }),
-
-    // ---------------- quantization funnel capstone ----------------
-    // The production serving funnel the tier family exists for,
-    // composed end to end: stage 1 cuts the corpus to 200 candidates
-    // by 1-bit Hamming (1/32 of the float bytes), stage 2 re-cuts to
-    // 50 by the exact int64 SQ8 code dot (1/4 bytes, restricted to
-    // stage 1's survivors), stage 3 ranks the final 10 by exact
-    // rounded cosine. Every stage is deterministic (order-independent
-    // sidecar stats, integer candidate math, rounded float final), so
-    // the whole three-tier funnel replays in SQL — a FULL oracle over
-    // a composition most vector stores can't even explain.
-    "q226_quant_funnel" -> ((s, dir) => {
-      val emb = t(s, dir).embeddings
-      val thr = Similarity.binThresholds(emb, "embedding")
-      val scales = Similarity.sq8Scales(emb, "embedding")
-      val q0 = emb.filter(col("vec_id") === 0)
-        .select(Similarity.binQuantize(col("embedding"), thr).as("b"),
-          Similarity.sq8Quantize(col("embedding"), scales).as("s"),
-          col("embedding"))
-        .head()
-      val qBin = q0.getSeq[Long](0)
-      val qSq8 = q0.getSeq[Long](1).toArray
-      val qv = q0.getSeq[Float](2).toArray
-      val s1 = emb.filter(col("vec_id") =!= 0)
-        .select(col("vec_id"),
-          Similarity.binHamming(Similarity.binQuantize(col("embedding"), thr),
-            typedlit(qBin)).as("hamming"))
-        .orderBy(col("hamming").asc, col("vec_id").asc)
-        .limit(200)
-      val s2 = emb.join(broadcast(s1), "vec_id")
-        .select(col("vec_id"), col("hamming"),
-          aggregate(zip_with(Similarity.sq8Quantize(col("embedding"), scales),
-              typedlit(qSq8), (a, b) => a * b),
-            lit(0L), (acc, v) => acc + v).as("qscore"))
-        .orderBy(col("qscore").desc, col("vec_id").asc)
-        .limit(50)
-      emb.join(broadcast(s2), "vec_id")
-        .select(col("vec_id"),
-          round(VecFns.cosine(col("embedding"), typedlit(qv)), 6).as("cosine"),
-          col("qscore"), col("hamming"))
-        .orderBy(col("cosine").desc, col("vec_id").asc)
-        .limit(10)
-    }),
-
-    // ---------------- JL random projection + re-rank (FULL oracle) ----------------
-    // The embedding-width reducer a 100 TB ANN tier runs before
-    // quantizing: a dense ±1 JL matrix from the md5 sign device
-    // (engine-identical digests — the "random" matrix replays in
-    // SQL), inputs quantized to 1e-6 fixed point so every projected
-    // coordinate is an exact integer dot. Used the only way a 4×
-    // width cut is honest — as a CANDIDATE GENERATOR: stage 1 cuts to
-    // 50 by integer L2 in the 16-dim space (at 64→16, ε≈0.57 fully
-    // scrambles a top-10 ORDER on weakly-clustered data, which is why
-    // the raw projected ranking is not the product), stage 2 re-ranks
-    // by exact rounded cosine. Deterministic end to end.
-    "q228_jl_projection" -> ((s, dir) => {
-      val emb = t(s, dir).embeddings
-      val cands = Similarity.projectedTopK(emb, "vec_id", "embedding",
-        inDim = 64, outDim = 16, seed = 7L, queryId = 0L, k = 50)
-      val qv = emb.filter(col("vec_id") === 0)
-        .select("embedding").head().getSeq[Float](0).toArray
-      emb.join(broadcast(cands), "vec_id")
-        .select(col("vec_id"),
-          round(VecFns.cosine(col("embedding"), typedlit(qv)), 6).as("cosine"),
-          col("pl2"))
-        .orderBy(col("cosine").desc, col("vec_id").asc)
-        .limit(10)
-    }),
-
-    // ---------------- near-dup point-serve lookup (FULL-oracle envelope) ----------------
-    // The online-QUERY member of the near-dup family — "find THIS
-    // document's near-dups" against the standing archive, what a
-    // dedup service answers per request (self-join q31 / incremental
-    // q183 / streaming q199 cover the batch forms). Bounded probe
-    // batch banded under the archive's own parameters, ONE broadcast
-    // band join (the archive is never re-banded or self-joined),
-    // exact-Jaccard verification. Envelope: rows are the EXACT
-    // (probe, neighbor) pairs off the persisted pair artifact
-    // (both orientations — a probe can be either end), verdicts
-    // pinned TRUE: the lookup output is a SUBSET of exact (the
-    // verify stage is exact) with the q31 recall floor.
-    "q230_neardup_lookup" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      // stride 40: a probe set that intersects the pair relation at
-      // BOTH driver scales (sf0.01: 13 probes, >= 1 hit; sf0.1: 125
-      // probes — under the serving cap — with 12 hits)
-      val probes = docs.filter(col("doc_id") % 40 === 0)
-      val sh = sharedShingles(s, dir)
-      val archBands = materializedOnce(Dedup.minhashBands(
-        Dedup.minhashSignaturesFromShingles(sh, k = 32,
-          shingleN = JaccardShingleN)))
-      val got = materializedOnce(Dedup.nearDupLookup(probes, "doc_id", "text",
-        sh, archBands, threshold = 0.6, shingleN = JaccardShingleN))
-      val exact = sharedPairs(s, dir)
-      val pid = probes.select(col("doc_id").as("__p"))
-      val exLookup = materializedOnce(
-        exact.join(pid, col("id_a") === col("__p"), "left_semi")
-          .select(col("id_a").as("probe_id"), col("id_b").as("doc_id"),
-            col("jaccard"))
-        .unionByName(
-          exact.join(pid, col("id_b") === col("__p"), "left_semi")
-            .select(col("id_b").as("probe_id"), col("id_a").as("doc_id"),
-              col("jaccard"))))
-      val verdict = subsetRecallVerdict(
-        got.select(col("probe_id").as("id_a"), col("doc_id").as("id_b")),
-        exLookup.select(col("probe_id").as("id_a"), col("doc_id").as("id_b")),
-        floor = 0.8)
-      exLookup.crossJoin(broadcast(verdict))
-        .select(col("probe_id"), col("doc_id"), col("jaccard"),
-          col("subset_of_exact"), col("recall_ok"))
-        .orderBy("probe_id", "doc_id")
-    }),
-
-    // ---------------- GraphQL union object (inline fragments) ----------------
-    // The docs-style Apollo query every generated client emits at the
-    // search root: inline-fragment arms over `SearchResult.object`
-    // (EntityUnionType = Target | Drug | Disease, opentargets.schema:
-    // 502,1290), resolved as the union tag + one nullable struct per
-    // arm (SURVEY §1.2) inside a rank-limited page. The flat
-    // projection dissects tag and every arm field, so the oracle
-    // hashes the whole union encoding.
-    "q231_graphql_search_union" -> ((s, dir) =>
-      graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """{
-             search(queryString: "r", page: {index: 0, size: 50}) {
-               total
-               hits { id entity object {
-                 __typename
-                 ... on Target { approvedSymbol bioType }
-                 ... on Drug { name drugType isApproved }
-                 ... on Disease { name } } }
-             }
-           }""")
-        .select(col("total"), posexplode(col("hits")).as(Seq("rn", "r")))
-        .select(col("total"), (col("rn") + 1).cast("long").as("rn"),
-          col("r.id").as("id"), col("r.entity").as("entity"),
-          col("r.object.__typename").as("tname"),
-          col("r.object.Target.approvedSymbol").as("t_sym"),
-          col("r.object.Target.bioType").as("t_bio"),
-          col("r.object.Drug.name").as("d_name"),
-          col("r.object.Drug.drugType").as("d_type"),
-          // string-normalized: a nullable BOOLEAN reads as NaN from
-          // DuckDB but None from parquet — the hash would split on
-          // representation, not value
-          col("r.object.Drug.isApproved").cast("string").as("d_appr"),
-          col("r.object.Disease.name").as("s_name"))
-        .orderBy("rn")),
-
-    // ---------------- GraphQL facets root ----------------
-    // The schema's remaining search feature (opentargets.schema:
-    // 1161-1173): category-narrowed facet hits with per-category
-    // counts over the FULL query scope — the facet-navigation
-    // contract. Flat projection: each hit row carries the three
-    // category counts dissected out of the categories array.
-    "q232_graphql_facets" -> ((s, dir) =>
-      graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """{
-             facets(queryString: "r", category: "disease") {
-               total
-               hits { id label category }
-               categories { name total }
-             }
-           }""")
-        .select(col("total"), posexplode(col("hits")).as(Seq("rn", "r")),
-          col("categories"))
-        .select(col("total"), (col("rn") + 1).cast("long").as("rn"),
-          col("r.id").as("id"), col("r.label").as("label"),
-          col("r.category").as("category"),
-          element_at(filter(col("categories"),
-            c => c.getField("name") === lit("disease")), 1)
-            .getField("total").as("n_disease"),
-          element_at(filter(col("categories"),
-            c => c.getField("name") === lit("target")), 1)
-            .getField("total").as("n_target"),
-          element_at(filter(col("categories"),
-            c => c.getField("name") === lit("drug")), 1)
-            .getField("total").as("n_drug"))
-        .orderBy("rn")),
-
-    // ---------------- CDC-boundary segment dedup ----------------
-    // q98's alignment-robust twin: a repeated span SHIFTED between
-    // documents (here, every document re-ingested behind a one-word
-    // prefix — the crawl re-publication mode) defeats fixed-stride
-    // segmentation entirely, but content-defined boundaries re-align
-    // after the first chunk, so all interior chunks dedup away
-    // (SegmentOpsSpec pins the contrast). FULL oracle: DuckDB replays
-    // the CDC device (q185), the fingerprint keep-first, and the
-    // position-ordered reassembly.
-    "q233_cdc_segment_dedup" -> ((s, dir) => {
-      val docs = t(s, dir).documents.select(col("doc_id"), col("text"))
-      val corpus = docs.unionByName(docs.select(
-        (col("doc_id") + lit(1000000L)).as("doc_id"),
-        concat(lit("zq "), col("text")).as("text")))
-      SegmentOps.dedupSegmentsCdc(corpus, "doc_id", col("text"),
-          boundary256 = 32)
-        .select(col("doc_id"), col("n_kept"), col("n_dropped"),
-          md5(col("clean_text")).as("clean_fp"))
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- incremental PQ index append ----------------
-    // The last ANN tier to gain a maintenance path: 3/4 of the
-    // embeddings train the codebooks and build the code table; the
-    // remaining quarter APPENDS under the frozen codebook sidecar
-    // (Similarity.appendPqIndex — spec pins appended ≡ rebuilt with
-    // the same codebooks, pre-append files byte-untouched). The whole
-    // lifecycle runs inside one atomic artifact publish, so the query
-    // is idempotent. Envelope oracle (q148's pattern): rows are the
-    // exact L2 top-10 over the FULL corpus; verdicts pin the appended
-    // index's ADC recall floor and exact-re-rank domination.
-    "q234_pq_append_serve" -> ((s, dir) => {
-      val emb = t(s, dir).embeddings
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head().getSeq[Float](0).toArray
-      val idx = fixturePath("pqapp", dir, "embeddings")
-      def ok(p: String) =
-        Artifact.complete(s"$p/codes") && Artifact.complete(s"$p/codebooks")
-      Artifact.ensure(idx, ok) { tmp =>
-        Similarity.buildPqIndex(emb.filter(col("vec_id") % 4 =!= 3),
-          "vec_id", "embedding", numSub = 8, k = 16, tmp)
-        Similarity.appendPqIndex(s, tmp,
-          emb.filter(col("vec_id") % 4 === 3), "vec_id", "embedding")
-      }
-      val exact = emb.filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), round(sqrt(
-          VecFns.dot(col("embedding"), col("embedding"))
-            - lit(2.0) * VecFns.dot(col("embedding"), typedlit(q))
-            + lit(q.map(x => x.toDouble * x).sum)), 6).as("l2"))
-        .orderBy(col("l2").asc, col("vec_id").asc).limit(10)
-      val pq = Similarity.pqTopK(s, idx, emb, "vec_id", "embedding", q, 10,
-        rerank = 100, excludeId = 0L)
-      def ranked(df: DataFrame, prefix: String): DataFrame =
-        df.agg(sort_array(collect_list(struct(col("l2").as("__d"),
-            col("vec_id").as("__id")))).as("a"))
-          .select(posexplode(col("a")).as(Seq("rk", "r")))
-          .select(col("rk"), col("r.__d").as(s"${prefix}_d"))
-      val dominated = ranked(exact, "ex").join(ranked(pq, "pq"), Seq("rk"))
-        .agg(coalesce(every(col("pq_d") >= col("ex_d") - 1e-9), lit(true))
-          .as("pq_recall_dominated_ok"))
-      val recall = exact.select(col("vec_id"))
-        .join(pq.select(col("vec_id")), Seq("vec_id"), "left_semi")
-        .agg((count(lit(1)) >= 6L).as("pq_append_recall_ok"))
-      exact.crossJoin(broadcast(recall)).crossJoin(broadcast(dominated))
-        .select(col("vec_id"), col("l2"), col("pq_append_recall_ok"),
-          col("pq_recall_dominated_ok"))
-        .orderBy(col("l2").asc, col("vec_id"))
-    }),
-
-    // ---------------- GraphQL search aggregations ----------------
-    // SearchResultAggs (opentargets.schema:1304-1312): entity facet
-    // counts with nested categories riding next to a rank-limited
-    // page — aggregations always cover the FULL match set (one keyed
-    // agg over the dimension union). The flat projection dissects
-    // every aggregate and the lone-category convention.
-    "q235_graphql_search_aggs" -> ((s, dir) =>
-      graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """{
-             search(queryString: "r", page: {index: 0, size: 10}) {
-               total
-               aggregations { total
-                 entities { name total categories { name total } } }
-               hits { id entity }
-             }
-           }""")
-        .select(col("total"), col("aggregations"),
-          posexplode(col("hits")).as(Seq("rn", "r")))
-        .select(col("total"), (col("rn") + 1).cast("long").as("rn"),
-          col("r.id").as("id"), col("r.entity").as("entity"),
-          col("aggregations.total").as("agg_total"),
-          element_at(filter(col("aggregations.entities"),
-            e => e.getField("name") === lit("disease")), 1)
-            .getField("total").as("n_disease"),
-          element_at(filter(col("aggregations.entities"),
-            e => e.getField("name") === lit("target")), 1)
-            .getField("total").as("n_target"),
-          element_at(filter(col("aggregations.entities"),
-            e => e.getField("name") === lit("drug")), 1)
-            .getField("total").as("n_drug"),
-          element_at(element_at(filter(col("aggregations.entities"),
-            e => e.getField("name") === lit("drug")), 1)
-            .getField("categories"), 1)
-            .getField("total").as("drug_cat_total"))
-        .orderBy("rn")),
-
-    // ---------------- GraphQL mapIds root ----------------
-    // The schema's bulk term-to-ID utility (opentargets.schema:
-    // 1176-1181): a term batch rides as a broadcast relation into ONE
-    // substring-match scan (the S4 batch-lookup discipline — never a
-    // scan per term); mappings keep request order and a zero-hit term
-    // still emits (empty hits). posexplode_outer keeps that empty
-    // mapping as a null-rn row, so the oracle pins it.
-    "q236_graphql_mapids" -> ((s, dir) =>
-      graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """{
-             mapIds(queryTerms: ["machinery", "zzqq", "lavender"]) {
-               total
-               mappings { term hits { id name entity } }
-             }
-           }""")
-        .select(col("total"), posexplode(col("mappings")).as(Seq("m0", "mp")))
-        .select(col("total"), (col("m0") + 1).cast("long").as("ord"),
-          col("mp.term").as("term"), col("mp.hits").as("hits"))
-        .select(col("total"), col("ord"), col("term"),
-          posexplode_outer(col("hits")).as(Seq("h0", "hit")))
-        .select(col("total"), col("ord"), col("term"),
-          (col("h0") + 1).cast("long").as("rn"),
-          col("hit.id").as("id"), col("hit.name").as("name"),
-          col("hit.entity").as("entity"))
-        .orderBy("ord", "rn")),
-
-    // ---------------- PQ codebook-drift report ----------------
-    // The q213 lifecycle one tier over: a fresh PQ index reports
-    // exactly-zero per-subspace error deltas (the recomputation is
-    // engine-exact), and a corpus grown by a dim-0-shifted mode flags
-    // subspace 0 ALONE — the shifted dimension lives in the first
-    // subspace, and duplicated values leave the other subspaces'
-    // mean error untouched. Envelope oracle (verdicts pinned TRUE,
-    // n accounted).
-    "q237_pq_drift" -> ((s, dir) => {
-      val emb = t(s, dir).embeddings
-      val idx = fixturePath("pq", dir, "embeddings")
-      Similarity.ensurePqIndex(emb, "vec_id", "embedding",
-        numSub = 8, k = 16, idx)
-      val freshV = Similarity.pqDriftReport(s, idx, emb, "embedding")
-        .agg(sum(col("n_now")).as("n_fresh"),
-          (sum(when(col("drifted"), 1L).otherwise(0L)) === 0L)
-            .as("fresh_clean"),
-          (sum(abs(col("resid_delta_e6"))) === 0L).as("fresh_delta_zero"))
-      val shifted = emb.select(col("vec_id"), col("embedding"))
-        .unionByName(emb.select((col("vec_id") + 1000000L).as("vec_id"),
-          transform(col("embedding"),
-            (x, i) => when(i === 0, x + lit(8.0f)).otherwise(x))
-            .as("embedding")))
-      val driftV = Similarity.pqDriftReport(s, idx, shifted, "embedding")
-        .agg((sum(when(col("drifted"), 1L).otherwise(0L)) === 1L)
-            .as("one_sub_flagged"),
-          (max(when(col("drifted"), col("sub"))) === 0L)
-            .as("flagged_is_shifted_sub"))
-      freshV.crossJoin(driftV)
-        .select(col("n_fresh"), col("fresh_clean"), col("fresh_delta_zero"),
-          col("one_sub_flagged"), col("flagged_is_shifted_sub"))
-    }),
-
-    // ---------------- binary threshold-drift report ----------------
-    // FULL oracle, unlike the k-means tiers: thresholds are
-    // order-independent midpoints, so DuckDB re-derives the BUILD
-    // side's sidecar from the build subset and the report's every
-    // value replays — per-dim frozen threshold vs the grown corpus's
-    // midpoint (the appended quarter shifted on dim 0 in DOUBLE
-    // precision, both engines computing the identical IEEE values).
-    "q238_bin_drift" -> ((s, dir) => {
-      val emb = t(s, dir).embeddings.select(col("vec_id"), col("embedding"))
-      val idx = fixturePath("binb", dir, "embeddings")
-      def ok(p: String) = Artifact.complete(s"$p/codes") &&
-        Artifact.complete(s"$p/thresholds")
-      Artifact.ensure(idx, ok) { tmp =>
-        Similarity.buildBinaryIndex(emb.filter(col("vec_id") % 4 =!= 3),
-          "vec_id", "embedding", tmp)
-      }
-      val current = emb
-        .select(col("vec_id"),
-          col("embedding").cast("array<double>").as("embedding"))
-        .unionByName(emb.filter(col("vec_id") % 4 === 3)
-          .select((col("vec_id") + 1000000L).as("vec_id"),
-            transform(col("embedding").cast("array<double>"),
-              (x, i) => when(i === 0, x + lit(8.0)).otherwise(x))
-              .as("embedding")))
-      Similarity.binDriftReport(s, idx, current, "embedding")
-        .select(col("dim"), round(col("thr"), 6).as("thr"),
-          round(col("mid_now"), 6).as("mid_now"),
-          col("delta"), col("drifted"))
-        .orderBy("dim")
-    }),
-
-    // ---------------- JL kernel, SQL-pinned ----------------
-    // The production JL path (Similarity.randomProjectPacked — the
-    // sign matrix as ONE reference object riding a custom expression,
-    // per-row integer matvec, measured 24-104x the joined form at
-    // production width, SCALING.md r15) hash-compared COORDINATE BY
-    // COORDINATE against the md5 sign device replayed in SQL — the
-    // strongest statement that the fast kernel computes exactly the
-    // operator it replaces (q228 pins the literal path to the same
-    // device; SimilaritySpec pins all three paths pairwise).
-    "q239_jl_kernel" -> ((s, dir) =>
-      t(s, dir).embeddings.select(col("vec_id"),
-          posexplode(Similarity.randomProjectPacked(col("embedding"),
-            64, 16, 7L)).as(Seq("j", "p")))
-        .select(col("vec_id"), col("j").cast("long").as("j"), col("p"))
-        .orderBy("vec_id", "j")),
-
-    // ---------------- incremental CDC-segment dedup ----------------
-    // q233's archive twin (q181 is the fixed-stride incremental
-    // form): history's chunk FINGERPRINTS live in a persisted
-    // archive; the batch carries fresh quarter docs PLUS one-word-
-    // shifted re-publications of history docs — the cross-
-    // batch/archive duplication mode fixed strides structurally
-    // miss. Archived chunk content drops outright (history is
-    // canonical, caught through the shift because CDC boundaries
-    // re-align); archive-fresh content keep-firsts within the batch.
-    // The operator also lands the batch's novel fingerprints as its
-    // own archive GENERATION (batch=0 here; pre-existing generations
-    // byte-identical, retry overwrite-idempotent — spec-pinned in
-    // SegmentOpsSpec); scratch archive per call, so the append
-    // never poisons a later rep. FULL oracle: DuckDB replays the CDC
-    // device, the archive probe, the fresh keep-first, and the
-    // reassembly fingerprint.
-    "q244_cdc_dedup_incremental" -> ((s, dir) => {
-      val docs = t(s, dir).documents.select(col("doc_id"), col("text"))
-      val history = docs.filter(col("doc_id") % 4 =!= 3)
-      val batch = docs.filter(col("doc_id") % 4 === 3)
-        .unionByName(history.filter(col("doc_id") % 8 === 0).select(
-          (col("doc_id") + lit(1000000L)).as("doc_id"),
-          concat(lit("zq "), col("text")).as("text")))
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q244").toString
-      val archPath = s"$scratch/chunk_archive"
-      SegmentOps.bootstrapCdcChunkArchive(history, "doc_id", col("text"),
-        boundary256 = 32, archPath)
-      SegmentOps.dedupSegmentsCdcIncremental(batch, "doc_id",
-          col("text"), boundary256 = 32, archPath, batchId = 0L)
-        .select(col("doc_id"), col("n_kept"), col("n_dropped"),
-          md5(col("clean_text")).as("clean_fp"))
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- binary re-bin lifecycle ----------------
-    // q237's pattern on the binary tier, with the REMEDY in the loop:
-    // fresh index reads clean (exact-zero deltas), a dim-0-shifted
-    // appended mode flags dim 0, then rebinBinaryIndex freezes new
-    // midpoints + re-codes in one scan each — and the report reads
-    // exactly-zero again. FULL oracle end to end (q238's property:
-    // every value is order-independent IEEE min/max arithmetic, so
-    // DuckDB replays all three lifecycle states bit-exactly —
-    // including the REBUILT thresholds). Scratch index per call: the
-    // rebin mutates it, so no artifact reuse.
-    "q245_bin_rebin" -> ((s, dir) => {
-      val emb = t(s, dir).embeddings.select(col("vec_id"), col("embedding"))
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q245").toString
-      val idx = s"$scratch/idx"
-      val build = emb.filter(col("vec_id") % 4 =!= 3)
-        .select(col("vec_id"),
-          col("embedding").cast("array<double>").as("embedding"))
-      Similarity.buildBinaryIndex(build, "vec_id", "embedding", idx)
-      val grown = emb
-        .select(col("vec_id"),
-          col("embedding").cast("array<double>").as("embedding"))
-        .unionByName(emb.filter(col("vec_id") % 4 === 3)
-          .select((col("vec_id") + 1000000L).as("vec_id"),
-            transform(col("embedding").cast("array<double>"),
-              (x, i) => when(i === 0, x + lit(8.0)).otherwise(x))
-              .as("embedding")))
-      // report plans embed the threshold sidecar as literals at call
-      // time, so each lifecycle state's report is immune to the later
-      // mutation
-      val r0 = Similarity.binDriftReport(s, idx, build, "embedding")
-        .select(col("dim"), col("delta").as("delta_fresh"),
-          col("drifted").as("drifted_fresh"))
-      // bring the code table to the grown corpus under the FROZEN
-      // thresholds (the append path), then measure the drift
-      Similarity.appendBinaryIndex(s, idx,
-        grown.join(build.select("vec_id"), Seq("vec_id"), "left_anti"),
-        "vec_id", "embedding")
-      val r1 = Similarity.binDriftReport(s, idx, grown, "embedding")
-        .select(col("dim"), round(col("thr"), 6).as("thr_frozen"),
-          col("delta").as("delta_drift"),
-          col("drifted").as("drifted_drift"))
-      Similarity.rebinBinaryIndex(s, idx, grown, "vec_id", "embedding")
-      val r2 = Similarity.binDriftReport(s, idx, grown, "embedding")
-        .select(col("dim"), round(col("thr"), 6).as("thr_rebinned"),
-          col("delta").as("delta_rebinned"),
-          col("drifted").as("drifted_rebinned"))
-      r0.join(r1, "dim").join(r2, "dim").orderBy("dim")
-    }),
-
-    // ---------------- streaming CDC-segment dedup ----------------
-    // The alignment-robust family's continuous-ingest member (q233
-    // batch / q244 incremental / this), on the q195/q199 backlog
-    // device: 4 files, one per trigger; each batch's content-defined
-    // chunks drop where their fingerprint was seen in ANY prior
-    // batch and keep-first within the batch; per-batch cleaned rows
-    // and novel-fingerprint generations land exactly-once (overwrite
-    // own-generation). FULL oracle: the streamed composition equals
-    // a GLOBAL keep-first in (batch, doc, position) order — DuckDB
-    // replays the backlog's id-range bucketing, the CDC device, and
-    // the ordered keep-first in one window.
-    "q246_stream_cdc_dedup" -> ((s, dir) => {
-      val src = ensureDocBacklog(s, dir)
-      val schema = s.read.parquet(src).schema
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q246").toString
-      val docsStream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      val query = graft.streaming.StreamOps.cdcSegmentsSink(docsStream,
-        s"$scratch/state", "doc_id", "text", s"$scratch/ckpt",
-        Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-        boundary256 = 32)
-      query.awaitTermination()
-      SelfCheck.every(s"q246/$dir") {
-        val nb = new java.io.File(s"$scratch/state/clean").listFiles()
-          .count(f => f.isDirectory && f.getName.startsWith("batch="))
-        require(nb == 4, s"q246 expected 4 ingested batches, got $nb")
-        SelfCheck.note("cleaned rows accumulated across 4 triggers, " +
-          "folded to one base generation; streamed composition ≡ the " +
-          "oracle's global (batch, doc, position) keep-first")
-      }
-      // table maintenance: the clean relation (the read path) folds
-      // per run; the fingerprint archive folds once per session (the
-      // q199 billing discipline)
-      val folded = graft.streaming.StreamOps.compactIndex(
-        s, s"$scratch/state/clean", s"$scratch/ckpt")
-      require(folded.contains(-1L),
-        s"q246 clean compaction did not fold: $folded")
-      SelfCheck.once(s"q246/statefold/$dir") {
-        val f2 = graft.streaming.StreamOps.compactIndex(
-          s, s"$scratch/state/chunks", s"$scratch/ckpt")
-        require(f2.contains(-1L),
-          s"q246 chunks compaction did not fold: $f2")
-      }
-      s.read.parquet(s"$scratch/state/clean").drop("batch")
-        .select(col("doc_id"), col("n_kept"), col("n_dropped"),
-          md5(col("clean_text")).as("clean_fp"))
-        .orderBy("doc_id")
-    }),
-
-    // ---------------- GraphQL geneOntologyTerms root ----------------
-    // The schema's last batch-lookup root (opentargets.schema:
-    // 1189-1192): a GO-id batch rides as ONE broadcast-joined
-    // exact-match scan of the term catalog, and the result list is
-    // POSITIONAL — request order kept, a missing id emitting a NULL
-    // entry (the element type is nullable, `[GeneOntologyTerm]!`,
-    // unlike the other batch roots' `[X!]!`). posexplode keeps the
-    // null entry as a null-id row at its request position; the
-    // oracle replays the catalog and the positional left join.
-    "q240_graphql_go_terms" -> ((s, dir) =>
-      graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """{
-             geneOntologyTerms(
-                 goIds: ["GO_BRAND_31", "GO_NOPE", "GO_BRAND_13"]) {
-               id name
-             }
-           }""")
-        .select(posexplode(col("geneOntologyTerms")).as(Seq("i", "g")))
-        .select((col("i") + 1).cast("long").as("ord"),
-          col("g.id").as("id"), col("g.name").as("name"))
-        .orderBy("ord")),
-
-    // ---------------- GraphQL meta root ----------------
-    // API metadata (opentargets.schema:1118 → Meta :1013-1017): the
-    // name scalar plus the apiVersion / dataVersion objects,
-    // selection-shaped. dataVersion is a REAL one-row aggregate over
-    // orders (latest order date = the data cut, row count = the load
-    // iteration), so the oracle replays a computation, not an echo.
-    "q241_graphql_meta" -> ((s, dir) =>
-      graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """{
-             meta {
-               name
-               apiVersion { x y z }
-               dataVersion { year month iteration }
-             }
-           }""")
-        .select(col("name"),
-          col("apiVersion.x").as("x"), col("apiVersion.y").as("y"),
-          col("apiVersion.z").as("z"),
-          col("dataVersion.year").as("year"),
-          col("dataVersion.month").as("month"),
-          col("dataVersion.iteration").as("iteration"))),
-
-    // ---------------- GraphQL associationDatasources ----------------
-    // The argument-less EvidenceSource catalog (opentargets.schema:
-    // 1183-1184): distinct (returnflag, linestatus) datasources
-    // grouped by flag into datatypes — a many-to-one the oracle
-    // checks. The view is a map-side-combined distinct over two
-    // 1-char columns: catalog cost at any corpus scale.
-    "q242_graphql_datasources" -> ((s, dir) =>
-      graft.api.GraphQl.execute(kgIndexed(s, dir),
-        "{ associationDatasources { datasource datatype } }")
-        .select(posexplode(col("associationDatasources")).as(Seq("i", "d")))
-        .select((col("i") + 1).cast("long").as("ord"),
-          col("d.datasource").as("datasource"),
-          col("d.datatype").as("datatype"))
-        .orderBy("ord")),
-
-    // ---------------- GraphQL interactionResources ----------------
-    // The second catalog root (opentargets.schema:1186-1187): one
-    // entry per region, the version counting its nations — a real
-    // grouped aggregate behind a static-catalog API.
-    "q243_graphql_interactions" -> ((s, dir) =>
-      graft.api.GraphQl.execute(kgIndexed(s, dir),
-        "{ interactionResources { sourceDatabase databaseVersion } }")
-        .select(posexplode(col("interactionResources")).as(Seq("i", "d")))
-        .select((col("i") + 1).cast("long").as("ord"),
-          col("d.sourceDatabase").as("source_db"),
-          col("d.databaseVersion").as("db_version"))
-        .orderBy("ord")),
-
-    // ---------------- k-anonymity audit ----------------
-    // Re-identification risk the redaction pass can't see: rows
-    // identifiable by the COMBINATION of innocuous attributes. One
-    // keyed agg over the quasi-identifier tuple (lang, source,
-    // n_chars coarsened to centuries — the generalization step a
-    // failing audit prescribes); classes under k=5 flag `at_risk`.
-    "q222_k_anonymity" -> ((s, dir) => {
-      Quality.kAnonymity(
-        t(s, dir).documents.select(col("lang"), col("source"),
-          (floor(col("n_chars") / 100) * 100).as("chars_bucket")),
-        Seq("lang", "source", "chars_bucket"), k = 5)
-    }),
-
-    // ---------------- l-diversity audit ----------------
-    // The k-anonymity complement: a class of >= k rows that all share
-    // ONE sensitive value still leaks it. Same single-shuffle agg with
-    // a count-distinct of the sensitive attribute (here `source`
-    // plays the sensitive role against the (lang, chars_bucket)
-    // quasi-identifier).
-    "q223_l_diversity" -> ((s, dir) => {
-      Quality.lDiversity(
-        t(s, dir).documents.select(col("lang"), col("source"),
-          (floor(col("n_chars") / 100) * 100).as("chars_bucket")),
-        Seq("lang", "chars_bucket"), sensitive = "source", l = 3)
-    }),
-
-    // ---------------- ORC source/sink round-trip ----------------
-    // The q97 JSONL device on Spark's OTHER native columnar format:
-    // write a filtered projection as ORC, read it back, aggregate —
-    // the oracle recomputes from the parquet source, so the row
-    // values prove the ORC write+read preserved every row and value.
-    "q224_orc_roundtrip" -> ((s, dir) => {
-      val step = t(s, dir).documents.filter(col("n_chars") > 200)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-      val path = fixturePath("orc_step", dir, "documents")
-      graft.sources.OrcIO.write(step, path)
-      graft.sources.OrcIO.read(s, path)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
-        .orderBy("source")
-    }),
-
-    // ---------------- GraphQL __typename (dialect extension) ----------------
-    // The meta-field Apollo-generation clients inject into EVERY
-    // query: q152's template with __typename at all four selection
-    // levels (root entity, connection object, row object, nested
-    // entity), each resolving to the reference schema's type name as
-    // a plan-time constant. The row payload is q152's with four
-    // literal columns — the oracle appends the same constants.
-    "q229_graphql_typename" -> ((s, dir) => {
-      val res = graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """{
-             disease(efoId: "DIS_BUILDING") {
-               __typename
-               id
-               name
-               knownDrugs {
-                 __typename
-                 count
-                 rows {
-                   __typename
-                   phase
-                   drug { __typename id name }
-                 }
-               }
-             }
-           }""")
-      res.select(col("__typename").as("disease_type"),
-          col("id").as("disease_id"), col("name").as("disease_name"),
-          col("knownDrugs.__typename").as("conn_type"),
-          col("knownDrugs.count").as("n_rows"),
-          posexplode(col("knownDrugs.rows")).as(Seq("rn", "r")))
-        .select(col("disease_type"), col("disease_id"), col("disease_name"),
-          col("conn_type"), col("n_rows"),
-          (col("rn") + 1).cast("long").as("rn"),
-          col("r.__typename").as("row_type"),
-          col("r.phase").as("phase"),
-          col("r.drug.__typename").as("drug_type"),
-          col("r.drug.id").as("drug_id"), col("r.drug.name").as("drug_name"))
-        .orderBy("rn")
-    }),
-
-    // ---------------- GraphQL variables (dialect extension) ----------------
-    // The `query ($id: String!)` parameterized form every Open
-    // Targets docs example uses: q152's diseaseAssociatedDrugs
-    // template with the efoId hoisted into a declared variable bound
-    // at execute() time. Bindings substitute at PARSE time, so the
-    // resolved AST — and therefore the plan and the rows — is
-    // byte-identical to the inlined q152 form; the oracle is q152's,
-    // verbatim (GraphQlSpec additionally pins default values and the
-    // undeclared/unbound error paths).
-    "q205_graphql_variables" -> ((s, dir) => {
-      val res = graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """query diseaseAssociatedDrugs($efoId: String!) {
-             disease(efoId: $efoId) {
-               id
-               name
-               knownDrugs {
-                 count
-                 rows {
-                   phase
-                   drug { id name }
-                 }
-               }
-             }
-           }""", Map("efoId" -> "DIS_BUILDING"))
-      res.select(col("id").as("disease_id"), col("name").as("disease_name"),
-          col("knownDrugs.count").as("n_rows"),
-          posexplode(col("knownDrugs.rows")).as(Seq("rn", "r")))
-        .select(col("disease_id"), col("disease_name"), col("n_rows"),
-          (col("rn") + 1).cast("long").as("rn"),
-          col("r.phase").as("phase"),
-          col("r.drug.id").as("drug_id"), col("r.drug.name").as("drug_name"))
-        .orderBy("rn")
-    }),
-
-    // ---------------- split leakage audit ----------------
-    // The eval-contamination check a training pipeline runs after
-    // splitting: near-duplicate pairs (the corpus's standing exact-
-    // pair artifact at the q31 threshold) labeled with each end's
-    // md5 split (the q174 assignment) — a pair crossing train/test is
-    // leaked eval signal. One artifact read + two key-projection
-    // joins; both devices are engine-exact, so the whole audit
-    // replays in SQL. The crossing column makes the leak rows
-    // self-describing.
-    "q202_split_leakage" -> ((s, dir) => {
-      val shares = Seq("train" -> 204, "val" -> 26, "test" -> 26)
-      val sp = t(s, dir).documents.select(col("doc_id"),
-        Mixing.splitAssign(col("doc_id"), shares).as("split"))
-      sharedPairs(s, dir).select(col("id_a"), col("id_b"))
-        .join(sp.select(col("doc_id").as("id_a"), col("split").as("sa")), "id_a")
-        .join(sp.select(col("doc_id").as("id_b"), col("split").as("sb")), "id_b")
-        .select(least(col("sa"), col("sb")).as("split_a"),
-          greatest(col("sa"), col("sb")).as("split_b"))
-        .groupBy(col("split_a"), col("split_b"))
-        .agg(count(lit(1)).as("n_pairs"))
-        .withColumn("crossing", col("split_a") =!= col("split_b"))
-        .orderBy("split_a", "split_b")
-    }),
-
-    // ---------------- partial PQ rebuild lifecycle ----------------
-    // The last maintenance asymmetry closed: q245's lifecycle shape
-    // on the PQ tier. Fresh build → dim-0-shifted append (subspace 0
-    // flags, the q237 fixture brought along as an INDEX mutation) →
-    // rebuildPqSubspaces retrains ONLY subspace 0 (frozen cells seed
-    // their own retrain; the other 7 codebooks and every unflagged
-    // code VALUE stay bit-identical — verdict-pinned) → the drift
-    // report reads clean, the flagged subspace's quantization error
-    // shrank, and the serve path still exact-dominates off the
-    // partially rebuilt index (q234's device). Exact rows: the L2
-    // top-10 over the grown corpus, shift done in DOUBLE on both
-    // sides (the q238 IEEE discipline). Scratch index per call: the
-    // rebuild mutates it.
-    "q247_pq_rebuild" -> ((s, dir) => {
-      // quarter-corpus fixture: the lifecycle (train → shifted append
-      // → one-subspace flag → partial rebuild → serve) needs a
-      // representative corpus, not the whole table — 16-cell Lloyd
-      // converges identically in character at 1/4 width and the +8.0
-      // shift dwarfs the quantization scale, while the per-rep bench
-      // cost drops ~4× (the full-width wall-time finding lives in
-      // ProbeMaintain `pqrebuild` / SCALING.md, where it belongs)
-      val emb = t(s, dir).embeddings.select(col("vec_id"), col("embedding"))
-        .filter(col("vec_id") % 4 === 0)
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q247").toString
-      val idx = s"$scratch/idx"
-      Similarity.buildPqIndex(emb, "vec_id", "embedding",
-        numSub = 8, k = 16, idx)
-      val shiftedD = emb.select(
-        (col("vec_id") + lit(1000000L)).as("vec_id"),
-        transform(col("embedding").cast("array<double>"),
-          (x, i) => when(i === 0, x + lit(8.0)).otherwise(x))
-          .as("embedding"))
-      val shiftedF = shiftedD.select(col("vec_id"),
-        col("embedding").cast("array<float>").as("embedding"))
-      Similarity.appendPqIndex(s, idx, shiftedF, "vec_id", "embedding")
-      val grownF = emb.unionByName(shiftedF)
-      val pre = Similarity.pqDriftReport(s, idx, grownF, "embedding")
-        .agg((sum(when(col("drifted"), 1L).otherwise(0L)) === 1L)
-            .as("one_sub_flagged"),
-          (max(when(col("drifted"), col("sub"))) === 0L)
-            .as("flagged_is_shifted_sub"),
-          max(when(col("sub") === 0L, col("resid_now_e6"))).as("__pre"))
-        .head()
-      def tailSum(): Long = s.read.parquet(s"$idx/codes")
-        .agg(sum(pmod(xxhash64(col("vec_id"),
-          to_json(slice(col("codes"), 2, 7))), lit(1000000007L))))
-        .head().getLong(0)
-      val tailPre = tailSum()
-      Similarity.rebuildPqSubspaces(s, idx, grownF, "vec_id", "embedding",
-        Seq(0))
-      val tailPost = tailSum()
-      val post = Similarity.pqDriftReport(s, idx, grownF, "embedding")
-        .agg((sum(when(col("drifted"), 1L).otherwise(0L)) === 0L)
-            .as("clean_after"),
-          (sum(when(col("sub") === 0L, abs(col("resid_delta_e6")))
-            .otherwise(lit(0L))) === 0L).as("rebuilt_delta_zero"))
-        .head()
-      val residPost = s.read.parquet(s"$idx/stats")
-        .filter(col("sub") === 0)
-        .select(col("resid_build_e6")).head().getLong(0)
-      val q0 = emb.filter(col("vec_id") === 0).select("embedding")
-        .head().getSeq[Float](0).toArray
-      val grownD = emb
-        .select(col("vec_id"),
-          col("embedding").cast("array<double>").as("embedding"))
-        .unionByName(shiftedD)
-      val exact = grownD.filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), round(sqrt(
-          VecFns.dot(col("embedding"), col("embedding"))
-            - lit(2.0) * VecFns.dot(col("embedding"), typedlit(q0))
-            + lit(q0.map(x => x.toDouble * x).sum)), 6).as("l2"))
-        .orderBy(col("l2").asc, col("vec_id").asc).limit(10)
-      val pq = Similarity.pqTopK(s, idx, grownD, "vec_id", "embedding",
-        q0, 10, rerank = 100, excludeId = 0L)
-      def ranked(df: DataFrame, prefix: String): DataFrame =
-        df.agg(sort_array(collect_list(struct(col("l2").as("__d"),
-            col("vec_id").as("__id")))).as("a"))
-          .select(posexplode(col("a")).as(Seq("rk", "r")))
-          .select(col("rk"), col("r.__d").as(s"${prefix}_d"))
-      val dominated = ranked(exact, "ex").join(ranked(pq, "pq"), Seq("rk"))
-        .agg(coalesce(every(col("pq_d") >= col("ex_d") - 1e-9), lit(true))
-          .as("pq_dominated_ok"))
-      val recall = exact.select(col("vec_id"))
-        .join(pq.select(col("vec_id")), Seq("vec_id"), "left_semi")
-        .agg((count(lit(1)) >= 6L).as("pq_recall_ok"))
-      exact.crossJoin(broadcast(recall)).crossJoin(broadcast(dominated))
-        .select(col("vec_id"), col("l2"),
-          lit(pre.getBoolean(0)).as("one_sub_flagged"),
-          lit(pre.getBoolean(1)).as("flagged_is_shifted_sub"),
-          lit(post.getBoolean(0)).as("clean_after"),
-          lit(post.getBoolean(1)).as("rebuilt_delta_zero"),
-          lit(residPost < pre.getLong(2)).as("resid_improved"),
-          lit(tailPre == tailPost).as("tail_codes_invariant"),
-          col("pq_recall_ok"), col("pq_dominated_ok"))
-        .orderBy(col("l2").asc, col("vec_id"))
-    }),
-
-    // ---------------- streaming semantic dedup ----------------
-    // SemDeDup's continuous-ingest member (q92 batch / this), closing
-    // the family's last batch-only asymmetry: vectors arrive in 4
-    // ascending-id micro-batches (three corpus terciles + a batch of
-    // EXACT CLONES under later ids — the guaranteed cross-batch
-    // duplication mode); a planning pass froze the centroid sidecar;
-    // each batch assigns to the FROZEN clusters and drops against the
-    // ALL-INGESTED archive (q216's discipline — a duplicate of a
-    // dropped vector is still a duplicate). Per-batch effects
-    // overwrite their own batch= generations (replay-idempotent,
-    // spec-pinned). Verdicts are ENGINE-COMPUTED, oracle-pinned TRUE:
-    // the accumulated survivor set EQUALS the frozen-centroid batch
-    // device over everything ingested (exact set equality — the
-    // semanticDedupVsArchive domination argument), and every clone
-    // was caught across batches. Rows: per-batch ingest accounting
-    // (the oracle replays the tercile bucketing and the clone count).
-    "q248_stream_semantic_dedup" -> ((s, dir) => {
-      val src = ensureSemBacklog(s, dir)
-      val schema = s.read.parquet(src).schema
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q248").toString
-      val state = s"$scratch/state"
-      val corpus = s.read.parquet(src)
-      Similarity.initSemanticCentroids(corpus, "vec_id", "embedding",
-        nlist = 16, state)
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      val query = graft.streaming.StreamOps.semanticDedupSink(stream,
-        state, "vec_id", "embedding", s"$scratch/ckpt",
-        Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-        tau = 0.35)
-      query.awaitTermination()
-      val kept = s.read.parquet(s"$state/kept").select(col("vec_id"))
-      val cents = Similarity.readCentroids(s, state)
-      val want = Similarity.semanticDedupFrozen(corpus, "vec_id",
-        "embedding", tau = 0.35, cents).select(col("vec_id"))
-      // set equality in ONE job: both sides are id-unique by
-      // construction (survivor sets), so a full-outer join with a
-      // null-on-either-side probe decides kept == want — the two-
-      // except form computed the batch device TWICE (measured
-      // ProbeQ248: 3.5-3.8 s of a ~10 s row; this form ~1.8 s),
-      // guide §1.2 "don't compute things you throw away"
-      val composition = kept.withColumn("__k", lit(1))
-        .join(want.withColumn("__w", lit(1)), Seq("vec_id"), "full_outer")
-        .filter(col("__k").isNull || col("__w").isNull)
-        .isEmpty
-      val cloneKept = kept.filter(col("vec_id") >= 1000000L).count()
-      val nClones = corpus.filter(col("vec_id") >= 1000000L).count()
-      SelfCheck.every(s"q248/$dir") {
-        val nb = s.read.parquet(s"$state/vecs")
-          .select("batch").distinct().count()
-        require(nb == 4, s"q248 expected 4 ingested batches, got $nb")
-        require(composition, "q248 streamed survivors != batch device")
-        SelfCheck.note(s"4 micro-batches; survivors equal the frozen " +
-          s"batch device exactly; $nClones cross-batch clones all caught")
-      }
-      s.read.parquet(s"$state/vecs")
-        .groupBy(col("batch").cast("long").as("batch"))
-        .agg(count(lit(1)).as("n_in"))
-        .select(col("batch"), col("n_in"),
-          lit(composition).as("composition_exact"),
-          lit(cloneKept == 0L && nClones > 0L).as("cross_batch_dups_caught"))
-        .orderBy("batch")
-    }),
-
-    // ---------------- GraphQL introspection ----------------
-    // The first request every real client (GraphiQL, Apollo,
-    // graphql-request) sends: `__schema { queryType { fields } }`.
-    // The dialect serves the minimal introspection surface over its
-    // OWN executable Query type — a root appears iff execute()
-    // dispatches it (introspection as a contract, not an echo of the
-    // schema file), result types rendered as the schema writes them.
-    // Catalog-cost (q242/q243's class): pure driver state, one
-    // range(1) row. FULL oracle: the 13 roots and their renderings.
-    "q249_graphql_introspection" -> ((s, dir) =>
-      graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """{ __schema {
-             queryType { name fields { name type { name } } } } }""")
-        .select(col("queryType.name").as("query_type"),
-          posexplode(col("queryType.fields")).as(Seq("i", "f")))
-        .select(col("query_type"), (col("i") + 1).cast("long").as("ord"),
-          col("f.name").as("root"), col("f.type.name").as("type_name"))
-        .orderBy("ord")),
-
-    // ---------------- GraphQL entity-field headroom ----------------
-    // The schema's non-consumed entity fields, executed: tractability
-    // (opentargets.schema:1416, 1546-1550) — the Target druggability
-    // assessment derived from the part's own attributes, one row per
-    // modality bucket, deterministic modality order.
-    "q250_graphql_tractability" -> ((s, dir) =>
-      graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """{
-             target(ensemblId: "TGT_3") {
-               id
-               approvedSymbol
-               tractability { label modality value }
-             }
-           }""")
-        .select(col("id"), col("approvedSymbol"),
-          posexplode(col("tractability")).as(Seq("rn", "r")))
-        .select(col("id"), col("approvedSymbol"),
-          (col("rn") + 1).cast("long").as("rn"),
-          col("r.label").as("label"), col("r.modality").as("modality"),
-          col("r.value").as("value"))
-        .orderBy("rn")),
-
-    // Disease.phenotypes(page:) — DiseaseHPOs rows with the nested
-    // phenotypeHPO entity (opentargets.schema:224-228, 279-288,
-    // 727-739): paginated (first 10 of the segment's nations), count
-    // the connection TOTAL
-    "q251_graphql_phenotypes" -> ((s, dir) =>
-      graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """{
-             disease(efoId: "DIS_BUILDING") {
-               id
-               name
-               phenotypes(page: {index: 0, size: 10}) {
-                 count
-                 rows {
-                   phenotypeHPO { id name description namespace }
-                 }
-               }
-             }
-           }""")
-        .select(col("id"), col("name"),
-          col("phenotypes.count").as("n_phenotypes"),
-          posexplode(col("phenotypes.rows")).as(Seq("rn", "r")))
-        .select(col("id"), col("name"), col("n_phenotypes"),
-          (col("rn") + 1).cast("long").as("rn"),
-          col("r.phenotypeHPO.id").as("hpo_id"),
-          col("r.phenotypeHPO.name").as("hpo_name"),
-          col("r.phenotypeHPO.description").as("hpo_desc"),
-          element_at(col("r.phenotypeHPO.namespace"), 1).as("hpo_ns"))
-        .orderBy("rn")),
-
-    // Disease.evidences(ensemblIds:, size:) — the Evidences batch
-    // probe (opentargets.schema:230-240, Evidence :505-509): the
-    // request names its targets, the engine answers with ONE
-    // isin-pruned probe of the persisted association index; count is
-    // the filtered total, rows the size-limited score ranking
-    "q252_graphql_evidences" -> ((s, dir) =>
-      graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """{
-             disease(efoId: "DIS_MACHINERY") {
-               id
-               evidences(ensemblIds: ["TGT_1", "TGT_5", "TGT_9", "TGT_12"],
-                         size: 3) {
-                 count
-                 rows {
-                   id
-                   score
-                   target { id approvedSymbol }
-                 }
-               }
-             }
-           }""")
-        .select(col("id").as("disease_id"),
-          col("evidences.count").as("n_evidence"),
-          posexplode(col("evidences.rows")).as(Seq("rn", "r")))
-        .select(col("disease_id"), col("n_evidence"),
-          (col("rn") + 1).cast("long").as("rn"),
-          col("r.id").as("evidence_id"), col("r.score").as("score"),
-          col("r.target.id").as("target_id"),
-          col("r.target.approvedSymbol").as("target_name"))
-        .orderBy("rn")),
-
-    // Target.similarEntities(size:) — the schema's model-based
-    // similarity field (opentargets.schema:1422-1431, Similarity
-    // :1338-1345) served by the engine's own vector tier: the root's
-    // sidecar vector probes the corpus with the exact brute cosine
-    // top-k; hits past the entity table's key range resolve object
-    // to GraphQL null (the union arm exercises both branches)
-    "q253_graphql_similar_entities" -> ((s, dir) =>
-      graft.api.GraphQl.execute(kgIndexed(s, dir),
-        """{
-             target(ensemblId: "TGT_7") {
-               id
-               approvedSymbol
-               similarEntities(size: 8) {
-                 id
-                 category
-                 score
-                 object {
-                   __typename
-                   ... on Target { id approvedSymbol }
-                 }
-               }
-             }
-           }""")
-        .select(col("id").as("root_id"),
-          col("approvedSymbol").as("root_name"),
-          posexplode(col("similarEntities")).as(Seq("rn", "r")))
-        .select(col("root_id"), col("root_name"),
-          (col("rn") + 1).cast("long").as("rn"),
-          col("r.id").as("sim_id"), col("r.category").as("category"),
-          col("r.score").as("score"),
-          col("r.object.__typename").as("obj_type"),
-          col("r.object.Target.id").as("obj_id"),
-          col("r.object.Target.approvedSymbol").as("obj_name"))
-        .orderBy("rn")),
-
-    // ---------------- flat-append compaction (fold path on the board) ----------------
-    // The round-17 small-file fold (`Compaction.compactAppends`) under
-    // a full oracle: a postings base + three appendPostings
-    // generations (the flat mode("append") layout the incremental
-    // family accumulates) fold in place, then the FOLDED directory
-    // serves q194's ranked BM25 answer — so the oracle hash-checks
-    // the fold's row fidelity end-to-end, and the envelope pins the
-    // fold's two contracts in-plan: row-identity (symmetric exceptAll
-    // against the pre-fold relation, counted to zero) and file-count
-    // collapse.
-    "q254_compact_fold" -> ((s, dir) => {
-      // half-corpus fixture: the fold contract (row identity + file
-      // collapse over a base + three append generations) is
-      // corpus-size-independent; halving bounds the per-rep rebuild
-      val docs = t(s, dir).documents.filter(col("doc_id") % 2 === 0)
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q254").toString
-      val idx = s"$scratch/idx"
-      InvertedIndex.build(docs.filter(col("doc_id") % 4 === 0),
-          "doc_id", col("text"))
-        .write.mode("overwrite").parquet(idx)
-      InvertedIndex.appendPostings(idx,
-        docs.filter(col("doc_id") % 4 === 1), "doc_id", col("text"))
-      InvertedIndex.appendPostings(idx,
-        docs.filter(col("doc_id") % 4 === 2), "doc_id", col("text"))
-      InvertedIndex.appendPostings(idx,
-        docs.filter(col("doc_id") % 4 === 3), "doc_id", col("text"))
-      val before = s.read.parquet(idx).localCheckpoint(true)
-      val nBefore = graft.sources.Compaction.parquetFiles(idx).size
-      graft.sources.Compaction.compactAppends(s, idx,
-        targetBytes = 64L << 20)
-      val nAfter = graft.sources.Compaction.parquetFiles(idx).size
-      val after = s.read.parquet(idx)
-      val verdict = before.exceptAll(after).agg(count(lit(1)).as("__a"))
-        .crossJoin(after.exceptAll(before).agg(count(lit(1)).as("__b")))
-        .select(((col("__a") === 0L) && (col("__b") === 0L))
-            .as("folded_identical"),
-          lit(nAfter < nBefore).as("files_collapsed"))
-      InvertedIndex.bm25TopKIndexed(after, "doc_id",
-          Seq("dup", "spark", "window"), k = 10)
-        .crossJoin(broadcast(verdict))
-    }),
-
-    // ---------------- table profiling (ingest gate) ----------------
-    // One-pass per-column profile of the documents corpus: null
-    // counts, EXACT distincts (one Expand + one shuffle — never a
-    // per-column pass), native-typed min/max rendered to string.
-    // The first operator of a trustworthy ingest DAG; `exact=false`
-    // is the HLL scale knob (no oracle there — this row checks the
-    // exact contract).
-    "q255_profile_table" -> ((s, dir) =>
-      graft.operators.Profiling.profileTable(t(s, dir).documents,
-        Seq("doc_id", "lang", "n_chars", "source", "text"))),
-
-    // the profile as a GATE: reference profile vs a corrupted
-    // candidate ingest (10% nulled lang, range-capped n_chars) —
-    // the two corrupted columns must flag `drifted`, the other three
-    // must pass clean; catalog-cost diff over two one-pass profiles
-    "q256_profile_drift_gate" -> ((s, dir) => {
-      val docs = t(s, dir).documents
-      val cols = Seq("doc_id", "lang", "n_chars", "source", "text")
-      val a = graft.operators.Profiling.profileTable(docs, cols)
-      val corrupted = docs
-        .withColumn("lang", when(col("doc_id") % 10 === 0,
-          lit(null).cast("string")).otherwise(col("lang")))
-        .withColumn("n_chars", least(col("n_chars"), lit(100L)))
-      val b = graft.operators.Profiling.profileTable(corrupted, cols)
-      graft.operators.Profiling.profileDiff(a, b)
-    }),
-  )
-
-  /** q200's dictionary: shared between the Spark query and the
-    * oracle text (both sides must list patterns identically).
-    */
-  private val DictPatterns = Seq(
-    "data", "data data", "the join", "spark", "query query", "window scan")
-
-  /** q172's pinned piece set: the multi-char pieces `UnigramLm
-    * .learnVocab(fixture documents, vocabSize=80, maxPieceLen=4,
-    * iters=3)` converges to (the SelfCheck.once above re-derives and
-    * compares). Single chars are the encoder's built-in fallback and
-    * are not pinned.
-    */
-  private val UnigramPieces: Seq[String] = Seq(
-    "agg", "batc", "big", "co", "cust", "data", "dup", "er", "fast",
-    "filt", "hash", "join", "key", "line", "lumn", "mall", "merg",
-    "omer", "or", "orde", "ow", "park", "part", "quer", "ream",
-    "roup", "row", "scan", "slow", "sort", "st", "tabl", "the",
-    "valu", "vect", "wind")
-
-  /** q151's pinned merge table: chains that actually fire on the
-    * documents vocabulary (table, value, scan, row, window), in
-    * priority order. All pairs are a ≠ b, which keeps the DuckDB
-    * replace-chain oracle exact (for a ≠ b the two-pass replace it
-    * mirrors equals the greedy pass the engine kernel computes).
-    */
-  private val BpeMerges: Seq[(String, String)] = Seq(
-    "t" -> "a", "ta" -> "b", "tab" -> "l", "tabl" -> "e",
-    "v" -> "a", "va" -> "l", "val" -> "u", "valu" -> "e",
-    "s" -> "c", "sc" -> "a", "sca" -> "n",
-    "r" -> "o", "ro" -> "w",
-    "w" -> "i", "wi" -> "n", "win" -> "d", "wind" -> "o", "windo" -> "w")
-
-  /** q144's FULL oracle: re-learn the BPE merge table INSIDE DuckDB
-    * as `steps` unrolled argmax layers — the q201 greedy-unroll
-    * device applied to the whole training loop, one CTE layer per
-    * merge step. Every quantity is integer arithmetic (pair counts
-    * are weighted BIGINT sums; the argmax tie-break is count DESC,
-    * "a b" ASC — string order, same collation both engines), so the
-    * learned (step, left, right, merged, pair_count) table replays
-    * bit-exactly with no float anywhere. The greedy left-to-right
-    * merge application is a `list_reduce` fold over the word's symbol
-    * list accumulating the space-joined string (last-token check +
-    * replace-or-append) — EXACTLY `BpeLearn.applyMerge`'s fold,
-    * self-merges included, with none of the encode-side two-pass
-    * replace's a = b caveats. CTEs are MATERIALIZED: each state feeds
-    * two consumers (pair counting + the next state), and DuckDB's
-    * default per-reference inlining re-derives the whole chain
-    * exponentially (measured: >300 s inlined vs 0.2 s materialized at
-    * sf0.01). Early stop (no pair with count >= 2) degrades exactly
-    * like the engine loop: the filtered argmax row vanishes, every
-    * later state passes through unchanged via the LEFT JOIN null arm,
-    * and no further merge rows are emitted.
-    */
-  private def bpeLearnOracleSql(steps: Int): String = {
-    val sb = new StringBuilder
-    sb ++= """WITH w0 AS MATERIALIZED (
-  SELECT CAST(count(*) AS BIGINT) AS n, string_split(w, '') AS syms
-  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-  WHERE len(w) > 0
-  GROUP BY w)"""
-    for (k <- 0 until steps) {
-      sb ++= s""",
-p$k AS MATERIALIZED (
-  SELECT t.p AS p, CAST(sum(s.n) AS BIGINT) AS c
-  FROM w$k s, unnest(list_transform(range(1, len(s.syms)),
-    i -> s.syms[i] || ' ' || s.syms[i+1])) AS t(p)
-  WHERE len(s.syms) > 1
-  GROUP BY t.p),
-b$k AS MATERIALIZED (
-  SELECT string_split(p, ' ')[1] AS a, string_split(p, ' ')[2] AS b, c
-  FROM p$k WHERE c >= 2 ORDER BY c DESC, p ASC LIMIT 1)"""
-      if (k < steps - 1) sb ++= s""",
-w${k + 1} AS MATERIALIZED (
-  SELECT s.n,
-    CASE WHEN b.a IS NULL OR len(s.syms) < 2 THEN s.syms
-         ELSE string_split(list_reduce(s.syms, (acc, x) ->
-           CASE WHEN (acc = b.a OR ends_with(acc, ' ' || b.a)) AND x = b.b
-                THEN substr(acc, 1, len(acc) - len(b.a)) || b.a || b.b
-                ELSE acc || ' ' || x END), ' ') END AS syms
-  FROM w$k s LEFT JOIN b$k b ON TRUE)"""
-    }
-    val sel = (0 until steps).map { k =>
-      if (k == 0)
-        """SELECT CAST(0 AS BIGINT) AS step, a AS "left", b AS "right",
-     a || b AS merged, c AS pair_count FROM b0"""
-      else s"SELECT $k, a, b, a || b, c FROM b$k"
-    }.mkString("\n   UNION ALL ")
-    sb ++= s"\nSELECT * FROM (\n   $sel) ORDER BY step"
-    sb.toString
-  }
-
-  /** q171's FULL oracle: re-run the whole unigram-LM hard-EM loop
-    * INSIDE DuckDB — seed from substring counts, then `iters` unrolled
-    * EM layers, each = one Viterbi forward DP + backtrack over the
-    * distinct-word relation (recursive CTEs), one weighted piece-count
-    * aggregation, the prune window, and the cost re-estimate. The
-    * Viterbi DP carries each word's per-position candidate costs
-    * INSIDE the recursion state as a list-of-lists (built by a plain
-    * relational join against the current vocab BEFORE the recursion):
-    * DuckDB 1.0's correlated subqueries inside recursive members
-    * return wrong rows nondeterministically (observed: single-char
-    * vocab lookups falling back to UNK on some words), so the
-    * recursive step does pure list arithmetic only — the per-position
-    * argmin is `list_sort(candidate structs)[1]`, lexicographic on
-    * (total cost, predecessor), exactly UnigramKernel.viterbi's
-    * "smaller cost, then smaller j (longer piece)" tie-break. Costs
-    * are micro-nat longs rounded once per estimate —
-    * `round(-ln(count/total)*1e6)` on the same IEEE doubles both
-    * engines — so the DP itself is exact integer arithmetic (the
-    * q84/q203 fixed-point discipline; a boundary-landing ln would
-    * need agreement to ~4e-9 of a rounding edge).
-    */
-  private def unigramLearnOracleSql(vocabSize: Int, maxLen: Int,
-                                    iters: Int, unkCost: Long): String = {
-    def emLayer(k: Int): String = s"""cand$k AS MATERIALIZED (
-  SELECT g.w, g.i, g.l,
-    CASE WHEN vv.cost IS NOT NULL THEN vv.cost
-         WHEN g.l = 1 THEN CAST($unkCost AS BIGINT) END AS pc
-  FROM (SELECT w, CAST(t.s['i'] AS INT) AS i, CAST(t.s['l'] AS INT) AS l,
-          t.s['p'] AS piece
-        FROM words, unnest(flatten(list_transform(range(1, len(w) + 1), i ->
-          list_transform(range(1, least($maxLen, i) + 1), l ->
-            {'i': i, 'l': l,
-             'p': substr(w, CAST(i - l + 1 AS INT), CAST(l AS INT))})))) t(s)) g
-  LEFT JOIN v${k - 1} vv USING (piece)
-  WHERE vv.cost IS NOT NULL OR g.l = 1),
-wc$k AS MATERIALIZED (
-  SELECT w, list(cl ORDER BY i) AS cands FROM (
-    SELECT w, i, list({'l': l, 'pc': pc} ORDER BY l) AS cl
-    FROM cand$k GROUP BY w, i) GROUP BY w),
-f$k AS (
-  SELECT s.w, s.n, wc.cands, 1 AS i,
-    CAST([0] AS BIGINT[]) AS best, CAST([] AS INT[]) AS back
-  FROM words s JOIN wc$k wc USING (w)
-  UNION ALL
-  SELECT w, n, cands, i + 1,
-    list_append(best, m.c), list_append(back, CAST(m.j AS INT))
-  FROM (
-    SELECT w, n, cands, i, best, back,
-      list_sort(list_transform(cands[i], x ->
-        {'c': best[i - x.l + 1] + x.pc, 'j': i - x.l}))[1] AS m
-    FROM f$k WHERE i <= len(w))),
-bt$k AS (
-  SELECT w, n, len(w) AS pos, back, CAST([] AS VARCHAR[]) AS pieces
-  FROM f$k WHERE i = len(w) + 1
-  UNION ALL
-  SELECT w, n, back[pos], back,
-    list_prepend(substr(w, back[pos] + 1, pos - back[pos]), pieces)
-  FROM bt$k WHERE pos > 0),
-sc$k AS MATERIALIZED (
-  SELECT piece, CAST(sum(n) AS BIGINT) AS cnt
-  FROM (SELECT n, unnest(pieces) AS piece FROM bt$k WHERE pos = 0)
-  GROUP BY piece),
-pr$k AS MATERIALIZED (
-  SELECT piece, cnt FROM sc$k WHERE len(piece) = 1
-  UNION ALL
-  SELECT piece, cnt FROM (
-    SELECT piece, cnt, row_number() OVER (ORDER BY cnt DESC, piece ASC) AS rk
-    FROM sc$k WHERE len(piece) > 1)
-  WHERE rk <= greatest(0,
-    $vocabSize - (SELECT count(*) FROM sc$k WHERE len(piece) = 1))),
-v$k AS MATERIALIZED (
-  SELECT piece, CAST(round(-ln(CAST(cnt AS DOUBLE) / t.tot) * 1e6) AS BIGINT) AS cost
-  FROM pr$k CROSS JOIN (SELECT CAST(sum(cnt) AS DOUBLE) AS tot FROM pr$k) t)"""
-    val head = s"""words AS MATERIALIZED (
-  SELECT w, CAST(count(*) AS BIGINT) AS n
-  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-  WHERE len(w) > 0 GROUP BY w),
-subc AS MATERIALIZED (
-  SELECT piece, CAST(sum(n) AS BIGINT) AS cnt
-  FROM words, unnest(flatten(list_transform(range(0, len(w)), i ->
-    list_transform(range(1, least($maxLen, len(w) - i) + 1), l ->
-      substr(w, CAST(i + 1 AS INT), CAST(l AS INT)))))) t(piece)
-  GROUP BY piece),
-seed AS MATERIALIZED (
-  SELECT piece, cnt FROM subc WHERE len(piece) = 1
-  UNION ALL
-  SELECT piece, cnt FROM (
-    SELECT piece, cnt, row_number() OVER (ORDER BY cnt DESC, piece ASC) AS rk
-    FROM subc WHERE len(piece) > 1)
-  WHERE rk <= greatest(0,
-    ${4 * vocabSize} - (SELECT count(*) FROM subc WHERE len(piece) = 1))),
-v0 AS MATERIALIZED (
-  SELECT piece, CAST(round(-ln(CAST(cnt AS DOUBLE) / t.tot) * 1e6) AS BIGINT) AS cost
-  FROM seed CROSS JOIN (SELECT CAST(sum(cnt) AS DOUBLE) AS tot FROM seed) t)"""
-    val layers = (1 to iters).map(emLayer).mkString(",\n")
-    s"""WITH RECURSIVE $head,
-$layers
-SELECT p.piece, v.cost AS cost_micro, p.cnt AS n_uses
-FROM pr$iters p JOIN v$iters v USING (piece)
-ORDER BY n_uses DESC, piece"""
-  }
-
-  /** GraphQL knownDrugs fold reconstructed over the raw star schema —
-    * shared by q152 (inlined id) and q205 (the same template through
-    * a declared variable, which resolves to the identical AST at
-    * parse time): rows sort lexicographically on (drug_id, target_id)
-    * and the unpaginated query serves the default-sized first page
-    * (25 rows, server parity) while n_rows stays the connection total.
-    */
-  /** The binary two-stage serve replayed (thresholds + bits + Hamming
-    * cut + cosine re-rank) — shared by q217 (ad-hoc), q218 (persisted
-    * index, spec-pinned bit-identical) and q225 (the streamed code
-    * table, bit-identical under the same frozen thresholds).
-    */
-  private val SqlBinaryTwoStage =
-    """WITH d AS (
-           SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings),
-         t AS (SELECT dim, (min(x) + max(x)) / 2 AS thr FROM d GROUP BY dim),
-         b AS (SELECT vec_id, d.dim,
-                 CASE WHEN x > thr THEN 1 ELSE 0 END AS bit
-               FROM d JOIN t ON d.dim = t.dim),
-         q AS (SELECT dim, bit AS qb FROM b WHERE vec_id = 0),
-         h AS (SELECT b.vec_id,
-                 CAST(sum(CASE WHEN b.bit <> q.qb THEN 1 ELSE 0 END) AS BIGINT)
-                   AS hamming
-               FROM b JOIN q ON b.dim = q.dim
-               WHERE b.vec_id <> 0
-               GROUP BY b.vec_id
-               ORDER BY hamming ASC, b.vec_id LIMIT 50),
-         qv AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-         SELECT h.vec_id,
-           round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-             CAST(qv.qe AS DOUBLE[])), 6) AS cosine,
-           h.hamming
-         FROM h JOIN embeddings e ON e.vec_id = h.vec_id CROSS JOIN qv
-         ORDER BY cosine DESC, h.vec_id LIMIT 10"""
-
-  /** NB training + inference replayed — shared by q219 (single-pass
-    * train) and q227 (the incremental count-generation model, whose
-    * summed generations equal the union's counts bit for bit).
-    */
-  private val SqlNbPredict =
-    """WITH tr AS (SELECT doc_id, text, lang FROM documents
-                     WHERE doc_id % 2 = 0),
-         te AS (SELECT doc_id, text, lang FROM documents
-                WHERE doc_id % 2 = 1),
-         trtok AS (SELECT lang AS c, unnest(string_split(text, ' ')) AS token
-                   FROM tr),
-         tc AS (SELECT c, token, count(*) AS ct FROM trtok GROUP BY 1, 2),
-         tot AS (SELECT c, count(*) AS tot FROM trtok GROUP BY 1),
-         voc AS (SELECT count(DISTINCT token) AS v FROM trtok),
-         den AS (SELECT c, tot + v AS den FROM tot CROSS JOIN voc),
-         lp AS (SELECT tc.c, tc.token,
-             CAST(floor(-ln(CAST(ct + 1 AS DOUBLE) / den) * 1e4 + 0.5)
-               AS BIGINT) AS lp4
-           FROM tc JOIN den ON tc.c = den.c),
-         lp0 AS (SELECT c, CAST(floor(-ln(1.0 / den) * 1e4 + 0.5) AS BIGINT)
-                   AS lp0
-                 FROM den),
-         pri AS (SELECT lang AS c,
-             CAST(floor(-ln(CAST(count(*) AS DOUBLE)
-               / (SELECT count(*) FROM tr)) * 1e4 + 0.5) AS BIGINT) AS prior4
-           FROM tr GROUP BY 1),
-         tetok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-                   FROM te),
-         ts AS (SELECT tetok.doc_id, lp0.c,
-                  CAST(sum(coalesce(lp.lp4, lp0.lp0)) AS BIGINT) AS s4
-                FROM tetok CROSS JOIN lp0
-                LEFT JOIN lp ON lp.c = lp0.c AND lp.token = tetok.token
-                GROUP BY 1, 2),
-         sc AS (SELECT te.doc_id, pri.c,
-                  pri.prior4 + coalesce(ts.s4, 0) AS score4
-                FROM te CROSS JOIN pri
-                LEFT JOIN ts ON ts.doc_id = te.doc_id AND ts.c = pri.c),
-         best AS (SELECT doc_id, c AS predicted, score4,
-                    row_number() OVER (PARTITION BY doc_id
-                      ORDER BY score4 ASC, c ASC) AS rn
-                  FROM sc)
-         SELECT te.doc_id, te.lang, b.predicted, b.score4,
-           te.lang = b.predicted AS correct
-         FROM te JOIN best b ON b.doc_id = te.doc_id AND b.rn = 1
-         ORDER BY te.doc_id"""
-
-  private val SqlKnownDrugsFold =
-    """WITH kd AS (
-         SELECT 'DRG_' || l_suppkey AS drug_id,
-           'TGT_' || l_partkey AS tgt_id,
-           round(least(4.0, count(*) / 10.0), 1) AS phase
-         FROM lineitem
-         JOIN orders ON o_orderkey = l_orderkey
-         JOIN customer ON c_custkey = o_custkey
-         WHERE c_mktsegment = 'BUILDING'
-         GROUP BY 1, 2),
-       r AS (
-         SELECT row_number() OVER (ORDER BY drug_id, tgt_id) AS rn,
-           phase, drug_id
-         FROM kd)
-       SELECT 'DIS_BUILDING' AS disease_id, 'BUILDING' AS disease_name,
-         (SELECT count(*) FROM kd) AS n_rows,
-         CAST(r.rn AS BIGINT) AS rn, r.phase, r.drug_id,
-         s.s_name AS drug_name
-       FROM r JOIN supplier s ON 'DRG_' || s.s_suppkey = r.drug_id
-       WHERE r.rn <= 25
-       ORDER BY rn"""
-
-  /** SQ8 top-k replayed bit-exactly (quantization + integer dot) —
-    * shared by q197 (the persisted batch index) and q212 (the
-    * streamed code table, bit-identical under the same frozen
-    * scales).
-    */
-  private val SqlSq8TopK =
-    """WITH d AS (
-         SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-           CAST(unnest(embedding) AS DOUBLE) AS x
-         FROM embeddings),
-       m AS (SELECT dim, max(abs(x)) AS mx FROM d GROUP BY dim),
-       c AS (
-         SELECT vec_id, d.dim,
-           CASE WHEN mx > 0 THEN CAST(round(x * 127.0 / mx) AS BIGINT)
-                ELSE 0 END AS code
-         FROM d JOIN m ON d.dim = m.dim),
-       q AS (SELECT dim, code AS qc FROM c WHERE vec_id = 0)
-       SELECT c.vec_id, CAST(sum(c.code * q.qc) AS BIGINT) AS qscore
-       FROM c JOIN q ON c.dim = q.dim
-       WHERE c.vec_id <> 0
-       GROUP BY c.vec_id
-       ORDER BY qscore DESC, c.vec_id LIMIT 10"""
-
-  /** Dialect-common SQL texts: each runs verbatim in Spark AND DuckDB
-    * (the oracle), so the string frontend is oracle-checked end to
-    * end with zero translation layer.
-    */
-  private val SqlRevenueByNation =
-    """SELECT n_name,
-       CAST(round(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(18,4))),2) AS DOUBLE) AS revenue,
-       count(*) AS n_items
-       FROM lineitem
-       JOIN orders ON l_orderkey = o_orderkey
-       JOIN customer ON o_custkey = c_custkey
-       JOIN nation ON c_nationkey = n_nationkey
-       GROUP BY n_name
-       ORDER BY n_name"""
-
-  private val SqlSearchTopK =
-    """SELECT p_partkey, p_name, round(p_retailprice,2) AS price
-       FROM part WHERE lower(p_name) LIKE '%blue%'
-       ORDER BY p_retailprice DESC, p_partkey LIMIT 5"""
-
-  /** Arbitrary grouping sets — NOT a rollup chain: the middle set
-    * skips the leading column, so ROLLUP/CUBE can't express it. The
-    * text runs verbatim in Spark AND DuckDB (q127's dialect-common
-    * discipline).
-    */
-  private val SqlGroupingSets =
-    """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-         CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,4))),2) AS DOUBLE) AS sum_price
-       FROM orders
-       GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
-         (o_orderpriority), ())
-       ORDER BY o_orderstatus ASC NULLS FIRST,
-         o_orderpriority ASC NULLS FIRST"""
-
-  private val SqlWindowTop2 =
-    """SELECT o_custkey, o_orderkey, rk FROM (
-         SELECT o_custkey, o_orderkey,
-           CAST(rank() OVER (PARTITION BY o_custkey
-             ORDER BY o_totalprice DESC, o_orderkey) AS BIGINT) AS rk
-         FROM orders) t
-       WHERE rk <= 2
-       ORDER BY o_custkey, rk, o_orderkey"""
-
-  /** Consecutive-id neighbor dot products over the (unit-norm)
-    * embeddings; `dotExpr` is the engine's dot product over
-    * (a.embedding, b.embedding) — the graft native kernel in Spark,
-    * DuckDB's list_dot_product CAST to DOUBLE in the oracle (its
-    * FLOAT[] form returns float32, whose round carries float32
-    * precision into the compare). `+ 0.0` normalizes -0.0 the same
-    * way q123 does.
-    */
-  private def SqlNeighborDot(dotExpr: String) =
-    s"""SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        round($dotExpr, 3) + 0.0 AS dot
-        FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1
-        WHERE a.vec_id < 50
-        ORDER BY id_a"""
-
-  /** DuckDB oracle twins — identical column names + ORDER BY.
-    * NOTHING is omitted (since round 13): every registered query has
-    * a full oracle row. Sketch/ANN queries carry envelope oracles
-    * (the DuckDB-exact side hashed + guarantee verdicts pinned TRUE);
-    * the iterative learners re-run their training loops inside
-    * DuckDB as unrolled CTE layers (bpeLearnOracleSql /
-    * unigramLearnOracleSql).
-    */
-  def oracleSql: Map[String, String] = Map(
-    "q01_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-         round(sum(l_quantity),2) AS sum_qty,
-         CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))),2) AS DOUBLE) AS sum_base_price,
-         CAST(round(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(18,4))),2) AS DOUBLE) AS sum_disc_price,
-         round(avg(l_quantity),4) AS avg_qty,
-         count(*) AS count_order
-         FROM lineitem GROUP BY l_returnflag, l_linestatus
-         ORDER BY l_returnflag, l_linestatus""",
-    "q02_threshold_filter" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity,
-         round(l_extendedprice,2) AS price
-         FROM lineitem WHERE l_quantity >= 45
-         ORDER BY l_orderkey, l_linenumber""",
-    "q03_search_rank" ->
-      """SELECT p_partkey, p_name, round(p_retailprice,2) AS price
-         FROM part WHERE lower(p_name) LIKE '%red%'
-         ORDER BY p_retailprice DESC, p_partkey LIMIT 10""",
-    "q04_point_lookup" ->
-      """SELECT c_custkey, c_name, round(c_acctbal,2) AS acctbal
-         FROM customer WHERE c_custkey = 42""",
-    "q05_batch_semi" ->
-      """SELECT o_orderkey, o_custkey, round(o_totalprice,2) AS total
-         FROM orders WHERE o_custkey IN
-           (SELECT c_custkey FROM customer WHERE c_acctbal > 9500)
-         ORDER BY o_orderkey""",
-    "q06_blocklist" ->
-      """SELECT c_custkey, c_mktsegment FROM customer
-         WHERE c_mktsegment NOT IN ('AUTOMOBILE','HOUSEHOLD')
-         ORDER BY c_custkey""",
-    "q07_first_order_per_cust" ->
-      """SELECT o_custkey, o_orderkey,
-         CAST(epoch(o_orderdate) AS BIGINT) AS first_ts
-         FROM (SELECT *, row_number() OVER
-             (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS rn
-           FROM orders) WHERE rn = 1
-         ORDER BY o_custkey""",
-    "q08_region_orders" ->
-      """SELECT r_name, count(*) AS n_orders,
-         CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,4))),2) AS DOUBLE) AS sum_total
-         FROM region
-         JOIN nation ON n_regionkey = r_regionkey
-         JOIN customer ON c_nationkey = n_nationkey
-         JOIN orders ON o_custkey = c_custkey
-         GROUP BY r_name ORDER BY r_name""",
-    "q09_brand_quantity" ->
-      """SELECT p_brand, round(sum(l_quantity),2) AS sum_qty,
-         count(*) AS n_lines
-         FROM part JOIN lineitem ON l_partkey = p_partkey
-         GROUP BY p_brand ORDER BY p_brand""",
-    "q10_part_diff" ->
-      """SELECT DISTINCT l_partkey AS p_key FROM lineitem
-         JOIN orders ON o_orderkey = l_orderkey
-         JOIN customer ON c_custkey = o_custkey
-         WHERE c_mktsegment = 'BUILDING'
-         EXCEPT
-         SELECT DISTINCT l_partkey AS p_key FROM lineitem
-         JOIN orders ON o_orderkey = l_orderkey
-         JOIN customer ON c_custkey = o_custkey
-         WHERE c_mktsegment = 'MACHINERY'
-         ORDER BY p_key""",
-    "q11_part_intersect" ->
-      """SELECT DISTINCT l_partkey AS p_key FROM lineitem
-         JOIN orders ON o_orderkey = l_orderkey
-         JOIN customer ON c_custkey = o_custkey
-         WHERE c_mktsegment = 'BUILDING'
-         INTERSECT
-         SELECT DISTINCT l_partkey AS p_key FROM lineitem
-         JOIN orders ON o_orderkey = l_orderkey
-         JOIN customer ON c_custkey = o_custkey
-         WHERE c_mktsegment = 'MACHINERY'
-         ORDER BY p_key""",
-    "q12_distinct_counts" ->
-      """SELECT l_returnflag, count(*) AS n,
-         count(DISTINCT l_suppkey) AS n_supp,
-         count(DISTINCT l_partkey) AS n_part
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q13_collect_nations" ->
-      """SELECT c_mktsegment,
-         string_agg(DISTINCT n_name, ',' ORDER BY n_name) AS nations
-         FROM customer JOIN nation ON n_nationkey = c_nationkey
-         GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-    "q14_top_order" ->
-      """SELECT o_orderkey, o_custkey, round(o_totalprice,2) AS total
-         FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 1""",
-    "q15_top_order_per_cust" ->
-      """SELECT o_custkey, o_orderkey, round(o_totalprice,2) AS total
-         FROM (SELECT *, row_number() OVER
-             (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
-           FROM orders) WHERE rn = 1
-         ORDER BY o_custkey""",
-    "q16_revenue_fallback" ->
-      """SELECT p_partkey,
-         coalesce(r, 0.0) AS returned_rev
-         FROM part LEFT JOIN
-           (SELECT l_partkey,
-              CAST(round(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(18,4))),2) AS DOUBLE) AS r
-            FROM lineitem WHERE l_returnflag = 'R' GROUP BY l_partkey) s
-         ON s.l_partkey = p_partkey
-         ORDER BY p_partkey""",
-    "q17_json_extract" ->
-      """SELECT event_type,
-         round(avg(CAST(json_extract_string(props,'$.k') AS INT)),4) AS avg_k,
-         count(*) AS n
-         FROM events GROUP BY event_type ORDER BY event_type""",
-    "q18_union_status" ->
-      """SELECT status, count(*) AS n FROM (
-           SELECT o_orderstatus AS status FROM orders WHERE o_totalprice > 40000
-           UNION ALL
-           SELECT o_orderstatus AS status FROM orders WHERE o_orderpriority = '1-URGENT'
-         ) GROUP BY status ORDER BY status""",
-    "q19_order_rank" ->
-      """SELECT o_custkey, o_orderkey,
-         rank() OVER (PARTITION BY o_custkey
-           ORDER BY o_totalprice DESC, o_orderkey) AS price_rank,
-         lag(o_orderkey) OVER (PARTITION BY o_custkey
-           ORDER BY o_orderdate, o_orderkey) AS prev_orderkey,
-         round(sum(o_totalprice) OVER (PARTITION BY o_custkey
-           ORDER BY o_orderdate, o_orderkey
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),2) AS running_total
-         FROM orders ORDER BY o_custkey, o_orderkey""",
-    "q20_hourly_events" ->
-      """SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_ts,
-         event_type, count(*) AS n,
-         CAST(round(sum(CAST(value AS DECIMAL(18,4))),2) AS DOUBLE) AS sum_value
-         FROM events GROUP BY 1, 2 ORDER BY hour_ts, event_type""",
-    "q21_sessions" ->
-      """SELECT user_id, CAST(sum(new_session) AS BIGINT) AS n_sessions,
-         count(*) AS n_events
-         FROM (SELECT user_id,
-             CASE WHEN prev_ts IS NULL OR epoch(ts) - epoch(prev_ts) > 1800.0
-               THEN 1 ELSE 0 END AS new_session
-           FROM (SELECT user_id, ts, event_id,
-               lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-             FROM events))
-         GROUP BY user_id ORDER BY user_id""",
-    "q22_candidate_parts" ->
-      """WITH seg AS (
-           SELECT l_partkey, l_suppkey, l_quantity FROM lineitem
-           JOIN orders ON o_orderkey = l_orderkey
-           JOIN customer ON c_custkey = o_custkey
-           WHERE c_mktsegment = 'BUILDING'),
-         target_suppliers AS (
-           SELECT DISTINCT l_suppkey FROM seg WHERE l_quantity >= 45),
-         dtd AS (
-           SELECT DISTINCT l_partkey FROM lineitem
-           WHERE l_suppkey IN (SELECT l_suppkey FROM target_suppliers)),
-         dd AS (SELECT DISTINCT l_partkey FROM seg)
-         SELECT d.l_partkey AS p_partkey, p_name
-         FROM dtd d LEFT JOIN part ON p_partkey = d.l_partkey
-         WHERE d.l_partkey NOT IN (SELECT l_partkey FROM dd)
-         ORDER BY p_partkey""",
-    "q23_related_candidates" ->
-      """WITH facts AS (
-           SELECT l_partkey, l_suppkey, l_quantity, o_custkey, c_mktsegment
-           FROM lineitem
-           JOIN orders ON o_orderkey = l_orderkey
-           JOIN customer ON c_custkey = o_custkey),
-         mains AS (SELECT * FROM facts WHERE c_mktsegment = 'BUILDING'),
-         main_targets AS (
-           SELECT DISTINCT l_partkey FROM mains WHERE l_quantity >= 45),
-         others AS (SELECT * FROM facts WHERE c_mktsegment <> 'BUILDING'),
-         related_customers AS (
-           SELECT DISTINCT o_custkey FROM others
-           WHERE l_partkey IN (SELECT l_partkey FROM main_targets)),
-         related_lines AS (
-           SELECT * FROM others
-           WHERE o_custkey IN (SELECT o_custkey FROM related_customers)),
-         candidates AS (
-           SELECT DISTINCT l_partkey FROM related_lines
-           EXCEPT SELECT DISTINCT l_partkey FROM mains)
-         SELECT l_partkey AS p_partkey,
-           count(DISTINCT o_custkey) AS n_related_customers,
-           count(DISTINCT l_suppkey) AS n_suppliers
-         FROM related_lines
-         WHERE l_partkey IN (SELECT l_partkey FROM candidates)
-         GROUP BY l_partkey ORDER BY p_partkey""",
-    "q24_lang_stats" ->
-      """SELECT lang, count(*) AS n_docs, round(avg(n_chars),4) AS avg_chars
-         FROM documents GROUP BY lang ORDER BY lang""",
-    "q25_token_counts" ->
-      """SELECT doc_id, len(string_split(text,' ')) AS n_tokens
-         FROM documents ORDER BY doc_id""",
-    "q26_quality" ->
-      """SELECT doc_id, len(string_split(text,' ')) AS n_tokens,
-         round(CAST(len(list_distinct(string_split(text,' '))) AS DOUBLE)
-           / len(string_split(text,' ')),4) AS diversity,
-         (len(string_split(text,' ')) BETWEEN 20 AND 1000
-          AND CAST(len(list_distinct(string_split(text,' '))) AS DOUBLE)
-            / len(string_split(text,' ')) > 0.3) AS is_quality
-         FROM documents ORDER BY doc_id""",
-    "q27_langid" ->
-      """WITH toks AS (
-           SELECT doc_id, lang, string_split(lower(text), ' ') AS tk
-           FROM documents),
-         sc AS (
-           SELECT doc_id, lang,
-             len(list_intersect(tk, ['the','a','and','of','to','in','is'])) AS s_en,
-             len(list_intersect(tk, ['der','die','das','und','ist','nicht','ein'])) AS s_de,
-             len(list_intersect(tk, ['el','la','los','las','es','una','que'])) AS s_es,
-             len(list_intersect(tk, ['le','la','les','et','est','une','dans'])) AS s_fr,
-             len(list_intersect(tk, ['的','了','是','我','不'])) AS s_zh
-           FROM toks)
-         SELECT doc_id, lang,
-           CASE
-             WHEN s_en >= s_de AND s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-             WHEN s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
-             WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
-             WHEN s_fr >= s_zh THEN 'fr'
-             ELSE 'zh' END AS pred_lang
-         FROM sc ORDER BY doc_id""",
-    "q28_fingerprints" ->
-      """SELECT doc_id,
-         md5(trim(regexp_replace(regexp_replace(lower(text),
-           '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS fp
-         FROM documents ORDER BY doc_id""",
-    "q29_exact_dedup" ->
-      """SELECT md5(trim(regexp_replace(regexp_replace(lower(text),
-           '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS fp,
-         min(doc_id) AS canonical_id, count(*) AS n_dups
-         FROM documents GROUP BY fp ORDER BY canonical_id""",
-    "q30_jaccard_pairs" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         inter AS (
-           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS i
-           FROM ex l JOIN ex r ON l.g = r.g AND l.doc_id < r.doc_id
-           GROUP BY 1, 2),
-         sz AS (SELECT doc_id, len(s) AS n FROM sh)
-         SELECT id_a, id_b,
-           round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) AS jaccard
-         FROM inter
-         JOIN sz sa ON sa.doc_id = id_a
-         JOIN sz sb ON sb.doc_id = id_b
-         WHERE round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) >= 0.6
-         ORDER BY id_a, id_b""",
-    // LSH envelope (the q91/q105 pattern): the exact Jaccard>=0.6
-    // pair set recomputed (the q30 relation) keyed-hash-identical,
-    // with the LSH guarantees — subset-of-exact (verification
-    // exactness) and the 0.8 recall floor — pinned TRUE
-    "q31_minhash_neardups" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         inter AS (
-           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS i
-           FROM ex l JOIN ex r ON l.g = r.g AND l.doc_id < r.doc_id
-           GROUP BY 1, 2),
-         sz AS (SELECT doc_id, len(s) AS n FROM sh)
-         SELECT id_a, id_b,
-           round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) AS jaccard,
-           TRUE AS subset_of_exact, TRUE AS recall_ok
-         FROM inter
-         JOIN sz sa ON sa.doc_id = id_a
-         JOIN sz sb ON sb.doc_id = id_b
-         WHERE round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) >= 0.6
-         ORDER BY id_a, id_b""",
-    // SimHash envelope: hashes are engine-internal, so the oracle pins
-    // the GUARANTEES — verification exactness (subset of hamming<=8,
-    // re-derived values agree) and banding-theorem completeness for
-    // hamming<=3 (cross-checked against the independent 8×8-bit
-    // decomposition) — plus the corpus size it audited
-    "q32_simhash_neardups" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_docs,
-           TRUE AS subset_of_ham8, TRUE AS complete_ham3
-         FROM documents""",
-    "q33_cosine_topk" ->
-      """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0)
-         SELECT e.vec_id,
-           round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-             CAST(q.embedding AS DOUBLE[])), 6) AS cosine
-         FROM embeddings e, q WHERE e.vec_id <> 0
-         ORDER BY cosine DESC, e.vec_id LIMIT 10""",
-    // ANN envelope: the exact brute-force top-10 recomputed (the q33
-    // relation), the LSH recall-floor verdict pinned TRUE
-    "q34_ann_topk" ->
-      """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0)
-         SELECT e.vec_id,
-           round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-             CAST(q.embedding AS DOUBLE[])), 6) AS cosine,
-           TRUE AS ann_recall_ok
-         FROM embeddings e, q WHERE e.vec_id <> 0
-         ORDER BY cosine DESC, e.vec_id LIMIT 10""",
-    // KNN-join envelope: exact top-3 for the 1-in-50 audit sample of
-    // query ids, the banded join's sample recall pinned TRUE
-    "q36_knn_join" ->
-      """WITH s AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
-                    WHERE vec_id % 50 = 0 AND vec_id < 6400),
-         d AS (
-           SELECT s.qid, e.vec_id AS nn_id,
-             round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-               CAST(s.qe AS DOUBLE[])), 6) AS cosine
-           FROM s, embeddings e WHERE e.vec_id <> s.qid),
-         r AS (
-           SELECT qid, nn_id, cosine,
-             row_number() OVER (PARTITION BY qid
-               ORDER BY cosine DESC, nn_id) AS rn
-           FROM d)
-         SELECT CAST(qid AS BIGINT) AS id, CAST(nn_id AS BIGINT) AS nn_id,
-           cosine, TRUE AS ann_recall_ok
-         FROM r WHERE rn <= 3 ORDER BY id, cosine DESC, nn_id""",
-    // cross-KNN envelope: exact top-3 per probe vector over the corpus
-    // side, the banded retrieval's recall pinned TRUE
-    "q88_cross_knn" ->
-      """WITH s AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
-                    WHERE vec_id % 100 = 0 AND vec_id < 12800),
-         c AS (SELECT vec_id, embedding FROM embeddings
-               WHERE vec_id % 100 <> 0),
-         d AS (
-           SELECT s.qid, c.vec_id AS nn_id,
-             round(list_cosine_similarity(CAST(c.embedding AS DOUBLE[]),
-               CAST(s.qe AS DOUBLE[])), 6) AS cosine
-           FROM s, c),
-         r AS (
-           SELECT qid, nn_id, cosine,
-             row_number() OVER (PARTITION BY qid
-               ORDER BY cosine DESC, nn_id) AS rn
-           FROM d)
-         SELECT CAST(qid AS BIGINT) AS query_id, CAST(nn_id AS BIGINT) AS nn_id,
-           cosine, TRUE AS ann_recall_ok
-         FROM r WHERE rn <= 3 ORDER BY query_id, cosine DESC, nn_id""",
-    // IVF envelope: same exact top-10, the pruned-scan recall floor
-    // pinned TRUE
-    "q50_ivf_topk" ->
-      """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0)
-         SELECT e.vec_id,
-           round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-             CAST(q.embedding AS DOUBLE[])), 6) AS cosine,
-           TRUE AS ivf_recall_ok
-         FROM embeddings e, q WHERE e.vec_id <> 0
-         ORDER BY cosine DESC, e.vec_id LIMIT 10""",
-    // PQ envelope: the exact L2 top-10 recomputed via list_distance,
-    // recall-floor and per-rank domination verdicts pinned TRUE
-    "q148_pq_topk" ->
-      """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0)
-         SELECT e.vec_id,
-           round(list_distance(CAST(e.embedding AS DOUBLE[]),
-             CAST(q.embedding AS DOUBLE[])), 6) AS l2,
-           TRUE AS pq_recall_ok, TRUE AS pq_dominated_ok
-         FROM embeddings e, q WHERE e.vec_id <> 0
-         ORDER BY l2 ASC, e.vec_id LIMIT 10""",
-    "q35_label_centroids" ->
-      """SELECT label, dim, round(avg(CAST(x AS DOUBLE)), 6) AS centroid
-         FROM (SELECT label, generate_subscripts(embedding, 1) - 1 AS dim,
-             unnest(embedding) AS x FROM embeddings)
-         GROUP BY label, dim ORDER BY label, dim""",
-    "q37_media_features" ->
-      """SELECT doc_id AS media_id,
-         CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image'
-           WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-         CAST(CASE CAST(doc_id % 3 AS INT)
-           WHEN 0 THEN 54 + 48 * greatest(1, octet_length(encode(text)) // 48)
-           WHEN 1 THEN 44 + 2 * greatest(1, octet_length(encode(text)) // 2)
-           ELSE 102 * greatest(1, octet_length(encode(text)) // 48)
-           END AS BIGINT) AS n_bytes,
-         CAST(CASE WHEN CAST(doc_id % 3 AS INT) = 2
-           THEN greatest(1, octet_length(encode(text)) // 48)
-           ELSE 1 END AS INT) AS frame_count
-         FROM documents ORDER BY media_id""",
-    "q124_media_decode" ->
-      """WITH src AS (
-           SELECT doc_id, text, octet_length(encode(text)) AS len
-           FROM documents),
-         pxi AS (
-           SELECT doc_id, len, text,
-             unnest(range(1, least(len, 48 * greatest(1, len // 48)) + 1)) AS i
-           FROM src WHERE doc_id % 3 IN (0, 2)),
-         px AS (
-           SELECT doc_id, len, CAST(i AS INT) AS i,
-             unicode(substr(text, CAST(i AS INT), 1)) AS v
-           FROM pxi),
-         img AS (
-           SELECT doc_id AS media_id,
-             CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image' ELSE 'video' END AS kind,
-             CAST(CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 16 ELSE 4 END AS INT) AS width,
-             CAST(CASE CAST(doc_id % 3 AS INT) WHEN 0
-               THEN greatest(1, len // 48) ELSE 4 END AS INT) AS height,
-             CAST(16 * greatest(1, len // 48) AS BIGINT) AS n_units,
-             CAST(coalesce(sum(CASE WHEN (i - 1) % 3 = 0 THEN v END), 0) AS BIGINT) AS sum_a,
-             CAST(coalesce(sum(CASE WHEN (i - 1) % 3 = 1 THEN v END), 0) AS BIGINT) AS sum_b,
-             CAST(coalesce(sum(CASE WHEN (i - 1) % 3 = 2 THEN v END), 0) AS BIGINT) AS sum_c
-           FROM px GROUP BY doc_id, len),
-         smpj AS (
-           SELECT doc_id, len, text,
-             unnest(range(0, greatest(1, len // 2))) AS j
-           FROM src WHERE doc_id % 3 = 1),
-         smp AS (
-           SELECT doc_id, len,
-             unicode(substr(text, CAST(2 * j + 1 AS INT), 1))
-               + 256 * unicode(substr(text, CAST(2 * j + 2 AS INT), 1))
-               - CASE WHEN unicode(substr(text, CAST(2 * j + 2 AS INT), 1)) >= 128
-                      THEN 65536 ELSE 0 END AS sv
-           FROM smpj),
-         aud AS (
-           SELECT doc_id AS media_id, 'audio' AS kind,
-             CAST(0 AS INT) AS width, CAST(0 AS INT) AS height,
-             CAST(greatest(1, len // 2) AS BIGINT) AS n_units,
-             CAST(sum(sv) AS BIGINT) AS sum_a,
-             CAST(sum(abs(sv)) AS BIGINT) AS sum_b,
-             CAST(sum(CASE WHEN sv < 0 THEN 1 ELSE 0 END) AS BIGINT) AS sum_c
-           FROM smp GROUP BY doc_id, len)
-         SELECT * FROM img UNION ALL SELECT * FROM aud
-         ORDER BY media_id""",
-    "q38_error_rates" ->
-      """SELECT user_id, count(*) AS n_events,
-         CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_errors,
-         round(CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS DOUBLE)
-           / count(*), 4) AS error_rate
-         FROM events GROUP BY user_id ORDER BY user_id""",
-    "q39_first_event" ->
-      """SELECT user_id, event_type, event_id
-         FROM (SELECT *, row_number() OVER
-             (PARTITION BY user_id, event_type ORDER BY ts, event_id) AS rn
-           FROM events) WHERE rn = 1
-         ORDER BY user_id, event_type""",
-    "q41_nested_roundtrip" ->
-      """SELECT o_custkey, count(*) AS n_orders,
-         CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,4))),2) AS DOUBLE) AS sum_total
-         FROM orders GROUP BY o_custkey ORDER BY o_custkey""",
-    "q42_from_json" ->
-      """SELECT event_type,
-         round(avg(CAST(json_extract_string(props,'$.k') AS INT)),4) AS avg_k,
-         count(*) AS n
-         FROM events GROUP BY event_type ORDER BY event_type""",
-    "q43_page2" ->
-      """SELECT p_partkey, p_name, round(p_retailprice,2) AS price
-         FROM part ORDER BY p_retailprice DESC, p_partkey
-         LIMIT 10 OFFSET 10""",
-    "q44_embedding_neardups" ->
-      """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-           CAST(b.embedding AS DOUBLE[])), 6) AS cosine
-         FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-         WHERE a.vec_id % 3 = 0 AND b.vec_id % 3 = 0
-           AND round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-             CAST(b.embedding AS DOUBLE[])), 6) >= 0.35
-         ORDER BY id_a, id_b""",
-    "q45_subword_counts" ->
-      """SELECT doc_id,
-         CAST(len(regexp_extract_all(text,
-           '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]')) AS BIGINT) AS n_subtokens
-         FROM documents ORDER BY doc_id""",
-    "q46_top_terms" ->
-      """SELECT lang, token, n, rk FROM (
-           SELECT lang, token, n, row_number() OVER
-             (PARTITION BY lang ORDER BY n DESC, token) AS rk
-           FROM (SELECT lang, token, count(*) AS n
-                 FROM (SELECT lang, unnest(string_split(text,' ')) AS token
-                       FROM documents)
-                 GROUP BY lang, token))
-         WHERE rk <= 5 ORDER BY lang, rk""",
-    "q47_entity_search" ->
-      """SELECT entity, id, name FROM (
-           SELECT 'part' AS entity, p_partkey AS id, p_name AS name FROM part
-           UNION ALL
-           SELECT 'supplier', s_suppkey, s_name FROM supplier
-           UNION ALL
-           SELECT 'customer', c_custkey, c_name FROM customer)
-         WHERE lower(name) LIKE '%1%' AND entity IN ('supplier','customer')
-         ORDER BY entity, id""",
-    "q48_format" ->
-      """SELECT s_suppkey, printf('%s | bal %.2f', s_name, s_acctbal) AS label
-         FROM supplier ORDER BY s_suppkey""",
-    "q49_kg_disease_targets" ->
-      """WITH pair AS (
-           SELECT c_mktsegment AS m, l_partkey AS p, sum(l_quantity) AS q
-           FROM lineitem
-           JOIN orders ON o_orderkey = l_orderkey
-           JOIN customer ON c_custkey = o_custkey
-           GROUP BY 1, 2),
-         edges AS (
-           SELECT 'DIS_' || m AS disease_id, 'TGT_' || p AS target_id,
-             round(q / sum(q) OVER (PARTITION BY p), 6) AS score
-           FROM pair),
-         kept AS (
-           SELECT *, row_number() OVER
-             (PARTITION BY target_id ORDER BY score DESC, disease_id) AS rn
-           FROM edges WHERE disease_id = 'DIS_BUILDING' AND score >= 0.33)
-         SELECT target_id AS id, score, disease_id FROM kept WHERE rn = 1
-         ORDER BY id""",
-    "q52_rollup" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n,
-         CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))),2) AS DOUBLE) AS sum_price
-         FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-         ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""",
-    "q53_minmax" ->
-      """SELECT p_brand,
-         round(min(p_retailprice),2) AS min_price,
-         round(max(p_retailprice),2) AS max_price,
-         CAST(epoch(min(l_shipdate)) AS BIGINT) AS first_ship,
-         CAST(epoch(max(l_shipdate)) AS BIGINT) AS last_ship
-         FROM part JOIN lineitem ON l_partkey = p_partkey
-         GROUP BY p_brand ORDER BY p_brand""",
-    "q54_map_props" ->
-      """SELECT event_id, json_keys(props)[1] AS first_key,
-         CAST(json_extract_string(props,'$.k') AS INT) AS k_value
-         FROM events ORDER BY event_id""",
-    "q55_chembl_enrichment" ->
-      """WITH base AS (SELECT p_partkey, p_name FROM part WHERE p_partkey <= 300),
-         mol AS (
-           SELECT p_partkey AS mol_key,
-             CASE WHEN p_partkey % 3 <> 0 THEN 'MOL ' || p_name END AS mol_name,
-             '{"molecule_structures":{"canonical_smiles":"' ||
-               CASE CAST(p_partkey % 5 AS INT)
-                 WHEN 0 THEN 'C2CC2' WHEN 1 THEN 'C1CC1' WHEN 2 THEN 'c1ccccc1'
-                 WHEN 3 THEN 'C3CC3C1CC1' ELSE 'CC(=O)O' END || '"}}' AS mol_json
-           FROM base WHERE p_partkey % 10 < 7),
-         enriched AS (
-           SELECT b.p_partkey, coalesce(mol_name, 'UNKNOWN') AS name,
-             json_extract_string(mol_json,
-               '$.molecule_structures.canonical_smiles') AS smiles
-           FROM base b LEFT JOIN mol ON mol_key = b.p_partkey),
-         canon AS (
-           SELECT *,
-             CASE WHEN smiles = 'C2CC2' THEN 'C1CC1'
-                  WHEN smiles = 'C1CC1' THEN 'C1CC1'
-                  WHEN smiles = 'c1ccccc1' THEN 'c1ccccc1'
-                  WHEN smiles = 'C3CC3C1CC1' THEN 'C1CC1C2CC2'
-                  WHEN smiles = 'CC(=O)O' THEN 'CC(=O)O' END AS canonical_smiles
-           FROM enriched)
-         SELECT p_partkey, name, smiles, canonical_smiles,
-           coalesce(canonical_smiles = smiles, false) AS is_canonical
-         FROM canon ORDER BY p_partkey""",
-    "q56_mechanism_targets" ->
-      """SELECT DISTINCT l_suppkey AS drug_key, p_brand AS action_type,
-           l_partkey AS target_key
-         FROM lineitem JOIN part ON p_partkey = l_partkey
-         ORDER BY drug_key, action_type, target_key""",
-    "q57_csv_roundtrip" ->
-      """SELECT o_orderstatus, count(*) AS n,
-           count(DISTINCT o_custkey) AS n_cust
-         FROM orders WHERE o_totalprice > 40000
-         GROUP BY o_orderstatus ORDER BY o_orderstatus""",
-    "q58_kg_target_diseases" ->
-      """WITH pair AS (
-           SELECT c_mktsegment AS m, l_partkey AS p, sum(l_quantity) AS q
-           FROM lineitem
-           JOIN orders ON o_orderkey = l_orderkey
-           JOIN customer ON c_custkey = o_custkey
-           GROUP BY 1, 2),
-         edges AS (
-           SELECT 'DIS_' || m AS disease_id, 'TGT_' || p AS target_id,
-             round(q / sum(q) OVER (PARTITION BY p), 6) AS score
-           FROM pair),
-         main_targets AS (
-           SELECT target_id FROM (
-             SELECT *, row_number() OVER
-               (PARTITION BY target_id ORDER BY score DESC, disease_id) AS rn
-             FROM edges WHERE disease_id = 'DIS_BUILDING' AND score >= 0.33)
-           WHERE rn = 1),
-         expanded AS (
-           SELECT e.target_id, e.disease_id, e.score FROM edges e
-           WHERE e.target_id IN (SELECT target_id FROM main_targets)
-             AND e.score >= 0.1 AND e.disease_id <> 'DIS_BUILDING'),
-         kept AS (
-           SELECT *, row_number() OVER
-             (PARTITION BY disease_id ORDER BY score DESC, target_id) AS rn
-           FROM expanded)
-         SELECT disease_id AS id, score, target_id FROM kept WHERE rn = 1
-         ORDER BY id""",
-    "q59_kg_disease_drugs" ->
-      """WITH facts AS (
-           SELECT l_partkey, l_suppkey, c_mktsegment FROM lineitem
-           JOIN orders ON o_orderkey = l_orderkey
-           JOIN customer ON c_custkey = o_custkey),
-         kd AS (
-           SELECT 'DIS_' || c_mktsegment AS disease_id,
-             'TGT_' || l_partkey AS target_id,
-             'DRG_' || l_suppkey AS drug_id,
-             round(least(4.0, count(*) / 10.0), 1) AS phase
-           FROM facts GROUP BY 1, 2, 3),
-         kept AS (
-           SELECT *, row_number() OVER
-             (PARTITION BY drug_id ORDER BY phase DESC, disease_id, target_id) AS rn
-           FROM kd WHERE disease_id = 'DIS_AUTOMOBILE')
-         SELECT drug_id AS id, phase, disease_id FROM kept WHERE rn = 1
-         ORDER BY id""",
-    "q60_kg_drug_info" ->
-      """WITH lt AS (
-           SELECT DISTINCT 'DRG_' || l_suppkey AS drug_id,
-             'TGT_' || l_partkey AS target_id
-           FROM lineitem),
-         agg AS (
-           SELECT drug_id,
-             string_agg(target_id, ',' ORDER BY target_id) AS linked_targets
-           FROM lt GROUP BY drug_id)
-         SELECT a.drug_id AS id, s_name AS name, linked_targets
-         FROM agg a LEFT JOIN supplier ON 'DRG_' || s_suppkey = a.drug_id
-         ORDER BY id""",
-    "q61_kg_drug_first_target" ->
-      """WITH pp AS (
-           SELECT l_suppkey, l_partkey, sum(l_quantity) AS q
-           FROM lineitem GROUP BY 1, 2),
-         rk AS (
-           SELECT *, row_number() OVER
-             (PARTITION BY l_suppkey ORDER BY q DESC, l_partkey) AS rnk
-           FROM pp)
-         SELECT 'DRG_' || l_suppkey AS id, 'TGT_' || l_partkey AS target_id
-         FROM rk WHERE rnk = 1 ORDER BY id""",
-    "q62_kg_drug_targets" ->
-      """WITH pp AS (
-           SELECT l_suppkey, l_partkey, sum(l_quantity) AS q
-           FROM lineitem GROUP BY 1, 2),
-         rk AS (
-           SELECT *, row_number() OVER
-             (PARTITION BY l_suppkey ORDER BY q DESC, l_partkey) AS rnk
-           FROM pp),
-         kept AS (
-           SELECT *, row_number() OVER
-             (PARTITION BY l_partkey ORDER BY rnk, 'DRG_' || l_suppkey) AS rn2
-           FROM rk)
-         SELECT 'TGT_' || l_partkey AS id, 'DRG_' || l_suppkey AS drug_id
-         FROM kept WHERE rn2 = 1 ORDER BY id""",
-    "q64_endpoint_search" ->
-      """SELECT p_partkey, p_name, p_brand FROM part
-         WHERE contains(p_name, 'red') ORDER BY p_partkey""",
-    "q65_contamination" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         bex AS (SELECT doc_id AS bench_id, g FROM ex WHERE doc_id % 50 = 0)
-         SELECT e.doc_id, b.bench_id, count(*) AS n_shared
-         FROM ex e JOIN bex b ON e.g = b.g AND e.doc_id <> b.bench_id
-         GROUP BY 1, 2 HAVING count(*) >= 3
-         ORDER BY doc_id, bench_id""",
-    "q182_fuzzy_contamination" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         bex AS (SELECT doc_id AS bench_id, g FROM ex WHERE doc_id % 50 = 0),
-         inter AS (
-           SELECT e.doc_id, b.bench_id, count(*) AS ic
-           FROM ex e JOIN bex b ON e.g = b.g AND e.doc_id <> b.bench_id
-           GROUP BY 1, 2)
-         SELECT i.doc_id, i.bench_id, CAST(i.ic AS BIGINT) AS n_shared,
-           round(CAST(i.ic AS DOUBLE) / (sa.n + sb.n - i.ic), 6) AS jaccard,
-           round(CAST(i.ic AS DOUBLE) / sb.n, 6) AS containment
-         FROM inter i
-         JOIN sz sa ON sa.doc_id = i.doc_id
-         JOIN sz sb ON sb.doc_id = i.bench_id
-         WHERE round(CAST(i.ic AS DOUBLE) / sb.n, 6) >= 0.05
-         ORDER BY i.doc_id, i.bench_id""",
-    "q183_incremental_neardups" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         inter AS (
-           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS i
-           FROM ex l JOIN ex r ON l.g = r.g AND l.doc_id < r.doc_id
-           GROUP BY 1, 2),
-         sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         sel AS (
-           SELECT id_a, id_b,
-             round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) AS jaccard
-           FROM inter
-           JOIN sz sa ON sa.doc_id = id_a
-           JOIN sz sb ON sb.doc_id = id_b
-           WHERE round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) >= 0.6
-             AND (id_a % 4 = 3 OR id_b % 4 = 3))
-         SELECT id_a, id_b, jaccard,
-           CASE WHEN id_a % 4 = 3 AND id_b % 4 = 3
-                THEN 'batch' ELSE 'archive' END AS vs,
-           TRUE AS subset_of_exact, TRUE AS recall_ok
-         FROM sel ORDER BY id_a, id_b""",
-    "q184_weighted_sample" ->
-      """WITH w AS (
-           SELECT doc_id,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-           FROM documents),
-         t AS (
-           SELECT CAST(sum(n_tok) AS BIGINT) AS tw,
-             CAST(count(*) AS BIGINT) AS n
-           FROM w)
-         SELECT doc_id, n_tok,
-           round(least(CAST(1 AS DOUBLE),
-             CAST(1 AS DOUBLE) / 4 * n * n_tok / tw), 6) AS p_keep
-         FROM w, t
-         WHERE tw > 0
-           AND ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13))::BIGINT
-               / CAST(4503599627370496 AS DOUBLE)
-             < least(CAST(1 AS DOUBLE),
-                 CAST(1 AS DOUBLE) / 4 * n * n_tok / tw)
-         ORDER BY doc_id""",
-    "q185_cdc_chunks" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
-         wds0 AS (
-           SELECT doc_id, unnest(range(1, len(ts)+1)) AS pos, ts FROM toks),
-         wds AS (
-           SELECT doc_id, CAST(pos AS BIGINT) AS pos, ts[pos] AS w FROM wds0),
-         flg AS (
-           SELECT doc_id, pos, w,
-             CASE WHEN ('0x' || substr(md5(w), 1, 2))::BIGINT < 32
-                  THEN 1 ELSE 0 END AS b
-           FROM wds),
-         cid AS (
-           SELECT doc_id, pos, w,
-             COALESCE(sum(b) OVER (PARTITION BY doc_id ORDER BY pos
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS ci
-           FROM flg),
-         ch AS (
-           SELECT doc_id, CAST(ci AS BIGINT) AS chunk_idx,
-             CAST(min(pos) AS BIGINT) AS start_pos,
-             CAST(count(*) AS BIGINT) AS n_words,
-             md5(string_agg(w, ' ' ORDER BY pos)) AS chunk_md5
-           FROM cid GROUP BY doc_id, ci)
-         SELECT doc_id, chunk_idx, start_pos, n_words, chunk_md5,
-           row_number() OVER (PARTITION BY chunk_md5
-             ORDER BY doc_id, chunk_idx) > 1 AS is_dup
-         FROM ch ORDER BY doc_id, chunk_idx""",
-    "q186_ivf_append" ->
-      """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0)
-         SELECT e.vec_id,
-           round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-             CAST(q.embedding AS DOUBLE[])), 6) AS cosine,
-           TRUE AS ivf_recall_ok
-         FROM embeddings e, q WHERE e.vec_id <> 0
-         ORDER BY cosine DESC, e.vec_id LIMIT 10""",
-    "q187_jaccard_join" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         inter AS (
-           SELECT l.doc_id AS id_l, r.doc_id AS id_r, count(*) AS i
-           FROM ex l JOIN ex r ON l.g = r.g
-             AND l.doc_id % 4 = 3 AND r.doc_id % 4 <> 3
-           GROUP BY 1, 2)
-         SELECT id_l, id_r,
-           round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) AS jaccard
-         FROM inter
-         JOIN sz sa ON sa.doc_id = id_l
-         JOIN sz sb ON sb.doc_id = id_r
-         WHERE round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) >= 0.5
-         ORDER BY id_l, id_r""",
-    "q188_image_phash" ->
-      """WITH src AS (
-           SELECT doc_id, text, octet_length(encode(text)) AS len,
-             greatest(1, octet_length(encode(text)) // 48) AS h
-           FROM documents WHERE doc_id % 3 = 0),
-         pxj AS (
-           SELECT doc_id, len, text, 16 * h AS n,
-             unnest(range(0, 16 * h)) AS j
-           FROM src),
-         g AS (
-           SELECT doc_id, n, CAST(j AS BIGINT) AS j,
-             (CASE WHEN 3*j+1 <= least(len, CAST(n*3 AS BIGINT))
-                   THEN unicode(substr(text, CAST(3*j+1 AS INT), 1)) ELSE 0 END
-            + CASE WHEN 3*j+2 <= least(len, CAST(n*3 AS BIGINT))
-                   THEN unicode(substr(text, CAST(3*j+2 AS INT), 1)) ELSE 0 END
-            + CASE WHEN 3*j+3 <= least(len, CAST(n*3 AS BIGINT))
-                   THEN unicode(substr(text, CAST(3*j+3 AS INT), 1)) ELSE 0 END
-             ) AS gray
-           FROM pxj),
-         nb AS (SELECT doc_id, max(n) AS n, CAST(sum(gray) AS BIGINT) AS tot
-                FROM g GROUP BY 1),
-         blk AS (SELECT doc_id, (j * 64) // n AS b,
-                   CAST(sum(gray) AS BIGINT) AS bs,
-                   CAST(count(*) AS BIGINT) AS bn
-                 FROM g GROUP BY 1, 2),
-         bits AS (
-           SELECT blk.doc_id, CAST(b AS BIGINT) AS b,
-             CASE WHEN bs * nb.n > nb.tot * bn THEN 1 ELSE 0 END AS bit
-           FROM blk JOIN nb ON blk.doc_id = nb.doc_id),
-         hsh AS (
-           SELECT doc_id,
-             CAST(coalesce(sum(CASE WHEN b < 32
-               THEN bit * (1::BIGINT << CAST(b AS INT)) END), 0) AS BIGINT) AS h1,
-             CAST(coalesce(sum(CASE WHEN b >= 32
-               THEN bit * (1::BIGINT << CAST(b - 32 AS INT)) END), 0) AS BIGINT) AS h2
-           FROM bits GROUP BY 1),
-         prs AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM hsh a JOIN hsh b ON a.doc_id < b.doc_id
-           WHERE bit_count(xor(a.h1, b.h1)) + bit_count(xor(a.h2, b.h2)) <= 3),
-         cnt AS (
-           SELECT doc_id, count(*) AS nd
-           FROM (SELECT id_a AS doc_id FROM prs
-                 UNION ALL SELECT id_b FROM prs)
-           GROUP BY 1)
-         SELECT h.doc_id AS media_id, h1, h2,
-           CAST(coalesce(c.nd, 0) AS BIGINT) AS n_neardups
-         FROM hsh h LEFT JOIN cnt c ON h.doc_id = c.doc_id
-         ORDER BY media_id""",
-    "q189_ingest_capstone" ->
-      """WITH fpt AS (
-           SELECT doc_id, md5(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS fp
-           FROM documents),
-         seen AS (SELECT DISTINCT fp FROM fpt WHERE doc_id % 4 <> 3),
-         s1 AS (
-           SELECT doc_id FROM (
-             SELECT b.doc_id, row_number() OVER
-               (PARTITION BY b.fp ORDER BY b.doc_id) AS rn
-             FROM (SELECT * FROM fpt WHERE doc_id % 4 = 3) b
-             ANTI JOIN seen s ON b.fp = s.fp)
-           WHERE rn = 1),
-         toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         ninter AS (
-           SELECT l.doc_id AS id_l, r.doc_id AS id_r, count(*) AS i
-           FROM ex l JOIN ex r ON l.g = r.g
-             AND l.doc_id % 4 = 3 AND r.doc_id % 4 <> 3
-           GROUP BY 1, 2),
-         near AS (
-           SELECT DISTINCT id_l AS doc_id
-           FROM ninter
-           JOIN sz sa ON sa.doc_id = id_l
-           JOIN sz sb ON sb.doc_id = id_r
-           WHERE round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) >= 0.6),
-         bex AS (SELECT doc_id AS bench_id, g FROM ex WHERE doc_id % 50 = 0),
-         cinter AS (
-           SELECT e.doc_id, b.bench_id, count(*) AS ic
-           FROM ex e JOIN bex b ON e.g = b.g AND e.doc_id <> b.bench_id
-           WHERE e.doc_id % 4 = 3
-           GROUP BY 1, 2),
-         cont AS (
-           SELECT DISTINCT c.doc_id
-           FROM cinter c JOIN sz sb ON sb.doc_id = c.bench_id
-           WHERE round(CAST(c.ic AS DOUBLE) / sb.n, 6) >= 0.5),
-         sv AS (
-           SELECT d.doc_id, d.lang,
-             CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tok
-           FROM documents d
-           JOIN s1 ON d.doc_id = s1.doc_id
-           ANTI JOIN near ON d.doc_id = near.doc_id
-           ANTI JOIN cont ON d.doc_id = cont.doc_id),
-         t AS (
-           SELECT CAST(sum(n_tok) AS BIGINT) AS tw,
-             CAST(count(*) AS BIGINT) AS n
-           FROM sv)
-         SELECT doc_id, lang, n_tok,
-           round(least(CAST(1 AS DOUBLE),
-             CAST(1 AS DOUBLE) / 2 * n * n_tok / tw), 6) AS p_keep
-         FROM sv, t
-         WHERE tw > 0
-           AND ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13))::BIGINT
-               / CAST(4503599627370496 AS DOUBLE)
-             < least(CAST(1 AS DOUBLE),
-                 CAST(1 AS DOUBLE) / 2 * n * n_tok / tw)
-         ORDER BY doc_id""",
-    "q196_hll_intersection" ->
-      """WITH a AS (SELECT DISTINCT l_orderkey AS k FROM lineitem
-                    WHERE l_quantity >= 45),
-         b AS (SELECT DISTINCT l_orderkey AS k FROM lineitem
-               WHERE l_returnflag = 'R')
-         SELECT
-           CAST((SELECT count(*) FROM a) AS BIGINT) AS n_a,
-           CAST((SELECT count(*) FROM b) AS BIGINT) AS n_b,
-           CAST((SELECT count(*) FROM
-             (SELECT k FROM a UNION SELECT k FROM b)) AS BIGINT) AS n_union,
-           CAST((SELECT count(*) FROM
-             (SELECT k FROM a INTERSECT SELECT k FROM b)) AS BIGINT) AS n_inter,
-           TRUE AS a_ok, TRUE AS b_ok, TRUE AS union_ok, TRUE AS inter_ok""",
-    // SQ8: replay the quantization (round is half-away-from-zero in
-    // both engines) and the integer dot product — bit-exact, no
-    // rounding coarsening
-    "q197_sq8_topk" -> SqlSq8TopK,
-    // the streamed code table is bit-identical to the batch build
-    // under the same frozen scales → the same oracle verbatim
-    "q212_stream_sq8_ingest" -> SqlSq8TopK,
-    // batch serve: q197's quantization device crossed with the probe
-    // set, per-probe rank cut — all integer, bit-exact
-    "q211_sq8_batch" ->
-      """WITH d AS (
-           SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings),
-         m AS (SELECT dim, max(abs(x)) AS mx FROM d GROUP BY dim),
-         c AS (
-           SELECT vec_id, d.dim,
-             CASE WHEN mx > 0 THEN CAST(round(x * 127.0 / mx) AS BIGINT)
-                  ELSE 0 END AS code
-           FROM d JOIN m ON d.dim = m.dim),
-         q AS (SELECT vec_id AS query_id, dim, code AS qc FROM c
-               WHERE vec_id IN (0, 7, 13, 21)),
-         sc AS (
-           SELECT q.query_id, c.vec_id AS nn_id,
-             CAST(sum(c.code * q.qc) AS BIGINT) AS qscore
-           FROM c JOIN q ON c.dim = q.dim AND c.vec_id <> q.query_id
-           GROUP BY q.query_id, c.vec_id),
-         r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                 ORDER BY qscore DESC, nn_id) AS rn FROM sc)
-         SELECT query_id, nn_id, qscore FROM r WHERE rn <= 5
-         ORDER BY query_id, qscore DESC, nn_id""",
-    // filtered search: the same bit-exact code ranking restricted to
-    // the predicate's id set (pre-filter semantics)
-    "q208_sq8_filtered" ->
-      """WITH d AS (
-           SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings),
-         m AS (SELECT dim, max(abs(x)) AS mx FROM d GROUP BY dim),
-         c AS (
-           SELECT vec_id, d.dim,
-             CASE WHEN mx > 0 THEN CAST(round(x * 127.0 / mx) AS BIGINT)
-                  ELSE 0 END AS code
-           FROM d JOIN m ON d.dim = m.dim),
-         q AS (SELECT dim, code AS qc FROM c WHERE vec_id = 0)
-         SELECT c.vec_id, CAST(sum(c.code * q.qc) AS BIGINT) AS qscore
-         FROM c JOIN q ON c.dim = q.dim
-         JOIN embeddings e ON e.vec_id = c.vec_id
-         WHERE c.vec_id <> 0 AND e.label = 1
-         GROUP BY c.vec_id
-         ORDER BY qscore DESC, c.vec_id LIMIT 10""",
-    // two-stage serve: q197's code-dot stage feeding an exact rounded
-    // cosine re-rank — both stages deterministic, replayed verbatim
-    "q206_sq8_rerank" ->
-      """WITH d AS (
-           SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings),
-         m AS (SELECT dim, max(abs(x)) AS mx FROM d GROUP BY dim),
-         c AS (
-           SELECT vec_id, d.dim,
-             CASE WHEN mx > 0 THEN CAST(round(x * 127.0 / mx) AS BIGINT)
-                  ELSE 0 END AS code
-           FROM d JOIN m ON d.dim = m.dim),
-         q AS (SELECT dim, code AS qc FROM c WHERE vec_id = 0),
-         s1 AS (
-           SELECT c.vec_id, CAST(sum(c.code * q.qc) AS BIGINT) AS qscore
-           FROM c JOIN q ON c.dim = q.dim
-           WHERE c.vec_id <> 0
-           GROUP BY c.vec_id
-           ORDER BY qscore DESC, c.vec_id LIMIT 50),
-         qv AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-         SELECT s1.vec_id,
-           round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-             CAST(qv.qe AS DOUBLE[])), 6) AS cosine,
-           s1.qscore
-         FROM s1 JOIN embeddings e ON e.vec_id = s1.vec_id CROSS JOIN qv
-         ORDER BY cosine DESC, s1.vec_id LIMIT 10""",
-    // IVF-SQ8 envelope: the UNPRUNED SQ8 ranking replayed bit-exactly
-    // (q197's device), the two pruning guarantees pinned TRUE
-    "q207_ivfsq8_topk" ->
-      """WITH d AS (
-           SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings),
-         m AS (SELECT dim, max(abs(x)) AS mx FROM d GROUP BY dim),
-         c AS (
-           SELECT vec_id, d.dim,
-             CASE WHEN mx > 0 THEN CAST(round(x * 127.0 / mx) AS BIGINT)
-                  ELSE 0 END AS code
-           FROM d JOIN m ON d.dim = m.dim),
-         q AS (SELECT dim, code AS qc FROM c WHERE vec_id = 0)
-         SELECT c.vec_id, CAST(sum(c.code * q.qc) AS BIGINT) AS qscore,
-           TRUE AS ivfsq8_recall_ok, TRUE AS ivfsq8_dominated_ok
-         FROM c JOIN q ON c.dim = q.dim
-         WHERE c.vec_id <> 0
-         GROUP BY c.vec_id
-         ORDER BY qscore DESC, c.vec_id LIMIT 10""",
-    "q198_negative_mining" ->
-      """WITH s AS (SELECT vec_id AS qid, embedding AS qe, label AS ql
-                    FROM embeddings
-                    WHERE vec_id % 100 = 0 AND vec_id < 12800),
-         d AS (
-           SELECT s.qid, e.vec_id AS nn_id, e.label AS neg_label,
-             round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-               CAST(s.qe AS DOUBLE[])), 6) AS cosine
-           FROM s, embeddings e
-           WHERE e.vec_id <> s.qid AND e.label <> s.ql),
-         r AS (
-           SELECT qid, nn_id, neg_label, cosine,
-             row_number() OVER (PARTITION BY qid
-               ORDER BY cosine DESC, nn_id) AS rn
-           FROM d)
-         SELECT CAST(qid AS BIGINT) AS query_id, CAST(nn_id AS BIGINT) AS nn_id,
-           neg_label, cosine
-         FROM r WHERE rn <= 3 ORDER BY query_id, cosine DESC, nn_id""",
-    // stream near-dup envelope = q31's oracle: rows are the exact
-    // pair relation, the stream-accumulated LSH verdicts pinned TRUE
-    "q199_stream_neardups" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         inter AS (
-           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS i
-           FROM ex l JOIN ex r ON l.g = r.g AND l.doc_id < r.doc_id
-           GROUP BY 1, 2),
-         sz AS (SELECT doc_id, len(s) AS n FROM sh)
-         SELECT id_a, id_b,
-           round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) AS jaccard,
-           TRUE AS subset_of_exact, TRUE AS recall_ok
-         FROM inter
-         JOIN sz sa ON sa.doc_id = id_a
-         JOIN sz sb ON sb.doc_id = id_b
-         WHERE round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) >= 0.6
-         ORDER BY id_a, id_b""",
-    "q195_stream_index" ->
-      """WITH tok AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-         post AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-         dl AS (SELECT doc_id, sum(tf) AS dl FROM post GROUP BY 1),
-         stats AS (SELECT count(*) AS nd,
-             CAST(sum(dl) AS DOUBLE)/count(*) AS avgdl FROM dl),
-         idf AS (SELECT term, avgdl,
-             CAST(floor(ln((nd - df + 0.5e0)/(df + 0.5e0) + 1.0e0)*1e4 + 0.5e0)
-               AS BIGINT) AS idf4
-           FROM (SELECT term, count(*) AS df FROM post
-                 WHERE term IN ('dup','spark','window') GROUP BY 1)
-           CROSS JOIN stats),
-         contrib AS (
-           SELECT p.doc_id,
-             i.idf4 * CAST(floor(p.tf*2.2e0/(p.tf + 1.2e0*(0.25e0 + 0.75e0*d.dl/i.avgdl))
-               *1e6 + 0.5e0) AS BIGINT) AS c
-           FROM post p JOIN dl d USING (doc_id) JOIN idf i USING (term)
-           WHERE p.term IN ('dup','spark','window'))
-         SELECT doc_id, count(*) AS n_terms, CAST(sum(c) AS DOUBLE)/1e10 AS bm25
-         FROM contrib GROUP BY doc_id ORDER BY bm25 DESC, doc_id LIMIT 10""",
-    "q194_index_append" ->
-      """WITH tok AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-         post AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-         dl AS (SELECT doc_id, sum(tf) AS dl FROM post GROUP BY 1),
-         stats AS (SELECT count(*) AS nd,
-             CAST(sum(dl) AS DOUBLE)/count(*) AS avgdl FROM dl),
-         idf AS (SELECT term, avgdl,
-             CAST(floor(ln((nd - df + 0.5e0)/(df + 0.5e0) + 1.0e0)*1e4 + 0.5e0)
-               AS BIGINT) AS idf4
-           FROM (SELECT term, count(*) AS df FROM post
-                 WHERE term IN ('dup','spark','window') GROUP BY 1)
-           CROSS JOIN stats),
-         contrib AS (
-           SELECT p.doc_id,
-             i.idf4 * CAST(floor(p.tf*2.2e0/(p.tf + 1.2e0*(0.25e0 + 0.75e0*d.dl/i.avgdl))
-               *1e6 + 0.5e0) AS BIGINT) AS c
-           FROM post p JOIN dl d USING (doc_id) JOIN idf i USING (term)
-           WHERE p.term IN ('dup','spark','window'))
-         SELECT doc_id, count(*) AS n_terms, CAST(sum(c) AS DOUBLE)/1e10 AS bm25
-         FROM contrib GROUP BY doc_id ORDER BY bm25 DESC, doc_id LIMIT 10""",
-    "q193_weighted_sample_grouped" ->
-      """WITH w AS (
-           SELECT doc_id, lang,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-           FROM documents),
-         t AS (
-           SELECT lang, CAST(sum(n_tok) AS BIGINT) AS tw,
-             CAST(count(*) AS BIGINT) AS n
-           FROM w GROUP BY lang)
-         SELECT w.doc_id, w.lang, w.n_tok,
-           round(least(CAST(1 AS DOUBLE),
-             CAST(1 AS DOUBLE) / 4 * n * n_tok / tw), 6) AS p_keep
-         FROM w JOIN t ON w.lang IS NOT DISTINCT FROM t.lang
-         WHERE tw > 0
-           AND ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13))::BIGINT
-               / CAST(4503599627370496 AS DOUBLE)
-             < least(CAST(1 AS DOUBLE),
-                 CAST(1 AS DOUBLE) / 4 * n * n_tok / tw)
-         ORDER BY doc_id""",
-    "q192_video_neardups" ->
-      """WITH src AS (
-           SELECT doc_id, text, octet_length(encode(text)) AS len,
-             greatest(1, octet_length(encode(text)) // 48) AS nf
-           FROM documents WHERE doc_id % 3 = 2),
-         fr AS (SELECT doc_id, len, text, unnest(range(0, nf)) AS f FROM src),
-         px AS (
-           SELECT doc_id, CAST(f AS BIGINT) AS f, len, text,
-             unnest(range(0, 16)) AS j
-           FROM fr),
-         g AS (
-           SELECT doc_id, f, CAST(j AS BIGINT) AS j,
-             (CASE WHEN 48*f + 3*j + 1 <= len THEN
-                unicode(substr(text, CAST(48*f + 3*j + 1 AS INT), 1)) ELSE 0 END
-            + CASE WHEN 48*f + 3*j + 2 <= len THEN
-                unicode(substr(text, CAST(48*f + 3*j + 2 AS INT), 1)) ELSE 0 END
-            + CASE WHEN 48*f + 3*j + 3 <= len THEN
-                unicode(substr(text, CAST(48*f + 3*j + 3 AS INT), 1)) ELSE 0 END
-             ) AS gray
-           FROM px),
-         tot AS (SELECT doc_id, f, CAST(sum(gray) AS BIGINT) AS tot
-                 FROM g GROUP BY 1, 2),
-         bits AS (
-           SELECT g.doc_id, g.f, 4 * j AS b,
-             CASE WHEN gray * 16 > tot THEN 1 ELSE 0 END AS bit
-           FROM g JOIN tot ON g.doc_id = tot.doc_id AND g.f = tot.f),
-         hsh AS (
-           SELECT doc_id, f,
-             CAST(coalesce(sum(CASE WHEN b < 32
-               THEN bit * (1::BIGINT << CAST(b AS INT)) END), 0) AS BIGINT) AS h1,
-             CAST(coalesce(sum(CASE WHEN b >= 32
-               THEN bit * (1::BIGINT << CAST(b - 32 AS INT)) END), 0) AS BIGINT) AS h2
-           FROM bits GROUP BY 1, 2),
-         fsets AS (SELECT DISTINCT doc_id, h1, h2 FROM hsh)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           count(*) AS n_shared
-         FROM fsets a JOIN fsets b
-           ON a.h1 = b.h1 AND a.h2 = b.h2 AND a.doc_id < b.doc_id
-         GROUP BY 1, 2 HAVING count(*) >= 2
-         ORDER BY id_a, id_b""",
-    "q191_incremental_clusters" ->
-      """WITH RECURSIVE toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         inter AS (
-           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS i
-           FROM ex l JOIN ex r ON l.g = r.g AND l.doc_id < r.doc_id
-           GROUP BY 1, 2),
-         sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         pairs AS (
-           SELECT id_a, id_b FROM inter
-           JOIN sz sa ON sa.doc_id = id_a
-           JOIN sz sb ON sb.doc_id = id_b
-           WHERE round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) >= 0.6),
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(id, lbl) AS (
-           SELECT DISTINCT src, src FROM edges
-           UNION
-           SELECT e.src, r.lbl FROM edges e JOIN reach r ON r.id = e.dst)
-         SELECT id, min(lbl) AS canonical_id FROM reach
-         GROUP BY id ORDER BY id""",
-    "q190_audio_phash" ->
-      """WITH src AS (
-           SELECT doc_id, text, octet_length(encode(text)) AS len,
-             greatest(1, octet_length(encode(text)) // 2) AS n
-           FROM documents WHERE doc_id % 3 = 1),
-         smpj AS (
-           SELECT doc_id, len, text, n, unnest(range(0, n)) AS j FROM src),
-         smp AS (
-           SELECT doc_id, n, CAST(j AS BIGINT) AS j,
-             abs(unicode(substr(text, CAST(2*j+1 AS INT), 1))
-               + 256 * unicode(substr(text, CAST(2*j+2 AS INT), 1))
-               - CASE WHEN unicode(substr(text, CAST(2*j+2 AS INT), 1)) >= 128
-                      THEN 65536 ELSE 0 END) AS e
-           FROM smpj),
-         nb AS (SELECT doc_id, max(n) AS n, CAST(sum(e) AS BIGINT) AS tot
-                FROM smp GROUP BY 1),
-         blk AS (SELECT doc_id, (j * 64) // n AS b,
-                   CAST(sum(e) AS BIGINT) AS bs,
-                   CAST(count(*) AS BIGINT) AS bn
-                 FROM smp GROUP BY 1, 2),
-         bits AS (
-           SELECT blk.doc_id, CAST(b AS BIGINT) AS b,
-             CASE WHEN bs * nb.n > nb.tot * bn THEN 1 ELSE 0 END AS bit
-           FROM blk JOIN nb ON blk.doc_id = nb.doc_id),
-         hsh AS (
-           SELECT doc_id,
-             CAST(coalesce(sum(CASE WHEN b < 32
-               THEN bit * (1::BIGINT << CAST(b AS INT)) END), 0) AS BIGINT) AS h1,
-             CAST(coalesce(sum(CASE WHEN b >= 32
-               THEN bit * (1::BIGINT << CAST(b - 32 AS INT)) END), 0) AS BIGINT) AS h2
-           FROM bits GROUP BY 1),
-         prs AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM hsh a JOIN hsh b ON a.doc_id < b.doc_id
-           WHERE bit_count(xor(a.h1, b.h1)) + bit_count(xor(a.h2, b.h2)) <= 3),
-         cnt AS (
-           SELECT doc_id, count(*) AS nd
-           FROM (SELECT id_a AS doc_id FROM prs
-                 UNION ALL SELECT id_b FROM prs)
-           GROUP BY 1)
-         SELECT h.doc_id AS media_id, h1, h2,
-           CAST(coalesce(c.nd, 0) AS BIGINT) AS n_neardups
-         FROM hsh h LEFT JOIN cnt c ON h.doc_id = c.doc_id
-         ORDER BY media_id""",
-    "q66_pii_redaction" ->
-      """WITH aug AS (
-           SELECT doc_id,
-             text || ' contact user' || CAST(doc_id AS VARCHAR)
-               || '@example.com or 555-123-4567 now' AS text2
-           FROM documents)
-         SELECT doc_id,
-           CAST(len(regexp_extract_all(text2,
-             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-           md5(regexp_replace(regexp_replace(text2,
-             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-             '\b\d{3}[-. ]\d{3}[-. ]\d{4}\b', '[PHONE]', 'g')) AS redacted_fp
-         FROM aug ORDER BY doc_id""",
-    "q67_hash_sample" ->
-      """SELECT lang, count(*) AS n_sampled, count(DISTINCT doc_id) AS n_docs
-         FROM documents
-         WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('0','1','2')
-         GROUP BY lang ORDER BY lang""",
-    "q69_dup_clusters" ->
-      """WITH RECURSIVE toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         inter AS (
-           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS i
-           FROM ex l JOIN ex r ON l.g = r.g AND l.doc_id < r.doc_id
-           GROUP BY 1, 2),
-         sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         pairs AS (
-           SELECT id_a, id_b FROM inter
-           JOIN sz sa ON sa.doc_id = id_a
-           JOIN sz sb ON sb.doc_id = id_b
-           WHERE round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) >= 0.6),
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(id, lbl) AS (
-           SELECT DISTINCT src, src FROM edges
-           UNION
-           SELECT e.src, r.lbl FROM edges e JOIN reach r ON r.id = e.dst)
-         SELECT id, min(lbl) AS canonical_id FROM reach
-         GROUP BY id ORDER BY id""",
-    "q125_training_corpus" ->
-      """WITH RECURSIVE toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         inter AS (
-           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS i
-           FROM ex l JOIN ex r ON l.g = r.g AND l.doc_id < r.doc_id
-           GROUP BY 1, 2),
-         sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         pairs AS (
-           SELECT id_a, id_b FROM inter
-           JOIN sz sa ON sa.doc_id = id_a
-           JOIN sz sb ON sb.doc_id = id_b
-           WHERE round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) >= 0.6),
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(id, lbl) AS (
-           SELECT DISTINCT src, src FROM edges
-           UNION
-           SELECT e.src, r.lbl FROM edges e JOIN reach r ON r.id = e.dst),
-         labels AS (SELECT id, min(lbl) AS canonical_id FROM reach GROUP BY id),
-         dup_drop AS (SELECT id FROM labels WHERE id <> canonical_id),
-         bex AS (SELECT doc_id AS bench_id, g FROM ex WHERE doc_id % 50 = 0),
-         contam AS (
-           SELECT DISTINCT doc_id FROM (
-             SELECT e.doc_id, b.bench_id
-             FROM ex e JOIN bex b ON e.g = b.g AND e.doc_id <> b.bench_id
-             GROUP BY 1, 2 HAVING count(*) >= 3)),
-         kept AS (
-           SELECT * FROM documents
-           WHERE doc_id NOT IN (SELECT id FROM dup_drop)
-             AND doc_id NOT IN (SELECT doc_id FROM contam)
-             AND doc_id % 50 <> 0
-             AND len(string_split(text,' ')) BETWEEN 10 AND 1000
-             AND CAST(len(list_distinct(string_split(text,' '))) AS DOUBLE)
-               / len(string_split(text,' ')) > 0.2)
-         SELECT lang, count(*) AS docs_kept,
-           CAST(sum(len(string_split(text,' '))) AS BIGINT) AS total_tokens
-         FROM kept GROUP BY lang ORDER BY lang""",
-    "q68_sequence_packing" ->
-      """WITH sized AS (
-           SELECT doc_id, doc_id % 8 AS bucket,
-             len(string_split(text, ' ')) AS n_tokens
-           FROM documents),
-         cum AS (
-           SELECT *, sum(n_tokens) OVER (PARTITION BY bucket ORDER BY doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
-           FROM sized)
-         SELECT bucket, CAST(floor((c - n_tokens) / 2048.0) AS BIGINT) AS bin,
-           count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS sum_tokens
-         FROM cum GROUP BY bucket, bin
-         ORDER BY bucket, bin""",
-    "q63_kg_target_pathways" ->
-      """WITH pair AS (
-           SELECT c_mktsegment AS m, l_partkey AS p, sum(l_quantity) AS q
-           FROM lineitem
-           JOIN orders ON o_orderkey = l_orderkey
-           JOIN customer ON c_custkey = o_custkey
-           GROUP BY 1, 2),
-         edges AS (
-           SELECT 'DIS_' || m AS disease_id, 'TGT_' || p AS target_id,
-             round(q / sum(q) OVER (PARTITION BY p), 6) AS score
-           FROM pair),
-         main_targets AS (
-           SELECT target_id FROM (
-             SELECT *, row_number() OVER
-               (PARTITION BY target_id ORDER BY score DESC, disease_id) AS rn
-             FROM edges WHERE disease_id = 'DIS_BUILDING' AND score >= 0.33)
-           WHERE rn = 1),
-         pw AS (
-           SELECT 'TGT_' || p_partkey AS target_id,
-             'PWY_' || p_brand AS "pathwayId",
-             p_brand AS pathway, p_type AS "topLevelTerm"
-           FROM part),
-         kept AS (
-           SELECT *, row_number() OVER
-             (PARTITION BY "pathwayId" ORDER BY target_id) AS rn
-           FROM pw WHERE target_id IN (SELECT target_id FROM main_targets))
-         SELECT "pathwayId", pathway, "topLevelTerm", target_id
-         FROM kept WHERE rn = 1 ORDER BY "pathwayId"""",
-    "q51_corpus_prep" ->
-      """WITH gated AS (
-           SELECT * FROM documents
-           WHERE lang IN ('en','de','es','fr','zh')
-             AND len(string_split(text,' ')) BETWEEN 10 AND 1000
-             AND CAST(len(list_distinct(string_split(text,' '))) AS DOUBLE)
-               / len(string_split(text,' ')) > 0.2),
-         kept AS (
-           SELECT * FROM gated WHERE doc_id IN (
-             SELECT min(doc_id) FROM gated
-             GROUP BY md5(trim(regexp_replace(regexp_replace(lower(text),
-               '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')))))
-         SELECT lang, count(*) AS docs_kept,
-           CAST(sum(len(string_split(text,' '))) AS BIGINT) AS total_tokens,
-           round(avg(n_chars),4) AS avg_chars
-         FROM kept GROUP BY lang ORDER BY lang""",
-    "q70_repetition" ->
-      """WITH norm AS (
-           SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text),
-             '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')) AS nt
-           FROM documents),
-         toks AS (
-           SELECT doc_id, unnest(string_split(nt, ' ')) AS tok,
-             generate_subscripts(string_split(nt, ' '), 1) AS ord
-           FROM norm),
-         grams AS (
-           SELECT doc_id,
-             tok || ' ' || lead(tok) OVER (PARTITION BY doc_id ORDER BY ord) AS g
-           FROM toks QUALIFY g IS NOT NULL),
-         counts AS (SELECT doc_id, g, count(*) AS c FROM grams GROUP BY 1, 2)
-         SELECT doc_id, round(max(c)*1.0/sum(c), 6) AS top2_frac,
-           round(sum(CASE WHEN c >= 2 THEN c ELSE 0 END)*1.0/sum(c), 6) AS dup2_frac,
-           CAST(sum(c) AS BIGINT) AS n_grams
-         FROM counts GROUP BY doc_id ORDER BY doc_id""",
-    "q71_domain_mix" ->
-      """SELECT source, count(*) AS n_docs,
-         CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-         FROM documents
-         WHERE strpos('0123456789abcdef',
-             substring(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1
-           < (CAST(regexp_extract(source, '\d+') AS INT) % 4) * 4 + 4
-         GROUP BY source ORDER BY source""",
-    "q72_chunking" ->
-      """WITH t AS (
-           SELECT doc_id, string_split(text, ' ') AS toks,
-             len(string_split(text, ' ')) AS nt
-           FROM documents),
-         starts AS (
-           SELECT doc_id, nt, unnest(generate_series(0, nt - 1, 32)) AS st
-           FROM t),
-         chunks AS (
-           SELECT s.doc_id, CAST(s.st / 32 AS BIGINT) AS chunk_idx,
-             list_slice(t.toks, s.st + 1, least(s.st + 64, s.nt)) AS ctoks
-           FROM starts s JOIN t ON s.doc_id = t.doc_id)
-         SELECT doc_id, chunk_idx, CAST(len(ctoks) AS BIGINT) AS chunk_tokens,
-           md5(array_to_string(ctoks, ' ')) AS chunk_md5
-         FROM chunks ORDER BY doc_id, chunk_idx""",
-    "q73_vec_quantize" ->
-      """WITH q AS (
-           SELECT vec_id, label,
-             list_aggregate(list_transform(CAST(embedding AS DOUBLE[]),
-               x -> abs(x)), 'max') / 127.0 AS scale
-           FROM embeddings),
-         e AS (
-           SELECT q.vec_id, q.label, q.scale,
-             CASE WHEN q.scale > 0 THEN
-               list_aggregate(list_transform(CAST(em.embedding AS DOUBLE[]),
-                 x -> abs(x - floor(x / q.scale + 0.5) * q.scale)), 'avg')
-             ELSE 0.0 END AS mean_err
-           FROM q JOIN embeddings em ON q.vec_id = em.vec_id)
-         SELECT label, round(avg(mean_err), 6) AS avg_err,
-           round(max(scale), 6) AS max_scale, count(*) AS n
-         FROM e GROUP BY label ORDER BY label""",
-    "q74_asof_join" ->
-      """SELECT c.event_id, c.user_id,
-         CAST(coalesce(p.event_id, -1) AS BIGINT) AS purchase_event_id,
-         coalesce(epoch_us(c.ts) - epoch_us(p.ts), -1) AS gap_us
-         FROM (SELECT * FROM events WHERE event_type = 'click') c
-         ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-           ON c.user_id = p.user_id AND c.ts >= p.ts
-         ORDER BY c.event_id""",
-    "q75_range_join" ->
-      """SELECT e.event_id, e.user_id,
-         CAST(count(c.event_id) AS BIGINT) AS n_clicks
-         FROM (SELECT * FROM events WHERE event_type = 'error') e
-         LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-           ON c.user_id = e.user_id
-           AND epoch_us(c.ts)
-             BETWEEN epoch_us(e.ts) - 300000000 AND epoch_us(e.ts)
-         GROUP BY e.event_id, e.user_id ORDER BY e.event_id""",
-    "q76_percentiles" ->
-      """SELECT l_returnflag,
-         round(quantile_cont(l_quantity, 0.5), 6) AS p50,
-         round(quantile_cont(l_quantity, 0.95), 6) AS p95,
-         round(quantile_cont(l_extendedprice, 0.99), 6) AS p99_price
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q77_cube" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n
-         FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-         ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""",
-    "q78_pivot" ->
-      """SELECT user_id,
-         CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS click,
-         CAST(count(*) FILTER (event_type = 'error') AS BIGINT) AS error,
-         CAST(count(*) FILTER (event_type = 'purchase') AS BIGINT) AS purchase
-         FROM events GROUP BY user_id ORDER BY user_id""",
-    "q79_stratified_sample" ->
-      """WITH b AS (
-           SELECT lang, doc_id,
-             16*(strpos('0123456789abcdef',
-                   substr(md5(CAST(doc_id AS VARCHAR)),1,1))-1)
-              + (strpos('0123456789abcdef',
-                   substr(md5(CAST(doc_id AS VARCHAR)),2,1))-1) AS bucket,
-             CASE lang WHEN 'en' THEN 64 WHEN 'zh' THEN 128 ELSE 192 END AS thr
-           FROM documents)
-         SELECT lang, count(*) AS n_sampled,
-           CAST(min(bucket) AS BIGINT) AS min_bucket,
-           CAST(max(bucket) AS BIGINT) AS max_bucket
-         FROM b WHERE bucket < thr GROUP BY lang ORDER BY lang""",
-    "q80_tfidf_top_term" ->
-      """WITH tok AS (
-           SELECT doc_id, unnest(string_split(text,' ')) AS token FROM documents),
-         tf AS (SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY 1,2),
-         df AS (SELECT token, count(*) AS dfreq FROM tf GROUP BY 1),
-         n AS (SELECT count(*) AS n_docs FROM documents),
-         scored AS (
-           SELECT tf.doc_id, tf.token,
-             round(tf.tf * ln((n.n_docs + 1.0)/(df.dfreq + 1.0)), 6) AS score
-           FROM tf JOIN df USING (token) CROSS JOIN n),
-         rk AS (SELECT doc_id, token, score, row_number() OVER
-             (PARTITION BY doc_id ORDER BY score DESC, token) AS rk
-           FROM scored)
-         SELECT doc_id, token, score FROM rk WHERE rk = 1 ORDER BY doc_id""",
-    "q81_moving_stats" ->
-      """WITH ev AS (
-           SELECT event_id, user_id, ts,
-             CAST(floor(value*100 + 0.5) AS BIGINT) AS cents FROM events)
-         SELECT event_id, user_id,
-           floor((sum(cents) OVER w) * 1e6
-             / (100.0 * (count(*) OVER w)) + 0.5)/1e6 AS mavg3,
-           CAST(sum(cents) OVER (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-             AS run_cents
-         FROM ev
-         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-           ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-         ORDER BY event_id""",
-    "q82_matryoshka" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-                    FROM embeddings),
-         m AS (SELECT vec_id, e, list_slice(e, 1, 16) AS e16 FROM v)
-         SELECT vec_id,
-           floor(sqrt(list_aggregate(list_transform(e, x -> x*x), 'sum'))
-             * 1e6 + 0.5)/1e6 AS norm_full,
-           floor(sqrt(list_aggregate(list_transform(e16, x -> x*x), 'sum'))
-             * 1e6 + 0.5)/1e6 AS norm16,
-           floor(e16[1]/sqrt(list_aggregate(list_transform(e16, x -> x*x), 'sum'))
-             * 1e6 + 0.5)/1e6 AS c1_norm
-         FROM m ORDER BY vec_id""",
-    "q84_unigram_surprisal" ->
-      """WITH tok AS (
-           SELECT doc_id, unnest(string_split(text,' ')) AS token FROM documents),
-         freq AS (SELECT token, count(*) AS c FROM tok GROUP BY 1),
-         tot AS (SELECT count(*) AS n FROM tok),
-         lp AS (SELECT token,
-             CAST(floor(-ln(CAST(c AS DOUBLE)/t.n)*1e4 + 0.5) AS BIGINT) AS lp4
-           FROM freq CROSS JOIN tot t),
-         per AS (SELECT doc_id, sum(lp4) AS slp, count(*) AS nt
-           FROM tok JOIN lp USING (token) GROUP BY doc_id)
-         SELECT doc_id, nt AS n_tokens,
-           floor(CAST(slp AS DOUBLE)/(1e4*nt)*1e6 + 0.5)/1e6 AS avg_surprisal
-         FROM per ORDER BY doc_id""",
-    "q85_length_deciles" ->
-      """SELECT lang, decile, count(*) AS n,
-           min(n_chars) AS min_chars, max(n_chars) AS max_chars
-         FROM (SELECT lang, n_chars,
-                 CAST(ntile(10) OVER (PARTITION BY lang
-                   ORDER BY n_chars, doc_id) AS BIGINT) AS decile
-               FROM documents)
-         GROUP BY lang, decile ORDER BY lang, decile""",
-    "q86_asof_forward" ->
-      """SELECT c.event_id, c.user_id,
-         CAST(coalesce(p.event_id, -1) AS BIGINT) AS next_purchase_id,
-         coalesce(epoch_us(p.ts) - epoch_us(c.ts), -1) AS wait_us
-         FROM (SELECT * FROM events WHERE event_type = 'click') c
-         ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-           ON c.user_id = p.user_id AND c.ts <= p.ts
-         ORDER BY c.event_id""",
-    "q89_incremental_dedup" ->
-      """WITH fp AS (
-           SELECT doc_id, lang, md5(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS fp
-           FROM documents),
-         seen AS (SELECT DISTINCT fp FROM fp WHERE doc_id % 2 = 0),
-         batch AS (SELECT * FROM fp WHERE doc_id % 2 <> 0)
-         SELECT doc_id, lang, fp FROM (
-           SELECT b.doc_id, b.lang, b.fp, row_number() OVER
-             (PARTITION BY b.fp ORDER BY b.doc_id) AS rn
-           FROM batch b ANTI JOIN seen s ON b.fp = s.fp)
-         WHERE rn = 1 ORDER BY doc_id""",
-    "q90_neardup_prune" ->
-      """WITH RECURSIVE toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         inter AS (
-           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS i
-           FROM ex l JOIN ex r ON l.g = r.g AND l.doc_id < r.doc_id
-           GROUP BY 1, 2),
-         sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         pairs AS (
-           SELECT id_a, id_b FROM inter
-           JOIN sz sa ON sa.doc_id = id_a
-           JOIN sz sb ON sb.doc_id = id_b
-           WHERE round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) >= 0.6),
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(id, lbl) AS (
-           SELECT DISTINCT src, src FROM edges
-           UNION
-           SELECT e.src, r.lbl FROM edges e JOIN reach r ON r.id = e.dst),
-         labels AS (SELECT id, min(lbl) AS canonical_id FROM reach GROUP BY id),
-         dropped AS (SELECT id FROM labels WHERE id <> canonical_id)
-         SELECT lang, count(*) AS n_kept,
-           CAST(sum(n_chars) AS BIGINT) AS kept_chars
-         FROM documents d ANTI JOIN dropped x ON d.doc_id = x.id
-         GROUP BY lang ORDER BY lang""",
-    // SemDeDup envelope: cluster ids / survivors ride engine-float
-    // k-means centroids, so the oracle pins the GUARANTEES — survivors
-    // drawn from the corpus with a sane count, and no two survivors of
-    // one cluster within tau — plus the corpus size it audited
-    "q92_semantic_dedup" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_vecs,
-           TRUE AS survivors_in_corpus, TRUE AS no_close_survivors
-         FROM embeddings""",
-    "q93_epoch_shuffle" ->
-      """WITH s AS (
-           SELECT doc_id, lang,
-             md5('1:' || CAST(doc_id AS VARCHAR)) AS ord
-           FROM documents),
-         b AS (
-           SELECT doc_id, lang, ord,
-             (16*(strpos('0123456789abcdef', substr(md5(ord),1,1))-1)
-               + (strpos('0123456789abcdef', substr(md5(ord),2,1))-1)) % 8
-               AS shard
-           FROM s)
-         SELECT doc_id, lang, CAST(shard AS BIGINT) AS shard,
-           CAST(row_number() OVER
-             (PARTITION BY shard ORDER BY ord, doc_id) AS BIGINT) AS pos
-         FROM b ORDER BY shard, pos""",
-    "q94_temperature_mix" ->
-      """WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang),
-         m AS (SELECT min(n) AS n_min FROM c),
-         r AS (SELECT lang,
-             CAST(floor(sqrt(CAST(n_min AS DOUBLE) / CAST(n AS DOUBLE)) * 256)
-               AS INT) AS keep256
-           FROM c, m),
-         g AS (
-           SELECT d.lang, d.n_chars,
-             16*(strpos('0123456789abcdef',
-                   substr(md5(CAST(doc_id AS VARCHAR)),1,1))-1)
-              + (strpos('0123456789abcdef',
-                   substr(md5(CAST(doc_id AS VARCHAR)),2,1))-1) AS bucket,
-             keep256
-           FROM documents d JOIN r USING (lang))
-         SELECT lang, count(*) AS n_kept,
-           CAST(sum(n_chars) AS BIGINT) AS kept_chars
-         FROM g WHERE bucket < keep256
-         GROUP BY lang ORDER BY lang""",
-    "q95_oov_rate" ->
-      """WITH tok AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS token
-           FROM documents),
-         vc AS (
-           SELECT token FROM (
-             SELECT token, count(*) AS c FROM tok GROUP BY token
-             ORDER BY c DESC, token ASC LIMIT 24)),
-         j AS (
-           SELECT t.doc_id, (v.token IS NOT NULL) AS iv
-           FROM tok t LEFT JOIN vc v ON t.token = v.token)
-         SELECT doc_id, count(*) AS n_tokens,
-           CAST(sum(CASE WHEN iv THEN 0 ELSE 1 END) AS BIGINT) AS n_oov,
-           round(CAST(sum(CASE WHEN iv THEN 0 ELSE 1 END) AS DOUBLE)
-             / count(*), 6) AS oov_frac
-         FROM j GROUP BY doc_id ORDER BY doc_id""",
-    "q96_label_cap" ->
-      """SELECT vec_id, label FROM (
-           SELECT vec_id, label, row_number() OVER (
-             PARTITION BY label
-             ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk
-           FROM embeddings)
-         WHERE rk <= 20 ORDER BY label, vec_id""",
-    "q97_jsonl_roundtrip" ->
-      """SELECT source, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-         FROM documents WHERE n_chars > 200
-         GROUP BY source ORDER BY source""",
-    // the q97 device on the ORC round-trip: the oracle recomputes
-    // from the parquet source
-    "q224_orc_roundtrip" ->
-      """SELECT source, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-         FROM documents WHERE n_chars > 200
-         GROUP BY source ORDER BY source""",
-    // point-serve lookup envelope: the exact pair relation (q31's
-    // device) restricted to probe ends, both orientations; the
-    // lookup's subset/recall verdicts ride pinned TRUE
-    "q230_neardup_lookup" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         inter AS (
-           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS i
-           FROM ex l JOIN ex r ON l.g = r.g AND l.doc_id < r.doc_id
-           GROUP BY 1, 2),
-         sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         pairs AS (
-           SELECT id_a, id_b,
-             round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) AS jaccard
-           FROM inter
-           JOIN sz sa ON sa.doc_id = id_a
-           JOIN sz sb ON sb.doc_id = id_b
-           WHERE round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) >= 0.6),
-         pr AS (SELECT doc_id AS p FROM documents WHERE doc_id % 40 = 0)
-         SELECT u.probe_id, u.doc_id, u.jaccard,
-           TRUE AS subset_of_exact, TRUE AS recall_ok
-         FROM (SELECT id_a AS probe_id, id_b AS doc_id, jaccard
-                 FROM pairs JOIN pr ON id_a = p
-               UNION ALL
-               SELECT id_b AS probe_id, id_a AS doc_id, jaccard
-                 FROM pairs JOIN pr ON id_b = p) u
-         ORDER BY probe_id, doc_id""",
-    // search-union page: tag + arm columns dissected per entity kind;
-    // total is the FULL match count while rows stop at the page
-    "q231_graphql_search_union" ->
-      """WITH hits AS (
-           SELECT 'DIS_' || c_mktsegment AS id, c_mktsegment AS name,
-             'disease' AS entity, CAST(NULL AS VARCHAR) AS bio,
-             CAST(NULL AS VARCHAR) AS dtype, CAST(NULL AS BOOLEAN) AS appr
-           FROM (SELECT DISTINCT c_mktsegment FROM customer)
-           WHERE lower(c_mktsegment) LIKE '%r%'
-           UNION ALL
-           SELECT 'TGT_' || p_partkey, p_name, 'target', p_type,
-             CAST(NULL AS VARCHAR), CAST(NULL AS BOOLEAN)
-           FROM part WHERE lower(p_name) LIKE '%r%'
-           UNION ALL
-           SELECT 'DRG_' || s_suppkey, s_name, 'drug',
-             CAST(NULL AS VARCHAR), lower(n_name), s_acctbal >= 0
-           FROM supplier JOIN nation ON n_nationkey = s_nationkey
-           WHERE lower(s_name) LIKE '%r%'),
-         sel AS (
-           SELECT *, row_number() OVER (ORDER BY name, id) AS rn FROM hits)
-         SELECT (SELECT count(*) FROM hits) AS total, rn, id, entity,
-           CASE entity WHEN 'disease' THEN 'Disease'
-             WHEN 'target' THEN 'Target' ELSE 'Drug' END AS tname,
-           CASE WHEN entity = 'target' THEN name END AS t_sym,
-           bio AS t_bio,
-           CASE WHEN entity = 'drug' THEN name END AS d_name,
-           dtype AS d_type, CAST(appr AS VARCHAR) AS d_appr,
-           CASE WHEN entity = 'disease' THEN name END AS s_name
-         FROM sel WHERE rn <= 50 ORDER BY rn""",
-    // facets: hits narrowed to one category, counts over the full
-    // query scope riding every row
-    "q232_graphql_facets" ->
-      """WITH scope AS (
-           SELECT 'DIS_' || c_mktsegment AS id, c_mktsegment AS name,
-             'disease' AS entity
-           FROM (SELECT DISTINCT c_mktsegment FROM customer)
-           WHERE lower(c_mktsegment) LIKE '%r%'
-           UNION ALL
-           SELECT 'TGT_' || p_partkey, p_name, 'target'
-           FROM part WHERE lower(p_name) LIKE '%r%'
-           UNION ALL
-           SELECT 'DRG_' || s_suppkey, s_name, 'drug'
-           FROM supplier WHERE lower(s_name) LIKE '%r%'),
-         h AS (SELECT * FROM scope WHERE entity = 'disease'),
-         sel AS (
-           SELECT id, name, entity,
-             row_number() OVER (ORDER BY name, id) AS rn FROM h)
-         SELECT (SELECT count(*) FROM h) AS total, rn, id,
-           name AS label, entity AS category,
-           (SELECT count(*) FROM scope WHERE entity = 'disease') AS n_disease,
-           (SELECT count(*) FROM scope WHERE entity = 'target') AS n_target,
-           (SELECT count(*) FROM scope WHERE entity = 'drug') AS n_drug
-         FROM sel ORDER BY rn""",
-    // CDC segment dedup over the corpus + its prefix-shifted twin:
-    // boundary flags -> prefix-count window -> chunk fingerprints ->
-    // keep-first by (doc, seg) -> position-ordered reassembly
-    "q233_cdc_segment_dedup" ->
-      """WITH corpus AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 1000000, 'zq ' || text FROM documents),
-         toks AS (SELECT doc_id, string_split(text, ' ') AS ts FROM corpus),
-         wds0 AS (
-           SELECT doc_id, unnest(range(1, len(ts)+1)) AS pos, ts FROM toks),
-         wds AS (
-           SELECT doc_id, CAST(pos AS BIGINT) AS pos, ts[pos] AS w FROM wds0),
-         flg AS (
-           SELECT doc_id, pos, w,
-             CASE WHEN ('0x' || substr(md5(w), 1, 2))::BIGINT < 32
-                  THEN 1 ELSE 0 END AS b
-           FROM wds),
-         cid AS (
-           SELECT doc_id, pos, w,
-             COALESCE(sum(b) OVER (PARTITION BY doc_id ORDER BY pos
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS ci
-           FROM flg),
-         ch AS (
-           SELECT doc_id, CAST(ci AS BIGINT) AS seg,
-             string_agg(w, ' ' ORDER BY pos) AS ctext,
-             md5(string_agg(w, ' ' ORDER BY pos)) AS cmd5
-           FROM cid GROUP BY doc_id, ci),
-         keepf AS (
-           SELECT doc_id, seg, ctext,
-             row_number() OVER (PARTITION BY cmd5
-               ORDER BY doc_id, seg) AS rn
-           FROM ch)
-         SELECT doc_id,
-           CAST(count(*) FILTER (WHERE rn = 1) AS BIGINT) AS n_kept,
-           CAST(count(*) FILTER (WHERE rn > 1) AS BIGINT) AS n_dropped,
-           md5(COALESCE(string_agg(ctext, ' ' ORDER BY seg)
-             FILTER (WHERE rn = 1), '')) AS clean_fp
-         FROM keepf GROUP BY doc_id ORDER BY doc_id""",
-    // PQ append serve: exact L2 top-10 rows (q148's device) with the
-    // appended-index guarantees pinned TRUE
-    "q234_pq_append_serve" ->
-      """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0)
-         SELECT e.vec_id,
-           round(list_distance(CAST(e.embedding AS DOUBLE[]),
-             CAST(q.embedding AS DOUBLE[])), 6) AS l2,
-           TRUE AS pq_append_recall_ok, TRUE AS pq_recall_dominated_ok
-         FROM embeddings e, q WHERE e.vec_id <> 0
-         ORDER BY l2 ASC, e.vec_id LIMIT 10""",
-    // search aggregations: full-scope facet counts next to a page
-    "q235_graphql_search_aggs" ->
-      """WITH scope AS (
-           SELECT 'DIS_' || c_mktsegment AS id, c_mktsegment AS name,
-             'disease' AS entity
-           FROM (SELECT DISTINCT c_mktsegment FROM customer)
-           WHERE lower(c_mktsegment) LIKE '%r%'
-           UNION ALL
-           SELECT 'TGT_' || p_partkey, p_name, 'target'
-           FROM part WHERE lower(p_name) LIKE '%r%'
-           UNION ALL
-           SELECT 'DRG_' || s_suppkey, s_name, 'drug'
-           FROM supplier WHERE lower(s_name) LIKE '%r%'),
-         sel AS (
-           SELECT id, entity,
-             row_number() OVER (ORDER BY name, id) AS rn FROM scope)
-         SELECT (SELECT count(*) FROM scope) AS total, rn, id, entity,
-           (SELECT count(*) FROM scope) AS agg_total,
-           (SELECT count(*) FROM scope WHERE entity = 'disease') AS n_disease,
-           (SELECT count(*) FROM scope WHERE entity = 'target') AS n_target,
-           (SELECT count(*) FROM scope WHERE entity = 'drug') AS n_drug,
-           (SELECT count(*) FROM scope WHERE entity = 'drug') AS drug_cat_total
-         FROM sel WHERE rn <= 10 ORDER BY rn""",
-    // mapIds: per-term hit lists in request order; the zero-hit term
-    // rides as a null-rn row
-    "q236_graphql_mapids" ->
-      """WITH terms(term, ord) AS (
-           VALUES ('machinery', 1), ('zzqq', 2), ('lavender', 3)),
-         scope AS (
-           SELECT 'DIS_' || c_mktsegment AS id, c_mktsegment AS name,
-             'disease' AS entity
-           FROM (SELECT DISTINCT c_mktsegment FROM customer)
-           UNION ALL
-           SELECT 'TGT_' || p_partkey, p_name, 'target' FROM part
-           UNION ALL
-           SELECT 'DRG_' || s_suppkey, s_name, 'drug' FROM supplier),
-         m AS (
-           SELECT t.term, t.ord, s.id, s.name, s.entity
-           FROM terms t JOIN scope s
-             ON contains(lower(s.name), lower(t.term))),
-         r AS (
-           SELECT term, ord, id, name, entity,
-             row_number() OVER (PARTITION BY term ORDER BY name, id) AS rn
-           FROM m)
-         SELECT (SELECT count(*) FROM m) AS total,
-           CAST(t.ord AS BIGINT) AS ord, t.term,
-           CAST(r.rn AS BIGINT) AS rn, r.id, r.name, r.entity
-         FROM terms t LEFT JOIN r ON r.term = t.term
-         ORDER BY ord, rn""",
-    // PQ drift lifecycle: verdicts pinned TRUE, corpus accounted
-    // (n_fresh = 8 subspaces x corpus)
-    "q237_pq_drift" ->
-      """SELECT CAST(count(*) * 8 AS BIGINT) AS n_fresh,
-           TRUE AS fresh_clean, TRUE AS fresh_delta_zero,
-           TRUE AS one_sub_flagged, TRUE AS flagged_is_shifted_sub
-         FROM embeddings""",
-    // binary threshold drift: the build sidecar re-derived from the
-    // build subset; every report value replayed in exact arithmetic
-    "q238_bin_drift" ->
-      """WITH build AS (
-           SELECT generate_subscripts(embedding, 1) - 1 AS dim,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings WHERE vec_id % 4 <> 3),
-         thr AS (
-           SELECT dim, (min(x) + max(x)) / 2 AS t FROM build GROUP BY dim),
-         cur0 AS (
-           SELECT generate_subscripts(embedding, 1) - 1 AS dim,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings
-           UNION ALL
-           SELECT dim, CASE WHEN dim = 0 THEN x + 8.0 ELSE x END
-           FROM (
-             SELECT generate_subscripts(embedding, 1) - 1 AS dim,
-               CAST(unnest(embedding) AS DOUBLE) AS x
-             FROM embeddings WHERE vec_id % 4 = 3)),
-         now AS (
-           SELECT dim, (min(x) + max(x)) / 2 AS mid,
-             max(x) - min(x) AS rng
-           FROM cur0 GROUP BY dim)
-         SELECT CAST(n.dim AS BIGINT) AS dim,
-           round(t.t, 6) AS thr, round(n.mid, 6) AS mid_now,
-           round(abs(n.mid - t.t), 6) AS delta,
-           round(abs(n.mid - t.t), 6) > round(n.rng * 0.25, 6) AS drifted
-         FROM now n JOIN thr t ON t.dim = n.dim
-         ORDER BY dim""",
-    // the kernel's every projected coordinate vs the md5 sign device
-    // (q228's quantization idiom)
-    "q239_jl_kernel" ->
-      """WITH d AS (
-           SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings),
-         vq AS (SELECT vec_id, dim,
-                  CAST(round(x * 1e6) AS BIGINT) AS q
-                FROM d),
-         s AS (SELECT dim, j,
-                 CASE WHEN substring(md5('jl_7_' || (dim - 1) || '_' || j),
-                     1, 1) IN ('0','2','4','6','8','a','c','e')
-                   THEN 1 ELSE -1 END AS sgn
-               FROM (SELECT DISTINCT dim FROM vq)
-               CROSS JOIN range(16) r(j))
-         SELECT vec_id, CAST(j AS BIGINT) AS j,
-           CAST(sum(q * sgn) AS BIGINT) AS p
-         FROM vq JOIN s USING (dim) GROUP BY 1, 2 ORDER BY 1, 2""",
-    // binary re-bin lifecycle: all three states' thresholds, deltas,
-    // and verdicts replayed in exact IEEE min/max arithmetic
-    "q245_bin_rebin" ->
-      """WITH bex AS (
-           SELECT generate_subscripts(embedding, 1) - 1 AS dim,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings WHERE vec_id % 4 <> 3),
-         thrb AS (
-           SELECT dim, (min(x) + max(x)) / 2 AS t,
-             max(x) - min(x) AS rng0
-           FROM bex GROUP BY dim),
-         gex AS (
-           SELECT generate_subscripts(embedding, 1) - 1 AS dim,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings
-           UNION ALL
-           SELECT dim, CASE WHEN dim = 0 THEN x + 8.0 ELSE x END
-           FROM (
-             SELECT generate_subscripts(embedding, 1) - 1 AS dim,
-               CAST(unnest(embedding) AS DOUBLE) AS x
-             FROM embeddings WHERE vec_id % 4 = 3)),
-         mid AS (
-           SELECT dim, (min(x) + max(x)) / 2 AS m,
-             max(x) - min(x) AS rng
-           FROM gex GROUP BY dim)
-         SELECT CAST(b.dim AS BIGINT) AS dim,
-           round(abs(b.t - b.t), 6) AS delta_fresh,
-           round(abs(b.t - b.t), 6) > round(b.rng0 * 0.25, 6)
-             AS drifted_fresh,
-           round(b.t, 6) AS thr_frozen,
-           round(abs(m.m - b.t), 6) AS delta_drift,
-           round(abs(m.m - b.t), 6) > round(m.rng * 0.25, 6)
-             AS drifted_drift,
-           round(m.m, 6) AS thr_rebinned,
-           round(abs(m.m - m.m), 6) AS delta_rebinned,
-           round(abs(m.m - m.m), 6) > round(m.rng * 0.25, 6)
-             AS drifted_rebinned
-         FROM thrb b JOIN mid m ON m.dim = b.dim
-         ORDER BY dim""",
-    // streaming CDC-segment dedup: the 4-trigger composition equals
-    // one global keep-first in (batch, doc, position) order — the
-    // backlog's id-range bucketing + q233's CDC chain + one window
-    "q246_stream_cdc_dedup" ->
-      """WITH bounds AS (
-           SELECT min(doc_id) AS lo, max(doc_id) AS hi FROM documents),
-         d AS (
-           SELECT doc_id, text,
-             CAST(floor((doc_id - lo) * 4.0 / (hi - lo + 1)) AS BIGINT) + 1
-               AS b
-           FROM documents, bounds),
-         toks AS (SELECT b, doc_id, string_split(text, ' ') AS ts FROM d),
-         wds0 AS (
-           SELECT b, doc_id, unnest(range(1, len(ts)+1)) AS pos, ts
-           FROM toks),
-         wds AS (
-           SELECT b, doc_id, CAST(pos AS BIGINT) AS pos, ts[pos] AS w
-           FROM wds0),
-         flg AS (
-           SELECT b, doc_id, pos, w,
-             CASE WHEN ('0x' || substr(md5(w), 1, 2))::BIGINT < 32
-                  THEN 1 ELSE 0 END AS bb
-           FROM wds),
-         cid AS (
-           SELECT b, doc_id, pos, w,
-             COALESCE(sum(bb) OVER (PARTITION BY doc_id ORDER BY pos
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS ci
-           FROM flg),
-         ch AS (
-           SELECT b, doc_id, CAST(ci AS BIGINT) AS seg,
-             string_agg(w, ' ' ORDER BY pos) AS ctext,
-             md5(string_agg(w, ' ' ORDER BY pos)) AS cmd5
-           FROM cid GROUP BY b, doc_id, ci),
-         keepf AS (
-           SELECT doc_id, seg, ctext,
-             row_number() OVER (PARTITION BY cmd5
-               ORDER BY b, doc_id, seg) AS rn
-           FROM ch)
-         SELECT doc_id,
-           CAST(count(*) FILTER (WHERE rn = 1) AS BIGINT) AS n_kept,
-           CAST(count(*) FILTER (WHERE rn > 1) AS BIGINT) AS n_dropped,
-           md5(COALESCE(string_agg(ctext, ' ' ORDER BY seg)
-             FILTER (WHERE rn = 1), '')) AS clean_fp
-         FROM keepf GROUP BY doc_id ORDER BY doc_id""",
-    // incremental CDC-segment dedup: archive probe + fresh keep-first
-    // + reassembly, all replayed (q233's CTE chain with a side tag)
-    "q244_cdc_dedup_incremental" ->
-      """WITH corpus AS (
-           SELECT 'h' AS side, doc_id, text FROM documents
-           WHERE doc_id % 4 <> 3
-           UNION ALL
-           SELECT 'b', doc_id, text FROM documents WHERE doc_id % 4 = 3
-           UNION ALL
-           SELECT 'b', doc_id + 1000000, 'zq ' || text FROM documents
-           WHERE doc_id % 4 <> 3 AND doc_id % 8 = 0),
-         toks AS (
-           SELECT side, doc_id, string_split(text, ' ') AS ts FROM corpus),
-         wds0 AS (
-           SELECT side, doc_id, unnest(range(1, len(ts)+1)) AS pos, ts
-           FROM toks),
-         wds AS (
-           SELECT side, doc_id, CAST(pos AS BIGINT) AS pos, ts[pos] AS w
-           FROM wds0),
-         flg AS (
-           SELECT side, doc_id, pos, w,
-             CASE WHEN ('0x' || substr(md5(w), 1, 2))::BIGINT < 32
-                  THEN 1 ELSE 0 END AS b
-           FROM wds),
-         cid AS (
-           SELECT side, doc_id, pos, w,
-             COALESCE(sum(b) OVER (PARTITION BY side, doc_id ORDER BY pos
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS ci
-           FROM flg),
-         ch AS (
-           SELECT side, doc_id, CAST(ci AS BIGINT) AS seg,
-             string_agg(w, ' ' ORDER BY pos) AS ctext,
-             md5(string_agg(w, ' ' ORDER BY pos)) AS cmd5
-           FROM cid GROUP BY side, doc_id, ci),
-         arch AS (SELECT DISTINCT cmd5 FROM ch WHERE side = 'h'),
-         bch AS (SELECT doc_id, seg, ctext, cmd5 FROM ch WHERE side = 'b'),
-         fresh AS (
-           SELECT doc_id, seg, ctext,
-             row_number() OVER (PARTITION BY cmd5
-               ORDER BY doc_id, seg) AS rn
-           FROM bch b
-           WHERE NOT EXISTS (SELECT 1 FROM arch a WHERE a.cmd5 = b.cmd5)),
-         m AS (
-           SELECT doc_id, seg, ctext, rn = 1 AS kept FROM fresh
-           UNION ALL
-           SELECT doc_id, seg, ctext, FALSE FROM bch b
-           WHERE EXISTS (SELECT 1 FROM arch a WHERE a.cmd5 = b.cmd5))
-         SELECT doc_id,
-           CAST(count(*) FILTER (WHERE kept) AS BIGINT) AS n_kept,
-           CAST(count(*) FILTER (WHERE NOT kept) AS BIGINT) AS n_dropped,
-           md5(COALESCE(string_agg(ctext, ' ' ORDER BY seg)
-             FILTER (WHERE kept), '')) AS clean_fp
-         FROM m GROUP BY doc_id ORDER BY doc_id""",
-    // geneOntologyTerms: positional batch lookup — request order
-    // kept, the missing id's entry is a null row
-    "q240_graphql_go_terms" ->
-      """WITH ids(gid, ord) AS (VALUES
-           ('GO_BRAND_31', 1), ('GO_NOPE', 2), ('GO_BRAND_13', 3)),
-         cat AS (
-           SELECT 'GO_' || replace(upper(p_brand), '#', '_') AS id,
-             lower(p_brand) AS name
-           FROM (SELECT DISTINCT p_brand FROM part))
-         SELECT CAST(i.ord AS BIGINT) AS ord, c.id, c.name
-         FROM ids i LEFT JOIN cat c ON c.id = i.gid
-         ORDER BY ord""",
-    // meta: constants + the dataVersion aggregate replayed
-    "q241_graphql_meta" ->
-      """SELECT 'graft-knowledge-graph' AS name,
-           '1' AS x, '0' AS y, '0' AS z,
-           CAST(year(max(o_orderdate)) AS VARCHAR) AS year,
-           CAST(month(max(o_orderdate)) AS VARCHAR) AS month,
-           CAST(count(*) AS VARCHAR) AS iteration
-         FROM orders""",
-    // the EvidenceSource catalog: sources sorted, datatype = the flag
-    "q242_graphql_datasources" ->
-      """WITH cat AS (
-           SELECT DISTINCT
-             lower(l_returnflag || '_' || l_linestatus) AS datasource,
-             lower(l_returnflag) AS datatype
-           FROM lineitem)
-         SELECT row_number() OVER (ORDER BY datasource) AS ord,
-           datasource, datatype
-         FROM cat ORDER BY ord""",
-    // the InteractionResources catalog: one row per region, version
-    // counting its nations
-    "q243_graphql_interactions" ->
-      """WITH cat AS (
-           SELECT 'v' || CAST(count(*) AS VARCHAR) AS db_version,
-             lower(r_name) AS source_db
-           FROM region r JOIN nation n ON r.r_regionkey = n.n_regionkey
-           GROUP BY r_name)
-         SELECT row_number() OVER (ORDER BY source_db) AS ord,
-           source_db, db_version
-         FROM cat ORDER BY ord""",
-    "q222_k_anonymity" ->
-      """SELECT lang, source,
-           CAST(floor(n_chars / 100) * 100 AS BIGINT) AS chars_bucket,
-           count(*) AS class_size, count(*) < 5 AS at_risk
-         FROM documents
-         GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""",
-    "q223_l_diversity" ->
-      """SELECT lang,
-           CAST(floor(n_chars / 100) * 100 AS BIGINT) AS chars_bucket,
-           count(*) AS class_size,
-           CAST(count(DISTINCT source) AS BIGINT) AS n_sensitive,
-           count(DISTINCT source) >= 3 AS diverse
-         FROM documents
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q98_segment_dedup" ->
-      """WITH d AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-         t AS (SELECT doc_id, unnest(range(1, len(toks)+1)) AS ord, toks FROM d),
-         tok AS (SELECT doc_id, ord, toks[ord] AS tok FROM t),
-         segs AS (SELECT doc_id, (ord-1)//3 AS seg,
-             string_agg(tok, ' ' ORDER BY ord) AS seg_text
-           FROM tok GROUP BY doc_id, (ord-1)//3),
-         mk AS (SELECT doc_id, seg, seg_text, row_number() OVER
-             (PARTITION BY seg_text ORDER BY doc_id, seg) AS rn FROM segs),
-         rb AS (SELECT doc_id,
-             sum(CASE WHEN rn=1 THEN 1 ELSE 0 END) AS n_kept,
-             sum(CASE WHEN rn<>1 THEN 1 ELSE 0 END) AS n_dropped,
-             string_agg(CASE WHEN rn=1 THEN seg_text END, ' ' ORDER BY seg)
-               AS clean_text
-           FROM mk GROUP BY doc_id)
-         SELECT d2.doc_id, CAST(coalesce(n_kept,0) AS BIGINT) AS n_kept,
-           CAST(coalesce(n_dropped,0) AS BIGINT) AS n_dropped,
-           md5(coalesce(clean_text, '')) AS clean_md5
-         FROM documents d2 LEFT JOIN rb ON d2.doc_id = rb.doc_id
-         ORDER BY d2.doc_id""",
-    "q99_boilerplate_strip" ->
-      """WITH d AS (SELECT doc_id, source, string_split(text,' ') AS toks
-           FROM documents),
-         t AS (SELECT doc_id, source, unnest(range(1, len(toks)+1)) AS ord, toks
-           FROM d),
-         tok AS (SELECT doc_id, source, ord, toks[ord] AS tok FROM t),
-         segs AS (SELECT doc_id, source, (ord-1)//2 AS seg,
-             string_agg(tok, ' ' ORDER BY ord) AS seg_text
-           FROM tok GROUP BY doc_id, source, (ord-1)//2),
-         nd AS (SELECT source, count(DISTINCT doc_id) AS n_docs
-           FROM documents GROUP BY source),
-         freq AS (SELECT source, seg_text, count(DISTINCT doc_id) AS df
-           FROM segs GROUP BY source, seg_text),
-         chrome AS (SELECT f.source, f.seg_text FROM freq f
-           JOIN nd ON f.source = nd.source
-           WHERE CAST(df AS DOUBLE) >= CAST(n_docs AS DOUBLE) * 0.12),
-         mk AS (SELECT s.doc_id, s.source, s.seg, s.seg_text,
-             (c.seg_text IS NOT NULL) AS is_chrome
-           FROM segs s LEFT JOIN chrome c
-             ON s.source = c.source AND s.seg_text = c.seg_text)
-         SELECT doc_id, source,
-           CAST(sum(CASE WHEN is_chrome THEN 0 ELSE 1 END) AS BIGINT) AS n_kept,
-           CAST(sum(CASE WHEN is_chrome THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
-           md5(coalesce(string_agg(CASE WHEN NOT is_chrome THEN seg_text END,
-             ' ' ORDER BY seg), '')) AS clean_md5
-         FROM mk GROUP BY doc_id, source ORDER BY doc_id""",
-    // exact integer fixed-point power iteration, 5 rounds unrolled
-    // (portable across engines: no recursive-CTE aggregation needed)
-    "q100_pagerank" ->
-      """WITH e0 AS (SELECT DISTINCT 'S' || CAST(l_suppkey AS VARCHAR) AS src,
-             'P' || CAST(l_partkey AS VARCHAR) AS dst FROM lineitem),
-         edges AS (SELECT src, dst FROM e0
-           UNION ALL SELECT dst AS src, src AS dst FROM e0),
-         nodes AS (SELECT src AS id FROM edges UNION SELECT dst FROM edges),
-         nn AS (SELECT count(*) AS n FROM nodes),
-         od AS (SELECT src AS id, count(*) AS deg FROM edges GROUP BY src),
-         r0 AS (SELECT id, 1000000000 // n AS rank FROM nodes CROSS JOIN nn),
-         c1 AS (SELECT e.dst AS id, sum(r.rank // od.deg) AS s FROM r0 r
-           JOIN od ON od.id = r.id JOIN edges e ON e.src = r.id GROUP BY e.dst),
-         r1 AS (SELECT nodes.id, (15 * (1000000000 // n)) // 100
-             + (85 * coalesce(s, 0)) // 100 AS rank
-           FROM nodes CROSS JOIN nn LEFT JOIN c1 ON c1.id = nodes.id),
-         c2 AS (SELECT e.dst AS id, sum(r.rank // od.deg) AS s FROM r1 r
-           JOIN od ON od.id = r.id JOIN edges e ON e.src = r.id GROUP BY e.dst),
-         r2 AS (SELECT nodes.id, (15 * (1000000000 // n)) // 100
-             + (85 * coalesce(s, 0)) // 100 AS rank
-           FROM nodes CROSS JOIN nn LEFT JOIN c2 ON c2.id = nodes.id),
-         c3 AS (SELECT e.dst AS id, sum(r.rank // od.deg) AS s FROM r2 r
-           JOIN od ON od.id = r.id JOIN edges e ON e.src = r.id GROUP BY e.dst),
-         r3 AS (SELECT nodes.id, (15 * (1000000000 // n)) // 100
-             + (85 * coalesce(s, 0)) // 100 AS rank
-           FROM nodes CROSS JOIN nn LEFT JOIN c3 ON c3.id = nodes.id),
-         c4 AS (SELECT e.dst AS id, sum(r.rank // od.deg) AS s FROM r3 r
-           JOIN od ON od.id = r.id JOIN edges e ON e.src = r.id GROUP BY e.dst),
-         r4 AS (SELECT nodes.id, (15 * (1000000000 // n)) // 100
-             + (85 * coalesce(s, 0)) // 100 AS rank
-           FROM nodes CROSS JOIN nn LEFT JOIN c4 ON c4.id = nodes.id),
-         c5 AS (SELECT e.dst AS id, sum(r.rank // od.deg) AS s FROM r4 r
-           JOIN od ON od.id = r.id JOIN edges e ON e.src = r.id GROUP BY e.dst),
-         r5 AS (SELECT nodes.id, (15 * (1000000000 // n)) // 100
-             + (85 * coalesce(s, 0)) // 100 AS rank
-           FROM nodes CROSS JOIN nn LEFT JOIN c5 ON c5.id = nodes.id)
-         SELECT id, CAST(rank AS BIGINT) AS rank FROM r5
-         ORDER BY rank DESC, id LIMIT 20""",
-    "q101_snapshot_merge" ->
-      """WITH base AS (SELECT doc_id, source, n_chars FROM documents
-           WHERE doc_id % 3 <> 0),
-         delta AS (SELECT doc_id, 'delta' AS source, n_chars + 1000 AS n_chars
-           FROM documents WHERE doc_id % 2 = 0)
-         SELECT coalesce(b.doc_id, d.doc_id) AS doc_id,
-           CASE WHEN d.doc_id IS NOT NULL THEN d.source ELSE b.source END AS source,
-           CASE WHEN d.doc_id IS NOT NULL THEN d.n_chars ELSE b.n_chars END AS n_chars
-         FROM base b FULL JOIN delta d ON b.doc_id = d.doc_id
-         ORDER BY doc_id""",
-    "q102_cdc_diff" ->
-      """WITH prev AS (SELECT doc_id, source, n_chars FROM documents),
-         next AS (
-           SELECT doc_id, source,
-             CASE WHEN doc_id % 7 = 0 THEN n_chars + 1 ELSE n_chars END AS n_chars
-           FROM prev WHERE doc_id % 10 <> 0
-           UNION ALL
-           SELECT doc_id + 1000000, source, n_chars FROM prev WHERE doc_id % 11 = 0)
-         SELECT coalesce(p.doc_id, n.doc_id) AS doc_id,
-           CASE WHEN p.doc_id IS NULL THEN 'insert'
-                WHEN n.doc_id IS NULL THEN 'delete'
-                WHEN p.source IS NOT DISTINCT FROM n.source
-                 AND p.n_chars IS NOT DISTINCT FROM n.n_chars THEN 'unchanged'
-                ELSE 'update' END AS op
-         FROM prev p FULL JOIN next n ON p.doc_id = n.doc_id
-         ORDER BY doc_id""",
-    "q103_winsorize" ->
-      """WITH b AS (SELECT lang,
-             round(quantile_cont(n_chars, 0.05), 6) AS lo,
-             round(quantile_cont(n_chars, 0.95), 6) AS hi
-           FROM documents GROUP BY lang),
-         w AS (SELECT d.lang,
-             CASE WHEN n_chars < lo THEN 1 ELSE 0 END AS clo,
-             CASE WHEN n_chars > hi THEN 1 ELSE 0 END AS chi,
-             CAST(floor(least(greatest(CAST(n_chars AS DOUBLE), lo), hi) * 1e6 + 0.5)
-               AS BIGINT) AS w6
-           FROM documents d JOIN b ON d.lang = b.lang)
-         SELECT lang, count(*) AS n, CAST(sum(clo) AS BIGINT) AS n_lo,
-           CAST(sum(chi) AS BIGINT) AS n_hi,
-           round(CAST(sum(w6) AS DOUBLE) / (count(*) * 1e6), 6) AS mean6
-         FROM w GROUP BY lang ORDER BY lang""",
-    "q104_tukey_outliers" ->
-      """WITH b AS (SELECT lang,
-             round(quantile_cont(n_chars, 0.25), 6) AS q1,
-             round(quantile_cont(n_chars, 0.75), 6) AS q3
-           FROM documents GROUP BY lang),
-         f AS (SELECT lang, q1 - (q3 - q1) * 1.5 AS lof, q3 + (q3 - q1) * 1.5 AS hif
-           FROM b)
-         SELECT d.lang, count(*) AS n,
-           CAST(sum(CASE WHEN n_chars < lof THEN 1 ELSE 0 END) AS BIGINT) AS n_low,
-           CAST(sum(CASE WHEN n_chars > hif THEN 1 ELSE 0 END) AS BIGINT) AS n_high,
-           round(min(lof), 6) AS lo_fence, round(max(hif), 6) AS hi_fence
-         FROM documents d JOIN f ON d.lang = f.lang
-         GROUP BY d.lang ORDER BY d.lang""",
-    "q106_compaction_roundtrip" ->
-      """SELECT lang, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-         FROM documents GROUP BY lang ORDER BY lang""",
-    "q107_inverted_index" ->
-      """WITH d AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-         t AS (SELECT doc_id, unnest(range(1, len(toks)+1)) AS ord, toks FROM d),
-         tok AS (SELECT doc_id, ord-1 AS pos, toks[ord] AS term FROM t)
-         SELECT term, doc_id, count(*) AS tf,
-           string_agg(CAST(pos AS VARCHAR), ',' ORDER BY pos) AS positions
-         FROM tok GROUP BY term, doc_id ORDER BY term, doc_id""",
-    "q108_index_search" ->
-      """SELECT doc_id FROM documents
-         WHERE list_contains(string_split(text,' '), 'spark')
-           AND list_contains(string_split(text,' '), 'window')
-         ORDER BY doc_id""",
-    "q109_funnel" ->
-      """WITH s1 AS (SELECT user_id, min(ts) AS t FROM events
-           WHERE event_type = 'view' GROUP BY user_id),
-         s2 AS (SELECT e.user_id, min(e.ts) AS t FROM events e
-           JOIN s1 ON e.user_id = s1.user_id
-           WHERE e.event_type = 'click' AND e.ts >= s1.t GROUP BY e.user_id),
-         s3 AS (SELECT e.user_id, min(e.ts) AS t FROM events e
-           JOIN s2 ON e.user_id = s2.user_id
-           WHERE e.event_type = 'purchase' AND e.ts >= s2.t GROUP BY e.user_id)
-         SELECT 1 AS stage_idx, 'view' AS stage, count(*) AS users FROM s1
-         UNION ALL SELECT 2, 'click', count(*) FROM s2
-         UNION ALL SELECT 3, 'purchase', count(*) FROM s3
-         ORDER BY stage_idx""",
-    "q110_cohort_retention" ->
-      """WITH f AS (SELECT user_id, min(ts) AS t0 FROM events GROUP BY user_id)
-         SELECT strftime(date_trunc('week', f.t0), '%Y-%m-%d') AS cohort_week,
-           CAST((CAST(e.ts AS DATE) - CAST(f.t0 AS DATE)) // 7 AS BIGINT) AS week_offset,
-           count(DISTINCT e.user_id) AS users
-         FROM events e JOIN f ON e.user_id = f.user_id
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q111_resample" ->
-      """WITH o0 AS (SELECT user_id, ts, max(value) AS value
-           FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts),
-         o AS (SELECT user_id, epoch_ns(ts) AS tsn, value FROM o0),
-         sp AS (SELECT user_id,
-             (min(tsn) + 86399999999999) // 86400000000000 * 86400 AS g0,
-             max(tsn) // 1000000000 AS hi
-           FROM o GROUP BY user_id),
-         grid AS (SELECT user_id,
-             unnest(generate_series(g0, hi, 86400)) * 1000000000 AS gsn
-           FROM sp WHERE g0 <= hi)
-         SELECT g.user_id, g.gsn // 1000000000 AS grid_s,
-           round(o.value, 6) AS value
-         FROM grid g ASOF JOIN o
-           ON g.user_id = o.user_id AND g.gsn >= o.tsn
-         ORDER BY g.user_id, grid_s""",
-    "q112_histogram" ->
-      """WITH b AS (SELECT l_returnflag AS grp,
-           CASE WHEN l_quantity < 0 THEN 0 WHEN l_quantity >= 50 THEN 11
-                ELSE CAST(floor(l_quantity / 5.0) AS BIGINT) + 1 END AS bucket
-           FROM lineitem)
-         SELECT grp, bucket, CAST(round((bucket - 1) * 5.0, 6) AS DOUBLE) AS bucket_lo,
-           CAST(round(bucket * 5.0, 6) AS DOUBLE) AS bucket_hi, count(*) AS n
-         FROM b GROUP BY grp, bucket ORDER BY grp, bucket""",
-    "q113_bloom_prefilter" ->
-      """WITH fp AS (
-           SELECT doc_id, md5(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS fp
-           FROM documents),
-         archive AS (SELECT DISTINCT fp FROM fp WHERE doc_id % 2 = 0),
-         batch AS (SELECT doc_id, fp FROM fp WHERE doc_id % 2 <> 0)
-         SELECT doc_id, fp FROM batch b ANTI JOIN archive a ON b.fp = a.fp
-         ORDER BY doc_id""",
-    "q114_transitions" ->
-      """WITH seq AS (SELECT user_id, event_type AS event,
-           lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_event
-         FROM events)
-         SELECT event, next_event, count(*) AS n FROM seq
-         WHERE next_event IS NOT NULL
-         GROUP BY event, next_event ORDER BY event, next_event""",
-    "q115_edit_neardups" ->
-      """WITH p AS (SELECT p_partkey, p_name FROM part WHERE p_size = 1)
-         SELECT a.p_partkey AS id_a, b.p_partkey AS id_b,
-           levenshtein(a.p_name, b.p_name) AS dist
-         FROM p a JOIN p b ON a.p_partkey < b.p_partkey
-         WHERE levenshtein(a.p_name, b.p_name) <= 3
-         ORDER BY id_a, id_b""",
-    "q116_hopping" ->
-      """WITH e AS (SELECT event_type, value, epoch_ns(ts) AS tn FROM events),
-         w AS (SELECT event_type, value,
-           unnest([(tn // 1800000000000) * 1800,
-                   (tn // 1800000000000) * 1800 - 1800]) AS win_start
-           FROM e)
-         SELECT win_start, event_type, count(*) AS n,
-           CAST(round(sum(CAST(value AS DECIMAL(18,6))), 4) AS DOUBLE) AS sum_value
-         FROM w GROUP BY win_start, event_type
-         ORDER BY win_start, event_type""",
-    "q117_debounce" ->
-      """WITH l AS (SELECT event_id, user_id, event_type, epoch_ns(ts) AS tn,
-           lag(epoch_ns(ts)) OVER
-             (PARTITION BY user_id, event_type ORDER BY ts, event_id) AS prev
-         FROM events)
-         SELECT event_id, user_id, event_type FROM l
-         WHERE prev IS NULL OR tn - prev >= 3600000000000
-         ORDER BY event_id""",
-    "q118_quality_audit" ->
-      """SELECT 'not_null' AS check_name, 'l_quantity' AS subject,
-           CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS violations,
-           count(*) AS total FROM lineitem
-         UNION ALL
-         SELECT 'range', 'l_quantity',
-           CAST(sum(CASE WHEN l_quantity BETWEEN 1 AND 50 THEN 0 ELSE 1 END) AS BIGINT),
-           count(*) FROM lineitem
-         UNION ALL
-         SELECT 'range', 'l_discount',
-           CAST(sum(CASE WHEN l_discount BETWEEN 0 AND 0.1 THEN 0 ELSE 1 END) AS BIGINT),
-           count(*) FROM lineitem
-         UNION ALL
-         SELECT 'accepted', 'l_returnflag',
-           CAST(sum(CASE WHEN l_returnflag IN ('A','N','R') THEN 0 ELSE 1 END) AS BIGINT),
-           count(*) FROM lineitem
-         UNION ALL
-         SELECT 'not_null', 'o_custkey',
-           CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-           count(*) FROM orders
-         UNION ALL
-         SELECT 'accepted', 'o_orderstatus',
-           CAST(sum(CASE WHEN o_orderstatus IN ('F','O','P') THEN 0 ELSE 1 END) AS BIGINT),
-           count(*) FROM orders
-         UNION ALL
-         SELECT 'unique', 'o_orderkey',
-           count(*) - count(DISTINCT o_orderkey), count(*) FROM orders
-         UNION ALL
-         SELECT 'unique', 'l_orderkey,l_linenumber',
-           count(*) - (SELECT count(*) FROM
-             (SELECT DISTINCT l_orderkey, l_linenumber FROM lineitem)),
-           count(*) FROM lineitem
-         UNION ALL
-         SELECT 'ref', 'l_orderkey->o_orderkey',
-           (SELECT count(*) FROM lineitem l ANTI JOIN orders o
-              ON l.l_orderkey = o.o_orderkey),
-           count(*) FROM lineitem
-         UNION ALL
-         SELECT 'ref', 'o_custkey->c_custkey',
-           (SELECT count(*) FROM orders x ANTI JOIN customer c
-              ON x.o_custkey = c.c_custkey),
-           count(*) FROM orders
-         ORDER BY check_name, subject""",
-    "q119_bfs_hops" ->
-      """WITH RECURSIVE e0 AS (
-           SELECT DISTINCT 'S' || CAST(l_suppkey AS VARCHAR) AS src,
-             'P' || CAST(l_partkey AS VARCHAR) AS dst FROM lineitem),
-         edges AS (SELECT src, dst FROM e0
-           UNION ALL SELECT dst AS src, src AS dst FROM e0),
-         walk(id, d) AS (
-           SELECT 'S1' AS id, 0 AS d
-           UNION
-           SELECT e.dst, w.d + 1 FROM walk w
-           JOIN edges e ON e.src = w.id WHERE w.d < 3)
-         SELECT id, CAST(min(d) AS INT) AS hops FROM walk
-         GROUP BY id ORDER BY hops, id""",
-    "q120_funnel_windowed" ->
-      """WITH s1 AS (SELECT user_id, min(ts) AS t FROM events
-           WHERE event_type = 'view' GROUP BY user_id),
-         s2 AS (SELECT e.user_id, min(e.ts) AS t FROM events e
-           JOIN s1 ON e.user_id = s1.user_id
-           WHERE e.event_type = 'click' AND e.ts >= s1.t
-             AND epoch_ns(e.ts) - epoch_ns(s1.t) <= 21600000000000
-           GROUP BY e.user_id),
-         s3 AS (SELECT e.user_id, min(e.ts) AS t FROM events e
-           JOIN s2 ON e.user_id = s2.user_id
-           WHERE e.event_type = 'purchase' AND e.ts >= s2.t
-             AND epoch_ns(e.ts) - epoch_ns(s2.t) <= 21600000000000
-           GROUP BY e.user_id)
-         SELECT 1 AS stage_idx, 'view' AS stage, count(*) AS users FROM s1
-         UNION ALL SELECT 2, 'click', count(*) FROM s2
-         UNION ALL SELECT 3, 'purchase', count(*) FROM s3
-         ORDER BY stage_idx""",
-    "q121_entity_resolution" ->
-      """WITH RECURSIVE p AS (
-           SELECT p_partkey, p_name FROM part WHERE p_size = 1),
-         pairs AS (
-           SELECT a.p_partkey AS id_a, b.p_partkey AS id_b
-           FROM p a JOIN p b ON a.p_partkey < b.p_partkey
-           WHERE levenshtein(a.p_name, b.p_name) <= 3),
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(id, lbl) AS (
-           SELECT DISTINCT src, src FROM edges
-           UNION
-           SELECT e.src, r.lbl FROM edges e JOIN reach r ON r.id = e.dst),
-         labels AS (SELECT id, min(lbl) AS canonical_id FROM reach GROUP BY id)
-         SELECT p.p_partkey,
-           coalesce(l.canonical_id, p.p_partkey) AS entity_id,
-           c.p_name AS canonical_name
-         FROM p LEFT JOIN labels l ON l.id = p.p_partkey
-         JOIN p c ON c.p_partkey = coalesce(l.canonical_id, p.p_partkey)
-         ORDER BY p.p_partkey""",
-    "q122_attribution" ->
-      """WITH pu AS (
-           SELECT user_id, event_id AS purchase_id, ts AS purchase_ts
-           FROM events WHERE event_type = 'purchase'),
-         cl AS (
-           SELECT user_id, ts, max(event_id) AS click_id
-           FROM events WHERE event_type = 'click' GROUP BY user_id, ts)
-         SELECT p.purchase_id, p.user_id,
-           CASE WHEN c.ts IS NOT NULL
-                 AND epoch_ns(p.purchase_ts) - epoch_ns(c.ts) <= 21600000000000
-                THEN c.click_id END AS click_id
-         FROM pu p ASOF LEFT JOIN cl c
-           ON p.user_id = c.user_id AND p.purchase_ts >= c.ts
-         ORDER BY p.purchase_id""",
-    "q123_correlation" ->
-      """WITH m AS (
-           SELECT l_returnflag, count(*) AS n,
-             sum(CAST(l_quantity AS BIGINT)) AS sx,
-             sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS sy,
-             sum(CAST(l_quantity AS BIGINT)
-                 * CAST(round(l_extendedprice*100) AS BIGINT)) AS sxy,
-             sum(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT)) AS sxx,
-             sum(CAST(round(l_extendedprice*100) AS BIGINT)
-                 * CAST(round(l_extendedprice*100) AS BIGINT)) AS syy
-           FROM lineitem GROUP BY l_returnflag),
-         d AS (
-           SELECT l_returnflag, n,
-             CAST(n*sxy - sx*sy AS DOUBLE) AS num,
-             CAST(n*sxx - sx*sx AS DOUBLE) AS dxx,
-             CAST(n*syy - sy*sy AS DOUBLE) AS dyy
-           FROM m)
-         SELECT l_returnflag,
-           round(num / sqrt(dxx * dyy), 3) + 0 AS corr_qp,
-           round(num / dxx / 100, 3) + 0 AS slope,
-           round(sqrt(dxx / (CAST(n AS DOUBLE) * (n-1))), 3) + 0 AS sd_qty,
-           n
-         FROM d ORDER BY l_returnflag""",
-    "q126_resume_phase2" ->
-      """WITH facts AS (
-           SELECT l_partkey, l_suppkey, o_custkey,
-             (c_mktsegment = 'BUILDING') AS is_main,
-             max(CASE WHEN l_quantity >= 45.0 THEN 1 ELSE 0 END) AS any_hi
-           FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-           JOIN customer ON o_custkey = c_custkey
-           GROUP BY 1, 2, 3, 4),
-         main_targets AS (
-           SELECT DISTINCT l_partkey FROM facts WHERE is_main AND any_hi = 1),
-         related_customers AS (
-           SELECT DISTINCT o_custkey FROM facts
-           WHERE NOT is_main
-             AND l_partkey IN (SELECT l_partkey FROM main_targets)),
-         related_lines AS (
-           SELECT * FROM facts WHERE NOT is_main
-             AND o_custkey IN (SELECT o_custkey FROM related_customers)),
-         candidates AS (
-           SELECT DISTINCT l_partkey FROM related_lines
-           EXCEPT
-           SELECT DISTINCT l_partkey FROM facts WHERE is_main),
-         pf AS (
-           SELECT DISTINCT l.l_partkey, l.l_suppkey, o.o_custkey
-           FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-         rdt AS (
-           SELECT DISTINCT o_custkey AS disease_id, l_suppkey AS target_id
-           FROM pf
-           WHERE o_custkey IN (SELECT o_custkey FROM related_customers)),
-         cdt AS (
-           SELECT DISTINCT l_partkey AS drug_id, l_suppkey AS target_id
-           FROM pf
-           WHERE l_partkey IN (SELECT l_partkey FROM candidates))
-         SELECT r.target_id, r.disease_id, c.drug_id
-         FROM rdt r JOIN cdt c ON r.target_id = c.target_id
-         ORDER BY r.target_id, r.disease_id, c.drug_id""",
-    // string frontend: the SAME text Graft.sql runs (q130 swaps the
-    // native dot_product for DuckDB's list_dot_product)
-    "q127_sql_revenue" -> SqlRevenueByNation,
-    "q128_sql_search_topk" -> SqlSearchTopK,
-    "q129_sql_window" -> SqlWindowTop2,
-    "q130_sql_native_fn" -> SqlNeighborDot(
-      "CAST(list_dot_product(a.embedding, b.embedding) AS DOUBLE)"),
-    // streaming batch-twin: the stream replays the same events, so
-    // q20's batch aggregation IS the oracle (hour window start ≡
-    // date_trunc hour for hour-aligned tumbling windows)
-    "q131_stream_hourly" ->
-      """SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_ts,
-         event_type, count(*) AS n,
-         CAST(round(sum(CAST(value AS DECIMAL(18,4))),2) AS DOUBLE) AS sum_value
-         FROM events GROUP BY 1, 2 ORDER BY hour_ts, event_type""",
-    // sessionize: same lag/flag/running-sum encoding in DuckDB window
-    // SQL (epoch_ns is µs-exact ×1000, ties broken by event_id)
-    "q132_sessionize" ->
-      """WITH l AS (SELECT user_id, event_id, epoch_ns(ts) AS tn,
-           lag(epoch_ns(ts)) OVER
-             (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-         FROM events),
-         f AS (SELECT user_id, event_id, tn,
-           CASE WHEN prev IS NULL OR tn - prev > 1800000000000 THEN 1 ELSE 0 END
-             AS is_new
-         FROM l),
-         s AS (SELECT user_id, tn,
-           CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY tn, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-             AS session_seq
-         FROM f)
-         SELECT user_id, session_seq, count(*) AS n_events,
-           min(tn) // 1000 AS start_us, max(tn) // 1000 AS end_us
-         FROM s GROUP BY user_id, session_seq
-         ORDER BY user_id, session_seq""",
-    "q133_unpivot_part" ->
-      """SELECT p_partkey, attr, val FROM (
-           SELECT p_partkey, 'retailprice' AS attr, p_retailprice AS val FROM part
-           UNION ALL
-           SELECT p_partkey, 'size', CAST(p_size AS DOUBLE) FROM part)
-         ORDER BY p_partkey, attr""",
-    // triangles: every triangle u<v<w appears exactly once as the
-    // edge triple (u,v) (u,w) (v,w) over the canonical a<b edge list
-    "q134_triangles" ->
-      """WITH sp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-           FROM lineitem
-           WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size <= 15)),
-         e AS (SELECT DISTINCT a.p AS u, b.p AS v
-           FROM sp a JOIN sp b ON a.o = b.o AND a.p < b.p)
-         SELECT count(*) AS triangles
-         FROM e e1
-         JOIN e e2 ON e2.u = e1.u AND e2.v > e1.v
-         JOIN e e3 ON e3.u = e1.v AND e3.v = e2.v""",
-    "q135_clustering_coeff" ->
-      """WITH sp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-           FROM lineitem
-           WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size <= 15)),
-         e AS (SELECT DISTINCT a.p AS u, b.p AS v
-           FROM sp a JOIN sp b ON a.o = b.o AND a.p < b.p),
-         t AS (SELECT e1.u AS a, e1.v AS b, e2.v AS c
-           FROM e e1
-           JOIN e e2 ON e2.u = e1.u AND e2.v > e1.v
-           JOIN e e3 ON e3.u = e1.v AND e3.v = e2.v),
-         corners AS (SELECT a AS n FROM t UNION ALL
-                     SELECT b FROM t UNION ALL SELECT c FROM t),
-         tri AS (SELECT n, count(*) AS triangles FROM corners GROUP BY n),
-         deg AS (SELECT n, count(*) AS d FROM
-           (SELECT u AS n FROM e UNION ALL SELECT v FROM e) GROUP BY n)
-         SELECT deg.n AS node, coalesce(tri.triangles, 0) AS triangles,
-           CASE WHEN d >= 2
-             THEN round(2.0 * coalesce(tri.triangles, 0) / (d * (d - 1)), 6)
-             ELSE 0.0 END AS coeff
-         FROM deg LEFT JOIN tri ON deg.n = tri.n
-         ORDER BY node""",
-    // stream-stream interval join: the batch inequality join IS the
-    // oracle (µs-exact interval arithmetic in both engines)
-    "q136_stream_interval_join" ->
-      """SELECT p.event_id AS purchase_id, c.event_id AS click_id
-         FROM events p JOIN events c
-           ON p.event_type = 'purchase' AND c.event_type = 'click'
-          AND c.user_id = p.user_id
-          AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts <= p.ts
-         ORDER BY purchase_id, click_id""",
-    // BM25: fractional literals carry e0 so DuckDB types them DOUBLE
-    // (bare 2.2 is DECIMAL, and tf*DECIMAL is exact decimal math —
-    // NOT the IEEE product Spark computes); the fixed-point floors
-    // then make both engines' sums exact integer math.
-    "q137_bm25_topk" ->
-      """WITH tok AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-         post AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-         dl AS (SELECT doc_id, sum(tf) AS dl FROM post GROUP BY 1),
-         stats AS (SELECT count(*) AS nd,
-             CAST(sum(dl) AS DOUBLE)/count(*) AS avgdl FROM dl),
-         idf AS (SELECT term, avgdl,
-             CAST(floor(ln((nd - df + 0.5e0)/(df + 0.5e0) + 1.0e0)*1e4 + 0.5e0)
-               AS BIGINT) AS idf4
-           FROM (SELECT term, count(*) AS df FROM post
-                 WHERE term IN ('dup','spark','window') GROUP BY 1)
-           CROSS JOIN stats),
-         contrib AS (
-           SELECT p.doc_id,
-             i.idf4 * CAST(floor(p.tf*2.2e0/(p.tf + 1.2e0*(0.25e0 + 0.75e0*d.dl/i.avgdl))
-               *1e6 + 0.5e0) AS BIGINT) AS c
-           FROM post p JOIN dl d USING (doc_id) JOIN idf i USING (term)
-           WHERE p.term IN ('dup','spark','window'))
-         SELECT doc_id, count(*) AS n_terms, CAST(sum(c) AS DOUBLE)/1e10 AS bm25
-         FROM contrib GROUP BY doc_id ORDER BY bm25 DESC, doc_id LIMIT 10""",
-    "q138_rrf_hybrid" ->
-      """WITH tok AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS term
-           FROM documents WHERE doc_id <> 0),
-         post AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-         dl AS (SELECT doc_id, sum(tf) AS dl FROM post GROUP BY 1),
-         stats AS (SELECT count(*) AS nd,
-             CAST(sum(dl) AS DOUBLE)/count(*) AS avgdl FROM dl),
-         idf AS (SELECT term, avgdl,
-             CAST(floor(ln((nd - df + 0.5e0)/(df + 0.5e0) + 1.0e0)*1e4 + 0.5e0)
-               AS BIGINT) AS idf4
-           FROM (SELECT term, count(*) AS df FROM post
-                 WHERE term IN ('dup','spark','window') GROUP BY 1)
-           CROSS JOIN stats),
-         contrib AS (
-           SELECT p.doc_id,
-             i.idf4 * CAST(floor(p.tf*2.2e0/(p.tf + 1.2e0*(0.25e0 + 0.75e0*d.dl/i.avgdl))
-               *1e6 + 0.5e0) AS BIGINT) AS c
-           FROM post p JOIN dl d USING (doc_id) JOIN idf i USING (term)
-           WHERE p.term IN ('dup','spark','window')),
-         lex AS (SELECT doc_id, CAST(sum(c) AS DOUBLE)/1e10 AS score
-           FROM contrib GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 50),
-         q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
-         sem AS (SELECT e.vec_id AS doc_id,
-             round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-               CAST(q.embedding AS DOUBLE[])), 6) AS score
-           FROM embeddings e, q WHERE e.vec_id <> 0
-           ORDER BY score DESC, e.vec_id LIMIT 50),
-         ranked AS (
-           SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS rk
-           FROM lex
-           UNION ALL
-           SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS rk
-           FROM sem),
-         fused AS (
-           SELECT doc_id,
-             sum(CAST(floor(1e9/(60 + rk)) AS BIGINT)) AS fp,
-             count(*) AS n_lists
-           FROM ranked GROUP BY doc_id)
-         SELECT doc_id, n_lists, CAST(fp AS DOUBLE)/1e9 AS rrf
-         FROM fused ORDER BY rrf DESC, doc_id LIMIT 10""",
-    "q139_nearest_centroid" ->
-      """WITH cent AS (
-           SELECT label AS pred, dim, round(avg(CAST(x AS DOUBLE)), 6) AS c
-           FROM (SELECT label, generate_subscripts(embedding, 1) - 1 AS dim,
-               unnest(embedding) AS x FROM embeddings)
-           GROUP BY pred, dim),
-         vec AS (SELECT vec_id, label AS true_label,
-             generate_subscripts(embedding, 1) - 1 AS dim,
-             CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings),
-         d AS (SELECT v.vec_id, v.true_label, cent.pred,
-             sum(CAST(floor((v.x - cent.c)*(v.x - cent.c)*1e8 + 0.5e0) AS BIGINT))
-               AS dist_fp
-           FROM vec v JOIN cent USING (dim) GROUP BY 1, 2, 3),
-         best AS (SELECT vec_id, true_label, pred,
-             row_number() OVER (PARTITION BY vec_id ORDER BY dist_fp, pred) AS rn
-           FROM d)
-         SELECT true_label, pred, count(*) AS n FROM best WHERE rn = 1
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q140_jaro_linkage" ->
-      """WITH scored AS (
-           SELECT c.c_custkey, c.c_name, s.s_name,
-             round(jaro_winkler_similarity(c.c_name, s.s_name), 6) AS jw
-           FROM customer c CROSS JOIN supplier s),
-         best AS (
-           SELECT c_custkey, c_name, s_name, jw,
-             row_number() OVER (PARTITION BY c_custkey
-               ORDER BY jw DESC, s_name) AS rn
-           FROM scored)
-         SELECT c_custkey, c_name, s_name AS best_supplier, jw
-         FROM best WHERE rn = 1 ORDER BY c_custkey""",
-    "q141_scd2_history" ->
-      """WITH docs AS (SELECT doc_id, source, n_chars FROM documents),
-         hist AS (
-           SELECT doc_id, source, n_chars,
-             CAST(100 AS BIGINT) AS valid_from, CAST(NULL AS BIGINT) AS valid_to
-           FROM docs WHERE doc_id % 3 <> 0
-           UNION ALL
-           SELECT doc_id, source, n_chars - 7,
-             CAST(50 AS BIGINT), CAST(100 AS BIGINT)
-           FROM docs WHERE doc_id % 5 = 0),
-         snap AS (
-           SELECT doc_id, source,
-             CASE WHEN doc_id % 7 = 0 THEN n_chars + 1 ELSE n_chars END AS n_chars
-           FROM docs WHERE doc_id % 10 <> 0
-           UNION ALL
-           SELECT doc_id + 1000000, source, n_chars FROM docs WHERE doc_id % 11 = 0),
-         cur AS (SELECT * FROM hist WHERE valid_to IS NULL),
-         closed AS (SELECT * FROM hist WHERE valid_to IS NOT NULL),
-         j AS (SELECT coalesce(c.doc_id, s.doc_id) AS doc_id,
-             c.doc_id IS NOT NULL AS cp, s.doc_id IS NOT NULL AS sp,
-             c.source AS c_source, c.n_chars AS c_chars, c.valid_from AS c_from,
-             s.source AS s_source, s.n_chars AS s_chars,
-             (c.source IS NOT DISTINCT FROM s.source
-              AND c.n_chars IS NOT DISTINCT FROM s.n_chars) AS same
-           FROM cur c FULL JOIN snap s ON c.doc_id = s.doc_id)
-         SELECT doc_id, source, n_chars, valid_from, valid_to FROM closed
-         UNION ALL
-         SELECT doc_id, c_source, c_chars, c_from, CAST(NULL AS BIGINT)
-         FROM j WHERE cp AND sp AND same
-         UNION ALL
-         SELECT doc_id, c_source, c_chars, c_from, CAST(200 AS BIGINT)
-         FROM j WHERE cp AND (NOT sp OR NOT same)
-         UNION ALL
-         SELECT doc_id, s_source, s_chars, CAST(200 AS BIGINT), CAST(NULL AS BIGINT)
-         FROM j WHERE sp AND (NOT cp OR NOT same)
-         ORDER BY doc_id, valid_from""",
-    "q142_bigram_surprisal" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         bg AS (
-           SELECT doc_id, t[i] AS w1, t[i] || ' ' || t[i + 1] AS bg
-           FROM toks, unnest(range(1, len(t))) AS u(i)),
-         pair AS (SELECT w1, bg, count(*) AS c FROM bg GROUP BY 1, 2),
-         head AS (SELECT w1, sum(c) AS h FROM pair GROUP BY 1),
-         lp AS (SELECT bg,
-             CAST(floor(-ln(CAST(c AS DOUBLE)/h)*1e4 + 0.5) AS BIGINT) AS lp4
-           FROM pair JOIN head USING (w1)),
-         per AS (SELECT doc_id, sum(lp4) AS slp, count(*) AS nb
-           FROM bg JOIN lp USING (bg) GROUP BY doc_id)
-         SELECT doc_id, nb AS n_bigrams,
-           floor(CAST(slp AS DOUBLE)/(1e4*nb)*1e6 + 0.5)/1e6 AS avg_surprisal
-         FROM per ORDER BY doc_id""",
-    "q143_percentile_norm" ->
-      """SELECT doc_id, lang, n_chars,
-           round(percent_rank() OVER (PARTITION BY lang ORDER BY n_chars), 6) AS pr,
-           round(cume_dist() OVER (PARTITION BY lang ORDER BY n_chars), 6) AS cd
-         FROM documents ORDER BY doc_id""",
-    // the BPE training loop itself, re-learned inside DuckDB as 12
-    // unrolled argmax layers (all-integer — bit-exact, no envelope)
-    "q144_bpe_merges" -> bpeLearnOracleSql(steps = 12),
-    "q145_token_budget" ->
-      """WITH d AS (SELECT doc_id AS id, lang AS grp,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok FROM documents),
-         c AS (SELECT id, grp, n_tok,
-             CAST(coalesce(sum(n_tok) OVER (PARTITION BY grp
-               ORDER BY md5(CAST(id AS VARCHAR)), id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-           FROM d)
-         SELECT id, grp, n_tok, cum_before FROM c
-         WHERE cum_before < 4000 ORDER BY id""",
-    // the oracle IS the recompute: incremental fold ≡ full GROUP BY
-    "q146_incremental_agg" ->
-      """SELECT lang, source, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-           min(n_chars) AS min_chars, max(n_chars) AS max_chars
-         FROM documents GROUP BY lang, source ORDER BY lang, source""",
-    "q147_join_skew" ->
-      """WITH lc AS (SELECT user_id, count(*) AS n_left FROM events
-           WHERE event_type = 'click' GROUP BY 1),
-         rc AS (SELECT user_id, count(*) AS n_right FROM events
-           WHERE event_type = 'purchase' GROUP BY 1)
-         SELECT coalesce(lc.user_id, rc.user_id) AS user_id,
-           coalesce(n_left, 0) AS n_left, coalesce(n_right, 0) AS n_right,
-           coalesce(n_left, 0) * coalesce(n_right, 0) AS n_out
-         FROM lc FULL JOIN rc ON lc.user_id = rc.user_id
-         ORDER BY n_out DESC, user_id LIMIT 20""",
-    "q149_domain_kl" ->
-      """WITH tok AS (
-           SELECT lang AS g, unnest(string_split(text, ' ')) AS token
-           FROM documents),
-         gl AS (SELECT g, token, count(*) AS nl FROM tok GROUP BY 1, 2),
-         gn AS (SELECT g, sum(nl) AS ntot FROM gl GROUP BY 1),
-         cv AS (SELECT token, sum(nl) AS c FROM gl GROUP BY 1),
-         n AS (SELECT sum(c) AS n FROM cv),
-         lr AS (SELECT g, nl, ntot,
-             CAST(floor(ln(CAST(nl AS DOUBLE) * n.n
-               / (CAST(ntot AS DOUBLE) * c)) * 1e4 + 0.5e0) AS BIGINT) AS lr4
-           FROM gl JOIN gn USING (g) JOIN cv USING (token) CROSS JOIN n),
-         agg AS (SELECT g, sum(nl * lr4) AS fp, max(ntot) AS ntot
-           FROM lr GROUP BY g)
-         SELECT g AS lang, CAST(ntot AS BIGINT) AS n_tokens,
-           floor(CAST(fp AS DOUBLE) / (1e4 * ntot) * 1e6 + 0.5e0) / 1e6 AS kl
-         FROM agg ORDER BY lang""",
-    // reconstructs the q150 stream fold with windows: same
-    // equal-width batch split over the orderkey min/max bounds,
-    // per-(key,batch) last-wins winner, per-batch asOf = max version,
-    // every appearance is a change row (versions are unique and ride
-    // in the payload), valid_to = the key's next appearance's asOf
-    // (NULL = still open)
-    "q150_stream_scd2" ->
-      """WITH bounds AS (SELECT min(o_orderkey) AS lo, max(o_orderkey) AS hi
-             FROM orders),
-         u AS (SELECT o_custkey AS id, o_totalprice AS price,
-             o_orderkey AS v,
-             CAST(floor(((o_orderkey - lo) * 4.0) / (hi - lo + 1))
-               AS BIGINT) + 1 AS b
-           FROM orders CROSS JOIN bounds),
-         a AS (SELECT b, CAST(max(v) AS BIGINT) AS asof FROM u GROUP BY b),
-         w AS (SELECT id, b, price, v FROM (
-             SELECT id, b, price, v,
-               row_number() OVER (PARTITION BY id, b ORDER BY v DESC) AS rn
-             FROM u) WHERE rn = 1)
-         SELECT w.id, w.price, CAST(w.v AS BIGINT) AS v,
-           a.asof AS valid_from,
-           lead(a.asof) OVER (PARTITION BY w.id ORDER BY w.b) AS valid_to
-         FROM w JOIN a USING (b)
-         ORDER BY id, valid_from""",
-    "q151_bpe_encode" -> {
-      // the replace()-chain mirror of BpeLearn.encode: two passes per
-      // merge, generated from the same pinned table
-      val enc = BpeMerges.foldLeft(
-        "' ' || array_to_string(string_split(wd, ''), ' ') || ' '") {
-        case (sql, (a, b)) =>
-          val pat = s"' $a $b '"; val rep = s"' ${a + b} '"
-          s"replace(replace($sql, $pat, $rep), $pat, $rep)"
-      }
-      s"""WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS wd
-           FROM documents),
-         f AS (SELECT doc_id, wd FROM w WHERE len(wd) > 0),
-         e AS (SELECT doc_id,
-             CAST(len(string_split(trim($enc), ' ')) AS BIGINT) AS nt
-           FROM f)
-         SELECT doc_id, count(*) AS n_words,
-           CAST(sum(nt) AS BIGINT) AS n_tokens
-         FROM e GROUP BY doc_id ORDER BY doc_id"""
-    },
-    "q152_graphql_known_drugs" -> SqlKnownDrugsFold,
-    // variables resolve at parse time to exactly q152's AST → the
-    // same oracle verbatim
-    "q205_graphql_variables" -> SqlKnownDrugsFold,
-    // fragments expand at parse time and the alias renames only the
-    // output column — same resolved AST, same rows, q152's oracle
-    "q215_graphql_fragments" -> SqlKnownDrugsFold,
-    "q221_graphql_directives" -> SqlKnownDrugsFold,
-    // q152's fold + the schema type names as constants at every level
-    "q229_graphql_typename" ->
-      """WITH kd AS (
-           SELECT 'DRG_' || l_suppkey AS drug_id,
-             'TGT_' || l_partkey AS tgt_id,
-             round(least(4.0, count(*) / 10.0), 1) AS phase
-           FROM lineitem
-           JOIN orders ON o_orderkey = l_orderkey
-           JOIN customer ON c_custkey = o_custkey
-           WHERE c_mktsegment = 'BUILDING'
-           GROUP BY 1, 2),
-         r AS (
-           SELECT row_number() OVER (ORDER BY drug_id, tgt_id) AS rn,
-             phase, drug_id
-           FROM kd)
-         SELECT 'Disease' AS disease_type,
-           'DIS_BUILDING' AS disease_id, 'BUILDING' AS disease_name,
-           'KnownDrugs' AS conn_type,
-           (SELECT count(*) FROM kd) AS n_rows,
-           CAST(r.rn AS BIGINT) AS rn,
-           'KnownDrug' AS row_type, r.phase,
-           'Drug' AS drug_type, r.drug_id,
-           s.s_name AS drug_name
-         FROM r JOIN supplier s ON 'DRG_' || s.s_suppkey = r.drug_id
-         WHERE r.rn <= 25
-         ORDER BY rn""",
-    "q153_graphql_pathways" ->
-      """SELECT 'TGT_' || p_partkey AS id, p_name AS approvedSymbol,
-           CAST(1 AS BIGINT) AS rn,
-           'PWY_' || p_brand AS pathway_id, p_brand AS pathway_name
-         FROM part WHERE p_partkey = 1""",
-    "q154_graphql_linked_targets" ->
-      """WITH lt AS (
-           SELECT l_partkey AS pk, sum(l_quantity) AS q
-           FROM lineitem WHERE l_suppkey = 1 GROUP BY 1),
-         r AS (
-           SELECT row_number() OVER (ORDER BY q DESC, pk) AS rank, pk
-           FROM lt)
-         SELECT 'DRG_1' AS drug_id, s.s_name AS drug_name,
-           (SELECT count(*) FROM lt) AS n_rows,
-           r.rank, 'TGT_' || r.pk AS target_id, p.p_name AS target_name
-         FROM r
-         JOIN part p ON p.p_partkey = r.pk
-         JOIN supplier s ON s.s_suppkey = 1
-         ORDER BY rank""",
-    // score-descending rows with the executor's (−score, target_id)
-    // tie-break; score is the q58-q63 convention (segment share of
-    // the part's volume, round 6); unpaginated ⇒ default first page
-    "q155_graphql_assoc_targets" ->
-      """WITH pair AS (
-           SELECT c_mktsegment AS m, l_partkey AS p, sum(l_quantity) AS q
-           FROM lineitem
-           JOIN orders ON o_orderkey = l_orderkey
-           JOIN customer ON c_custkey = o_custkey
-           GROUP BY 1, 2),
-         edges AS (
-           SELECT 'DIS_' || m AS disease_id, 'TGT_' || p AS target_id,
-             round(q / sum(q) OVER (PARTITION BY p), 6) AS score
-           FROM pair),
-         mine AS (
-           SELECT e.target_id, e.score,
-             row_number() OVER (ORDER BY e.score DESC, e.target_id) AS rn
-           FROM edges e WHERE e.disease_id = 'DIS_MACHINERY')
-         SELECT m.rn, m.target_id, p.p_name AS target_name, m.score
-         FROM mine m
-         JOIN part p ON 'TGT_' || p.p_partkey = m.target_id
-         WHERE m.rn <= 25
-         ORDER BY rn""",
-    // the x2.py:77-91 GetAssociatedDiseases template: the reverse
-    // association edge, score-descending with the (−score, disease_id)
-    // tie-break; one target touches at most the 5 segments, so the
-    // default page covers the whole connection here — the rn <= 25
-    // guard mirrors the executor's contract anyway
-    "q178_graphql_assoc_diseases" ->
-      """WITH pair AS (
-           SELECT c_mktsegment AS m, l_partkey AS p, sum(l_quantity) AS q
-           FROM lineitem
-           JOIN orders ON o_orderkey = l_orderkey
-           JOIN customer ON c_custkey = o_custkey
-           GROUP BY 1, 2),
-         edges AS (
-           SELECT 'TGT_' || p AS target_id, 'DIS_' || m AS disease_id,
-             m AS disease_name,
-             round(q / sum(q) OVER (PARTITION BY p), 6) AS score
-           FROM pair),
-         mine AS (
-           SELECT disease_id, disease_name, score,
-             CAST(row_number() OVER (ORDER BY score DESC, disease_id)
-               AS BIGINT) AS rn
-           FROM edges WHERE target_id = 'TGT_1')
-         SELECT rn, disease_id, disease_name, score
-         FROM mine WHERE rn <= 25
-         ORDER BY rn""",
-    // the four stage conventions chained verbatim: q26 gate → q29
-    // fingerprint keep-first → q145 budget window → q93 shard fold
-    "q156_curation_capstone" ->
-      """WITH q AS (
-           SELECT doc_id, lang, text,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-           FROM documents
-           WHERE len(string_split(text, ' ')) BETWEEN 20 AND 1000
-             AND CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-               / len(string_split(text, ' ')) > 0.3),
-         d AS (
-           SELECT doc_id, lang, n_tok FROM q
-           WHERE doc_id IN (
-             SELECT min(doc_id) FROM q
-             GROUP BY md5(trim(regexp_replace(regexp_replace(lower(text),
-               '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))))),
-         c AS (
-           SELECT doc_id, lang, n_tok,
-             coalesce(sum(n_tok) OVER (PARTITION BY lang
-               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
-           FROM d),
-         k AS (SELECT doc_id, lang, n_tok FROM c WHERE cum < 3000),
-         s AS (
-           SELECT doc_id, lang, n_tok,
-             md5('1:' || CAST(doc_id AS VARCHAR)) AS ord
-           FROM k),
-         b AS (
-           SELECT doc_id, lang, n_tok, ord,
-             (16*(strpos('0123456789abcdef', substr(md5(ord),1,1))-1)
-               + (strpos('0123456789abcdef', substr(md5(ord),2,1))-1)) % 4
-               AS shard
-           FROM s)
-         SELECT doc_id, lang, n_tok, CAST(shard AS BIGINT) AS shard,
-           CAST(row_number() OVER
-             (PARTITION BY shard ORDER BY ord, doc_id) AS BIGINT) AS pos
-         FROM b ORDER BY shard, pos""",
-    "q157_graphql_search" ->
-      """WITH hits AS (
-           SELECT 'TGT_' || p_partkey AS id, p_name AS name,
-             'target' AS entity
-           FROM part WHERE lower(p_name) LIKE '%red%'
-           UNION ALL
-           SELECT 'DRG_' || s_suppkey AS id, s_name AS name,
-             'drug' AS entity
-           FROM supplier WHERE lower(s_name) LIKE '%red%')
-         SELECT (SELECT count(*) FROM hits) AS total,
-           row_number() OVER (ORDER BY name, id) AS rn,
-           id, name, entity
-         FROM hits ORDER BY rn""",
-    // target.knownDrugs rows for TGT_2 sorted (drug_id, disease_id);
-    // max_phase rolls up over ALL the drug's edges, not just TGT_2's
-    "q158_graphql_drug_facets" ->
-      """WITH allkd AS (
-           SELECT 'DIS_' || c_mktsegment AS dis,
-             'TGT_' || l_partkey AS tgt,
-             'DRG_' || l_suppkey AS drug_id,
-             round(least(4.0, count(*) / 10.0), 1) AS phase
-           FROM lineitem
-           JOIN orders ON o_orderkey = l_orderkey
-           JOIN customer ON c_custkey = o_custkey
-           GROUP BY 1, 2, 3),
-         mp AS (SELECT drug_id, max(phase) AS maxph FROM allkd GROUP BY 1),
-         mine AS (
-           SELECT dis, drug_id,
-             row_number() OVER (ORDER BY drug_id, dis) AS rn
-           FROM allkd WHERE tgt = 'TGT_2')
-         SELECT m.rn, m.drug_id, s.s_name AS name,
-           s.s_name || '|SUP-' || s.s_suppkey AS synonyms,
-           lower(n.n_name) AS drug_type,
-           s.s_acctbal >= 0 AS is_approved,
-           mp.maxph AS max_phase
-         FROM mine m
-         JOIN supplier s ON 'DRG_' || s.s_suppkey = m.drug_id
-         JOIN nation n ON n.n_nationkey = s.s_nationkey
-         LEFT JOIN mp ON mp.drug_id = m.drug_id
-         WHERE m.rn <= 25
-         ORDER BY rn""",
-    "q159_quarantine" ->
-      """WITH f AS (
-           SELECT l_orderkey, l_linenumber,
-             l_quantity <= 30 AS ok1,
-             l_discount <= 0.05 AS ok2,
-             l_extendedprice > 0 AS ok3
-           FROM lineitem)
-         SELECT l_orderkey, l_linenumber,
-           concat_ws(',',
-             CASE WHEN NOT ok1 THEN 'qty_le_30' END,
-             CASE WHEN NOT ok2 THEN 'disc_le_05' END,
-             CASE WHEN NOT ok3 THEN 'price_pos' END) AS failed_checks,
-           (SELECT count(*) FROM f WHERE ok1 AND ok2 AND ok3) AS n_pass
-         FROM f WHERE NOT (ok1 AND ok2 AND ok3)
-         ORDER BY l_orderkey, l_linenumber""",
-    // the roundtrip IS the check: ORC-written rows must read back
-    // byte-identical to the parquet the oracle scans
-    "q160_orc_roundtrip" ->
-      """SELECT doc_id, lang, n_chars FROM documents
-         WHERE lang = 'en' AND n_chars > 500
-         ORDER BY doc_id""",
-    // skipping must be invisible in the result: the oracle is the
-    // plain unpruned filter
-    "q161_manifest_skip" ->
-      """SELECT doc_id, lang, n_chars FROM documents
-         WHERE n_chars BETWEEN 200 AND 260
-         ORDER BY doc_id""",
-    // the metadata count must equal the full scan's count exactly
-    "q162_manifest_count" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_rows FROM documents
-         WHERE n_chars BETWEEN 100 AND 400""",
-    // HLL envelope: exact count recomputed, error verdict pinned TRUE
-    "q40_approx_distinct" ->
-      """SELECT CAST(count(DISTINCT l_partkey) AS BIGINT) AS exact_parts,
-           TRUE AS hll_within_10pct
-         FROM lineitem""",
-    // GK envelope: the exact [p49, p51] band recomputed (quantile_cont
-    // = the same interpolated definition), the in-band verdict TRUE
-    "q83_approx_percentiles" ->
-      """SELECT l_returnflag,
-           round(quantile_cont(l_quantity, 0.49), 6) AS lo_p49,
-           round(quantile_cont(l_quantity, 0.51), 6) AS hi_p51,
-           TRUE AS p50_in_band
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    // merged-HLL envelope: doc_id is unique, so the per-lang rollup of
-    // per-source distincts equals the plain per-lang distinct
-    "q87_hll_rollup" ->
-      """SELECT lang, CAST(count(DISTINCT doc_id) AS BIGINT) AS exact_docs,
-           TRUE AS merged_within_5pct
-         FROM documents GROUP BY lang ORDER BY lang""",
-    // the sketch's returned set must contain the exact top-5 with
-    // exact counts (maxItemsTracked >> vocabulary): sketch_n == n_exact
-    "q91_approx_top_terms" ->
-      """WITH toks AS (SELECT lang, unnest(string_split(text,' ')) AS token
-             FROM documents),
-         exact AS (SELECT lang, token, CAST(count(*) AS BIGINT) AS n_exact
-             FROM toks GROUP BY lang, token),
-         top AS (SELECT lang, token, n_exact,
-             CAST(row_number() OVER (PARTITION BY lang
-               ORDER BY n_exact DESC, token) AS BIGINT) AS rk
-           FROM exact)
-         SELECT lang, rk, token, n_exact, n_exact AS sketch_n
-         FROM top WHERE rk <= 5 ORDER BY lang, rk""",
-    // the CMS envelope: both bound booleans must be TRUE for every
-    // exact top-20 token; the exact counts are recomputed here
-    "q105_cms_heavy_hitters" ->
-      """WITH toks AS (SELECT unnest(string_split(text, ' ')) AS token
-             FROM documents)
-         SELECT token, n_exact, TRUE AS cms_lower_ok, TRUE AS cms_upper_ok
-         FROM (SELECT token, CAST(count(*) AS BIGINT) AS n_exact FROM toks
-               GROUP BY token ORDER BY n_exact DESC, token LIMIT 20)
-         ORDER BY n_exact DESC, token""",
-    // reconstructs the two-level nested fold flat: mechanism rows are
-    // (drug, brand) groups ordered by the brand label, each row's
-    // targets the drug's distinct parts of that brand ordered by the
-    // TGT_ id STRING (the executor's sort_array order)
-    "q163_graphql_mechanisms" ->
-      """WITH mech AS (
-           SELECT DISTINCT p_brand AS mechanism, l_partkey AS pk
-           FROM lineitem JOIN part ON p_partkey = l_partkey
-           WHERE l_suppkey = 7),
-         x AS (
-           SELECT mechanism, pk, 'TGT_' || pk AS target_id,
-             CAST(dense_rank() OVER (ORDER BY mechanism) AS BIGINT) AS rn,
-             CAST(row_number() OVER (PARTITION BY mechanism
-               ORDER BY 'TGT_' || pk) AS BIGINT) AS tn
-           FROM mech)
-         SELECT 'DRG_7' AS drug_id, s.s_name AS drug_name, x.rn, x.tn,
-           x.mechanism, x.target_id, p.p_name AS target_name
-         FROM x
-         JOIN part p ON p.p_partkey = x.pk
-         CROSS JOIN (SELECT s_name FROM supplier WHERE s_suppkey = 7) s
-         ORDER BY rn, tn""",
-    // q152's fold, sliced to rows 11-20 (page index 1, size 10) with
-    // the count still the TOTAL
-    "q164_graphql_page" ->
-      """WITH kd AS (
-           SELECT 'DRG_' || l_suppkey AS drug_id,
-             'TGT_' || l_partkey AS tgt_id,
-             round(least(4.0, count(*) / 10.0), 1) AS phase
-           FROM lineitem
-           JOIN orders ON o_orderkey = l_orderkey
-           JOIN customer ON c_custkey = o_custkey
-           WHERE c_mktsegment = 'BUILDING'
-           GROUP BY 1, 2),
-         r AS (
-           SELECT row_number() OVER (ORDER BY drug_id, tgt_id) AS rn0,
-             phase, drug_id
-           FROM kd)
-         SELECT 'DIS_BUILDING' AS disease_id,
-           (SELECT count(*) FROM kd) AS n_rows,
-           CAST(r.rn0 - 10 AS BIGINT) AS rn, r.phase, r.drug_id,
-           s.s_name AS drug_name
-         FROM r JOIN supplier s ON 'DRG_' || s.s_suppkey = r.drug_id
-         WHERE r.rn0 BETWEEN 11 AND 20
-         ORDER BY rn""",
-    // the batch root returns only the ids that exist, id-string-sorted
-    "q165_graphql_batch_targets" ->
-      """SELECT CAST(row_number() OVER (ORDER BY 'TGT_' || p_partkey)
-             AS BIGINT) AS rn,
-           'TGT_' || p_partkey AS target_id, p_name AS target_name
-         FROM part WHERE p_partkey IN (3, 5, 8, 9999999)
-         ORDER BY rn""",
-    // IDENTICAL to the q150 oracle: the bucket-partitioned layout must
-    // be value-invisible — same fold, same batches, same history
-    "q166_stream_scd2_bucketed" ->
-      """WITH bounds AS (SELECT min(o_orderkey) AS lo, max(o_orderkey) AS hi
-             FROM orders),
-         u AS (SELECT o_custkey AS id, o_totalprice AS price,
-             o_orderkey AS v,
-             CAST(floor(((o_orderkey - lo) * 4.0) / (hi - lo + 1))
-               AS BIGINT) + 1 AS b
-           FROM orders CROSS JOIN bounds),
-         a AS (SELECT b, CAST(max(v) AS BIGINT) AS asof FROM u GROUP BY b),
-         w AS (SELECT id, b, price, v FROM (
-             SELECT id, b, price, v,
-               row_number() OVER (PARTITION BY id, b ORDER BY v DESC) AS rn
-             FROM u) WHERE rn = 1)
-         SELECT w.id, w.price, CAST(w.v AS BIGINT) AS v,
-           a.asof AS valid_from,
-           lead(a.asof) OVER (PARTITION BY w.id ORDER BY w.b) AS valid_to
-         FROM w JOIN a USING (b)
-         ORDER BY id, valid_from""",
-    // the oracle runs the RAW inequality predicate the binned
-    // equi-join replaces — the pair sets must be identical
-    // (epoch_ns//1000 = the engine loader's exact ns→µs division)
-    "q167_interval_overlap" ->
-      """WITH l AS (SELECT user_id, event_id,
-             epoch_ns(ts) // 1000 AS ls,
-             epoch_ns(ts) // 1000 + 300000000 AS le
-           FROM events WHERE event_type = 'click'),
-         r AS (SELECT user_id, event_id AS r_event_id,
-             epoch_ns(ts) // 1000 AS r_rs,
-             epoch_ns(ts) // 1000 + 600000000 AS r_re
-           FROM events WHERE event_type = 'purchase')
-         SELECT l.user_id, l.event_id, ls, le, r_event_id, r_rs, r_re
-         FROM l JOIN r USING (user_id)
-         WHERE ls <= r_re AND r_rs <= le
-         ORDER BY event_id, r_event_id""",
-    "q168_interval_merge" ->
-      """WITH iv AS (SELECT user_id,
-             epoch_ns(ts) // 1000 AS s,
-             epoch_ns(ts) // 1000 + 600000000 AS e
-           FROM events WHERE event_type = 'click'),
-         m AS (SELECT user_id, s, e,
-             max(e) OVER (PARTITION BY user_id ORDER BY s, e
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS rm
-           FROM iv),
-         f AS (SELECT user_id, s, e,
-             CASE WHEN rm IS NULL OR s > rm THEN 1 ELSE 0 END AS opens
-           FROM m),
-         g AS (SELECT user_id, s, e,
-             sum(opens) OVER (PARTITION BY user_id ORDER BY s, e
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-           FROM f)
-         SELECT user_id, min(s) AS island_start, max(e) AS island_end,
-           count(*) AS n_intervals
-         FROM g GROUP BY user_id, island
-         ORDER BY user_id, island_start""",
-    // the oracle runs the quadratic NOT-EXISTS dominance scan the
-    // window encoding replaces — frontiers must be identical
-    "q169_pareto_skyline" ->
-      """WITH p AS (SELECT DISTINCT l_returnflag AS g,
-             CAST(round(l_extendedprice * 100) AS BIGINT) AS price_cents,
-             CAST(round(l_quantity) AS BIGINT) AS qty
-           FROM lineitem)
-         SELECT g AS l_returnflag, price_cents, qty
-         FROM p q WHERE NOT EXISTS (
-           SELECT 1 FROM p d WHERE d.g = q.g
-             AND d.price_cents <= q.price_cents AND d.qty >= q.qty
-             AND (d.price_cents < q.price_cents OR d.qty > q.qty))
-         ORDER BY l_returnflag, price_cents""",
-    "q170_profile" ->
-      """SELECT 'o_custkey' AS column_name, count(*) AS n_rows,
-           count(*) - count(o_custkey) AS n_null,
-           count(DISTINCT o_custkey) AS n_distinct,
-           CAST(min(o_custkey) AS VARCHAR) AS min_val,
-           CAST(max(o_custkey) AS VARCHAR) AS max_val
-         FROM orders
-         UNION ALL
-         SELECT 'o_orderkey', count(*), count(*) - count(o_orderkey),
-           count(DISTINCT o_orderkey),
-           CAST(min(o_orderkey) AS VARCHAR), CAST(max(o_orderkey) AS VARCHAR)
-         FROM orders
-         UNION ALL
-         SELECT 'o_orderpriority', count(*), count(*) - count(o_orderpriority),
-           count(DISTINCT o_orderpriority),
-           min(o_orderpriority), max(o_orderpriority)
-         FROM orders
-         UNION ALL
-         SELECT 'o_orderstatus', count(*), count(*) - count(o_orderstatus),
-           count(DISTINCT o_orderstatus),
-           min(o_orderstatus), max(o_orderstatus)
-         FROM orders
-         ORDER BY column_name""",
-    // HLL-profile envelope: the exact profile recomputed, the
-    // estimate-in-band verdict pinned TRUE on every column row
-    "q179_profile_approx" ->
-      """SELECT 'o_custkey' AS column_name, count(*) AS n_rows,
-           count(*) - count(o_custkey) AS n_null,
-           count(DISTINCT o_custkey) AS n_distinct,
-           CAST(min(o_custkey) AS VARCHAR) AS min_val,
-           CAST(max(o_custkey) AS VARCHAR) AS max_val,
-           TRUE AS approx_within_3rsd
-         FROM orders
-         UNION ALL
-         SELECT 'o_orderkey', count(*), count(*) - count(o_orderkey),
-           count(DISTINCT o_orderkey),
-           CAST(min(o_orderkey) AS VARCHAR), CAST(max(o_orderkey) AS VARCHAR),
-           TRUE
-         FROM orders
-         UNION ALL
-         SELECT 'o_orderpriority', count(*), count(*) - count(o_orderpriority),
-           count(DISTINCT o_orderpriority),
-           min(o_orderpriority), max(o_orderpriority), TRUE
-         FROM orders
-         UNION ALL
-         SELECT 'o_orderstatus', count(*), count(*) - count(o_orderstatus),
-           count(DISTINCT o_orderstatus),
-           min(o_orderstatus), max(o_orderstatus), TRUE
-         FROM orders
-         ORDER BY column_name""",
-    // the oracle replays the whole span-dedup pipeline: md5 8-gram
-    // span keys, keep-first via a (doc_id, pos) window rank per key,
-    // the q168-style island fold (maxGap=1: touching spans are one
-    // region), and the cleaned-text md5 rebuilt by dropping words
-    // whose position falls in a removed region
-    "q180_span_dedup" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         g AS (SELECT doc_id, CAST(i AS BIGINT) AS pos,
-                      md5(array_to_string(ws[i:i+7], ' ')) AS h
-               FROM w, unnest(range(1, len(ws) - 6)) AS t(i)),
-         m AS (SELECT doc_id, pos,
-                      count(*) OVER (PARTITION BY h) AS n_occ,
-                      row_number() OVER (PARTITION BY h ORDER BY doc_id, pos) AS rn
-               FROM g),
-         iv AS (SELECT doc_id, pos AS s, pos + 7 AS e
-                FROM m WHERE n_occ > 1 AND rn > 1),
-         op AS (SELECT doc_id, s, e,
-                       CASE WHEN s > coalesce(max(e) OVER (PARTITION BY doc_id
-                              ORDER BY s, e
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                            CAST(-2 AS BIGINT)) + 1 THEN 1 ELSE 0 END AS opens
-                FROM iv),
-         reg AS (SELECT doc_id, min(s) AS rs, max(e) AS re
-                 FROM (SELECT doc_id, s, e,
-                              sum(opens) OVER (PARTITION BY doc_id
-                                ORDER BY s, e) AS isl
-                       FROM op)
-                 GROUP BY doc_id, isl),
-         agg AS (SELECT doc_id, count(*) AS nreg, sum(re - rs + 1) AS ndup,
-                        list({'s': rs, 'e': re} ORDER BY rs, re) AS ivs
-                 FROM reg GROUP BY doc_id)
-         SELECT w.doc_id,
-           CAST(len(w.ws) AS BIGINT) AS total_words,
-           CAST(coalesce(a.nreg, 0) AS BIGINT) AS dup_regions,
-           CAST(coalesce(a.ndup, 0) AS BIGINT) AS dup_words,
-           CAST(coalesce(a.ndup, 0) * 1000000 // len(w.ws) AS BIGINT) AS dup_ppm,
-           md5(coalesce(array_to_string(
-             list_transform(
-               list_filter(range(1, len(w.ws) + 1),
-                 i -> len(list_filter(coalesce(a.ivs, []),
-                        v -> i >= v.s AND i <= v.e)) = 0),
-               i -> w.ws[CAST(i AS INT)]),
-             ' '), '')) AS clean_fp
-         FROM w LEFT JOIN agg a USING (doc_id)
-         ORDER BY w.doc_id""",
-    // q180's pipeline with the archive probe spliced in: history
-    // spans (doc_id % 4 <> 3) form the hash archive; batch
-    // occurrences in the archive are removed outright, the rest
-    // keep-first within the batch
-    "q181_span_dedup_incremental" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         g AS (SELECT doc_id, CAST(i AS BIGINT) AS pos,
-                      md5(array_to_string(ws[i:i+7], ' ')) AS h
-               FROM w, unnest(range(1, len(ws) - 6)) AS t(i)),
-         arch AS (SELECT DISTINCT h FROM g WHERE doc_id % 4 <> 3),
-         b AS (SELECT * FROM g WHERE doc_id % 4 = 3),
-         hits AS (SELECT doc_id, pos AS s, pos + 7 AS e FROM b
-                  WHERE EXISTS (SELECT 1 FROM arch a WHERE a.h = b.h)),
-         fresh AS (SELECT * FROM b
-                   WHERE NOT EXISTS (SELECT 1 FROM arch a WHERE a.h = b.h)),
-         f2 AS (SELECT doc_id, pos,
-                       count(*) OVER (PARTITION BY h) AS n_occ,
-                       row_number() OVER (PARTITION BY h ORDER BY doc_id, pos) AS rn
-                FROM fresh),
-         iv AS (SELECT * FROM hits
-                UNION ALL
-                SELECT doc_id, pos, pos + 7 FROM f2 WHERE n_occ > 1 AND rn > 1),
-         op AS (SELECT doc_id, s, e,
-                       CASE WHEN s > coalesce(max(e) OVER (PARTITION BY doc_id
-                              ORDER BY s, e
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                            CAST(-2 AS BIGINT)) + 1 THEN 1 ELSE 0 END AS opens
-                FROM iv),
-         reg AS (SELECT doc_id, min(s) AS rs, max(e) AS re
-                 FROM (SELECT doc_id, s, e,
-                              sum(opens) OVER (PARTITION BY doc_id
-                                ORDER BY s, e) AS isl
-                       FROM op)
-                 GROUP BY doc_id, isl),
-         agg AS (SELECT doc_id, count(*) AS nreg, sum(re - rs + 1) AS ndup,
-                        list({'s': rs, 'e': re} ORDER BY rs, re) AS ivs
-                 FROM reg GROUP BY doc_id)
-         SELECT w.doc_id,
-           CAST(len(w.ws) AS BIGINT) AS total_words,
-           CAST(coalesce(a.nreg, 0) AS BIGINT) AS dup_regions,
-           CAST(coalesce(a.ndup, 0) AS BIGINT) AS dup_words,
-           CAST(coalesce(a.ndup, 0) * 1000000 // len(w.ws) AS BIGINT) AS dup_ppm,
-           md5(coalesce(array_to_string(
-             list_transform(
-               list_filter(range(1, len(w.ws) + 1),
-                 i -> len(list_filter(coalesce(a.ivs, []),
-                        v -> i >= v.s AND i <= v.e)) = 0),
-               i -> w.ws[CAST(i AS INT)]),
-             ' '), '')) AS clean_fp
-         FROM w LEFT JOIN agg a USING (doc_id)
-         WHERE w.doc_id % 4 = 3
-         ORDER BY w.doc_id""",
-    // the whole hard-EM training loop re-run inside DuckDB: seed,
-    // three unrolled Viterbi-DP + backtrack + prune + re-estimate
-    // layers (recursive CTEs carrying per-position candidate lists)
-    "q171_unigram_learn" -> unigramLearnOracleSql(vocabSize = 200,
-      maxLen = 4, iters = 3, unkCost = UnigramLm.UnkCostMicro),
-    // the oracle replays the greedy longest-match DP as a recursive
-    // CTE over (word, position) states — one step per consumed piece,
-    // LATERAL argmax = longest vocab piece matching at the position,
-    // single-char fallback rides the UNION ALL arm
-    "q172_unigram_encode" -> {
-      val values = UnigramPieces.map(p => s"('$p')").mkString(", ")
-      s"""WITH RECURSIVE v(piece, plen) AS (
-           SELECT piece, CAST(len(piece) AS INT)
-           FROM (VALUES $values) t(piece)),
-         words AS (SELECT DISTINCT w FROM (
-             SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-           WHERE len(w) > 0),
-         seg AS (
-           SELECT w, 0 AS pos, CAST('' AS VARCHAR) AS toks FROM words
-           UNION ALL
-           SELECT s.w, s.pos + best.plen,
-             CASE WHEN s.toks = '' THEN best.piece
-                  ELSE s.toks || ' ' || best.piece END
-           FROM seg s, LATERAL (
-             SELECT piece, plen FROM (
-               SELECT piece, plen FROM v
-               WHERE substr(s.w, s.pos + 1, plen) = piece
-               UNION ALL SELECT substr(s.w, s.pos + 1, 1), 1)
-             ORDER BY plen DESC, piece LIMIT 1) best
-           WHERE s.pos < len(s.w))
-         SELECT w, toks FROM seg WHERE pos = len(w) ORDER BY w"""
-    },
-    // the oracle counts pair support with the quadratic within-basket
-    // self-join the in-task pair generation replaces
-    "q173_basket_rules" ->
-      """WITH bi AS (SELECT DISTINCT l.l_orderkey AS b, p.p_brand AS i
-             FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
-         supp AS (SELECT i, count(*) AS s FROM bi GROUP BY i),
-         n AS (SELECT count(DISTINCT b) AS nb FROM bi),
-         pr AS (SELECT a.i AS item_a, c.i AS item_b, count(*) AS supp_ab
-             FROM bi a JOIN bi c ON a.b = c.b AND a.i < c.i
-             GROUP BY 1, 2 HAVING count(*) >= 100)
-         SELECT item_a, item_b, sa.s AS supp_a, sb.s AS supp_b, supp_ab,
-           nb AS n_baskets,
-           supp_ab * 1000000 // sa.s AS conf_ab_fp,
-           supp_ab * 1000000 // sb.s AS conf_ba_fp,
-           (supp_ab * nb * 1000000) // (sa.s * sb.s) AS lift_fp
-         FROM pr JOIN supp sa ON sa.i = pr.item_a
-           JOIN supp sb ON sb.i = pr.item_b CROSS JOIN n
-         ORDER BY item_a, item_b""",
-    "q174_split_assign" ->
-      """WITH d AS (SELECT lang,
-             16*(strpos('0123456789abcdef',
-                   substr(md5(CAST(doc_id AS VARCHAR)),1,1))-1)
-               + (strpos('0123456789abcdef',
-                   substr(md5(CAST(doc_id AS VARCHAR)),2,1))-1) AS b,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok
-           FROM documents)
-         SELECT lang,
-           CASE WHEN b < 204 THEN 'train'
-                WHEN b < 230 THEN 'val' ELSE 'test' END AS split,
-           count(*) AS n_docs, CAST(sum(ntok) AS BIGINT) AS n_tokens
-         FROM d GROUP BY 1, 2 ORDER BY lang, split""",
-    "q175_grouping_sets" -> SqlGroupingSets,
-    // the oracle replays the identical rank selection — lower median
-    // by row_number, then the MAD the same way
-    "q176_mad_outliers" ->
-      """WITH v AS (SELECT lang AS g, CAST(n_chars AS BIGINT) AS v
-             FROM documents),
-         m AS (SELECT g, v AS med FROM (
-             SELECT g, v, row_number() OVER (PARTITION BY g ORDER BY v) AS rn,
-               count(*) OVER (PARTITION BY g) AS n FROM v)
-           WHERE rn = (n + 1) // 2),
-         d AS (SELECT v.g, med, abs(v - med) AS dd FROM v JOIN m USING (g)),
-         md AS (SELECT g, dd AS mad FROM (
-             SELECT g, dd, row_number() OVER (PARTITION BY g ORDER BY dd) AS rn,
-               count(*) OVER (PARTITION BY g) AS n FROM d)
-           WHERE rn = (n + 1) // 2)
-         SELECT d.g AS lang, count(*) AS n,
-           CAST(max(med) AS BIGINT) AS med, CAST(max(mad) AS BIGINT) AS mad,
-           CAST(sum(CASE WHEN dd > 3 * mad THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_outliers
-         FROM d JOIN md USING (g) GROUP BY d.g ORDER BY lang""",
-    // the oracle recomputes the two-generation union from the
-    // UNSPLIT source: merged-read rows missing n_chars are exactly
-    // the even doc_ids
-    "q177_schema_evolution" ->
-      """SELECT lang, count(*) AS n,
-           count(CASE WHEN doc_id % 2 = 1 THEN n_chars END) AS n_with,
-           CAST(sum(CASE WHEN doc_id % 2 = 1 THEN n_chars END) AS BIGINT)
-             AS sum_chars
-         FROM documents GROUP BY lang ORDER BY lang""",
-    // all-occurrence (overlapping) multi-pattern counts: the
-    // recursive step advances one char past each hit's START, so
-    // self-overlapping hits are found; rows = occurrences
-    "q200_dictionary_tag" ->
-      """WITH RECURSIVE
-         pats(pattern) AS (VALUES ('data'),('data data'),('the join'),
-           ('spark'),('query query'),('window scan')),
-         m(doc_id, lang, pattern, pos) AS (
-           SELECT d.doc_id, d.lang, p.pattern, strpos(d.text, p.pattern)
-           FROM documents d CROSS JOIN pats p
-           WHERE strpos(d.text, p.pattern) > 0
-           UNION ALL
-           SELECT m.doc_id, m.lang, m.pattern,
-             m.pos + strpos(substr(d.text, m.pos + 1), m.pattern)
-           FROM m JOIN documents d ON d.doc_id = m.doc_id
-           WHERE strpos(substr(d.text, m.pos + 1), m.pattern) > 0),
-         occ AS (SELECT doc_id, lang, pattern, count(*) AS n
-                 FROM m GROUP BY 1, 2, 3)
-         SELECT lang, pattern, CAST(sum(n) AS BIGINT) AS occurrences,
-           CAST(count(*) AS BIGINT) AS docs_with_hit
-         FROM occ GROUP BY 1, 2 ORDER BY 1, 2""",
-    // the datasheet replays as ONE query: q200's recursive tag device
-    // per lang + q174's md5 split buckets + the q29 fingerprint and
-    // q26 gate rules, all integer/string-exact
-    "q210_corpus_datasheet" -> {
-      val vals = DictPatterns.map(p => s"('$p')").mkString(",")
-      s"""WITH RECURSIVE
-         pats(pattern) AS (VALUES $vals),
-         m(doc_id, lang, pattern, pos) AS (
-           SELECT d.doc_id, d.lang, p.pattern, strpos(d.text, p.pattern)
-           FROM documents d CROSS JOIN pats p
-           WHERE strpos(d.text, p.pattern) > 0
-           UNION ALL
-           SELECT m.doc_id, m.lang, m.pattern,
-             m.pos + strpos(substr(d.text, m.pos + 1), m.pattern)
-           FROM m JOIN documents d ON d.doc_id = m.doc_id
-           WHERE strpos(substr(d.text, m.pos + 1), m.pattern) > 0),
-         tg AS (SELECT lang, CAST(count(*) AS BIGINT) AS blocklist_hits
-                FROM m GROUP BY lang),
-         d AS (
-           SELECT lang, text, string_split(text, ' ') AS ts,
-             md5(trim(regexp_replace(regexp_replace(lower(text),
-               '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS fp,
-             16*(strpos('0123456789abcdef',
-                   substr(md5(CAST(doc_id AS VARCHAR)),1,1))-1)
-               + (strpos('0123456789abcdef',
-                   substr(md5(CAST(doc_id AS VARCHAR)),2,1))-1) AS b
-           FROM documents),
-         a AS (
-           SELECT lang,
-             CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(len(ts)) AS BIGINT) AS n_tokens,
-             CAST(sum(len(text)) AS BIGINT) AS sum_chars,
-             CAST(count(*) - count(DISTINCT fp) AS BIGINT) AS n_exact_dups,
-             CAST(sum(CASE WHEN len(ts) BETWEEN 20 AND 1000
-               AND CAST(len(list_distinct(ts)) AS DOUBLE) / len(ts) > 0.3
-               THEN 1 ELSE 0 END) AS BIGINT) AS n_quality,
-             CAST(sum(CASE WHEN b < 204 THEN 1 ELSE 0 END) AS BIGINT) AS n_train,
-             CAST(sum(CASE WHEN b >= 204 AND b < 230 THEN 1 ELSE 0 END) AS BIGINT) AS n_val,
-             CAST(sum(CASE WHEN b >= 230 THEN 1 ELSE 0 END) AS BIGINT) AS n_test
-           FROM d GROUP BY lang)
-         SELECT a.lang, a.n_docs, a.n_tokens, a.sum_chars, a.n_exact_dups,
-           a.n_quality, a.n_train, a.n_val, a.n_test,
-           CAST(coalesce(t.blocklist_hits, 0) AS BIGINT) AS blocklist_hits
-         FROM a LEFT JOIN tg t USING (lang) ORDER BY a.lang"""
-    },
-    // redaction: all-occurrence match starts (q200's recursive
-    // device) → greedy leftmost-longest selection as a list-state
-    // cursor recursion (q171's discipline: no correlated subqueries
-    // inside the recursive member) → per-segment string rebuild via
-    // lag + ordered string_agg — md5-exact per document
-    "q209_dictionary_redact" -> {
-      val vals = DictPatterns.map(p => s"('$p')").mkString(",")
-      s"""WITH RECURSIVE
-         pats(pattern) AS (VALUES $vals),
-         m(doc_id, pattern, pos) AS (
-           SELECT d.doc_id, p.pattern, strpos(d.text, p.pattern)
-           FROM documents d CROSS JOIN pats p
-           WHERE strpos(d.text, p.pattern) > 0
-           UNION ALL
-           SELECT m.doc_id, m.pattern,
-             m.pos + strpos(substr(d.text, m.pos + 1), m.pattern)
-           FROM m JOIN documents d ON d.doc_id = m.doc_id
-           WHERE strpos(substr(d.text, m.pos + 1), m.pattern) > 0),
-         ml AS MATERIALIZED (
-           SELECT doc_id,
-             list({'s': CAST(pos AS BIGINT), 'nl': -CAST(len(pattern) AS BIGINT)}
-               ORDER BY pos, -len(pattern)) AS ms
-           FROM m GROUP BY doc_id),
-         sel AS (
-           SELECT doc_id, ms,
-             CAST([] AS STRUCT(s BIGINT, nl BIGINT)[]) AS picks,
-             CAST(1 AS BIGINT) AS cur
-           FROM ml
-           UNION ALL
-           SELECT doc_id, ms, list_append(picks, nxt), nxt.s - nxt.nl
-           FROM (SELECT doc_id, ms, picks, cur,
-                   list_filter(ms, x -> x.s >= cur)[1] AS nxt
-                 FROM sel)
-           WHERE nxt IS NOT NULL),
-         fin AS MATERIALIZED (
-           SELECT doc_id, arg_max(picks, len(picks)) AS picks
-           FROM sel GROUP BY doc_id),
-         px AS (
-           SELECT f.doc_id, t.e['i'] AS i, t.e['s'] AS s, -t.e['nl'] AS l
-           FROM fin f, unnest(list_transform(range(1, len(picks) + 1), j ->
-             {'i': j, 's': picks[j].s, 'nl': picks[j].nl})) t(e)),
-         seg AS (
-           SELECT p.doc_id, p.i, p.s, p.l,
-             coalesce(lag(p.s + p.l) OVER (PARTITION BY p.doc_id ORDER BY p.i), 1) AS pe
-           FROM px p),
-         red AS (
-           SELECT s.doc_id,
-             string_agg(substr(d.text, CAST(s.pe AS INT), CAST(s.s - s.pe AS INT)) || '[X]', ''
-               ORDER BY s.i) || substr(max(d.text), CAST(max(s.s + s.l) AS INT)) AS redacted,
-             count(*) AS n_red
-           FROM seg s JOIN documents d ON d.doc_id = s.doc_id
-           GROUP BY s.doc_id)
-         SELECT d.doc_id,
-           CAST(coalesce(r.n_red, 0) AS BIGINT) AS n_redactions,
-           md5(coalesce(r.redacted, d.text)) AS redacted_fp,
-           CAST(len(coalesce(r.redacted, d.text)) AS BIGINT) AS n_chars_redacted
-         FROM documents d LEFT JOIN red r ON r.doc_id = d.doc_id
-         ORDER BY d.doc_id"""
-    },
-    // MMR λ=1/2 is fully integer (×1e6 rel/sim longs), so the greedy
-    // selection replays EXACTLY as five unrolled argmax layers over
-    // the same 32-candidate pool
-    "q201_mmr_rerank" ->
-      """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-         cand AS (
-           SELECT e.vec_id AS id,
-             CAST(round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-               CAST(q.qe AS DOUBLE[])) * 1000000) AS BIGINT) AS rel,
-             e.embedding AS v
-           FROM embeddings e, q WHERE e.vec_id <> 0
-           ORDER BY rel DESC, e.vec_id LIMIT 32),
-         sim AS (
-           SELECT a.id AS ia, b.id AS ib,
-             CAST(round(list_cosine_similarity(CAST(a.v AS DOUBLE[]),
-               CAST(b.v AS DOUBLE[])) * 1000000) AS BIGINT) AS s
-           FROM cand a JOIN cand b ON a.id <> b.id),
-         s1 AS (SELECT id, rel, rel AS score FROM cand ORDER BY rel DESC, id LIMIT 1),
-         p1 AS (SELECT id FROM s1),
-         s2 AS (SELECT c.id, c.rel, c.rel - max(m.s) AS score
-           FROM cand c JOIN sim m ON m.ia = c.id AND m.ib IN (SELECT id FROM p1)
-           WHERE c.id NOT IN (SELECT id FROM p1)
-           GROUP BY c.id, c.rel ORDER BY score DESC, c.id LIMIT 1),
-         p2 AS (SELECT id FROM p1 UNION ALL SELECT id FROM s2),
-         s3 AS (SELECT c.id, c.rel, c.rel - max(m.s) AS score
-           FROM cand c JOIN sim m ON m.ia = c.id AND m.ib IN (SELECT id FROM p2)
-           WHERE c.id NOT IN (SELECT id FROM p2)
-           GROUP BY c.id, c.rel ORDER BY score DESC, c.id LIMIT 1),
-         p3 AS (SELECT id FROM p2 UNION ALL SELECT id FROM s3),
-         s4 AS (SELECT c.id, c.rel, c.rel - max(m.s) AS score
-           FROM cand c JOIN sim m ON m.ia = c.id AND m.ib IN (SELECT id FROM p3)
-           WHERE c.id NOT IN (SELECT id FROM p3)
-           GROUP BY c.id, c.rel ORDER BY score DESC, c.id LIMIT 1),
-         p4 AS (SELECT id FROM p3 UNION ALL SELECT id FROM s4),
-         s5 AS (SELECT c.id, c.rel, c.rel - max(m.s) AS score
-           FROM cand c JOIN sim m ON m.ia = c.id AND m.ib IN (SELECT id FROM p4)
-           WHERE c.id NOT IN (SELECT id FROM p4)
-           GROUP BY c.id, c.rel ORDER BY score DESC, c.id LIMIT 1)
-         SELECT * FROM (
-           SELECT 1 AS rank, id AS vec_id, rel AS rel_i6, score AS mmr_i6 FROM s1
-           UNION ALL SELECT 2, id, rel, score FROM s2
-           UNION ALL SELECT 3, id, rel, score FROM s3
-           UNION ALL SELECT 4, id, rel, score FROM s4
-           UNION ALL SELECT 5, id, rel, score FROM s5) ORDER BY rank""",
-    // perplexity pruning = the q84 surprisal replay + exact rank-band
-    // selection per language
-    "q203_perplexity_prune" ->
-      """WITH tok AS (
-           SELECT doc_id, unnest(string_split(text,' ')) AS token FROM documents),
-         freq AS (SELECT token, count(*) AS c FROM tok GROUP BY 1),
-         tot AS (SELECT count(*) AS n FROM tok),
-         lp AS (SELECT token,
-             CAST(floor(-ln(CAST(c AS DOUBLE)/t.n)*1e4 + 0.5) AS BIGINT) AS lp4
-           FROM freq CROSS JOIN tot t),
-         per AS (SELECT doc_id, sum(lp4) AS slp, count(*) AS nt
-           FROM tok JOIN lp USING (token) GROUP BY doc_id),
-         sc AS (SELECT p.doc_id, d.lang, p.nt,
-             floor(CAST(slp AS DOUBLE)/(1e4*nt)*1e6 + 0.5)/1e6 AS avg_surprisal
-           FROM per p JOIN documents d USING (doc_id)),
-         r AS (SELECT *, row_number() OVER (PARTITION BY lang
-               ORDER BY avg_surprisal, doc_id) AS rn,
-             count(*) OVER (PARTITION BY lang) AS n
-           FROM sc),
-         k AS (SELECT * FROM r
-           WHERE rn > CAST(floor(n*0.25) AS BIGINT)
-             AND rn <= CAST(floor(n*0.75) AS BIGINT))
-         SELECT lang, CAST(max(n) AS BIGINT) AS n_total,
-           CAST(count(*) AS BIGINT) AS n_kept,
-           CAST(sum(nt) AS BIGINT) AS kept_tokens,
-           min(avg_surprisal) AS band_lo, max(avg_surprisal) AS band_hi
-         FROM k GROUP BY lang ORDER BY lang""",
-    // approx-band envelope (the q179 device): the exact per-language
-    // totals recomputed, the GK-sketch rank guarantees pinned TRUE
-    "q204_perplexity_prune_approx" ->
-      """WITH tok AS (
-           SELECT doc_id, unnest(string_split(text,' ')) AS token FROM documents),
-         per AS (SELECT doc_id, count(*) AS nt FROM tok GROUP BY doc_id),
-         sc AS (SELECT p.doc_id, d.lang FROM per p JOIN documents d USING (doc_id))
-         SELECT lang, CAST(count(*) AS BIGINT) AS n_total,
-           TRUE AS lo_rank_ok, TRUE AS hi_rank_ok, TRUE AS band_ordered
-         FROM sc GROUP BY lang ORDER BY lang""",
-    // leakage audit = the q31 exact-pair device + the q174 md5-split
-    // device, joined — both engine-exact
-    "q202_split_leakage" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         inter AS (
-           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS i
-           FROM ex l JOIN ex r ON l.g = r.g AND l.doc_id < r.doc_id
-           GROUP BY 1, 2),
-         sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         prs AS (
-           SELECT id_a, id_b FROM inter
-           JOIN sz sa ON sa.doc_id = id_a
-           JOIN sz sb ON sb.doc_id = id_b
-           WHERE round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) >= 0.6),
-         spl AS (
-           SELECT doc_id,
-             CASE WHEN b < 204 THEN 'train'
-                  WHEN b < 230 THEN 'val' ELSE 'test' END AS split
-           FROM (SELECT doc_id,
-               16*(strpos('0123456789abcdef',
-                     substr(md5(CAST(doc_id AS VARCHAR)),1,1))-1)
-                 + (strpos('0123456789abcdef',
-                     substr(md5(CAST(doc_id AS VARCHAR)),2,1))-1) AS b
-             FROM documents)),
-         lab AS (
-           SELECT least(a.split, b.split) AS split_a,
-             greatest(a.split, b.split) AS split_b
-           FROM prs JOIN spl a ON a.doc_id = prs.id_a
-           JOIN spl b ON b.doc_id = prs.id_b)
-         SELECT split_a, split_b, CAST(count(*) AS BIGINT) AS n_pairs,
-           split_a <> split_b AS crossing
-         FROM lab GROUP BY 1, 2 ORDER BY 1, 2""",
-    // binary 1-bit tier: thresholds (order-independent midpoints),
-    // bits, Hamming candidate cut, exact cosine re-rank — the whole
-    // two-stage serve replayed; q218 carries it verbatim (the indexed
-    // form is spec-pinned bit-identical to the ad-hoc one)
-    "q217_binary_rerank" -> SqlBinaryTwoStage,
-    "q218_binary_indexed" -> SqlBinaryTwoStage,
-    // streamed binary ingest: binarization is pure-function-of-
-    // (vector, frozen thresholds), so the compacted streamed table
-    // serves q217's oracle VERBATIM
-    "q225_stream_binary_ingest" -> SqlBinaryTwoStage,
-    // JL projection: the md5 sign matrix, the 1e-6 input quantization,
-    // and the integer projected-space L2 ranking all replayed
-    "q228_jl_projection" ->
-      """WITH d AS (
-           SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings),
-         vq AS (SELECT vec_id, dim,
-                  CAST(round(x * 1e6) AS BIGINT) AS q
-                FROM d),
-         s AS (SELECT dim, j,
-                 CASE WHEN substring(md5('jl_7_' || (dim - 1) || '_' || j),
-                     1, 1) IN ('0','2','4','6','8','a','c','e')
-                   THEN 1 ELSE -1 END AS sgn
-               FROM (SELECT DISTINCT dim FROM vq)
-               CROSS JOIN range(16) r(j)),
-         p AS (SELECT vec_id, j, CAST(sum(q * sgn) AS BIGINT) AS pj
-               FROM vq JOIN s USING (dim) GROUP BY 1, 2),
-         qp AS (SELECT j, pj AS qj FROM p WHERE vec_id = 0),
-         dist AS (SELECT p.vec_id,
-                    CAST(sum((pj - qj) * (pj - qj)) AS BIGINT) AS pl2
-                  FROM p JOIN qp USING (j)
-                  WHERE p.vec_id <> 0 GROUP BY 1
-                  ORDER BY pl2 ASC, p.vec_id LIMIT 50),
-         qv AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-         SELECT dist.vec_id,
-           round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-             CAST(qv.qe AS DOUBLE[])), 6) AS cosine,
-           dist.pl2
-         FROM dist JOIN embeddings e ON e.vec_id = dist.vec_id CROSS JOIN qv
-         ORDER BY cosine DESC, dist.vec_id LIMIT 10""",
-    // the three-tier funnel: 1-bit Hamming cut -> SQ8 code-dot cut ->
-    // exact cosine final, replayed stage by stage
-    "q226_quant_funnel" ->
-      """WITH d AS (
-           SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings),
-         t AS (SELECT dim, (min(x) + max(x)) / 2 AS thr FROM d GROUP BY dim),
-         b AS (SELECT vec_id, d.dim,
-                 CASE WHEN x > thr THEN 1 ELSE 0 END AS bit
-               FROM d JOIN t ON d.dim = t.dim),
-         qb AS (SELECT dim, bit AS v FROM b WHERE vec_id = 0),
-         m AS (SELECT dim, max(abs(x)) AS mx FROM d GROUP BY dim),
-         c AS (SELECT vec_id, d.dim,
-                 CASE WHEN mx > 0 THEN CAST(round(x * 127.0 / mx) AS BIGINT)
-                      ELSE 0 END AS code
-               FROM d JOIN m ON d.dim = m.dim),
-         qc AS (SELECT dim, code AS v FROM c WHERE vec_id = 0),
-         s1 AS (SELECT b.vec_id,
-                  CAST(sum(CASE WHEN b.bit <> qb.v THEN 1 ELSE 0 END) AS BIGINT)
-                    AS hamming
-                FROM b JOIN qb ON b.dim = qb.dim
-                WHERE b.vec_id <> 0
-                GROUP BY b.vec_id
-                ORDER BY hamming ASC, b.vec_id LIMIT 200),
-         s2 AS (SELECT c.vec_id, s1.hamming,
-                  CAST(sum(c.code * qc.v) AS BIGINT) AS qscore
-                FROM c JOIN qc ON c.dim = qc.dim
-                JOIN s1 ON s1.vec_id = c.vec_id
-                GROUP BY c.vec_id, s1.hamming
-                ORDER BY qscore DESC, c.vec_id LIMIT 50),
-         qv AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-         SELECT s2.vec_id,
-           round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-             CAST(qv.qe AS DOUBLE[])), 6) AS cosine,
-           s2.qscore, s2.hamming
-         FROM s2 JOIN embeddings e ON e.vec_id = s2.vec_id CROSS JOIN qv
-         ORDER BY cosine DESC, s2.vec_id LIMIT 10""",
-    // incremental NB: the two generations' summed counts equal the
-    // union's counts, so the oracle is q219's verbatim
-    "q227_nb_incremental" -> SqlNbPredict,
-    // Naive Bayes: training (two keyed aggs) AND inference replayed —
-    // Laplace-smoothed log-probs quantized to 1e-4 fixed point before
-    // any per-document sum (the surprisal exactness device)
-    "q219_nb_langid" -> SqlNbPredict,
-    "q220_nb_confusion" ->
-      """WITH tr AS (SELECT doc_id, text, lang FROM documents
-                     WHERE doc_id % 2 = 0),
-         te AS (SELECT doc_id, text, lang FROM documents
-                WHERE doc_id % 2 = 1),
-         trtok AS (SELECT lang AS c, unnest(string_split(text, ' ')) AS token
-                   FROM tr),
-         tc AS (SELECT c, token, count(*) AS ct FROM trtok GROUP BY 1, 2),
-         tot AS (SELECT c, count(*) AS tot FROM trtok GROUP BY 1),
-         voc AS (SELECT count(DISTINCT token) AS v FROM trtok),
-         den AS (SELECT c, tot + v AS den FROM tot CROSS JOIN voc),
-         lp AS (SELECT tc.c, tc.token,
-             CAST(floor(-ln(CAST(ct + 1 AS DOUBLE) / den) * 1e4 + 0.5)
-               AS BIGINT) AS lp4
-           FROM tc JOIN den ON tc.c = den.c),
-         lp0 AS (SELECT c, CAST(floor(-ln(1.0 / den) * 1e4 + 0.5) AS BIGINT)
-                   AS lp0
-                 FROM den),
-         pri AS (SELECT lang AS c,
-             CAST(floor(-ln(CAST(count(*) AS DOUBLE)
-               / (SELECT count(*) FROM tr)) * 1e4 + 0.5) AS BIGINT) AS prior4
-           FROM tr GROUP BY 1),
-         tetok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-                   FROM te),
-         ts AS (SELECT tetok.doc_id, lp0.c,
-                  CAST(sum(coalesce(lp.lp4, lp0.lp0)) AS BIGINT) AS s4
-                FROM tetok CROSS JOIN lp0
-                LEFT JOIN lp ON lp.c = lp0.c AND lp.token = tetok.token
-                GROUP BY 1, 2),
-         sc AS (SELECT te.doc_id, pri.c,
-                  pri.prior4 + coalesce(ts.s4, 0) AS score4
-                FROM te CROSS JOIN pri
-                LEFT JOIN ts ON ts.doc_id = te.doc_id AND ts.c = pri.c),
-         best AS (SELECT doc_id, c AS predicted,
-                    row_number() OVER (PARTITION BY doc_id
-                      ORDER BY score4 ASC, c ASC) AS rn
-                  FROM sc),
-         pred AS (SELECT te.lang AS actual, b.predicted
-                  FROM te JOIN best b ON b.doc_id = te.doc_id AND b.rn = 1),
-         cells AS (SELECT actual, predicted, CAST(count(*) AS BIGINT) AS n
-                   FROM pred GROUP BY 1, 2)
-         SELECT actual, predicted, n,
-           CAST(sum(n) OVER (PARTITION BY actual) AS BIGINT) AS class_n,
-           round(CAST(n AS DOUBLE)
-             / sum(n) OVER (PARTITION BY actual), 6) AS frac
-         FROM cells ORDER BY actual, predicted""",
-    // the q155 association device + the pushed-down threshold: the
-    // filter precedes the rank cut, and count is the filtered total
-    "q214_graphql_score_pushdown" ->
-      """WITH pair AS (
-           SELECT c_mktsegment AS m, l_partkey AS p, sum(l_quantity) AS q
-           FROM lineitem
-           JOIN orders ON o_orderkey = l_orderkey
-           JOIN customer ON c_custkey = o_custkey
-           GROUP BY 1, 2),
-         edges AS (
-           SELECT 'DIS_' || m AS disease_id, 'TGT_' || p AS target_id,
-             round(q / sum(q) OVER (PARTITION BY p), 6) AS score
-           FROM pair),
-         mine AS (
-           SELECT e.target_id, e.score,
-             row_number() OVER (ORDER BY e.score DESC, e.target_id) AS rn
-           FROM edges e
-           WHERE e.disease_id = 'DIS_MACHINERY' AND e.score >= 0.33)
-         SELECT CAST((SELECT count(*) FROM mine) AS BIGINT) AS n_rows,
-           m.rn, m.target_id, p.p_name AS target_name, m.score
-         FROM mine m
-         JOIN part p ON 'TGT_' || p.p_partkey = m.target_id
-         WHERE m.rn <= 25
-         ORDER BY rn""",
-    // streaming curation capstone: ascending-id batches make the
-    // accumulated state equal the batch device over the whole corpus
-    // — fp keep-first (q189 device) + exact-pair later-side drop
-    // (q202 device) pick the survivors; the q209 redaction device and
-    // the q211 quantization device replay the payload; the gate
-    // booleans are pinned TRUE
-    "q216_stream_curation" -> {
-      val vals = DictPatterns.map(p => s"('$p')").mkString(",")
-      s"""WITH RECURSIVE
-         fpt AS (
-           SELECT doc_id, md5(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS fp
-           FROM documents),
-         fpkeep AS (
-           SELECT doc_id FROM (
-             SELECT doc_id, row_number() OVER
-               (PARTITION BY fp ORDER BY doc_id) AS rn
-             FROM fpt)
-           WHERE rn = 1),
-         toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         shng AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM shng),
-         inter AS (
-           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS i
-           FROM ex l JOIN ex r ON l.g = r.g AND l.doc_id < r.doc_id
-           GROUP BY 1, 2),
-         sz AS (SELECT doc_id, len(s) AS n FROM shng),
-         prs AS (
-           SELECT id_a, id_b FROM inter
-           JOIN sz sa ON sa.doc_id = id_a
-           JOIN sz sb ON sb.doc_id = id_b
-           WHERE round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) >= 0.6),
-         nddrop AS (SELECT DISTINCT greatest(id_a, id_b) AS doc_id FROM prs),
-         surv AS (
-           SELECT f.doc_id FROM fpkeep f
-           ANTI JOIN nddrop n ON f.doc_id = n.doc_id),
-         pats(pattern) AS (VALUES $vals),
-         m(doc_id, pattern, pos) AS (
-           SELECT d.doc_id, p.pattern, strpos(d.text, p.pattern)
-           FROM documents d JOIN surv sv ON sv.doc_id = d.doc_id
-           CROSS JOIN pats p
-           WHERE strpos(d.text, p.pattern) > 0
-           UNION ALL
-           SELECT m.doc_id, m.pattern,
-             m.pos + strpos(substr(d.text, m.pos + 1), m.pattern)
-           FROM m JOIN documents d ON d.doc_id = m.doc_id
-           WHERE strpos(substr(d.text, m.pos + 1), m.pattern) > 0),
-         ml AS MATERIALIZED (
-           SELECT doc_id,
-             list({'s': CAST(pos AS BIGINT), 'nl': -CAST(len(pattern) AS BIGINT)}
-               ORDER BY pos, -len(pattern)) AS ms
-           FROM m GROUP BY doc_id),
-         sel AS (
-           SELECT doc_id, ms,
-             CAST([] AS STRUCT(s BIGINT, nl BIGINT)[]) AS picks,
-             CAST(1 AS BIGINT) AS cur
-           FROM ml
-           UNION ALL
-           SELECT doc_id, ms, list_append(picks, nxt), nxt.s - nxt.nl
-           FROM (SELECT doc_id, ms, picks, cur,
-                   list_filter(ms, x -> x.s >= cur)[1] AS nxt
-                 FROM sel)
-           WHERE nxt IS NOT NULL),
-         fin AS MATERIALIZED (
-           SELECT doc_id, arg_max(picks, len(picks)) AS picks
-           FROM sel GROUP BY doc_id),
-         px AS (
-           SELECT f.doc_id, t.e['i'] AS i, t.e['s'] AS s, -t.e['nl'] AS l
-           FROM fin f, unnest(list_transform(range(1, len(picks) + 1), j ->
-             {'i': j, 's': picks[j].s, 'nl': picks[j].nl})) t(e)),
-         seg AS (
-           SELECT p.doc_id, p.i, p.s, p.l,
-             coalesce(lag(p.s + p.l) OVER (PARTITION BY p.doc_id ORDER BY p.i), 1) AS pe
-           FROM px p),
-         red AS (
-           SELECT s.doc_id,
-             string_agg(substr(d.text, CAST(s.pe AS INT), CAST(s.s - s.pe AS INT)) || '[X]', ''
-               ORDER BY s.i) || substr(max(d.text), CAST(max(s.s + s.l) AS INT)) AS redacted,
-             count(*) AS n_red
-           FROM seg s JOIN documents d ON d.doc_id = s.doc_id
-           GROUP BY s.doc_id),
-         d2 AS (
-           SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings),
-         mx AS (SELECT dim, max(abs(x)) AS mxv FROM d2 GROUP BY dim),
-         cs AS (
-           SELECT vec_id, CAST(sum(
-             CASE WHEN mxv > 0 THEN CAST(round(x * 127.0 / mxv) AS BIGINT)
-                  ELSE 0 END) AS BIGINT) AS code_sum
-           FROM d2 JOIN mx ON d2.dim = mx.dim GROUP BY vec_id)
-         SELECT sv.doc_id,
-           CAST(coalesce(r.n_red, 0) AS BIGINT) AS n_redactions,
-           md5(coalesce(r.redacted, d.text)) AS redacted_fp,
-           cs.code_sum,
-           TRUE AS no_extra_survivors, TRUE AS exact_survivors_kept
-         FROM surv sv
-         JOIN documents d ON d.doc_id = sv.doc_id
-         LEFT JOIN red r ON r.doc_id = sv.doc_id
-         LEFT JOIN cs ON cs.vec_id = sv.doc_id
-         ORDER BY sv.doc_id"""
-    },
-    // drift report envelope: row accounting is DuckDB-computable
-    // (every indexed row appears in exactly one list), the report's
-    // guarantees ride as pinned-TRUE verdicts — fresh index clean,
-    // shifted append flagged, every flagged list actually received
-    // appends
-    "q213_ivf_drift" ->
-      """SELECT
-           CAST((SELECT count(*) FROM embeddings) AS BIGINT) AS n_fresh,
-           CAST(2 * (SELECT count(*) FROM embeddings) AS BIGINT)
-             AS n_drifted_index,
-           TRUE AS fresh_clean, TRUE AS drift_flagged,
-           TRUE AS flagged_have_appends""",
-    // partial PQ rebuild lifecycle: exact L2 top-10 over the grown
-    // corpus (shift replayed in DOUBLE, the q238 discipline; rows the
-    // q234 device), rebuild guarantees as pinned-TRUE verdicts
-    "q247_pq_rebuild" ->
-      """WITH ed AS (
-           SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings WHERE vec_id % 4 = 0),
-         grown AS (
-           SELECT vec_id, dim, x FROM ed
-           UNION ALL
-           SELECT vec_id + 1000000, dim,
-             CASE WHEN dim = 1 THEN x + 8.0 ELSE x END
-           FROM ed),
-         qd AS (SELECT dim, x AS qx FROM ed WHERE vec_id = 0),
-         gl AS (
-           SELECT vec_id, list(x ORDER BY dim) AS v FROM grown
-           GROUP BY vec_id),
-         ql AS (SELECT list(qx ORDER BY dim) AS qv FROM qd)
-         SELECT g.vec_id,
-           round(list_distance(g.v, q.qv), 6) AS l2,
-           TRUE AS one_sub_flagged, TRUE AS flagged_is_shifted_sub,
-           TRUE AS clean_after, TRUE AS rebuilt_delta_zero,
-           TRUE AS resid_improved, TRUE AS tail_codes_invariant,
-           TRUE AS pq_recall_ok, TRUE AS pq_dominated_ok
-         FROM gl g, ql q WHERE g.vec_id <> 0
-         ORDER BY l2 ASC, g.vec_id LIMIT 10""",
-    // streaming semantic dedup: per-batch ingest accounting (the
-    // backlog's tercile bucketing + the clone batch, replayed), the
-    // engine-computed equality/catch verdicts pinned TRUE
-    "q248_stream_semantic_dedup" ->
-      """WITH bounds AS (
-           SELECT min(vec_id) AS lo, max(vec_id) AS hi FROM embeddings),
-         b AS (
-           SELECT CAST(floor((e.vec_id - lo) * 3.0 / (hi - lo + 1))
-             AS BIGINT) AS batch
-           FROM embeddings e, bounds),
-         orig AS (SELECT batch, count(*) AS n_in FROM b GROUP BY batch),
-         cl AS (
-           SELECT CAST(3 AS BIGINT) AS batch, count(*) AS n_in
-           FROM embeddings WHERE vec_id % 8 = 0)
-         SELECT batch, CAST(n_in AS BIGINT) AS n_in,
-           TRUE AS composition_exact, TRUE AS cross_batch_dups_caught
-         FROM (SELECT * FROM orig UNION ALL SELECT * FROM cl)
-         ORDER BY batch""",
-    // introspection: the executable Query type verbatim (sorted)
-    "q249_graphql_introspection" ->
-      """SELECT 'Query' AS query_type, CAST(ord AS BIGINT) AS ord,
-           root, type_name
-         FROM (VALUES
-           (1, 'associationDatasources', '[EvidenceSource!]!'),
-           (2, 'disease', 'Disease'),
-           (3, 'diseases', '[Disease!]!'),
-           (4, 'drug', 'Drug'),
-           (5, 'drugs', '[Drug!]!'),
-           (6, 'facets', 'SearchFacetsResults!'),
-           (7, 'geneOntologyTerms', '[GeneOntologyTerm]!'),
-           (8, 'interactionResources', '[InteractionResources!]!'),
-           (9, 'mapIds', 'MappingResults!'),
-           (10, 'meta', 'Meta!'),
-           (11, 'search', 'SearchResults!'),
-           (12, 'target', 'Target'),
-           (13, 'targets', '[Target!]!')) AS t(ord, root, type_name)
-         ORDER BY ord""",
-
-    // tractability — the four modality assessments re-derived from
-    // the part's own attributes (the same predicates the KG view
-    // evaluates), modality-ordered
-    "q250_graphql_tractability" ->
-      """WITH tr AS (
-           SELECT 'discovery_precedence' AS label, 'SM' AS modality,
-             p_size <= 25 AS value FROM part WHERE p_partkey = 3
-           UNION ALL SELECT 'surface_accessible', 'AB',
-             contains(p_brand, '#3') FROM part WHERE p_partkey = 3
-           UNION ALL SELECT 'mod_ubiquitination', 'PR',
-             p_retailprice > 1500 FROM part WHERE p_partkey = 3
-           UNION ALL SELECT 'clinical_precedence', 'OC',
-             p_type LIKE 'PROMO%' FROM part WHERE p_partkey = 3)
-         SELECT 'TGT_3' AS id,
-           (SELECT p_name FROM part WHERE p_partkey = 3) AS approvedSymbol,
-           row_number() OVER (ORDER BY modality) AS rn,
-           label, modality, value
-         FROM tr ORDER BY rn""",
-
-    // phenotypes — the segment's distinct customer nations as HPO
-    // rows (region = namespace), first page of 10, count the total
-    "q251_graphql_phenotypes" ->
-      """WITH ph AS (
-           SELECT DISTINCT c_nationkey AS nk FROM customer
-           WHERE c_mktsegment = 'BUILDING'),
-         r AS (
-           SELECT printf('HP_%07d', nk) AS hpo_id, lower(n_name) AS hpo_name,
-             lower(r_name) AS hpo_ns
-           FROM ph JOIN nation ON n_nationkey = nk
-           JOIN region ON r_regionkey = n_regionkey),
-         rk AS (
-           SELECT hpo_id, hpo_name, hpo_ns,
-             row_number() OVER (ORDER BY hpo_id) AS rn FROM r)
-         SELECT 'DIS_BUILDING' AS id, 'BUILDING' AS name,
-           (SELECT count(*) FROM r) AS n_phenotypes, rn, hpo_id, hpo_name,
-           'phenotype of ' || hpo_name AS hpo_desc, hpo_ns
-         FROM rk WHERE rn <= 10 ORDER BY rn""",
-
-    // evidences — the q155 association derivation filtered to the
-    // requested targets; count before the size cut, rows ranked
-    // (score desc, evidence id) like the executor's sort keys
-    "q252_graphql_evidences" ->
-      """WITH pair AS (
-           SELECT c_mktsegment AS m, l_partkey AS p, sum(l_quantity) AS q
-           FROM lineitem
-           JOIN orders ON o_orderkey = l_orderkey
-           JOIN customer ON c_custkey = o_custkey
-           GROUP BY 1, 2),
-         edges AS (
-           SELECT 'DIS_' || m AS disease_id, 'TGT_' || p AS target_id,
-             round(q / sum(q) OVER (PARTITION BY p), 6) AS score
-           FROM pair),
-         ev AS (
-           SELECT 'EVD_' || disease_id || '_' || target_id AS eid,
-             target_id, score
-           FROM edges
-           WHERE disease_id = 'DIS_MACHINERY'
-             AND target_id IN ('TGT_1', 'TGT_5', 'TGT_9', 'TGT_12')),
-         rk AS (
-           SELECT eid, target_id, score,
-             row_number() OVER (ORDER BY score DESC, eid) AS rn FROM ev)
-         SELECT 'DIS_MACHINERY' AS disease_id,
-           (SELECT count(*) FROM ev) AS n_evidence, rn,
-           rk.eid AS evidence_id, rk.score, rk.target_id,
-           p.p_name AS target_name
-         FROM rk JOIN part p ON 'TGT_' || p.p_partkey = rk.target_id
-         WHERE rn <= 3 ORDER BY rn""",
-
-    // similarEntities — the q33 brute-cosine relation from the
-    // root's sidecar vector (vec_id 7), top 8, each hit left-joined
-    // to its entity row (hits past the part key range resolve the
-    // object to NULL — both union branches exercised)
-    "q253_graphql_similar_entities" ->
-      """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 7),
-         topk AS (
-           SELECT e.vec_id,
-             round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-               CAST(q.embedding AS DOUBLE[])), 6) AS cosine
-           FROM embeddings e, q WHERE e.vec_id <> 7
-           ORDER BY cosine DESC, e.vec_id LIMIT 8),
-         rk AS (
-           SELECT vec_id, cosine,
-             row_number() OVER (ORDER BY cosine DESC, vec_id) AS rn
-           FROM topk)
-         SELECT 'TGT_7' AS root_id,
-           (SELECT p_name FROM part WHERE p_partkey = 7) AS root_name,
-           rk.rn, 'TGT_' || rk.vec_id AS sim_id, 'target' AS category,
-           rk.cosine AS score,
-           CASE WHEN p.p_partkey IS NULL THEN NULL
-                ELSE 'Target' END AS obj_type,
-           CASE WHEN p.p_partkey IS NULL THEN NULL
-                ELSE 'TGT_' || p.p_partkey END AS obj_id,
-           p.p_name AS obj_name
-         FROM rk LEFT JOIN part p ON p.p_partkey = rk.vec_id
-         ORDER BY rn""",
-
-    // the q194 full-corpus BM25 relation (the fold must not change a
-    // single posting row), plus the fold contracts pinned TRUE
-    "q254_compact_fold" ->
-      """WITH tok AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS term
-           FROM documents WHERE doc_id % 2 = 0),
-         post AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-         dl AS (SELECT doc_id, sum(tf) AS dl FROM post GROUP BY 1),
-         stats AS (SELECT count(*) AS nd,
-             CAST(sum(dl) AS DOUBLE)/count(*) AS avgdl FROM dl),
-         idf AS (SELECT term, avgdl,
-             CAST(floor(ln((nd - df + 0.5e0)/(df + 0.5e0) + 1.0e0)*1e4 + 0.5e0)
-               AS BIGINT) AS idf4
-           FROM (SELECT term, count(*) AS df FROM post
-                 WHERE term IN ('dup','spark','window') GROUP BY 1)
-           CROSS JOIN stats),
-         contrib AS (
-           SELECT p.doc_id,
-             i.idf4 * CAST(floor(p.tf*2.2e0/(p.tf + 1.2e0*(0.25e0 + 0.75e0*d.dl/i.avgdl))
-               *1e6 + 0.5e0) AS BIGINT) AS c
-           FROM post p JOIN dl d USING (doc_id) JOIN idf i USING (term)
-           WHERE p.term IN ('dup','spark','window'))
-         SELECT doc_id, count(*) AS n_terms, CAST(sum(c) AS DOUBLE)/1e10 AS bm25,
-           TRUE AS folded_identical, TRUE AS files_collapsed
-         FROM contrib GROUP BY doc_id ORDER BY bm25 DESC, doc_id LIMIT 10""",
-
-    // per-column profile re-derived column by column (the engine does
-    // it in ONE aggregation; the oracle's 5-way union is the check,
-    // not the plan)
-    "q255_profile_table" ->
-      """SELECT * FROM (
-           SELECT 'doc_id' AS col_name, count(*) AS n_rows,
-             count(*) - count(doc_id) AS n_null,
-             count(DISTINCT doc_id) AS n_distinct,
-             CAST(min(doc_id) AS VARCHAR) AS min_s,
-             CAST(max(doc_id) AS VARCHAR) AS max_s FROM documents
-           UNION ALL
-           SELECT 'lang', count(*), count(*) - count(lang),
-             count(DISTINCT lang), CAST(min(lang) AS VARCHAR),
-             CAST(max(lang) AS VARCHAR) FROM documents
-           UNION ALL
-           SELECT 'n_chars', count(*), count(*) - count(n_chars),
-             count(DISTINCT n_chars), CAST(min(n_chars) AS VARCHAR),
-             CAST(max(n_chars) AS VARCHAR) FROM documents
-           UNION ALL
-           SELECT 'source', count(*), count(*) - count(source),
-             count(DISTINCT source), CAST(min(source) AS VARCHAR),
-             CAST(max(source) AS VARCHAR) FROM documents
-           UNION ALL
-           SELECT 'text', count(*), count(*) - count(text),
-             count(DISTINCT text), CAST(min(text) AS VARCHAR),
-             CAST(max(text) AS VARCHAR) FROM documents)
-         ORDER BY col_name""",
-
-    // both profiles replayed column by column, then the gate's
-    // rounded-rate / ratio / range arithmetic verbatim
-    "q256_profile_drift_gate" ->
-      """WITH corr AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 10 = 0 THEN NULL ELSE lang END AS lang,
-             least(n_chars, 100) AS n_chars, source, text
-           FROM documents),
-         pa AS (
-           SELECT 'doc_id' AS col_name, count(*) AS n_rows,
-             count(*) - count(doc_id) AS n_null,
-             count(DISTINCT doc_id) AS n_distinct,
-             CAST(min(doc_id) AS VARCHAR) AS min_s,
-             CAST(max(doc_id) AS VARCHAR) AS max_s FROM documents
-           UNION ALL
-           SELECT 'lang', count(*), count(*) - count(lang),
-             count(DISTINCT lang), CAST(min(lang) AS VARCHAR),
-             CAST(max(lang) AS VARCHAR) FROM documents
-           UNION ALL
-           SELECT 'n_chars', count(*), count(*) - count(n_chars),
-             count(DISTINCT n_chars), CAST(min(n_chars) AS VARCHAR),
-             CAST(max(n_chars) AS VARCHAR) FROM documents
-           UNION ALL
-           SELECT 'source', count(*), count(*) - count(source),
-             count(DISTINCT source), CAST(min(source) AS VARCHAR),
-             CAST(max(source) AS VARCHAR) FROM documents
-           UNION ALL
-           SELECT 'text', count(*), count(*) - count(text),
-             count(DISTINCT text), CAST(min(text) AS VARCHAR),
-             CAST(max(text) AS VARCHAR) FROM documents),
-         pb AS (
-           SELECT 'doc_id' AS col_name, count(*) AS n_rows,
-             count(*) - count(doc_id) AS n_null,
-             count(DISTINCT doc_id) AS n_distinct,
-             CAST(min(doc_id) AS VARCHAR) AS min_s,
-             CAST(max(doc_id) AS VARCHAR) AS max_s FROM corr
-           UNION ALL
-           SELECT 'lang', count(*), count(*) - count(lang),
-             count(DISTINCT lang), CAST(min(lang) AS VARCHAR),
-             CAST(max(lang) AS VARCHAR) FROM corr
-           UNION ALL
-           SELECT 'n_chars', count(*), count(*) - count(n_chars),
-             count(DISTINCT n_chars), CAST(min(n_chars) AS VARCHAR),
-             CAST(max(n_chars) AS VARCHAR) FROM corr
-           UNION ALL
-           SELECT 'source', count(*), count(*) - count(source),
-             count(DISTINCT source), CAST(min(source) AS VARCHAR),
-             CAST(max(source) AS VARCHAR) FROM corr
-           UNION ALL
-           SELECT 'text', count(*), count(*) - count(text),
-             count(DISTINCT text), CAST(min(text) AS VARCHAR),
-             CAST(max(text) AS VARCHAR) FROM corr),
-         d AS (
-           SELECT pa.col_name, 'common' AS status,
-             round(CAST(pa.n_null AS DOUBLE)/pa.n_rows, 6) AS null_rate_a,
-             round(CAST(pb.n_null AS DOUBLE)/pb.n_rows, 6) AS null_rate_b,
-             round(CAST(pb.n_distinct AS DOUBLE)/pa.n_distinct, 6)
-               AS distinct_ratio,
-             (pa.min_s IS DISTINCT FROM pb.min_s)
-               OR (pa.max_s IS DISTINCT FROM pb.max_s) AS range_changed
-           FROM pa JOIN pb USING (col_name))
-         SELECT col_name, status, null_rate_a, null_rate_b,
-           distinct_ratio, range_changed,
-           (abs(null_rate_b - null_rate_a) > 0.01
-             OR distinct_ratio > 2.0 OR distinct_ratio < 0.5
-             OR range_changed) AS drifted
-         FROM d ORDER BY col_name"""
-  )
 }

@@ -19,10 +19,9 @@ final class Tables(spark: SparkSession, dir: String) {
   // each touching several tables, that re-resolution is a measurable
   // slice of every query's fixed floor. The DataFrame is an immutable
   // LAZY plan, so reusing it per (session, path) changes nothing
-  // about execution: every action still scans the parquet. The
-  // fixture files never change within a session (the driver
-  // regenerates between JVMs), which is the same assumption Spark's
-  // own per-session file-listing cache already makes.
+  // about execution: every action still scans the parquet. A path
+  // rewritten through Publish is dropped from the memo and
+  // re-resolved (Tables.forget).
   private def t(name: String): DataFrame =
     Tables.resolved(spark, s"$dir/$name.parquet")
 
@@ -83,19 +82,50 @@ final class Tables(spark: SparkSession, dir: String) {
 object Tables {
   def apply(spark: SparkSession, dir: String): Tables = new Tables(spark, dir)
 
-  /** Resolve-once parquet relations, keyed (session, path). Plans
+  /** Resolve-once parquet relations, keyed (session, path) — the one
+    * relation memo (table loaders and the KG index relations). Plans
     * only — never results or cached blocks — so this is catalog
-    * state, not data state. Bounded like JlProject's matrix cache:
-    * past [[MaxResolved]] distinct relations the map clears wholesale
-    * (a post-clear miss merely re-resolves), keeping a long-lived JVM
+    * state, not data state. `graft.operators.Publish` drops the
+    * entries at, under or above every path it swaps ([[forget]]), so
+    * an in-session rewrite is re-resolved instead of served from a
+    * stale file listing. Bounded like JlProject's matrix cache: past
+    * [[MaxResolved]] distinct relations the map clears wholesale (a
+    * post-clear miss merely re-resolves), keeping a long-lived JVM
     * serving many sessions from retaining dead sessions' plans.
     */
   private val MaxResolved = 512
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
+  private val memo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), DataFrame]()
-  private[graft] def resolved(spark: SparkSession, path: String): DataFrame = {
+
+  private[graft] def resolved(spark: SparkSession, path: String): DataFrame =
+    resolved(spark, path, ())
+
+  /** [[resolved]], running `ensure` (which may publish `path`) first
+    * on a miss. It runs outside the map's compute: a publish drops
+    * memo entries, and a ConcurrentHashMap changed from inside its own
+    * mapping function throws.
+    */
+  private[graft] def resolved(spark: SparkSession, path: String,
+                              ensure: => Unit): DataFrame = {
     val k = (spark, path)
-    if (cache.size >= MaxResolved && !cache.containsKey(k)) cache.clear()
-    cache.computeIfAbsent(k, _ => spark.read.parquet(path))
+    Option(memo.get(k)).getOrElse {
+      ensure
+      if (memo.size >= MaxResolved) memo.clear()
+      val df = spark.read.parquet(path)
+      Option(memo.putIfAbsent(k, df)).getOrElse(df)
+    }
+  }
+
+  /** Drop every memoized relation whose path is `target`, lies under
+    * it, or contains it.
+    */
+  private[graft] def forget(target: String): Unit = {
+    val t = new org.apache.hadoop.fs.Path(target).toString
+    def related(p: String): Boolean = {
+      val q = new org.apache.hadoop.fs.Path(p).toString
+      q == t || q.startsWith(t + "/") || t.startsWith(q + "/")
+    }
+    memo.keySet.removeIf(k => related(k._2))
+    ()
   }
 }

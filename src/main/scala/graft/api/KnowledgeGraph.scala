@@ -44,14 +44,9 @@ final class KnowledgeGraph(spark: SparkSession, dir: String,
         // every dialect query re-resolved each index relation it
         // touched (Artifact existence check + footer read + plan
         // build) — a measurable slice of the ~0.5 s/query dialect
-        // floor. The ensure runs inside the memo's first resolution;
-        // a published artifact is immutable for the session's life
-        // (the Artifact protocol never rebuilds a complete one), so
-        // the reused plan can never go stale in-session.
-        KnowledgeGraph.resolvedIndexed(spark, full) {
-          Artifact.ensure(full)(tmp =>
-            build.write.parquet(tmp))
-        }
+        // floor. The ensure runs on the memo's first resolution only.
+        Tables.resolved(spark, full,
+          Artifact.ensure(full)(tmp => build.write.parquet(tmp)))
     }
 
   /** disease(id, name) — one per market segment. */
@@ -323,18 +318,4 @@ object KnowledgeGraph {
   /** KG whose edge relations read the persisted association index. */
   def apply(spark: SparkSession, dir: String, indexPath: String): KnowledgeGraph =
     new KnowledgeGraph(spark, dir, Some(indexPath))
-
-  /** Ensured-and-resolved index relations, keyed (session, path) —
-    * plan reuse only, bounded like Tables.resolved (wholesale clear
-    * past the cap; a post-clear miss re-ensures and re-resolves).
-    */
-  private val MaxResolved = 256
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private def resolvedIndexed(spark: SparkSession, path: String)
-                             (ensure: => Unit): DataFrame = {
-    val k = (spark, path)
-    if (cache.size >= MaxResolved && !cache.containsKey(k)) cache.clear()
-    cache.computeIfAbsent(k, { _ => ensure; spark.read.parquet(path) })
-  }
 }

@@ -27,7 +27,9 @@ import org.apache.spark.sql.functions.{concat, lit, raise_error}
   *     rename ever lands on an existing path (Hadoop's `rename` would
   *     move the source INTO it), and every rename's result is checked.
   *     A target the write left unstaged is untouched. Targets swap one
-  *     after another: each is atomic, the call as a whole is not.
+  *     after another: each is atomic, the call as a whole is not. A
+  *     swapped target's memoized relations are dropped
+  *     ([[graft.Tables.forget]]), so the session re-lists it.
   *  3. **Guards.** An in-row guard is a [[raise]] whose text starts
   *     with [[Sentinel]]. A guard fired anywhere inside the write —
   *     in any job it runs — surfaces as an `IllegalArgumentException`
@@ -79,11 +81,14 @@ object Publish {
 
   /** Rewrite only the `cols` partitions present in `df` (dynamic
     * partition overwrite); every other partition stays byte-identical.
+    * The target's memoized relations are dropped as after a swap.
     */
-  def partitions(df: DataFrame, target: String, cols: String*): Unit =
+  def partitions(df: DataFrame, target: String, cols: String*): Unit = {
     guarded(df.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(cols: _*).parquet(target))
+    graft.Tables.forget(target)
+  }
 
   /** Run `body`, rethrowing a fired guard as described in step 3. */
   def guarded[A](body: => A): A =
@@ -118,8 +123,10 @@ object Publish {
     try {
       guarded(write(staged.map(_.toString)))
       ts.indices.foreach { i =>
-        if (fss(i).exists(staged(i)) && !keep(targets(i)))
+        if (fss(i).exists(staged(i)) && !keep(targets(i))) {
           swap(fss(i), staged(i), ts(i), hidden(ts(i), "old", id))
+          graft.Tables.forget(targets(i))
+        }
       }
     } finally staged.zip(fss).foreach { case (s, fs) => fs.delete(s, true) }
   }

@@ -335,7 +335,21 @@ object StreamOps {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** The streaming query wiring for [[upsertBatch]]. */
+  /** Start `frame` on a checkpointed `foreachBatch` sink: `perBatch`
+    * runs once per micro-batch with the batch id; no `trigger` keeps
+    * Spark's default micro-batch trigger.
+    */
+  private def sink(frame: DataFrame, checkpointDir: String,
+                   trigger: Option[org.apache.spark.sql.streaming.Trigger],
+                   mode: OutputMode)
+                  (perBatch: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val w = frame.writeStream.outputMode(mode)
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(perBatch)
+    trigger.fold(w)(w.trigger).start()
+  }
+
   /** Streaming search-index maintenance: each micro-batch of
     * documents becomes posting rows (`InvertedIndex.build`) written
     * into its OWN `batch=<id>` directory with overwrite semantics —
@@ -356,13 +370,9 @@ object StreamOps {
                    textName: String, checkpointDir: String,
                    trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        postingsBatch(batch, bid, indexDir, idName, textName)
-      }
-    trigger.fold(w)(w.trigger).start()
+    sink(docs, checkpointDir, trigger, OutputMode.Append()) { (batch, bid) =>
+      postingsBatch(batch, bid, indexDir, idName, textName)
+    }
   }
 
   /** One trigger of [[postingsSink]], idempotent under replay. */
@@ -399,13 +409,9 @@ object StreamOps {
     // mid-stream rewrite is forbidden by the contract either way
     val scales = graft.operators.Similarity
       .readSq8Scales(embeddings.sparkSession, indexPath)
-    val w = embeddings.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        sq8IngestBatch(batch, bid, indexPath, idName, vecName, Some(scales))
-      }
-    trigger.fold(w)(w.trigger).start()
+    sink(embeddings, checkpointDir, trigger, OutputMode.Append()) { (batch, bid) =>
+      sq8IngestBatch(batch, bid, indexPath, idName, vecName, Some(scales))
+    }
   }
 
   /** One trigger of [[sq8CodesSink]], idempotent under replay: reads
@@ -465,13 +471,9 @@ object StreamOps {
     // sq8CodesSink rationale) — one read per stream, not per trigger
     val thr = graft.operators.Similarity
       .readBinThresholds(embeddings.sparkSession, indexPath)
-    val w = embeddings.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        binIngestBatch(batch, bid, indexPath, idName, vecName, Some(thr))
-      }
-    trigger.fold(w)(w.trigger).start()
+    sink(embeddings, checkpointDir, trigger, OutputMode.Append()) { (batch, bid) =>
+      binIngestBatch(batch, bid, indexPath, idName, vecName, Some(thr))
+    }
   }
 
   /** One trigger of [[binCodesSink]], idempotent under replay. No
@@ -528,14 +530,10 @@ object StreamOps {
                   threshold: Double = 0.6, k: Int = 32, bands: Int = 8,
                   shingleN: Int = 3)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        neardupBatch(batch, bid, stateDir, idName, textName,
-          threshold, k, bands, shingleN)
-      }
-    trigger.fold(w)(w.trigger).start()
+    sink(docs, checkpointDir, trigger, OutputMode.Append()) { (batch, bid) =>
+      neardupBatch(batch, bid, stateDir, idName, textName,
+        threshold, k, bands, shingleN)
+    }
   }
 
   /** Streaming CDC-segment dedup — the continuous-ingest member of
@@ -558,13 +556,9 @@ object StreamOps {
                       trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
                       boundary256: Int = 32)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        cdcSegmentsBatch(batch, bid, stateDir, idName, textName, boundary256)
-      }
-    trigger.fold(w)(w.trigger).start()
+    sink(docs, checkpointDir, trigger, OutputMode.Append()) { (batch, bid) =>
+      cdcSegmentsBatch(batch, bid, stateDir, idName, textName, boundary256)
+    }
   }
 
   /** One trigger of [[cdcSegmentsSink]], idempotent under replay (the
@@ -642,14 +636,10 @@ object StreamOps {
       s"semanticDedupBatch: no centroid sidecar at $stateDir/centroids — " +
         "run initSemanticCentroids over the planning corpus before the stream")
     val cents = graft.operators.Similarity.readCentroids(spark, stateDir)
-    val w = vecs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        semanticDedupBatch(batch, bid, stateDir, idName, vecName, tau,
-          Some(cents))
-      }
-    trigger.fold(w)(w.trigger).start()
+    sink(vecs, checkpointDir, trigger, OutputMode.Append()) { (batch, bid) =>
+      semanticDedupBatch(batch, bid, stateDir, idName, vecName, tau,
+        Some(cents))
+    }
   }
 
   /** One trigger of [[semanticDedupSink]], idempotent under replay
@@ -878,15 +868,11 @@ object StreamOps {
     // once per trigger (the sq8CodesSink rationale)
     val scales = graft.operators.Similarity
       .readSq8Scales(docs.sparkSession, s"$stateDir/sq8")
-    val w = docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        curateBatch(batch, bid, embeddings, stateDir, idName, textName,
-          vecName, patterns, token, threshold, k, bands, shingleN,
-          Some(scales))
-      }
-    trigger.fold(w)(w.trigger).start()
+    sink(docs, checkpointDir, trigger, OutputMode.Append()) { (batch, bid) =>
+      curateBatch(batch, bid, embeddings, stateDir, idName, textName,
+        vecName, patterns, token, threshold, k, bands, shingleN,
+        Some(scales))
+    }
   }
 
   /** One trigger of [[curationSink]], idempotent under replay. */
@@ -955,16 +941,13 @@ object StreamOps {
     ()
   }
 
+  /** The streaming query wiring for [[upsertBatch]]. */
   def upsertSink(updates: DataFrame, targetDir: String, key: String,
                  versionCol: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    updates.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertBatch(batch, targetDir, key, versionCol)
-      }
-      .start()
+    sink(updates, checkpointDir, None, OutputMode.Update()) { (batch, _) =>
+      upsertBatch(batch, targetDir, key, versionCol)
+    }
 
   /** Micro-batch SCD-2 maintenance: each batch is collapsed last-wins
     * per key (highest `versionCol`), STALE rows are dropped (a row
@@ -1170,12 +1153,8 @@ object StreamOps {
                trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
                historyBuckets: Option[Int] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = updates.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        scd2Batch(batch, targetDir, key, versionCol, historyBuckets)
-      }
-    trigger.fold(w)(w.trigger).start()
+    sink(updates, checkpointDir, trigger, OutputMode.Update()) { (batch, _) =>
+      scd2Batch(batch, targetDir, key, versionCol, historyBuckets)
+    }
   }
 }

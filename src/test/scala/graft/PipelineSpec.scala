@@ -40,6 +40,42 @@ class PipelineSpec extends SparkSpec {
     assert(missing.isEmpty, s"oracle without query: $missing")
   }
 
+  test("registry: 256 records, uniquely named q<NN>_<slug>, one oracle each") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.size == 256)
+    assert(names.distinct.size == names.size,
+      s"duplicate names: ${names.diff(names.distinct)}")
+    val malformed = names.filterNot(_.matches("q\\d+_[a-z0-9_]+"))
+    assert(malformed.isEmpty, s"malformed names: $malformed")
+    assert(SparkEntry.queries.keySet == names.toSet)
+    assert(SparkEntry.oracleSql.keySet == names.toSet)
+  }
+
+  test("registry: every SelfCheck key prefix names exactly one query") {
+    val files = new java.io.File("src/main/scala/graft/registry").listFiles()
+      .filter(_.getName.endsWith(".scala")).toSeq
+    assert(files.nonEmpty, "no registry sources")
+    val text = files.map { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.mkString finally src.close()
+    }.mkString("\n")
+    val calls = "SelfCheck\\.(?:once|every)\\(".r.findAllMatchIn(text).size
+    val prefixes = "SelfCheck\\.(?:once|every)\\(s?\"(q\\d+)/".r
+      .findAllMatchIn(text).map(_.group(1)).toSeq
+    assert(calls > 0 && prefixes.size == calls,
+      s"$calls SelfCheck calls, ${prefixes.size} with a literal qNN/ key")
+    val names = SparkEntry.registry.map(_.name)
+    prefixes.distinct.foreach { p =>
+      withClue(p)(assert(names.count(_.startsWith(p + "_")) == 1))
+    }
+  }
+
+  test("registry: no oracle text renders a null (shared texts initialized first)") {
+    val nulls = SparkEntry.registry
+      .filter(q => "\\bnull\\b".r.findFirstIn(q.oracle).isDefined).map(_.name)
+    assert(nulls.isEmpty, s"oracles containing null: $nulls")
+  }
+
   test("all queries run on sf0.001") {
     SparkEntry.queries.foreach { case (name, fn) =>
       val n = fn(spark, sfDir).count()

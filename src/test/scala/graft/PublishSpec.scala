@@ -103,6 +103,15 @@ class PublishSpec extends SparkSpec {
       .forall(!_.getName.startsWith(".t.")), "publish left debris")
   }
 
+  test("a path republished in-session is re-resolved through Tables, not served stale") {
+    val dir = tmp("memo")
+    val path = s"$dir/region.parquet"
+    Publish.parquet(spark.range(3).toDF("r_regionkey"), path)
+    assert(Tables(spark, dir).region.count() == 3L)
+    Publish.parquet(spark.range(5).toDF("r_regionkey"), path)
+    assert(Tables(spark, dir).region.count() == 5L)
+  }
+
   test("IVF build / append / list rebuild keep the prior generation on a guard or task failure") {
     val idx = tmp("ivf") + "/idx"
     Similarity.buildIvfIndex(emb, "vec_id", "embedding", nlist = 4, idx)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.VecFns
-import graft.operators.Similarity
+import graft.operators.{Publish, Similarity}
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -1536,5 +1536,47 @@ class SimilaritySpec extends SparkSpec {
     assert(tie.getInt(1) == 0, "L2 tie must keep the lowest code")
     assert(tie.getInt(0) == cents.size - 1,
       "cosine tie must keep the highest cid")
+  }
+
+  test("a NULL vector: the fused kernels return NULL, the nearest-cell index writes reject it") {
+    val cents: Seq[Array[Float]] = emb.orderBy(col("vec_id")).limit(4)
+      .select("embedding").collect().map(_.getSeq[Float](0).toArray).toSeq
+    val nullVec = lit(null).cast(emb.schema("embedding").dataType)
+    Seq(nullVec, nullVec.cast("array<double>")).foreach { v =>
+      val r = emb.limit(1)
+        .select(VecFns.nearestCid(v, cents), VecFns.nearestCodeL2(v, cents)).head()
+      assert(r.isNullAt(0) && r.isNullAt(1), s"kernels on a NULL vector: $r")
+    }
+    // IVF, IVF-SQ8 and PQ build and append raise the guard in-row:
+    // exactly its text, carried behind the GRAFT_GUARD: sentinel
+    def rejects(who: String)(write: => Unit): Unit = {
+      val text = s"$who: a NULL embedding has no nearest cell — drop or embed it first"
+      val e = intercept[IllegalArgumentException](write)
+      assert(e.getMessage == text)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => Option(c.getMessage).exists(_.contains(Publish.Sentinel + text))),
+        s"$who: not raised through the guard sentinel")
+    }
+    val vecs = emb.select(col("vec_id"), col("embedding"))
+    val withNull = vecs.unionByName(vecs.limit(1)
+      .select((col("vec_id") + 100000L).as("vec_id"), nullVec.as("embedding")))
+    val batch = withNull.withColumn("vec_id", col("vec_id") + 200000L)
+    val dir = java.nio.file.Files.createTempDirectory("graft_nullvec").toString
+    val (ivf, ivfSq8, pq) = (s"$dir/ivf", s"$dir/ivfsq8", s"$dir/pq")
+    rejects("buildIvfIndex")(
+      Similarity.buildIvfIndex(withNull, "vec_id", "embedding", 4, ivf))
+    rejects("buildIvfSq8Index")(
+      Similarity.buildIvfSq8Index(withNull, "vec_id", "embedding", 4, ivfSq8))
+    rejects("buildPqIndex")(
+      Similarity.buildPqIndex(withNull, "vec_id", "embedding", 8, 16, pq))
+    Similarity.buildIvfIndex(vecs, "vec_id", "embedding", 4, ivf)
+    Similarity.buildIvfSq8Index(vecs, "vec_id", "embedding", 4, ivfSq8)
+    Similarity.buildPqIndex(vecs, "vec_id", "embedding", 8, 16, pq)
+    rejects("appendIvfIndex")(
+      Similarity.appendIvfIndex(spark, ivf, batch, "vec_id", "embedding"))
+    rejects("appendIvfSq8Index")(
+      Similarity.appendIvfSq8Index(spark, ivfSq8, batch, "vec_id", "embedding"))
+    rejects("appendPqIndex")(
+      Similarity.appendPqIndex(spark, pq, batch, "vec_id", "embedding"))
   }
 }
