@@ -11,6 +11,22 @@ object Bench {
   private def materialize(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
+  /** A compact number: `decimals` places, trailing zeros stripped
+    * ("0.50" -> "0.5").
+    */
+  private def jnumP(d: Double, decimals: Int): String = {
+    val s = String.format(s"%.${decimals}f", Double.box(d))
+    if (s.contains('.')) s.reverse.dropWhile(_ == '0').dropWhile(_ == '.').reverse else s
+  }
+
+  /** A per-query median as the contract line prints it: `decimals`
+    * places, except that a median under 1 s always keeps one decimal,
+    * floored at 0.1 — a measured query never prints a bare `0`, which
+    * reads as a dropped query. A failed row's -1 passes through.
+    */
+  private[graft] def medianText(m: Double, decimals: Int): String =
+    if (m >= 0 && m < 1) jnumP(math.max(m, 0.1), 1) else jnumP(m, decimals)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -160,11 +176,7 @@ object Bench {
     // the JSON (metric/value/early queries) is lost — exactly what
     // broke BENCH_r02 parsing. Per-query medians print at 1 decimal
     // (full precision lives in BENCH_DETAIL.json), degrading to 0
-    // decimals if the line would still overflow.
-    def jnumP(d: Double, decimals: Int): String = {
-      val s = String.format(s"%.${decimals}f", Double.box(d))
-      if (s.contains('.')) s.reverse.dropWhile(_ == '0').dropWhile(_ == '.').reverse else s
-    }
+    // decimals above 1 s if the line would still overflow.
     def jnum(d: Double): String = jnumP(d, 2)
     def jnumFull(d: Double): String = f"$d%.4f"
     def jstr(s: String): String = graft.tools.Json.str(s)
@@ -173,13 +185,15 @@ object Bench {
     def qsLine(shortKeys: Boolean)(decimalsFor: Double => Int): String = results
       .map { case (k, ts) =>
         val key = if (shortKeys) k.takeWhile(_ != '_') else k
-        val m = med(ts); s"${jstr(key)}:${jnumP(m, decimalsFor(m))}" }
+        val m = med(ts); s"${jstr(key)}:${medianText(m, decimalsFor(m))}" }
       .mkString("{", ",", "}")
     // Budget: 2000-char tail − "[info] " (7) − trailing "[success]
     // Total time..." (~85) − JSON header/sf (~70) ⇒ the queries map can
     // run to ~1830. Degradation tiers keep VALUE resolution as long as
     // possible: full names 1 decimal → full names integer-above-10s →
-    // SHORT keys ("q30") 1 decimal → short keys integer-above-10s.
+    // SHORT keys ("q30") 1 decimal → short keys integer-above-10s →
+    // short keys integer (every tier keeps a sub-second median at one
+    // decimal: [[medianText]]).
     // Full names + 4-decimal medians + per-rep times always land in
     // BENCH_DETAIL.json.
     val tiers = Seq[() => String](

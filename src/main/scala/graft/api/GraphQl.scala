@@ -1,7 +1,10 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import scala.jdk.CollectionConverters._
 
 /** GraphQL-dialect frontend: the reference's ENTIRE user interface is
   * "hand a GraphQL query string to the endpoint, get rows back"
@@ -63,12 +66,25 @@ import org.apache.spark.sql.functions._
   * result back. Output is ONE row per root with nested columns in
   * selection order — the GraphQL `data` object as a Spark schema.
   *
-  * Paginated connections ([[Paginable]]) are never unbounded: an
-  * omitted `page` serves a [[DefaultPageSize]]-row first page (server
-  * parity — `count` stays the total), and the requested page is
-  * rank-limited BEFORE the array fold (TakeOrderedAndProject, the q43
-  * discipline), so a hub entity's crawl-scale edge list costs a top-k
-  * merge, not a single-reducer collect.
+  * Paginated connections (a [[Conn]] with `paged`) are never
+  * unbounded: an omitted `page` serves a [[DefaultPageSize]]-row first
+  * page (server parity — `count` stays the total), and the requested
+  * page is rank-limited BEFORE the array fold (TakeOrderedAndProject,
+  * the q43 discipline), so a hub entity's crawl-scale edge list costs
+  * a top-k merge, not a single-reducer collect.
+  *
+  * The executor is one type table and a few resolver steps. [[Types]]
+  * (with the [[Entity]] records and the [[Conns]] connection table)
+  * writes each object type's fields once — field name → column, or a
+  * scalar or object its site resolves — and root lookups, batch
+  * roots, joined sub-entities, union arms and `__type` introspection
+  * all read it. Every resolver goes through the same steps:
+  * [[selection]] turns one selection into columns (`__typename`,
+  * unknown fields, scalars given a sub-selection); [[fold]] is the
+  * sorted `collect_list` every list resolves through; [[page]] parses
+  * and applies pagination; [[onlyArgs]] and [[idList]] check argument
+  * lists and id batches; [[assemble]] cross-joins the 1-row sides of a
+  * selection and projects it.
   */
 object GraphQl {
 
@@ -545,214 +561,560 @@ object GraphQl {
   private val SkipSpreadMark: String = "\u0000xxx"
 
   // ------------------------------------------------------------------
-  // Executor
+  // Executor: the type table
   // ------------------------------------------------------------------
 
-  /** Scalar fields per entity type → source column name. */
-  private val Scalars: Map[(String, String), String] = Map(
-    ("disease", "id") -> "id", ("disease", "name") -> "name",
-    ("target", "id") -> "id", ("target", "approvedSymbol") -> "approvedSymbol",
-    ("target", "bioType") -> "bioType",
-    ("drug", "id") -> "id", ("drug", "name") -> "name",
-    ("drug", "synonyms") -> "synonyms", ("drug", "drugType") -> "drugType",
-    ("drug", "isApproved") -> "isApproved",
-    ("drug", "maximumClinicalTrialPhase") -> "maximumClinicalTrialPhase")
-
-  /** GraphQL type names for the `__typename` meta-field that every
-    * Apollo-generation client injects into its queries — served at
-    * every selection level so generated clients work unchanged. Names
-    * are the reference schema's (`type Disease` opentargets.schema:150,
-    * `Target`:1348, `Drug`:347, `Pathway`:1053, `SearchResult`:1276),
-    * keyed by the resolver's internal entity keys.
+  /** How a field of an object type resolves: a scalar read from a
+    * column, a scalar its site computes, or an object built from the
+    * field's own selection — of the table type `tpe` when that type is
+    * all columns, which [[selection]] then nests by default.
     */
-  private val TypeNames: Map[String, String] = Map(
-    "disease" -> "Disease", "target" -> "Target", "drug" -> "Drug",
-    "pathway" -> "Pathway", "hit" -> "SearchResult",
-    "meta" -> "Meta", "apiVersion" -> "APIVersion",
-    "dataVersion" -> "DataVersion",
-    "associationDatasources" -> "EvidenceSource",
-    "interactionResources" -> "InteractionResources",
-    "geneOntologyTerms" -> "GeneOntologyTerm",
-    "phenotypeHPO" -> "HPO")
+  private sealed abstract class Kind(val isObject: Boolean)
+  private final case class Col(name: String) extends Kind(false)
+  private case object Calc extends Kind(false)
+  private final case class Obj(tpe: String = "") extends Kind(true)
 
-  /** (connection object, row object) type names per connection site —
-    * schema-true where the schema names them (`KnownDrugs`:916 /
-    * `KnownDrug`:855, `AssociatedTargets`:62 / `AssociatedTarget`:53,
-    * `AssociatedDiseases`:44 / `AssociatedDisease`:35,
-    * `LinkedTargets`:958, `ReactomePathway`:1202); `LinkedTarget` is
-    * this dialect's name for its {rank, target} linkedTargets row
-    * (the schema's rows are bare targets — the rank field is the
-    * dialect's addition, so the row type is too).
+  /** An object type: its schema name and its fields, in the order
+    * every "supported:" list prints them.
     */
-  private val ConnTypes: Map[(String, String), (String, String)] = Map(
-    ("disease", "knownDrugs") -> (("KnownDrugs", "KnownDrug")),
-    ("target", "knownDrugs") -> (("KnownDrugs", "KnownDrug")),
-    ("disease", "associatedTargets") ->
-      (("AssociatedTargets", "AssociatedTarget")),
-    ("target", "associatedDiseases") ->
-      (("AssociatedDiseases", "AssociatedDisease")),
-    ("drug", "linkedTargets") -> (("LinkedTargets", "LinkedTarget")),
-    ("target", "pathways") -> (("", "ReactomePathway")),
-    ("target", "tractability") -> (("", "Tractability")),
-    ("disease", "phenotypes") -> (("DiseaseHPOs", "DiseaseHPO")),
-    ("disease", "evidences") -> (("Evidences", "Evidence")))
+  private final case class Type(name: String, fields: Seq[(String, Kind)])
+
+  private def cols(names: String*): Seq[(String, Kind)] = names.map(n => n -> Col(n))
+
+  /** An entity of the knowledge graph — one arm of the schema's
+    * `EntityUnionType` (opentargets.schema:502). `key` is the resolver
+    * key and the `<key>_id` edge column; `arg` the root argument (the
+    * batch root and its argument add an `s`); `scalars` the scalar
+    * fields with the SQL type a union arm's typed NULL takes; `label`
+    * the scalar a search matches as the display `name`; `scan` the
+    * relation a lookup reads, `lite` the cheaper one a search reads
+    * when no union arm reads past id and name.
+    */
+  private final case class Entity(key: String, name: String, arg: String,
+                                  scalars: Seq[(String, String)], label: String,
+                                  conns: Seq[String],
+                                  scan: KnowledgeGraph => DataFrame,
+                                  lite: KnowledgeGraph => DataFrame) {
+    val scalarType: Type = Type(name, cols(scalars.map(_._1): _*))
+    val tpe: Type = Type(name, scalarType.fields ++ conns.map(_ -> Obj()))
+    /** The scalars a union arm reads beyond id and the display name. */
+    def extras: Seq[(String, String)] =
+      scalars.filterNot(s => s._1 == "id" || s._1 == label)
+  }
+
+  private val Disease = Entity("disease", "Disease", "efoId",
+    Seq("id" -> "string", "name" -> "string"), "name",
+    Seq("knownDrugs", "associatedTargets", "phenotypes", "evidences"),
+    _.diseases, _.diseases)
+  private val Target = Entity("target", "Target", "ensemblId",
+    Seq("id" -> "string", "approvedSymbol" -> "string", "bioType" -> "string"),
+    "approvedSymbol",
+    Seq("knownDrugs", "associatedDiseases", "pathways", "tractability",
+      "similarEntities"),
+    _.targets, _.targets)
+  private val Drug = Entity("drug", "Drug", "chemblId",
+    Seq("id" -> "string", "name" -> "string", "drugType" -> "string",
+      "isApproved" -> "boolean", "synonyms" -> "array<string>",
+      "maximumClinicalTrialPhase" -> "double"), "name",
+    Seq("linkedTargets", "mechanismsOfAction"),
+    _.drugDetails, _.drugs)
+  private val Entities: Seq[Entity] = Seq(Disease, Target, Drug)
+
+  private def entity(key: String): Option[Entity] = Entities.find(_.key == key)
+
+  /** Every object type of the dialect but the connection rows (one
+    * per connection, in [[Conns]]) and introspection's own types —
+    * type names are the reference schema's (`type Disease`
+    * opentargets.schema:150, `Target`:1348, `Drug`:347, `Pathway`:1053,
+    * `SearchResult`:1276, `KnownDrugs`:916, `AssociatedTargets`:62,
+    * `AssociatedDiseases`:44, `LinkedTargets`:958).
+    */
+  private val Types: Map[String, Type] = (Entities.map(_.tpe) ++
+    Seq("KnownDrugs", "AssociatedTargets", "AssociatedDiseases",
+      "LinkedTargets", "DiseaseHPOs", "Evidences")
+      .map(Type(_, Seq("count" -> Calc, "rows" -> Obj()))) ++ Seq(
+    Type("Pathway", Seq("id" -> Col("pathwayId"), "name" -> Col("pathway"))),
+    Type("HPO", Seq("id" -> Col("hpo_id"), "name" -> Col("hpo_name"),
+      "description" -> Col("hpo_desc"), "namespace" -> Col("namespace"))),
+    Type("Tractability", cols("label", "modality", "value")),
+    Type("GeneOntologyTerm", cols("id", "name")),
+    Type("Evidence", cols("id", "score") ++
+      Seq("target" -> Obj(), "disease" -> Obj())),
+    Type("Similarity", Seq("id" -> Col("__sim_id"), "category" -> Calc,
+      "score" -> Col("cosine"), "object" -> Obj())),
+    Type("MechanismsOfAction", Seq("rows" -> Obj(),
+      "uniqueActionTypes" -> Calc, "uniqueTargetTypes" -> Calc)),
+    Type("MechanismOfActionRow",
+      cols("mechanismOfAction", "actionType") :+ ("targets" -> Obj())),
+    Type("SearchResults",
+      Seq("total" -> Calc, "hits" -> Obj(), "aggregations" -> Obj())),
+    Type("SearchResult", cols("id", "name", "entity") :+ ("object" -> Obj())),
+    Type("SearchResultAggs", Seq("total" -> Calc, "entities" -> Obj())),
+    Type("SearchResultAggEntity", Seq("name" -> Col("entity"),
+      "total" -> Col("__n"), "categories" -> Obj())),
+    Type("SearchResultAggCategory",
+      Seq("name" -> Col("entity"), "total" -> Col("__n"))),
+    Type("SearchFacetsResults",
+      Seq("total" -> Calc, "hits" -> Obj(), "categories" -> Obj())),
+    Type("SearchFacetsResult", Seq("id" -> Col("id"), "label" -> Col("name"),
+      "category" -> Col("entity"))),
+    Type("SearchFacetsCategory",
+      Seq("name" -> Col("entity"), "total" -> Col("n"))),
+    Type("MappingResults",
+      Seq("total" -> Calc, "mappings" -> Obj(), "aggregations" -> Obj())),
+    Type("MappingResult", Seq("term" -> Col("__term"), "hits" -> Obj())),
+    Type("Meta", Seq("name" -> Col("name"), "apiVersion" -> Obj("APIVersion"),
+      "dataVersion" -> Obj("DataVersion"))),
+    Type("APIVersion", cols("x", "y", "z")),
+    Type("DataVersion", cols("year", "month", "iteration")),
+    Type("EvidenceSource", cols("datasource", "datatype")),
+    Type("InteractionResources", cols("databaseVersion", "sourceDatabase"))))
+    .map(t => t.name -> t).toMap
+
+  /** One flat connection: its edge relation, filtered on `rootCol`;
+    * the ascending sort keys of its row order (the server's documented
+    * defaults: score desc / rank asc / key asc); whether it takes the
+    * schema's `page: Pagination` argument — knownDrugs
+    * (opentargets.schema:243-246, 429-432, 1475-1478),
+    * disease.associatedTargets (:248-268), target.associatedDiseases
+    * (:1480-1483) and phenotypes (:224-228), while linkedTargets (:447)
+    * and pathways (:1202) are bare per-entity-bounded lists there —
+    * and the score arguments; its wrapper type (None: a bare list) and
+    * row type. A row field named after an entity key is that entity.
+    */
+  private final case class Conn(edges: KnowledgeGraph => DataFrame,
+                                rootCol: String, sortKeys: Seq[Column],
+                                paged: Boolean, scored: Boolean,
+                                wrapper: Option[String], row: Type)
+
+  private val Conns: Map[(String, String), Conn] = Map(
+    ("disease", "knownDrugs") -> Conn(_.knownDrugs, "disease_id",
+      Seq(col("drug_id"), col("target_id")), paged = true, scored = false,
+      Some("KnownDrugs"), Type("KnownDrug",
+        cols("phase") ++ Seq("target" -> Obj(), "drug" -> Obj()))),
+    ("target", "knownDrugs") -> Conn(_.knownDrugs, "target_id",
+      Seq(col("drug_id"), col("disease_id")), paged = true, scored = false,
+      Some("KnownDrugs"), Type("KnownDrug",
+        cols("phase") ++ Seq("disease" -> Obj(), "drug" -> Obj()))),
+    ("disease", "associatedTargets") -> Conn(_.associatedTargets,
+      "disease_id", Seq(negate(col("score")), col("target_id")),
+      paged = true, scored = true, Some("AssociatedTargets"),
+      Type("AssociatedTarget", cols("score") :+ ("target" -> Obj()))),
+    ("target", "associatedDiseases") -> Conn(_.associatedDiseases,
+      "target_id", Seq(negate(col("score")), col("disease_id")),
+      paged = true, scored = true, Some("AssociatedDiseases"),
+      Type("AssociatedDisease", cols("score") :+ ("disease" -> Obj()))),
+    // `LinkedTarget` is this dialect's name for its {rank, target} row
+    // (the schema's rows are bare targets; rank is the dialect's)
+    ("drug", "linkedTargets") -> Conn(_.linkedTargets, "drug_id",
+      Seq(col("rank")), paged = false, scored = false, Some("LinkedTargets"),
+      Type("LinkedTarget", cols("rank") :+ ("target" -> Obj()))),
+    ("target", "pathways") -> Conn(_.pathways, "target_id",
+      Seq(col("pathwayId")), paged = false, scored = false, None,
+      Type("ReactomePathway",
+        ("pathway" -> Obj("Pathway")) +: cols("topLevelTerm"))),
+    // bare [Tractability!]! (opentargets.schema:1416, 1546-1550) —
+    // per-entity-bounded (4 rows), deterministic modality order
+    ("target", "tractability") -> Conn(_.tractability, "target_id",
+      Seq(col("modality")), paged = false, scored = false, None,
+      Types("Tractability")),
+    // DiseaseHPOs {count, rows: [DiseaseHPO]} — rows carry the
+    // phenotypeHPO entity (:283-285, HPO :727-739)
+    ("disease", "phenotypes") -> Conn(_.phenotypes, "disease_id",
+      Seq(col("hpo_id")), paged = true, scored = false, Some("DiseaseHPOs"),
+      Type("DiseaseHPO", Seq("phenotypeHPO" -> Obj("HPO")))))
+
+  // ------------------------------------------------------------------
+  // Executor: the resolver steps
+  // ------------------------------------------------------------------
 
   private def noSubSel(f: Field): Unit =
     if (f.sel.nonEmpty) throw ParseError(
       "'__typename' is a meta-field — drop its selection")
 
-  private def entityStruct(entity: String, sel: Seq[Field],
-                           fields: Map[String, Column]): Column = {
-    if (sel.isEmpty) throw ParseError(
-      s"'$entity' needs a selection of its fields")
-    struct(sel.map { f =>
-      if (f.name == "__typename") {
-        noSubSel(f)
-        lit(TypeNames.getOrElse(entity, entity.capitalize)).as(f.out)
-      } else {
-        if (f.sel.nonEmpty) throw ParseError(
-          s"'$entity.${f.name}' is a scalar — drop its selection")
-        val src = fields.getOrElse(f.name, throw ParseError(
-          s"unknown field '${f.name}' on $entity — supported: " +
-            fields.keys.toSeq.sorted.mkString(", ")))
-        src.as(f.out)
-      }
+  /** Resolve one selection against type `t`, in selection order, each
+    * column named by its response key: `__typename` is the type name;
+    * an unknown field names the site and the supported fields; a
+    * scalar takes no sub-selection. `resolve` builds the fields the
+    * site computes; any other scalar reads its column, an object of a
+    * plain table type nests, and the rest read the side named by their
+    * response key (the 1-row sides [[assemble]] joins).
+    */
+  private def selection(site: String, t: Type, sel: Seq[Field])(
+      resolve: PartialFunction[Field, Column] = PartialFunction.empty)
+      : Seq[Column] = {
+    if (sel.isEmpty) throw ParseError(s"'$site' needs a selection")
+    sel.map { f =>
+      (if (f.name == "__typename") { noSubSel(f); lit(t.name) }
+       else {
+         val kind = t.fields.collectFirst { case (n, k) if n == f.name => k }
+           .getOrElse(throw ParseError(
+             s"unknown ${if (t.name.startsWith("__")) "introspection " else ""}" +
+               s"field '${f.name}' on $site — supported: " +
+               t.fields.map(_._1).mkString(", ")))
+         if (!kind.isObject && f.sel.nonEmpty) throw ParseError(
+           s"'$site.${f.name}' is a scalar — drop its selection")
+         resolve.applyOrElse(f, (g: Field) => kind match {
+           case Col(c) => col(c)
+           case Obj(tpe) if tpe.nonEmpty =>
+             struct(selection(g.name, Types(tpe), g.sel)(): _*)
+           case _ => col(g.out)
+         })
+       }).as(f.out)
+    }
+  }
+
+  /** The sorted-array fold every list resolves through: sort keys ride
+    * in front of the payload for sort_array, `cut` takes the requested
+    * page, and the keys drop away — deterministic order from one
+    * aggregation. Rows where `keep` is false are left out.
+    */
+  private def fold(keys: Seq[Column], payload: Column,
+                   cut: Column => Column = identity,
+                   keep: Option[Column] = None): Column = {
+    val keyed = struct(keys.zipWithIndex.map { case (k, i) => k.as(s"__k$i") } :+
+      payload.as("__p"): _*)
+    transform(cut(sort_array(collect_list(keep.fold(keyed)(when(_, keyed))))),
+      x => x.getField("__p"))
+  }
+
+  /** The 1-row sides of one selection (one per response key — each
+    * alias its own payload, never first-wins), broadcast cross-joined
+    * into one row — a constant row when nothing aggregates — and
+    * projected to `out`. A `__typename` literal therefore lands AFTER
+    * the aggregates: inside one it would be NULL over zero matches.
+    */
+  private def assemble(sides: Seq[DataFrame], spark: => SparkSession)(
+      out: Column*): DataFrame =
+    (if (sides.isEmpty) spark.range(1).toDF()
+     else sides.reduce((a, b) => a.crossJoin(broadcast(b)))).select(out: _*)
+
+  /** Server-parity default page size for paginated connections: the
+    * endpoint never returns an unbounded connection — an omitted
+    * `page` serves the FIRST page while `count` stays the connection
+    * total. Doubles as the engine's scale guard: a hub entity's
+    * crawl-sized edge list is never collected into one aggregation
+    * buffer by an unpaginated query.
+    */
+  val DefaultPageSize: Int = 25
+
+  /** Clamp for an explicit `size` — the engine-side cap that keeps a
+    * single requested page (and its aggregation buffer) bounded.
+    */
+  val MaxPageSize: Int = 3000
+
+  private def intArg(args: Map[String, String], key: String): Option[Int] =
+    args.get(key).map { s =>
+      val n = s.toIntOption.getOrElse(
+        throw ParseError(s"$key must be an integer, got '$s'"))
+      if (n < 0) throw ParseError(s"$key must be >= 0, got $n")
+      n
+    }
+
+  /** A number argument in [0, 1] (a score threshold). */
+  private def unitArg(key: String, s: String): Double = {
+    val v = s.toDoubleOption.getOrElse(throw ParseError(
+      s"$key must be a number, got '$s'"))
+    if (v < 0.0 || v > 1.0) throw ParseError(
+      s"$key must be in [0, 1], got $v")
+    v
+  }
+
+  /** One requested page; `size` None serves every row. */
+  private final case class Page(index: Int, size: Option[Int]) {
+    /** An omitted size is the [[DefaultPageSize]]-row first page. */
+    def orDefault: Page = copy(size = size.orElse(Some(DefaultPageSize)))
+
+    /** Rank-limit to the rows the page reaches, BEFORE the fold: sort
+      * + limit (index+1)·size plans as TakeOrderedAndProject —
+      * per-partition top-k, then a merge of only k·partitions rows —
+      * so a hub key's edge list never lands in one reducer's
+      * collect_list buffer.
+      */
+    def limit(df: DataFrame, keys: Seq[Column]): DataFrame =
+      size.fold(df)(n => df.sort(keys: _*).limit(clamp((index + 1).toLong * n)))
+
+    /** The page of the folded, sorted array. */
+    def cut(arr: Column): Column =
+      size.fold(arr)(n => slice(arr, clamp(index.toLong * n + 1L), n))
+  }
+
+  /** Long math then a clamp: index·size+1 can overflow Int, and a
+    * negative start would make slice() count from the END of the
+    * array — the wrong rows instead of the correct empty page. Spark
+    * arrays hold < Int.MaxValue elements, so a clamped start is always
+    * past the end.
+    */
+  private def clamp(n: Long): Int = math.min(n, Int.MaxValue.toLong).toInt
+
+  /** The schema's pagination argument — `page: {index, size}`
+    * (opentargets.schema:1047-1050, index = 0-based page number) or the
+    * bare `size` shorthand — clamped to [[MaxPageSize]].
+    */
+  private def page(args: Map[String, String]): Page = {
+    val size = intArg(args, "page.size").orElse(intArg(args, "size"))
+    val index = intArg(args, "page.index").getOrElse(0)
+    if (index > 0 && size.isEmpty) throw ParseError(
+      "page.index needs page.size")
+    Page(index, size.map(math.min(_, MaxPageSize)))
+  }
+
+  /** Schema parity on the argument list: an unknown (or typo'd)
+    * argument is a loud error — `scoreThreshhold:` silently serving the
+    * unfiltered connection is the quiet failure the parser's
+    * undeclared-binding check exists to prevent.
+    */
+  private def onlyArgs(args: Map[String, String], allowed: Set[String],
+                       site: String, hint: String): Unit = {
+    val unknown = args.keySet -- allowed
+    if (unknown.nonEmpty) throw ParseError(
+      s"unknown argument${if (unknown.size > 1) "s" else ""} " +
+        s"${unknown.toSeq.sorted.mkString(", ")} on $site — $hint")
+  }
+
+  /** Loud rejection of arguments on a field that takes none (a typo'd
+    * `hits(size:)` silently ignored would be the quiet failure this
+    * dialect never allows).
+    */
+  private def noArgs(args: Map[String, String], what: String): Unit =
+    if (args.nonEmpty) throw ParseError(
+      s"$what takes no arguments, got ${args.keys.toSeq.sorted.mkString(", ")}")
+
+  /** Serving cap on a batch argument (mapIds terms, evidences and GO
+    * ids) — the nearDupLookup discipline: an unbounded list belongs in
+    * a join against an id RELATION, not in one request.
+    */
+  val MaxMapTerms: Int = 1000
+
+  /** A batch argument's entries, checked in order: no empty entry (it
+    * would vanish from, or shift, a positional result), not empty, no
+    * duplicates under `key` (two identical entries — redundancy
+    * rejected loudly), at most [[MaxMapTerms]]. A SINGLE empty entry is
+    * indistinguishable from `[]` after the list join, so it reports an
+    * empty list.
+    */
+  private def idList(raw: String, name: String, site: String,
+                     key: String => String = identity): Seq[String] = {
+    val all = splitList(raw)
+    if (all.size > 1 && all.exists(_.isEmpty)) throw ParseError(
+      s"$name must not contain empty strings")
+    val ids = all.filter(_.nonEmpty)
+    if (ids.isEmpty) throw ParseError(s"$name must not be empty")
+    val dup = ids.groupBy(key).collect { case (_, vs) if vs.size > 1 => vs.head }
+    if (dup.nonEmpty) throw ParseError(
+      s"duplicate $name: ${dup.toSeq.sorted.mkString(", ")}")
+    if (ids.size > MaxMapTerms) throw ParseError(
+      s"$site serves at most $MaxMapTerms $name per request, got " +
+        s"${ids.size} — join against an id relation for batch lookup")
+    ids
+  }
+
+  /** A request's id batch as a relation, to broadcast into ONE scan —
+    * never a scan per id (the S4 batch-lookup plan).
+    */
+  private def batchDf(spark: SparkSession, ddl: String,
+                      rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, StructType.fromDDL(ddl))
+
+  // ------------------------------------------------------------------
+  // Executor: sub-entities and the entity union
+  // ------------------------------------------------------------------
+
+  /** The internal column a joined (or union-widened) entity scalar
+    * takes.
+    */
+  private def joined(e: Entity, field: String): String = s"__${e.key}_$field"
+
+  /** LEFT-join entity `e` by its `<key>_id` edge column, its scalars
+    * under [[joined]] names. LEFT: a GraphQL resolver nulls a missing
+    * sub-entity, it never drops the row — so `count` and `rows` agree
+    * even if an edge references an id the entity table lacks.
+    */
+  private def joinEntity(kg: KnowledgeGraph, df: DataFrame, e: Entity): DataFrame =
+    df.join(e.scan(kg).select(e.scalars.map { case (c, _) =>
+        col(c).as(joined(e, c)) }: _*),
+      col(s"${e.key}_id") === col(joined(e, "id")), "left")
+
+  /** Join the entities of `row` that `names` reads, in field order.
+    * Only those: Catalyst cannot drop an unused join on FK-integrity
+    * grounds itself, so a `knownDrugs { rows { phase drug {...} } }`
+    * query never pays a targets join it does not read.
+    */
+  private def joinEntities(kg: KnowledgeGraph, df: DataFrame, row: Type,
+                           names: Set[String]): DataFrame =
+    row.fields.flatMap(f => entity(f._1)).filter(e => names(e.key))
+      .foldLeft(df)(joinEntity(kg, _, _))
+
+  /** An entity's struct over `sel`; `column` maps a scalar to the
+    * column holding it at this site.
+    */
+  private def entityStruct(e: Entity, sel: Seq[Field])(
+      column: String => Column): Column =
+    struct(selection(e.key, e.scalarType, sel) { case g => column(g.name) }: _*)
+
+  /** Entity row fields of a joined relation: a missing sub-entity
+    * resolves to a NULL object, not a struct of nulls — the GraphQL
+    * null the client's .get() chains expect.
+    */
+  private val subEntities: PartialFunction[Field, Column] = {
+    case g if entity(g.name).isDefined =>
+      val e = entity(g.name).get
+      when(col(joined(e, "id")).isNotNull,
+        entityStruct(e, g.sel)(n => col(joined(e, n))))
+  }
+
+  /** The column a union arm reads an entity scalar from, in the
+    * (id, name, entity, extras...) layout of [[searchRel]].
+    */
+  private def armColumn(e: Entity, field: String): Column =
+    if (field == "id") col("id")
+    else if (field == e.label) col("name")
+    else col(joined(e, field))
+
+  /** The union-typed `object` field (`SearchResult.object:
+    * EntityUnionType`, opentargets.schema:502,1290). Spark has no
+    * native union type, so per SURVEY §1.2's encoding it resolves to a
+    * struct of the union TAG (`__typename`, discriminating on the row's
+    * entity kind) plus one NULLABLE struct per selected inline-fragment
+    * arm, non-null only on rows of that type — the shape an
+    * Apollo-generated client's `...on`-switch reads directly.
+    */
+  private def objectField(f: Field): Column = {
+    if (f.args.nonEmpty) throw ParseError("'object' takes no arguments")
+    if (f.sel.isEmpty) throw ParseError(
+      "'object' is a union — select '__typename' and/or inline-fragment " +
+        "arms ('... on Target | Drug | Disease')")
+    struct(f.sel.map { g =>
+      (if (g.name == "__typename") {
+        noSubSel(g)
+        when(col("entity") === "disease", lit("Disease"))
+          .when(col("entity") === "target", lit("Target"))
+          .otherwise(lit("Drug"))
+      } else if (g.name.startsWith(InlineMark)) {
+        val tpe = g.name.stripPrefix(InlineMark)
+        val e = Entities.find(_.name == tpe).getOrElse(throw ParseError(
+          s"unknown type condition '... on $tpe' — EntityUnionType " +
+            "covers Target, Drug and Disease (opentargets.schema:502)"))
+        when(col("entity") === e.key, entityStruct(e, g.sel)(armColumn(e, _)))
+      } else throw ParseError(
+        "'object' is a union — its members' fields are selected via " +
+          "inline-fragment arms ('... on Drug { ... }') or " +
+          s"'__typename', got '${g.name}'")
+      ).as(g.out)
     }: _*)
   }
 
-  /** One connection's description: the filtered+joined flat relation,
-    * ascending sort keys for the deterministic row order, and the
-    * per-row field resolver.
+  /** The search hit relation (id, name, entity) over the selected
+    * entity tables, WIDENED selection-driven for the union `object`
+    * field: an entity's arm columns (its [[Entity.extras]], typed NULL
+    * on the other entities' rows) join the scan only when some arm of
+    * it reads one — bioType is one dimension column, but the Drug
+    * block imports drugDetails' edge rollup. Shared by the search,
+    * facets and mapIds roots.
     */
-  private final case class Conn(flat: DataFrame, sortKeys: Seq[Column],
-                                hasRows: Boolean,
-                                rowField: Field => Column)
+  private def searchRel(kg: KnowledgeGraph, entities: Seq[String],
+                        objSels: Seq[Field]): DataFrame = {
+    def reads(e: Entity): Boolean = objSels.flatMap(_.sel)
+      .filter(_.name == InlineMark + e.name).flatMap(_.sel)
+      .exists(f => e.extras.exists(_._1 == f.name))
+    val widened = Entities.filter(reads)
+    entities.map { key =>
+      val b = entity(key).getOrElse(throw ParseError(
+        s"unknown entity '$key' in entityNames — supported: " +
+          Entities.map(_.key).mkString(", ")))
+      (if (reads(b)) b.scan(kg) else b.lite(kg)).select(
+        Seq(col("id"), col(b.label).as("name"), lit(b.key).as("entity")) ++
+          widened.flatMap(e => e.extras.map { case (x, t) =>
+            (if (e == b) col(x) else lit(null).cast(t)).as(joined(e, x)) }): _*)
+    }.reduce(_.unionByName(_))
+  }
 
-  private def conn(kg: KnowledgeGraph, entity: String, name: String,
-                   rootKey: String, selected: Set[String]): Conn = {
-    // Sub-entity tables join in ONLY when the row selection actually
-    // references them: Catalyst cannot drop an unused inner join on
-    // FK-integrity grounds itself, and a `knownDrugs { rows { phase
-    // drug {...} } }` query must not pay a targets join it never
-    // reads. The edge columns (ids, score, rank, phase) are on the
-    // edge relation and need no join at all. The joins are LEFT — a
-    // GraphQL resolver nulls a missing sub-entity, it never drops the
-    // row — so `count` and `rows` agree even if an edge references an
-    // id the entity table lacks (the KG views are FK-consistent by
-    // construction; this pins resolver semantics regardless).
-    def tgt(df: DataFrame, on: String): DataFrame =
-      if (!selected("target")) df
-      else df.join(kg.targets.select(col("id").as("__t_id"),
-        col("approvedSymbol").as("__t_sym"), col("bioType").as("__t_bio")),
-        col(on) === col("__t_id"), "left")
-    def drg(df: DataFrame, on: String): DataFrame =
-      if (!selected("drug")) df
-      else df.join(kg.drugDetails.select(col("id").as("__d_id"),
-        col("name").as("__d_name"), col("drugType").as("__d_type"),
-        col("isApproved").as("__d_appr"), col("synonyms").as("__d_syn"),
-        col("maximumClinicalTrialPhase").as("__d_maxph")),
-        col(on) === col("__d_id"), "left")
-    def dis(df: DataFrame, on: String): DataFrame =
-      if (!selected("disease")) df
-      else df.join(kg.diseases.select(col("id").as("__s_id"),
-        col("name").as("__s_name")), col(on) === col("__s_id"), "left")
-    // a missing sub-entity resolves to a NULL object, not a struct of
-    // nulls — the GraphQL null the client's .get() chains expect
-    def targetField(f: Field) = when(col("__t_id").isNotNull,
-      entityStruct("target", f.sel,
-        Map("id" -> col("__t_id"), "approvedSymbol" -> col("__t_sym"),
-          "bioType" -> col("__t_bio"))))
-    def drugField(f: Field) = when(col("__d_id").isNotNull,
-      entityStruct("drug", f.sel,
-        Map("id" -> col("__d_id"), "name" -> col("__d_name"),
-          "drugType" -> col("__d_type"), "isApproved" -> col("__d_appr"),
-          "synonyms" -> col("__d_syn"),
-          "maximumClinicalTrialPhase" -> col("__d_maxph"))))
-    def diseaseField(f: Field) = when(col("__s_id").isNotNull,
-      entityStruct("disease", f.sel,
-        Map("id" -> col("__s_id"), "name" -> col("__s_name"))))
-    def bad(f: Field, supported: String): Nothing = throw ParseError(
-      s"unknown field '${f.name}' on $entity.$name — supported: $supported")
+  private def entityNames(args: Map[String, String]): Seq[String] =
+    args.get("entityNames").map(splitList(_).distinct)
+      .getOrElse(Entities.map(_.key))
 
-    (entity, name) match {
-      case ("disease", "knownDrugs") =>
-        Conn(drg(tgt(kg.knownDrugs.filter(col("disease_id") === rootKey),
-            "target_id"), "drug_id"),
-          Seq(col("drug_id"), col("target_id")), hasRows = true, {
-            case Field("phase", _, Seq(), _) => col("phase")
-            case f @ Field("drug", _, _, _) => drugField(f)
-            case f @ Field("target", _, _, _) => targetField(f)
-            case f => bad(f, "phase, drug, target")
-          })
-      case ("target", "knownDrugs") =>
-        Conn(drg(dis(kg.knownDrugs.filter(col("target_id") === rootKey),
-            "disease_id"), "drug_id"),
-          Seq(col("drug_id"), col("disease_id")), hasRows = true, {
-            case Field("phase", _, Seq(), _) => col("phase")
-            case f @ Field("drug", _, _, _) => drugField(f)
-            case f @ Field("disease", _, _, _) => diseaseField(f)
-            case f => bad(f, "phase, drug, disease")
-          })
-      case ("disease", "associatedTargets") =>
-        Conn(tgt(kg.associatedTargets.filter(col("disease_id") === rootKey),
-            "target_id"),
-          Seq(negate(col("score")), col("target_id")), hasRows = true, {
-            case Field("score", _, Seq(), _) => col("score")
-            case f @ Field("target", _, _, _) => targetField(f)
-            case f => bad(f, "score, target")
-          })
-      case ("target", "associatedDiseases") =>
-        Conn(dis(kg.associatedDiseases.filter(col("target_id") === rootKey),
-            "disease_id"),
-          Seq(negate(col("score")), col("disease_id")), hasRows = true, {
-            case Field("score", _, Seq(), _) => col("score")
-            case f @ Field("disease", _, _, _) => diseaseField(f)
-            case f => bad(f, "score, disease")
-          })
-      case ("drug", "linkedTargets") =>
-        Conn(tgt(kg.linkedTargets.filter(col("drug_id") === rootKey),
-            "target_id"),
-          Seq(col("rank")), hasRows = true, {
-            case Field("rank", _, Seq(), _) => col("rank")
-            case f @ Field("target", _, _, _) => targetField(f)
-            case f => bad(f, "rank, target")
-          })
-      case ("target", "pathways") =>
-        Conn(kg.pathways.filter(col("target_id") === rootKey),
-          Seq(col("pathwayId")), hasRows = false, {
-            case Field("topLevelTerm", _, Seq(), _) => col("topLevelTerm")
-            case Field("pathway", _, sel, _) => entityStruct("pathway", sel,
-              Map("id" -> col("pathwayId"), "name" -> col("pathway")))
-            case f => bad(f, "pathway, topLevelTerm")
-          })
-      case ("target", "tractability") =>
-        // bare [Tractability!]! (opentargets.schema:1416, 1546-1550) —
-        // per-entity-bounded (4 rows), deterministic modality order
-        Conn(kg.tractability.filter(col("target_id") === rootKey),
-          Seq(col("modality")), hasRows = false, {
-            case Field("label", _, Seq(), _) => col("label")
-            case Field("modality", _, Seq(), _) => col("modality")
-            case Field("value", _, Seq(), _) => col("value")
-            case f => bad(f, "label, modality, value")
-          })
-      case ("disease", "phenotypes") =>
-        // DiseaseHPOs {count, rows: [DiseaseHPO]} with the schema's
-        // page: argument (opentargets.schema:224-228) — rows carry the
-        // phenotypeHPO entity (:283-285, HPO :727-739)
-        Conn(kg.phenotypes.filter(col("disease_id") === rootKey),
-          Seq(col("hpo_id")), hasRows = true, {
-            case f @ Field("phenotypeHPO", _, _, _) =>
-              entityStruct("phenotypeHPO", f.sel,
-                Map("id" -> col("hpo_id"), "name" -> col("hpo_name"),
-                  "description" -> col("hpo_desc"),
-                  "namespace" -> col("namespace")))
-            case f => bad(f, "phenotypeHPO")
-          })
-      case _ => throw ParseError(
-        s"unknown field '$name' on $entity — connections: " +
-          "disease.{knownDrugs,associatedTargets,phenotypes,evidences}, " +
-          "target.{knownDrugs,associatedDiseases,pathways,tractability," +
-          "similarEntities}, drug.{linkedTargets,mechanismsOfAction}")
+  // ------------------------------------------------------------------
+  // Executor: connections
+  // ------------------------------------------------------------------
+
+  /** Build the connection's single-row (one column) relation. */
+  private def connectionDf(kg: KnowledgeGraph, e: Entity, f: Field,
+                           rootKey: String): DataFrame = (e.key, f.name) match {
+    case ("drug", "mechanismsOfAction") => mechanismsConnection(kg, f, rootKey)
+    case ("disease", "evidences") => evidencesConnection(kg, f, rootKey)
+    case ("target", "similarEntities") =>
+      similarEntitiesConnection(kg, f, rootKey)
+    case key => flatConnection(kg, s"${e.key}.${f.name}", Conns(key), f, rootKey)
+  }
+
+  /** A [[Conn]] connection. Each selected connection FILTERS its edge
+    * relation by the root key BEFORE aggregating (partition-prunable
+    * at scale, and an empty connection yields count=0/rows=[] without
+    * an outer-join null dance). `count` is the TOTAL (server
+    * semantics), aggregated join-free; rows rank-limit to the
+    * requested page before the fold — an omitted page is the default
+    * first page, never the whole connection.
+    *
+    * Engine-side score-argument pushdown for the association
+    * connections — arguments the reference schema declares
+    * (opentargets.schema:263-265 orderByScore; scoreThreshold as on
+    * :1459-1461) but its own client never pushes down
+    * (candidate_drugs.py:98-109 filters client-side AFTER paying the
+    * full fetch): `scoreThreshold` filters the edge relation BEFORE the
+    * rank-limited collect (and before `count`, which is therefore the
+    * FILTERED total), and `orderByScore: "asc" | "desc"` flips the rank
+    * order (desc is the server default).
+    */
+  private def flatConnection(kg: KnowledgeGraph, site: String, c: Conn,
+                             f: Field, rootKey: String): DataFrame = {
+    val threshold = f.args.get("scoreThreshold").map(unitArg("scoreThreshold", _))
+    val order = f.args.get("orderByScore").map {
+      case o @ ("asc" | "desc") => o
+      case o => throw ParseError(
+        s"""orderByScore must be "asc" or "desc", got '$o'""")
+    }
+    if ((threshold.nonEmpty || order.nonEmpty) && !c.scored) throw ParseError(
+      s"'$site' takes no score arguments — scoreThreshold " +
+        "and orderByScore apply to associatedTargets and associatedDiseases")
+    val pageArgs = Seq("page.index", "page.size", "size")
+    if (!c.paged) {
+      val extras = pageArgs.filter(f.args.contains)
+      if (extras.nonEmpty) throw ParseError(
+        s"'$site' takes no pagination arguments " +
+          s"(got ${extras.mkString(", ")}) — only knownDrugs, " +
+          "associatedTargets, associatedDiseases and phenotypes " +
+          "are paginated")
+    }
+    // after the targeted misplaced-score/pagination guards above
+    val allowed = (if (c.paged) pageArgs else Nil) ++
+      (if (c.scored) Seq("scoreThreshold", "orderByScore") else Nil)
+    onlyArgs(f.args, allowed.toSet, site,
+      if (allowed.isEmpty) "it takes no arguments"
+      else s"supported: ${allowed.sorted.mkString(", ")}")
+    val pg = if (c.paged) page(f.args).orDefault else Page(0, None)
+    val keys =
+      if (order.contains("asc")) Seq(col("score"), c.sortKeys.last) else c.sortKeys
+    def edges(names: Set[String]): DataFrame = {
+      val rel = joinEntities(kg, c.edges(kg).filter(col(c.rootCol) === rootKey),
+        c.row, names)
+      threshold.fold(rel)(t => rel.filter(col("score") >= t))
+    }
+    def rows(rowSite: String, sel: Seq[Field]): Column =
+      fold(keys, struct(selection(rowSite, c.row, sel)(subEntities): _*), pg.cut)
+    c.wrapper match {
+      case None => edges(f.sel.map(_.name).toSet).agg(rows(site, f.sel).as(f.out))
+      case Some(w) =>
+        val out = selection(site, Types(w), f.sel)()
+        // the sub-entity joins serve the UNION of every aliased rows
+        // selection; count-only queries join nothing
+        val rowsSels = f.sel.filter(_.name == "rows")
+        val flat = edges(rowsSels.flatMap(_.sel.map(_.name)).toSet)
+        val sides =
+          f.sel.filter(_.name == "count")
+            .map(g => edges(Set.empty).agg(count(lit(1)).as(g.out))) ++
+          rowsSels.map(g =>
+            pg.limit(flat, keys).agg(rows(s"$site rows", g.sel).as(g.out)))
+        assemble(sides, flat.sparkSession)(struct(out: _*).as(f.out))
     }
   }
 
@@ -768,117 +1130,63 @@ object GraphQl {
     */
   private def mechanismsConnection(kg: KnowledgeGraph, f: Field,
                                    rootKey: String): DataFrame = {
-    if (f.args.nonEmpty) throw ParseError(
-      s"unknown argument${if (f.args.size > 1) "s" else ""} " +
-        s"${f.args.keys.toSeq.sorted.mkString(", ")} on " +
-        "drug.mechanismsOfAction — it takes no arguments")
-    // every aliased `rows` selection, each with its OWN row/targets
-    // sub-selection (response key -> row fields) — per-alias payloads,
-    // the connection-rows discipline (first-wins would silently hand
-    // a second alias the first alias's columns)
-    val rowsSels: Seq[(String, Seq[Field])] = f.sel.collect {
-      case g @ Field("rows", _, sel, _) => g.out -> sel
-    }
-    rowsSels.foreach { case (_, sel) =>
-      if (sel.isEmpty) throw ParseError(
-        "'drug.mechanismsOfAction' rows need a selection")
-      sel.find(h => h.name == "targets" && h.sel.isEmpty).foreach { _ =>
-        throw ParseError(
-          "'drug.mechanismsOfAction' targets need a selection of target fields")
-      }
-    }
-    val outToIdx: Map[String, Int] =
-      rowsSels.map(_._1).zipWithIndex.toMap
-    val base = kg.mechanismRows.filter(col("drug_id") === rootKey)
+    val site = "drug.mechanismsOfAction"
+    onlyArgs(f.args, Set.empty, site, "it takes no arguments")
+    val rowsSels = f.sel.filter(_.name == "rows")
+    rowsSels.foreach(_.sel.find(h => h.name == "targets" && h.sel.isEmpty)
+      .foreach { _ => throw ParseError(
+        s"'$site' targets need a selection of target fields") })
     // the targets join pays only when some alias reads a non-id
     // target field (id is already on the edge relation) or
-    // uniqueTargetTypes needs the bioType facet; LEFT for resolver
-    // semantics, same as the flat connections
+    // uniqueTargetTypes needs the bioType facet
     val needTypes = f.sel.exists(_.name == "uniqueTargetTypes")
-    val joined = needTypes || rowsSels.exists(_._2.exists(h =>
-      h.name == "targets" && h.sel.exists(_.name != "id")))
+    val base = kg.mechanismRows.filter(col("drug_id") === rootKey)
     val flat =
-      if (!joined) base
-      else base.join(kg.targets.select(col("id").as("__t_id"),
-        col("approvedSymbol").as("__t_sym"), col("bioType").as("__t_bio")),
-        col("target_id") === col("__t_id"), "left")
-    // joined path: a target id the entity table lacks resolves to a
-    // NULL object (same contract as the flat connections' sub-entity
-    // fields); an id-only selection reads the edge column, which is
-    // non-null by construction (even when ANOTHER alias forced the
-    // join — the null guard applies only where the entity table is
-    // actually read)
-    def targetPayload(targetsSel: Seq[Field]): Column = {
-      def ts = entityStruct("target", targetsSel,
-        Map("id" -> col("target_id"), "approvedSymbol" -> col("__t_sym"),
-          "bioType" -> col("__t_bio")))
-      if (targetsSel.exists(_.name != "id"))
-        when(col("__t_id").isNotNull, ts)
-      else ts
+      if (needTypes || rowsSels.exists(_.sel.exists(h =>
+            h.name == "targets" && h.sel.exists(_.name != "id"))))
+        joinEntity(kg, base, Target)
+      else base
+    // an id-only selection reads the edge column, non-null by
+    // construction, even when ANOTHER alias forced the join — the
+    // null guard applies only where the entity table is actually read
+    def targets(ts: Seq[Field]): Column = {
+      val s = entityStruct(Target, ts)(n =>
+        if (n == "id") col("target_id") else col(joined(Target, n)))
+      if (ts.exists(_.name != "id")) when(col(joined(Target, "id")).isNotNull, s)
+      else s
     }
     // level 1: one sorted targets array PER rows alias that reads
-    // targets (each alias may select different target fields), plus
-    // the group's bioType set when uniqueTargetTypes reads it
-    val targetArrays: Seq[Column] = rowsSels.zipWithIndex.flatMap {
-      case ((_, sel), i) =>
-        sel.find(_.name == "targets").map(_.sel).filter(_.nonEmpty).map {
-          ts =>
-            transform(sort_array(collect_list(struct(
-              col("target_id").as("__k0"), targetPayload(ts).as("__p")))),
-              x => x.getField("__p")).as(s"__targets_$i")
-        }
-    }
-    val lvl1 = targetArrays ++
-      (if (needTypes) Seq(collect_set(col("__t_bio")).as("__ttypes"))
-       else Nil)
-    // groups still need folding when nothing reads targets/types
-    val lvl1Full =
-      if (lvl1.nonEmpty) lvl1 else Seq(count(lit(1)).as("__gn"))
+    // targets, plus the group's bioType set when uniqueTargetTypes
+    // reads it; groups still fold when nothing does
+    val lvl1 = rowsSels.zipWithIndex.flatMap { case (g, i) =>
+      g.sel.find(_.name == "targets").map(t =>
+        fold(Seq(col("target_id")), targets(t.sel)).as(s"__targets_$i"))
+    } ++ (if (needTypes) Seq(collect_set(col(joined(Target, "bioType")))
+      .as("__ttypes")) else Nil)
+    val lvl1Full = if (lvl1.nonEmpty) lvl1 else Seq(count(lit(1)).as("__gn"))
     val grouped = flat.groupBy(col("mechanismOfAction"), col("actionType"))
       .agg(lvl1Full.head, lvl1Full.tail: _*)
-    def rowPayload(out: String, rowsSel: Seq[Field]): Column =
-      struct(rowsSel.map {
-        case g @ Field("mechanismOfAction", _, Seq(), _) =>
-          col("mechanismOfAction").as(g.out)
-        case g @ Field("actionType", _, Seq(), _) =>
-          col("actionType").as(g.out)
-        case g @ Field("targets", _, _, _) =>
-          col(s"__targets_${outToIdx(out)}").as(g.out)
-        case g @ Field("__typename", _, _, _) =>
-          noSubSel(g); lit("MechanismOfActionRow").as(g.out)
-        case g => throw ParseError(
-          s"unknown field '${g.name}' on drug.mechanismsOfAction rows — " +
-            "supported: mechanismOfAction, actionType, targets")
-      }: _*)
-    // level 2: collect the row structs, deterministically ordered by
-    // the mechanism label (unique per group — actionType is a
-    // function of it); one fold per rows alias, named by its out
-    val parts0 = f.sel.filterNot(_.name == "__typename").map {
-      case g @ Field("rows", _, sel, _) =>
-        transform(sort_array(collect_list(struct(
-          col("mechanismOfAction").as("__k0"),
-          rowPayload(g.out, sel).as("__p")))),
-          x => x.getField("__p")).as(g.out)
-      case g @ Field("uniqueActionTypes", _, Seq(), _) =>
-        sort_array(collect_set(col("actionType"))).as(g.out)
-      case g @ Field("uniqueTargetTypes", _, Seq(), _) =>
-        sort_array(array_distinct(flatten(collect_list(col("__ttypes")))))
-          .as(g.out)
-      case g => throw ParseError(
-        s"unknown field '${g.name}' on drug.mechanismsOfAction — " +
-          "supported: rows, uniqueActionTypes, uniqueTargetTypes")
+    // level 2: the row structs, ordered by the mechanism label
+    // (unique per group — actionType is a function of it), one fold
+    // per rows alias
+    val out = selection(site, Types("MechanismsOfAction"), f.sel)()
+    val parts = f.sel.filter(_.name != "__typename").map { g =>
+      (g.name match {
+        case "rows" =>
+          val i = rowsSels.indexOf(g)
+          fold(Seq(col("mechanismOfAction")), struct(selection(s"$site rows",
+            Types("MechanismOfActionRow"), g.sel) {
+            case h if h.name == "targets" => col(s"__targets_$i")
+          }: _*))
+        case "uniqueActionTypes" => sort_array(collect_set(col("actionType")))
+        case _ =>
+          sort_array(array_distinct(flatten(collect_list(col("__ttypes")))))
+      }).as(g.out)
     }
-    f.sel.find(_.name == "__typename").foreach(noSubSel)
-    if (f.sel.isEmpty) throw ParseError(
-      "'drug.mechanismsOfAction' needs a selection")
     // a __typename-only selection still needs one aggregate to fold
     // the grouped relation to a single row
-    val parts = if (parts0.nonEmpty) parts0 else Seq(count(lit(1)).as("__n"))
-    grouped.agg(parts.head, parts.tail: _*)
-      .select(struct(f.sel.map { g =>
-        (if (g.name == "__typename") lit("MechanismsOfAction")
-         else col(g.out)).as(g.out)
-      }: _*).as(f.out))
+    val aggs = if (parts.nonEmpty) parts else Seq(count(lit(1)).as("__n"))
+    grouped.agg(aggs.head, aggs.tail: _*).select(struct(out: _*).as(f.out))
   }
 
   /** `disease.evidences(ensemblIds:, size:)` — the Evidences
@@ -896,97 +1204,28 @@ object GraphQl {
     */
   private def evidencesConnection(kg: KnowledgeGraph, f: Field,
                                   rootKey: String): DataFrame = {
-    val extra = f.args.keySet -- Set("ensemblIds", "size")
-    if (extra.nonEmpty) throw ParseError(
-      s"unknown argument${if (extra.size > 1) "s" else ""} " +
-        s"${extra.toSeq.sorted.mkString(", ")} on disease.evidences — " +
-        "supported: ensemblIds, size")
-    val rawArg = f.args.getOrElse("ensemblIds", throw ParseError(
+    val site = "disease.evidences"
+    onlyArgs(f.args, Set("ensemblIds", "size"), site,
+      "supported: ensemblIds, size")
+    val ids = idList(f.args.getOrElse("ensemblIds", throw ParseError(
       "disease.evidences requires the ensemblIds argument " +
-        "(opentargets.schema:230-240)"))
-    // empty-entry before empty-list, the goTerms/mapIds discipline
-    val rawAll = splitList(rawArg)
-    if (rawAll.size > 1 && rawAll.exists(_.isEmpty))
-      throw ParseError("ensemblIds must not contain empty strings")
-    val ids = rawAll.filter(_.nonEmpty)
-    if (ids.isEmpty) throw ParseError("ensemblIds must not be empty")
-    val dup = ids.groupBy(identity).collect { case (t, ts) if ts.size > 1 => t }
-    if (dup.nonEmpty) throw ParseError(
-      s"duplicate ensemblIds: ${dup.toSeq.sorted.mkString(", ")}")
-    if (ids.size > MaxMapTerms) throw ParseError(
-      s"disease.evidences serves at most $MaxMapTerms ensemblIds per " +
-        s"request, got ${ids.size} — join against an id relation for " +
-        "batch retrieval")
-    if (f.sel.isEmpty) throw ParseError(
-      "'disease.evidences' needs a selection (count and/or rows)")
-    f.sel.foreach {
-      case Field("count", _, Seq(), _) => ()
-      case Field("rows", _, _, _) => ()
-      case g @ Field("__typename", _, _, _) => noSubSel(g)
-      case g => throw ParseError(
-        s"unknown field '${g.name}' on disease.evidences — " +
-          "supported: count, rows")
-    }
-    val size = intArg(f.args, "size").map(math.min(_, MaxPageSize))
-      .getOrElse(DefaultPageSize)
-    val flat0 = kg.evidenceRows.filter(col("disease_id") === rootKey &&
+        "(opentargets.schema:230-240)")), "ensemblIds", site)
+    val out = selection(site, Types("Evidences"), f.sel)()
+    val pg = page(f.args).orDefault
+    val flat = kg.evidenceRows.filter(col("disease_id") === rootKey &&
       col("target_id").isin(ids: _*))
-    val sortKeys = Seq(negate(col("score")), col("id"))
+    val keys = Seq(negate(col("score")), col("id"))
+    val row = Types("Evidence")
     // one aggregate per aliased rows selection, each with its OWN
-    // selection-driven sub-entity joins (the connectionDf discipline)
-    def rowsDfFor(sel: Seq[Field], out: String): DataFrame = {
-      if (sel.isEmpty) throw ParseError(
-        "'disease.evidences' rows need a selection")
-      val names = sel.map(_.name).toSet
-      var rel = flat0
-      if (names("target"))
-        rel = rel.join(kg.targets.select(col("id").as("__t_id"),
-          col("approvedSymbol").as("__t_sym"), col("bioType").as("__t_bio")),
-          col("target_id") === col("__t_id"), "left")
-      if (names("disease"))
-        rel = rel.join(kg.diseases.select(col("id").as("__s_id"),
-          col("name").as("__s_name")),
-          col("disease_id") === col("__s_id"), "left")
-      val payload = struct(sel.map { g =>
-        (g.name match {
-          case "__typename" => noSubSel(g); lit("Evidence")
-          case "id" | "score" =>
-            if (g.sel.nonEmpty) throw ParseError(
-              s"'evidences rows.${g.name}' is a scalar — drop its selection")
-            col(g.name)
-          case "target" => when(col("__t_id").isNotNull,
-            entityStruct("target", g.sel,
-              Map("id" -> col("__t_id"), "approvedSymbol" -> col("__t_sym"),
-                "bioType" -> col("__t_bio"))))
-          case "disease" => when(col("__s_id").isNotNull,
-            entityStruct("disease", g.sel,
-              Map("id" -> col("__s_id"), "name" -> col("__s_name"))))
-          case other => throw ParseError(
-            s"unknown field '$other' on evidences rows — supported: " +
-              "id, score, target, disease")
-        }).as(g.out)
-      }: _*)
-      val keyed = struct(sortKeys.zipWithIndex.map {
-        case (k, i) => k.as(s"__k$i") } :+ payload.as("__p"): _*)
-      rel.sort(sortKeys: _*).limit(size)
-        .agg(transform(sort_array(collect_list(keyed)),
-          x => x.getField("__p")).as(out))
-    }
-    val countDf: Option[DataFrame] =
-      if (!f.sel.exists(_.name == "count")) None
-      else Some(flat0.agg(count(lit(1)).as("count")))
-    val rowsDfs = f.sel.collect {
-      case g @ Field("rows", _, sel, _) => rowsDfFor(sel, g.out)
-    }
-    val sides = countDf.toSeq ++ rowsDfs
-    val combined =
-      if (sides.isEmpty) flat0.sparkSession.range(1).toDF()
-      else sides.reduce((a, b) => a.crossJoin(broadcast(b)))
-    combined.select(struct(f.sel.map { g =>
-      (if (g.name == "__typename") lit("Evidences")
-       else if (g.name == "count") col("count")
-       else col(g.out)).as(g.out)
-    }: _*).as(f.out))
+    // selection-driven sub-entity joins
+    val sides =
+      f.sel.filter(_.name == "count").map(g => flat.agg(count(lit(1)).as(g.out))) ++
+      f.sel.filter(_.name == "rows").map { g =>
+        val rel = joinEntities(kg, flat, row, g.sel.map(_.name).toSet)
+        val payload = struct(selection("evidences rows", row, g.sel)(subEntities): _*)
+        pg.limit(rel, keys).agg(fold(keys, payload).as(g.out))
+      }
+    assemble(sides, flat.sparkSession)(struct(out: _*).as(f.out))
   }
 
   /** `target.similarEntities(threshold:, size:, entityNames:)` — the
@@ -1014,28 +1253,24 @@ object GraphQl {
     */
   private def similarEntitiesConnection(kg: KnowledgeGraph, f: Field,
                                         rootKey: String): DataFrame = {
-    val extra = f.args.keySet -- Set("threshold", "size", "entityNames")
-    if (extra.nonEmpty) throw ParseError(
-      s"unknown argument${if (extra.size > 1) "s" else ""} " +
-        s"${extra.toSeq.sorted.mkString(", ")} on target.similarEntities " +
-        "— supported: threshold, size, entityNames")
+    onlyArgs(f.args, Set("threshold", "size", "entityNames"),
+      "target.similarEntities", "supported: threshold, size, entityNames")
     f.args.get("entityNames").foreach { raw =>
       val names = splitList(raw).filter(_.nonEmpty)
-      if (names != Seq("target")) throw ParseError(
+      if (names != Seq(Target.key)) throw ParseError(
         "target.similarEntities serves the target similarity space — " +
           s"""entityNames must be ["target"], got [${names.mkString(", ")}]""")
     }
-    val threshold: Option[Double] = f.args.get("threshold").map { s =>
-      val v = s.toDoubleOption.getOrElse(throw ParseError(
-        s"threshold must be a number, got '$s'"))
-      if (v < 0.0 || v > 1.0) throw ParseError(
-        s"threshold must be in [0, 1], got $v")
-      v
-    }
-    val size = intArg(f.args, "size").map(math.min(_, MaxPageSize))
-      .getOrElse(DefaultPageSize)
-    if (f.sel.isEmpty) throw ParseError(
-      "'target.similarEntities' needs a selection")
+    val threshold = f.args.get("threshold").map(unitArg("threshold", _))
+    val size = page(f.args).size.getOrElse(DefaultPageSize)
+    val payload = struct(selection("similarEntities", Types("Similarity"), f.sel) {
+      case g if g.name == "category" => lit(Target.key)
+      case g if g.name == "object" =>
+        if (g.sel.isEmpty) throw ParseError(
+          "'object' is a union — select '__typename' and/or " +
+            "inline-fragment arms ('... on Target')")
+        when(col("id").isNotNull, objectField(g))
+    }: _*)
     val pk = rootKey.stripPrefix("TGT_").toLongOption.getOrElse(
       throw ParseError("target.similarEntities needs a TGT_<n> root id, " +
         s"got '$rootKey'"))
@@ -1052,413 +1287,41 @@ object GraphQl {
         emb.filter(lit(false)).select(col("vec_id"),
           lit(0.0).as("cosine"))
     }
-    val needObject = f.sel.exists(_.name == "object")
     val withId = base.select(col("vec_id"),
       concat(lit("TGT_"), col("vec_id")).as("__sim_id"), col("cosine"))
-    // objectField's union resolver reads the widenedSearchRel column
-    // layout (id/name/entity + facet columns) — shape the resolution
-    // join to it; every non-target arm then resolves NULL through the
-    // entity guard, and the Drug facet columns are typed nulls
+    // objectField reads the searchRel layout: the resolution join
+    // brings the Target arm's columns, and every other arm's are
+    // typed nulls (those arms resolve NULL through the entity guard)
     val rel =
-      if (!needObject) withId
-      else withId.join(kg.targets.select(col("id"),
-          col("approvedSymbol").as("name"), col("bioType").as("__bio")),
-          col("__sim_id") === col("id"), "left")
-        .withColumn("entity", when(col("id").isNotNull, lit("target")))
-        .withColumn("__syn", lit(null).cast("array<string>"))
-        .withColumn("__dtype", lit(null).cast("string"))
-        .withColumn("__appr", lit(null).cast("boolean"))
-        .withColumn("__maxph", lit(null).cast("double"))
-    val payload = struct(f.sel.map { g =>
-      (g.name match {
-        case "__typename" => noSubSel(g); lit("Similarity")
-        case "id" | "category" | "score" =>
-          if (g.sel.nonEmpty) throw ParseError(
-            s"'similarEntities.${g.name}' is a scalar — drop its selection")
-          g.name match {
-            case "id" => col("__sim_id")
-            case "category" => lit("target")
-            case _ => col("cosine")
-          }
-        case "object" =>
-          if (g.sel.isEmpty) throw ParseError(
-            "'object' is a union — select '__typename' and/or " +
-              "inline-fragment arms ('... on Target')")
-          when(col("id").isNotNull, objectField(g))
-        case other => throw ParseError(
-          s"unknown field '$other' on similarEntities — supported: " +
-            "id, category, score, object")
-      }).as(g.out)
-    }: _*)
+      if (!f.sel.exists(_.name == "object")) withId
+      else {
+        val arm = Target.scan(kg).select(Seq(col("id"), col(Target.label).as("name")) ++
+          Target.extras.map { case (x, _) => col(x).as(joined(Target, x)) }: _*)
+        val resolved = withId.join(arm, col("__sim_id") === col("id"), "left")
+          .withColumn("entity", when(col("id").isNotNull, lit(Target.key)))
+        val nulls = for (e <- Entities if e != Target; (x, t) <- e.extras)
+          yield joined(e, x) -> t
+        nulls.foldLeft(resolved) { case (d, (c, t)) => d.withColumn(c, lit(null).cast(t)) }
+      }
     // numeric-id sort keys end-to-end: the fold re-sorts on the SAME
     // (rounded-cosine, vec_id) order bruteTopK ranked with, so a
     // rounded-cosine tie cannot reorder between the cut and the fold
-    val keyed = struct(negate(col("cosine")).as("__k0"),
-      col("vec_id").as("__k1"), payload.as("__p"))
-    rel.agg(transform(sort_array(collect_list(keyed)),
-      x => x.getField("__p")).as(f.out))
+    rel.agg(fold(Seq(negate(col("cosine")), col("vec_id")), payload).as(f.out))
   }
 
-  /** Connections that declare `page: Pagination` in the reference
-    * schema: knownDrugs (opentargets.schema:243-246, 429-432,
-    * 1475-1478), disease.associatedTargets (:248-268) and
-    * target.associatedDiseases (:1480-1483). The other connections —
-    * linkedTargets (:447), mechanismsOfAction (:423), pathways
-    * (:1202) — are bare (per-entity-bounded) lists there and take no
-    * pagination arguments.
-    */
-  private val Paginable: Set[(String, String)] = Set(
-    ("disease", "knownDrugs"), ("target", "knownDrugs"),
-    ("disease", "associatedTargets"), ("target", "associatedDiseases"),
-    ("disease", "phenotypes"))
+  // ------------------------------------------------------------------
+  // Executor: roots
+  // ------------------------------------------------------------------
 
-  /** Server-parity default page size for [[Paginable]] connections:
-    * the endpoint never returns an unbounded connection — an omitted
-    * `page` serves the FIRST page while `count` stays the connection
-    * total. Doubles as the engine's scale guard: a hub entity's
-    * crawl-sized edge list is never collected into one aggregation
-    * buffer by an unpaginated query.
+  /** A hit of the `search` / `mapIds` roots: scalar hit fields plus
+    * the union-typed `object` — the hit AS its full entity. `site`
+    * names the root whose hits these are ("search hits", "mapIds
+    * mapping hits"), so an error points at the root the user wrote.
     */
-  val DefaultPageSize: Int = 25
-
-  /** Clamp for an explicit `size` — the engine-side cap that keeps a
-    * single requested page (and its aggregation buffer) bounded.
-    */
-  val MaxPageSize: Int = 3000
-
-  private def intArg(args: Map[String, String], key: String): Option[Int] =
-    args.get(key).map { s =>
-      val n = s.toIntOption.getOrElse(
-        throw ParseError(s"$key must be an integer, got '$s'"))
-      if (n < 0) throw ParseError(s"$key must be >= 0, got $n")
-      n
-    }
-
-  /** Build the connection's single-row (one column) relation. */
-  private def connectionDf(kg: KnowledgeGraph, entity: String, f: Field,
-                           rootKey: String): DataFrame = {
-    if (entity == "drug" && f.name == "mechanismsOfAction")
-      return mechanismsConnection(kg, f, rootKey)
-    if (entity == "disease" && f.name == "evidences")
-      return evidencesConnection(kg, f, rootKey)
-    if (entity == "target" && f.name == "similarEntities")
-      return similarEntitiesConnection(kg, f, rootKey)
-    // field names the row selections reference, for selection-driven
-    // sub-entity joins: rows-wrapped connections read the UNION of
-    // every aliased `rows` selection (count-only queries join
-    // nothing), pathways its own
-    val allRowsSels = f.sel.filter(_.name == "rows")
-    val rowNames =
-      (if (allRowsSels.nonEmpty) allRowsSels.flatMap(_.sel.map(_.name))
-       else f.sel.map(_.name)).toSet
-    val c0 = conn(kg, entity, f.name, rootKey, rowNames)
-    // engine-side score-argument pushdown for the association
-    // connections — arguments the reference schema declares
-    // (opentargets.schema:263-265 orderByScore; scoreThreshold as on
-    // :1459-1461) but its own client never pushes down
-    // (candidate_drugs.py:98-109 filters client-side AFTER paying the
-    // full fetch): `scoreThreshold` filters the edge relation BEFORE
-    // the rank-limited collect (the pagination discipline — and
-    // before `count`, which is therefore the FILTERED connection
-    // total), and `orderByScore: "asc" | "desc"` flips the rank
-    // order (desc is the server default).
-    val ScoreArgConns: Set[(String, String)] = Set(
-      ("disease", "associatedTargets"), ("target", "associatedDiseases"))
-    val thresholdArg: Option[Double] = f.args.get("scoreThreshold").map { s =>
-      val v = s.toDoubleOption.getOrElse(throw ParseError(
-        s"scoreThreshold must be a number, got '$s'"))
-      if (v < 0.0 || v > 1.0) throw ParseError(
-        s"scoreThreshold must be in [0, 1], got $v")
-      v
-    }
-    val orderArg: Option[String] = f.args.get("orderByScore").map {
-      case o @ ("asc" | "desc") => o
-      case o => throw ParseError(
-        s"""orderByScore must be "asc" or "desc", got '$o'""")
-    }
-    if ((thresholdArg.nonEmpty || orderArg.nonEmpty) &&
-        !ScoreArgConns((entity, f.name))) throw ParseError(
-      s"'$entity.${f.name}' takes no score arguments — scoreThreshold " +
-        "and orderByScore apply to associatedTargets and associatedDiseases")
-    val c = {
-      val c1 = thresholdArg.fold(c0)(t =>
-        c0.copy(flat = c0.flat.filter(col("score") >= t)))
-      orderArg match {
-        case Some("asc") => c1.copy(
-          sortKeys = Seq(col("score"), c1.sortKeys.last))
-        case _ => c1
-      }
-    }
-    // the schema's pagination argument — `page: {index, size}`
-    // (opentargets.schema:1047-1050, index = 0-based page number) or
-    // the bare `size` shorthand; only [[Paginable]] connections take
-    // it (schema parity), and there an omitted page means the
-    // DEFAULT-sized first page, never the whole connection.
-    // `count` stays the TOTAL (server semantics), never the page's.
-    def intArg(key: String): Option[Int] = GraphQl.intArg(f.args, key)
-    val explicitSize: Option[Int] = intArg("page.size").orElse(intArg("size"))
-    if (!Paginable((entity, f.name))) {
-      val extras = Seq("page.index", "page.size", "size").filter(f.args.contains)
-      if (extras.nonEmpty) throw ParseError(
-        s"'$entity.${f.name}' takes no pagination arguments " +
-          s"(got ${extras.mkString(", ")}) — only knownDrugs, " +
-          "associatedTargets, associatedDiseases and phenotypes " +
-          "are paginated")
-    }
-    // schema parity on the ARGUMENT LIST, after the targeted
-    // misplaced-score/pagination guards above have had their say: an
-    // unknown (or typo'd) argument is a loud error — `scoreThreshhold:`
-    // silently serving the unfiltered connection is the quiet failure
-    // the parser's undeclared-binding check exists to prevent
-    locally {
-      val allowed =
-        (if (Paginable((entity, f.name)))
-           Set("page.index", "page.size", "size") else Set.empty[String]) ++
-        (if (ScoreArgConns((entity, f.name)))
-           Set("scoreThreshold", "orderByScore") else Set.empty[String]) ++
-        Set("scoreThreshold", "orderByScore", "page.index", "page.size",
-          "size").filter(f.args.contains)
-      // (the filter keeps misplaced-but-well-known keys out of THIS
-      // error — the dedicated guards above already rejected them with
-      // the more instructive message)
-      val unknown = f.args.keySet.diff(allowed)
-      if (unknown.nonEmpty) throw ParseError(
-        s"unknown argument${if (unknown.size > 1) "s" else ""} " +
-          s"${unknown.toSeq.sorted.mkString(", ")} on $entity.${f.name}" +
-          (if (allowed.isEmpty) " — it takes no arguments"
-           else s" — supported: ${allowed.toSeq.sorted.mkString(", ")}"))
-    }
-    val index: Int = intArg("page.index").getOrElse(0)
-    if (index > 0 && explicitSize.isEmpty) throw ParseError(
-      "page.index needs page.size")
-    val size: Option[Int] =
-      if (!Paginable((entity, f.name))) None
-      else explicitSize.map(math.min(_, MaxPageSize))
-        .orElse(Some(DefaultPageSize))
-    val (connType, rowType) = ConnTypes.getOrElse((entity, f.name), ("", ""))
-    def rowsArray(sel: Seq[Field]): Column = {
-      if (sel.isEmpty) throw ParseError(
-        s"'$entity.${f.name}' rows need a selection")
-      val payload = struct(sel.map { g =>
-        (if (g.name == "__typename") { noSubSel(g); lit(rowType) }
-         else c.rowField(g)).as(g.out)
-      }: _*)
-      // sort keys ride in front of the payload for sort_array, then
-      // drop away — deterministic order with one aggregation
-      val keyed = struct(c.sortKeys.zipWithIndex.map {
-        case (k, i) => k.as(s"__k$i") } :+ payload.as("__p"): _*)
-      val sorted = sort_array(collect_list(keyed))
-      // Long math then a clamp: index*n+1 can overflow Int, and a
-      // negative start would make slice() count from the END of the
-      // array — returning the wrong rows instead of the correct
-      // empty page. Spark arrays hold < Int.MaxValue elements, so a
-      // clamped start is always past the end.
-      val page = size.fold(sorted) { n =>
-        val start = math.min(index.toLong * n + 1L, Int.MaxValue.toLong).toInt
-        slice(sorted, start, n)
-      }
-      transform(page, x => x.getField("__p"))
-    }
-    /** Rows aggregate over the rank-LIMITED relation when a page size
-      * is in play: sort on the connection's keys + limit
-      * (index+1)·size plans as TakeOrderedAndProject — per-partition
-      * top-k, then a merge of only k·partitions rows — so a hub key's
-      * edge list never lands in one reducer's collect_list buffer.
-      * The collect+sort_array+slice inside [[rowsArray]] then works
-      * on at most (index+1)·size rows.
-      */
-    def rowsDfFor(sel: Seq[Field], out: String): DataFrame = {
-      val src = size.fold(c.flat) { n =>
-        val limitN = math.min((index + 1).toLong * n, Int.MaxValue.toLong).toInt
-        c.flat.sort(c.sortKeys: _*).limit(limitN)
-      }
-      src.agg(rowsArray(sel).as(out))
-    }
-    if (c.hasRows) {
-      f.sel.foreach {
-        case Field("count", _, Seq(), _) => ()
-        case Field("rows", _, _, _) => ()
-        case g @ Field("__typename", _, _, _) => noSubSel(g)
-        case g => throw ParseError(
-          s"unknown field '${g.name}' on $entity.${f.name} — supported: count, rows")
-      }
-      if (f.sel.isEmpty) throw ParseError(
-        s"'$entity.${f.name}' needs a selection (count and/or rows)")
-      // `count` aggregates the UNlimited edge relation (it is the
-      // connection TOTAL), built join-free — the sub-entity joins
-      // only serve row fields, and Catalyst cannot drop them itself
-      val countDf: Option[DataFrame] =
-        if (!f.sel.exists(_.name == "count")) None
-        else {
-          val base = conn(kg, entity, f.name, rootKey, Set.empty).flat
-          Some(thresholdArg.fold(base)(t => base.filter(col("score") >= t))
-            .agg(count(lit(1)).as("count")))
-        }
-      // ONE aggregate per aliased `rows` selection, each named by its
-      // response key — `a: rows { phase } b: rows { drug { id } }`
-      // serves each alias ITS OWN payload (the noDuplicates check
-      // guarantees distinct outs; first-wins here would silently hand
-      // b alias a's columns)
-      val rowsDfs: Seq[DataFrame] = f.sel.collect {
-        case g @ Field("rows", _, sel, _) => rowsDfFor(sel, g.out)
-      }
-      // all sides are 1-row relations; the cross joins are broadcasts
-      val sides = countDf.toSeq ++ rowsDfs
-      val combined =
-        if (sides.isEmpty)
-          // a __typename-only selection: nothing to aggregate, one
-          // constant row
-          c.flat.sparkSession.range(1).toDF()
-        else sides.reduce((a, b) => a.crossJoin(broadcast(b)))
-      combined.select(struct(f.sel.map { g =>
-        (if (g.name == "__typename") lit(connType)
-         else if (g.name == "count") col("count")
-         else col(g.out)).as(g.out)
-      }: _*).as(f.out))
-    } else
-      c.flat.agg(rowsArray(f.sel).as(f.out))
-  }
-
-  /** The `search(queryString:, entityNames:, page:)` root
-    * (/root/reference/opentargets_query.py:7-13; the page argument is
-    * opentargets.schema:1151-1159): case-insensitive substring match
-    * over the selected entity tables' display names, hits
-    * deterministically ordered (name, id) — the engine-side stand-in
-    * for the server's relevance order. The substring scan is the
-    * server's own semantics; `operators.InvertedIndex` is this
-    * engine's indexed scale path for the same need.
-    *
-    * With `page`/`size` present, hits are rank-limited BEFORE the
-    * array fold (sort+limit → TakeOrderedAndProject, the connection
-    * discipline) and `total` stays the full match count. The
-    * unpaginated form returns every hit — the match set is bounded by
-    * the entity DIMENSION tables (not fact-scale), and the reference
-    * scripts consume `hits[0]` from exactly this shape.
-    */
-  /** The hit payload of the `search` root: scalar hit fields plus
-    * the union-typed `object` field (the hit AS its full entity —
-    * `SearchResult.object: EntityUnionType`,
-    * opentargets.schema:502,1290), selected through inline-fragment
-    * arms. Per SURVEY §1.2's union encoding (Spark has no native
-    * union type), `object` resolves to a struct of the union TAG
-    * (`__typename`, discriminating on the hit's entity kind) plus
-    * one NULLABLE struct per selected arm, non-null only on rows of
-    * that type — the shape an Apollo-generated client's
-    * `...on`-switch reads directly.
-    */
-  /** Loud rejection of arguments on a field that takes none — the
-    * argument-list strictness the connection sites already enforce,
-    * applied to the search-family sub-fields (a typo'd `hits(size:)`
-    * silently ignored would be the quiet failure this dialect never
-    * allows).
-    */
-  private def noArgs(f: Field, where: String): Field = {
-    if (f.args.nonEmpty) throw ParseError(
-      s"'$where.${f.name}' takes no arguments, got " +
-        f.args.keys.toSeq.sorted.mkString(", "))
-    f
-  }
-
-  /** `where` names the root whose hits these are ("search hits",
-    * "mapIds mapping hits") — the noArgs pattern, so a mapIds user's
-    * empty-selection error does not point at the search root.
-    */
-  private def hitStruct(sel: Seq[Field], where: String): Column = {
-    if (sel.isEmpty) throw ParseError(s"$where need a selection")
-    struct(sel.map { f =>
-      (f.name match {
-        case "__typename" => noSubSel(f); lit("SearchResult")
-        case "object" => objectField(f)
-        case "id" | "name" | "entity" =>
-          if (f.sel.nonEmpty) throw ParseError(
-            s"'hit.${f.name}' is a scalar — drop its selection")
-          col(f.name)
-        case other => throw ParseError(
-          s"unknown field '$other' on $where — supported: " +
-            "id, name, entity, object")
-      }).as(f.out)
+  private def hitStruct(sel: Seq[Field], site: String): Column =
+    struct(selection(site, Types("SearchResult"), sel) {
+      case g if g.name == "object" => objectField(g)
     }: _*)
-  }
-
-  private def objectField(f: Field): Column = {
-    if (f.args.nonEmpty) throw ParseError("'object' takes no arguments")
-    if (f.sel.isEmpty) throw ParseError(
-      "'object' is a union — select '__typename' and/or inline-fragment " +
-        "arms ('... on Target | Drug | Disease')")
-    struct(f.sel.map { g =>
-      (if (g.name == "__typename") {
-        noSubSel(g)
-        when(col("entity") === "disease", lit("Disease"))
-          .when(col("entity") === "target", lit("Target"))
-          .otherwise(lit("Drug"))
-      } else if (g.name.startsWith(InlineMark)) {
-        val tpe = g.name.stripPrefix(InlineMark)
-        val (key, fields) = tpe match {
-          case "Disease" => ("disease",
-            Map("id" -> col("id"), "name" -> col("name")))
-          case "Target" => ("target",
-            Map("id" -> col("id"), "approvedSymbol" -> col("name"),
-              "bioType" -> col("__bio")))
-          case "Drug" => ("drug",
-            Map("id" -> col("id"), "name" -> col("name"),
-              "synonyms" -> col("__syn"), "drugType" -> col("__dtype"),
-              "isApproved" -> col("__appr"),
-              "maximumClinicalTrialPhase" -> col("__maxph")))
-          case other => throw ParseError(
-            s"unknown type condition '... on $other' — EntityUnionType " +
-              "covers Target, Drug and Disease (opentargets.schema:502)")
-        }
-        when(col("entity") === key, entityStruct(key, g.sel, fields))
-      } else throw ParseError(
-        "'object' is a union — its members' fields are selected via " +
-          "inline-fragment arms ('... on Drug { ... }') or " +
-          s"'__typename', got '${g.name}'")
-      ).as(g.out)
-    }: _*)
-  }
-
-  /** The search hit relation (id, name, entity) over the selected
-    * entity tables, WIDENED selection-driven for the union `object`
-    * field: the scan pays for an arm's entity columns only when some
-    * hits alias actually selects them (bioType is one dimension
-    * column; the Drug facet block imports drugDetails' edge rollup,
-    * so it joins in only when an arm reads past id/name). Shared by
-    * the search and mapIds roots.
-    */
-  private def widenedSearchRel(kg: KnowledgeGraph, entities: Seq[String],
-                               objSels: Seq[Field]): DataFrame = {
-    def armFields(tpe: String): Set[String] = objSels.flatMap(_.sel)
-      .filter(_.name == InlineMark + tpe).flatMap(_.sel.map(_.name)).toSet
-    val needBio = armFields("Target")("bioType")
-    val needDrugDetails =
-      (armFields("Drug") -- Set("id", "name", "__typename")).nonEmpty
-    val nullDetails = Seq(
-      lit(null).cast("array<string>").as("__syn"),
-      lit(null).cast("string").as("__dtype"),
-      lit(null).cast("boolean").as("__appr"),
-      lit(null).cast("double").as("__maxph"))
-    def extras(bio: Option[Column], details: Option[Seq[Column]]): Seq[Column] =
-      (if (needBio)
-         Seq(bio.getOrElse(lit(null).cast("string")).as("__bio")) else Nil) ++
-      (if (needDrugDetails) details.getOrElse(nullDetails) else Nil)
-    entities.map {
-      case "disease" => kg.diseases
-        .select(Seq(col("id"), col("name"), lit("disease").as("entity")) ++
-          extras(None, None): _*)
-      case "target" => kg.targets
-        .select(Seq(col("id"), col("approvedSymbol").as("name"),
-          lit("target").as("entity")) ++
-          extras(Some(col("bioType")), None): _*)
-      case "drug" =>
-        val src = if (needDrugDetails) kg.drugDetails else kg.drugs
-        src.select(Seq(col("id"), col("name"), lit("drug").as("entity")) ++
-          extras(None, Some(Seq(col("synonyms").as("__syn"),
-            col("drugType").as("__dtype"), col("isApproved").as("__appr"),
-            col("maximumClinicalTrialPhase").as("__maxph")))): _*)
-      case other => throw ParseError(
-        s"unknown entity '$other' in entityNames — supported: disease, target, drug")
-    }.reduce(_.unionByName(_))
-  }
 
   /** The `aggregations` field of SearchResults / MappingResults
     * (`SearchResultAggs`, opentargets.schema:1304-1312): total + one
@@ -1471,163 +1334,76 @@ object GraphQl {
     */
   private def aggregationsDf(rel: DataFrame, f: Field): DataFrame = {
     if (f.args.nonEmpty) throw ParseError("'aggregations' takes no arguments")
-    if (f.sel.isEmpty) throw ParseError(
-      "'aggregations' needs a selection — total and/or entities")
-    def catStruct(sel: Seq[Field]): Column = {
-      if (sel.isEmpty) throw ParseError(
-        "'aggregations' categories need a selection")
-      struct(sel.map { c =>
-        (c.name match {
-          case "__typename" => noSubSel(c); lit("SearchResultAggCategory")
-          case "name" | "total" =>
-            if (c.sel.nonEmpty) throw ParseError(
-              s"'aggregations categories.${c.name}' is a scalar — drop its selection")
-            if (c.name == "name") col("entity") else col("__n")
-          case other => throw ParseError(
-            s"unknown field '$other' on aggregations categories — " +
-              "supported: name, total")
-        }).as(c.out)
-      }: _*)
-    }
-    def entStruct(sel: Seq[Field]): Column = {
-      if (sel.isEmpty) throw ParseError(
-        "'aggregations' entities need a selection")
-      struct(sel.map { e =>
-        (e.name match {
-          case "__typename" => noSubSel(e); lit("SearchResultAggEntity")
-          case "name" =>
-            if (e.sel.nonEmpty) throw ParseError(
-              "'aggregations entities.name' is a scalar — drop its selection")
-            col("entity")
-          case "total" =>
-            if (e.sel.nonEmpty) throw ParseError(
-              "'aggregations entities.total' is a scalar — drop its selection")
-            col("__n")
-          case "categories" => array(catStruct(e.sel))
-          case other => throw ParseError(
-            s"unknown field '$other' on aggregations entities — " +
-              "supported: name, total, categories")
-        }).as(e.out)
-      }: _*)
+    val out = selection("aggregations", Types("SearchResultAggs"), f.sel) {
+      case g if g.name == "total" => coalesce(col(g.out), lit(0L))
     }
     val grouped = rel.groupBy(col("entity")).agg(count(lit(1)).as("__n"))
-    val parts0 = f.sel.filterNot(_.name == "__typename").map {
-      case g @ Field("total", _, Seq(), _) => sum(col("__n")).as(g.out)
-      case g @ Field("entities", _, sel, _) =>
-        transform(sort_array(collect_list(struct(
-          col("entity").as("__k0"), entStruct(sel).as("__p")))),
-          x => x.getField("__p")).as(g.out)
-      case g => throw ParseError(
-        s"unknown field '${g.name}' on aggregations — supported: " +
-          "total, entities")
+    val parts = f.sel.collect {
+      case g if g.name == "total" => sum(col("__n")).as(g.out)
+      case g if g.name == "entities" =>
+        fold(Seq(col("entity")), struct(selection("aggregations entities",
+          Types("SearchResultAggEntity"), g.sel) {
+          case e if e.name == "categories" => array(struct(selection(
+            "aggregations categories", Types("SearchResultAggCategory"),
+            e.sel)(): _*))
+        }: _*)).as(g.out)
     }
-    f.sel.find(_.name == "__typename").foreach(noSubSel)
-    val parts = if (parts0.nonEmpty) parts0 else Seq(count(lit(1)).as("__c"))
-    grouped.agg(parts.head, parts.tail: _*)
-      .select(struct(f.sel.map { g =>
-        (if (g.name == "__typename") lit("SearchResultAggs")
-         else if (g.name == "total") coalesce(col(g.out), lit(0L))
-         else col(g.out)).as(g.out)
-      }: _*).as(f.out))
+    val aggs = if (parts.nonEmpty) parts else Seq(count(lit(1)).as("__c"))
+    grouped.agg(aggs.head, aggs.tail: _*).select(struct(out: _*).as(f.out))
   }
 
+  /** The `search(queryString:, entityNames:, page:)` root
+    * (/root/reference/opentargets_query.py:7-13; the page argument is
+    * opentargets.schema:1151-1159): case-insensitive substring match
+    * over the selected entity tables' display names, hits
+    * deterministically ordered (name, id) — the engine-side stand-in
+    * for the server's relevance order. The substring scan is the
+    * server's own semantics; `operators.InvertedIndex` is this
+    * engine's indexed scale path for the same need.
+    *
+    * With `page`/`size` present, hits are rank-limited BEFORE the
+    * array fold (the connection discipline) and `total` stays the
+    * full match count. The unpaginated form returns every hit — the
+    * match set is bounded by the entity DIMENSION tables (not
+    * fact-scale), and the reference scripts consume `hits[0]` from
+    * exactly this shape.
+    */
   private def executeSearch(kg: KnowledgeGraph, root: Field): DataFrame = {
-    val searchExtra = root.args.keySet.diff(
-      Set("queryString", "entityNames", "page.index", "page.size", "size"))
-    if (searchExtra.nonEmpty) throw ParseError(
-      s"unknown argument${if (searchExtra.size > 1) "s" else ""} " +
-        s"${searchExtra.toSeq.sorted.mkString(", ")} on search — " +
-        "supported: queryString, entityNames, page")
+    onlyArgs(root.args,
+      Set("queryString", "entityNames", "page.index", "page.size", "size"),
+      "search", "supported: queryString, entityNames, page")
     val qs = root.args.getOrElse("queryString", throw ParseError(
       "search requires the queryString argument"))
-    val entities = root.args.get("entityNames")
-      .map(splitList(_).distinct)
-      .getOrElse(Seq("disease", "target", "drug"))
-    val objSels: Seq[Field] = root.sel.filter(_.name == "hits")
-      .flatMap(_.sel).filter(_.name == "object")
-    def rel = widenedSearchRel(kg, entities, objSels)
+    val entities = entityNames(root.args)
+    val objSels = root.sel.filter(_.name == "hits").flatMap(_.sel)
+      .filter(_.name == "object")
+    def rel = searchRel(kg, entities, objSels)
       .filter(lower(col("name")).contains(qs.toLowerCase))
-    val explicitSize = intArg(root.args, "page.size")
-      .orElse(intArg(root.args, "size"))
-    val index: Int = intArg(root.args, "page.index").getOrElse(0)
-    if (index > 0 && explicitSize.isEmpty) throw ParseError(
-      "page.index needs page.size")
-    val size: Option[Int] = explicitSize.map(math.min(_, MaxPageSize))
-    def hitsArray(sel: Seq[Field]): Column = {
-      val payload = hitStruct(sel, "search hits")
-      val sorted = sort_array(collect_list(struct(col("name").as("__k0"),
-        col("id").as("__k1"), payload.as("__p"))))
-      val page = size.fold(sorted) { n =>
-        val start = math.min(index.toLong * n + 1L, Int.MaxValue.toLong).toInt
-        slice(sorted, start, n)
-      }
-      transform(page, x => x.getField("__p"))
+    val pg = page(root.args)
+    val out = selection("search", Types("SearchResults"), root.sel) {
+      case g if g.name != "aggregations" => noArgs(g.args, s"'search.${g.name}'"); col(g.out)
     }
-    root.sel.foreach {
-      case g @ Field("total", _, Seq(), _) => noArgs(g, "search"); ()
-      case g @ Field("hits", _, _, _) => noArgs(g, "search"); ()
-      case Field("aggregations", _, _, _) => ()
-      case g @ Field("__typename", _, _, _) => noSubSel(g)
-      case g => throw ParseError(
-        s"unknown field '${g.name}' on search — supported: " +
-          "total, hits, aggregations")
-    }
-    if (root.sel.isEmpty) throw ParseError("search needs a selection")
-    // one aggregate per aliased `aggregations` selection — entity
-    // facet counts over the FULL match set in both branches
-    val aggsDfs: Seq[DataFrame] = root.sel.collect {
-      case g @ Field("aggregations", _, _, _) => aggregationsDf(rel, g)
-    }
-    size match {
+    // entity facet counts over the FULL match set in both branches
+    val aggs = root.sel.filter(_.name == "aggregations").map(aggregationsDf(rel, _))
+    val keys = Seq(col("name"), col("id"))
+    def hits(g: Field) =
+      fold(keys, hitStruct(g.sel, "search hits"), pg.cut).as(g.out)
+    val main = pg.size match {
       case None =>
-        // unpaginated: total and the full hit array fold in ONE agg;
-        // __typename projects AFTER the agg — a literal INSIDE the
-        // aggregate (first(lit)) is NULL over a zero-match relation
-        val parts0 = root.sel
-          .filterNot(g => g.name == "__typename" || g.name == "aggregations")
-          .map {
-            case g @ Field("total", _, Seq(), _) => count(lit(1)).as(g.out)
-            case g @ Field("hits", _, sel, _) => hitsArray(sel).as(g.out)
-            case g => throw ParseError(s"unreachable: ${g.name}")
-          }
-        val main: Option[DataFrame] =
-          if (parts0.isEmpty) None
-          else Some(rel.agg(parts0.head, parts0.tail: _*))
-        val sides = main.toSeq ++ aggsDfs
-        val combined =
-          if (sides.isEmpty) rel.sparkSession.range(1).toDF()
-          else sides.reduce((a, b) => a.crossJoin(broadcast(b)))
-        combined.select(root.sel.map { g =>
-          (if (g.name == "__typename") lit("SearchResults")
-           else col(g.out)).as(g.out)
-        }: _*)
-      case Some(n) =>
+        // unpaginated: total and the full hit arrays fold in ONE agg
+        val parts = root.sel.collect {
+          case g if g.name == "total" => count(lit(1)).as(g.out)
+          case g if g.name == "hits" => hits(g)
+        }
+        if (parts.isEmpty) Nil else Seq(rel.agg(parts.head, parts.tail: _*))
+      case Some(_) =>
         // paged: hits aggregate the rank-LIMITED relation (top-k
         // merge, never a whole-match collect); total stays the full
         // match count
-        val totalDf: Option[DataFrame] =
-          if (!root.sel.exists(_.name == "total")) None
-          else Some(rel.agg(count(lit(1)).as("total")))
-        // one aggregate per aliased `hits` selection, named by its
-        // response key (the connection-rows discipline — each alias
-        // gets its own payload, never first-wins)
-        val hitsDfs: Seq[DataFrame] = root.sel.collect {
-          case g @ Field("hits", _, sel, _) =>
-            val limitN = math.min((index + 1).toLong * n,
-              Int.MaxValue.toLong).toInt
-            rel.sort(col("name"), col("id")).limit(limitN)
-              .agg(hitsArray(sel).as(g.out))
-        }
-        val sides = totalDf.toSeq ++ hitsDfs ++ aggsDfs
-        val combined =
-          if (sides.isEmpty) rel.sparkSession.range(1).toDF()
-          else sides.reduce((a, b) => a.crossJoin(broadcast(b)))
-        combined.select(root.sel.map { g =>
-          (if (g.name == "__typename") lit("SearchResults")
-           else if (g.name == "total") col("total")
-           else col(g.out)).as(g.out)
-        }: _*)
+        root.sel.filter(_.name == "total").map(g => rel.agg(count(lit(1)).as(g.out))) ++
+          root.sel.filter(_.name == "hits").map(g => pg.limit(rel, keys).agg(hits(g)))
     }
+    assemble(main ++ aggs, rel.sparkSession)(out: _*)
   }
 
   /** The `facets(queryString:, entityNames:, category:, page:)` root
@@ -1648,18 +1424,13 @@ object GraphQl {
     * category counts are one keyed agg over dimension tables.
     */
   private def executeFacets(kg: KnowledgeGraph, root: Field): DataFrame = {
-    val facetsExtra = root.args.keySet.diff(Set("queryString",
-      "entityNames", "category", "page.index", "page.size", "size"))
-    if (facetsExtra.nonEmpty) throw ParseError(
-      s"unknown argument${if (facetsExtra.size > 1) "s" else ""} " +
-        s"${facetsExtra.toSeq.sorted.mkString(", ")} on facets — " +
-        "supported: queryString, entityNames, category, page")
-    val entities = root.args.get("entityNames")
-      .map(splitList(_).distinct)
-      .getOrElse(Seq("disease", "target", "drug"))
+    onlyArgs(root.args, Set("queryString", "entityNames", "category",
+      "page.index", "page.size", "size"), "facets",
+      "supported: queryString, entityNames, category, page")
+    val entities = entityNames(root.args)
     // the same entity-scope union the search root scans (no arm
     // widening — facet hits carry no union object)
-    def scope = widenedSearchRel(kg, entities, Seq.empty)
+    def scope = searchRel(kg, entities, Seq.empty)
       .filter(root.args.get("queryString")
         .map(qs => lower(col("name")).contains(qs.toLowerCase))
         .getOrElse(lit(true)))
@@ -1671,94 +1442,27 @@ object GraphQl {
           "categories are the entity kinds")
     }
     val hitsRel = category.fold(scope)(c => scope.filter(col("entity") === c))
-    val explicitSize = intArg(root.args, "page.size")
-      .orElse(intArg(root.args, "size"))
-    val index: Int = intArg(root.args, "page.index").getOrElse(0)
-    if (index > 0 && explicitSize.isEmpty) throw ParseError(
-      "page.index needs page.size")
-    val size: Option[Int] = explicitSize.map(math.min(_, MaxPageSize))
-    root.sel.foreach {
-      case g @ Field("total", _, Seq(), _) => noArgs(g, "facets"); ()
-      case g @ Field("hits", _, _, _) => noArgs(g, "facets"); ()
-      case g @ Field("categories", _, _, _) => noArgs(g, "facets"); ()
-      case g @ Field("__typename", _, _, _) => noSubSel(g)
-      case g => throw ParseError(
-        s"unknown field '${g.name}' on facets — supported: " +
-          "total, hits, categories")
+    val pg = page(root.args)
+    val out = selection("facets", Types("SearchFacetsResults"), root.sel) {
+      case g => noArgs(g.args, s"'facets.${g.name}'"); col(g.out)
     }
-    if (root.sel.isEmpty) throw ParseError("facets needs a selection")
-    def facetHit(sel: Seq[Field]): Column = {
-      if (sel.isEmpty) throw ParseError("facets hits need a selection")
-      struct(sel.map { f =>
-        (f.name match {
-          case "__typename" => noSubSel(f); lit("SearchFacetsResult")
-          case "id" | "label" | "category" =>
-            if (f.sel.nonEmpty) throw ParseError(
-              s"'facets hits.${f.name}' is a scalar — drop its selection")
-            f.name match {
-              case "id" => col("id")
-              case "label" => col("name")
-              case _ => col("entity")
-            }
-          case other => throw ParseError(
-            s"unknown field '$other' on facets hits — supported: " +
-              "id, label, category")
-        }).as(f.out)
-      }: _*)
-    }
-    def hitsDfFor(g: Field): DataFrame = {
-      val src = size.fold(hitsRel)(n => hitsRel.sort(col("name"), col("id"))
-        .limit(math.min((index + 1).toLong * n, Int.MaxValue.toLong).toInt))
-      val arr = sort_array(collect_list(struct(col("name").as("__k0"),
-        col("id").as("__k1"), facetHit(g.sel).as("__p"))))
-      val paged = size.fold(arr) { n =>
-        val start = math.min(index.toLong * n + 1L, Int.MaxValue.toLong).toInt
-        slice(arr, start, n)
+    val keys = Seq(col("name"), col("id"))
+    val sides =
+      root.sel.filter(_.name == "total")
+        .map(g => hitsRel.agg(count(lit(1)).as(g.out))) ++
+      root.sel.filter(_.name == "hits").map { g =>
+        val src = pg.limit(hitsRel, keys)
+        src.agg(fold(keys, struct(selection("facets hits",
+          Types("SearchFacetsResult"), g.sel)(): _*), pg.cut).as(g.out))
+      } ++
+      root.sel.filter(_.name == "categories").map { g =>
+        val payload = struct(selection("facets categories",
+          Types("SearchFacetsCategory"), g.sel)(): _*)
+        scope.groupBy(col("entity")).agg(count(lit(1)).as("n"))
+          .agg(fold(Seq(col("entity")), payload).as(g.out))
       }
-      src.agg(transform(paged, x => x.getField("__p")).as(g.out))
-    }
-    def catDfFor(g: Field): DataFrame = {
-      if (g.sel.isEmpty) throw ParseError(
-        "facets categories need a selection")
-      val payload = struct(g.sel.map { f =>
-        (f.name match {
-          case "__typename" => noSubSel(f); lit("SearchFacetsCategory")
-          case "name" | "total" =>
-            if (f.sel.nonEmpty) throw ParseError(
-              s"'facets categories.${f.name}' is a scalar — drop its selection")
-            if (f.name == "name") col("entity") else col("n")
-          case other => throw ParseError(
-            s"unknown field '$other' on facets categories — supported: " +
-              "name, total")
-        }).as(f.out)
-      }: _*)
-      scope.groupBy(col("entity")).agg(count(lit(1)).as("n"))
-        .agg(transform(sort_array(collect_list(struct(
-          col("entity").as("__k0"), payload.as("__p")))),
-          x => x.getField("__p")).as(g.out))
-    }
-    // 1-row sides per selection (one per ALIAS for hits/categories,
-    // the connection-rows discipline), broadcast cross-joined
-    val sides: Seq[DataFrame] =
-      (if (root.sel.exists(_.name == "total"))
-         Seq(hitsRel.agg(count(lit(1)).as("total"))) else Nil) ++
-      root.sel.collect { case g @ Field("hits", _, _, _) => hitsDfFor(g) } ++
-      root.sel.collect { case g @ Field("categories", _, _, _) => catDfFor(g) }
-    val combined =
-      if (sides.isEmpty) scope.sparkSession.range(1).toDF()
-      else sides.reduce((a, b) => a.crossJoin(broadcast(b)))
-    combined.select(root.sel.map { g =>
-      (if (g.name == "__typename") lit("SearchFacetsResults")
-       else if (g.name == "total") col("total")
-       else col(g.out)).as(g.out)
-    }: _*)
+    assemble(sides, scope.sparkSession)(out: _*)
   }
-
-  /** Serving cap on a `mapIds` term batch — the nearDupLookup
-    * discipline: an unbounded term list belongs in a join against a
-    * terms RELATION, not in one request.
-    */
-  val MaxMapTerms: Int = 1000
 
   /** The `mapIds(queryTerms:, entityNames:)` root
     * (opentargets.schema:1176-1181 → MappingResults :977-983): map a
@@ -1773,127 +1477,56 @@ object GraphQl {
     * queryTerms; hits are (name, id)-ordered; `total` is the hit
     * count across all mappings; `aggregations` follows the search
     * root's entity-facet convention (counts over term-hit MATCHES).
-    * Duplicate terms and a batch above [[MaxMapTerms]] are targeted
-    * errors. Hits are full SearchResults — the union `object` field
-    * and its inline-fragment arms work here unchanged.
+    * Duplicate terms — keyed on the LOWERCASED term, the match
+    * filter's own normalization — and a batch above [[MaxMapTerms]]
+    * are targeted errors. Hits are full SearchResults — the union
+    * `object` field and its inline-fragment arms work here unchanged.
     */
   private def executeMapIds(kg: KnowledgeGraph, root: Field): DataFrame = {
-    val extra = root.args.keySet.diff(Set("queryTerms", "entityNames"))
-    if (extra.nonEmpty) throw ParseError(
-      s"unknown argument${if (extra.size > 1) "s" else ""} " +
-        s"${extra.toSeq.sorted.mkString(", ")} on mapIds — " +
-        "supported: queryTerms, entityNames")
-    val terms = splitList(root.args.getOrElse("queryTerms", throw ParseError(
-      "mapIds requires the queryTerms argument")))
-      .filter(_.nonEmpty)
-    if (terms.isEmpty) throw ParseError("queryTerms must not be empty")
-    // an empty-STRING term would silently vanish from the positional
-    // mappings array — reject it loudly instead
-    if (splitList(root.args("queryTerms")).exists(_.isEmpty) &&
-        root.args("queryTerms").nonEmpty) throw ParseError(
-      "queryTerms must not contain empty strings")
-    // duplicates keyed on the LOWERCASED term — the same normalization
-    // the match filter applies, so ["Red", "red"] (two identical
-    // mappings at serve time) is exactly the redundancy rejected here
-    val dup = terms.groupBy(_.toLowerCase)
-      .collect { case (_, ts) if ts.size > 1 => ts.head }
-    if (dup.nonEmpty) throw ParseError(
-      s"duplicate queryTerms (matching is case-insensitive): " +
-        dup.toSeq.sorted.mkString(", "))
-    if (terms.size > MaxMapTerms) throw ParseError(
-      s"mapIds serves at most $MaxMapTerms terms per request, got " +
-        s"${terms.size} — join against a terms relation for batch mapping")
-    val entities = root.args.get("entityNames")
-      .map(splitList(_).distinct)
-      .getOrElse(Seq("disease", "target", "drug"))
-    root.sel.foreach {
-      case g @ Field("total", _, Seq(), _) => noArgs(g, "mapIds"); ()
-      case g @ Field("mappings", _, _, _) => noArgs(g, "mapIds"); ()
-      case Field("aggregations", _, _, _) => ()
-      case g @ Field("__typename", _, _, _) => noSubSel(g)
-      case g => throw ParseError(
-        s"unknown field '${g.name}' on mapIds — supported: " +
-          "total, mappings, aggregations")
+    onlyArgs(root.args, Set("queryTerms", "entityNames"), "mapIds",
+      "supported: queryTerms, entityNames")
+    val terms = idList(root.args.getOrElse("queryTerms", throw ParseError(
+      "mapIds requires the queryTerms argument")), "queryTerms", "mapIds",
+      _.toLowerCase)
+    val entities = entityNames(root.args)
+    val out = selection("mapIds", Types("MappingResults"), root.sel) {
+      case g if g.name != "aggregations" => noArgs(g.args, s"'mapIds.${g.name}'"); col(g.out)
     }
-    if (root.sel.isEmpty) throw ParseError("mapIds needs a selection")
-    val mappingsSels: Seq[Field] = root.sel.filter(_.name == "mappings")
-    val objSels = mappingsSels.flatMap(_.sel).filter(_.name == "hits")
-      .flatMap(_.sel).filter(_.name == "object")
-    val rel = widenedSearchRel(kg, entities, objSels)
+    val objSels = root.sel.filter(_.name == "mappings").flatMap(_.sel)
+      .filter(_.name == "hits").flatMap(_.sel).filter(_.name == "object")
+    val rel = searchRel(kg, entities, objSels)
     val spark = rel.sparkSession
-    // the term batch as a broadcast relation: (term, lowered, ord)
-    val termsDf = {
-      import scala.jdk.CollectionConverters._
-      val rows = terms.zipWithIndex.map { case (t, i) =>
-        org.apache.spark.sql.Row(t, t.toLowerCase, i)
-      }.asJava
-      spark.createDataFrame(rows,
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "__term STRING, __lt STRING, __ord INT"))
-    }
+    val termsDf = batchDf(spark, "__term STRING, __lt STRING, __ord INT",
+      terms.zipWithIndex.map { case (t, i) => Row(t, t.toLowerCase, i) })
     // every (term, hit) match in ONE scan; a LEFT join back to the
     // term relation keeps zero-hit terms (their hit columns are null
-    // and collect_list's when() guard folds them to an empty array)
+    // and the fold's keep guard leaves them out: an empty array)
     val matched = rel.crossJoin(broadcast(termsDf))
       .filter(lower(col("name")).contains(col("__lt")))
     val all = termsDf.join(matched.drop("__lt"),
       Seq("__term", "__ord"), "left")
-    def mappingsDfFor(g: Field): DataFrame = {
-      if (g.sel.isEmpty) throw ParseError("mapIds mappings need a selection")
+    def mappingsDf(g: Field): DataFrame = {
       // per-alias hit arrays first (one grouped agg per term)...
-      val hitParts = g.sel.collect {
-        case h @ Field("hits", _, sel, _) =>
-          transform(sort_array(collect_list(when(col("id").isNotNull,
-            struct(col("name").as("__k0"), col("id").as("__k1"),
-              hitStruct(sel, "mapIds mapping hits").as("__p"))))),
-            x => x.getField("__p")).as(h.out)
-      }
+      val hitParts = g.sel.filter(_.name == "hits").map(h =>
+        fold(Seq(col("name"), col("id")), hitStruct(h.sel, "mapIds mapping hits"),
+          keep = Some(col("id").isNotNull)).as(h.out))
       val parts =
         if (hitParts.nonEmpty) hitParts else Seq(count(lit(1)).as("__c"))
       val grouped = all.groupBy(col("__term"), col("__ord"))
         .agg(parts.head, parts.tail: _*)
       // ...then the mapping structs fold in REQUEST order
-      val payload = struct(g.sel.map { m =>
-        (m.name match {
-          case "__typename" => noSubSel(m); lit("MappingResult")
-          case "term" =>
-            if (m.sel.nonEmpty) throw ParseError(
-              "'mappings.term' is a scalar — drop its selection")
-            col("__term")
-          case "hits" => col(m.out)
-          case other => throw ParseError(
-            s"unknown field '$other' on mapIds mappings — supported: " +
-              "term, hits")
-        }).as(m.out)
-      }: _*)
-      grouped.agg(transform(sort_array(collect_list(struct(
-        col("__ord").as("__k0"), payload.as("__p")))),
-        x => x.getField("__p")).as(g.out))
+      val payload = struct(selection("mapIds mappings",
+        Types("MappingResult"), g.sel)(): _*)
+      grouped.agg(fold(Seq(col("__ord")), payload).as(g.out))
     }
-    val sides: Seq[DataFrame] =
-      (if (root.sel.exists(_.name == "total"))
-         Seq(matched.agg(count(lit(1)).as("total"))) else Nil) ++
-      root.sel.collect { case g @ Field("mappings", _, _, _) =>
-        mappingsDfFor(g) } ++
-      root.sel.collect { case g @ Field("aggregations", _, _, _) =>
-        aggregationsDf(matched, g) }
-    val combined =
-      if (sides.isEmpty) spark.range(1).toDF()
-      else sides.reduce((a, b) => a.crossJoin(broadcast(b)))
-    combined.select(root.sel.map { g =>
-      (if (g.name == "__typename") lit("MappingResults")
-       else if (g.name == "total") col("total")
-       else col(g.out)).as(g.out)
-    }: _*)
+    val sides =
+      root.sel.filter(_.name == "total")
+        .map(g => matched.agg(count(lit(1)).as(g.out))) ++
+      root.sel.filter(_.name == "mappings").map(mappingsDf) ++
+      root.sel.filter(_.name == "aggregations").map(aggregationsDf(matched, _))
+    assemble(sides, spark)(out: _*)
   }
 
-  /** The `meta` root (opentargets.schema:1118 → Meta :1013-1017):
-    * API metadata as one row — the `name` scalar plus the
-    * `apiVersion` / `dataVersion` object fields, each selection-
-    * shaped. The values come off [[KnowledgeGraph.meta]]'s one-row
-    * aggregate (dataVersion is the corpus's data cut), so the root is
-    * a real computation the oracle replays, not a literal echo.
-    */
   /** The dialect's executable Query type, introspection-shaped: root
     * field name → (args as (name, rendered type), rendered result
     * type). Renderings are the reference schema's own
@@ -1901,14 +1534,11 @@ object GraphQl {
     * surface [[execute]] dispatches — introspection is a CONTRACT
     * about what runs here, so a root appears iff it executes.
     */
-  private val QueryRoots: Seq[(String, Seq[(String, String)], String)] = Seq(
+  private val QueryRoots: Seq[(String, Seq[(String, String)], String)] =
+    Entities.flatMap(e => Seq(
+      (e.key, Seq(e.arg -> "String!"), e.name),
+      (e.key + "s", Seq(e.arg + "s" -> "[String!]!"), s"[${e.name}!]!"))) ++ Seq(
     ("meta", Seq.empty, "Meta!"),
-    ("target", Seq("ensemblId" -> "String!"), "Target"),
-    ("targets", Seq("ensemblIds" -> "[String!]!"), "[Target!]!"),
-    ("disease", Seq("efoId" -> "String!"), "Disease"),
-    ("diseases", Seq("efoIds" -> "[String!]!"), "[Disease!]!"),
-    ("drug", Seq("chemblId" -> "String!"), "Drug"),
-    ("drugs", Seq("chemblIds" -> "[String!]!"), "[Drug!]!"),
     ("search", Seq("queryString" -> "String!", "entityNames" -> "[String!]",
       "page" -> "Pagination"), "SearchResults!"),
     ("facets", Seq("queryString" -> "String", "entityNames" -> "[String!]",
@@ -1921,25 +1551,25 @@ object GraphQl {
     ("geneOntologyTerms", Seq("goIds" -> "[String!]!"),
       "[GeneOntologyTerm]!"))
 
-  /** Entity/object types `__type(name:)` serves, with the field names
-    * this dialect actually resolves on each (scalars + the connection
-    * sites [[connectionDf]] executes). The executable-surface rule
-    * again: a field appears iff a query selecting it runs.
+  /** Object types `__type(name:)` serves, with the field names this
+    * dialect actually resolves on each — read off the type table. The
+    * executable-surface rule again: a field appears iff a query
+    * selecting it runs.
     */
-  private val IntroTypes: Map[String, Seq[String]] = Map(
-    "Query" -> QueryRoots.map(_._1),
-    "Disease" -> Seq("id", "name", "knownDrugs", "associatedTargets",
-      "phenotypes", "evidences"),
-    "Target" -> Seq("id", "approvedSymbol", "bioType", "knownDrugs",
-      "associatedDiseases", "pathways", "tractability", "similarEntities"),
-    "Drug" -> Seq("id", "name", "synonyms", "drugType", "isApproved",
-      "maximumClinicalTrialPhase", "linkedTargets", "mechanismsOfAction"),
-    "GeneOntologyTerm" -> Seq("id", "name"),
-    "Tractability" -> Seq("label", "modality", "value"),
-    "HPO" -> Seq("id", "name", "description", "namespace"),
-    "Evidence" -> Seq("id", "score", "target", "disease"),
-    "Similarity" -> Seq("category", "id", "score", "object"),
-    "Meta" -> Seq("name", "apiVersion", "dataVersion"))
+  private val IntroTypes: Map[String, Seq[String]] =
+    (("Query" -> QueryRoots.map(_._1)) +: Seq("Disease", "Target", "Drug",
+      "GeneOntologyTerm", "Tractability", "HPO", "Evidence", "Similarity",
+      "Meta").map(t => t -> Types(t).fields.map(_._1))).toMap
+
+  // introspection's own types, as this dialect serves them
+  private val IntroSchema = Type("__Schema", Seq("queryType" -> Obj()))
+  private val IntroType = Type("__Type",
+    Seq("fields" -> Obj(), "kind" -> Calc, "name" -> Calc))
+  private val IntroField = Type("__Field",
+    Seq("args" -> Obj(), "name" -> Calc, "type" -> Obj()))
+  private val IntroFieldName = Type("__Field", Seq("name" -> Calc))
+  private val IntroInput = Type("__InputValue", Seq("name" -> Calc, "type" -> Obj()))
+  private val IntroRef = Type("__Type", Seq("name" -> Calc))
 
   /** Minimal GraphQL introspection — the first request every real
     * client (GraphiQL, Apollo, graphql-request) sends against an
@@ -1956,112 +1586,43 @@ object GraphQl {
     */
   private def executeSchemaIntrospection(kg: KnowledgeGraph,
                                          root: Field): DataFrame = {
-    if (root.args.nonEmpty) throw ParseError(
-      "__schema takes no arguments, got " +
-        root.args.keys.toSeq.sorted.mkString(", "))
-    if (root.sel.isEmpty) throw ParseError("'__schema' needs a selection")
-    val out = root.sel.map { f =>
-      (f.name match {
-        case "__typename" => noSubSel(f); lit("__Schema")
-        case "queryType" =>
-          if (f.sel.isEmpty) throw ParseError(
-            "'__schema.queryType' needs a selection")
-          introQueryType(f.sel)
-        case other => throw ParseError(
-          s"unknown introspection field '$other' on __schema — " +
-            "supported: queryType (this dialect serves the minimal " +
-            "introspection surface)")
-      }).as(f.out)
-    }
-    kg.diseases.sparkSession.range(1).select(out: _*)
+    noArgs(root.args, "__schema")
+    kg.diseases.sparkSession.range(1).select(
+      selection("__schema", IntroSchema, root.sel) { case f =>
+        struct(selection("__schema.queryType", IntroType, f.sel) {
+          case g if g.name == "name" => lit("Query")
+          case g if g.name == "kind" => lit("OBJECT")
+          case g => array(QueryRoots.sortBy(_._1).map { case (n, args, ret) =>
+            introField(g.sel, n, args, ret)
+          }: _*)
+        }: _*)
+      }: _*)
   }
 
-  private def introQueryType(sel: Seq[Field]): Column =
-    struct(sel.map { g =>
-      (g.name match {
-        case "__typename" => noSubSel(g); lit("__Type")
-        case "name" =>
-          if (g.sel.nonEmpty) throw ParseError(
-            "'queryType.name' is a scalar — drop its selection")
-          lit("Query")
-        case "kind" =>
-          if (g.sel.nonEmpty) throw ParseError(
-            "'queryType.kind' is a scalar — drop its selection")
-          lit("OBJECT")
-        case "fields" =>
-          if (g.sel.isEmpty) throw ParseError(
-            "'queryType.fields' needs a selection")
-          array(QueryRoots.sortBy(_._1).map { case (n, args, ret) =>
-            introFieldStruct(g.sel, n, args, ret)
-          }: _*)
-        case other => throw ParseError(
-          s"unknown introspection field '$other' on __Type — " +
-            "supported: fields, kind, name")
-      }).as(g.out)
+  private def introField(sel: Seq[Field], fname: String,
+                         args: Seq[(String, String)], ret: String): Column = {
+    def arg(sel: Seq[Field], aname: String, atype: String): Column =
+      struct(selection("fields.args", IntroInput, sel) {
+        case h if h.name == "name" => lit(aname)
+        case h => introRef("args.type", h.sel, atype)
+      }: _*)
+    struct(selection("queryType.fields", IntroField, sel) {
+      case h if h.name == "name" => lit(fname)
+      case h if h.name == "type" => introRef("fields.type", h.sel, ret)
+      case h =>
+        if (args.isEmpty)
+          // typed empty array: the template struct filtered away
+          filter(array(arg(h.sel, "", "")), _ => lit(false))
+        else array(args.sortBy(_._1).map { case (an, at) =>
+          arg(h.sel, an, at) }: _*)
     }: _*)
+  }
 
-  private def introFieldStruct(sel: Seq[Field], fname: String,
-                               args: Seq[(String, String)],
-                               ret: String): Column =
-    struct(sel.map { h =>
-      (h.name match {
-        case "__typename" => noSubSel(h); lit("__Field")
-        case "name" =>
-          if (h.sel.nonEmpty) throw ParseError(
-            "'fields.name' is a scalar — drop its selection")
-          lit(fname)
-        case "type" =>
-          if (h.sel.isEmpty) throw ParseError(
-            "'fields.type' needs a selection")
-          introTypeRef(h.sel, ret)
-        case "args" =>
-          if (h.sel.isEmpty) throw ParseError(
-            "'fields.args' needs a selection")
-          if (args.isEmpty)
-            // typed empty array: the template struct filtered away
-            filter(array(introArgStruct(h.sel, "", "")), _ => lit(false))
-          else array(args.sortBy(_._1).map { case (an, at) =>
-            introArgStruct(h.sel, an, at)
-          }: _*)
-        case other => throw ParseError(
-          s"unknown introspection field '$other' on __Field — " +
-            "supported: args, name, type")
-      }).as(h.out)
-    }: _*)
-
-  private def introArgStruct(sel: Seq[Field], aname: String,
-                             atype: String): Column =
-    struct(sel.map { h =>
-      (h.name match {
-        case "__typename" => noSubSel(h); lit("__InputValue")
-        case "name" =>
-          if (h.sel.nonEmpty) throw ParseError(
-            "'args.name' is a scalar — drop its selection")
-          lit(aname)
-        case "type" =>
-          if (h.sel.isEmpty) throw ParseError(
-            "'args.type' needs a selection")
-          introTypeRef(h.sel, atype)
-        case other => throw ParseError(
-          s"unknown introspection field '$other' on __InputValue — " +
-            "supported: name, type")
-      }).as(h.out)
-    }: _*)
-
-  private def introTypeRef(sel: Seq[Field], rendered: String): Column =
-    struct(sel.map { h =>
-      (h.name match {
-        case "__typename" => noSubSel(h); lit("__Type")
-        case "name" =>
-          if (h.sel.nonEmpty) throw ParseError(
-            "'type.name' is a scalar — drop its selection")
-          lit(rendered)
-        case other => throw ParseError(
-          s"unknown introspection field '$other' on a __Type reference " +
-            "— supported: name (the dialect renders wrapper chains " +
-            "into the name; ofType walking is not served)")
-      }).as(h.out)
-    }: _*)
+  /** A type reference: its rendered name (the dialect renders wrapper
+    * chains into the name; ofType walking is not served).
+    */
+  private def introRef(site: String, sel: Seq[Field], rendered: String): Column =
+    struct(selection(site, IntroRef, sel) { case _ => lit(rendered) }: _*)
 
   /** `__type(name:)` — one named type of the executable surface:
     * name, kind, fields { name }. Unknown names error loudly with the
@@ -2070,76 +1631,35 @@ object GraphQl {
     */
   private def executeTypeIntrospection(kg: KnowledgeGraph,
                                        root: Field): DataFrame = {
-    val extra = root.args.keySet - "name"
-    if (extra.nonEmpty) throw ParseError(
-      s"unknown argument${if (extra.size > 1) "s" else ""} " +
-        s"${extra.toSeq.sorted.mkString(", ")} on __type — it takes only name")
+    onlyArgs(root.args, Set("name"), "__type", "it takes only name")
     val tname = root.args.getOrElse("name", throw ParseError(
       "__type requires the name argument"))
     val tfields = IntroTypes.getOrElse(tname, throw ParseError(
       s"unknown type '$tname' — introspectable types: " +
         IntroTypes.keys.toSeq.sorted.mkString(", ")))
-    if (root.sel.isEmpty) throw ParseError("'__type' needs a selection")
-    val out = root.sel.map { f =>
-      (f.name match {
-        case "__typename" => noSubSel(f); lit("__Type")
-        case "name" =>
-          if (f.sel.nonEmpty) throw ParseError(
-            "'__type.name' is a scalar — drop its selection")
-          lit(tname)
-        case "kind" =>
-          if (f.sel.nonEmpty) throw ParseError(
-            "'__type.kind' is a scalar — drop its selection")
-          lit("OBJECT")
-        case "fields" =>
-          if (f.sel.isEmpty) throw ParseError(
-            "'__type.fields' needs a selection")
-          array(tfields.sorted.map { n =>
-            struct(f.sel.map { h =>
-              (h.name match {
-                case "__typename" => noSubSel(h); lit("__Field")
-                case "name" =>
-                  if (h.sel.nonEmpty) throw ParseError(
-                    "'fields.name' is a scalar — drop its selection")
-                  lit(n)
-                case other => throw ParseError(
-                  s"unknown introspection field '$other' on __Field " +
-                    "under __type — supported: name")
-              }).as(h.out)
-            }: _*)
-          }: _*)
-        case other => throw ParseError(
-          s"unknown introspection field '$other' on __Type — " +
-            "supported: fields, kind, name")
-      }).as(f.out)
-    }
-    kg.diseases.sparkSession.range(1).select(out: _*)
+    kg.diseases.sparkSession.range(1).select(
+      selection("__type", IntroType, root.sel) {
+        case f if f.name == "name" => lit(tname)
+        case f if f.name == "kind" => lit("OBJECT")
+        case f => array(tfields.sorted.map(n =>
+          struct(selection("__type.fields", IntroFieldName, f.sel) {
+            case _ => lit(n) }: _*)): _*)
+      }: _*)
   }
 
+  /** The `meta` root (opentargets.schema:1118 → Meta :1013-1017):
+    * API metadata as one row — the `name` scalar plus the
+    * `apiVersion` / `dataVersion` object fields, each selection-
+    * shaped. The values come off [[KnowledgeGraph.meta]]'s one-row
+    * aggregate (dataVersion is the corpus's data cut), so the root is
+    * a real computation the oracle replays, not a literal echo.
+    */
   private def executeMeta(kg: KnowledgeGraph, root: Field): DataFrame = {
-    if (root.args.nonEmpty) throw ParseError(
-      "meta takes no arguments, got " +
-        root.args.keys.toSeq.sorted.mkString(", "))
-    if (root.sel.isEmpty) throw ParseError("'meta' needs a selection")
-    val subFields: Map[String, Map[String, Column]] = Map(
-      "apiVersion" -> Map("x" -> col("x"), "y" -> col("y"), "z" -> col("z")),
-      "dataVersion" -> Map("year" -> col("year"), "month" -> col("month"),
-        "iteration" -> col("iteration")))
-    kg.meta.select(root.sel.map { f =>
-      (f.name match {
-        case "__typename" => noSubSel(f); lit("Meta")
-        case "name" =>
-          if (f.sel.nonEmpty) throw ParseError(
-            "'meta.name' is a scalar — drop its selection")
-          col("name")
-        case sub if subFields.contains(sub) =>
-          if (f.args.nonEmpty) throw ParseError(
-            s"'meta.$sub' takes no arguments")
-          entityStruct(sub, f.sel, subFields(sub))
-        case other => throw ParseError(
-          s"unknown field '$other' on meta — supported: " +
-            "name, apiVersion, dataVersion")
-      }).as(f.out)
+    noArgs(root.args, "meta")
+    kg.meta.select(selection("meta", Types("Meta"), root.sel) {
+      // the object fields nest by default; arguments on them are loud
+      case f if f.name != "name" && f.args.nonEmpty =>
+        throw ParseError(s"'meta.${f.name}' takes no arguments")
     }: _*)
   }
 
@@ -2153,25 +1673,15 @@ object GraphQl {
     * corpus scale.
     */
   private def executeCatalog(kg: KnowledgeGraph, root: Field): DataFrame = {
-    val (base, sortKey, fields) = root.name match {
-      case "associationDatasources" => (kg.associationDatasources,
-        "datasource",
-        Map("datasource" -> col("datasource"), "datatype" -> col("datatype")))
-      case "interactionResources" => (kg.interactionResources,
-        "sourceDatabase",
-        Map("databaseVersion" -> col("databaseVersion"),
-          "sourceDatabase" -> col("sourceDatabase")))
-      case other => throw ParseError(s"not a catalog root: $other")
+    val (base, sortKey, t) = root.name match {
+      case "associationDatasources" =>
+        (kg.associationDatasources, "datasource", Types("EvidenceSource"))
+      case _ =>
+        (kg.interactionResources, "sourceDatabase", Types("InteractionResources"))
     }
-    if (root.args.nonEmpty) throw ParseError(
-      s"${root.name} takes no arguments, got " +
-        root.args.keys.toSeq.sorted.mkString(", "))
-    if (root.sel.isEmpty) throw ParseError(
-      s"'${root.name}' needs a selection")
-    val payload = entityStruct(root.name, root.sel, fields)
-    base.agg(transform(sort_array(collect_list(struct(
-        col(sortKey).as("__k0"), payload.as("__p")))),
-      x => x.getField("__p")).as(root.out))
+    noArgs(root.args, root.name)
+    val payload = struct(selection(root.name, t, root.sel)(): _*)
+    base.agg(fold(Seq(col(sortKey)), payload).as(root.out))
   }
 
   /** The `geneOntologyTerms(goIds: [...])` root (opentargets.schema:
@@ -2182,60 +1692,27 @@ object GraphQl {
     * keeps the request order of goIds and a missing GO id emits a
     * null entry (the schema's element type is nullable —
     * `[GeneOntologyTerm]!` — unlike the other batch roots' `[X!]!`),
-    * so the client indexes the response by its own request list.
+    * so the client indexes the response by its own request list. GO
+    * ids are exact-match identifiers, so duplicates are case-sensitive
+    * like the lookup itself.
     */
   private def executeGoTerms(kg: KnowledgeGraph, root: Field): DataFrame = {
-    val extra = root.args.keySet - "goIds"
-    if (extra.nonEmpty) throw ParseError(
-      s"unknown argument${if (extra.size > 1) "s" else ""} " +
-        s"${extra.toSeq.sorted.mkString(", ")} on geneOntologyTerms — " +
-        "it takes only goIds")
-    val rawArg = root.args.getOrElse("goIds", throw ParseError(
-      "geneOntologyTerms requires the goIds argument"))
-    // an empty-string id would silently shift the positional result —
-    // reject it loudly (the mapIds discipline). Checked BEFORE the
-    // empty-list collapse so `goIds: ["", ""]` names the actual
-    // defect (empty entries) rather than reporting an empty list.
-    // A SINGLE empty token is indistinguishable from `[]` after the
-    // list join, so that case stays "must not be empty".
-    val rawAll = splitList(rawArg)
-    if (rawAll.size > 1 && rawAll.exists(_.isEmpty))
-      throw ParseError("goIds must not contain empty strings")
-    val raw = rawAll.filter(_.nonEmpty)
-    if (raw.isEmpty) throw ParseError("goIds must not be empty")
-    // duplicate ids are two identical positional entries — redundancy
-    // rejected loudly; GO ids are exact-match identifiers, so the
-    // check is case-sensitive like the lookup itself
-    val dup = raw.groupBy(identity).collect { case (t, ts) if ts.size > 1 => t }
-    if (dup.nonEmpty) throw ParseError(
-      s"duplicate goIds: ${dup.toSeq.sorted.mkString(", ")}")
-    if (raw.size > MaxMapTerms) throw ParseError(
-      s"geneOntologyTerms serves at most $MaxMapTerms ids per request, " +
-        s"got ${raw.size} — join against an id relation for batch mapping")
-    if (root.sel.isEmpty) throw ParseError(
-      "'geneOntologyTerms' needs a selection")
+    onlyArgs(root.args, Set("goIds"), "geneOntologyTerms", "it takes only goIds")
+    val ids = idList(root.args.getOrElse("goIds", throw ParseError(
+      "geneOntologyTerms requires the goIds argument")), "goIds",
+      "geneOntologyTerms")
+    val payload = struct(selection("geneOntologyTerms",
+      Types("GeneOntologyTerm"), root.sel)(): _*)
     val terms = kg.goTerms
-    val spark = terms.sparkSession
-    val idsDf = {
-      import scala.jdk.CollectionConverters._
-      val rows = raw.zipWithIndex.map { case (g, i) =>
-        org.apache.spark.sql.Row(g, i)
-      }.asJava
-      spark.createDataFrame(rows,
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "__gid STRING, __ord INT"))
-    }
-    val payload = entityStruct("geneOntologyTerms", root.sel,
-      Map("id" -> col("id"), "name" -> col("name")))
+    val idsDf = batchDf(terms.sparkSession, "__gid STRING, __ord INT",
+      ids.zipWithIndex.map { case (g, i) => Row(g, i) })
     // left join keeps missing ids; the struct wrapper keeps their
     // NULL payloads as array entries (collect_list drops bare nulls).
     // The CATALOG side broadcasts (left-outer builds right) — at any
     // corpus scale goTerms is a low-cardinality distinct.
     idsDf.join(broadcast(terms), col("__gid") === col("id"), "left")
-      .agg(transform(sort_array(collect_list(struct(
-          col("__ord").as("__k0"),
-          when(col("id").isNotNull, payload).as("__p")))),
-        x => x.getField("__p")).as(root.out))
+      .agg(fold(Seq(col("__ord")), when(col("id").isNotNull, payload))
+        .as(root.out))
   }
 
   /** Batch point-lookup roots — `targets(ensemblIds: [...])` /
@@ -2247,35 +1724,33 @@ object GraphQl {
     * one pass over the entity table. Result is the GraphQL list —
     * one row whose root column is the id-sorted array of entities.
     */
-  private def executeBatch(kg: KnowledgeGraph, root: Field): DataFrame = {
-    val (entity, keyArg, base, fields) = root.name match {
-      case "targets" => ("target", "ensemblIds", kg.targets,
-        Map("id" -> col("id"), "approvedSymbol" -> col("approvedSymbol"),
-          "bioType" -> col("bioType")))
-      case "diseases" => ("disease", "efoIds", kg.diseases,
-        Map("id" -> col("id"), "name" -> col("name")))
-      case "drugs" => ("drug", "chemblIds", kg.drugDetails,
-        Map("id" -> col("id"), "name" -> col("name"),
-          "synonyms" -> col("synonyms"), "drugType" -> col("drugType"),
-          "isApproved" -> col("isApproved"),
-          "maximumClinicalTrialPhase" -> col("maximumClinicalTrialPhase")))
-      case other => throw ParseError(s"not a batch root: $other")
+  private def executeBatch(kg: KnowledgeGraph, e: Entity, root: Field): DataFrame = {
+    val arg = e.arg + "s"
+    val ids = splitList(root.args.getOrElse(arg, throw ParseError(
+      s"${root.name} requires the $arg argument"))).filter(_.nonEmpty)
+    onlyArgs(root.args, Set(arg), root.name, s"it takes only $arg")
+    if (ids.isEmpty) throw ParseError(s"$arg must not be empty")
+    val payload = struct(selection(root.name, e.scalarType, root.sel)(): _*)
+    e.scan(kg).filter(col("id").isin(ids: _*))
+      .agg(fold(Seq(col("id")), payload).as(root.out))
+  }
+
+  /** A root entity lookup: one filtered scan; each selected connection
+    * broadcast-joins its 1-row relation back.
+    */
+  private def executeLookup(kg: KnowledgeGraph, e: Entity, root: Field): DataFrame = {
+    val rootKey = root.args.getOrElse(e.arg, throw ParseError(
+      s"${e.key} requires the ${e.arg} argument; got " +
+        (if (root.args.isEmpty) "none" else root.args.keys.mkString(", "))))
+    onlyArgs(root.args, Set(e.arg), e.key,
+      s"it takes only ${e.arg} (opentargets.schema:1125-1148)")
+    var df = e.scan(kg).filter(col("id") === rootKey)
+    val out = selection(e.key, e.tpe, root.sel) {
+      case f if e.conns.contains(f.name) =>
+        df = df.crossJoin(broadcast(connectionDf(kg, e, f, rootKey)))
+        col(f.out)
     }
-    val ids = splitList(root.args.getOrElse(keyArg, throw ParseError(
-      s"${root.name} requires the $keyArg argument"))).filter(_.nonEmpty)
-    val batchExtra = root.args.keySet - keyArg
-    if (batchExtra.nonEmpty) throw ParseError(
-      s"unknown argument${if (batchExtra.size > 1) "s" else ""} " +
-        s"${batchExtra.toSeq.sorted.mkString(", ")} on ${root.name} — " +
-        s"it takes only $keyArg")
-    if (ids.isEmpty) throw ParseError(s"$keyArg must not be empty")
-    if (root.sel.isEmpty) throw ParseError(
-      s"'${root.name}' needs a selection")
-    val payload = entityStruct(entity, root.sel, fields)
-    base.filter(col("id").isin(ids: _*))
-      .agg(transform(sort_array(collect_list(struct(
-        col("id").as("__k0"), payload.as("__p")))),
-        x => x.getField("__p")).as(root.out))
+    df.select(out: _*)
   }
 
   /** Execute `query` against the knowledge graph. One row out (the
@@ -2287,55 +1762,27 @@ object GraphQl {
               variables: Map[String, String] = Map.empty): DataFrame = {
     val root = parse(query, variables)
     checkInline(Field("query", Map.empty, Seq(root)), underUnion = false)
-    if (root.name == "__schema") return executeSchemaIntrospection(kg, root)
-    if (root.name == "__type") return executeTypeIntrospection(kg, root)
-    if (root.name == "search") return executeSearch(kg, root)
-    if (root.name == "facets") return executeFacets(kg, root)
-    if (root.name == "mapIds") return executeMapIds(kg, root)
-    if (root.name == "meta") return executeMeta(kg, root)
-    if (root.name == "geneOntologyTerms") return executeGoTerms(kg, root)
-    if (Set("associationDatasources", "interactionResources")(root.name))
-      return executeCatalog(kg, root)
-    if (Set("targets", "diseases", "drugs")(root.name))
-      return executeBatch(kg, root)
-    val (entity, keyArg, base) = root.name match {
-      case "disease" => ("disease", "efoId", kg.diseases)
-      case "target" => ("target", "ensemblId", kg.targets)
-      case "drug" => ("drug", "chemblId", kg.drugDetails)
-      case other => throw ParseError(
-        s"unknown root '$other' — supported: disease(efoId:), " +
-          "target(ensemblId:), drug(chemblId:), search(queryString:), " +
-          "facets(queryString:), mapIds(queryTerms:), " +
-          "targets(ensemblIds:), diseases(efoIds:), drugs(chemblIds:), " +
-          "geneOntologyTerms(goIds:), meta, associationDatasources, " +
-          "interactionResources — the schema's full Query type " +
-          "(opentargets.schema:1116-1192) — plus the __schema/__type " +
-          "introspection roots")
+    root.name match {
+      case "__schema" => executeSchemaIntrospection(kg, root)
+      case "__type" => executeTypeIntrospection(kg, root)
+      case "search" => executeSearch(kg, root)
+      case "facets" => executeFacets(kg, root)
+      case "mapIds" => executeMapIds(kg, root)
+      case "meta" => executeMeta(kg, root)
+      case "geneOntologyTerms" => executeGoTerms(kg, root)
+      case "associationDatasources" | "interactionResources" =>
+        executeCatalog(kg, root)
+      case n => entity(n).map(executeLookup(kg, _, root))
+        .orElse(Entities.find(_.key + "s" == n).map(executeBatch(kg, _, root)))
+        .getOrElse(throw ParseError(
+          s"unknown root '$n' — supported: disease(efoId:), " +
+            "target(ensemblId:), drug(chemblId:), search(queryString:), " +
+            "facets(queryString:), mapIds(queryTerms:), " +
+            "targets(ensemblIds:), diseases(efoIds:), drugs(chemblIds:), " +
+            "geneOntologyTerms(goIds:), meta, associationDatasources, " +
+            "interactionResources — the schema's full Query type " +
+            "(opentargets.schema:1116-1192) — plus the __schema/__type " +
+            "introspection roots"))
     }
-    val rootKey = root.args.getOrElse(keyArg, throw ParseError(
-      s"$entity requires the $keyArg argument; got " +
-        (if (root.args.isEmpty) "none" else root.args.keys.mkString(", "))))
-    val extraArgs = root.args.keySet - keyArg
-    if (extraArgs.nonEmpty) throw ParseError(
-      s"unknown argument${if (extraArgs.size > 1) "s" else ""} " +
-        s"${extraArgs.toSeq.sorted.mkString(", ")} on $entity — " +
-        s"it takes only $keyArg (opentargets.schema:1125-1148)")
-    if (root.sel.isEmpty) throw ParseError(s"'$entity' needs a selection")
-    var df = base.filter(col("id") === rootKey)
-    val outCols = root.sel.map { f =>
-      if (f.name == "__typename") {
-        noSubSel(f)
-        lit(TypeNames(entity)).as(f.out)
-      } else Scalars.get((entity, f.name)) match {
-        case Some(src) =>
-          if (f.sel.nonEmpty) throw ParseError(
-            s"'$entity.${f.name}' is a scalar — drop its selection")
-          col(src).as(f.out)
-        case None =>
-          df = df.crossJoin(broadcast(connectionDf(kg, entity, f, rootKey)))
-          col(f.out)
-      }
-    }
-    df.select(outCols: _*)
   }
 }

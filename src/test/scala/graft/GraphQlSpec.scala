@@ -304,6 +304,74 @@ query diseaseAssociatedDrugs {  # reference candidate_drugs.py shape
       .contains("unknown field 'phase' on drug"))
     assert(err("""{ disease(efoId: "x") { name { sub } } }""")
       .contains("scalar"))
+    // every other selection site: an unknown field names the site and
+    // its supported fields; a scalar given a sub-selection is loud
+    val search = """search(queryString: "r")"""
+    val aggs = s"$search { aggregations { entities"
+    val evidences = """disease(efoId: "D") { evidences(ensemblIds: ["a"])"""
+    val similar = """target(ensemblId: "TGT_7") { similarEntities"""
+    val moa = """drug(chemblId: "x") { mechanismsOfAction { rows"""
+    val fields = "__schema { queryType { fields"
+    val tpe = """__type(name: "Disease")"""
+    Seq(
+      s"$search { hits { nope } }" ->
+        "unknown field 'nope' on search hits — supported: id, name, entity, object",
+      s"$search { hits { id { x } } }" -> "is a scalar",
+      """facets(queryString: "r") { hits { nope } }""" ->
+        "unknown field 'nope' on facets hits — supported: id, label, category",
+      """facets(queryString: "r") { hits { label { x } } }""" -> "is a scalar",
+      """facets(queryString: "r") { categories { nope } }""" ->
+        "unknown field 'nope' on facets categories — supported: name, total",
+      """facets(queryString: "r") { categories { total { x } } }""" ->
+        "is a scalar",
+      s"$aggs { nope } } }" -> ("unknown field 'nope' on aggregations " +
+        "entities — supported: name, total, categories"),
+      s"$aggs { total { x } } } }" -> "is a scalar",
+      s"$aggs { categories { nope } } } }" ->
+        "unknown field 'nope' on aggregations categories — supported: name, total",
+      s"$aggs { categories { name { x } } } } }" -> "is a scalar",
+      """mapIds(queryTerms: ["a"]) { mappings { nope } }""" ->
+        "unknown field 'nope' on mapIds mappings — supported: term, hits",
+      """mapIds(queryTerms: ["a"]) { mappings { term { x } } }""" ->
+        "is a scalar",
+      s"$evidences { rows { nope } } }" -> ("unknown field 'nope' on " +
+        "evidences rows — supported: id, score, target, disease"),
+      s"$evidences { rows { score { x } } } }" -> "is a scalar",
+      s"$similar { nope } }" ->
+        "unknown field 'nope' on similarEntities — supported: id, category, score, object",
+      s"$similar { category { x } } }" -> "is a scalar",
+      s"$moa { nope } } }" -> ("unknown field 'nope' on " +
+        "drug.mechanismsOfAction rows — supported: mechanismOfAction, actionType, targets"),
+      s"$moa { actionType { x } } } }" -> "is a scalar",
+      "meta { nope }" ->
+        "unknown field 'nope' on meta — supported: name, apiVersion, dataVersion",
+      "meta { name { x } }" -> "is a scalar",
+      "__schema { nope }" ->
+        "unknown introspection field 'nope' on __schema — supported: queryType",
+      "__schema { queryType { nope } }" -> ("unknown introspection field " +
+        "'nope' on __schema.queryType — supported: fields, kind, name"),
+      "__schema { queryType { kind { x } } }" -> "is a scalar",
+      s"$fields { nope } } }" -> ("unknown introspection field 'nope' on " +
+        "queryType.fields — supported: args, name, type"),
+      s"$fields { name { x } } } }" -> "is a scalar",
+      s"$fields { args { nope } } } }" -> ("unknown introspection field " +
+        "'nope' on fields.args — supported: name, type"),
+      s"$fields { args { name { x } } } } }" -> "is a scalar",
+      s"$fields { args { type { nope } } } } }" -> ("unknown introspection " +
+        "field 'nope' on args.type — supported: name"),
+      s"$fields { type { nope } } } }" -> ("unknown introspection field " +
+        "'nope' on fields.type — supported: name"),
+      s"$fields { type { name { x } } } } }" -> "is a scalar",
+      s"$tpe { nope }" -> ("unknown introspection field 'nope' on __type " +
+        "— supported: fields, kind, name"),
+      s"$tpe { kind { x } }" -> "is a scalar",
+      s"$tpe { fields { nope } }" -> ("unknown introspection field 'nope' " +
+        "on __type.fields — supported: name"),
+      s"$tpe { fields { name { x } } }" -> "is a scalar"
+    ).foreach { case (q, want) =>
+      val msg = err(s"{ $q }")
+      assert(msg.contains(want), s"{ $q }: $msg")
+    }
   }
 
   test("execute: size pages rows but count stays the total") {
@@ -1001,6 +1069,9 @@ query diseaseAssociatedDrugs {  # reference candidate_drugs.py shape
       .contains("duplicate queryTerms"))
     assert(err("""{ mapIds(queryTerms: []) { total } }""")
       .contains("must not be empty"))
+    // empty ENTRIES name the actual defect, not an empty list
+    assert(err("""{ mapIds(queryTerms: ["", ""]) { total } }""")
+      .contains("must not contain empty strings"))
     // a free-text term CONTAINING a comma survives as ONE term (list
     // args are NUL-joined — a comma encoding silently split it)
     val comma = GraphQl.execute(kg,
@@ -1219,6 +1290,70 @@ query diseaseAssociatedDrugs {  # reference candidate_drugs.py shape
       .contains("supported: name"))
     assert(err("""{ __schema { queryType { name } } __typename }""")
       .contains("exactly one root field"))
+  }
+
+  test("execute: introspection is the contract — every listed field of every served type executes") {
+    // a query reaching each type `__type(name:)` serves; %s is the
+    // type's selection
+    val reach = Map(
+      "Disease" -> """{ disease(efoId: "DIS_BUILDING") { %s } }""",
+      "Target" -> """{ target(ensemblId: "TGT_7") { %s } }""",
+      "Drug" -> """{ drug(chemblId: "DRG_7") { %s } }""",
+      "GeneOntologyTerm" -> """{ geneOntologyTerms(goIds: ["GO_1"]) { %s } }""",
+      "Tractability" -> """{ target(ensemblId: "TGT_3") { tractability { %s } } }""",
+      "HPO" -> """{ disease(efoId: "DIS_BUILDING") {
+        phenotypes { rows { phenotypeHPO { %s } } } } }""",
+      "Evidence" -> """{ disease(efoId: "DIS_MACHINERY") {
+        evidences(ensemblIds: ["TGT_1"]) { rows { %s } } } }""",
+      "Similarity" -> """{ target(ensemblId: "TGT_7") {
+        similarEntities(size: 2) { %s } } }""",
+      "Meta" -> "{ meta { %s } }")
+    // the smallest valid selection of each listed non-scalar field
+    val minimal = Map(
+      "knownDrugs" -> "knownDrugs { count }",
+      "associatedTargets" -> "associatedTargets { count }",
+      "associatedDiseases" -> "associatedDiseases { count }",
+      "phenotypes" -> "phenotypes { count }",
+      "evidences" -> """evidences(ensemblIds: ["TGT_1"]) { count }""",
+      "pathways" -> "pathways { topLevelTerm }",
+      "tractability" -> "tractability { label }",
+      "similarEntities" -> "similarEntities(size: 2) { id }",
+      "linkedTargets" -> "linkedTargets { count }",
+      "mechanismsOfAction" -> "mechanismsOfAction { uniqueActionTypes }",
+      "target" -> "target { id }",
+      "disease" -> "disease { id }",
+      "object" -> "object { __typename }",
+      "apiVersion" -> "apiVersion { x }",
+      "dataVersion" -> "dataVersion { year }")
+    // each root of the Query type, at its smallest selection
+    val roots = Map(
+      "disease" -> """disease(efoId: "DIS_BUILDING") { id }""",
+      "diseases" -> """diseases(efoIds: ["DIS_BUILDING"]) { id }""",
+      "target" -> """target(ensemblId: "TGT_7") { id }""",
+      "targets" -> """targets(ensemblIds: ["TGT_7"]) { id }""",
+      "drug" -> """drug(chemblId: "DRG_7") { id }""",
+      "drugs" -> """drugs(chemblIds: ["DRG_7"]) { id }""",
+      "search" -> """search(queryString: "r") { total }""",
+      "facets" -> """facets(queryString: "r") { total }""",
+      "mapIds" -> """mapIds(queryTerms: ["r"]) { total }""",
+      "meta" -> "meta { name }",
+      "associationDatasources" -> "associationDatasources { datasource }",
+      "interactionResources" -> "interactionResources { sourceDatabase }",
+      "geneOntologyTerms" -> """geneOntologyTerms(goIds: ["GO_1"]) { id }""")
+    def listed(t: String): Seq[String] = GraphQl.execute(kg,
+      s"""{ __type(name: "$t") { fields { name } } }""")
+      .head().getSeq[Row](0).map(_.getString(0))
+    val served = intercept[ParseError](GraphQl.execute(kg,
+      """{ __type(name: "Nope") { name } }""")).getMessage
+      .split("introspectable types: ").last.split(", ").toSeq
+    assert(served.sorted == (reach.keys.toSeq :+ "Query").sorted,
+      s"served types without a reaching query: $served")
+    assert(listed("Query").sorted == roots.keys.toSeq.sorted)
+    roots.values.foreach(q => GraphQl.execute(kg, s"{ $q }").collect())
+    reach.foreach { case (t, q) =>
+      val sel = listed(t).map(f => minimal.getOrElse(f, f)).mkString(" ")
+      GraphQl.execute(kg, q.replace("%s", sel)).collect()
+    }
   }
 
   test("execute: unknown-root error lists the schema's full Query type") {
