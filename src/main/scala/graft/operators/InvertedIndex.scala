@@ -51,19 +51,9 @@ object InvertedIndex {
     * at high cadence.
     */
   def appendPostings(indexPath: String, newDocs: DataFrame,
-                     idName: String, text: Column): Unit = {
-    val spark = newDocs.sparkSession
-    val postings = build(newDocs, idName, text)
-    // bootstrap: appending to a not-yet-existing index creates
-    // generation 0 (nothing to clash with). Hadoop-FS check: the
-    // read/write accept remote indexPaths, and a java.io.File check
-    // would silently skip the guard there
-    val out =
-      if (!Artifact.hadoopDirExists(spark, indexPath)) postings
-      else Similarity.withIdsDisjointGuard(postings, newDocs, spark, indexPath,
-        idName, "appendPostings")
-    Publish.guarded(out.write.mode("append").parquet(indexPath))
-  }
+                     idName: String, text: Column): Unit =
+    Publish.append(build(newDocs, idName, text), newDocs, indexPath, idName,
+      "appendPostings")
 
   /** Document frequency per term — the index's dictionary. */
   def dictionary(postings: DataFrame, idName: String): DataFrame =

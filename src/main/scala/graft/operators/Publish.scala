@@ -5,7 +5,7 @@ import java.util.UUID
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{concat, lit, raise_error}
+import org.apache.spark.sql.functions.{col, concat, format_string, lit, raise_error}
 
 /** The one publish path for persisted state — pipeline checkpoints,
   * vector indexes, stream-state generations, compaction folds.
@@ -55,7 +55,9 @@ import org.apache.spark.sql.functions.{concat, lit, raise_error}
   *
   * Partition-level rewrites ([[partitions]]) use Spark's dynamic
   * partition overwrite, which stages in `.spark-staging-*` and swaps
-  * the written partitions at job commit.
+  * the written partitions at job commit. Appends ([[append]]) are not
+  * staged: they add files to a live table, with every guard riding
+  * the write job, so a fired guard lands nothing.
   */
 object Publish {
   val Sentinel = "GRAFT_GUARD:"
@@ -88,6 +90,40 @@ object Publish {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(cols: _*).parquet(target))
     graft.Tables.forget(target)
+  }
+
+  /** Append `rows` as new files of `table` (partitioned by
+    * `partitionBy`) — the one append path of the persisted indexes.
+    * `rows` is `batch` encoded under the table's frozen state, its
+    * in-row guards already in place; the append adds the shared one:
+    * ids of `batch` already in `table` raise (a replayed batch would
+    * duplicate rows and every serve path could return one id twice).
+    * Appending to a table that does not exist yet creates it (nothing
+    * to clash with). `who` prefixes the guard text.
+    */
+  def append(rows: DataFrame, batch: DataFrame, table: String, idName: String,
+             who: String, partitionBy: String*): Unit = {
+    val spark = rows.sparkSession
+    val out =
+      if (!Artifact.hadoopDirExists(spark, table)) rows
+      else withGuardRows(rows, batch.select(col(idName))
+          .join(spark.read.parquet(table).select(col(idName)), Seq(idName), "left_semi"),
+        format_string(s"$who: batch re-ingests indexed $idName %s — id spaces " +
+          "must be disjoint", col(idName).cast("string")))
+    guarded(out.write.mode("append").partitionBy(partitionBy: _*).parquet(table))
+  }
+
+  /** `out` plus one raising row per row of `violations` (zero rows
+    * unless violated): the guard fires DURING the write, before it
+    * commits. Ids only flow through `violations` — the payload never
+    * shuffles on a guard's account.
+    */
+  private[operators] def withGuardRows(out: DataFrame, violations: DataFrame,
+                                       text: Column): DataFrame = {
+    val cols = out.schema.fields.zipWithIndex.map { case (f, i) =>
+      (if (i == 0) raise(text) else lit(null)).cast(f.dataType).as(f.name)
+    }
+    out.unionByName(violations.select(cols.toSeq: _*))
   }
 
   /** Run `body`, rethrowing a fired guard as described in step 3. */

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 import graft.functions.VecFns
 
@@ -17,6 +18,20 @@ import graft.functions.VecFns
   *    cluster scale the signature is a persisted/bucketed column, so
   *    the query scans 8 bytes/row instead of 256 and only computes
   *    full cosine on the candidate fraction.
+  *
+  * The persisted index tiers (IVF, PQ, SQ8, IVF×SQ8, binary) share one
+  * lifecycle. A [[Tier]] names each tier's parts — the code or vector
+  * table first, then its sidecars — and [[ensureIndex]] builds a tier
+  * only when a part is incomplete. A build freezes parameter-sized
+  * state once (centroids, codebooks, scales or thresholds), written
+  * and read back through one sidecar codec. Every later batch — an
+  * append, a streaming code sink, the curation sink — is coded under
+  * that frozen state by the tier's guarded encoder ([[frozenVecs]]:
+  * NULL, then width, then the SQ8 clip, each one in-row raise), and
+  * lands through the one append path ([[graft.operators.Publish
+  * .append]], which adds the id-disjointness guard). Drifted lists of
+  * the list-partitioned tiers are retrained by one partial rebuild
+  * ([[rebuildLists]]).
   */
 object Similarity {
 
@@ -289,6 +304,221 @@ object Similarity {
     }
   }
 
+  // ================= persisted index lifecycle =================
+
+  /** One persisted index tier: its family name (the `append<name>Index`,
+    * `ensure<name>Index` and `rebuild<name>Lists` its messages name) and
+    * the parts every complete generation holds — the code or vector
+    * table first, in the order its build writes them.
+    */
+  private[graft] final case class Tier(name: String, parts: String*) {
+    def at(path: String): Seq[String] = parts.map(d => s"$path/$d")
+    def complete(path: String): Boolean = at(path).forall(Artifact.complete)
+  }
+
+  private[graft] val IvfTier = Tier("Ivf", "vectors", "centroids", "stats")
+  private[graft] val PqTier = Tier("Pq", "codes", "codebooks", "stats")
+  private[graft] val Sq8Tier = Tier("Sq8", "codes", "scales")
+  private[graft] val IvfSq8Tier = Tier("IvfSq8", "codes", "centroids", "scales")
+  private[graft] val BinaryTier = Tier("Binary", "codes", "thresholds")
+
+  /** Build `tier`'s index at `path` only if a part is incomplete (a
+    * pre-baseline generation reads as incomplete and is rebuilt). All
+    * parts publish together: `build` writes under a staged root that
+    * swaps in whole ([[Artifact.ensure]]), so a reader never sees a
+    * table without its sidecars.
+    */
+  private[graft] def ensureIndex(path: String, tier: Tier)(build: String => Unit): Unit =
+    Artifact.ensure(path, tier.complete)(build)
+
+  /** Parameter-sized driver state as a relation: `ddl`'s columns. */
+  private def stateFrame(spark: SparkSession, ddl: String, rows: Seq[Row]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, StructType.fromDDL(ddl))
+  }
+
+  /** A sidecar — frozen state as `ddl` rows, one file — written into
+    * the (staged) directory `dir`.
+    */
+  private def writeSidecar(spark: SparkSession, dir: String, ddl: String,
+                           rows: Seq[Row]): Unit =
+    stateFrame(spark, ddl, rows).coalesce(1).write.parquet(dir)
+
+  /** A sidecar's rows, ordered by its leading INT key columns. */
+  private def readSidecar(spark: SparkSession, dir: String): Array[Row] = {
+    val df = spark.read.parquet(dir)
+    val keys = df.schema.indices.takeWhile(df.schema(_).dataType == IntegerType)
+    df.collect().sortBy(r => keys.map(r.getInt))(Ordering.Implicits.seqOrdering)
+  }
+
+  /** The per-dimension `(dim INT, <value> DOUBLE)` sidecar (SQ8 scales,
+    * binary thresholds).
+    */
+  private def writeDims(spark: SparkSession, dir: String, value: String,
+                        xs: Array[Double]): Unit =
+    writeSidecar(spark, dir, s"dim INT, $value DOUBLE",
+      xs.toSeq.zipWithIndex.map { case (x, d) => Row(d, x) })
+
+  private def readDims(spark: SparkSession, dir: String): Array[Double] =
+    readSidecar(spark, dir).map(_.getDouble(1))
+
+  private def centroidRows(cents: Seq[Array[Float]]): Seq[Row] =
+    cents.zipWithIndex.map { case (c, i) => Row(i, c.toSeq) }
+
+  /** The centroid sidecar, written into the (staged) directory `dir`. */
+  private def writeCentroids(spark: SparkSession, cents: Seq[Array[Float]],
+                             dir: String): Unit =
+    writeSidecar(spark, dir, "cid INT, centroid ARRAY<FLOAT>", centroidRows(cents))
+
+  private[graft] def readCentroids(spark: SparkSession,
+                                   indexPath: String): Seq[Array[Float]] =
+    readSidecar(spark, s"$indexPath/centroids").map(_.getSeq[Float](1).toArray).toSeq
+
+  /** In-row guard for the nearest-cell writes: a NULL vector has no
+    * nearest cell (the fused kernels return NULL, which would land in
+    * a default partition or a NULL code row).
+    */
+  private def nonNullVecs(df: DataFrame, vecName: String, who: String): DataFrame =
+    guardVecs(df, vecName, who, Nil)
+
+  /** `df` as a tier's encoder under frozen state coding `n` dimensions
+    * may read it — the guarded half of every encoder that codes a batch
+    * after the build. In this order, each an in-row [[Publish]] raise:
+    * a NULL vector ([[nonNullVecs]]); a vector of any other width
+    * (zip_with and slice would quietly pad or truncate it); and, given
+    * the SQ8 `scales`, a coordinate whose |x| exceeds its frozen scale
+    * (its code would clip outside int8 and corrupt every ranking
+    * involving it — rebuild over the union when it trips). The
+    * branches are tried in order, so the clip test only sees vectors of
+    * exactly `n` dimensions. Builds code the corpus their state came
+    * from and keep their own guards.
+    */
+  private[graft] def frozenVecs(df: DataFrame, vecName: String, n: Int, who: String,
+                                scales: Option[Array[Double]] = None): DataFrame = {
+    val v = col(vecName)
+    val clip = scales.toSeq.map { sc =>
+      val scLit = typedlit(sc.toSeq)
+      // (dim, |x|) of every coordinate beyond its scale
+      val viol = filter(transform(v.cast("array<double>"),
+          (x, i) => struct(i.cast("int").as("d"), abs(x).as("m"))),
+        p => p.getField("m") > element_at(scLit, p.getField("d") + 1))
+      val first = element_at(viol, 1)
+      (size(viol) > 0) -> format_string(s"$who: a vector's |x_%d| = %.6g exceeds " +
+          "the frozen scale %.6g — codes would clip; rebuild the index over the " +
+          "union instead", first.getField("d"), first.getField("m"),
+        element_at(scLit, first.getField("d") + 1))
+    }
+    guardVecs(df, vecName, who, ((size(v) =!= n) -> format_string(s"$who: a " +
+      s"vector has dimension %d but the index codes $n — not the same embedding space",
+      size(v))) +: clip)
+  }
+
+  /** `df` with `vecName` raising `who`'s NULL text, then each guard's
+    * text where its condition holds.
+    */
+  private def guardVecs(df: DataFrame, vecName: String, who: String,
+                        guards: Seq[(Column, Column)]): DataFrame = {
+    val v = col(vecName)
+    val nul = when(v.isNull, Publish.raise(lit(
+      s"$who: a NULL $vecName has no nearest cell — drop or embed it first")))
+    df.withColumn(vecName, guards.foldLeft(nul) { case (w, (bad, text)) =>
+      w.when(bad, Publish.raise(text))
+    }.otherwise(v))
+  }
+
+  /** Append `batch` to `tier`'s table at `indexPath` (partitioned by
+    * `partitionBy`): `encode` codes it under the frozen state, given the
+    * guard prefix, and [[Publish.append]] adds the id guard.
+    */
+  private def appendIndex(indexPath: String, tier: Tier, batch: DataFrame,
+                          idName: String, partitionBy: String*)
+                         (encode: String => DataFrame): Unit = {
+    val who = s"append${tier.name}Index"
+    Publish.append(encode(who), batch, tier.at(indexPath).head, idName, who,
+      partitionBy: _*)
+  }
+
+  /** Partial rebuild of the flagged lists of a list-partitioned tier
+    * (its table partitioned by `__cid`; [[rebuildIvfLists]],
+    * [[rebuildIvfSq8Lists]]). The flagged lists' members are read back
+    * (directory-pruned) as (`idName`, `payload`, `geometry` — the
+    * vector the quantizer retrains on, an expression over the table's
+    * rows, evaluated after the argument checks) and a fresh
+    * deterministic quantizer is trained over just them: farthest-point
+    * seeds plus one Lloyd step. The flagged cid slots are reused and
+    * surplus slots (`splitTo`, capped at [[RebuildSlotCap]]) get new
+    * cids past the current nlist. Each member re-assigns to its nearest
+    * retrained slot — never into an untouched list — so the write is a
+    * directory-scoped dynamic partition overwrite; untouched list files
+    * stay byte-identical, and an emptied flagged slot's directory is
+    * deleted. Last, the centroid sidecar swaps the retrained slots in.
+    * Returns (slot cids, updated centroids).
+    */
+  private def rebuildLists(spark: SparkSession, indexPath: String, tier: Tier,
+                           idName: String, cids: Seq[Int], splitTo: Option[Int],
+                           payload: String, geometry: => Column)
+      : (Seq[Int], Seq[Array[Float]]) = {
+    val who = s"rebuild${tier.name}Lists"
+    val remedy = s"ensure${tier.name}Index over the union"
+    require(cids.nonEmpty, s"$who: no lists to rebuild")
+    require(cids.distinct.size == cids.size,
+      s"$who: duplicate cids in ${cids.mkString(",")}")
+    val cents = readCentroids(spark, indexPath)
+    val unknown = cids.filterNot(c => c >= 0 && c < cents.size)
+    require(unknown.isEmpty,
+      s"$who: unknown cid(s) ${unknown.mkString(",")} (nlist=${cents.size})")
+    val table = tier.at(indexPath).head
+    val members = spark.read.parquet(table)
+      .filter(col("__cid").isin(cids: _*))
+      .select(col(idName), col(payload), geometry.as("__vec"))
+    val memberCount = members.count()
+    require(memberCount > 0, s"$who: the flagged lists hold no members")
+    // default: the flagged slots are retrained in place (same nlist —
+    // probing geometry unchanged, so recall at fixed nprobe is
+    // comparable to a full rebuild). `splitTo` grows the slot count
+    // for occupancy control when the drifted mass outgrew its lists;
+    // the caller then owns the nprobe/nlist trade.
+    // reject BEFORE any mutation: fewer members than flagged lists
+    // cannot fill the reused cid slots (slotCids would outrun the
+    // retrained centroids and abort mid-rewrite with stale sidecars)
+    require(memberCount >= cids.size,
+      s"$who: the ${cids.size} flagged lists hold only $memberCount member(s) " +
+        s"— rebuild the index instead ($remedy)")
+    val slots = math.min(memberCount, splitTo.getOrElse(cids.size).toLong).toInt
+    require(slots >= cids.size,
+      s"$who: splitTo=$slots below the flagged count ${cids.size}")
+    // loud cap: farthestSeeds runs slots−1 sequential driver-coordinated
+    // scans over the members relation — right-sized for a partial
+    // rebuild's sliver, a 200-job loop for a mass drift. Past the cap
+    // the caller is rebuilding most of the index anyway.
+    require(slots <= RebuildSlotCap,
+      s"$who: $slots retrained slots exceeds the cap of $RebuildSlotCap — a " +
+        s"drift this wide is a full rebuild, not a partial one ($remedy)")
+    // farthest-point seeding, NOT lowest-id: a drifted list mixes an
+    // old mode with a new one, and every low id predates the drift —
+    // lowest-id seeds would all land in the old mode and the retrain
+    // would mis-center exactly the mass it exists to fix
+    val newCents = lloydStep(members, idName, "__vec",
+      farthestSeeds(members, idName, "__vec", slots))
+    // slot -> cid: reuse the flagged slots first, then fresh cids
+    // past the current nlist for the surplus
+    val slotCids: Seq[Int] =
+      cids ++ (cents.size until cents.size + (slots - cids.size))
+    // re-assign among the retrained slots ONLY: the overwrite below
+    // replaces partitions present in the written data — a member
+    // routed into an unflagged list would clobber that whole list
+    val landed = rewriteLists(members.select(col(idName), col(payload),
+      element_at(typedlit(slotCids), nearestCid(col("__vec"), newCents) + 1)
+        .as("__cid")), table)
+    dropStaleListDirs(spark, table, cids.filterNot(landed))
+    val cidToSlot = slotCids.zipWithIndex.toMap
+    val updCents = cents.zipWithIndex.map { case (c, i) =>
+      cidToSlot.get(i).map(newCents).getOrElse(c)
+    } ++ newCents.drop(cids.size)
+    Publish.dir(spark, s"$indexPath/centroids")(writeCentroids(spark, updCents, _))
+    (slotCids, updCents)
+  }
+
   /** IVF-style ANN: a coarse quantizer (nlist centroids trained with
     * one distributed Lloyd iteration from deterministic seeds), each
     * vector assigned to its nearest centroid at build time; a query
@@ -403,8 +633,7 @@ object Similarity {
   def buildIvfIndex(embeddings: DataFrame, idName: String, vecName: String,
                     nlist: Int, indexPath: String): Unit = {
     val spark = embeddings.sparkSession
-    Publish.dirs(spark, Seq("vectors", "centroids", "stats")
-        .map(d => s"$indexPath/$d")) { case Seq(vectors, centroids, stats) =>
+    Publish.dirs(spark, IvfTier.at(indexPath)) { case Seq(vectors, centroids, stats) =>
       val emb = nonNullVecs(embeddings, vecName, "buildIvfIndex")
       val cents = trainCentroids(emb, idName, vecName, nlist)
       emb.withColumn("__cid", nearestCid(col(vecName), cents))
@@ -422,22 +651,11 @@ object Similarity {
   }
 
   /** Build the IVF index only if it is not already on disk (vectors
-    * table, centroids sidecar, and the build-time drift baseline must
-    * all exist — a pre-baseline generation reads as incomplete and is
-    * rebuilt with provenance).
+    * table, centroids sidecar, and the build-time drift baseline).
     */
   def ensureIvfIndex(embeddings: DataFrame, idName: String, vecName: String,
-                     nlist: Int, indexPath: String): Unit = {
-    def ok(p: String) =
-      Artifact.complete(s"$p/vectors") && Artifact.complete(s"$p/centroids") &&
-        Artifact.complete(s"$p/stats")
-    // all pieces publish together: build under a staged root, swap the
-    // ROOT into place (Artifact.ensure), so a reader never sees
-    // vectors without the sidecars
-    Artifact.ensure(indexPath, ok) { tmp =>
-      buildIvfIndex(embeddings, idName, vecName, nlist, tmp)
-    }
-  }
+                     nlist: Int, indexPath: String): Unit =
+    ensureIndex(indexPath, IvfTier)(buildIvfIndex(embeddings, idName, vecName, nlist, _))
 
   /** Per-list (cid, n, mean residual ×1e6) over an assigned vectors
     * relation: one broadcast join against the list-count-sized
@@ -447,14 +665,8 @@ object Similarity {
     */
   private def listStats(vectors: DataFrame, cents: Seq[Array[Float]],
                         vecName: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val spark = vectors.sparkSession
-    val cRows = cents.zipWithIndex.map { case (c, i) =>
-      org.apache.spark.sql.Row(i, c.toSeq)
-    }.asJava
-    val centDf = spark.createDataFrame(cRows,
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "cid INT, __cent ARRAY<FLOAT>"))
+    val centDf = stateFrame(vectors.sparkSession, "cid INT, __cent ARRAY<FLOAT>",
+      centroidRows(cents))
     vectors.join(broadcast(centDf), col("__cid") === col("cid"))
       .select(col("cid"), (lit(1000000L) -
         round(VecFns.cosine(col(vecName), col("__cent")) * 1e6, 0)
@@ -530,58 +742,30 @@ object Similarity {
     * documented debt: after enough appends the lists no longer
     * reflect the data distribution and recall degrades — re-train by
     * rebuilding (ensureIvfIndex on the union) when probe recall
-    * drops. A NULL vector has no nearest list and is rejected by an
-    * in-row [[Publish]] guard before the append commits.
+    * drops. A NULL vector, one of another width, and an id already
+    * indexed are rejected by in-row [[Publish]] guards before the
+    * append commits.
     */
   def appendIvfIndex(spark: org.apache.spark.sql.SparkSession,
                      indexPath: String, newEmbeddings: DataFrame,
                      idName: String, vecName: String): Unit = {
     val cents = readCentroids(spark, indexPath)
-    Publish.guarded(nonNullVecs(newEmbeddings.select(col(idName), col(vecName)),
-        vecName, "appendIvfIndex")
-      .withColumn("__cid", nearestCid(col(vecName), cents))
-      .write.mode("append").partitionBy("__cid")
-      .parquet(s"$indexPath/vectors"))
+    appendIndex(indexPath, IvfTier, newEmbeddings, idName, "__cid") { who =>
+      frozenVecs(newEmbeddings.select(col(idName), col(vecName)), vecName,
+          cents.head.length, who)
+        .withColumn("__cid", nearestCid(col(vecName), cents))
+    }
   }
-
-  /** The centroid sidecar, written into the (staged) directory `dir`. */
-  private def writeCentroids(spark: org.apache.spark.sql.SparkSession,
-                             cents: Seq[Array[Float]], dir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val rows = cents.zipWithIndex.map { case (c, i) =>
-      org.apache.spark.sql.Row(i, c.toSeq)
-    }.asJava
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "cid INT, centroid ARRAY<FLOAT>")
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(dir)
-  }
-
-  /** In-row guard for the nearest-cell writes: a NULL vector has no
-    * nearest cell (the fused kernels return NULL, which would land in
-    * a default partition or a NULL code row).
-    */
-  private def nonNullVecs(df: DataFrame, vecName: String, who: String): DataFrame =
-    df.withColumn(vecName, when(col(vecName).isNull, Publish.raise(lit(
-      s"$who: a NULL $vecName has no nearest cell — drop or embed it first")))
-      .otherwise(col(vecName)))
 
   /** Partial rebuild of DRIFTED lists — the remedy [[ivfDriftReport]]
     * points at, without paying a full re-train + full-table rewrite
     * (at 100 TB a handful of flagged lists is a sliver of the
-    * inverted file). The flagged lists' members are read back
-    * (directory-pruned — only those partitions) and a fresh
-    * deterministic quantizer is trained over JUST them. The drifted
-    * mass usually OUTGREW its lists (that is what the occupancy flag
-    * means), so the members re-cluster into enough slots to restore
-    * the index's average list occupancy — the flagged cid slots are
-    * reused and the surplus slots get NEW cids appended to the
-    * centroid sidecar (`splitTo` overrides the auto sizing). Each
-    * member re-assigns to its nearest RETRAINED slot — never into an
-    * untouched list — so the write is a directory-scoped dynamic
-    * partition overwrite (the historyBuckets discipline) touching
-    * exactly the flagged + new `__cid=` directories; untouched list
-    * files stay byte-identical (spec-pinned). The stats sidecar
-    * RE-BASELINES only the rebuilt rows, so a subsequent
+    * inverted file): [[rebuildLists]] over the flagged lists' float
+    * members. The drifted mass usually OUTGREW its lists (that is what
+    * the occupancy flag means), so `splitTo` can re-cluster the members
+    * into more slots to restore the index's average list occupancy.
+    * Untouched list files stay byte-identical (spec-pinned). The stats
+    * sidecar RE-BASELINES only the rebuilt rows, so a subsequent
     * [[ivfDriftReport]] measures drift against the rebuilt state.
     * Probe-side recall/serve-cost recovery vs a full rebuild is
     * measured in ProbeMaintain (SCALING.md). The list rewrite and each
@@ -591,72 +775,11 @@ object Similarity {
   def rebuildIvfLists(spark: org.apache.spark.sql.SparkSession,
                       indexPath: String, idName: String, vecName: String,
                       cids: Seq[Int], splitTo: Option[Int] = None): Unit = {
-    require(cids.nonEmpty, "rebuildIvfLists: no lists to rebuild")
-    require(cids.distinct.size == cids.size,
-      s"rebuildIvfLists: duplicate cids in ${cids.mkString(",")}")
-    val cents = readCentroids(spark, indexPath)
-    val unknown = cids.filterNot(c => c >= 0 && c < cents.size)
-    require(unknown.isEmpty,
-      s"rebuildIvfLists: unknown cid(s) ${unknown.mkString(",")} " +
-        s"(nlist=${cents.size})")
-    val vecsPath = s"$indexPath/vectors"
-    val members = spark.read.parquet(vecsPath)
-      .filter(col("__cid").isin(cids: _*))
-      .select(col(idName), col(vecName))
-    val memberCount = members.count()
-    require(memberCount > 0,
-      "rebuildIvfLists: the flagged lists hold no members")
-    // default: the flagged slots are retrained in place (same nlist —
-    // probing geometry unchanged, so recall at fixed nprobe is
-    // comparable to a full rebuild). `splitTo` grows the slot count
-    // for occupancy control when the drifted mass outgrew its lists;
-    // the caller then owns the nprobe/nlist trade.
-    // reject BEFORE any mutation: fewer members than flagged lists
-    // cannot fill the reused cid slots (slotCids would outrun the
-    // retrained centroids and abort mid-rewrite with stale sidecars)
-    require(memberCount >= cids.size,
-      s"rebuildIvfLists: the ${cids.size} flagged lists hold only " +
-        s"$memberCount member(s) — rebuild the index instead " +
-        "(ensureIvfIndex over the union)")
-    val slots = math.min(memberCount, splitTo.getOrElse(cids.size).toLong).toInt
-    require(slots >= cids.size,
-      s"rebuildIvfLists: splitTo=$slots below the flagged count ${cids.size}")
-    // loud cap: farthestSeeds runs slots−1 sequential driver-coordinated
-    // scans over the members relation — right-sized for a partial
-    // rebuild's sliver, a 200-job loop for a mass drift. Past the cap
-    // the caller is rebuilding most of the index anyway.
-    require(slots <= RebuildSlotCap,
-      s"rebuildIvfLists: $slots retrained slots exceeds the cap of " +
-        s"$RebuildSlotCap — a drift this wide is a full rebuild, not a " +
-        "partial one (ensureIvfIndex over the union)")
-    // farthest-point seeding, NOT lowest-id: a drifted list mixes an
-    // old mode with a new one, and every low id predates the drift —
-    // lowest-id seeds would all land in the old mode and the retrain
-    // would mis-center exactly the mass it exists to fix
-    val newCents = lloydStep(members, idName, vecName,
-      farthestSeeds(members, idName, vecName, slots))
-    // slot -> cid: reuse the flagged slots first, then fresh cids
-    // past the current nlist for the surplus
-    val slotCids: Seq[Int] =
-      cids ++ (cents.size until cents.size + (slots - cids.size))
-    // re-assign among the retrained slots ONLY: the overwrite below
-    // replaces partitions present in the written data — a member
-    // routed into an unflagged list would clobber that whole list
-    val landed = rewriteLists(members
-      .withColumn("__cid",
-        element_at(typedlit(slotCids), nearestCid(col(vecName), newCents) + 1)),
-      vecsPath)
-    dropStaleListDirs(spark, vecsPath, cids.filterNot(landed))
-    // sidecars: swap the flagged slots' centroids, append the new
-    // slots; re-baseline the rebuilt rows of the drift-stats sidecar
-    val cidToSlot = slotCids.zipWithIndex.toMap
-    val updCents = cents.zipWithIndex.map { case (c, i) =>
-      cidToSlot.get(i).map(newCents).getOrElse(c)
-    } ++ newCents.drop(cids.size)
-    Publish.dir(spark, s"$indexPath/centroids")(writeCentroids(spark, updCents, _))
+    val (slotCids, cents) = rebuildLists(spark, indexPath, IvfTier, idName, cids,
+      splitTo, vecName, col(vecName))
     val fresh = listStats(
-        spark.read.parquet(vecsPath).filter(col("__cid").isin(slotCids: _*)),
-        updCents, vecName)
+        spark.read.parquet(s"$indexPath/vectors").filter(col("__cid").isin(slotCids: _*)),
+        cents, vecName)
       .withColumnRenamed("n", "n_build")
       .withColumnRenamed("resid_e6", "resid_build_e6")
     val kept = spark.read.parquet(s"$indexPath/stats")
@@ -675,12 +798,6 @@ object Similarity {
       reassigned.observe(obs, collect_set(col("__cid")).as("cids")), table, "__cid")
     obs.get("cids").asInstanceOf[scala.collection.Seq[Int]].toSet
   }
-
-  private[graft] def readCentroids(spark: org.apache.spark.sql.SparkSession,
-                            indexPath: String): Seq[Array[Float]] =
-    spark.read.parquet(s"$indexPath/centroids")
-      .collect().sortBy(_.getInt(0))
-      .map(_.getSeq[Float](1).toArray).toSeq
 
   /** Remove list directories a partial rebuild left stale (a
     * retrained slot that captured no members is absent from the
@@ -819,7 +936,7 @@ object Similarity {
   def buildPqIndex(embeddings: DataFrame, idName: String, vecName: String,
                    numSub: Int, k: Int, path: String): Unit = {
     val spark = embeddings.sparkSession
-    Publish.dirs(spark, Seq("codes", "codebooks", "stats").map(d => s"$path/$d")) {
+    Publish.dirs(spark, PqTier.at(path)) {
       case Seq(codes, codebooks, stats) =>
         val emb = nonNullVecs(embeddings, vecName, "buildPqIndex")
         val books = trainPqCodebooks(emb, idName, vecName, numSub, k)
@@ -848,17 +965,12 @@ object Similarity {
     }
   }
 
-  private def writeCodebooks(spark: org.apache.spark.sql.SparkSession,
-                             books: Seq[Seq[Array[Float]]], dir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val rows = books.zipWithIndex.flatMap { case (cs, s) =>
-      cs.zipWithIndex.map { case (c, i) => org.apache.spark.sql.Row(s, i, c.toSeq) }
-    }.asJava
-    spark.createDataFrame(rows,
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "sub INT, code INT, centroid ARRAY<FLOAT>"))
-      .coalesce(1).write.parquet(dir)
-  }
+  private def writeCodebooks(spark: SparkSession, books: Seq[Seq[Array[Float]]],
+                             dir: String): Unit =
+    writeSidecar(spark, dir, "sub INT, code INT, centroid ARRAY<FLOAT>",
+      books.zipWithIndex.flatMap { case (cs, s) =>
+        cs.zipWithIndex.map { case (c, i) => Row(s, i, c.toSeq) }
+      })
 
   /** Per-row quantization residual of subspace `s` (×1e6, long):
     * L2² of the row's subvector to its chosen cell, fixed-point so
@@ -1007,24 +1119,17 @@ object Similarity {
   }
 
   def ensurePqIndex(embeddings: DataFrame, idName: String, vecName: String,
-                    numSub: Int, k: Int, path: String): Unit = {
-    def ok(p: String) =
-      Artifact.complete(s"$p/codes") && Artifact.complete(s"$p/codebooks") &&
-        Artifact.complete(s"$p/stats")
-    Artifact.ensure(path, ok) { tmp =>
-      buildPqIndex(embeddings, idName, vecName, numSub, k, tmp)
-    }
-  }
+                    numSub: Int, k: Int, path: String): Unit =
+    ensureIndex(path, PqTier)(buildPqIndex(embeddings, idName, vecName, numSub, k, _))
 
   /** The codebook sidecar as driver state: numSub × k × subDim —
     * parameter-sized, ordered (sub, code).
     */
   def readPqCodebooks(spark: org.apache.spark.sql.SparkSession,
                       indexPath: String): Seq[Seq[Array[Float]]] =
-    spark.read.parquet(s"$indexPath/codebooks")
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map(_._2.sortBy(_._2).map(_._3).toSeq)
+    readSidecar(spark, s"$indexPath/codebooks")
+      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+      .map(_._2.map(_.getSeq[Float](2).toArray).toSeq)
 
   /** Append a batch to a PQ index under the FROZEN codebook sidecar —
     * the maintenance path the other quantization tiers already carry
@@ -1048,20 +1153,10 @@ object Similarity {
                     indexPath: String, newEmbeddings: DataFrame,
                     idName: String, vecName: String): Unit = {
     val books = readPqCodebooks(spark, indexPath)
-    val dim = books.size * books.head.head.length
-    // every guard rides the append job (in-row NULL/dim raises +
-    // id-clash union subtree) and rejects before any file lands
-    val codes = when(size(col(vecName)) =!= dim,
-        Publish.raise(format_string(
-          s"appendPqIndex: batch has dimension %d but the codebooks " +
-            s"encode $dim — not the same embedding space",
-          size(col(vecName)))).cast("array<int>"))
-      .otherwise(pqEncode(col(vecName), books))
-    val out = withIdsDisjointGuard(
-      nonNullVecs(newEmbeddings, vecName, "appendPqIndex")
-        .select(col(idName), codes.as("codes")),
-      newEmbeddings, spark, s"$indexPath/codes", idName, "appendPqIndex")
-    Publish.guarded(out.write.mode("append").parquet(s"$indexPath/codes"))
+    appendIndex(indexPath, PqTier, newEmbeddings, idName) { who =>
+      frozenVecs(newEmbeddings, vecName, books.size * books.head.head.length, who)
+        .select(col(idName), pqEncode(col(vecName), books).as("codes"))
+    }
   }
 
   /** Partial PQ rebuild — the maintenance remedy for a
@@ -1118,21 +1213,15 @@ object Similarity {
     require(unknown.isEmpty,
       s"rebuildPqSubspaces: unknown sub(s) ${unknown.mkString(",")} " +
         s"(numSub=$numSub)")
-    val dim = numSub * w
     // in-row guards, raised by the first job that reads the relation:
-    // dimensionality on every pass; on the re-encode also id-set
-    // equality — the code table is REWRITTEN from `embeddings`, so a
-    // missing id would silently drop its code row and an extra id
+    // NULL and dimensionality on every pass; on the re-encode also
+    // id-set equality — the code table is REWRITTEN from `embeddings`,
+    // so a missing id would silently drop its code row and an extra id
     // would silently append one
-    val emb = embeddings.withColumn(vecName,
-      when(size(col(vecName)) =!= dim, Publish.raise(format_string(
-        s"rebuildPqSubspaces: corpus has dimension %d but the codebooks " +
-          s"encode $dim — not the same embedding space", size(col(vecName)))))
-      .otherwise(col(vecName)))
+    val emb = frozenVecs(embeddings, vecName, numSub * w, "rebuildPqSubspaces")
     val codeIds = spark.read.parquet(s"$indexPath/codes").select(col(idName))
     val id = col(idName).cast("string")
-    Publish.dirs(spark, Seq("codes", "codebooks", "stats")
-        .map(d => s"$indexPath/$d")) { case Seq(codes, codebooks, stats) =>
+    Publish.dirs(spark, PqTier.at(indexPath)) { case Seq(codes, codebooks, stats) =>
       // one Lloyd refinement over JUST the flagged subspaces, seeded by
       // the frozen cells (the trainPqCodebooks refinement convention)
       val subRel = emb.select(posexplode(array(subs.map(s =>
@@ -1525,28 +1614,27 @@ object Similarity {
   def buildSq8Index(embeddings: DataFrame, idName: String, vecName: String,
                     indexPath: String): Unit = {
     val spark = embeddings.sparkSession
-    Publish.dirs(spark, Seq(s"$indexPath/codes", s"$indexPath/scales")) {
+    Publish.dirs(spark, Sq8Tier.at(indexPath)) {
       case Seq(codes, scalesDir) =>
         val scales = sq8Scales(embeddings, vecName)
-        embeddings.select(col(idName),
-            graft.functions.VecFns.packInt8(
-              sq8Quantize(col(vecName), scales)).as("codes"))
+        embeddings.select(col(idName), sq8Code(col(vecName), scales).as("codes"))
           .write.parquet(codes)
-        writeSq8Scales(spark, scales, scalesDir)
+        writeDims(spark, scalesDir, "scale", scales)
     }
   }
 
-  /** The scales sidecar, written into the (staged) directory `dir`. */
-  private def writeSq8Scales(spark: org.apache.spark.sql.SparkSession,
-                             scales: Array[Double], dir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val rows = scales.toSeq.zipWithIndex.map { case (m, d) =>
-      org.apache.spark.sql.Row(d, m)
-    }.asJava
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "dim INT, scale DOUBLE")
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(dir)
-  }
+  /** The packed SQ8 code of a vector column under `scales`. */
+  private def sq8Code(vec: Column, scales: Array[Double]): Column =
+    VecFns.packInt8(sq8Quantize(vec, scales))
+
+  /** The SQ8 tier's guarded encoder: (id, packed codes) of `df` under
+    * the frozen `scales`, every [[frozenVecs]] guard (clip included)
+    * riding the row.
+    */
+  private[graft] def sq8Codes(df: DataFrame, idName: String, vecName: String,
+                              scales: Array[Double], who: String): DataFrame =
+    frozenVecs(df, vecName, scales.length, who, Some(scales))
+      .select(col(idName), sq8Code(col(vecName), scales).as("codes"))
 
   /** Planning-pass half of a STREAMED SQ8 index: freeze the scales
     * sidecar BEFORE any batch arrives (one corpus pass — the same
@@ -1560,7 +1648,7 @@ object Similarity {
                     indexPath: String): Unit = {
     val spark = embeddings.sparkSession
     Publish.dir(spark, s"$indexPath/scales")(
-      writeSq8Scales(spark, sq8Scales(embeddings, vecName), _))
+      writeDims(spark, _, "scale", sq8Scales(embeddings, vecName)))
   }
 
   /** Build the SQ8 index only if absent — both halves publish
@@ -1568,32 +1656,8 @@ object Similarity {
     * codes without the scales sidecar (the ensureIvfIndex protocol).
     */
   def ensureSq8Index(embeddings: DataFrame, idName: String, vecName: String,
-                     indexPath: String): Unit = {
-    def ok(p: String) =
-      Artifact.complete(s"$p/codes") && Artifact.complete(s"$p/scales")
-    Artifact.ensure(indexPath, ok) { tmp =>
-      buildSq8Index(embeddings, idName, vecName, tmp)
-    }
-  }
-
-  /** Shared append guard, as a zero-row-unless-violated subtree to
-    * union onto the append write: a replayed/overlapping batch would
-    * silently duplicate rows in a code/vector table and every serve
-    * path could return the same id twice — any clashing id raises
-    * during the write, before any file lands. Ids only flow through
-    * the semi join (the payload never shuffles on the guard's
-    * account).
-    */
-  private[operators] def withIdsDisjointGuard(out: DataFrame, newRows: DataFrame,
-                                   spark: org.apache.spark.sql.SparkSession,
-                                   existingTable: String, idName: String,
-                                   caller: String): DataFrame = {
-    val clash = newRows.select(col(idName))
-      .join(spark.read.parquet(existingTable).select(col(idName)),
-        Seq(idName), "left_semi")
-    withGuardRows(out, clash, format_string(s"$caller: batch re-ingests " +
-      s"indexed $idName %s — id spaces must be disjoint", col(idName).cast("string")))
-  }
+                     indexPath: String): Unit =
+    ensureIndex(indexPath, Sq8Tier)(buildSq8Index(embeddings, idName, vecName, _))
 
   /** Rewrite guard for a table recoded from `corpus`: the two id sets
     * must be equal. A full-outer join of the ids alone (the payload
@@ -1604,37 +1668,10 @@ object Similarity {
   private def withSameIdsGuard(out: DataFrame, corpus: DataFrame,
                                indexIds: DataFrame, idName: String,
                                text: Column): DataFrame =
-    withGuardRows(out, corpus.select(col(idName), lit(true).as("__e"))
+    Publish.withGuardRows(out, corpus.select(col(idName), lit(true).as("__e"))
       .join(indexIds.select(col(idName), lit(true).as("__c")), Seq(idName), "full_outer")
       .filter(col("__e").isNull || col("__c").isNull)
       .select(col(idName), col("__e").isNull.as("__missing")), text)
-
-  /** `out` plus one raising row per row of `violations` (zero rows
-    * unless violated): the guard fires DURING the write, before it
-    * commits.
-    */
-  private def withGuardRows(out: DataFrame, violations: DataFrame,
-                            text: Column): DataFrame = {
-    val cols = out.schema.fields.zipWithIndex.map { case (f, i) =>
-      (if (i == 0) Publish.raise(text) else lit(null)).cast(f.dataType).as(f.name)
-    }
-    out.unionByName(violations.select(cols.toSeq: _*))
-  }
-
-  /** First clipping (dim, |x|) pair of a row against frozen per-dim
-    * scales, for the SQ8 appends' in-row clip guards: empty when the
-    * row codes cleanly. The `<` guard keeps element_at in range; dims
-    * beyond the sidecar are the dimensionality guard's job.
-    */
-  private def sq8ClipViolation(vec: Column,
-                               scales: Array[Double]): Column = {
-    val scLit = typedlit(scales.toSeq)
-    filter(
-      transform(vec.cast("array<double>"),
-        (x, i) => struct(i.cast("int").as("d"), abs(x).as("m"))),
-      p => p.getField("d") < lit(scales.length) &&
-        p.getField("m") > element_at(scLit, p.getField("d") + 1))
-  }
 
   /** Append a new batch to an existing SQ8 index WITHOUT re-deriving
     * scales: the batch quantizes against the PERSISTED scales sidecar
@@ -1649,8 +1686,9 @@ object Similarity {
     * int8 and silently corrupt every ranking involving it — one
     * in-row guard rejects the batch before the append commits
     * (rebuild via [[buildSq8Index]] on the union when it trips). A
-    * batch wider than the index's dimensionality is rejected the same
-    * way. Each append lands one file set — fold the code table with
+    * NULL vector, one of another width, and an id already indexed are
+    * rejected the same way. Each append lands one file set — fold the
+    * code table with
     * [[graft.sources.Compaction.compactAppends]] between appends at
     * high cadence.
     */
@@ -1658,29 +1696,9 @@ object Similarity {
                      indexPath: String, newEmbeddings: DataFrame,
                      idName: String, vecName: String): Unit = {
     val scales = readSq8Scales(spark, indexPath)
-    // all three guards ride the append job (in-row dim/clip raises +
-    // id-clash union subtree) and reject before any file lands
-    val viol = sq8ClipViolation(col(vecName), scales)
-    val codes = when(size(col(vecName)) > scales.length,
-        Publish.raise(format_string(
-          s"appendSq8Index: batch has dimension %d beyond the index's " +
-            s"${scales.length} — not the same embedding space",
-          size(col(vecName)) - 1)).cast("binary"))
-      .when(size(viol) > 0,
-        Publish.raise(format_string(
-          s"appendSq8Index: batch max |x_%d| = %.6g exceeds the frozen " +
-            "scale %.6g — codes would clip; rebuild the index over the " +
-            "union instead",
-          element_at(viol, 1).getField("d"),
-          element_at(viol, 1).getField("m"),
-          element_at(typedlit(scales.toSeq),
-            element_at(viol, 1).getField("d") + 1))).cast("binary"))
-      .otherwise(graft.functions.VecFns.packInt8(
-        sq8Quantize(col(vecName), scales)))
-    val out = withIdsDisjointGuard(
-      newEmbeddings.select(col(idName), codes.as("codes")),
-      newEmbeddings, spark, s"$indexPath/codes", idName, "appendSq8Index")
-    Publish.guarded(out.write.mode("append").parquet(s"$indexPath/codes"))
+    appendIndex(indexPath, Sq8Tier, newEmbeddings, idName) {
+      sq8Codes(newEmbeddings, idName, vecName, scales, _)
+    }
   }
 
   /** The scales sidecar (dim-sized driver state — the centroid/
@@ -1689,8 +1707,7 @@ object Similarity {
     */
   def readSq8Scales(spark: org.apache.spark.sql.SparkSession,
                     indexPath: String): Array[Double] =
-    spark.read.parquet(s"$indexPath/scales")
-      .collect().sortBy(_.getInt(0)).map(_.getDouble(1))
+    readDims(spark, s"$indexPath/scales")
 
   /** Query-time half: rank by the exact int64 dot of PACKED codes,
     * reading ONLY the code column — the query's own codes come from
@@ -1728,18 +1745,15 @@ object Similarity {
   def buildIvfSq8Index(embeddings: DataFrame, idName: String, vecName: String,
                        nlist: Int, indexPath: String): Unit = {
     val spark = embeddings.sparkSession
-    Publish.dirs(spark, Seq("codes", "centroids", "scales")
-        .map(d => s"$indexPath/$d")) { case Seq(codes, centroids, scalesDir) =>
+    Publish.dirs(spark, IvfSq8Tier.at(indexPath)) { case Seq(codes, centroids, scalesDir) =>
       val emb = nonNullVecs(embeddings, vecName, "buildIvfSq8Index")
       val cents = trainCentroids(emb, idName, vecName, nlist)
       val scales = sq8Scales(emb, vecName)
       emb.withColumn("__cid", nearestCid(col(vecName), cents))
-        .select(col(idName), col("__cid"),
-          graft.functions.VecFns.packInt8(
-            sq8Quantize(col(vecName), scales)).as("codes"))
+        .select(col(idName), col("__cid"), sq8Code(col(vecName), scales).as("codes"))
         .write.partitionBy("__cid").parquet(codes)
       writeCentroids(spark, cents, centroids)
-      writeSq8Scales(spark, scales, scalesDir)
+      writeDims(spark, scalesDir, "scale", scales)
     }
   }
 
@@ -1747,14 +1761,9 @@ object Similarity {
     * atomically (the ensureIvfIndex protocol).
     */
   def ensureIvfSq8Index(embeddings: DataFrame, idName: String, vecName: String,
-                        nlist: Int, indexPath: String): Unit = {
-    def ok(p: String) =
-      Artifact.complete(s"$p/codes") && Artifact.complete(s"$p/centroids") &&
-        Artifact.complete(s"$p/scales")
-    Artifact.ensure(indexPath, ok) { tmp =>
-      buildIvfSq8Index(embeddings, idName, vecName, nlist, tmp)
-    }
-  }
+                        nlist: Int, indexPath: String): Unit =
+    ensureIndex(indexPath, IvfSq8Tier)(buildIvfSq8Index(embeddings, idName, vecName,
+      nlist, _))
 
   /** Append a new batch to an existing IVF-SQ8 index: assignment
     * against the FROZEN centroid sidecar (the appendIvfIndex rule)
@@ -1766,8 +1775,9 @@ object Similarity {
     * BIT-IDENTICAL to building over the union with the same sidecars
     * (spec-pinned). Centroid drift and scale clipping are the two
     * documented debts; the first degrades recall gradually (rebuild
-    * when probes miss), the second fails loudly here, as does a NULL
-    * vector (no nearest list). Each append
+    * when probes miss), the second fails loudly here, as do a NULL
+    * vector (no nearest list), one of another width and an id already
+    * indexed. Each append
     * lands one file set inside each receiving list — fold with
     * [[graft.sources.Compaction.compactAppends]] (leaf-wise, list
     * dirs preserved) between appends at high cadence.
@@ -1777,30 +1787,11 @@ object Similarity {
                         idName: String, vecName: String): Unit = {
     val cents = readCentroids(spark, indexPath)
     val scales = readSq8Scales(spark, indexPath)
-    // all three guards ride the append job (the appendSq8Index fold)
-    val viol = sq8ClipViolation(col(vecName), scales)
-    val codes = when(size(col(vecName)) > scales.length,
-        Publish.raise(format_string(
-          s"appendIvfSq8Index: batch dimension %d beyond the index's " +
-            s"${scales.length} — not the same embedding space",
-          size(col(vecName)) - 1)).cast("binary"))
-      .when(size(viol) > 0,
-        Publish.raise(format_string(
-          s"appendIvfSq8Index: batch max |x_%d| = %.6g exceeds the " +
-            "frozen scale %.6g — codes would clip; rebuild over the union",
-          element_at(viol, 1).getField("d"),
-          element_at(viol, 1).getField("m"),
-          element_at(typedlit(scales.toSeq),
-            element_at(viol, 1).getField("d") + 1))).cast("binary"))
-      .otherwise(graft.functions.VecFns.packInt8(
-        sq8Quantize(col(vecName), scales)))
-    val out = withIdsDisjointGuard(
-      nonNullVecs(newEmbeddings, vecName, "appendIvfSq8Index")
-        .withColumn("__cid", nearestCid(col(vecName), cents))
-        .select(col(idName), col("__cid"), codes.as("codes")),
-      newEmbeddings, spark, s"$indexPath/codes", idName, "appendIvfSq8Index")
-    Publish.guarded(out.write.mode("append").partitionBy("__cid")
-      .parquet(s"$indexPath/codes"))
+    appendIndex(indexPath, IvfSq8Tier, newEmbeddings, idName, "__cid") { who =>
+      frozenVecs(newEmbeddings, vecName, scales.length, who, Some(scales))
+        .select(col(idName), nearestCid(col(vecName), cents).as("__cid"),
+          sq8Code(col(vecName), scales).as("codes"))
+    }
   }
 
   /** Partial list rebuild for the COMPOSED IVF×SQ8 index —
@@ -1816,62 +1807,22 @@ object Similarity {
     * [[rebuildIvfLists]] mis-centering argument), and the write is a
     * directory-scoped dynamic partition overwrite: untouched list
     * files stay byte-identical (spec-pinned), stale emptied slots are
-    * Hadoop-FS-deleted with a required result. `splitTo` grows the
-    * slot count for occupancy control, capped at [[RebuildSlotCap]].
-    * The composed index keeps no stats sidecar, so there is nothing
-    * to re-baseline. The list rewrite and the centroid sidecar publish
-    * atomically one after the other.
+    * Hadoop-FS-deleted with a required result — [[rebuildLists]] over
+    * the reconstructed members, the codes as payload. The composed
+    * index keeps no stats sidecar, so there is nothing to re-baseline.
+    * The list rewrite and the centroid sidecar publish atomically one
+    * after the other.
     */
   def rebuildIvfSq8Lists(spark: org.apache.spark.sql.SparkSession,
                          indexPath: String, idName: String,
                          cids: Seq[Int], splitTo: Option[Int] = None): Unit = {
-    require(cids.nonEmpty, "rebuildIvfSq8Lists: no lists to rebuild")
-    require(cids.distinct.size == cids.size,
-      s"rebuildIvfSq8Lists: duplicate cids in ${cids.mkString(",")}")
-    val cents = readCentroids(spark, indexPath)
-    val unknown = cids.filterNot(c => c >= 0 && c < cents.size)
-    require(unknown.isEmpty,
-      s"rebuildIvfSq8Lists: unknown cid(s) ${unknown.mkString(",")} " +
-        s"(nlist=${cents.size})")
-    val scales = readSq8Scales(spark, indexPath)
-    val codesPath = s"$indexPath/codes"
     // reconstruction under the frozen scales: the same geometry the
     // coarse quantizer assigned on, up to per-coordinate quantization
-    val recon = zip_with(
-      graft.functions.VecFns.unpackInt8(col("codes")).cast("array<double>"),
-      typedlit(scales.toSeq), (c, m) => c * m / lit(127.0))
-      .cast("array<float>")
-    val members = spark.read.parquet(codesPath)
-      .filter(col("__cid").isin(cids: _*))
-      .select(col(idName), col("codes"), recon.as("__vec"))
-    val memberCount = members.count()
-    require(memberCount > 0,
-      "rebuildIvfSq8Lists: the flagged lists hold no members")
-    require(memberCount >= cids.size,
-      s"rebuildIvfSq8Lists: the ${cids.size} flagged lists hold only " +
-        s"$memberCount member(s) — rebuild the index instead " +
-        "(ensureIvfSq8Index over the union)")
-    val slots = math.min(memberCount, splitTo.getOrElse(cids.size).toLong).toInt
-    require(slots >= cids.size,
-      s"rebuildIvfSq8Lists: splitTo=$slots below the flagged count ${cids.size}")
-    require(slots <= RebuildSlotCap,
-      s"rebuildIvfSq8Lists: $slots retrained slots exceeds the cap of " +
-        s"$RebuildSlotCap — a drift this wide is a full rebuild, not a " +
-        "partial one (ensureIvfSq8Index over the union)")
-    val newCents = lloydStep(members, idName, "__vec",
-      farthestSeeds(members, idName, "__vec", slots))
-    val slotCids: Seq[Int] =
-      cids ++ (cents.size until cents.size + (slots - cids.size))
-    val landed = rewriteLists(members
-      .withColumn("__cid",
-        element_at(typedlit(slotCids), nearestCid(col("__vec"), newCents) + 1))
-      .select(col(idName), col("__cid"), col("codes")), codesPath)
-    dropStaleListDirs(spark, codesPath, cids.filterNot(landed))
-    val cidToSlot = slotCids.zipWithIndex.toMap
-    val updCents = cents.zipWithIndex.map { case (c, i) =>
-      cidToSlot.get(i).map(newCents).getOrElse(c)
-    } ++ newCents.drop(cids.size)
-    Publish.dir(spark, s"$indexPath/centroids")(writeCentroids(spark, updCents, _))
+    rebuildLists(spark, indexPath, IvfSq8Tier, idName, cids, splitTo, "codes",
+      zip_with(VecFns.unpackInt8(col("codes")).cast("array<double>"),
+        typedlit(readSq8Scales(spark, indexPath).toSeq), (c, m) => c * m / lit(127.0))
+        .cast("array<float>"))
+    ()
   }
 
   /** Query-time half of the composed index: pick the nprobe nearest
@@ -2158,46 +2109,29 @@ object Similarity {
   def buildBinaryIndex(embeddings: DataFrame, idName: String, vecName: String,
                        indexPath: String): Unit = {
     val spark = embeddings.sparkSession
-    Publish.dirs(spark, Seq(s"$indexPath/codes", s"$indexPath/thresholds")) {
+    Publish.dirs(spark, BinaryTier.at(indexPath)) {
       case Seq(codes, thresholds) =>
         val thr = binThresholds(embeddings, vecName)
         binCodes(embeddings, idName, vecName, thr, "buildBinaryIndex")
           .write.parquet(codes)
-        writeBinThresholds(spark, thr, thresholds)
+        writeDims(spark, thresholds, "thr", thr)
     }
   }
 
-  /** (id, code) under `thr`, with the in-row dimensionality guard:
-    * [[binQuantize]]'s zip_with null-pads a vector shorter (or
-    * truncates one longer) than the thresholds, coding the difference
-    * as 0 bits — quietly.
+  /** The binary tier's guarded encoder: (id, code) of `df` under the
+    * frozen thresholds `thr`, every [[frozenVecs]] guard riding the row
+    * ([[binQuantize]]'s zip_with would null-pad a vector shorter, or
+    * truncate one longer, than the thresholds — quietly).
     */
-  private def binCodes(df: DataFrame, idName: String, vecName: String,
-                       thr: Array[Double], who: String): DataFrame =
-    df.select(col(idName), when(size(col(vecName)) =!= thr.length,
-        Publish.raise(format_string(
-          s"$who: a vector has dimension %d but the index codes " +
-            s"${thr.length} — not the same embedding space",
-          size(col(vecName)))).cast("array<bigint>"))
-      .otherwise(binQuantize(col(vecName), thr)).as("code"))
-
-  /** The thresholds sidecar, written into the (staged) directory `dir`. */
-  private def writeBinThresholds(spark: org.apache.spark.sql.SparkSession,
-                                 thr: Array[Double], dir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val rows = thr.toSeq.zipWithIndex.map { case (t, d) =>
-      org.apache.spark.sql.Row(d, t)
-    }.asJava
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "dim INT, thr DOUBLE")
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(dir)
-  }
+  private[graft] def binCodes(df: DataFrame, idName: String, vecName: String,
+                              thr: Array[Double], who: String): DataFrame =
+    frozenVecs(df, vecName, thr.length, who)
+      .select(col(idName), binQuantize(col(vecName), thr).as("code"))
 
   /** The thresholds sidecar (dim-sized driver state). */
   def readBinThresholds(spark: org.apache.spark.sql.SparkSession,
                         indexPath: String): Array[Double] =
-    spark.read.parquet(s"$indexPath/thresholds")
-      .collect().sortBy(_.getInt(0)).map(_.getDouble(1))
+    readDims(spark, s"$indexPath/thresholds")
 
   /** Threshold-drift report for a frozen-threshold binary index —
     * the rebuild trigger [[appendBinaryIndex]]'s scaladoc promises:
@@ -2247,7 +2181,7 @@ object Similarity {
                         indexPath: String): Unit = {
     val spark = embeddings.sparkSession
     Publish.dir(spark, s"$indexPath/thresholds")(
-      writeBinThresholds(spark, binThresholds(embeddings, vecName), _))
+      writeDims(spark, _, "thr", binThresholds(embeddings, vecName)))
   }
 
   /** Build the binary index only if absent — both halves publish
@@ -2255,13 +2189,8 @@ object Similarity {
     * protocol).
     */
   def ensureBinaryIndex(embeddings: DataFrame, idName: String, vecName: String,
-                        indexPath: String): Unit = {
-    def ok(p: String) =
-      Artifact.complete(s"$p/codes") && Artifact.complete(s"$p/thresholds")
-    Artifact.ensure(indexPath, ok) { tmp =>
-      buildBinaryIndex(embeddings, idName, vecName, tmp)
-    }
-  }
+                        indexPath: String): Unit =
+    ensureIndex(indexPath, BinaryTier)(buildBinaryIndex(embeddings, idName, vecName, _))
 
   /** Append a batch under the FROZEN thresholds sidecar (the
     * appendSq8Index maintenance path). Unlike SQ8 there is no clip
@@ -2279,11 +2208,9 @@ object Similarity {
                         indexPath: String, newEmbeddings: DataFrame,
                         idName: String, vecName: String): Unit = {
     val thr = readBinThresholds(spark, indexPath)
-    // both guards ride the append job (the appendPqIndex fold)
-    val out = withIdsDisjointGuard(
-      binCodes(newEmbeddings, idName, vecName, thr, "appendBinaryIndex"),
-      newEmbeddings, spark, s"$indexPath/codes", idName, "appendBinaryIndex")
-    Publish.guarded(out.write.mode("append").parquet(s"$indexPath/codes"))
+    appendIndex(indexPath, BinaryTier, newEmbeddings, idName) {
+      binCodes(newEmbeddings, idName, vecName, thr, _)
+    }
   }
 
   /** Re-bin a drifted binary index — the remedy [[binDriftReport]]'s
@@ -2307,7 +2234,7 @@ object Similarity {
                        idName: String, vecName: String): Unit = {
     val thrOld = readBinThresholds(spark, indexPath)
     val codeIds = spark.read.parquet(s"$indexPath/codes").select(col(idName))
-    Publish.dirs(spark, Seq(s"$indexPath/codes", s"$indexPath/thresholds")) {
+    Publish.dirs(spark, BinaryTier.at(indexPath)) {
       case Seq(codes, thresholds) =>
         val thr = binThresholds(embeddings, vecName)
         require(thr.length == thrOld.length,
@@ -2319,7 +2246,7 @@ object Similarity {
               "re-bin from exactly the corpus the index serves",
             col(idName).cast("string")))
           .write.parquet(codes)
-        writeBinThresholds(spark, thr, thresholds)
+        writeDims(spark, thresholds, "thr", thr)
     }
   }
 

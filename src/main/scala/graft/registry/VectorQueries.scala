@@ -543,9 +543,7 @@ private[graft] object VectorQueries {
       val q = emb.filter(col("vec_id") === 0).select("embedding")
         .head().getSeq[Float](0).toArray
       val idx = fixturePath("ivfapp", dir, "embeddings")
-      def ok(p: String) =
-        Artifact.complete(s"$p/vectors") && Artifact.complete(s"$p/centroids")
-      Artifact.ensure(idx, ok) { tmp =>
+      Similarity.ensureIndex(idx, Similarity.IvfTier) { tmp =>
         Similarity.buildIvfIndex(emb.filter(col("vec_id") % 4 =!= 3),
           "vec_id", "embedding", nlist = 16, tmp)
         Similarity.appendIvfIndex(s, tmp,
@@ -1112,9 +1110,7 @@ private[graft] object VectorQueries {
       val q = emb.filter(col("vec_id") === 0).select("embedding")
         .head().getSeq[Float](0).toArray
       val idx = fixturePath("pqapp", dir, "embeddings")
-      def ok(p: String) =
-        Artifact.complete(s"$p/codes") && Artifact.complete(s"$p/codebooks")
-      Artifact.ensure(idx, ok) { tmp =>
+      Similarity.ensureIndex(idx, Similarity.PqTier) { tmp =>
         Similarity.buildPqIndex(emb.filter(col("vec_id") % 4 =!= 3),
           "vec_id", "embedding", numSub = 8, k = 16, tmp)
         Similarity.appendPqIndex(s, tmp,
@@ -1203,9 +1199,7 @@ private[graft] object VectorQueries {
     Query("q238_bin_drift", (s, dir) => {
       val emb = t(s, dir).embeddings.select(col("vec_id"), col("embedding"))
       val idx = fixturePath("binb", dir, "embeddings")
-      def ok(p: String) = Artifact.complete(s"$p/codes") &&
-        Artifact.complete(s"$p/thresholds")
-      Artifact.ensure(idx, ok) { tmp =>
+      Similarity.ensureIndex(idx, Similarity.BinaryTier) { tmp =>
         Similarity.buildBinaryIndex(emb.filter(col("vec_id") % 4 =!= 3),
           "vec_id", "embedding", tmp)
       }

@@ -392,10 +392,11 @@ object StreamOps {
     * starts) and lands its packed codes in its own `batch=<id>`
     * directory with OVERWRITE semantics — at-least-once foreachBatch
     * retries replace rather than duplicate, the exactly-once index
-    * effect. Clip-guarded per batch exactly like `appendSq8Index`
-    * (a drifting batch fails loudly instead of corrupting rankings);
-    * because quantization is a pure function of (vector, scales),
-    * the accumulated code table is BIT-IDENTICAL to a batch build
+    * effect. Each batch codes through the SQ8 tier's guarded encoder,
+    * the one `appendSq8Index` uses (a NULL vector, one of another
+    * width, or one that would clip fails loudly instead of corrupting
+    * rankings); because quantization is a pure function of (vector,
+    * scales), the accumulated code table is BIT-IDENTICAL to a batch build
     * over everything ingested under the same scales (spec-pinned;
     * q212 serves it through `sq8TopKIndexed` against q197's oracle).
     */
@@ -417,10 +418,9 @@ object StreamOps {
   /** One trigger of [[sq8CodesSink]], idempotent under replay: reads
     * only the frozen sidecar (pre-read by the sink and passed in;
     * direct callers leave `scales0` None and pay the read), writes
-    * only this batch's own directory. The clip guard rides the write
-    * itself as an in-row raise (it was a dedicated posexplode
-    * aggregation job per trigger) — it still fires before anything
-    * commits, with the same loud `IllegalArgumentException`.
+    * only this batch's own directory. The encoder's guards ride the
+    * write itself as in-row raises — they fire before anything
+    * commits, as a loud `IllegalArgumentException`.
     */
   private[graft] def sq8IngestBatch(batch: DataFrame, bid: Long,
                                     indexPath: String, idName: String,
@@ -430,26 +430,8 @@ object StreamOps {
     val spark = batch.sparkSession
     val scales = scales0.getOrElse(
       graft.operators.Similarity.readSq8Scales(spark, indexPath))
-    val scLit = typedlit(scales.toSeq)
-    // first clipping dimension of the row, if any: a dim beyond the
-    // frozen sidecar's width, or |x_d| above its scale (the || short-
-    // circuits, so element_at never sees an out-of-range index)
-    val viol = filter(
-      transform(col(vecName).cast("array<double>"),
-        (x, i) => struct(i.cast("int").as("d"), abs(x).as("m"))),
-      p => p.getField("d") >= lit(scales.length) ||
-        p.getField("m") > element_at(scLit, p.getField("d") + 1))
-    val codes = when(size(viol) > 0,
-        Publish.raise(format_string(
-          s"sq8CodesSink batch $bid: |x_%d| = %.6g outside the frozen " +
-            s"scales (dim count ${scales.length}) — codes would clip; " +
-            "re-plan the scales and rebuild",
-          element_at(viol, 1).getField("d"),
-          element_at(viol, 1).getField("m"))).cast("binary"))
-      .otherwise(graft.functions.VecFns.packInt8(
-        graft.operators.Similarity.sq8Quantize(col(vecName), scales)))
-    Publish.parquet(batch.select(col(idName), codes.as("codes")),
-      s"$indexPath/codes/batch=$bid")
+    Publish.parquet(graft.operators.Similarity.sq8Codes(batch, idName, vecName,
+      scales, s"sq8CodesSink batch $bid"), s"$indexPath/codes/batch=$bid")
   }
 
   /** Streaming BINARY-code ingest — the 1-bit tier's member of the
@@ -477,10 +459,10 @@ object StreamOps {
   }
 
   /** One trigger of [[binCodesSink]], idempotent under replay. No
-    * clip hazard at 1 bit — the loud guard is dimensionality (a batch
-    * from a different embedding space must never code), riding the
-    * write itself as an in-row raise (it was a dedicated take(1) job
-    * per trigger); fires before anything commits, same loud
+    * clip hazard at 1 bit — the binary tier's guarded encoder (the one
+    * `appendBinaryIndex` uses) rejects a NULL vector and one from a
+    * different embedding space, riding the write itself as in-row
+    * raises; they fire before anything commits, as a loud
     * `IllegalArgumentException`.
     */
   private[graft] def binIngestBatch(batch: DataFrame, bid: Long,
@@ -491,14 +473,8 @@ object StreamOps {
     val spark = batch.sparkSession
     val thr = thr0.getOrElse(
       graft.operators.Similarity.readBinThresholds(spark, indexPath))
-    val code = when(size(col(vecName)) =!= thr.length,
-        Publish.raise(format_string(
-          s"binCodesSink batch $bid: a vector has dimension %d but the " +
-            s"index codes ${thr.length} — not the same embedding space",
-          size(col(vecName)))).cast("array<bigint>"))
-      .otherwise(graft.operators.Similarity.binQuantize(col(vecName), thr))
-    Publish.parquet(batch.select(col(idName), code.as("code")),
-      s"$indexPath/codes/batch=$bid")
+    Publish.parquet(graft.operators.Similarity.binCodes(batch, idName, vecName,
+      thr, s"binCodesSink batch $bid"), s"$indexPath/codes/batch=$bid")
   }
 
   /** Streaming near-dup maintenance — the continuous-ingest fold of
@@ -837,9 +813,9 @@ object StreamOps {
     *      survivors (leftmost-longest, the q209 semantics),
     *   4. SQ8 codes: survivors' embeddings quantize under the FROZEN
     *      scales sidecar at `stateDir/sq8/scales` (written by the
-    *      planning pass before the stream — the q212 discipline;
-    *      survivor vectors are a subset of the corpus the scales
-    *      froze over, so they can never clip) and land packed, with
+    *      planning pass before the stream — the q212 discipline)
+    *      through the SQ8 tier's guarded encoder — a NULL, ragged or
+    *      clipping vector fails the trigger — and land packed, with
     *      an int64 code-sum column the oracle replays.
     *
     * Every per-batch effect is an OVERWRITE of this batch's own
@@ -930,8 +906,9 @@ object StreamOps {
         inParallel(
           () => Tagging.redactDocs(survivors, idName, col(textName), patterns,
               token).write.parquet(curated),
-          () => survivors.select(col(idName))
-            .join(embeddings, Seq(idName))
+          () => Similarity.frozenVecs(survivors.select(col(idName))
+              .join(embeddings, Seq(idName)), vecName, scales.length,
+              s"curationSink batch $bid", Some(scales))
             .select(col(idName),
               graft.functions.VecFns.packInt8(q).as("codes"),
               aggregate(q, lit(0L), (a, x) => a + x).as("code_sum"))

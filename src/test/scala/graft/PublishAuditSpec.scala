@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * rename protocol. User-facing writers, whose contract is a plain
   * overwrite of a caller's path, the query registry's fixture-landing
   * support file and the Bench and Verify mains are allowlisted by
-  * name. This keeps the single mechanism from forking again.
+  * name. Appends likewise go through one helper,
+  * [[graft.operators.Publish.append]]. This keeps the single mechanism
+  * from forking again.
   */
 class PublishAuditSpec extends AnyFunSuite {
 
@@ -25,17 +27,30 @@ class PublishAuditSpec extends AnyFunSuite {
     if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).toSeq.flatMap(scalaFiles)
     else if (f.getName.endsWith(".scala")) Seq(f) else Nil
 
-  test("no overwrite or hand-rolled rename outside the publish helper") {
+  /** `file:line: text` of every main-source line outside `allowed`
+    * that `pattern` matches.
+    */
+  private def offenders(pattern: scala.util.matching.Regex,
+                        allowed: String => Boolean): Seq[String] = {
     val files = scalaFiles(srcDir)
     assert(files.exists(_.getName == "Publish.scala"), s"no sources under $srcDir")
-    val bad = for {
+    for {
       file <- files if !allowed(file.getName)
       (line, n) <- {
         val src = scala.io.Source.fromFile(file, "UTF-8")
         try src.getLines().toList.zipWithIndex finally src.close()
       }
-      if Forbidden.findFirstIn(line).isDefined
+      if pattern.findFirstIn(line).isDefined
     } yield s"${file.getPath}:${n + 1}: ${line.trim}"
+  }
+
+  test("no overwrite or hand-rolled rename outside the publish helper") {
+    val bad = offenders(Forbidden, allowed)
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("no append outside the shared append helper") {
+    val bad = offenders("""\.mode\("append"\)|SaveMode\.Append""".r, _ == "Publish.scala")
     assert(bad.isEmpty, bad.mkString("\n"))
   }
 }

@@ -82,6 +82,14 @@ class PublishSpec extends SparkSpec {
   private def nullGuard(who: String): Option[Regex] =
     exactly(s"$who: a NULL embedding has no nearest cell — drop or embed it first")
 
+  /** The in-row width guard of an encoder under frozen state. */
+  private def widthGuard(who: String, dim: Int, codes: Int): Option[Regex] =
+    exactly(s"$who: a vector has dimension $dim but the index codes $codes — " +
+      "not the same embedding space")
+
+  private def narrow(df: DataFrame): DataFrame =
+    df.withColumn("embedding", slice(col("embedding"), 1, 8))
+
   test("a guard surfaces as exactly its text; an unrelated failure naming an old marker is not rewrapped") {
     val target = tmp("guard") + "/t"
     val e = intercept[IllegalArgumentException](
@@ -125,6 +133,11 @@ class PublishSpec extends SparkSpec {
         "vec_id", "embedding"))
     faultKeepsPrior(idx, rels, None)(Similarity.appendIvfIndex(spark, idx,
       poisoned(fresh(emb, 200000L), "embedding"), "vec_id", "embedding"))
+    faultKeepsPrior(idx, rels, widthGuard("appendIvfIndex", 8, 64))(Similarity
+      .appendIvfIndex(spark, idx, narrow(fresh(emb, 200000L)), "vec_id", "embedding"))
+    faultKeepsPrior(idx, rels, Some(("appendIvfIndex: batch re-ingests indexed vec_id " +
+        "\\d+ — id spaces must be disjoint").r))(
+      Similarity.appendIvfIndex(spark, idx, emb, "vec_id", "embedding"))
     // the list rebuild's only input is the index: a corrupt file in a
     // flagged list fails its tasks
     Files.writeString(Paths.get(s"$idx/vectors/__cid=1/part-corrupt.parquet"), "x")
@@ -140,8 +153,8 @@ class PublishSpec extends SparkSpec {
       withNullVec(emb, 100000L), "vec_id", "embedding", 8, 16, idx))
     faultKeepsPrior(idx, rels, None)(Similarity.buildPqIndex(
       poisoned(emb, "embedding"), "vec_id", "embedding", 8, 16, idx))
-    faultKeepsPrior(idx, rels, exactly("appendPqIndex: batch has dimension 8 but " +
-        "the codebooks encode 64 — not the same embedding space"))(
+    faultKeepsPrior(idx, rels, exactly("appendPqIndex: a vector has dimension 8 but " +
+        "the index codes 64 — not the same embedding space"))(
       Similarity.appendPqIndex(spark, idx, fresh(emb, 200000L)
         .withColumn("embedding", slice(col("embedding"), 1, 8)), "vec_id", "embedding"))
     faultKeepsPrior(idx, rels, None)(Similarity.appendPqIndex(spark, idx,
@@ -161,11 +174,13 @@ class PublishSpec extends SparkSpec {
     faultKeepsPrior(idx, rels, None)(Similarity.buildSq8Index(
       poisoned(emb, "embedding"), "vec_id", "embedding", idx))
     faultKeepsPrior(idx, rels, Some(
-        "appendSq8Index: batch max \\|x_\\d+\\| = \\S+ exceeds the frozen scale \\S+ — codes would clip; rebuild the index over the union instead".r))(
+        "appendSq8Index: a vector's \\|x_\\d+\\| = \\S+ exceeds the frozen scale \\S+ — codes would clip; rebuild the index over the union instead".r))(
       Similarity.appendSq8Index(spark, idx, fresh(emb, 200000L).withColumn("embedding",
         transform(col("embedding"), x => x * 1000.0f)), "vec_id", "embedding"))
     faultKeepsPrior(idx, rels, None)(Similarity.appendSq8Index(spark, idx,
       poisoned(fresh(emb, 200000L), "embedding"), "vec_id", "embedding"))
+    faultKeepsPrior(idx, rels, widthGuard("appendSq8Index", 8, 64))(Similarity
+      .appendSq8Index(spark, idx, narrow(fresh(emb, 200000L)), "vec_id", "embedding"))
   }
 
   test("IVF-SQ8 build / append / list rebuild keep the prior generation; a NULL vector is rejected, never a NULL list") {
@@ -181,6 +196,8 @@ class PublishSpec extends SparkSpec {
         withNullVec(fresh(emb, 200000L), 100000L), "vec_id", "embedding"))
     faultKeepsPrior(idx, rels, None)(Similarity.appendIvfSq8Index(spark, idx,
       poisoned(fresh(emb, 200000L), "embedding"), "vec_id", "embedding"))
+    faultKeepsPrior(idx, rels, widthGuard("appendIvfSq8Index", 8, 64))(Similarity
+      .appendIvfSq8Index(spark, idx, narrow(fresh(emb, 200000L)), "vec_id", "embedding"))
     assert(new java.io.File(s"$idx/codes").list().forall(!_.contains("DEFAULT")),
       "a NULL vector landed in a default list partition")
     Files.writeString(Paths.get(s"$idx/codes/__cid=1/part-corrupt.parquet"), "x")
@@ -213,6 +230,36 @@ class PublishSpec extends SparkSpec {
       poisoned(emb, "embedding"), "vec_id", "embedding"))
   }
 
+  test("ensure completes every index tier: a part missing its _SUCCESS is rebuilt, a complete index is left byte-identical") {
+    val tiers = Seq[(String, Seq[String], String => Unit)](
+      ("ivf", Seq("vectors", "centroids", "stats"),
+        Similarity.ensureIvfIndex(emb, "vec_id", "embedding", 4, _)),
+      ("pq", Seq("codes", "codebooks", "stats"),
+        Similarity.ensurePqIndex(emb, "vec_id", "embedding", 8, 16, _)),
+      ("sq8", Seq("codes", "scales"),
+        Similarity.ensureSq8Index(emb, "vec_id", "embedding", _)),
+      ("ivfsq8", Seq("codes", "centroids", "scales"),
+        Similarity.ensureIvfSq8Index(emb, "vec_id", "embedding", 4, _)),
+      ("bin", Seq("codes", "thresholds"),
+        Similarity.ensureBinaryIndex(emb, "vec_id", "embedding", _)))
+    tiers.foreach { case (name, parts, ensure) =>
+      val idx = tmp(s"ensure_$name") + "/idx"
+      ensure(idx)
+      parts.foreach { part =>
+        val marker = Paths.get(idx, part, "_SUCCESS")
+        Files.delete(marker)
+        ensure(idx)
+        assert(Files.exists(marker), s"$name: ensure left $part incomplete")
+        // a completeness check also touches each part's empty read marker
+        assert(parts.forall(d => graft.operators.Artifact.complete(s"$idx/$d")),
+          s"$name: a part is incomplete after rebuilding $part")
+        val before = tree(idx)
+        ensure(idx)
+        assert(tree(idx) == before, s"$name: ensure over a complete index changed it")
+      }
+    }
+  }
+
   test("a replayed sink trigger keeps its committed batch=<bid> generation on a guard or task failure") {
     val b0 = emb.filter(col("vec_id") % 2 === 0)
     // SQ8 codes: a replay whose batch now clips trips the guard
@@ -220,11 +267,13 @@ class PublishSpec extends SparkSpec {
     Similarity.initSq8Scales(emb, "embedding", sq8)
     StreamOps.sq8IngestBatch(b0, 0L, sq8, "vec_id", "embedding")
     faultKeepsPrior(sq8, Seq(s"$sq8/codes"), Some(
-        "sq8CodesSink batch 0: \\|x_\\d+\\| = \\S+ outside the frozen scales \\(dim count 64\\) — codes would clip; re-plan the scales and rebuild".r))(
+        "sq8CodesSink batch 0: a vector's \\|x_\\d+\\| = \\S+ exceeds the frozen scale \\S+ — codes would clip; rebuild the index over the union instead".r))(
       StreamOps.sq8IngestBatch(b0.withColumn("embedding",
         transform(col("embedding"), x => x * 1000.0f)), 0L, sq8, "vec_id", "embedding"))
     faultKeepsPrior(sq8, Seq(s"$sq8/codes"), None)(StreamOps.sq8IngestBatch(
       poisoned(b0, "embedding"), 0L, sq8, "vec_id", "embedding"))
+    faultKeepsPrior(sq8, Seq(s"$sq8/codes"), widthGuard("sq8CodesSink batch 0", 8, 64))(
+      StreamOps.sq8IngestBatch(narrow(b0), 0L, sq8, "vec_id", "embedding"))
     // binary codes: a replay from another embedding space
     val bin = tmp("binsink") + "/idx"
     Similarity.initBinThresholds(emb, "embedding", bin)
@@ -249,11 +298,16 @@ class PublishSpec extends SparkSpec {
     val vecs = docs.select(col("doc_id"), array((0 until 8).map(d =>
       (sin(col("doc_id") * (d + 1)) * 0.5f).cast("float")): _*).as("vec"))
     Similarity.initSq8Scales(vecs, "vec", s"$cur/sq8")
-    def curate(b: DataFrame) = StreamOps.curateBatch(b, 0L, vecs, cur, "doc_id",
-      "text", "vec", Seq("data"), "[X]", 0.6, 32, 8, 3)
+    def curate(b: DataFrame, v: DataFrame = vecs) = StreamOps.curateBatch(b, 0L, v,
+      cur, "doc_id", "text", "vec", Seq("data"), "[X]", 0.6, 32, 8, 3)
     curate(d0)
-    faultKeepsPrior(cur, Seq("curated", "sq8/codes", "fp", "shingles", "bands")
-      .map(d => s"$cur/$d"), None)(curate(poisoned(d0, "text")))
+    val curRels = Seq("curated", "sq8/codes", "fp", "shingles", "bands").map(d => s"$cur/$d")
+    faultKeepsPrior(cur, curRels, None)(curate(poisoned(d0, "text")))
+    // the survivors' vectors code through the SQ8 guarded encoder: a
+    // ragged one is rejected, never coded at its own width
+    faultKeepsPrior(cur, curRels, widthGuard("curationSink batch 0", 4, 8))(curate(d0,
+      vecs.withColumn("vec", when(col("doc_id") % 4 === 0, slice(col("vec"), 1, 4))
+        .otherwise(col("vec")))))
   }
 
   test("upsert, flat and bucketed SCD-2 keep the prior snapshot on a task failure") {
