@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The engine's tuned SparkSession posture — ONE place both driver
   * mains (Bench, Verify) and any library consumer apply it from, so
@@ -20,7 +20,7 @@ object Sessions {
     *    derive widths from runtime sizes.
     *  - `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`:
     *    AQE may re-coalesce plans that feed a cache. Multi-consumer
-    *    persisted relations (materializedOnce, incremental-dedup
+    *    persisted relations (`materialized`, incremental-dedup
     *    probe sides) otherwise pin the session shuffle width into the
     *    cache and every downstream job launches session-width
     *    near-empty tasks over a tiny cached relation. Scale-neutral:
@@ -46,6 +46,25 @@ object Sessions {
       sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "true"))
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.cleaner.periodicGC.interval", "60s")
+
+  /** Persist and eagerly materialize a multi-consumer relation: its
+    * consumers run as concurrent stages of one job, and a lazy cache
+    * would be raced — each stage recomputing the relation before the
+    * first one populates it. One count() up front makes every consumer
+    * a cache read. A relation whose plan is already cached
+    * (`storageLevel` consults the CacheManager with plan matching) —
+    * a caller-shared input, or a plan a fixture block cached first —
+    * passes through: the no-op re-persist logs `CacheManager: Asked to
+    * cache already cached data` per call, and the bench tail is pinned
+    * WARN-free. [[release]] drops what this persists.
+    */
+  private[graft] def materialized(df: DataFrame): DataFrame =
+    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
+    else {
+      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      p.count()
+      p
+    }
 
   /** Drop one query's cached and checkpointed state before the next
     * starts. `clearCache` empties only the SQL CacheManager, so every

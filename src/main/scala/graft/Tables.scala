@@ -90,8 +90,10 @@ object Tables {
     * an in-session rewrite is re-resolved instead of served from a
     * stale file listing. Bounded like JlProject's matrix cache: past
     * [[MaxResolved]] distinct relations the map clears wholesale (a
-    * post-clear miss merely re-resolves), keeping a long-lived JVM
-    * serving many sessions from retaining dead sessions' plans.
+    * post-clear miss merely re-resolves). Every miss also drops the
+    * entries of sessions whose SparkContext is stopped, so a
+    * long-lived JVM serving many sessions does not keep a dead one
+    * alive until the cap; a hit pays nothing for it.
     */
   private val MaxResolved = 512
   private val memo = new java.util.concurrent.ConcurrentHashMap[
@@ -110,6 +112,7 @@ object Tables {
     val k = (spark, path)
     Option(memo.get(k)).getOrElse {
       ensure
+      memo.keySet.removeIf(_._1.sparkContext.isStopped)
       if (memo.size >= MaxResolved) memo.clear()
       val df = spark.read.parquet(path)
       Option(memo.putIfAbsent(k, df)).getOrElse(df)

@@ -81,6 +81,21 @@ object Artifact {
     }
   }
 
+  /** [[ensure]] for an artifact whose correctness depends on build
+    * parameters the path alone cannot prove (shingle width,
+    * thresholds, a source tag): `meta` lands as the artifact's
+    * parameter sidecar inside the staged directory, so the same swap
+    * publishes it with the data, and a directory whose sidecar is
+    * absent or disagrees (a pre-sidecar or mislabeled generation)
+    * reads as incomplete and is rebuilt rather than trusted.
+    */
+  private[graft] def ensureWithMeta(path: String, meta: Map[String, String])
+                                    (build: String => Unit): Unit =
+    ensure(path, p => complete(p) && metaMatches(p, meta)) { tmp =>
+      build(tmp)
+      writeMeta(tmp, meta)
+    }
+
   /** URI-capable directory-existence check via the Hadoop FileSystem
     * API — for operators whose data I/O is already `spark.read` /
     * `spark.write` (the streaming near-dup archive, the inverted-
@@ -131,15 +146,13 @@ object Artifact {
       .foreach(deleteRecursively)
   }
 
-  /** Parameter-tuple sidecar (`_graft_meta.json`) — artifacts whose
-    * correctness depends on build parameters the path alone cannot
-    * prove (shingle width, thresholds) persist them next to the data
-    * and verify on resolve. Spark's file listing ignores `_`-prefixed
+  /** Parameter-tuple sidecar (`_graft_meta.json`) of
+    * [[ensureWithMeta]]. Spark's file listing ignores `_`-prefixed
     * files, so the sidecar never pollutes the parquet scan. Flat
     * string map, written before publish so the sidecar is covered by
     * the same atomic rename as the data.
     */
-  def writeMeta(dir: String, meta: Map[String, String]): Unit = {
+  private def writeMeta(dir: String, meta: Map[String, String]): Unit = {
     val body = meta.toSeq.sorted
       .map { case (k, v) => s"  ${jstr(k)}: ${jstr(v)}" }
       .mkString("{\n", ",\n", "\n}\n")

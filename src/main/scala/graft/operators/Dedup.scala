@@ -17,8 +17,21 @@ import graft.functions.TextFns
   *    documents, and skewed buckets stay bounded by band width.
   *  - Exact verification joins text back ONLY for candidate pairs
   *    (a tiny fraction of n²).
+  *
+  * Batch, incremental and lookup forms are one probe-versus-archive
+  * computation, so each step they share is written once:
+  * [[shingleSets]] (a width-checked pre-built relation or a fresh
+  * build) and [[repSets]] (exact-duplicate contraction); the LSH
+  * bucket join [[bucketPairs]] and the PPJoin prefix join
+  * [[prefixCandidates]] (the self form is the two-sided form over one
+  * relation, pairs `l.id < r.id`); the exact Jaccard [[verified]];
+  * the member expansions [[expandPairs]] (both sides of a self join)
+  * and [[expandSide]] (one side); the span keep-first
+  * [[laterOccurrences]]; and the parameter-sidecar artifact
+  * [[ensureJaccard]] over [[Artifact.ensureWithMeta]].
   */
 object Dedup {
+  import graft.Sessions.materialized
 
   /** Exact duplicate groups by normalized-text hash; keeps the
     * smallest id as the canonical representative (deterministic —
@@ -130,20 +143,27 @@ object Dedup {
   def minhashCandidates(sigged: DataFrame, k: Int = 32, bands: Int = 8): DataFrame =
     bandSelfCandidates(minhashBands(sigged, k, bands))
 
-  /** Same-bucket candidate pairs from a banded relation
-    * (id, band, bh) — the self-join half of [[minhashCandidates]],
-    * shared with consumers that already hold the band relation
-    * (the incremental near-dup path, where the banded batch is
-    * computed once and ALSO appended as archive state).
+  /** Same-bucket candidate pairs (id_a < id_b) within one banded
+    * relation (id, band, bh) — shared with consumers that already hold
+    * the band relation (the incremental near-dup path, where the banded
+    * batch is computed once and ALSO appended as archive state).
     */
-  private def bandSelfCandidates(banded: DataFrame): DataFrame = {
-    val l = banded.as("l")
-    val rj = banded.as("r")
-    l.join(rj, col("l.band") === col("r.band") && col("l.bh") === col("r.bh") &&
-        col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
+  private def bandSelfCandidates(banded: DataFrame): DataFrame =
+    bucketPairs(banded, banded, col("l.id") < col("r.id"))(
+      col("l.id").as("id_a"), col("r.id").as("id_b"))
+
+  /** Distinct `out` over the same-bucket rows of two banded relations
+    * (id, band, bh, ...) aliased `l` and `r` — the one LSH candidate
+    * join of the family (minhash self, batch × archive and lookup;
+    * simhash). `cond` is the pair predicate on top of the bucket
+    * match (`l.id < r.id` for a self join).
+    */
+  private def bucketPairs(l: DataFrame, r: DataFrame, cond: Column)
+                         (out: Column*): DataFrame =
+    l.as("l").join(r.as("r"),
+        col("l.band") === col("r.band") && col("l.bh") === col("r.bh") && cond)
+      .select(out: _*)
       .distinct()
-  }
 
   /** MinHash near-dup pairs with EXACT shingle-Jaccard verification
     * of candidates. Returns (id_a, id_b, jaccard) for pairs at or
@@ -174,25 +194,15 @@ object Dedup {
     // at a fraction of the construction cost. A caller holding the
     // persisted ensureShingleSets relation (same corpus, same
     // shingleN — the jaccardPairs CONTRACT) skips the shingling scan.
-    val shAll = materialized(shingles.map(requireShingleN(_, shingleN))
-      .getOrElse(hashedShingleSets(docs, idName, textName, shingleN)))
-    val (groups, members0) = contractBy(shAll, "id", "sh")
-    // cloned corpus: groups is materialized by contractBy; clone-free:
-    // groups projects straight off the shAll cache above — either way
-    // each consumer below re-reads a cache, no second persist needed
-    val sh = groups.select(col("rid").as("id"), col("sh"))
+    // cloned corpus: the reps are materialized by contractBy;
+    // clone-free: they project straight off the shingle cache — either
+    // way each consumer below re-reads a cache, no second persist
+    val (sh, members0) = repSets(materialized(
+      shingleSets(docs, idName, textName, shingleN, shingles)))
     val members = members0.map(materialized)
     val cands = minhashCandidates(sigsFromShingleSets(sh, k), k, bands)
-    val withSets = cands
-      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-    val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
-    val uni = size(array_union(col("sh_a"), col("sh_b"))).cast("double")
-    val repPairs = withSets
-      .withColumn("jaccard", round(when(uni > 0, inter / uni).otherwise(lit(0.0)), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-    expandPairs(repPairs, members, intraValue = lit(1.0), valueName = "jaccard")
+    expandPairs(verified(cands, sh, sh, threshold), members,
+      intraValue = lit(1.0), valueName = "jaccard")
   }
 
   /** Incremental near-dup detection: from a NEW batch, every
@@ -238,10 +248,8 @@ object Dedup {
     require(threshold > 0.0 && threshold <= 1.0)
     val shA = requireShingleN(archiveShingles, shingleN)
     val bandsA = requireBandParams(archiveBands, k, bands)
-    val shB = materialized(batchShingles.map(requireShingleN(_, shingleN))
-      .getOrElse(hashedShingleSets(batch, idName, textName, shingleN)))
-    val (groups, members0) = contractBy(shB, "id", "sh")
-    val reps = groups.select(col("rid").as("id"), col("sh"))
+    val (reps, members0) = repSets(materialized(
+      shingleSets(batch, idName, textName, shingleN, batchShingles)))
     val members = members0.map(materialized)
     // `batchBands` contract: exactly `minhashBands(
     // minhashSignaturesFromShingles(shB, k, shingleN), k, bands)` for
@@ -256,39 +264,18 @@ object Dedup {
         .join(reps.select(col("id")), Seq("id"), "left_semi")
       case None => minhashBands(sigsFromShingleSets(reps, k), k, bands)
     }
-
-    def verified(cands: DataFrame, shRight: DataFrame): DataFrame = {
-      val withSets = cands
-        .join(reps.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-        .join(shRight.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
-      val uni = size(array_union(col("sh_a"), col("sh_b"))).cast("double")
-      withSets
-        .withColumn("jaccard",
-          round(when(uni > 0, inter / uni).otherwise(lit(0.0)), 6))
-        .filter(col("jaccard") >= threshold)
-        .select(col("id_a"), col("id_b"), col("jaccard"))
-    }
-
-    // batch × archive: rep bands keyed against the archive band table
-    val crossCands = repBands.as("l")
-      .join(bandsA.as("r"),
-        col("l.band") === col("r.band") && col("l.bh") === col("r.bh"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .distinct()
-    // one-sided expansion: every batch clone of a rep inherits the
-    // rep's archive partners and exact jaccard (identical shingle
+    // batch × archive: rep bands keyed against the archive band
+    // table. One-sided expansion: every batch clone of a rep inherits
+    // the rep's archive partners and exact jaccard (identical shingle
     // sets); the archive side is not contracted — it is state, not
     // input
-    val crossAll = members match {
-      case None => verified(crossCands, shA)
-      case Some(mem) => verified(crossCands, shA)
-        .join(mem.select(col("rid").as("id_a"), col("mid")), "id_a")
-        .select(col("mid").as("id_a"), col("id_b"), col("jaccard"))
-    }
+    val crossCands = bucketPairs(repBands, bandsA, lit(true))(
+      col("l.id").as("id_a"), col("r.id").as("id_b"))
+    val crossAll = expandSide(verified(crossCands, reps, shA, threshold),
+      members, "id_a")
     // batch-internal: the standard self path over the same rep bands
     val selfAll = expandPairs(
-      verified(bandSelfCandidates(repBands), reps),
+      verified(bandSelfCandidates(repBands), reps, reps, threshold),
       members, intraValue = lit(1.0), valueName = "jaccard")
     crossAll.withColumn("vs", lit("archive"))
       .unionByName(selfAll.withColumn("vs", lit("batch")))
@@ -322,26 +309,11 @@ object Dedup {
     require(nProbes <= maxProbes,
       s"nearDupLookup serves bounded probe batches: got $nProbes probes, " +
         s"cap $maxProbes — loop batches or raise maxProbes deliberately")
-    val shP = materialized(hashedShingleSets(probes, idName, textName, shingleN))
+    val shP = shingleSets(probes, idName, textName, shingleN, None)
     val pBands = minhashBands(sigsFromShingleSets(shP, k), k, bands)
-    val cands = broadcast(pBands).as("l")
-      .join(bandsA.as("r"),
-        col("l.band") === col("r.band") && col("l.bh") === col("r.bh"))
-      .filter(col("l.id") =!= col("r.id"))
-      .select(col("l.id").as("probe_id"), col("r.id").as("doc_id"))
-      .distinct()
-    val withSets = cands
-      .join(broadcast(shP.select(col("id").as("probe_id"),
-        col("sh").as("__sh_p"))), "probe_id")
-      .join(shA.select(col("id").as("doc_id"), col("sh").as("__sh_d")),
-        "doc_id")
-    val inter = size(array_intersect(col("__sh_p"), col("__sh_d"))).cast("double")
-    val uni = size(array_union(col("__sh_p"), col("__sh_d"))).cast("double")
-    withSets
-      .withColumn("jaccard",
-        round(when(uni > 0, inter / uni).otherwise(lit(0.0)), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("probe_id"), col("doc_id"), col("jaccard"))
+    val cands = bucketPairs(broadcast(pBands), bandsA, col("l.id") =!= col("r.id"))(
+      col("l.id").as("probe_id"), col("r.id").as("doc_id"))
+    verified(cands, broadcast(shP), shA, threshold)
   }
 
   /** Incremental ingestion dedup: from a NEW batch, keep only
@@ -437,14 +409,9 @@ object Dedup {
           shiftright(col("simhash"), b * bandBits).bitwiseAND(lit(mask)).as("bh"))
       }: _*)).as("b"))
       .select(col("id"), col("simhash"), col("b.band"), col("b.bh"))
-    val l = banded.as("l")
-    val r = banded.as("r")
-    val repPairs = l.join(r,
-        col("l.band") === col("r.band") && col("l.bh") === col("r.bh") &&
-        col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
+    val repPairs = bucketPairs(banded, banded, col("l.id") < col("r.id"))(
+        col("l.id").as("id_a"), col("r.id").as("id_b"),
         bit_count(col("l.simhash").bitwiseXOR(col("r.simhash"))).as("hamming"))
-      .distinct()
       .filter(col("hamming") <= maxHamming)
     expandPairs(repPairs, members, intraValue = lit(0), valueName = "hamming")
   }
@@ -514,68 +481,17 @@ object Dedup {
                   rightShingles: Option[DataFrame] = None): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0)
     def side(df: DataFrame, pre: Option[DataFrame]) = {
-      val sh = pre.map(requireShingleN(_, n)).getOrElse(
-        materialized(hashedShingleSets(df, idName, textName, n)))
-      val (groups, members) = contractBy(sh, "id", "sh")
-      (groups.select(col("rid").as("id"), col("sh"), col("gsize")),
-        members.map(materialized))
+      val (reps, members) = repSets(shingleSets(df, idName, textName, n, pre))
+      (reps, members.map(materialized))
     }
     val (repL, memL) = side(left, leftShingles)
     val (repR, memR) = side(right, rightShingles)
-    def exploded(rep: DataFrame) = rep.select(col("id"),
-      size(col("sh")).as("nsh"), col("gsize"), explode(col("sh")).as("g"))
-    val exL = exploded(repL)
-    val exR = exploded(repR)
-    // one SHARED frequency table: the prefix filter is only exact when
-    // both sides slice their prefixes under the same total order
-    val freq = exL.select(col("g"), col("gsize"))
-      .unionByName(exR.select(col("g"), col("gsize")))
-      .groupBy("g").agg(sum(col("gsize")).as("df"))
-      .filter(col("df") <= maxShingleFreq)
-    val plen = (col("nsh") - ceil(lit(threshold) * col("nsh") - lit(1e-9)) + 1)
-      .cast("int")
-    def ranked(ex: DataFrame) = ex.join(freq, Seq("g"))
-      .groupBy(col("id"))
-      .agg(first(col("nsh")).as("nsh"),
-        sort_array(collect_list(struct(col("df"), col("g")))).as("arr"))
-      .select(col("id"), col("nsh"),
-        posexplode(slice(col("arr"), lit(1), plen)))
-      .select(col("id"), col("nsh"), col("pos"), col("col.g").as("g"))
-    // identical exactness argument as jaccardRepPairs: prefix bound,
-    // symmetric length filter, any-match positional filter (superset
-    // of classic PPJoin's first-match candidates)
-    val alpha = ceil(lit(threshold / (1 + threshold)) *
-      (col("l.nsh") + col("r.nsh")) - lit(1e-9))
-    val cands = ranked(exL).as("l").join(ranked(exR).as("r"),
-        col("l.g") === col("r.g") &&
-          col("r.nsh").cast("double") >= lit(threshold) * col("l.nsh") &&
-          col("l.nsh").cast("double") >= lit(threshold) * col("r.nsh") &&
-          least(col("l.nsh") - col("l.pos"), col("r.nsh") - col("r.pos"))
-            .cast("double") >= alpha)
-      .select(col("l.id").as("id_l"), col("r.id").as("id_r"))
-      .distinct()
-    val inter = size(array_intersect(col("sh_l"), col("sh_r"))).cast("double")
-    val uni = (size(col("sh_l")) + size(col("sh_r"))).cast("double") - inter
-    val repPairs = cands
-      .join(repL.select(col("id").as("id_l"), col("sh").as("sh_l")), "id_l")
-      .join(repR.select(col("id").as("id_r"), col("sh").as("sh_r")), "id_r")
-      .withColumn("jaccard", round(inter / uni, 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_l"), col("id_r"), col("jaccard"))
+    val cands = prefixCandidates(repL, Some(repR), threshold, maxShingleFreq,
+      "id_l", "id_r")
     // cross-wise expansion: each side's clones inherit the rep pair's
     // exact jaccard; no intra pairs across two distinct relations
-    val expL = memL match {
-      case None => repPairs
-      case Some(m) => repPairs
-        .join(m.select(col("rid").as("id_l"), col("mid")), "id_l")
-        .select(col("mid").as("id_l"), col("id_r"), col("jaccard"))
-    }
-    memR match {
-      case None => expL
-      case Some(m) => expL
-        .join(m.select(col("rid").as("id_r"), col("mid")), "id_r")
-        .select(col("id_l"), col("mid").as("id_r"), col("jaccard"))
-    }
+    expandSide(expandSide(verified(cands, repL, repR, threshold), memL, "id_l"),
+      memR, "id_r")
   }
 
   /** Collapse rows with IDENTICAL `keyCol` values to one representative
@@ -660,59 +576,89 @@ object Dedup {
         cross.unionByName(intra)
     }
 
-  /** The contracted form of [[jaccardPairs]]: similar pairs over
-    * cluster REPRESENTATIVES (one doc per identical shingle set),
-    * plus the rep→member expansion map. Callers that only need
-    * component structure (cluster resolution) consume this directly —
-    * the expanded member-pair relation is O(m²) per exact-duplicate
-    * cluster, which a crawl-scale corpus cannot afford to materialize.
+  /** One-sided member expansion: every clone of a `side`
+    * representative inherits the rep's pairs and measure (identical
+    * inputs), the other columns unchanged — the cross-relation
+    * counterpart of [[expandPairs]] (no intra pairs: the other side is
+    * a different relation). `members = None` passes `pairs` through.
     */
-  private def jaccardRepPairs(docs: DataFrame, idName: String, textName: String,
-                              n: Int, threshold: Double, maxShingleFreq: Long,
-                              shingles: Option[DataFrame] = None)
-      : (DataFrame, Option[DataFrame]) = {
-    // The shingle-set relation feeds FOUR consumers (frequency table,
-    // prefix ranking, and both verification sides); without
-    // materialization Catalyst recomputes the shingling per
-    // consumer — measured 4× the dominant cost of the whole query.
-    // MEMORY_AND_DISK persist is the standard materialize-reuse shape
-    // (same data volume a shuffle would spill); the cache entry lives
-    // until the session's next clearCache (the bench clears between
-    // queries). Shingles are the hashedShingleSets longs: set
-    // cardinalities — and therefore every Jaccard value — are
-    // preserved (injective w.h.p., ~n²/2⁶⁵ collision odds), the
-    // self-join and the verification intersects compare 8-byte longs
-    // instead of ~20-char strings, and no shingle string is ever
-    // built at all.
-    require(threshold > 0.0 && threshold <= 1.0)
-    // Collapse identical shingle SETS to one representative before
-    // pairing: a crawl-scale corpus is dominated by exact-duplicate
-    // clusters, and the prefix-filter join degrades quadratically in
-    // cluster size (every member shares every prefix shingle —
-    // measured 65× blowup on a 10×-replicated corpus). Representatives
-    // pair in cost proportional to UNIQUE documents; clusters expand
-    // back afterwards (cross pairs inherit the representative
-    // Jaccard, intra-cluster pairs are exactly 1.0), so the output is
-    // IDENTICAL to the naive all-pairs join. Members derive via a
-    // join, not collect_list — a boilerplate page with millions of
-    // twins must not become one giant array on one reducer.
-    // When the caller passes a pre-built shingle relation it is a
-    // persisted parquet artifact (the ensureShingleSets contract) —
-    // already its own materialization, so re-reading the scan per
-    // consumer is cheaper than a persist+count round trip over it.
-    val shAll = shingles.map(requireShingleN(_, n)).getOrElse(
+  private def expandSide(pairs: DataFrame, members: Option[DataFrame],
+                         side: String): DataFrame =
+    members.fold(pairs) { m =>
+      pairs.join(m.select(col("rid").as(side), col("mid")), side)
+        .select(pairs.columns.toSeq.map(c =>
+          if (c == side) col("mid").as(c) else col(c)): _*)
+    }
+
+  /** The (id, sh) shingle sets of `docs`: the caller's pre-built
+    * relation `pre` (width-checked; a persisted parquet artifact — the
+    * ensureShingleSets contract — is already its own materialization,
+    * so re-reading the scan per consumer is cheaper than a
+    * persist+count round trip over it) or a fresh, materialized
+    * [[hashedShingleSets]] build. The sets feed several consumers
+    * (frequency table, prefix ranking or signatures, both verification
+    * sides); without materialization Catalyst recomputes the shingling
+    * per consumer — measured 4× the dominant cost of the whole query.
+    */
+  private def shingleSets(docs: DataFrame, idName: String, textName: String,
+                          n: Int, pre: Option[DataFrame]): DataFrame =
+    pre.map(requireShingleN(_, n)).getOrElse(
       materialized(hashedShingleSets(docs, idName, textName, n)))
-    val (groups, members) = contractBy(shAll, "id", "sh")
-    // cloned corpus: groups is materialized by contractBy; clone-free:
-    // groups projects off the shAll cache above — projections below
-    // re-read a cache either way, no second persist of the shingle sets
-    val sh = groups.select(col("rid").as("id"), col("sh"), col("gsize"))
-    val exploded = sh.select(col("id"), size(col("sh")).as("nsh"), col("gsize"),
-      explode(col("sh")).as("g"))
+
+  /** [[contractBy]] over a shingle relation: the representative sets
+    * (id, sh, gsize) and the rep → member map. Cloned corpus: the reps
+    * are materialized by contractBy; clone-free: they project off the
+    * shingle relation, so consumers re-read its cache either way.
+    */
+  private def repSets(sh: DataFrame): (DataFrame, Option[DataFrame]) = {
+    val (groups, members) = contractBy(sh, "id", "sh")
+    (groups.select(col("rid").as("id"), col("sh"), col("gsize")), members)
+  }
+
+  /** Exact shingle-Jaccard verification of candidate pairs: `cands`'
+    * two id columns (a, b) joined to the (id, sh) sets of `left` and
+    * `right`, kept at or above `threshold` as (a, b, jaccard) — the one
+    * verify of the family. The union size is |A| + |B| − |A∩B|: the
+    * sets are distinct and non-empty ([[hashedShingleSets]] drops
+    * shingle-less documents, [[requireShingleN]] admits only its
+    * relations), so it equals `size(array_union)` without building the
+    * union; the `uni > 0` guard keeps an empty pair at 0.
+    */
+  private def verified(cands: DataFrame, left: DataFrame, right: DataFrame,
+                       threshold: Double): DataFrame = {
+    val (a, b) = (cands.columns(0), cands.columns(1))
+    val inter = size(array_intersect(col("__sh_a"), col("__sh_b"))).cast("double")
+    val uni = (size(col("__sh_a")) + size(col("__sh_b"))).cast("double") - inter
+    cands.join(left.select(col("id").as(a), col("sh").as("__sh_a")), a)
+      .join(right.select(col("id").as(b), col("sh").as("__sh_b")), b)
+      .withColumn("jaccard", round(when(uni > 0, inter / uni).otherwise(lit(0.0)), 6))
+      .filter(col("jaccard") >= threshold)
+      .select(col(a), col(b), col("jaccard"))
+  }
+
+  /** PPJoin candidate pairs (a, b) between representative sets
+    * (id, sh, gsize): `right = None` is the self form — `left` against
+    * itself, pairs `l.id < r.id`. For Jaccard >= t two sets must share
+    * a shingle within each other's prefixes when both are ordered by
+    * ascending global frequency, so the quadratic shingle join runs
+    * only over those prefixes (rare shingles), never over the hot
+    * stop-shingles that dominate df² cost. The frequency table is ONE
+    * table over both sides: the prefix filter is only exact when both
+    * sides slice their prefixes under the same total order.
+    */
+  private def prefixCandidates(left: DataFrame, right: Option[DataFrame],
+                               threshold: Double, maxShingleFreq: Long,
+                               a: String, b: String): DataFrame = {
+    def exploded(rep: DataFrame) = rep.select(col("id"),
+      size(col("sh")).as("nsh"), col("gsize"), explode(col("sh")).as("g"))
+    val exL = exploded(left)
+    val exR = right.map(exploded)
     // df counts DOCUMENTS (sum of group sizes), not representatives,
     // so the maxShingleFreq stop-shingle cap keeps its caller-facing
     // semantics on duplicate-heavy corpora
-    val freq = exploded.groupBy("g").agg(sum(col("gsize")).as("df"))
+    val freq = exR.fold(exL)(r => exL.select(col("g"), col("gsize"))
+        .unionByName(r.select(col("g"), col("gsize"))))
+      .groupBy("g").agg(sum(col("gsize")).as("df"))
       .filter(col("df") <= maxShingleFreq)
     // order shingles per doc by (global df asc, shingle asc); keep the
     // prefix that any qualifying pair must intersect. One keyed
@@ -726,13 +672,14 @@ object Dedup {
     // ceil can only lengthen the prefix, which keeps exactness.
     val plen = (col("nsh") - ceil(lit(threshold) * col("nsh") - lit(1e-9)) + 1)
       .cast("int")
-    val ranked = exploded.join(freq, Seq("g"))
+    def ranked(ex: DataFrame) = ex.join(freq, Seq("g"))
       .groupBy(col("id"))
       .agg(first(col("nsh")).as("nsh"),
         sort_array(collect_list(struct(col("df"), col("g")))).as("arr"))
       .select(col("id"), col("nsh"),
         posexplode(slice(col("arr"), lit(1), plen)))
       .select(col("id"), col("nsh"), col("pos"), col("col.g").as("g"))
+    val rankedL = ranked(exL)
     // PPJoin's candidate-time prunes on top of the prefix filter —
     // both are exact (no false negatives), both cut the dominant cost
     // (candidate volume into distinct + verification; measured 299 K
@@ -752,24 +699,41 @@ object Dedup {
     //    overestimated α would drop true pairs).
     val alpha = ceil(lit(threshold / (1 + threshold)) *
       (col("l.nsh") + col("r.nsh")) - lit(1e-9))
-    val cands = ranked.as("l").join(ranked.as("r"),
-        col("l.g") === col("r.g") && col("l.id") < col("r.id") &&
+    rankedL.as("l").join(exR.fold(rankedL)(ranked).as("r"),
+        col("l.g") === col("r.g") &&
+          right.fold(col("l.id") < col("r.id"))(_ => lit(true)) &&
           col("r.nsh").cast("double") >= lit(threshold) * col("l.nsh") &&
           col("l.nsh").cast("double") >= lit(threshold) * col("r.nsh") &&
           least(col("l.nsh") - col("l.pos"), col("r.nsh") - col("r.pos"))
             .cast("double") >= alpha)
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
+      .select(col("l.id").as(a), col("r.id").as(b))
       .distinct()
-    // exact verification on the candidate pairs only
-    val setsA = sh.select(col("id").as("id_a"), col("sh").as("sh_a"))
-    val setsB = sh.select(col("id").as("id_b"), col("sh").as("sh_b"))
-    val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
-    val uni = (size(col("sh_a")) + size(col("sh_b"))).cast("double") - inter
-    val repPairs = cands.join(setsA, "id_a").join(setsB, "id_b")
-      .withColumn("jaccard", round(inter / uni, 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-    (repPairs, members)
+  }
+
+  /** The contracted form of [[jaccardPairs]]: similar pairs over
+    * cluster REPRESENTATIVES (one doc per identical shingle set),
+    * plus the rep→member expansion map. Callers that only need
+    * component structure (cluster resolution) consume this directly —
+    * the expanded member-pair relation is O(m²) per exact-duplicate
+    * cluster, which a crawl-scale corpus cannot afford to materialize.
+    *
+    * Collapsing identical shingle SETS to one representative before
+    * pairing matters because a crawl-scale corpus is dominated by
+    * exact-duplicate clusters and the prefix-filter join degrades
+    * quadratically in cluster size (every member shares every prefix
+    * shingle — measured 65× blowup on a 10×-replicated corpus).
+    * Shingles are the hashedShingleSets longs: set cardinalities — and
+    * therefore every Jaccard value — are preserved (injective w.h.p.,
+    * ~n²/2⁶⁵ collision odds), and the joins compare 8-byte longs.
+    */
+  private def jaccardRepPairs(docs: DataFrame, idName: String, textName: String,
+                              n: Int, threshold: Double, maxShingleFreq: Long,
+                              shingles: Option[DataFrame] = None)
+      : (DataFrame, Option[DataFrame]) = {
+    require(threshold > 0.0 && threshold <= 1.0)
+    val (sh, members) = repSets(shingleSets(docs, idName, textName, n, shingles))
+    val cands = prefixCandidates(sh, None, threshold, maxShingleFreq, "id_a", "id_b")
+    (verified(cands, sh, sh, threshold), members)
   }
 
   /** Near-dup cluster resolution straight from documents: jaccard
@@ -828,28 +792,15 @@ object Dedup {
     * Jaccard-threshold pair relation is a pure function of (corpus,
     * n, threshold, maxShingleFreq) and is the standing state of a
     * continuous dedup pipeline (envelope oracles key on it, cluster
-    * maintenance folds batches into it, reporting reads it). The
-    * parameter tuple rides the path AND a verified sidecar, exactly
-    * like [[ensureClusterLabels]] — a renamed directory cannot serve
-    * pairs computed under different parameters.
+    * maintenance folds batches into it, reporting reads it). Keyed
+    * and verified like [[ensureClusterLabels]] ([[ensureJaccard]]).
     */
   def ensureJaccardPairs(docs: DataFrame, idName: String, textName: String,
                          n: Int, threshold: Double, maxShingleFreq: Long,
                          path: String,
-                         shingles: Option[DataFrame] = None): DataFrame = {
-    val spark = docs.sparkSession
-    val full = s"$path-n$n-t${(threshold * 1e6).toLong}-f$maxShingleFreq"
-    val meta = Map("kind" -> "jaccard-pairs", "n" -> n.toString,
-      "threshold" -> threshold.toString,
-      "maxShingleFreq" -> maxShingleFreq.toString)
-    def ok(p: String) = Artifact.complete(p) && Artifact.metaMatches(p, meta)
-    Artifact.ensure(full, ok) { tmp =>
-      jaccardPairs(docs, idName, textName, n, threshold, maxShingleFreq,
-        shingles).write.parquet(tmp)
-      Artifact.writeMeta(tmp, meta)
-    }
-    spark.read.parquet(full)
-  }
+                         shingles: Option[DataFrame] = None): DataFrame =
+    ensureJaccard(docs, "jaccard-pairs", n, threshold, maxShingleFreq, path)(
+      jaccardPairs(docs, idName, textName, n, threshold, maxShingleFreq, shingles))
 
   /** Build-once persisted cluster-label artifact (the
     * `Similarity.ensureIvfIndex` pattern applied to dedup): the
@@ -873,25 +824,26 @@ object Dedup {
   def ensureClusterLabels(docs: DataFrame, idName: String, textName: String,
                           n: Int, threshold: Double, maxShingleFreq: Long,
                           path: String,
-                          shingles: Option[DataFrame] = None): DataFrame = {
-    val spark = docs.sparkSession
-    // the caller's path tags the SOURCE data; the parameter tuple must
-    // also be part of the key, or tuning (n, threshold, ...) would
-    // silently serve labels computed under the old settings. The same
-    // tuple is persisted INSIDE the artifact as a sidecar and verified
-    // on resolve, so a renamed/mislabeled directory cannot serve
-    // labels computed under different parameters.
+                          shingles: Option[DataFrame] = None): DataFrame =
+    ensureJaccard(docs, "jaccard-cluster-labels", n, threshold, maxShingleFreq, path)(
+      jaccardClusters(docs, idName, textName, n, threshold, maxShingleFreq, shingles))
+
+  /** The persisted `kind` relation `rel` of a Jaccard-threshold build
+    * at `path` tagged with its parameter tuple. The caller's path tags
+    * the SOURCE data; the tuple must also be part of the key, or tuning
+    * (n, threshold, ...) would silently serve a relation computed under
+    * the old settings. The same tuple is the artifact's verified
+    * sidecar, so a renamed or mislabeled directory cannot serve it
+    * either.
+    */
+  private def ensureJaccard(docs: DataFrame, kind: String, n: Int,
+                            threshold: Double, maxShingleFreq: Long,
+                            path: String)(rel: => DataFrame): DataFrame = {
     val full = s"$path-n$n-t${(threshold * 1e6).toLong}-f$maxShingleFreq"
-    val meta = Map("kind" -> "jaccard-cluster-labels", "n" -> n.toString,
+    Artifact.ensureWithMeta(full, Map("kind" -> kind, "n" -> n.toString,
       "threshold" -> threshold.toString,
-      "maxShingleFreq" -> maxShingleFreq.toString)
-    def ok(p: String) = Artifact.complete(p) && Artifact.metaMatches(p, meta)
-    Artifact.ensure(full, ok) { tmp =>
-      jaccardClusters(docs, idName, textName, n, threshold, maxShingleFreq,
-        shingles).write.parquet(tmp)
-      Artifact.writeMeta(tmp, meta)
-    }
-    spark.read.parquet(full)
+      "maxShingleFreq" -> maxShingleFreq.toString))(rel.write.parquet(_))
+    docs.sparkSession.read.parquet(full)
   }
 
   /** Build-once persisted hashed-shingle relation `(id, sh)` — the
@@ -903,27 +855,18 @@ object Dedup {
     * downstream dedup/decontamination job is a parquet scan of the
     * hash relation instead of a re-scan of the raw text. Keyed on the
     * caller's source-tagged path + n (same contract as
-    * [[ensureClusterLabels]]); published atomically via
-    * [[Artifact.ensure]].
+    * [[ensureClusterLabels]]); published atomically, with its
+    * parameter sidecar, via [[Artifact.ensureWithMeta]].
     */
   def ensureShingleSets(docs: DataFrame, idName: String, textName: String,
                         n: Int, path: String): DataFrame = {
-    val spark = docs.sparkSession
     val full = s"$path-n$n"
-    val meta = Map("kind" -> "shingle-sets", "n" -> n.toString)
-    // completeness includes the parameter sidecar: a pre-sidecar (or
-    // mislabeled) directory reads as incomplete and is rebuilt with
-    // provenance rather than trusted
-    def ok(p: String) = Artifact.complete(p) && Artifact.metaMatches(p, meta)
-    Artifact.ensure(full, ok) { tmp =>
-      hashedShingleSets(docs, idName, textName, n)
-        .write.parquet(tmp)
-      Artifact.writeMeta(tmp, meta)
-    }
+    Artifact.ensureWithMeta(full, Map("kind" -> "shingle-sets", "n" -> n.toString))(
+      hashedShingleSets(docs, idName, textName, n).write.parquet(_))
     // the field-metadata check proves the parquet round-trip preserved
     // the width tag — the relation this returns is accepted by every
     // consumer of the contract
-    requireShingleN(spark.read.parquet(full), n)
+    requireShingleN(docs.sparkSession.read.parquet(full), n)
   }
 
   /** Benchmark-contamination check — the decontamination gate of a
@@ -1207,12 +1150,6 @@ object Dedup {
     rel
   }
 
-  /** Persist + eagerly materialize: downstream consumers run as
-    * concurrent stages of one job, and a lazy cache would be raced —
-    * each stage recomputing the shingling before the first one
-    * populates it. One small count() action up front makes every
-    * consumer a cache read.
-    */
   /** One-task min-root union-find over a symmetrized (src, dst) edge
     * relation that fits a single partition. Attaching the larger root
     * under the smaller keeps every tree's root equal to its
@@ -1247,19 +1184,6 @@ object Dedup {
       }
       .toDF("id", "canonical_id")
   }
-
-  // Already-persisted inputs (a caller-shared batchShingles /
-  // batchBands, or a plan equivalent to one in the cache) pass
-  // through untouched — re-persisting is a no-op that still logs
-  // `CacheManager: Asked to cache already cached data` on every call,
-  // and the WARN-free bench tail is a pinned discipline (ProbeWarnScan)
-  private def materialized(df: DataFrame): DataFrame =
-    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
-    else {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    }
 
   // ----------------------------------------------------------------
   // Cross-document duplicated-SPAN removal (exact substring dedup)
@@ -1336,15 +1260,8 @@ object Dedup {
     */
   def spanDedup(docs: DataFrame, idName: String, textName: String,
                 k: Int = 8): DataFrame = {
-    val spans = spanHashes(docs, idName, textName, k)
-    val groups = spans.groupBy(col("h"))
-      .agg(min(struct(col("id"), col("pos"))).as("keeper"),
-        count(lit(1)).as("n_occ"))
-      .filter(col("n_occ") > 1)
-    val losers = spans.join(groups, Seq("h"))
-      .filter(struct(col("id"), col("pos")) =!= col("keeper"))
-      .select(col("id"), col("pos").as("s"), (col("pos") + lit(k - 1)).as("e"))
-    spanRemovalOutput(docs, idName, textName, losers)
+    spanRemovalOutput(docs, idName, textName,
+      laterOccurrences(spanHashes(docs, idName, textName, k), k))
   }
 
   /** Batch-over-archive duplicated-span removal — `dedupIncremental`
@@ -1370,18 +1287,9 @@ object Dedup {
                            k: Int = 8): DataFrame = {
     val spans = spanHashes(batch, idName, textName, k)
     val arch = archiveHashes.select(col("h"))
-    val archived = spans.join(arch, Seq("h"), "left_semi")
-      .select(col("id"), col("pos").as("s"), (col("pos") + lit(k - 1)).as("e"))
-    val fresh = spans.join(arch, Seq("h"), "left_anti")
-    val freshGroups = fresh.groupBy(col("h"))
-      .agg(min(struct(col("id"), col("pos"))).as("keeper"),
-        count(lit(1)).as("n_occ"))
-      .filter(col("n_occ") > 1)
-    val freshLosers = fresh.join(freshGroups, Seq("h"))
-      .filter(struct(col("id"), col("pos")) =!= col("keeper"))
-      .select(col("id"), col("pos").as("s"), (col("pos") + lit(k - 1)).as("e"))
-    spanRemovalOutput(batch, idName, textName,
-      archived.unionByName(freshLosers))
+    val archived = spanIntervals(spans.join(arch, Seq("h"), "left_semi"), k)
+    spanRemovalOutput(batch, idName, textName, archived.unionByName(
+      laterOccurrences(spans.join(arch, Seq("h"), "left_anti"), k)))
   }
 
   /** Distinct span hashes of a corpus — the compact relation a
@@ -1391,6 +1299,23 @@ object Dedup {
   def spanArchive(docs: DataFrame, idName: String, textName: String,
                   k: Int): DataFrame =
     spanHashes(docs, idName, textName, k).select(col("h")).distinct()
+
+  /** Every occurrence of a span content in `spans` but its first —
+    * keep-first `min (id, pos)` per hash, one partial-aggregable keyed
+    * shuffle — as removal intervals.
+    */
+  private def laterOccurrences(spans: DataFrame, k: Int): DataFrame = {
+    val groups = spans.groupBy(col("h"))
+      .agg(min(struct(col("id"), col("pos"))).as("keeper"),
+        count(lit(1)).as("n_occ"))
+      .filter(col("n_occ") > 1)
+    spanIntervals(spans.join(groups, Seq("h"))
+      .filter(struct(col("id"), col("pos")) =!= col("keeper")), k)
+  }
+
+  /** Span occurrences (id, pos) as word intervals (id, s, e). */
+  private def spanIntervals(occ: DataFrame, k: Int): DataFrame =
+    occ.select(col("id"), col("pos").as("s"), (col("pos") + lit(k - 1)).as("e"))
 
   /** Shared tail of the span-dedup family: removal occurrences
     * (id, s, e) → merged contiguous regions → one stats + cleaned-md5

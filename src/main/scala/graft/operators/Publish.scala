@@ -107,11 +107,62 @@ object Publish {
     val out =
       if (!Artifact.hadoopDirExists(spark, table)) rows
       else withGuardRows(rows, batch.select(col(idName))
-          .join(spark.read.parquet(table).select(col(idName)), Seq(idName), "left_semi"),
+          .join(readTable(spark, table).select(col(idName)), Seq(idName), "left_semi"),
         format_string(s"$who: batch re-ingests indexed $idName %s — id spaces " +
           "must be disjoint", col(idName).cast("string")))
     guarded(out.write.mode("append").partitionBy(partitionBy: _*).parquet(table))
   }
+
+  /** The parquet table at `dir`, which may be a staged generation
+    * (step 1) a build reads back before the swap. Spark skips a
+    * `.`-prefixed root path by name and logs `All paths were ignored`
+    * (it still reads it), so such a root is read through its listed
+    * data children, with `dir` as the partition base path (a glob
+    * would log a metadata-lookup warning instead).
+    */
+  private[graft] def readTable(spark: SparkSession, dir: String): DataFrame = {
+    val root = new Path(dir)
+    if (!root.getName.startsWith(".")) spark.read.parquet(dir)
+    else {
+      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      val data = fs.listStatus(root).map(_.getPath.getName).filterNot(n =>
+        n.startsWith(".") || n.startsWith("_") && !n.contains("="))
+      spark.read.option("basePath", dir).parquet(data.map(n => s"$dir/$n").toSeq: _*)
+    }
+  }
+
+  /** The rows of every generation of the generation-tagged table `dir`
+    * (`dir/batch=<gen>`) except generation `bid`'s, without the
+    * `batch` column — the archive a stream-state trigger or an
+    * incremental batch probes. Excluding its own generation is what
+    * makes a retry safe: a caller that crashed after appending
+    * generation `bid` and re-runs must not dedup its batch against its
+    * own rows. `absent` is the relation before the first generation
+    * exists; a table without `batch=` partitions raises (`who`
+    * prefixes the text), since it could not exclude a retry's own
+    * append.
+    */
+  private[graft] def priorGenerations(spark: SparkSession, dir: String, bid: Long,
+                                      who: String)(absent: => DataFrame): DataFrame =
+    if (!Artifact.hadoopDirExists(spark, dir)) absent
+    else {
+      val all = spark.read.parquet(dir)
+      require(all.columns.contains("batch"),
+        s"$who: archive at $dir is not generation-tagged (no batch= partition) " +
+          "— a flat archive cannot exclude a retry's own append; re-seed it as " +
+          "batch=<generation> directories")
+      all.filter(col("batch") =!= bid).drop("batch")
+    }
+
+  /** The file count of one generation written for `batch`: its
+    * input-split count, at least 1. The state relations are tiny next
+    * to the batch text and the cached aggregates they come from hold
+    * shuffle-width partitions, so a write at that width lands
+    * near-empty files every later archive read re-opens; the input
+    * split count is the honest size signal at any scale.
+    */
+  private[graft] def generationWidth(batch: DataFrame): Int =
+    math.max(1, batch.rdd.getNumPartitions)
 
   /** `out` plus one raising row per row of `violations` (zero rows
     * unless violated): the guard fires DURING the write, before it

@@ -34,6 +34,15 @@ import org.apache.spark.sql.functions._
   * documents (the hostile boilerplate case) never concentrates its
   * occurrences in one task. Reassembly is one keyed agg back on the
   * document id. Nothing is quadratic; no driver-side state.
+  *
+  * Every keep-first variant — fixed windows, CDC chunks, and CDC
+  * chunks against a generation-tagged archive — is one step,
+  * [[keepFirst]] (the `min(struct(doc, seg))` mark, with an optional
+  * archive anti-join), and every operator here ends in the one
+  * rebuild tail [[rebuilt]] (kept/dropped counts and the surviving
+  * segments rejoined in position order). The archive is read through
+  * [[Publish.priorGenerations]] and written at
+  * [[Publish.generationWidth]], like the streaming triggers'.
   */
 object SegmentOps {
 
@@ -57,33 +66,9 @@ object SegmentOps {
     * output is total over the input).
     */
   def dedupSegments(docs: DataFrame, idName: String, text: Column,
-                    segTokens: Int): DataFrame = {
-    val segs = tokenSegments(docs, idName, text, segTokens)
-    // first occurrence per segment text: a keyed min over a packed
-    // (doc, seg) struct — partial-aggregable, skew-safe under
-    // mega-duplicated segments (vs a row_number window, which would
-    // sort every occurrence of the hottest segment in one task).
-    val first = segs
-      .groupBy(col("seg_text"))
-      .agg(min(struct(col(idName), col("seg"))).as("__first"))
-    val marked = segs.join(first, "seg_text")
-      .withColumn("__kept",
-        col("__first")(idName) === col(idName) && col("__first")("seg") === col("seg"))
-    val rebuilt = marked
-      .groupBy(col(idName))
-      .agg(
-        sum(when(col("__kept"), 1L).otherwise(0L)).as("n_kept"),
-        sum(when(col("__kept"), 0L).otherwise(1L)).as("n_dropped"),
-        concat_ws(" ",
-          transform(
-            sort_array(collect_list(when(col("__kept"), struct(col("seg"), col("seg_text"))))),
-            x => x("seg_text"))).as("clean_text"))
-    docs.select(col(idName)).join(rebuilt, Seq(idName), "left")
-      .select(col(idName),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("n_dropped"), lit(0L)).as("n_dropped"),
-        coalesce(col("clean_text"), lit("")).as("clean_text"))
-  }
+                    segTokens: Int): DataFrame =
+    keepFirst(docs, tokenSegments(docs, idName, text, segTokens), idName,
+      "seg_text")._1
 
   /** ALIGNMENT-ROBUST duplicate-segment removal: segments are
     * content-defined chunks ([[Chunking.cdcChunks]]) instead of
@@ -101,32 +86,9 @@ object SegmentOps {
     * clean_text — surviving chunks rejoined in position order).
     */
   def dedupSegmentsCdc(docs: DataFrame, idName: String, text: Column,
-                       boundary256: Int): DataFrame = {
-    val segs = Chunking
-      .cdcChunks(docs, idName, text, boundary256, withText = true)
-      .select(col("id").as(idName), col("chunk_idx").as("seg"),
-        col("chunk_md5"), col("chunk_text").as("seg_text"))
-    val first = segs
-      .groupBy(col("chunk_md5"))
-      .agg(min(struct(col(idName), col("seg"))).as("__first"))
-    val marked = segs.join(first, "chunk_md5")
-      .withColumn("__kept",
-        col("__first")(idName) === col(idName) && col("__first")("seg") === col("seg"))
-    val rebuilt = marked
-      .groupBy(col(idName))
-      .agg(
-        sum(when(col("__kept"), 1L).otherwise(0L)).as("n_kept"),
-        sum(when(col("__kept"), 0L).otherwise(1L)).as("n_dropped"),
-        concat_ws(" ",
-          transform(
-            sort_array(collect_list(when(col("__kept"), struct(col("seg"), col("seg_text"))))),
-            x => x("seg_text"))).as("clean_text"))
-    docs.select(col(idName)).join(rebuilt, Seq(idName), "left")
-      .select(col(idName),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("n_dropped"), lit(0L)).as("n_dropped"),
-        coalesce(col("clean_text"), lit("")).as("clean_text"))
-  }
+                       boundary256: Int): DataFrame =
+    keepFirst(docs, cdcBatchSegments(docs, idName, text, boundary256), idName,
+      "chunk_md5")._1
 
   /** Distinct CDC-chunk fingerprints of a corpus — the compact state
     * a continuous pipeline persists between batches (the q89
@@ -200,18 +162,13 @@ object SegmentOps {
       s"dedupSegmentsCdcIncremental: batchId must be >= 0, got $batchId " +
         "— negative generations are reserved for the bootstrap base " +
         "and compaction folds")
-    require(Artifact.hadoopDirExists(spark, archivePath),
-      s"dedupSegmentsCdcIncremental: no chunk archive at $archivePath — " +
-        "bootstrap it with bootstrapCdcChunkArchive (cdcChunkArchive " +
-        "over history, generation-tagged)")
-    val archAll = spark.read.parquet(archivePath)
-    require(archAll.columns.contains("batch"),
-      s"dedupSegmentsCdcIncremental: archive at $archivePath is not " +
-        "generation-tagged (no batch= partition) — a flat archive " +
-        "cannot exclude a retry's own append; re-seed it with " +
-        "bootstrapCdcChunkArchive")
-    val arch = archAll.filter(col("batch") =!= batchId)
-      .drop("batch").select(col("chunk_md5"))
+    val arch = Publish.priorGenerations(spark, archivePath, batchId,
+        "dedupSegmentsCdcIncremental") {
+      throw new IllegalArgumentException(
+        s"dedupSegmentsCdcIncremental: no chunk archive at $archivePath — " +
+          "bootstrap it with bootstrapCdcChunkArchive (cdcChunkArchive " +
+          "over history, generation-tagged)")
+    }.select(col("chunk_md5"))
     // chunk ONCE and share: both consumers below re-read the chunk
     // relation, and the CDC chunker (explode + per-doc window) is the
     // batch's dominant cost
@@ -220,11 +177,8 @@ object SegmentOps {
     val (out0, freshMd5) =
       dedupSegsVsArchive(batch, idName, text, boundary256, arch, Some(segs))
     val out = out0.localCheckpoint(true)
-    // generation sized to the trigger's input partitioning (the
-    // neardupBatch small-file rule — the fingerprint relation is tiny
-    // relative to the batch text)
-    val genParts = math.max(1, batch.rdd.getNumPartitions)
-    Publish.parquet(freshMd5.repartition(genParts), s"$archivePath/batch=$batchId")
+    Publish.parquet(freshMd5.repartition(Publish.generationWidth(batch)),
+      s"$archivePath/batch=$batchId")
     segs.unpersist()
     out
   }
@@ -254,24 +208,55 @@ object SegmentOps {
                                         text: Column, boundary256: Int,
                                         arch: DataFrame,
                                         segsOpt: Option[DataFrame] = None)
+      : (DataFrame, DataFrame) =
+    keepFirst(batch, segsOpt.getOrElse(
+      cdcBatchSegments(batch, idName, text, boundary256)), idName, "chunk_md5",
+      Some(arch))
+
+  /** Keep-first over the segment relation `segs` (idName, seg, `key`,
+    * seg_text) of `docs`: the FIRST occurrence of each `key` — ordered
+    * by (doc, seg position) — survives, every later one is dropped.
+    * The first occurrence is a keyed min over a packed (doc, seg)
+    * struct — partial-aggregable, skew-safe under mega-duplicated
+    * segments (vs a row_number window, which would sort every
+    * occurrence of the hottest segment in one task). With an
+    * `archive` of `key`s, an archived key is dropped outright (history
+    * is canonical) and keep-first runs over the archive-fresh
+    * occurrences. Returns ([[rebuilt]] per document of `docs`, the
+    * distinct fresh keys).
+    */
+  private def keepFirst(docs: DataFrame, segs: DataFrame, idName: String,
+                        key: String, archive: Option[DataFrame] = None)
       : (DataFrame, DataFrame) = {
-    val segs = segsOpt.getOrElse(
-      cdcBatchSegments(batch, idName, text, boundary256))
-    val fresh = segs.join(arch.select(col("chunk_md5")),
-      Seq("chunk_md5"), "left_anti")
+    val fresh = archive.fold(segs)(a =>
+      segs.join(a.select(col(key)), Seq(key), "left_anti"))
     val first = fresh
-      .groupBy(col("chunk_md5"))
+      .groupBy(col(key))
       .agg(min(struct(col(idName), col("seg"))).as("__first"))
-    // `first` holds archive-FRESH fingerprints only, so one left join
-    // classifies every chunk: no entry → archived (dropped), entry →
-    // kept iff this occurrence is the batch-first one
-    val marked = segs.join(first, Seq("chunk_md5"), "left")
-      .withColumn("__kept",
-        col("__first").isNotNull &&
-          col("__first")(idName) === col(idName) &&
-          col("__first")("seg") === col("seg"))
-    val rebuilt = marked
-      .groupBy(col(idName))
+    val isFirst =
+      col("__first")(idName) === col(idName) && col("__first")("seg") === col("seg")
+    // with an archive `first` holds archive-FRESH keys only, so one
+    // left join classifies every segment: no entry → archived
+    // (dropped), entry → kept iff this occurrence is the first one
+    val marked = archive.fold(segs.join(first, key).withColumn("__kept", isFirst))(_ =>
+      segs.join(first, Seq(key), "left")
+        .withColumn("__kept", col("__first").isNotNull && isFirst))
+    val out = docs.select(col(idName))
+      .join(rebuilt(marked, col(idName)), Seq(idName), "left")
+      .select(col(idName),
+        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
+        coalesce(col("n_dropped"), lit(0L)).as("n_dropped"),
+        coalesce(col("clean_text"), lit("")).as("clean_text"))
+    (out, fresh.select(col(key)).distinct())
+  }
+
+  /** The family's rebuild tail: per `keys` group of a `__kept`-marked
+    * segment relation, `n_kept`, `n_dropped` and `clean_text` (the
+    * kept segments rejoined in position order).
+    */
+  private def rebuilt(marked: DataFrame, keys: Column*): DataFrame =
+    marked
+      .groupBy(keys: _*)
       .agg(
         sum(when(col("__kept"), 1L).otherwise(0L)).as("n_kept"),
         sum(when(col("__kept"), 0L).otherwise(1L)).as("n_dropped"),
@@ -279,13 +264,6 @@ object SegmentOps {
           transform(
             sort_array(collect_list(when(col("__kept"), struct(col("seg"), col("seg_text"))))),
             x => x("seg_text"))).as("clean_text"))
-    val out = batch.select(col(idName)).join(rebuilt, Seq(idName), "left")
-      .select(col(idName),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("n_dropped"), lit(0L)).as("n_dropped"),
-        coalesce(col("clean_text"), lit("")).as("clean_text"))
-    (out, fresh.select(col("chunk_md5")).distinct())
-  }
 
   /** Per-domain boilerplate stripping: a segment text that occurs in
     * >= `maxDocFrac` of a domain's documents is template chrome and
@@ -313,16 +291,8 @@ object SegmentOps {
       .select(col("__dom"), col("seg_text"), lit(true).as("__chrome"))
     val marked = segs.join(chrome, Seq("__dom", "seg_text"), "left")
       .withColumn("__kept", col("__chrome").isNull)
-    val rebuilt = marked
-      .groupBy(col(idName), col("__dom"))
-      .agg(
-        sum(when(col("__kept"), 1L).otherwise(0L)).as("n_kept"),
-        sum(when(col("__kept"), 0L).otherwise(1L)).as("n_dropped"),
-        concat_ws(" ",
-          transform(
-            sort_array(collect_list(when(col("__kept"), struct(col("seg"), col("seg_text"))))),
-            x => x("seg_text"))).as("clean_text"))
-    rebuilt.select(col(idName), col("__dom").as(domName),
-      col("n_kept"), col("n_dropped"), col("clean_text"))
+    rebuilt(marked, col(idName), col("__dom"))
+      .select(col(idName), col("__dom").as(domName),
+        col("n_kept"), col("n_dropped"), col("clean_text"))
   }
 }

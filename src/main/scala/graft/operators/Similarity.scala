@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructType}
 
+import graft.Sessions.materialized
 import graft.functions.VecFns
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -214,17 +215,6 @@ object Similarity {
     }
   }
 
-  // skip already-persisted inputs (Dedup.materialized's rationale:
-  // the no-op re-persist logs a CacheManager WARN per call, and the
-  // bench tail is pinned WARN-free)
-  private def materialized(df: DataFrame): DataFrame =
-    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
-    else {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    }
-
   /** Batch retrieval: for every QUERY vector, the top-k nearest
     * CORPUS vectors — the two-relation form of [[knnJoin]] (serve a
     * batch of search/dedup probes against a fixed index without a
@@ -390,8 +380,9 @@ object Similarity {
     * (its code would clip outside int8 and corrupt every ranking
     * involving it — rebuild over the union when it trips). The
     * branches are tried in order, so the clip test only sees vectors of
-    * exactly `n` dimensions. Builds code the corpus their state came
-    * from and keep their own guards.
+    * exactly `n` dimensions. A build codes the corpus its state came
+    * from: [[buildSq8Index]] passes no `scales` (nothing can clip);
+    * the other builds keep their own guards.
     */
   private[graft] def frozenVecs(df: DataFrame, vecName: String, n: Int, who: String,
                                 scales: Option[Array[Double]] = None): DataFrame = {
@@ -641,9 +632,9 @@ object Similarity {
       writeCentroids(spark, cents, centroids)
       // build-time per-list baseline (occupancy + mean residual): the
       // reference point [[ivfDriftReport]] measures append drift
-      // against. Computed from the WRITTEN vectors table (the
-      // assignment pass is not repeated) — list-count-sized.
-      listStats(spark.read.parquet(vectors), cents, vecName)
+      // against. Computed from the WRITTEN (staged) vectors table —
+      // the assignment pass is not repeated — list-count-sized.
+      listStats(Publish.readTable(spark, vectors), cents, vecName)
         .withColumnRenamed("n", "n_build")
         .withColumnRenamed("resid_e6", "resid_build_e6")
         .coalesce(1).write.parquet(stats)
@@ -1609,7 +1600,9 @@ object Similarity {
     * scan reads 1/4 the bytes of the float vectors, and the floats
     * stay cold (optional exact re-rank tier). Quantization is a pure
     * function of (vector, scales), so the indexed ranking is
-    * BIT-IDENTICAL to the ad-hoc form (spec-pinned).
+    * BIT-IDENTICAL to the ad-hoc form (spec-pinned). A NULL vector, or
+    * one narrower or wider than the corpus, is rejected by the tier's
+    * in-row guards ([[frozenVecs]]) before anything is published.
     */
   def buildSq8Index(embeddings: DataFrame, idName: String, vecName: String,
                     indexPath: String): Unit = {
@@ -1617,7 +1610,11 @@ object Similarity {
     Publish.dirs(spark, Sq8Tier.at(indexPath)) {
       case Seq(codes, scalesDir) =>
         val scales = sq8Scales(embeddings, vecName)
-        embeddings.select(col(idName), sq8Code(col(vecName), scales).as("codes"))
+        // the scales come from this corpus, so nothing can clip; a NULL
+        // or ragged vector still raises instead of coding a NULL or
+        // zero-filled row
+        frozenVecs(embeddings, vecName, scales.length, "buildSq8Index")
+          .select(col(idName), sq8Code(col(vecName), scales).as("codes"))
           .write.parquet(codes)
         writeDims(spark, scalesDir, "scale", scales)
     }

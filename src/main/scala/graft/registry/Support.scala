@@ -170,23 +170,6 @@ private[graft] object Support {
         sum(coalesce(col("__hit"), lit(0))).cast("double")
           >= count(lit(1)).cast("double") * floor).as("ann_recall_ok"))
 
-  /** Materialize a multi-consumer relation once, passing through when
-    * an EQUIVALENT plan is already cached (`storageLevel` consults the
-    * CacheManager with plan matching): the no-op re-persist logs a
-    * `CacheManager: Asked to cache already cached data` WARN per call,
-    * and the bench tail is pinned WARN-free (ProbeWarnScan machine-
-    * checks it). The collision is real, not hypothetical — the
-    * SelfCheck fixture blocks run against [[SelfCheck.FixtureDir]]
-    * (sf0.001), so any run AT sf0.001 sees the main body re-derive
-    * plans the fixture block already cached.
-    */
-  def materializedOnce(df: DataFrame): DataFrame =
-    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
-    else {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count(); p
-    }
-
   /** THE pinned shingle width for the whole n-gram jaccard family:
     * one constant threads through the ensureShingleSets build AND
     * every consumer. Dedup additionally enforces the width at runtime

@@ -10,6 +10,7 @@ import graft.operators.{Artifact, Bloom, Chunking, Dedup, FreqSketch, InvertedIn
   Mixing, NbClassify, SegmentOps, Tagging, TextMetrics, UnigramLm}
 
 import Support._
+import graft.Sessions.materialized
 
 /** Text and dedup: corpus statistics, tokenizers (BPE, unigram LM),
   * quality and language ID, PII and dictionary redaction, sampling and
@@ -176,9 +177,8 @@ private[graft] object TextQueries {
       // single time, not per consumer; the exact side reads the
       // persisted pair artifact (standing pipeline state — its three
       // consumers are three scans of a tiny parquet)
-      def mat(df: DataFrame): DataFrame = materializedOnce(df)
       val exact = sharedPairs(s, dir)
-      val mh = mat(Dedup.minhashNearDups(t(s, dir).documents, "doc_id", "text",
+      val mh = materialized(Dedup.minhashNearDups(t(s, dir).documents, "doc_id", "text",
           threshold = 0.6, shingleN = JaccardShingleN,
           shingles = Some(sharedShingles(s, dir)))
         .select(col("id_a"), col("id_b")))
@@ -250,10 +250,10 @@ private[graft] object TextQueries {
       // ONE simhash pass (the token-explode aggregation is the
       // query's dominant scan) shared by the banded run, the recheck
       // join, and the independent 8-band completeness run
-      val sh = materializedOnce(Dedup.simhash64(docs, "doc_id", col("text")))
+      val sh = materialized(Dedup.simhash64(docs, "doc_id", col("text")))
       // the banded pair relation feeds two consumers (recheck +
       // completeness anti-join) — materialize so the band join runs once
-      val banded = materializedOnce(
+      val banded = materialized(
         Dedup.simhashNearDups(docs, "doc_id", "text", maxHamming = 8,
           hashes = Some(sh)))
       // subset/exactness: re-derive each emitted pair's hamming from
@@ -1427,9 +1427,8 @@ private[graft] object TextQueries {
       val archBands = Dedup.minhashBands(
         Dedup.minhashSignaturesFromShingles(shHist, k = 32,
           shingleN = JaccardShingleN))
-      def mat(df: DataFrame): DataFrame = materializedOnce(df)
       val shBatch = sh.filter(col("id") % 4 === 3)
-      val inc = mat(Dedup.minhashNearDupsIncremental(batch, "doc_id", "text",
+      val inc = materialized(Dedup.minhashNearDupsIncremental(batch, "doc_id", "text",
           archiveShingles = shHist, archiveBands = archBands,
           threshold = 0.6, k = 32, bands = 8, shingleN = JaccardShingleN,
           batchShingles = Some(shBatch))
@@ -1442,7 +1441,7 @@ private[graft] object TextQueries {
       // (jaccardJoin(batch, hist) + jaccardPairs(batch)): 7 s vs
       // 9-11 s at sf0.1 — two PPJoin pipelines pay two freq tables
       // and four ranked-prefix aggregations (SCALING.md)
-      val exact = mat(sharedPairs(s, dir)
+      val exact = materialized(sharedPairs(s, dir)
         .filter(col("id_a") % 4 === 3 || col("id_b") % 4 === 3)
         .withColumn("vs", when(col("id_a") % 4 === 3 && col("id_b") % 4 === 3,
           lit("batch")).otherwise(lit("archive"))))
@@ -1971,7 +1970,7 @@ private[graft] object TextQueries {
     Query("q204_perplexity_prune_approx", (s, dir) => {
       val docs = t(s, dir).documents
       val acc = 10000
-      val sur = materializedOnce(
+      val sur = materialized(
         TextMetrics.unigramSurprisal(docs, "doc_id", col("text"))
           .join(docs.select(col("doc_id"), col("lang")), "doc_id"))
       val edges = TextMetrics.approxBandEdges(sur, "lang", "avg_surprisal",
@@ -2204,14 +2203,14 @@ private[graft] object TextQueries {
       // probes — under the serving cap — with 12 hits)
       val probes = docs.filter(col("doc_id") % 40 === 0)
       val sh = sharedShingles(s, dir)
-      val archBands = materializedOnce(Dedup.minhashBands(
+      val archBands = materialized(Dedup.minhashBands(
         Dedup.minhashSignaturesFromShingles(sh, k = 32,
           shingleN = JaccardShingleN)))
-      val got = materializedOnce(Dedup.nearDupLookup(probes, "doc_id", "text",
+      val got = materialized(Dedup.nearDupLookup(probes, "doc_id", "text",
         sh, archBands, threshold = 0.6, shingleN = JaccardShingleN))
       val exact = sharedPairs(s, dir)
       val pid = probes.select(col("doc_id").as("__p"))
-      val exLookup = materializedOnce(
+      val exLookup = materialized(
         exact.join(pid, col("id_a") === col("__p"), "left_semi")
           .select(col("id_a").as("probe_id"), col("id_b").as("doc_id"),
             col("jaccard"))

@@ -8,6 +8,7 @@ import graft.functions.VecFns
 import graft.operators.{Artifact, InvertedIndex, Quantize, Retrieval, Similarity}
 
 import Support._
+import graft.Sessions.materialized
 
 /** Vectors and ANN: brute-force cosine, the LSH / IVF / PQ / SQ8 /
   * binary / IVF-SQ8 indexes with their lifecycle (append, drift,
@@ -368,7 +369,7 @@ private[graft] object VectorQueries {
       // SemDeDup contract). The sf0.001 fixture block above stays as
       // the decomposition-independent ground truth.
       val emb = t(s, dir).embeddings
-      val kept = materializedOnce(Similarity.semanticDedup(
+      val kept = materialized(Similarity.semanticDedup(
         emb, "vec_id", "embedding", tau = 0.35, nlist = 16))
       val kv = kept.join(emb, Seq("vec_id"))
         .select(col("cid"), col("vec_id"), col("embedding"))

@@ -142,11 +142,8 @@ object FileManifest {
     val meta = Map("kind" -> "file-stats-manifest", "v" -> "2",
       "cols" -> cols.sorted.mkString(","),
       "source" -> sourceTag(dir))
-    def ok(p: String) = Artifact.complete(p) && Artifact.metaMatches(p, meta)
-    Artifact.ensure(manifestPath, ok) { tmp =>
-      build(spark, dir, cols).write.mode("overwrite").parquet(tmp)
-      Artifact.writeMeta(tmp, meta)
-    }
+    Artifact.ensureWithMeta(manifestPath, meta)(
+      build(spark, dir, cols).write.mode("overwrite").parquet(_))
     spark.read.parquet(manifestPath)
   }
 

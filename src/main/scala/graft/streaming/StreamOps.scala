@@ -121,8 +121,7 @@ object StreamOps {
     val session =
       try spark.conf.get("spark.sql.shuffle.partitions").toInt
       catch { case _: NumberFormatException => Int.MaxValue }
-    val w = math.max(1, math.min(batch.rdd.getNumPartitions,
-      math.max(session, 1)))
+    val w = math.min(Publish.generationWidth(batch), math.max(session, 1))
     withStatePartitions(spark, w)(body)
   }
 
@@ -555,13 +554,10 @@ object StreamOps {
     import graft.operators.SegmentOps
     val spark = batch.sparkSession
     val fpDir = s"$stateDir/chunks"
-    val arch =
-      if (!graft.operators.Artifact.hadoopDirExists(spark, fpDir))
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL("chunk_md5 STRING"))
-      else spark.read.parquet(fpDir).filter(col("batch") =!= bid)
-        .drop("batch")
+    val arch = Publish.priorGenerations(spark, fpDir, bid, "cdcSegmentsBatch")(
+      spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](),
+        org.apache.spark.sql.types.StructType.fromDDL("chunk_md5 STRING")))
     // chunk ONCE and share across both effect jobs (the neardupBatch
     // shB discipline — the CDC chunker is the trigger's dominant cost)
     val segs = SegmentOps.cdcBatchSegments(
@@ -569,7 +565,7 @@ object StreamOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (out, freshMd5) = SegmentOps.dedupSegsVsArchive(
       batch, idName, col(textName), boundary256, arch, Some(segs))
-    val genParts = math.max(1, batch.rdd.getNumPartitions)
+    val genParts = Publish.generationWidth(batch)
     // disjoint outputs over the shared cached chunk relation —
     // concurrent (inParallel)
     Publish.dirs(spark, Seq(s"$stateDir/clean/batch=$bid", s"$fpDir/batch=$bid")) {
@@ -643,13 +639,10 @@ object StreamOps {
       Similarity.readCentroids(spark, stateDir)
     }
     val vecsDir = s"$stateDir/vecs"
-    val arch =
-      if (!Artifact.hadoopDirExists(spark, vecsDir))
-        batch.select(col(idName).as("id"), col(vecName).as("v"))
-          .withColumn("cid", lit(0))
-          .select(col("id"), col("cid"), col("v")).limit(0)
-      else spark.read.parquet(vecsDir).filter(col("batch") =!= bid)
-        .drop("batch")
+    val arch = Publish.priorGenerations(spark, vecsDir, bid, "semanticDedupBatch")(
+      batch.select(col(idName).as("id"), col(vecName).as("v"))
+        .withColumn("cid", lit(0))
+        .select(col("id"), col("cid"), col("v")).limit(0))
     // assign ONCE and share across both effect jobs (the
     // cdcSegmentsBatch segs discipline — the nearest-centroid pass
     // otherwise runs in the kept write AND the archive-rows write)
@@ -677,7 +670,7 @@ object StreamOps {
       }
       df.unionByName(clashIds.select(guardCols.toSeq: _*))
     }
-    val genParts = math.max(1, batch.rdd.getNumPartitions)
+    val genParts = Publish.generationWidth(batch)
     // disjoint outputs over the shared cached assignment relation —
     // concurrent (inParallel)
     Publish.dirs(spark, Seq(s"$vecsDir/batch=$bid", s"$stateDir/kept/batch=$bid")) {
@@ -718,15 +711,8 @@ object StreamOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val shDir = s"$stateDir/shingles"
     val bdDir = s"$stateDir/bands"
-    // Hadoop-FS existence check, not java.io.File: every other I/O
-    // here is spark.read/write, which accepts remote (hdfs://, s3a://)
-    // stateDirs — a local-FS check would report such an archive as
-    // absent and silently drop every cross-batch pair
-    def arch(dir: String, emptyRel: DataFrame): DataFrame =
-      if (!graft.operators.Artifact.hadoopDirExists(spark, dir)) emptyRel
-      else spark.read.parquet(dir).filter(col("batch") =!= bid).drop("batch")
-    val archSh = arch(shDir, shB.limit(0))
-    val archBd = arch(bdDir, bdB.limit(0))
+    val archSh = Publish.priorGenerations(spark, shDir, bid, "neardupBatch")(shB.limit(0))
+    val archBd = Publish.priorGenerations(spark, bdDir, bid, "neardupBatch")(bdB.limit(0))
     // State generations write at the TRIGGER's input partitioning,
     // not spark.sql.shuffle.partitions: the cached aggregates above
     // hold shuffle-partition-count partitions (AQE cannot re-coalesce
@@ -737,7 +723,7 @@ object StreamOps {
     // the honest size signal at any scale (a 100 TB trigger has many
     // input splits and keeps many output files); the long-running
     // small-file story remains [[compactIndex]]'s.
-    val genParts = math.max(1, batch.rdd.getNumPartitions)
+    val genParts = Publish.generationWidth(batch)
     // pairs: repartition, not coalesce — a coalesce would pull the
     // candidate-verify compute itself into genParts tasks (its probe
     // side is the cached shingle relation, a narrow dependency); the
@@ -870,8 +856,7 @@ object StreamOps {
     val fpB = batch.select(
       graft.functions.TextFns.fingerprint(col(textName)).as("fp")).distinct()
     def arch(dir: String, emptyRel: DataFrame): DataFrame =
-      if (!graft.operators.Artifact.hadoopDirExists(spark, dir)) emptyRel
-      else spark.read.parquet(dir).filter(col("batch") =!= bid).drop("batch")
+      Publish.priorGenerations(spark, dir, bid, "curationSink")(emptyRel)
     // gate 1: exact dedup vs the accumulated fingerprint archive
     val s1 = Dedup.dedupIncremental(batch,
         arch(s"$stateDir/fp", fpB.limit(0)), idName, textName)

@@ -10,7 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * support file and the Bench and Verify mains are allowlisted by
   * name. Appends likewise go through one helper,
   * [[graft.operators.Publish.append]]. This keeps the single mechanism
-  * from forking again.
+  * from forking again. The dedup family's shared steps — the eager
+  * `materialized`, the exact Jaccard verify, the segment keep-first
+  * and the prior-generation archive filter — are pinned to one
+  * definition each the same way.
   */
 class PublishAuditSpec extends AnyFunSuite {
 
@@ -52,5 +55,16 @@ class PublishAuditSpec extends AnyFunSuite {
   test("no append outside the shared append helper") {
     val bad = offenders("""\.mode\("append"\)|SaveMode\.Append""".r, _ == "Publish.scala")
     assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("each shared step of the dedup family is written once") {
+    def once(pattern: String, in: String => Boolean = _ => true): Unit = {
+      val hits = offenders(java.util.regex.Pattern.quote(pattern).r, f => !in(f))
+      assert(hits.size == 1, s"expected one `$pattern`:\n" + hits.mkString("\n"))
+    }
+    once("def materialized")
+    once("""array_intersect(col("""", _ == "Dedup.scala")
+    once("min(struct(col(", _ == "SegmentOps.scala")
+    once("""col("batch") =!=""")
   }
 }

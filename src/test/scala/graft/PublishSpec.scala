@@ -173,6 +173,14 @@ class PublishSpec extends SparkSpec {
     val rels = Seq(s"$idx/codes", s"$idx/scales")
     faultKeepsPrior(idx, rels, None)(Similarity.buildSq8Index(
       poisoned(emb, "embedding"), "vec_id", "embedding", idx))
+    // the build codes through the tier's guards too: a NULL vector
+    // would land a NULL code row, a ragged one a zero-filled code
+    faultKeepsPrior(idx, rels, nullGuard("buildSq8Index"))(Similarity.buildSq8Index(
+      withNullVec(emb, 100000L), "vec_id", "embedding", idx))
+    faultKeepsPrior(idx, rels, widthGuard("buildSq8Index", 8, 64))(Similarity
+      .buildSq8Index(emb.withColumn("embedding", when(col("vec_id") === 3L,
+        slice(col("embedding"), 1, 8)).otherwise(col("embedding"))),
+        "vec_id", "embedding", idx))
     faultKeepsPrior(idx, rels, Some(
         "appendSq8Index: a vector's \\|x_\\d+\\| = \\S+ exceeds the frozen scale \\S+ — codes would clip; rebuild the index over the union instead".r))(
       Similarity.appendSq8Index(spark, idx, fresh(emb, 200000L).withColumn("embedding",

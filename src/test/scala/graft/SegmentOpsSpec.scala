@@ -213,6 +213,29 @@ class SegmentOpsSpec extends SparkSpec {
     assert(e3.getMessage.contains("batchId must be >= 0"))
   }
 
+  test("dedupSegmentsCdcIncremental with an empty bootstrap archive degenerates to dedupSegmentsCdc") {
+    val span = (0 until 60).map(i => s"w$i").mkString(" ")
+    val other = (0 until 40).map(i => s"v$i").mkString(" ")
+    // within-batch duplication only: a shifted copy, a twin pair
+    val batch = Seq(
+      (10L, span),
+      (11L, "zzz " + span),
+      (12L, other),
+      (13L, other),
+      (14L, "q r s t")).toDF("doc_id", "text")
+    val arch = java.nio.file.Files
+      .createTempDirectory("cdcempty").toString + "/archive"
+    SegmentOps.bootstrapCdcChunkArchive(batch.limit(0), "doc_id", col("text"), 64, arch)
+    assert(spark.read.parquet(arch).count() == 0L)
+    val inc = SegmentOps.dedupSegmentsCdcIncremental(batch, "doc_id",
+        col("text"), 64, arch, batchId = 0L)
+      .orderBy("doc_id").as[(Long, Long, Long, String)].collect().toSeq
+    val full = SegmentOps.dedupSegmentsCdc(batch, "doc_id", col("text"), 64)
+      .orderBy("doc_id").as[(Long, Long, Long, String)].collect().toSeq
+    assert(inc == full, s"incremental $inc != batch $full")
+    assert(full.map(_._3).sum > 0L, s"nothing dropped: $full")
+  }
+
   test("cdcSegmentsBatch: streamed generations equal the sequential incremental fold; replay byte-identical") {
     import graft.streaming.StreamOps
     val span = (0 until 60).map(i => s"w$i").mkString(" ")
