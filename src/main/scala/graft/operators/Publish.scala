@@ -169,8 +169,8 @@ object Publish {
     * commits. Ids only flow through `violations` — the payload never
     * shuffles on a guard's account.
     */
-  private[operators] def withGuardRows(out: DataFrame, violations: DataFrame,
-                                       text: Column): DataFrame = {
+  private[graft] def withGuardRows(out: DataFrame, violations: DataFrame,
+                                   text: Column): DataFrame = {
     val cols = out.schema.fields.zipWithIndex.map { case (f, i) =>
       (if (i == 0) raise(text) else lit(null)).cast(f.dataType).as(f.name)
     }

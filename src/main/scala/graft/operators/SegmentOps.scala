@@ -171,9 +171,10 @@ object SegmentOps {
     }.select(col("chunk_md5"))
     // chunk ONCE and share: both consumers below re-read the chunk
     // relation, and the CDC chunker (explode + per-doc window) is the
-    // batch's dominant cost
-    val segs = cdcBatchSegments(batch, idName, text, boundary256)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // batch's dominant cost. Built before the checkpoint job, whose
+    // keep-first aggregate and marking join read it from concurrent
+    // stages.
+    val segs = graft.Sessions.materialized(cdcBatchSegments(batch, idName, text, boundary256))
     val (out0, freshMd5) =
       dedupSegsVsArchive(batch, idName, text, boundary256, arch, Some(segs))
     val out = out0.localCheckpoint(true)

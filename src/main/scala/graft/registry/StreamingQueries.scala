@@ -3,15 +3,26 @@ package registry
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.functions.TextFns
 import graft.operators.{Artifact, InvertedIndex, Similarity}
+import graft.streaming.StreamOps
 
 import Support._
 
 /** Structured Streaming: each row replays a persisted file backlog
   * (or the normalized events artifact) through a real sink, and the
-  * batch recompute is its oracle.
+  * batch recompute is its oracle. The rows share their steps, each
+  * written once:
+  *  - [[replay]]: a fresh scratch directory (the row's earlier one
+  *    removed), the backlog streamed into the row's sink with its
+  *    checkpoint under the scratch, run to the end of the backlog;
+  *  - [[streamToMemory]]: the memory-sink runner of q131/q136;
+  *  - [[requireGenerations]]: the committed `batch=` generation count,
+  *    a directory listing;
+  *  - [[fold]]: a state relation's committed generations compacted
+  *    into one base generation, loud when nothing folded.
   */
 private[graft] object StreamingQueries {
 
@@ -114,6 +125,143 @@ private[graft] object StreamingQueries {
       t(s, dir).orders.select(col("o_custkey").as("id"),
         col("o_totalprice").as("price"), col("o_orderkey").as("v")), "v", 4))
 
+  /** A stream over the parquet files at `src`, its schema read from
+    * them; `perTrigger` files per micro-batch when given.
+    */
+  private def fileStream(s: SparkSession, src: String,
+                         perTrigger: Option[Int] = None): DataFrame = {
+    val r = s.readStream.schema(s.read.parquet(src).schema)
+    perTrigger.fold(r)(n => r.option("maxFilesPerTrigger", n)).parquet(src)
+  }
+
+  /** Start a stream under the AvailableNow trigger and wait until it
+    * has drained everything present at its start.
+    */
+  private def runToEnd(start: Trigger => StreamingQuery): Unit =
+    start(Trigger.AvailableNow()).awaitTermination()
+
+  /** The memory-sink runner: `rows` (a stream) into memory table
+    * `name` in output `mode`, read back. The memory sink holds only
+    * the result rows on the driver; the production shape swaps it for
+    * a parquet/Kafka sink. A previous invocation's stream under the
+    * same name is stopped first (AvailableNow terminates it; belt and
+    * braces for error paths). State partitions are sized to the
+    * rows' key space, not the session's relational shuffle width: the
+    * store count is frozen from this conf at first run, and 32
+    * inherited stores for a dozen-key aggregation are pure commit
+    * overhead ([[StreamOps.withStatePartitions]]).
+    */
+  private def streamToMemory(s: SparkSession, name: String, mode: String)
+                            (rows: DataFrame): DataFrame = {
+    s.streams.active.filter(_.name == name).foreach(_.stop())
+    StreamOps.withStatePartitions(s, 8) {
+      runToEnd(rows.writeStream.format("memory").queryName(name)
+        .outputMode(mode).trigger(_).start())
+    }
+    s.table(name)
+  }
+
+  /** One backlog replay of registry row `row` (`q<NN>`): its scratch
+    * directory, holding the sink's state and its checkpoint.
+    */
+  private final case class Replay(row: String, dir: String) {
+    def ckpt: String = s"$dir/ckpt"
+  }
+
+  /** The scratch directory of each replay row's latest invocation in
+    * this JVM.
+    */
+  private val scratchDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** The replay step of every backlog row. A fresh scratch directory
+    * per invocation — the fold must replay from scratch to be
+    * comparable run over run — and the row's earlier scratch goes
+    * first: this JVM's previous one at once (rows run one at a time,
+    * so its result has been read), another process's once quiet for
+    * the sweep window (the [[Support.fixturePath]] rule). The backlog
+    * at `src` streams `perTrigger` files per micro-batch into the sink
+    * `start` builds — handed the stream, the replay and the trigger —
+    * and runs to its end.
+    */
+  private def replay(s: SparkSession, row: String, src: String, perTrigger: Int = 1)
+                    (start: (DataFrame, Replay, Option[Trigger]) => StreamingQuery)
+      : Replay = {
+    val prefix = s"graft_${row}_"
+    Option(scratchDirs.get(row)).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
+    Artifact.sweep(System.getProperty("java.io.tmpdir"), prefix, Set.empty)
+    val r = Replay(row, java.nio.file.Files.createTempDirectory(prefix).toString)
+    scratchDirs.put(row, r.dir)
+    val stream = fileStream(s, src, Some(perTrigger))
+    runToEnd(t => start(stream, r, Some(t)))
+    r
+  }
+
+  /** The number of `prefix`-named directories in `dir` — a listing,
+    * no Spark job.
+    */
+  private def dirsNamed(dir: String, prefix: String): Int =
+    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      .count(f => f.isDirectory && f.getName.startsWith(prefix))
+
+  /** Require `n` generations of the replay's relation `rel`, counted as
+    * `batch=` DIRECTORIES, not distinct row values: a trigger whose
+    * slice wrote no rows still lands an (empty) generation directory.
+    */
+  private def requireGenerations(r: Replay, rel: String, n: Int): Int = {
+    val nb = dirsNamed(s"${r.dir}/$rel", "batch=")
+    require(nb == n, s"${r.row} expected $n ingested batches, got $nb")
+    nb
+  }
+
+  /** Table maintenance: fold the committed generations of the replay's
+    * relation `rel` into one base generation, loud when nothing folded.
+    */
+  private def fold(s: SparkSession, r: Replay, rel: String): Unit = {
+    val folded = StreamOps.compactIndex(s, s"${r.dir}/$rel", r.ckpt)
+    require(folded.contains(-1L), s"${r.row} $rel compaction did not fold: $folded")
+  }
+
+  /** The q150/q166 replay: the versioned update backlog folded into a
+    * flat or key-bucketed SCD-2 history, read back.
+    */
+  private def scd2Replay(s: SparkSession, dir: String, row: String,
+                         historyBuckets: Option[Int]): (Replay, DataFrame) = {
+    val r = replay(s, row, ensureScd2Backlog(s, dir))((updates, r, now) =>
+      StreamOps.scd2Sink(updates, s"${r.dir}/history", "id", "v", r.ckpt, now,
+        historyBuckets))
+    (r, s.read.parquet(s"${r.dir}/history")
+      .select(col("id"), col("price"), col("v"),
+        col("valid_from"), col("valid_to"))
+      .orderBy("id", "valid_from"))
+  }
+
+  /** The q150/q166 oracle: reconstructs the SCD-2 stream fold with
+    * windows — same equal-width batch split over the orderkey min/max
+    * bounds, per-(key,batch) last-wins winner, per-batch asOf = max
+    * version, every appearance is a change row (versions are unique
+    * and ride in the payload), valid_to = the key's next appearance's
+    * asOf (NULL = still open).
+    */
+  private val SqlStreamScd2 =
+      """WITH bounds AS (SELECT min(o_orderkey) AS lo, max(o_orderkey) AS hi
+             FROM orders),
+         u AS (SELECT o_custkey AS id, o_totalprice AS price,
+             o_orderkey AS v,
+             CAST(floor(((o_orderkey - lo) * 4.0) / (hi - lo + 1))
+               AS BIGINT) + 1 AS b
+           FROM orders CROSS JOIN bounds),
+         a AS (SELECT b, CAST(max(v) AS BIGINT) AS asof FROM u GROUP BY b),
+         w AS (SELECT id, b, price, v FROM (
+             SELECT id, b, price, v,
+               row_number() OVER (PARTITION BY id, b ORDER BY v DESC) AS rn
+             FROM u) WHERE rn = 1)
+         SELECT w.id, w.price, CAST(w.v AS BIGINT) AS v,
+           a.asof AS valid_from,
+           lead(a.asof) OVER (PARTITION BY w.id ORDER BY w.b) AS valid_to
+         FROM w JOIN a USING (b)
+         ORDER BY id, valid_from"""
+
   def all: Seq[Query] = Seq(
     // ---------------- §2.10 streaming: batch-twin oracle parity ----------------
     // The windowed-aggregation path run as a REAL stream — file
@@ -129,29 +277,10 @@ private[graft] object StreamingQueries {
     // boundary; readStream has no such hook, so the artifact IS the
     // boundary).
     Query("q131_stream_hourly", (s, dir) => {
-      val src = ensureEventsSource(s, dir)
-      val schema = s.read.parquet(src).schema
-      val qname = "graft_stream_hourly"
-      // a previous invocation's stream under the same name must be
-      // gone before restart (AvailableNow terminates it; belt and
-      // braces for error paths)
-      s.streams.active.filter(_.name == qname).foreach(_.stop())
-      // state partitions sized to the query's key space (hours ×
-      // event types — dozens of keys), not the session's relational
-      // shuffle width: the store count is frozen from this conf at
-      // first run, and 32 inherited stores for a dozen-key agg is
-      // pure commit overhead (StreamOps.withStatePartitions doc)
-      graft.streaming.StreamOps.withStatePartitions(s, 8) {
-        val query = s.readStream.schema(schema).parquet(src)
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"), moneySum(col("value")).as("sum_value"))
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-      }
-      s.table(qname)
+      streamToMemory(s, "graft_stream_hourly", "complete")(
+          fileStream(s, ensureEventsSource(s, dir))
+            .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+            .agg(count(lit(1)).as("n"), moneySum(col("value")).as("sum_value")))
         .select(col("window.start").cast("long").as("hour_ts"),
           col("event_type"), col("n"), col("sum_value"))
         .orderBy("hour_ts", "event_type")
@@ -173,33 +302,21 @@ private[graft] object StreamingQueries {
     // production swaps it for a parquet/Kafka sink.
     Query("q136_stream_interval_join", (s, dir) => {
       val src = ensureEventsSource(s, dir)
-      val schema = s.read.parquet(src).schema
-      val qname = "graft_stream_interval"
-      s.streams.active.filter(_.name == qname).foreach(_.stop())
-      def stream = s.readStream.schema(schema).parquet(src)
-      val purchases = stream.filter(col("event_type") === "purchase")
+      val purchases = fileStream(s, src).filter(col("event_type") === "purchase")
         .select(col("event_id").as("purchase_id"),
           col("user_id").as("p_user"), col("ts").as("p_ts"))
-      val clicks = stream.filter(col("event_type") === "click")
+      val clicks = fileStream(s, src).filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"),
           col("user_id").as("c_user"), col("ts").as("c_ts"))
-      // a stream-stream join keeps FOUR state stores per partition;
-      // sized to the join's state budget instead of inheriting the
-      // session's 32 relational shuffle partitions (128 stores for a
-      // 371-row result — measured 2-3x the row's cost in pure
-      // store commits, ProbeStateParts / withStatePartitions doc)
-      graft.streaming.StreamOps.withStatePartitions(s, 8) {
-        val query = graft.streaming.StreamOps
-          .intervalJoin(purchases, clicks, "p_user", "c_user",
+      // a stream-stream join keeps FOUR state stores per partition
+      // (the runner's 8 state partitions, not the session's 32: 128
+      // stores for a 371-row result measured 2-3x the row's cost in
+      // pure store commits, ProbeStateParts)
+      streamToMemory(s, "graft_stream_interval", "append")(
+          StreamOps.intervalJoin(purchases, clicks, "p_user", "c_user",
             "p_ts", "c_ts", windowSec = 3600L)
-          .select(col("purchase_id"), col("click_id"))
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-      }
-      s.table(qname).orderBy("purchase_id", "click_id")
+            .select(col("purchase_id"), col("click_id")))
+        .orderBy("purchase_id", "click_id")
     }, oracle =
       // stream-stream interval join: the batch inequality join IS the
       // oracle (µs-exact interval arithmetic in both engines)
@@ -227,46 +344,8 @@ private[graft] object StreamingQueries {
     // collapse-last-wins, close+open, insert, ride-through, and the
     // multi-batch replay end to end.
     Query("q150_stream_scd2", (s, dir) => {
-      val src = ensureScd2Backlog(s, dir)
-      val schema = s.read.parquet(src).schema
-      // fresh history + checkpoint per invocation: the fold must
-      // replay from scratch to be comparable run-over-run
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q150").toString
-      val updates = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      val query = graft.streaming.StreamOps.scd2Sink(updates,
-        s"$scratch/history", "id", "v", s"$scratch/ckpt",
-        Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      query.awaitTermination()
-      s.read.parquet(s"$scratch/history")
-        .select(col("id"), col("price"), col("v"),
-          col("valid_from"), col("valid_to"))
-        .orderBy("id", "valid_from")
-    }, oracle =
-      // reconstructs the q150 stream fold with windows: same
-      // equal-width batch split over the orderkey min/max bounds,
-      // per-(key,batch) last-wins winner, per-batch asOf = max version,
-      // every appearance is a change row (versions are unique and ride
-      // in the payload), valid_to = the key's next appearance's asOf
-      // (NULL = still open)
-      """WITH bounds AS (SELECT min(o_orderkey) AS lo, max(o_orderkey) AS hi
-             FROM orders),
-         u AS (SELECT o_custkey AS id, o_totalprice AS price,
-             o_orderkey AS v,
-             CAST(floor(((o_orderkey - lo) * 4.0) / (hi - lo + 1))
-               AS BIGINT) + 1 AS b
-           FROM orders CROSS JOIN bounds),
-         a AS (SELECT b, CAST(max(v) AS BIGINT) AS asof FROM u GROUP BY b),
-         w AS (SELECT id, b, price, v FROM (
-             SELECT id, b, price, v,
-               row_number() OVER (PARTITION BY id, b ORDER BY v DESC) AS rn
-             FROM u) WHERE rn = 1)
-         SELECT w.id, w.price, CAST(w.v AS BIGINT) AS v,
-           a.asof AS valid_from,
-           lead(a.asof) OVER (PARTITION BY w.id ORDER BY w.b) AS valid_to
-         FROM w JOIN a USING (b)
-         ORDER BY id, valid_from"""),
+      scd2Replay(s, dir, "q150", historyBuckets = None)._2
+    }, oracle = SqlStreamScd2),
 
     // ---------------- bucketed SCD-2 history (layout invariance) ----------------
     // The q150 replay folded into a KEY-BUCKET-PARTITIONED history
@@ -276,49 +355,19 @@ private[graft] object StreamingQueries {
     // IDENTICAL to the flat layout's — same oracle SQL as q150, so
     // the layout choice is proven invisible under the driver's hash.
     Query("q166_stream_scd2_bucketed", (s, dir) => {
-      val src = ensureScd2Backlog(s, dir)
-      val schema = s.read.parquet(src).schema
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q166").toString
-      val updates = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      val query = graft.streaming.StreamOps.scd2Sink(updates,
-        s"$scratch/history", "id", "v", s"$scratch/ckpt",
-        Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-        historyBuckets = Some(8))
-      query.awaitTermination()
+      val (r, history) = scd2Replay(s, dir, "q166", historyBuckets = Some(8))
       SelfCheck.every(s"q166/$dir") {
-        val dirs = new java.io.File(s"$scratch/history").listFiles()
-          .count(_.getName.startsWith("__b="))
+        val dirs = dirsNamed(s"${r.dir}/history", "__b=")
         require(dirs >= 1 && dirs <= 8,
           s"q166 expected a bucket-partitioned history, found $dirs dirs")
         SelfCheck.note(s"history laid out in $dirs key-hash bucket dirs; " +
           "values hash-equal to the flat q150 layout")
       }
-      s.read.parquet(s"$scratch/history")
-        .select(col("id"), col("price"), col("v"),
-          col("valid_from"), col("valid_to"))
-        .orderBy("id", "valid_from")
+      history
     }, oracle =
       // IDENTICAL to the q150 oracle: the bucket-partitioned layout must
       // be value-invisible — same fold, same batches, same history
-      """WITH bounds AS (SELECT min(o_orderkey) AS lo, max(o_orderkey) AS hi
-             FROM orders),
-         u AS (SELECT o_custkey AS id, o_totalprice AS price,
-             o_orderkey AS v,
-             CAST(floor(((o_orderkey - lo) * 4.0) / (hi - lo + 1))
-               AS BIGINT) + 1 AS b
-           FROM orders CROSS JOIN bounds),
-         a AS (SELECT b, CAST(max(v) AS BIGINT) AS asof FROM u GROUP BY b),
-         w AS (SELECT id, b, price, v FROM (
-             SELECT id, b, price, v,
-               row_number() OVER (PARTITION BY id, b ORDER BY v DESC) AS rn
-             FROM u) WHERE rn = 1)
-         SELECT w.id, w.price, CAST(w.v AS BIGINT) AS v,
-           a.asof AS valid_from,
-           lead(a.asof) OVER (PARTITION BY w.id ORDER BY w.b) AS valid_to
-         FROM w JOIN a USING (b)
-         ORDER BY id, valid_from"""),
+      SqlStreamScd2),
 
     // ---------------- streaming near-dup maintenance ----------------
     // q183's stream twin, completing the continuous-ingest streaming
@@ -334,23 +383,11 @@ private[graft] object StreamingQueries {
     // pair artifact, stream-accumulated subset/recall verdicts pinned
     // TRUE.
     Query("q199_stream_neardups", (s, dir) => {
-      val src = ensureDocBacklog(s, dir)
-      val schema = s.read.parquet(src).schema
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q199").toString
-      val docsStream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      val query = graft.streaming.StreamOps.neardupSink(docsStream,
-        s"$scratch/state", "doc_id", "text", s"$scratch/ckpt",
-        Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-        threshold = 0.6, shingleN = JaccardShingleN)
-      query.awaitTermination()
+      val r = replay(s, "q199", ensureDocBacklog(s, dir))((docs, r, now) =>
+        StreamOps.neardupSink(docs, s"${r.dir}/state", "doc_id", "text", r.ckpt,
+          now, threshold = 0.6, shingleN = JaccardShingleN))
       SelfCheck.every(s"q199/$dir") {
-        // count batch DIRECTORIES, not distinct row values: a trigger
-        // whose slice has no near-dups still lands an (empty) batch dir
-        val nb = new java.io.File(s"$scratch/state/pairs").listFiles()
-          .count(f => f.isDirectory && f.getName.startsWith("batch="))
-        require(nb == 4, s"q199 expected 4 ingested batches, got $nb")
+        val nb = requireGenerations(r, "state/pairs", 4)
         SelfCheck.note(s"near-dup pairs accumulated across $nb micro-batches, " +
           "then every state relation compacted into one base generation; " +
           "subset/recall verdicts vs the exact pair artifact ride the row")
@@ -363,22 +400,14 @@ private[graft] object StreamingQueries {
       // benched per-rep through pairs here and through the
       // q195/q212/q225 sinks; re-folding them per rep billed ~2 s of
       // pure redundancy to the board's top row)
-      val foldedPairs = graft.streaming.StreamOps.compactIndex(
-        s, s"$scratch/state/pairs", s"$scratch/ckpt")
-      require(foldedPairs.contains(-1L),
-        s"q199 pairs compaction did not fold: $foldedPairs")
+      fold(s, r, "state/pairs")
       SelfCheck.once(s"q199/statefold/$dir") {
-        Seq("shingles", "bands").foreach { rel =>
-          val folded = graft.streaming.StreamOps.compactIndex(
-            s, s"$scratch/state/$rel", s"$scratch/ckpt")
-          require(folded.contains(-1L),
-            s"q199 $rel compaction did not fold: $folded")
-        }
+        Seq("shingles", "bands").foreach(rel => fold(s, r, s"state/$rel"))
         SelfCheck.note("archive shingle/band generations folded to one " +
           "base generation each; the pair fold runs per-rep on the " +
           "read path")
       }
-      val acc = s.read.parquet(s"$scratch/state/pairs")
+      val acc = s.read.parquet(s"${r.dir}/state/pairs")
       val pairs = acc.select(
           least(col("id_a"), col("id_b")).as("id_a"),
           greatest(col("id_a"), col("id_b")).as("id_b")).distinct()
@@ -424,20 +453,10 @@ private[graft] object StreamingQueries {
     // the full corpus's posting relation, so the ranked answer
     // carries q137's full-corpus BM25 oracle.
     Query("q195_stream_index", (s, dir) => {
-      val src = ensureDocBacklog(s, dir)
-      val schema = s.read.parquet(src).schema
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q195").toString
-      val docsStream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      val query = graft.streaming.StreamOps.postingsSink(docsStream,
-        s"$scratch/idx", "doc_id", "text", s"$scratch/ckpt",
-        Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      query.awaitTermination()
+      val r = replay(s, "q195", ensureDocBacklog(s, dir))((docs, r, now) =>
+        StreamOps.postingsSink(docs, s"${r.dir}/idx", "doc_id", "text", r.ckpt, now))
       SelfCheck.every(s"q195/$dir") {
-        val nb = s.read.parquet(s"$scratch/idx")
-          .select("batch").distinct().count()
-        require(nb == 4, s"q195 expected 4 ingested batches, got $nb")
+        val nb = requireGenerations(r, "idx", 4)
         SelfCheck.note(s"index accumulated across $nb micro-batch dirs, " +
           "then compacted into one base generation; ranked answer " +
           "oracle-matched against the full corpus")
@@ -445,11 +464,9 @@ private[graft] object StreamingQueries {
       // table maintenance: fold the 4 committed trigger dirs into ONE
       // base generation (the small-file fix at production cadence) —
       // the oracle-matched read below goes THROUGH the compacted index
-      val folded = graft.streaming.StreamOps.compactIndex(
-        s, s"$scratch/idx", s"$scratch/ckpt")
-      require(folded.contains(-1L), s"q195 compaction did not fold: $folded")
+      fold(s, r, "idx")
       InvertedIndex.bm25TopKIndexed(
-        s.read.parquet(s"$scratch/idx").drop("batch"), "doc_id",
+        s.read.parquet(s"${r.dir}/idx").drop("batch"), "doc_id",
         Seq("dup", "spark", "window"), k = 10)
     }, oracle =
       """WITH tok AS (
@@ -483,32 +500,21 @@ private[graft] object StreamingQueries {
     // BIT-IDENTICAL to the batch-built index, so serving through
     // sq8TopKIndexed carries q197's bit-exact oracle verbatim.
     Query("q212_stream_sq8_ingest", (s, dir) => {
-      val src = ensureEmbBacklog(s, dir)
-      val schema = s.read.parquet(src).schema
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q212").toString
-      val idx = s"$scratch/idx"
-      Similarity.initSq8Scales(t(s, dir).embeddings, "embedding", idx)
-      val embStream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      val query = graft.streaming.StreamOps.sq8CodesSink(embStream, idx,
-        "vec_id", "embedding", s"$scratch/ckpt",
-        Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      query.awaitTermination()
+      val r = replay(s, "q212", ensureEmbBacklog(s, dir)) { (embs, r, now) =>
+        Similarity.initSq8Scales(t(s, dir).embeddings, "embedding", s"${r.dir}/idx")
+        StreamOps.sq8CodesSink(embs, s"${r.dir}/idx", "vec_id", "embedding",
+          r.ckpt, now)
+      }
       SelfCheck.every(s"q212/$dir") {
-        val nb = s.read.parquet(s"$idx/codes")
-          .select("batch").distinct().count()
-        require(nb == 4, s"q212 expected 4 ingested batches, got $nb")
+        val nb = requireGenerations(r, "idx/codes", 4)
         SelfCheck.note(s"code table accumulated across $nb micro-batch " +
           "dirs, then compacted into one base generation; served top-k " +
           "carries q197's bit-exact oracle")
       }
       // table maintenance: fold the 4 committed trigger dirs into one
       // base generation; the bit-exact serve below reads THROUGH it
-      val folded = graft.streaming.StreamOps.compactIndex(
-        s, s"$idx/codes", s"$scratch/ckpt")
-      require(folded.contains(-1L), s"q212 compaction did not fold: $folded")
-      Similarity.sq8TopKIndexed(s, idx, "vec_id", queryId = 0L, k = 10)
+      fold(s, r, "idx/codes")
+      Similarity.sq8TopKIndexed(s, s"${r.dir}/idx", "vec_id", queryId = 0L, k = 10)
     }, oracle =
       // the streamed code table is bit-identical to the batch build
       // under the same frozen scales → the same oracle verbatim
@@ -527,36 +533,28 @@ private[graft] object StreamingQueries {
     // payload (redaction fingerprints + code sums) carries a FULL
     // oracle; the gate-equivalence booleans ride the row pinned TRUE.
     Query("q216_stream_curation", (s, dir) => {
-      val src = ensureDocBacklog(s, dir)
-      val schema = s.read.parquet(src).schema
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q216").toString
       val emb = t(s, dir).embeddings
         .select(col("vec_id").as("doc_id"), col("embedding"))
-      Similarity.initSq8Scales(emb, "embedding", s"$scratch/state/sq8")
       // two files per trigger: the multi-batch accumulation (batch 2's
       // gates referencing batch 1's state) is exercised with HALF the
       // per-trigger fixed cost — q199 keeps the 4-trigger form, and
       // StreamOpsSpec carries the per-batch replay rigor; this row's
       // job is the end-to-end pipeline under a full oracle (the r14
       // bench flagged its cost class, not its plan)
-      val docsStream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2).parquet(src)
-      val query = graft.streaming.StreamOps.curationSink(docsStream, emb,
-        s"$scratch/state", "doc_id", "text", "embedding",
-        DictPatterns, token = "[X]", s"$scratch/ckpt",
-        Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-        threshold = 0.6, shingleN = JaccardShingleN)
-      query.awaitTermination()
+      val r = replay(s, "q216", ensureDocBacklog(s, dir), perTrigger = 2) {
+          (docs, r, now) =>
+        Similarity.initSq8Scales(emb, "embedding", s"${r.dir}/state/sq8")
+        StreamOps.curationSink(docs, emb, s"${r.dir}/state", "doc_id", "text",
+          "embedding", DictPatterns, token = "[X]", r.ckpt, now,
+          threshold = 0.6, shingleN = JaccardShingleN)
+      }
       SelfCheck.every(s"q216/$dir") {
-        val nb = new java.io.File(s"$scratch/state/curated").listFiles()
-          .count(f => f.isDirectory && f.getName.startsWith("batch="))
-        require(nb == 2, s"q216 expected 2 ingested batches, got $nb")
+        val nb = requireGenerations(r, "state/curated", 2)
         SelfCheck.note(s"curation pipeline ran $nb micro-batches; " +
           "survivor payload carries the q189-device full oracle")
       }
-      val cur = s.read.parquet(s"$scratch/state/curated").drop("batch")
-      val codes = s.read.parquet(s"$scratch/state/sq8/codes").drop("batch")
+      val cur = s.read.parquet(s"${r.dir}/state/curated").drop("batch")
+      val codes = s.read.parquet(s"${r.dir}/state/sq8/codes").drop("batch")
         .select(col("doc_id"), col("code_sum"))
       val rows = cur.join(codes, Seq("doc_id"), "left")
       // gate-equivalence verdict vs the exact batch device — read off
@@ -699,30 +697,19 @@ private[graft] object StreamingQueries {
     // table — binarization is pure-function-of-(vector, thresholds),
     // so the serve carries q217's bit-exact oracle VERBATIM.
     Query("q225_stream_binary_ingest", (s, dir) => {
-      val src = ensureEmbBacklog(s, dir)
-      val schema = s.read.parquet(src).schema
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q225").toString
-      val idx = s"$scratch/idx"
       val emb = t(s, dir).embeddings
-      Similarity.initBinThresholds(emb, "embedding", idx)
-      val embStream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      val query = graft.streaming.StreamOps.binCodesSink(embStream, idx,
-        "vec_id", "embedding", s"$scratch/ckpt",
-        Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      query.awaitTermination()
+      val r = replay(s, "q225", ensureEmbBacklog(s, dir)) { (embs, r, now) =>
+        Similarity.initBinThresholds(emb, "embedding", s"${r.dir}/idx")
+        StreamOps.binCodesSink(embs, s"${r.dir}/idx", "vec_id", "embedding",
+          r.ckpt, now)
+      }
       SelfCheck.every(s"q225/$dir") {
-        val nb = s.read.parquet(s"$idx/codes")
-          .select("batch").distinct().count()
-        require(nb == 4, s"q225 expected 4 ingested batches, got $nb")
+        val nb = requireGenerations(r, "idx/codes", 4)
         SelfCheck.note(s"binary code table accumulated across $nb " +
           "micro-batch dirs, compacted, then served q217's oracle")
       }
-      val folded = graft.streaming.StreamOps.compactIndex(
-        s, s"$idx/codes", s"$scratch/ckpt")
-      require(folded.contains(-1L), s"q225 compaction did not fold: $folded")
-      Similarity.binaryTopKIndexed(s, idx, emb, "vec_id", "embedding",
+      fold(s, r, "idx/codes")
+      Similarity.binaryTopKIndexed(s, s"${r.dir}/idx", emb, "vec_id", "embedding",
         queryId = 0L, k = 10, rerank = 50)
     }, oracle =
       // streamed binary ingest: binarization is pure-function-of-
@@ -742,21 +729,11 @@ private[graft] object StreamingQueries {
     // replays the backlog's id-range bucketing, the CDC device, and
     // the ordered keep-first in one window.
     Query("q246_stream_cdc_dedup", (s, dir) => {
-      val src = ensureDocBacklog(s, dir)
-      val schema = s.read.parquet(src).schema
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q246").toString
-      val docsStream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      val query = graft.streaming.StreamOps.cdcSegmentsSink(docsStream,
-        s"$scratch/state", "doc_id", "text", s"$scratch/ckpt",
-        Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-        boundary256 = 32)
-      query.awaitTermination()
+      val r = replay(s, "q246", ensureDocBacklog(s, dir))((docs, r, now) =>
+        StreamOps.cdcSegmentsSink(docs, s"${r.dir}/state", "doc_id", "text",
+          r.ckpt, now, boundary256 = 32))
       SelfCheck.every(s"q246/$dir") {
-        val nb = new java.io.File(s"$scratch/state/clean").listFiles()
-          .count(f => f.isDirectory && f.getName.startsWith("batch="))
-        require(nb == 4, s"q246 expected 4 ingested batches, got $nb")
+        requireGenerations(r, "state/clean", 4)
         SelfCheck.note("cleaned rows accumulated across 4 triggers, " +
           "folded to one base generation; streamed composition ≡ the " +
           "oracle's global (batch, doc, position) keep-first")
@@ -764,17 +741,9 @@ private[graft] object StreamingQueries {
       // table maintenance: the clean relation (the read path) folds
       // per run; the fingerprint archive folds once per session (the
       // q199 billing discipline)
-      val folded = graft.streaming.StreamOps.compactIndex(
-        s, s"$scratch/state/clean", s"$scratch/ckpt")
-      require(folded.contains(-1L),
-        s"q246 clean compaction did not fold: $folded")
-      SelfCheck.once(s"q246/statefold/$dir") {
-        val f2 = graft.streaming.StreamOps.compactIndex(
-          s, s"$scratch/state/chunks", s"$scratch/ckpt")
-        require(f2.contains(-1L),
-          s"q246 chunks compaction did not fold: $f2")
-      }
-      s.read.parquet(s"$scratch/state/clean").drop("batch")
+      fold(s, r, "state/clean")
+      SelfCheck.once(s"q246/statefold/$dir")(fold(s, r, "state/chunks"))
+      s.read.parquet(s"${r.dir}/state/clean").drop("batch")
         .select(col("doc_id"), col("n_kept"), col("n_dropped"),
           md5(col("clean_text")).as("clean_fp"))
         .orderBy("doc_id")
@@ -841,20 +810,14 @@ private[graft] object StreamingQueries {
     // (the oracle replays the tercile bucketing and the clone count).
     Query("q248_stream_semantic_dedup", (s, dir) => {
       val src = ensureSemBacklog(s, dir)
-      val schema = s.read.parquet(src).schema
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q248").toString
-      val state = s"$scratch/state"
       val corpus = s.read.parquet(src)
-      Similarity.initSemanticCentroids(corpus, "vec_id", "embedding",
-        nlist = 16, state)
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      val query = graft.streaming.StreamOps.semanticDedupSink(stream,
-        state, "vec_id", "embedding", s"$scratch/ckpt",
-        Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-        tau = 0.35)
-      query.awaitTermination()
+      val r = replay(s, "q248", src) { (vecs, r, now) =>
+        Similarity.initSemanticCentroids(corpus, "vec_id", "embedding",
+          nlist = 16, s"${r.dir}/state")
+        StreamOps.semanticDedupSink(vecs, s"${r.dir}/state", "vec_id",
+          "embedding", r.ckpt, now, tau = 0.35)
+      }
+      val state = s"${r.dir}/state"
       val kept = s.read.parquet(s"$state/kept").select(col("vec_id"))
       val cents = Similarity.readCentroids(s, state)
       val want = Similarity.semanticDedupFrozen(corpus, "vec_id",
@@ -872,9 +835,7 @@ private[graft] object StreamingQueries {
       val cloneKept = kept.filter(col("vec_id") >= 1000000L).count()
       val nClones = corpus.filter(col("vec_id") >= 1000000L).count()
       SelfCheck.every(s"q248/$dir") {
-        val nb = s.read.parquet(s"$state/vecs")
-          .select("batch").distinct().count()
-        require(nb == 4, s"q248 expected 4 ingested batches, got $nb")
+        requireGenerations(r, "state/vecs", 4)
         require(composition, "q248 streamed survivors != batch device")
         SelfCheck.note(s"4 micro-batches; survivors equal the frozen " +
           s"batch device exactly; $nClones cross-batch clones all caught")

@@ -4,7 +4,9 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 import graft.operators.Publish
 
@@ -14,6 +16,19 @@ import graft.operators.Publish
   * Every transform here also runs on a batch DataFrame (Spark's
   * unified model), which is how the specs exercise them
   * deterministically alongside MemoryStream runs.
+  *
+  * The stream-state sinks share their steps, each written once:
+  *  - [[sink]] starts a checkpointed `foreachBatch` query; each
+  *    micro-batch runs one trigger body under [[withTriggerWidth]];
+  *  - a frozen sidecar (SQ8 scales, binary thresholds, centroids) is
+  *    read once, when the sink starts, and handed to every trigger
+  *    ([[sq8CodesSink]], [[frozenCentroids]]);
+  *  - a trigger's archive is [[Publish.priorGenerations]] (every
+  *    `batch=<gen>` but its own);
+  *  - a trigger with several state relations ends in
+  *    [[writeGenerations]]: shared relations built one at a time, the
+  *    `batch=<bid>` writes fanned out under one [[Publish.dirs]];
+  *  - [[compactIndex]] folds committed generations into one base.
   */
 object StreamOps {
 
@@ -61,36 +76,52 @@ object StreamOps {
     try body finally spark.conf.set(key, prev)
   }
 
-  /** Run independent per-trigger effect jobs concurrently (guide
-    * §2.6: Spark schedules concurrent jobs FIFO, so the later jobs
-    * back-fill the earlier ones' task tails). Callers pass only jobs
-    * with DISJOINT output paths and no read-after-write between them;
-    * shared cached inputs are safe (BlockManager computes each cached
-    * block once under a per-block lock) unless NESTED (below). EVERY
-    * job is awaited to completion before the first failure rethrows:
-    * propagating out of a foreachBatch body while a sibling write is
-    * still running would let Structured Streaming replay the batch
-    * against a zombie writer on the same `batch=<bid>` path (a shared
-    * `_temporary` dir under the parquet committer) — awaiting all
-    * first restores the serial form's no-concurrent-writer-on-retry
-    * property.
+  /** The generation step every stream-state trigger ends with: each
+    * `gens` row set (target → rows, a `batch=<bid>` directory each) is
+    * staged and swapped under ONE [[Publish.dirs]] call, so a fired
+    * guard or failed write publishes none of them.
     *
-    * Jobs passed together must not build NESTED caches concurrently:
-    * when the inner cache's build fails, Spark's CachedRDDBuilder
-    * re-caches its dependents while holding its own lock, and the
-    * concurrent builder of the dependent cache holds that lock while
-    * waiting on the inner one — the trigger hangs instead of failing.
-    * Callers run a job that builds the inner cache (its own write)
-    * before the jobs that read the outer one.
+    * `shared` are the relations several writes read, persisted by the
+    * caller, in dependency order. Each is BUILT ALONE before any write
+    * that reads it starts: by its own generation write when it is one
+    * of the rows (coalesced to the generation width — the cached
+    * partitions fold, nothing recomputes), else by a count. Two
+    * concurrent jobs over an unbuilt cache do not compute it twice —
+    * the later task waits on the block's write lock, then reads the
+    * block — but that holds a task slot idle and logs `Block … already
+    * exists`; and a nested cache built concurrently with its inner one
+    * can hang the trigger when the inner build fails (Spark's
+    * CachedRDDBuilder re-caches dependents under its own lock).
+    *
+    * The other writes then run concurrently, each repartitioned to the
+    * generation width (a coalesce would pull their compute into that
+    * few tasks): Spark schedules concurrent jobs FIFO, so the later
+    * ones back-fill the earlier ones' task tails (guide §2.6). EVERY
+    * write is awaited before the first failure rethrows: propagating
+    * out of a foreachBatch body while a sibling write still runs would
+    * let Structured Streaming replay the batch against a zombie writer
+    * on the same staging path. Last, the shared relations are
+    * released.
     */
-  private def inParallel(jobs: (() => Unit)*): Unit = {
+  private def writeGenerations(batch: DataFrame, shared: Seq[DataFrame],
+                               gens: (String, DataFrame)*): Unit = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
-    val fs = jobs.map(j => Future(j()))
-    val results = fs.map(f => scala.util.Try(
-      Await.result(f, scala.concurrent.duration.Duration.Inf)))
-    results.collectFirst { case scala.util.Failure(e) => throw e }
-    ()
+    val width = Publish.generationWidth(batch)
+    try Publish.dirs(batch.sparkSession, gens.map(_._1)) { staged =>
+      val (own, rest) = gens.map(_._2).zip(staged)
+        .partition { case (rows, _) => shared.exists(_ eq rows) }
+      shared.foreach { rel =>
+        own.find(_._1 eq rel) match {
+          case Some((_, at)) => rel.coalesce(width).write.parquet(at)
+          case None => rel.count()
+        }
+      }
+      rest.map { case (rows, at) => Future(rows.repartition(width).write.parquet(at)) }
+        .map(f => scala.util.Try(Await.result(f, scala.concurrent.duration.Duration.Inf)))
+        .collectFirst { case scala.util.Failure(e) => throw e }
+      ()
+    } finally shared.foreach(_.unpersist())
   }
 
   /** Run a foreachBatch trigger body with the RELATIONAL shuffle width
@@ -339,10 +370,10 @@ object StreamOps {
     * Spark's default micro-batch trigger.
     */
   private def sink(frame: DataFrame, checkpointDir: String,
-                   trigger: Option[org.apache.spark.sql.streaming.Trigger],
+                   trigger: Option[Trigger],
                    mode: OutputMode)
                   (perBatch: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val w = frame.writeStream.outputMode(mode)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch(perBatch)
@@ -367,8 +398,8 @@ object StreamOps {
     */
   def postingsSink(docs: DataFrame, indexDir: String, idName: String,
                    textName: String, checkpointDir: String,
-                   trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+                   trigger: Option[Trigger] = None)
+      : StreamingQuery = {
     sink(docs, checkpointDir, trigger, OutputMode.Append()) { (batch, bid) =>
       postingsBatch(batch, bid, indexDir, idName, textName)
     }
@@ -398,40 +429,36 @@ object StreamOps {
     * scales), the accumulated code table is BIT-IDENTICAL to a batch build
     * over everything ingested under the same scales (spec-pinned;
     * q212 serves it through `sq8TopKIndexed` against q197's oracle).
+    *
+    * The scales sidecar is FROZEN before the stream starts (the
+    * planning-pass contract), so the sink reads it once, here, and
+    * hands it to every trigger — a stream restart re-reads, a
+    * mid-stream rewrite is forbidden by the contract either way. The
+    * other frozen-sidecar sinks resolve theirs the same way.
     */
   def sq8CodesSink(embeddings: DataFrame, indexPath: String, idName: String,
                    vecName: String, checkpointDir: String,
-                   trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // the scales sidecar is FROZEN before the stream starts (the
-    // planning-pass contract), so read it ONCE at sink construction
-    // instead of once per trigger — a stream restart re-reads, a
-    // mid-stream rewrite is forbidden by the contract either way
+                   trigger: Option[Trigger] = None): StreamingQuery = {
     val scales = graft.operators.Similarity
       .readSq8Scales(embeddings.sparkSession, indexPath)
     sink(embeddings, checkpointDir, trigger, OutputMode.Append()) { (batch, bid) =>
-      sq8IngestBatch(batch, bid, indexPath, idName, vecName, Some(scales))
+      sq8IngestBatch(batch, bid, indexPath, idName, vecName, scales)
     }
   }
 
-  /** One trigger of [[sq8CodesSink]], idempotent under replay: reads
-    * only the frozen sidecar (pre-read by the sink and passed in;
-    * direct callers leave `scales0` None and pay the read), writes
-    * only this batch's own directory. The encoder's guards ride the
-    * write itself as in-row raises — they fire before anything
-    * commits, as a loud `IllegalArgumentException`.
+  /** One trigger of [[sq8CodesSink]] under the frozen `scales`,
+    * idempotent under replay: writes only this batch's own directory.
+    * The encoder's guards ride the write itself as in-row raises —
+    * they fire before anything commits, as a loud
+    * `IllegalArgumentException`.
     */
   private[graft] def sq8IngestBatch(batch: DataFrame, bid: Long,
                                     indexPath: String, idName: String,
-                                    vecName: String,
-                                    scales0: Option[Array[Double]] = None): Unit =
-      withTriggerWidth(batch) {
-    val spark = batch.sparkSession
-    val scales = scales0.getOrElse(
-      graft.operators.Similarity.readSq8Scales(spark, indexPath))
-    Publish.parquet(graft.operators.Similarity.sq8Codes(batch, idName, vecName,
-      scales, s"sq8CodesSink batch $bid"), s"$indexPath/codes/batch=$bid")
-  }
+                                    vecName: String, scales: Array[Double]): Unit =
+    withTriggerWidth(batch) {
+      Publish.parquet(graft.operators.Similarity.sq8Codes(batch, idName, vecName,
+        scales, s"sq8CodesSink batch $bid"), s"$indexPath/codes/batch=$bid")
+    }
 
   /** Streaming BINARY-code ingest — the 1-bit tier's member of the
     * continuous-ingest family (the [[sq8CodesSink]] discipline one
@@ -446,35 +473,28 @@ object StreamOps {
     */
   def binCodesSink(embeddings: DataFrame, indexPath: String, idName: String,
                    vecName: String, checkpointDir: String,
-                   trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // frozen-sidecar read hoisted to sink construction (the
-    // sq8CodesSink rationale) — one read per stream, not per trigger
+                   trigger: Option[Trigger] = None): StreamingQuery = {
     val thr = graft.operators.Similarity
       .readBinThresholds(embeddings.sparkSession, indexPath)
     sink(embeddings, checkpointDir, trigger, OutputMode.Append()) { (batch, bid) =>
-      binIngestBatch(batch, bid, indexPath, idName, vecName, Some(thr))
+      binIngestBatch(batch, bid, indexPath, idName, vecName, thr)
     }
   }
 
-  /** One trigger of [[binCodesSink]], idempotent under replay. No
-    * clip hazard at 1 bit — the binary tier's guarded encoder (the one
-    * `appendBinaryIndex` uses) rejects a NULL vector and one from a
-    * different embedding space, riding the write itself as in-row
-    * raises; they fire before anything commits, as a loud
-    * `IllegalArgumentException`.
+  /** One trigger of [[binCodesSink]] under the frozen thresholds `thr`,
+    * idempotent under replay. No clip hazard at 1 bit — the binary
+    * tier's guarded encoder (the one `appendBinaryIndex` uses) rejects
+    * a NULL vector and one from a different embedding space, riding
+    * the write itself as in-row raises; they fire before anything
+    * commits, as a loud `IllegalArgumentException`.
     */
   private[graft] def binIngestBatch(batch: DataFrame, bid: Long,
                                     indexPath: String, idName: String,
-                                    vecName: String,
-                                    thr0: Option[Array[Double]] = None): Unit =
-      withTriggerWidth(batch) {
-    val spark = batch.sparkSession
-    val thr = thr0.getOrElse(
-      graft.operators.Similarity.readBinThresholds(spark, indexPath))
-    Publish.parquet(graft.operators.Similarity.binCodes(batch, idName, vecName,
-      thr, s"binCodesSink batch $bid"), s"$indexPath/codes/batch=$bid")
-  }
+                                    vecName: String, thr: Array[Double]): Unit =
+    withTriggerWidth(batch) {
+      Publish.parquet(graft.operators.Similarity.binCodes(batch, idName, vecName,
+        thr, s"binCodesSink batch $bid"), s"$indexPath/codes/batch=$bid")
+    }
 
   /** Streaming near-dup maintenance — the continuous-ingest fold of
     * [[graft.operators.Dedup.minhashNearDupsIncremental]]: each
@@ -501,10 +521,10 @@ object StreamOps {
     */
   def neardupSink(docs: DataFrame, stateDir: String, idName: String,
                   textName: String, checkpointDir: String,
-                  trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
+                  trigger: Option[Trigger] = None,
                   threshold: Double = 0.6, k: Int = 32, bands: Int = 8,
                   shingleN: Int = 3)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     sink(docs, checkpointDir, trigger, OutputMode.Append()) { (batch, bid) =>
       neardupBatch(batch, bid, stateDir, idName, textName,
         threshold, k, bands, shingleN)
@@ -528,9 +548,9 @@ object StreamOps {
     */
   def cdcSegmentsSink(docs: DataFrame, stateDir: String, idName: String,
                       textName: String, checkpointDir: String,
-                      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
+                      trigger: Option[Trigger] = None,
                       boundary256: Int = 32)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     sink(docs, checkpointDir, trigger, OutputMode.Append()) { (batch, bid) =>
       cdcSegmentsBatch(batch, bid, stateDir, idName, textName, boundary256)
     }
@@ -558,23 +578,15 @@ object StreamOps {
       spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](),
         org.apache.spark.sql.types.StructType.fromDDL("chunk_md5 STRING")))
-    // chunk ONCE and share across both effect jobs (the neardupBatch
-    // shB discipline — the CDC chunker is the trigger's dominant cost)
+    // chunk ONCE and share across both effect jobs (the CDC chunker is
+    // the trigger's dominant cost)
     val segs = SegmentOps.cdcBatchSegments(
         batch, idName, col(textName), boundary256)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     val (out, freshMd5) = SegmentOps.dedupSegsVsArchive(
       batch, idName, col(textName), boundary256, arch, Some(segs))
-    val genParts = Publish.generationWidth(batch)
-    // disjoint outputs over the shared cached chunk relation —
-    // concurrent (inParallel)
-    Publish.dirs(spark, Seq(s"$stateDir/clean/batch=$bid", s"$fpDir/batch=$bid")) {
-      case Seq(clean, fp) => inParallel(
-        () => out.repartition(genParts).write.parquet(clean),
-        () => freshMd5.repartition(genParts).write.parquet(fp))
-    }
-    segs.unpersist()
-    ()
+    writeGenerations(batch, Seq(segs),
+      s"$stateDir/clean/batch=$bid" -> out, s"$fpDir/batch=$bid" -> freshMd5)
   }
 
   /** Streaming SemDeDup — the continuous-ingest member of the
@@ -595,91 +607,69 @@ object StreamOps {
     */
   def semanticDedupSink(vecs: DataFrame, stateDir: String, idName: String,
                         vecName: String, checkpointDir: String,
-                        trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
-                        tau: Double = 0.35)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // the centroid sidecar is FROZEN before the stream starts (the
-    // initSemanticCentroids planning contract) — read it once at sink
-    // construction, not once per trigger (the sq8CodesSink rationale);
-    // the absent-sidecar loud guard moves here with it
-    val spark = vecs.sparkSession
-    require(graft.operators.Artifact.hadoopDirExists(spark,
-        s"$stateDir/centroids"),
-      s"semanticDedupBatch: no centroid sidecar at $stateDir/centroids — " +
-        "run initSemanticCentroids over the planning corpus before the stream")
-    val cents = graft.operators.Similarity.readCentroids(spark, stateDir)
+                        trigger: Option[Trigger] = None,
+                        tau: Double = 0.35): StreamingQuery = {
+    val cents = frozenCentroids(vecs.sparkSession, stateDir)
     sink(vecs, checkpointDir, trigger, OutputMode.Append()) { (batch, bid) =>
-      semanticDedupBatch(batch, bid, stateDir, idName, vecName, tau,
-        Some(cents))
+      semanticDedupBatch(batch, bid, stateDir, idName, vecName, tau, cents)
     }
   }
 
-  /** One trigger of [[semanticDedupSink]], idempotent under replay
-    * (the [[neardupBatch]] contract): the archive read EXCLUDES
-    * generation `bid`, falls back to an empty relation before the
-    * first generation exists, and both effects overwrite this batch's
-    * own directories — re-running any prefix reproduces byte-identical
-    * state. A batch that re-delivers an ALREADY-ARCHIVED id under a
-    * new generation is rejected loudly (the appendPostings
-    * discipline): it would double-archive the vector and silently
-    * drop its re-delivery as a self-duplicate.
+  /** The centroid sidecar [[semanticDedupSink]] resolves once (the
+    * [[sq8CodesSink]] rationale) — loud when the planning pass
+    * ([[graft.operators.Similarity.initSemanticCentroids]]) never ran.
+    */
+  private[graft] def frozenCentroids(spark: SparkSession,
+                                     stateDir: String): Seq[Array[Float]] = {
+    require(graft.operators.Artifact.hadoopDirExists(spark, s"$stateDir/centroids"),
+      s"semanticDedupBatch: no centroid sidecar at $stateDir/centroids — " +
+        "run initSemanticCentroids over the planning corpus before the stream")
+    graft.operators.Similarity.readCentroids(spark, stateDir)
+  }
+
+  /** One trigger of [[semanticDedupSink]] under the frozen centroids
+    * `cents`, idempotent under replay (the [[neardupBatch]] contract):
+    * the archive read EXCLUDES generation `bid`, falls back to an empty
+    * relation before the first generation exists, and both effects
+    * overwrite this batch's own directories — re-running any prefix
+    * reproduces byte-identical state. A batch that re-delivers an
+    * ALREADY-ARCHIVED id under a new generation is rejected loudly (the
+    * appendPostings discipline): it would double-archive the vector
+    * and silently drop its re-delivery as a self-duplicate.
     */
   private[graft] def semanticDedupBatch(batch: DataFrame, bid: Long,
                                         stateDir: String, idName: String,
                                         vecName: String, tau: Double,
-                                        cents0: Option[Seq[Array[Float]]] = None)
-      : Unit =
+                                        cents: Seq[Array[Float]]): Unit =
       withTriggerWidth(batch) {
-    import graft.operators.{Artifact, Similarity}
+    import graft.operators.Similarity
     val spark = batch.sparkSession
-    val cents = cents0.getOrElse {
-      require(Artifact.hadoopDirExists(spark, s"$stateDir/centroids"),
-        s"semanticDedupBatch: no centroid sidecar at $stateDir/centroids — " +
-          "run initSemanticCentroids over the planning corpus before the stream")
-      Similarity.readCentroids(spark, stateDir)
-    }
     val vecsDir = s"$stateDir/vecs"
     val arch = Publish.priorGenerations(spark, vecsDir, bid, "semanticDedupBatch")(
       batch.select(col(idName).as("id"), col(vecName).as("v"))
         .withColumn("cid", lit(0))
         .select(col("id"), col("cid"), col("v")).limit(0))
-    // assign ONCE and share across both effect jobs (the
-    // cdcSegmentsBatch segs discipline — the nearest-centroid pass
-    // otherwise runs in the kept write AND the archive-rows write)
+    // assign ONCE and share across both effect jobs (the nearest-
+    // centroid pass otherwise runs in the kept write AND the
+    // archive-rows write)
     val rowsShared = Similarity.assignToCentroids(batch, idName, vecName,
         cents)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     val (kept, rows) = Similarity.semanticDedupVsArchive(
       batch, idName, vecName, tau, cents, arch, Some(rowsShared))
-    // id-clash guard folded into BOTH state writes: a zero-row-unless-
-    // violated guard subtree unions into each write — ids only through
-    // the semi join, so the payload never shuffles on its account —
-    // and any clash row raises DURING the staged writes, before either
+    // id-clash guard folded into BOTH state writes: ids only through
+    // the semi join, so the payload never shuffles on its account, and
+    // any clash row raises DURING the staged writes, before either
     // generation is published
     val clashIds = rowsShared.select(col("id"))
       .join(arch.select(col("id")), Seq("id"), "left_semi")
-    def withClashGuard(df: DataFrame): DataFrame = {
-      val guardCols = df.schema.fields.zipWithIndex.map { case (f, i) =>
-        if (i == 0)
-          Publish.raise(format_string(
-            s"semanticDedupBatch: batch $bid re-delivers already-ingested " +
-              "id %s — generations' id spaces must be disjoint (a retry " +
-              "reuses its OWN batch id)", col("id").cast("string")))
-            .cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }
-      df.unionByName(clashIds.select(guardCols.toSeq: _*))
-    }
-    val genParts = Publish.generationWidth(batch)
-    // disjoint outputs over the shared cached assignment relation —
-    // concurrent (inParallel)
-    Publish.dirs(spark, Seq(s"$vecsDir/batch=$bid", s"$stateDir/kept/batch=$bid")) {
-      case Seq(v, k) => inParallel(
-        () => withClashGuard(rows).repartition(genParts).write.parquet(v),
-        () => withClashGuard(kept).repartition(genParts).write.parquet(k))
-    }
-    rowsShared.unpersist()
-    ()
+    def withClashGuard(df: DataFrame): DataFrame = Publish.withGuardRows(df, clashIds,
+      format_string(s"semanticDedupBatch: batch $bid re-delivers already-ingested " +
+        "id %s — generations' id spaces must be disjoint (a retry " +
+        "reuses its OWN batch id)", col("id").cast("string")))
+    writeGenerations(batch, Seq(rowsShared),
+      s"$vecsDir/batch=$bid" -> withClashGuard(rows),
+      s"$stateDir/kept/batch=$bid" -> withClashGuard(kept))
   }
 
   /** One trigger of [[neardupSink]], idempotent under replay: the
@@ -702,48 +692,30 @@ object StreamOps {
     import graft.operators.Dedup
     val spark = batch.sparkSession
     val shB = Dedup.hashedShingleSets(batch, idName, textName, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     // the batch's banded signatures are BOTH this trigger's probe
     // side and the archive's next generation — compute the k-min
     // aggregation once and share (batchBands contract)
     val bdB = Dedup.minhashBands(
         Dedup.minhashSignaturesFromShingles(shB, k, shingleN), k, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     val shDir = s"$stateDir/shingles"
     val bdDir = s"$stateDir/bands"
     val archSh = Publish.priorGenerations(spark, shDir, bid, "neardupBatch")(shB.limit(0))
     val archBd = Publish.priorGenerations(spark, bdDir, bid, "neardupBatch")(bdB.limit(0))
-    // State generations write at the TRIGGER's input partitioning,
-    // not spark.sql.shuffle.partitions: the cached aggregates above
-    // hold shuffle-partition-count partitions (AQE cannot re-coalesce
-    // a cached plan), so an uncoalesced write lands (shuffle
-    // partitions × relations × triggers) near-empty files that every
-    // LATER trigger's archive read re-opens — measured ~25% of the
-    // whole replay at bench SF. A trigger's input partition count is
-    // the honest size signal at any scale (a 100 TB trigger has many
-    // input splits and keeps many output files); the long-running
-    // small-file story remains [[compactIndex]]'s.
-    val genParts = Publish.generationWidth(batch)
-    // pairs: repartition, not coalesce — a coalesce would pull the
-    // candidate-verify compute itself into genParts tasks (its probe
-    // side is the cached shingle relation, a narrow dependency); the
-    // exchange is pair-relation-sized, i.e. tiny
-    // the three effect writes have disjoint outputs and share only the
-    // cached shB/bdB relations; shB's own write builds the cache bdB
-    // reads, then the other two run concurrently ([[inParallel]])
-    Publish.dirs(spark, Seq(s"$stateDir/pairs/batch=$bid",
-        s"$shDir/batch=$bid", s"$bdDir/batch=$bid")) { case Seq(pairs, sh, bd) =>
-      shB.coalesce(genParts).write.parquet(sh)
-      inParallel(
-        () => Dedup.minhashNearDupsIncremental(batch, idName, textName,
-            archSh, archBd, threshold, k, bands, shingleN,
-            batchShingles = Some(shB), batchBands = Some(bdB))
-          .repartition(genParts).write.parquet(pairs),
-        () => bdB.coalesce(genParts).write.parquet(bd))
-    }
-    shB.unpersist(); bdB.unpersist()
-    ()
-  }  // withTriggerWidth
+    // State generations write at the TRIGGER's input partitioning
+    // ([[Publish.generationWidth]]), not spark.sql.shuffle.partitions:
+    // an uncoalesced write lands (shuffle partitions × relations ×
+    // triggers) near-empty files that every LATER trigger's archive
+    // read re-opens — measured ~25% of the whole replay at bench SF.
+    // shB's write builds the cache bdB reads, bdB's the one the pair
+    // verify probes ([[writeGenerations]])
+    writeGenerations(batch, Seq(shB, bdB),
+      s"$stateDir/pairs/batch=$bid" -> Dedup.minhashNearDupsIncremental(batch,
+        idName, textName, archSh, archBd, threshold, k, bands, shingleN,
+        batchShingles = Some(shB), batchBands = Some(bdB)),
+      s"$shDir/batch=$bid" -> shB, s"$bdDir/batch=$bid" -> bdB)
+  }
 
   /** The stream's committed frontier: the highest batch id whose
     * trigger fully committed (checkpoint `commits/<id>` present), or
@@ -821,38 +793,35 @@ object StreamOps {
                    idName: String, textName: String, vecName: String,
                    patterns: Seq[String], token: String,
                    checkpointDir: String,
-                   trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
+                   trigger: Option[Trigger] = None,
                    threshold: Double = 0.6, k: Int = 32, bands: Int = 8,
-                   shingleN: Int = 3)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // the SQ8 scales sidecar is FROZEN before the stream starts (the
-    // planning-pass contract) — read once at sink construction, not
-    // once per trigger (the sq8CodesSink rationale)
+                   shingleN: Int = 3): StreamingQuery = {
     val scales = graft.operators.Similarity
       .readSq8Scales(docs.sparkSession, s"$stateDir/sq8")
     sink(docs, checkpointDir, trigger, OutputMode.Append()) { (batch, bid) =>
       curateBatch(batch, bid, embeddings, stateDir, idName, textName,
-        vecName, patterns, token, threshold, k, bands, shingleN,
-        Some(scales))
+        vecName, patterns, token, threshold, k, bands, shingleN, scales)
     }
   }
 
-  /** One trigger of [[curationSink]], idempotent under replay. */
+  /** One trigger of [[curationSink]] under the frozen SQ8 `scales`,
+    * idempotent under replay.
+    */
   private[graft] def curateBatch(batch: DataFrame, bid: Long,
                                  embeddings: DataFrame, stateDir: String,
                                  idName: String, textName: String,
                                  vecName: String, patterns: Seq[String],
                                  token: String, threshold: Double,
                                  k: Int, bands: Int, shingleN: Int,
-                                 scales0: Option[Array[Double]] = None): Unit =
+                                 scales: Array[Double]): Unit =
       withTriggerWidth(batch) {
     import graft.operators.{Dedup, Similarity, Tagging}
     val spark = batch.sparkSession
     val shB = Dedup.hashedShingleSets(batch, idName, textName, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     val bdB = Dedup.minhashBands(
         Dedup.minhashSignaturesFromShingles(shB, k, shingleN), k, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     val fpB = batch.select(
       graft.functions.TextFns.fingerprint(col(textName)).as("fp")).distinct()
     def arch(dir: String, emptyRel: DataFrame): DataFrame =
@@ -872,41 +841,29 @@ object StreamOps {
     val survivors = batch
       .join(s1, Seq(idName), "left_semi")
       .join(ndDrop, Seq(idName), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // 3+4+archive appends: five effect writes with disjoint outputs
-    // over the shared cached relations (survivors, shB, bdB) — run them
-    // concurrently (inParallel) once the archive writes of shB and bdB
-    // built the caches survivors reads: redaction, SQ8 codes of the
-    // survivors' vectors under the frozen scales, and the archive
-    // appends of ALL batch documents' fingerprint and shingle state
-    // (gates reference dropped documents too)
-    val scales = scales0.getOrElse(
-      Similarity.readSq8Scales(spark, s"$stateDir/sq8"))
+      .persist(MEMORY_AND_DISK)
+    // 3+4 over the survivors — redaction, and SQ8 codes of their vectors
+    // under the frozen scales — plus the archive appends of ALL batch
+    // documents' fingerprint and shingle state (gates reference dropped
+    // documents too)
     val q = Similarity.sq8Quantize(col(vecName), scales)
-    Publish.dirs(spark, Seq("curated", "sq8/codes", "fp", "shingles", "bands")
-        .map(d => s"$stateDir/$d/batch=$bid")) {
-      case Seq(curated, codes, fp, sh, bd) =>
-        inParallel(() => shB.write.parquet(sh), () => fpB.write.parquet(fp))
-        bdB.write.parquet(bd)
-        inParallel(
-          () => Tagging.redactDocs(survivors, idName, col(textName), patterns,
-              token).write.parquet(curated),
-          () => Similarity.frozenVecs(survivors.select(col(idName))
-              .join(embeddings, Seq(idName)), vecName, scales.length,
-              s"curationSink batch $bid", Some(scales))
-            .select(col(idName),
-              graft.functions.VecFns.packInt8(q).as("codes"),
-              aggregate(q, lit(0L), (a, x) => a + x).as("code_sum"))
-            .write.parquet(codes))
-    }
-    survivors.unpersist(); shB.unpersist(); bdB.unpersist()
-    ()
+    val codes = Similarity.frozenVecs(survivors.select(col(idName))
+        .join(embeddings, Seq(idName)), vecName, scales.length,
+        s"curationSink batch $bid", Some(scales))
+      .select(col(idName), graft.functions.VecFns.packInt8(q).as("codes"),
+        aggregate(q, lit(0L), (a, x) => a + x).as("code_sum"))
+    def at(rel: String) = s"$stateDir/$rel/batch=$bid"
+    writeGenerations(batch, Seq(shB, bdB, survivors),
+      at("curated") -> Tagging.redactDocs(survivors, idName, col(textName),
+        patterns, token),
+      at("sq8/codes") -> codes, at("fp") -> fpB, at("shingles") -> shB,
+      at("bands") -> bdB)
   }
 
   /** The streaming query wiring for [[upsertBatch]]. */
   def upsertSink(updates: DataFrame, targetDir: String, key: String,
                  versionCol: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : StreamingQuery =
     sink(updates, checkpointDir, None, OutputMode.Update()) { (batch, _) =>
       upsertBatch(batch, targetDir, key, versionCol)
     }
@@ -1112,9 +1069,9 @@ object StreamOps {
     */
   def scd2Sink(updates: DataFrame, targetDir: String, key: String,
                versionCol: String, checkpointDir: String,
-               trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
+               trigger: Option[Trigger] = None,
                historyBuckets: Option[Int] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     sink(updates, checkpointDir, trigger, OutputMode.Update()) { (batch, _) =>
       scd2Batch(batch, targetDir, key, versionCol, historyBuckets)
     }

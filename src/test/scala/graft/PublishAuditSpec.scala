@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * from forking again. The dedup family's shared steps — the eager
   * `materialized`, the exact Jaccard verify, the segment keep-first
   * and the prior-generation archive filter — are pinned to one
-  * definition each the same way.
+  * definition each the same way, as are the streaming family's replay
+  * runner, replay scratch directory and centroid-sidecar resolve.
   */
 class PublishAuditSpec extends AnyFunSuite {
 
@@ -66,5 +67,14 @@ class PublishAuditSpec extends AnyFunSuite {
     once("""array_intersect(col("""", _ == "Dedup.scala")
     once("min(struct(col(", _ == "SegmentOps.scala")
     once("""col("batch") =!=""")
+    // the streaming family: one replay runner, one scratch directory
+    // per replay, one centroid-sidecar resolve, and StreamOps' guards
+    // only through the shared guard-row helper
+    once("awaitTermination()", _ == "StreamingQueries.scala")
+    once("createTempDirectory", _ == "StreamingQueries.scala")
+    once("centroid sidecar at")
+    val raised = offenders(java.util.regex.Pattern.quote("Publish.raise(").r,
+      _ != "StreamOps.scala")
+    assert(raised.isEmpty, raised.mkString("\n"))
   }
 }

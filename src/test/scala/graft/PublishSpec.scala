@@ -273,25 +273,27 @@ class PublishSpec extends SparkSpec {
     // SQ8 codes: a replay whose batch now clips trips the guard
     val sq8 = tmp("sq8sink") + "/idx"
     Similarity.initSq8Scales(emb, "embedding", sq8)
-    StreamOps.sq8IngestBatch(b0, 0L, sq8, "vec_id", "embedding")
+    val scales = Similarity.readSq8Scales(spark, sq8)
+    StreamOps.sq8IngestBatch(b0, 0L, sq8, "vec_id", "embedding", scales)
     faultKeepsPrior(sq8, Seq(s"$sq8/codes"), Some(
         "sq8CodesSink batch 0: a vector's \\|x_\\d+\\| = \\S+ exceeds the frozen scale \\S+ — codes would clip; rebuild the index over the union instead".r))(
       StreamOps.sq8IngestBatch(b0.withColumn("embedding",
-        transform(col("embedding"), x => x * 1000.0f)), 0L, sq8, "vec_id", "embedding"))
+        transform(col("embedding"), x => x * 1000.0f)), 0L, sq8, "vec_id", "embedding", scales))
     faultKeepsPrior(sq8, Seq(s"$sq8/codes"), None)(StreamOps.sq8IngestBatch(
-      poisoned(b0, "embedding"), 0L, sq8, "vec_id", "embedding"))
+      poisoned(b0, "embedding"), 0L, sq8, "vec_id", "embedding", scales))
     faultKeepsPrior(sq8, Seq(s"$sq8/codes"), widthGuard("sq8CodesSink batch 0", 8, 64))(
-      StreamOps.sq8IngestBatch(narrow(b0), 0L, sq8, "vec_id", "embedding"))
+      StreamOps.sq8IngestBatch(narrow(b0), 0L, sq8, "vec_id", "embedding", scales))
     // binary codes: a replay from another embedding space
     val bin = tmp("binsink") + "/idx"
     Similarity.initBinThresholds(emb, "embedding", bin)
-    StreamOps.binIngestBatch(b0, 0L, bin, "vec_id", "embedding")
+    val thr = Similarity.readBinThresholds(spark, bin)
+    StreamOps.binIngestBatch(b0, 0L, bin, "vec_id", "embedding", thr)
     faultKeepsPrior(bin, Seq(s"$bin/codes"), exactly("binCodesSink batch 0: a vector " +
         "has dimension 8 but the index codes 64 — not the same embedding space"))(
       StreamOps.binIngestBatch(b0.withColumn("embedding", slice(col("embedding"), 1, 8)),
-        0L, bin, "vec_id", "embedding"))
+        0L, bin, "vec_id", "embedding", thr))
     faultKeepsPrior(bin, Seq(s"$bin/codes"), None)(StreamOps.binIngestBatch(
-      poisoned(b0, "embedding"), 0L, bin, "vec_id", "embedding"))
+      poisoned(b0, "embedding"), 0L, bin, "vec_id", "embedding", thr))
     // near-dup state, postings and curation carry no guard: task failures
     val d0 = docs.filter(col("doc_id") % 2 === 0)
     val nd = tmp("ndsink")
@@ -306,8 +308,9 @@ class PublishSpec extends SparkSpec {
     val vecs = docs.select(col("doc_id"), array((0 until 8).map(d =>
       (sin(col("doc_id") * (d + 1)) * 0.5f).cast("float")): _*).as("vec"))
     Similarity.initSq8Scales(vecs, "vec", s"$cur/sq8")
+    val curScales = Similarity.readSq8Scales(spark, s"$cur/sq8")
     def curate(b: DataFrame, v: DataFrame = vecs) = StreamOps.curateBatch(b, 0L, v,
-      cur, "doc_id", "text", "vec", Seq("data"), "[X]", 0.6, 32, 8, 3)
+      cur, "doc_id", "text", "vec", Seq("data"), "[X]", 0.6, 32, 8, 3, curScales)
     curate(d0)
     val curRels = Seq("curated", "sq8/codes", "fp", "shingles", "bands").map(d => s"$cur/$d")
     faultKeepsPrior(cur, curRels, None)(curate(poisoned(d0, "text")))

@@ -298,7 +298,7 @@ class StreamOpsSpec extends SparkSpec {
     val before = snap()
     StreamOps.curateBatch(parts(2).toDF("doc_id", "text"), bid = 2L,
       emb, s"$dir/state", "doc_id", "text", "vec",
-      Seq("data", "owly"), "[X]", 0.6, 32, 8, 3)
+      Seq("data", "owly"), "[X]", 0.6, 32, 8, 3, scales)
     assert(snap() == before, "replaying a committed batch changed the state")
   }
 
@@ -697,10 +697,11 @@ class StreamOpsSpec extends SparkSpec {
     // through the per-trigger fold directly (the sink is a thin
     // foreachBatch wrapper around it)
     Similarity.initSq8Scales(emb, "embedding", idx)
+    val scales = Similarity.readSq8Scales(spark, idx)
     val b1 = emb.filter(col("vec_id") % 2 === 0)
     val b2 = emb.filter(col("vec_id") % 2 === 1)
-    StreamOps.sq8IngestBatch(b1, 0L, idx, "vec_id", "embedding")
-    StreamOps.sq8IngestBatch(b2, 1L, idx, "vec_id", "embedding")
+    StreamOps.sq8IngestBatch(b1, 0L, idx, "vec_id", "embedding", scales)
+    StreamOps.sq8IngestBatch(b2, 1L, idx, "vec_id", "embedding", scales)
     def table(): Map[Long, Seq[Byte]] =
       spark.read.parquet(s"$idx/codes")
         .select("vec_id", "codes")
@@ -714,7 +715,7 @@ class StreamOpsSpec extends SparkSpec {
     assert(streamed == batch)
     // an at-least-once REPLAY of a committed trigger overwrites its
     // own directory and leaves the table byte-identical
-    StreamOps.sq8IngestBatch(b2, 1L, idx, "vec_id", "embedding")
+    StreamOps.sq8IngestBatch(b2, 1L, idx, "vec_id", "embedding", scales)
     assert(table() == streamed, "replaying a committed batch changed the table")
     // the served ranking through the streamed table equals the
     // batch-index serve
@@ -727,7 +728,7 @@ class StreamOpsSpec extends SparkSpec {
     val hot = b1.limit(1).select(col("vec_id"),
       transform(col("embedding"), x => x * 1000.0f).as("embedding"))
     val e = intercept[IllegalArgumentException] {
-      StreamOps.sq8IngestBatch(hot, 2L, idx, "vec_id", "embedding")
+      StreamOps.sq8IngestBatch(hot, 2L, idx, "vec_id", "embedding", scales)
     }
     assert(e.getMessage.contains("codes would clip"))
   }
@@ -747,9 +748,10 @@ class StreamOpsSpec extends SparkSpec {
     val mid = emb.agg(avg(col("vec_id"))).head().getDouble(0).toLong
     val b0 = emb.filter(col("vec_id") < mid)
     val b1 = emb.filter(col("vec_id") >= mid)
-    StreamOps.semanticDedupBatch(b0, 0L, state, "vec_id", "embedding", 0.35)
-    StreamOps.semanticDedupBatch(b1, 1L, state, "vec_id", "embedding", 0.35)
-    StreamOps.semanticDedupBatch(clones, 2L, state, "vec_id", "embedding", 0.35)
+    val frozen = StreamOps.frozenCentroids(spark, state)
+    StreamOps.semanticDedupBatch(b0, 0L, state, "vec_id", "embedding", 0.35, frozen)
+    StreamOps.semanticDedupBatch(b1, 1L, state, "vec_id", "embedding", 0.35, frozen)
+    StreamOps.semanticDedupBatch(clones, 2L, state, "vec_id", "embedding", 0.35, frozen)
     def kept(): Set[Long] = spark.read.parquet(s"$state/kept")
       .select("vec_id").as[Long].collect().toSet
     val streamed = kept()
@@ -782,20 +784,79 @@ class StreamOpsSpec extends SparkSpec {
         }
     }
     val before = sig(state)
-    StreamOps.semanticDedupBatch(clones, 2L, state, "vec_id", "embedding", 0.35)
+    StreamOps.semanticDedupBatch(clones, 2L, state, "vec_id", "embedding", 0.35, frozen)
     assert(sig(state) == before, "replay changed streamed state content")
     assert(kept() == streamed)
     // a re-delivered id under a NEW generation is rejected loudly
     val eC = intercept[IllegalArgumentException](
       StreamOps.semanticDedupBatch(clones, 3L, state, "vec_id", "embedding",
-        0.35))
+        0.35, frozen))
     assert(eC.getMessage.contains("re-delivers"))
     // a stream without its planning pass is rejected loudly
+    val none = java.nio.file.Files.createTempDirectory("semnone").toString + "/s"
     val eM = intercept[IllegalArgumentException](
-      StreamOps.semanticDedupBatch(b0, 0L,
-        java.nio.file.Files.createTempDirectory("semnone").toString + "/s",
-        "vec_id", "embedding", 0.35))
+      StreamOps.semanticDedupBatch(b0, 0L, none, "vec_id", "embedding", 0.35,
+        StreamOps.frozenCentroids(spark, none)))
     assert(eM.getMessage.contains("initSemanticCentroids"))
+  }
+
+  test("sq8/binary/semantic-dedup/CDC sinks over a 2-file backlog accumulate the state of direct trigger calls") {
+    import graft.operators.Similarity
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    val now = Some(Trigger.AvailableNow())
+    // one row per sink: input and id, the state relations compared, the
+    // planning pass planting the frozen sidecar, the sink started at
+    // (state, checkpoint), and one direct trigger call at state
+    case class Sink(name: String, input: DataFrame, id: String, rels: Seq[String],
+                    plant: String => Unit,
+                    start: (DataFrame, String, String) => StreamingQuery,
+                    trigger: (DataFrame, Long, String) => Unit)
+    val sinks = Seq(
+      Sink("sq8CodesSink", emb, "vec_id", Seq("codes"),
+        Similarity.initSq8Scales(emb, "embedding", _),
+        StreamOps.sq8CodesSink(_, _, "vec_id", "embedding", _, now),
+        (b, bid, st) => StreamOps.sq8IngestBatch(b, bid, st, "vec_id", "embedding",
+          Similarity.readSq8Scales(spark, st))),
+      Sink("binCodesSink", emb, "vec_id", Seq("codes"),
+        Similarity.initBinThresholds(emb, "embedding", _),
+        StreamOps.binCodesSink(_, _, "vec_id", "embedding", _, now),
+        (b, bid, st) => StreamOps.binIngestBatch(b, bid, st, "vec_id", "embedding",
+          Similarity.readBinThresholds(spark, st))),
+      Sink("semanticDedupSink", emb, "vec_id", Seq("vecs", "kept"),
+        Similarity.initSemanticCentroids(emb, "vec_id", "embedding", 8, _),
+        StreamOps.semanticDedupSink(_, _, "vec_id", "embedding", _, now),
+        (b, bid, st) => StreamOps.semanticDedupBatch(b, bid, st, "vec_id", "embedding",
+          0.35, StreamOps.frozenCentroids(spark, st))),
+      Sink("cdcSegmentsSink", docs, "doc_id", Seq("clean", "chunks"), _ => (),
+        StreamOps.cdcSegmentsSink(_, _, "doc_id", "text", _, now),
+        (b, bid, st) => StreamOps.cdcSegmentsBatch(b, bid, st, "doc_id", "text", 32)))
+    sinks.foreach { k =>
+      val root = java.nio.file.Files.createTempDirectory(s"sink_${k.name}").toString
+      val mid = k.input.agg(avg(col(k.id))).head().getDouble(0)
+      val batches = Seq(k.input.filter(col(k.id) < mid), k.input.filter(col(k.id) >= mid))
+      graft.registry.Support.landFiles(s"$root/src",
+        batches.zipWithIndex.map { case (b, i) => s"b${i + 1}" -> b }: _*)
+      // one planted sidecar, copied: both sides code under the same one
+      new java.io.File(s"$root/streamed").mkdirs()
+      k.plant(s"$root/streamed")
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(s"$root/streamed"), new java.io.File(s"$root/direct"))
+      k.start(spark.readStream.schema(k.input.schema).option("maxFilesPerTrigger", 1)
+        .parquet(s"$root/src"), s"$root/streamed", s"$root/ckpt").awaitTermination()
+      batches.zipWithIndex.foreach { case (b, bid) => k.trigger(b, bid.toLong, s"$root/direct") }
+      k.rels.foreach { rel =>
+        def rows(side: String) = spark.read.parquet(s"$root/$side/$rel").collect()
+          .map(_.toSeq.map { case a: Array[Byte] => a.toSeq; case v => v }).toSet
+        val streamed = rows("streamed")
+        assert(streamed.nonEmpty && streamed == rows("direct"),
+          s"${k.name}: streamed $rel differs from direct trigger calls")
+      }
+    }
   }
 
   test("binCodesSink: streamed code table is bit-identical to the batch build; replay idempotent; dim mismatch loud") {
@@ -804,10 +865,11 @@ class StreamOpsSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding"))
     val idx = java.nio.file.Files.createTempDirectory("binstream").toString + "/idx"
     Similarity.initBinThresholds(emb, "embedding", idx)
+    val thr = Similarity.readBinThresholds(spark, idx)
     val b1 = emb.filter(col("vec_id") % 2 === 0)
     val b2 = emb.filter(col("vec_id") % 2 === 1)
-    StreamOps.binIngestBatch(b1, 0L, idx, "vec_id", "embedding")
-    StreamOps.binIngestBatch(b2, 1L, idx, "vec_id", "embedding")
+    StreamOps.binIngestBatch(b1, 0L, idx, "vec_id", "embedding", thr)
+    StreamOps.binIngestBatch(b2, 1L, idx, "vec_id", "embedding", thr)
     def table(): Map[Long, Seq[Long]] =
       spark.read.parquet(s"$idx/codes")
         .select("vec_id", "code")
@@ -819,7 +881,7 @@ class StreamOpsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(streamed == batch)
     // replaying a committed trigger overwrites its own directory only
-    StreamOps.binIngestBatch(b2, 1L, idx, "vec_id", "embedding")
+    StreamOps.binIngestBatch(b2, 1L, idx, "vec_id", "embedding", thr)
     assert(table() == streamed, "replaying a committed batch changed the table")
     // the served two-stage ranking through the streamed table equals
     // the batch-index serve
@@ -834,7 +896,7 @@ class StreamOpsSpec extends SparkSpec {
     val narrow = b1.limit(1).select(col("vec_id"),
       slice(col("embedding"), 1, 8).as("embedding"))
     val e = intercept[IllegalArgumentException] {
-      StreamOps.binIngestBatch(narrow, 2L, idx, "vec_id", "embedding")
+      StreamOps.binIngestBatch(narrow, 2L, idx, "vec_id", "embedding", thr)
     }
     assert(e.getMessage.contains("not the same embedding space"))
   }
