@@ -1587,7 +1587,7 @@ object GraphQl {
   private def executeSchemaIntrospection(kg: KnowledgeGraph,
                                          root: Field): DataFrame = {
     noArgs(root.args, "__schema")
-    kg.diseases.sparkSession.range(1).select(
+    kg.spark.range(1).select(
       selection("__schema", IntroSchema, root.sel) { case f =>
         struct(selection("__schema.queryType", IntroType, f.sel) {
           case g if g.name == "name" => lit("Query")
@@ -1637,7 +1637,7 @@ object GraphQl {
     val tfields = IntroTypes.getOrElse(tname, throw ParseError(
       s"unknown type '$tname' — introspectable types: " +
         IntroTypes.keys.toSeq.sorted.mkString(", ")))
-    kg.diseases.sparkSession.range(1).select(
+    kg.spark.range(1).select(
       selection("__type", IntroType, root.sel) {
         case f if f.name == "name" => lit(tname)
         case f if f.name == "kind" => lit("OBJECT")

@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,15 +25,19 @@ import graft.operators.Artifact
   * materialized index (opentargets.schema:263-265 serves scores, it
   * does not compute them per request). Every ClientApi call then
   * starts from a parquet scan of the index instead of re-aggregating
-  * the fact tables. Entity views stay direct scans (they are already
-  * single-table projections).
+  * the fact tables. Two entity relations aggregate and are persisted
+  * the same way: `diseases` (a distinct over customer — a shuffle job
+  * per disease lookup) and `drugDetails` (a max(phase) rollup over the
+  * whole knownDrugs index per drug-facet request). The other entity
+  * views stay direct scans: each is a single-table projection, which
+  * a persisted copy would only duplicate.
   */
-final class KnowledgeGraph(spark: SparkSession, dir: String,
+final class KnowledgeGraph(private[graft] val spark: SparkSession, dir: String,
                            indexPath: Option[String] = None) {
   private val t = Tables(spark, dir)
 
-  /** Build-once persisted edge relation keyed `$indexPath-$name`;
-    * identity when no index path is configured.
+  /** Build-once persisted relation keyed `$indexPath-$name`; identity
+    * when no index path is configured.
     */
   private def indexed(name: String)(build: => DataFrame): DataFrame =
     indexPath match {
@@ -50,10 +54,11 @@ final class KnowledgeGraph(spark: SparkSession, dir: String,
     }
 
   /** disease(id, name) — one per market segment. */
-  def diseases: DataFrame =
+  def diseases: DataFrame = indexed("diseases") {
     t.customer.select(col("c_mktsegment")).distinct()
       .select(concat(lit("DIS_"), col("c_mktsegment")).as("id"),
         col("c_mktsegment").as("name"))
+  }
 
   /** target(id, approvedSymbol, bioType) — one per part (bioType ≈
     * the part type bucket, opentargets.schema's Target.bioType).
@@ -79,7 +84,7 @@ final class KnowledgeGraph(spark: SparkSession, dir: String,
     * evidence-rollup the platform's ETL performs, so the facet is a
     * real aggregation, not a stored column.
     */
-  def drugDetails: DataFrame = {
+  def drugDetails: DataFrame = indexed("drugdetails") {
     val maxPhase = knownDrugs.groupBy(col("drug_id"))
       .agg(max(col("phase")).as("maximumClinicalTrialPhase"))
       .withColumnRenamed("drug_id", "id")
@@ -102,14 +107,14 @@ final class KnowledgeGraph(spark: SparkSession, dir: String,
         Seq("o_custkey"))
 
   /** associatedTargets(disease_id, target_id, score) — score is the
-    * segment's share of the part's volume, in (0, 1].
+    * segment's share of the part's volume, in (0, 1], `round6`ed.
     */
   def associatedTargets: DataFrame = indexed("assoc") {
     val perPair = facts.groupBy(col("c_mktsegment"), col("l_partkey"))
       .agg(sum(col("l_quantity")).as("q"))
     val perPart = Window.partitionBy(col("l_partkey"))
     perPair
-      .withColumn("score", round(col("q") / sum(col("q")).over(perPart), 6))
+      .withColumn("score", KnowledgeGraph.round6(col("q") / sum(col("q")).over(perPart)))
       .select(concat(lit("DIS_"), col("c_mktsegment")).as("disease_id"),
         concat(lit("TGT_"), col("l_partkey")).as("target_id"), col("score"))
   }
@@ -312,6 +317,14 @@ final class KnowledgeGraph(spark: SparkSession, dir: String,
 }
 
 object KnowledgeGraph {
+  /** x rounded to 6 places as a double rounds: half away from zero of
+    * x·10⁶, as SQL engines that compute in doubles round it. Spark's
+    * `round(x, 6)` rounds x's decimal string and differs on a decimal
+    * tie: 323/640 = 0.5046875, a double just below it, is 0.504687
+    * here and 0.504688 through `round(x, 6)`.
+    */
+  private[graft] def round6(x: Column): Column = round(x * 1e6, 0) / 1e6
+
   def apply(spark: SparkSession, dir: String): KnowledgeGraph =
     new KnowledgeGraph(spark, dir)
 

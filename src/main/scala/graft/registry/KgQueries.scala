@@ -18,11 +18,14 @@ private[graft] object KgQueries {
 
   /** KG whose association edges read the per-corpus persisted index
     * (the reference server's own shape: scores are precomputed by an
-    * ETL, the API scans them) — shared by every KG query.
+    * ETL, the API scans them) — shared by every KG query. The tag
+    * folds in every table an indexed relation reads: the edges read
+    * lineitem, orders, customer and part, the persisted entities
+    * customer, supplier and nation.
     */
   private def kgIndexed(s: SparkSession, dir: String): KnowledgeGraph =
-    KnowledgeGraph(s, dir,
-      fixturePath("kgidx", dir, "lineitem", "orders", "customer"))
+    KnowledgeGraph(s, dir, fixturePath("kgidx", dir,
+      "lineitem", "orders", "customer", "part", "supplier", "nation"))
 
   def all: Seq[Query] = Seq(
     // ---------------- S2 entity-filtered union search ----------------

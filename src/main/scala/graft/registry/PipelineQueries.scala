@@ -1179,8 +1179,7 @@ private[graft] object PipelineQueries {
       // collapse over a base + three append generations) is
       // corpus-size-independent; halving bounds the per-rep rebuild
       val docs = t(s, dir).documents.filter(col("doc_id") % 2 === 0)
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q254").toString
+      val scratch = scratchDir("q254")
       val idx = s"$scratch/idx"
       InvertedIndex.build(docs.filter(col("doc_id") % 4 === 0),
           "doc_id", col("text"))

@@ -168,30 +168,17 @@ private[graft] object StreamingQueries {
     def ckpt: String = s"$dir/ckpt"
   }
 
-  /** The scratch directory of each replay row's latest invocation in
-    * this JVM.
-    */
-  private val scratchDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The replay step of every backlog row. A fresh scratch directory
-    * per invocation — the fold must replay from scratch to be
-    * comparable run over run — and the row's earlier scratch goes
-    * first: this JVM's previous one at once (rows run one at a time,
-    * so its result has been read), another process's once quiet for
-    * the sweep window (the [[Support.fixturePath]] rule). The backlog
-    * at `src` streams `perTrigger` files per micro-batch into the sink
-    * `start` builds — handed the stream, the replay and the trigger —
-    * and runs to its end.
+  /** The replay step of every backlog row, in a fresh
+    * [[Support.scratchDir]] per invocation — the fold must replay from
+    * scratch to be comparable run over run. The backlog at `src`
+    * streams `perTrigger` files per micro-batch into the sink `start`
+    * builds — handed the stream, the replay and the trigger — and runs
+    * to its end.
     */
   private def replay(s: SparkSession, row: String, src: String, perTrigger: Int = 1)
                     (start: (DataFrame, Replay, Option[Trigger]) => StreamingQuery)
       : Replay = {
-    val prefix = s"graft_${row}_"
-    Option(scratchDirs.get(row)).foreach(d =>
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
-    Artifact.sweep(System.getProperty("java.io.tmpdir"), prefix, Set.empty)
-    val r = Replay(row, java.nio.file.Files.createTempDirectory(prefix).toString)
-    scratchDirs.put(row, r.dir)
+    val r = Replay(row, scratchDir(row))
     val stream = fileStream(s, src, Some(perTrigger))
     runToEnd(t => start(stream, r, Some(t)))
     r

@@ -69,6 +69,26 @@ private[graft] object Support {
     new java.util.concurrent.ConcurrentHashMap[String,
       java.util.Set[String]]()
 
+  /** A fresh scratch directory for one invocation of registry row
+    * `row` (`q<NN>`), for a row that rebuilds its state from nothing on
+    * every run so it is comparable run over run. The row's earlier
+    * scratch goes first: this JVM's previous one at once (rows run one
+    * at a time, so its result has been read), another process's once
+    * quiet for the sweep window (the [[fixturePath]] rule).
+    */
+  def scratchDir(row: String): String = {
+    val prefix = s"graft_${row}_"
+    Option(scratchDirs.get(row)).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
+    Artifact.sweep(System.getProperty("java.io.tmpdir"), prefix, Set.empty)
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    scratchDirs.put(row, dir)
+    dir
+  }
+
+  /** The scratch directory of each row's latest invocation in this JVM. */
+  private val scratchDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
   /** In-query invariants beyond the oracle's rows: a sketch/ANN query
     * asserts its own correctness contract (subset-of-exact, recall
     * floor, banding completeness, fixture ground truth) at

@@ -2343,8 +2343,7 @@ private[graft] object TextQueries {
         .unionByName(history.filter(col("doc_id") % 8 === 0).select(
           (col("doc_id") + lit(1000000L)).as("doc_id"),
           concat(lit("zq "), col("text")).as("text")))
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q244").toString
+      val scratch = scratchDir("q244")
       val archPath = s"$scratch/chunk_archive"
       SegmentOps.bootstrapCdcChunkArchive(history, "doc_id", col("text"),
         boundary256 = 32, archPath)

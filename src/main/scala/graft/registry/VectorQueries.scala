@@ -1293,8 +1293,7 @@ private[graft] object VectorQueries {
     // rebin mutates it, so no artifact reuse.
     Query("q245_bin_rebin", (s, dir) => {
       val emb = t(s, dir).embeddings.select(col("vec_id"), col("embedding"))
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q245").toString
+      val scratch = scratchDir("q245")
       val idx = s"$scratch/idx"
       val build = emb.filter(col("vec_id") % 4 =!= 3)
         .select(col("vec_id"),
@@ -1392,8 +1391,7 @@ private[graft] object VectorQueries {
       // ProbeMaintain `pqrebuild` / SCALING.md, where it belongs)
       val emb = t(s, dir).embeddings.select(col("vec_id"), col("embedding"))
         .filter(col("vec_id") % 4 === 0)
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_q247").toString
+      val scratch = scratchDir("q247")
       val idx = s"$scratch/idx"
       Similarity.buildPqIndex(emb, "vec_id", "embedding",
         numSub = 8, k = 16, idx)

@@ -32,6 +32,14 @@ class ClientApiSpec extends SparkSpec {
     assert(sums.count() == 0)
   }
 
+  test("association scores round a decimal tie as the double rounds") {
+    // 323/640 = 0.5046875 exactly in decimal; its double lies just
+    // below, so the oracle's round(x, 6) over doubles reads 0.504687
+    val got = Seq((323.0, 640.0), (1.0, 3.0), (2.0, 3.0), (1.0, 8.0), (5.0, 5.0)).toDF("q", "n")
+      .select(KnowledgeGraph.round6(col("q") / col("n"))).as[Double].collect().toSeq
+    assert(got == Seq(0.504687, 0.333333, 0.666667, 0.125, 1.0))
+  }
+
   test("get_disease_ids: search + keep-first dedup") {
     val hits = ClientApi.getDiseaseIds(kg, "BUILD")
     assert(hits.as[(String, String)].collect().toSeq == Seq(("DIS_BUILDING", "BUILDING")))

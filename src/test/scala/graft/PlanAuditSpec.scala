@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Plan-quality regression guards: correctness rows prove WHAT each
   * query computes; these assert HOW — the physical shapes that keep
@@ -10,7 +11,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * joins for small dimensions). A refactor that silently degrades a
   * plan fails here even though every value still matches.
   */
-class PlanAuditSpec extends SparkSpec {
+class PlanAuditSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def query(name: String): DataFrame =
     SparkEntry.queries(name)(spark, sfDir)
@@ -200,6 +201,14 @@ class PlanAuditSpec extends SparkSpec {
     val plan = executedPlan(query("q152_graphql_known_drugs"))
     assert(plan.contains("TakeOrderedAndProject"),
       s"paged GraphQL rows not pre-limited via top-k:\n${plan.take(3000)}")
+  }
+
+  test("q152 GraphQL: the disease lookup reads the persisted entity, no c_mktsegment shuffle") {
+    val plan = query("q152_graphql_known_drugs").queryExecution.executedPlan
+    val shuffles = collect(plan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.toString.contains("c_mktsegment") => e
+    }
+    assert(shuffles.isEmpty, s"disease rows rebuilt by a shuffle:\n$plan")
   }
 
   test("q214 GraphQL: scoreThreshold filters BELOW the rank-limited fold, pushed to the scan") {

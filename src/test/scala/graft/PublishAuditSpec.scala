@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `materialized`, the exact Jaccard verify, the segment keep-first
   * and the prior-generation archive filter — are pinned to one
   * definition each the same way, as are the streaming family's replay
-  * runner, replay scratch directory and centroid-sidecar resolve.
+  * runner and centroid-sidecar resolve, and the registry's scratch
+  * directory rule.
   */
 class PublishAuditSpec extends AnyFunSuite {
 
@@ -67,14 +68,22 @@ class PublishAuditSpec extends AnyFunSuite {
     once("""array_intersect(col("""", _ == "Dedup.scala")
     once("min(struct(col(", _ == "SegmentOps.scala")
     once("""col("batch") =!=""")
-    // the streaming family: one replay runner, one scratch directory
-    // per replay, one centroid-sidecar resolve, and StreamOps' guards
-    // only through the shared guard-row helper
+    // the streaming family: one replay runner, one centroid-sidecar
+    // resolve, and StreamOps' guards only through the shared guard-row
+    // helper
     once("awaitTermination()", _ == "StreamingQueries.scala")
-    once("createTempDirectory", _ == "StreamingQueries.scala")
     once("centroid sidecar at")
     val raised = offenders(java.util.regex.Pattern.quote("Publish.raise(").r,
       _ != "StreamOps.scala")
     assert(raised.isEmpty, raised.mkString("\n"))
+  }
+
+  test("every registry row's scratch directory comes from one rule") {
+    // Support.scratchDir: a row's earlier scratch is removed before its
+    // next one is made, so repeated runs leave one directory per row
+    val made = offenders(java.util.regex.Pattern.quote("createTempDirectory").r, _ => false)
+      .filter(_.startsWith(new java.io.File(srcDir, "graft/registry").getPath))
+    assert(made.size == 1 && made.head.contains("Support.scala"),
+      "expected one `createTempDirectory`, in Support.scala:\n" + made.mkString("\n"))
   }
 }
