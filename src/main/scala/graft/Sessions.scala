@@ -28,7 +28,6 @@ object Sessions {
     *    keeps them wide. (The r15 measurement that rejected this flag
     *    predates the generation-write sizing in StreamOps — it was
     *    re-measured as a win in round 17; see OPTIMIZATION_r17.md.)
-    *    Env-overridable (`SPARK_GRAFT_CACHED_AQE`) for A/B probes.
     *  - `spark.sql.legacy.parquet.nanosAsLong`: events.parquet has
     *    shipped as TIMESTAMP(NANOS) in some generations; keep the
     *    nanos form readable (Tables.events normalizes every encoding
@@ -60,8 +59,7 @@ object Sessions {
     */
   def tuned(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-      sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "true"))
+    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.cleaner.periodicGC.interval", "60s")
     .config("spark.sql.codegen.cache.maxEntries", "4500")

@@ -923,17 +923,18 @@ object GraphQl {
   /** The internal column a joined (or union-widened) entity scalar
     * takes.
     */
-  private def joined(e: Entity, field: String): String = s"__${e.key}_$field"
+  private def joined(e: Entity, field: String): String =
+    KnowledgeGraph.entityCol(e.key, field)
 
-  /** LEFT-join entity `e` by its `<key>_id` edge column, its scalars
-    * under [[joined]] names. LEFT: a GraphQL resolver nulls a missing
-    * sub-entity, it never drops the row — so `count` and `rows` agree
-    * even if an edge references an id the entity table lacks.
+  /** Entity `e`'s scalars on `df`, by its `<key>_id` edge column
+    * ([[KnowledgeGraph.joinEntity]]: a LEFT join, a missing entity
+    * NULL). An edge relation of the persisted KG index already carries
+    * them, and is read as it is.
     */
   private def joinEntity(kg: KnowledgeGraph, df: DataFrame, e: Entity): DataFrame =
-    df.join(e.scan(kg).select(e.scalars.map { case (c, _) =>
-        col(c).as(joined(e, c)) }: _*),
-      col(s"${e.key}_id") === col(joined(e, "id")), "left")
+    if (df.columns.contains(joined(e, "id"))) df
+    else KnowledgeGraph.joinEntity(df, e.key,
+      e.scan(kg).select(e.scalars.map(s => col(s._1)): _*))
 
   /** Join the entities of `row` that `names` reads, in field order.
     * Only those: Catalyst cannot drop an unused join on FK-integrity
@@ -1051,9 +1052,12 @@ object GraphQl {
     * relation by the root key BEFORE aggregating (partition-prunable
     * at scale, and an empty connection yields count=0/rows=[] without
     * an outer-join null dance). `count` is the TOTAL (server
-    * semantics), aggregated join-free; rows rank-limit to the
-    * requested page before the fold — an omitted page is the default
-    * first page, never the whole connection.
+    * semantics). A paged connection's rows rank-limit to the requested
+    * page before the fold — an omitted page is the default first page,
+    * never the whole connection — so its count is a side of its own,
+    * aggregated join-free. An unpaged connection counts inside its rows
+    * aggregate, over the same relation: the sub-entity joins are LEFT
+    * and keep every edge row, so one aggregate (one job) serves both.
     *
     * Engine-side score-argument pushdown for the association
     * connections — arguments the reference schema declares
@@ -1109,11 +1113,14 @@ object GraphQl {
         // selection; count-only queries join nothing
         val rowsSels = f.sel.filter(_.name == "rows")
         val flat = edges(rowsSels.flatMap(_.sel.map(_.name)).toSet)
+        val counts = f.sel.filter(_.name == "count").map(g => count(lit(1)).as(g.out))
+        val rowsAggs = rowsSels.map(g => rows(s"$site rows", g.sel).as(g.out))
+        val aggs = counts ++ rowsAggs
         val sides =
-          f.sel.filter(_.name == "count")
-            .map(g => edges(Set.empty).agg(count(lit(1)).as(g.out))) ++
-          rowsSels.map(g =>
-            pg.limit(flat, keys).agg(rows(s"$site rows", g.sel).as(g.out)))
+          if (c.paged) counts.map(edges(Set.empty).agg(_)) ++
+            rowsAggs.map(pg.limit(flat, keys).agg(_))
+          else if (aggs.isEmpty) Nil
+          else Seq(flat.agg(aggs.head, aggs.tail: _*))
         assemble(sides, flat.sparkSession)(struct(out: _*).as(f.out))
     }
   }

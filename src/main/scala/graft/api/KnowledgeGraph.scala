@@ -18,19 +18,31 @@ import graft.operators.Artifact
   * `orderByScore` default, opentargets.schema:263-265).
   *
   * With `indexPath` set, the derived EDGE relations (association
-  * scores, known drugs, linked targets) are built once per corpus and
-  * persisted via the Artifact protocol — the analogue of the
-  * reference server's own architecture: the platform precomputes
-  * association scores in an ETL and the API only scans the
+  * scores, known drugs, linked targets, mechanism rows) are built once
+  * per corpus and persisted via the Artifact protocol — the analogue
+  * of the reference server's own architecture: the platform
+  * precomputes association scores in an ETL and the API only scans the
   * materialized index (opentargets.schema:263-265 serves scores, it
   * does not compute them per request). Every ClientApi call then
   * starts from a parquet scan of the index instead of re-aggregating
   * the fact tables. Two entity relations aggregate and are persisted
   * the same way: `diseases` (a distinct over customer — a shuffle job
   * per disease lookup) and `drugDetails` (a max(phase) rollup over the
-  * whole knownDrugs index per drug-facet request). The other entity
-  * views stay direct scans: each is a single-table projection, which
-  * a persisted copy would only duplicate.
+  * whole knownDrugs aggregation per drug-facet request). The other
+  * entity views stay direct scans: each is a single-table projection,
+  * which a persisted copy would only duplicate.
+  *
+  * Each persisted edge relation also carries the scalars of every
+  * entity its GraphQL rows reach, LEFT-joined once at build time under
+  * GraphQl's `__<entity>_<field>` names ([[KnowledgeGraph.entityCol]]):
+  * `assoc` the disease and target, `knowndrugs` the disease, target and
+  * drug, `linkedtargets` and `mechanisms` the target. A GraphQL request
+  * then reads a sub-entity's fields off the edge rows it already scans,
+  * instead of paying a broadcast join — one Spark job — per request,
+  * and a missing entity stays NULL (a GraphQL null object, the row
+  * kept). Without an index the edges stay bare and GraphQl joins only
+  * the entities a request selects: a session with no index has nowhere
+  * to keep the pre-joined rows.
   */
 final class KnowledgeGraph(private[graft] val spark: SparkSession, dir: String,
                            indexPath: Option[String] = None) {
@@ -49,9 +61,18 @@ final class KnowledgeGraph(private[graft] val spark: SparkSession, dir: String,
         // touched (Artifact existence check + footer read + plan
         // build) — a measurable slice of the ~0.5 s/query dialect
         // floor. The ensure runs on the memo's first resolution only.
-        Tables.resolved(spark, full,
-          Artifact.ensure(full)(tmp => build.write.parquet(tmp)))
+        Tables.resolved(spark, full, Artifact.ensureWithMeta(full,
+          KnowledgeGraph.IndexFormat)(tmp => build.write.parquet(tmp)))
     }
+
+  /** `edges` with the scalars of each `(key, entity)` it references by
+    * its `<key>_id` column, when the edges are persisted; bare edges
+    * otherwise (see the class doc), without building the entities.
+    */
+  private def withEntities(edges: DataFrame)(entities: => Seq[(String, DataFrame)]): DataFrame =
+    if (indexPath.isEmpty) edges
+    else entities.foldLeft(edges) { case (df, (key, e)) =>
+      KnowledgeGraph.joinEntity(df, key, e) }
 
   /** disease(id, name) — one per market segment. */
   def diseases: DataFrame = indexed("diseases") {
@@ -85,7 +106,7 @@ final class KnowledgeGraph(private[graft] val spark: SparkSession, dir: String,
     * real aggregation, not a stored column.
     */
   def drugDetails: DataFrame = indexed("drugdetails") {
-    val maxPhase = knownDrugs.groupBy(col("drug_id"))
+    val maxPhase = knownDrugRows.groupBy(col("drug_id"))
       .agg(max(col("phase")).as("maximumClinicalTrialPhase"))
       .withColumnRenamed("drug_id", "id")
     t.supplier
@@ -113,15 +134,18 @@ final class KnowledgeGraph(private[graft] val spark: SparkSession, dir: String,
     val perPair = facts.groupBy(col("c_mktsegment"), col("l_partkey"))
       .agg(sum(col("l_quantity")).as("q"))
     val perPart = Window.partitionBy(col("l_partkey"))
-    perPair
+    withEntities(perPair
       .withColumn("score", KnowledgeGraph.round6(col("q") / sum(col("q")).over(perPart)))
       .select(concat(lit("DIS_"), col("c_mktsegment")).as("disease_id"),
-        concat(lit("TGT_"), col("l_partkey")).as("target_id"), col("score"))
+        concat(lit("TGT_"), col("l_partkey")).as("target_id"), col("score")))(
+      Seq("disease" -> diseases, "target" -> targets))
   }
 
   /** associatedDiseases — the reverse edge (same score). */
-  def associatedDiseases: DataFrame =
-    associatedTargets.select(col("target_id"), col("disease_id"), col("score"))
+  def associatedDiseases: DataFrame = {
+    val at = associatedTargets
+    at.select(col("target_id") +: at.columns.filter(_ != "target_id").map(col).toSeq: _*)
+  }
 
   /** knownDrugs(disease_id, target_id, drug_id, phase) — the
     * denormalized clinical-precedence fact rows (KnownDrug,
@@ -129,13 +153,20 @@ final class KnowledgeGraph(private[graft] val spark: SparkSession, dir: String,
     * that actually traded.
     */
   def knownDrugs: DataFrame = indexed("knowndrugs") {
+    withEntities(knownDrugRows)(
+      Seq("disease" -> diseases, "target" -> targets, "drug" -> drugDetails))
+  }
+
+  /** The bare knownDrugs aggregation: [[drugDetails]] rolls it up, so
+    * it cannot read the persisted rows, which carry drugDetails.
+    */
+  private def knownDrugRows: DataFrame =
     facts.groupBy(col("c_mktsegment"), col("l_partkey"), col("l_suppkey"))
       .agg(least(lit(4.0), (count(lit(1)) / 10.0)).as("phase"))
       .select(concat(lit("DIS_"), col("c_mktsegment")).as("disease_id"),
         concat(lit("TGT_"), col("l_partkey")).as("target_id"),
         concat(lit("DRG_"), col("l_suppkey")).as("drug_id"),
         round(col("phase"), 1).as("phase"))
-  }
 
   /** linkedTargets(drug_id, target_id, rank) — drug→target edges
     * ranked by traded volume (the server's ordered `rows`, whose
@@ -154,9 +185,10 @@ final class KnowledgeGraph(private[graft] val spark: SparkSession, dir: String,
       .agg(sum(col("l_quantity")).as("q"))
     val w = Window.partitionBy(col("l_suppkey"))
       .orderBy(col("q").desc, col("l_partkey").asc)
-    perPair.withColumn("rank", row_number().over(w))
+    withEntities(perPair.withColumn("rank", row_number().over(w))
       .select(concat(lit("DRG_"), col("l_suppkey")).as("drug_id"),
-        concat(lit("TGT_"), col("l_partkey")).as("target_id"), col("rank"))
+        concat(lit("TGT_"), col("l_partkey")).as("target_id"), col("rank")))(
+      Seq("target" -> targets))
   }
 
   /** mechanismRows(drug_id, mechanismOfAction, actionType, target_id)
@@ -171,13 +203,14 @@ final class KnowledgeGraph(private[graft] val spark: SparkSession, dir: String,
     * dead-join reason as [[linkedTargets]].
     */
   def mechanismRows: DataFrame = indexed("mechanisms") {
-    t.lineitem.select(col("l_suppkey"), col("l_partkey")).distinct()
+    withEntities(t.lineitem.select(col("l_suppkey"), col("l_partkey")).distinct()
       .join(t.part.select(col("p_partkey"), col("p_brand")),
         col("l_partkey") === col("p_partkey"))
       .select(concat(lit("DRG_"), col("l_suppkey")).as("drug_id"),
         col("p_brand").as("mechanismOfAction"),
         concat(lit("CLASS_"), substring(col("p_brand"), 7, 1)).as("actionType"),
-        concat(lit("TGT_"), col("l_partkey")).as("target_id"))
+        concat(lit("TGT_"), col("l_partkey")).as("target_id")))(
+      Seq("target" -> targets))
   }
 
   /** goTerms(id, name) — the GeneOntologyTerm catalog
@@ -300,11 +333,11 @@ final class KnowledgeGraph(private[graft] val spark: SparkSession, dir: String,
     * reads, so an evidences request is an index probe, never a fact
     * re-aggregation.
     */
-  def evidenceRows: DataFrame =
-    associatedTargets.select(
-      concat(lit("EVD_"), col("disease_id"), lit("_"),
-        col("target_id")).as("id"),
-      col("disease_id"), col("target_id"), col("score"))
+  def evidenceRows: DataFrame = {
+    val at = associatedTargets
+    at.select(concat(lit("EVD_"), col("disease_id"), lit("_"),
+      col("target_id")).as("id") +: at.columns.map(col).toSeq: _*)
+  }
 
   /** entityEmbeddings(vec_id, embedding) — the entity↔vector sidecar
     * behind `target.similarEntities` (opentargets.schema:1422-1431):
@@ -324,6 +357,28 @@ object KnowledgeGraph {
     * here and 0.504688 through `round(x, 6)`.
     */
   private[graft] def round6(x: Column): Column = round(x * 1e6, 0) / 1e6
+
+  /** The column an entity scalar takes on a relation it is joined to. */
+  private[graft] def entityCol(key: String, field: String): String = s"__${key}_$field"
+
+  /** LEFT-join `entity` (its columns are its scalars) onto `df` by the
+    * `<key>_id` column, every scalar under [[entityCol]]. LEFT: a
+    * GraphQL resolver nulls a missing sub-entity, it never drops the
+    * row — so `count` and `rows` agree even if an edge references an
+    * id the entity table lacks.
+    */
+  private[graft] def joinEntity(df: DataFrame, key: String, entity: DataFrame): DataFrame =
+    df.join(entity.select(entity.columns.map(c => col(c).as(entityCol(key, c))).toSeq: _*),
+      col(s"${key}_id") === col(entityCol(key, "id")), "left")
+
+  /** The persisted relations' format, kept in each one's parameter
+    * sidecar: an index written before the edge relations carried
+    * entity scalars reads as incomplete and is rebuilt. Change the value
+    * whenever a persisted relation's columns change (an entity scalar
+    * added): the index is keyed on its source tables only, and GraphQl
+    * reads a pre-joined entity's scalars off the edges without a join.
+    */
+  private val IndexFormat = Map("kg.edges" -> "entity-scalars")
 
   def apply(spark: SparkSession, dir: String): KnowledgeGraph =
     new KnowledgeGraph(spark, dir)

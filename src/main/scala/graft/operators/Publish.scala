@@ -1,10 +1,14 @@
 package graft.operators
 
 import java.util.UUID
+import java.util.concurrent.{ExecutionException, Executors}
+
+import scala.util.{Failure, Try}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.{col, concat, format_string, lit, raise_error}
 
 /** The one publish path for persisted state — pipeline checkpoints,
@@ -175,6 +179,33 @@ object Publish {
       (if (i == 0) raise(text) else lit(null)).cast(f.dataType).as(f.name)
     }
     out.unionByName(violations.select(cols.toSeq: _*))
+  }
+
+  /** Run `writes` at once, each on a pool thread under the caller's
+    * active session and thread-local properties (job group and
+    * description, SQL root execution id) — the capture Spark's own
+    * broadcasts make (`SQLExecution.withThreadLocalCaptured`). A bare
+    * pool thread keeps the properties it inherited from whichever
+    * query created it, and its jobs are attributed to that query.
+    * EVERY write is awaited before the first failure rethrows: one
+    * still running while [[dirs]] cleans up after the failure would be
+    * a zombie writer on a deleted staging path.
+    */
+  private[graft] def concurrently(spark: SparkSession)(writes: (() => Unit)*): Unit = {
+    val running = writes.map(w => SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], writers)(w()))
+    running.map(f => Try(f.get())).foreach {
+      case Failure(e: ExecutionException) => throw e.getCause
+      case Failure(e) => throw e
+      case _ =>
+    }
+  }
+
+  /** The threads [[concurrently]] runs writes on (idle ones expire). */
+  private lazy val writers = Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "graft-concurrent-write")
+    t.setDaemon(true)
+    t
   }
 
   /** Run `body`, rethrowing a fired guard as described in step 3. */

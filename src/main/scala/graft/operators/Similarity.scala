@@ -942,13 +942,10 @@ object Similarity {
         // single-sourced with pqListStats ([[pqResidE6]] per row,
         // [[pqStatsFinal]] for the mean), so the written baseline is
         // bit-identical to the dedicated pass's.
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
         val (codesDf, obs) = observedCodes(emb, idName, vecName, books,
           0 until numSub)
-        val codesF = Future(codesDf.write.parquet(codes))
-        writeCodebooks(spark, books, codebooks)
-        Await.result(codesF, scala.concurrent.duration.Duration.Inf)
+        Publish.concurrently(spark)(() => codesDf.write.parquet(codes),
+          () => writeCodebooks(spark, books, codebooks))
         statsFromObservation(spark, obs, 0 until numSub)
           .withColumnRenamed("n", "n_build")
           .withColumnRenamed("resid_e6", "resid_build_e6")
@@ -1249,18 +1246,15 @@ object Similarity {
       // metrics; the codebook-sidecar write overlaps the re-encode
       // (guide §2.6). Unflagged codebook rows stay value-identical
       // (spec-pinned).
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
       val (codesDf, obs) = observedCodes(emb, idName, vecName, merged, subs)
-      val codesF = Future(withSameIdsGuard(codesDf, embeddings, codeIds, idName,
+      Publish.concurrently(spark)(() => withSameIdsGuard(codesDf, embeddings, codeIds, idName,
         when(col("__missing"), format_string("rebuildPqSubspaces: indexed id " +
           "%s absent from the embeddings relation — pass the same corpus the " +
           "index codes", id))
         .otherwise(format_string("rebuildPqSubspaces: embedding id %s not in " +
           "the index — append first (appendPqIndex), then rebuild", id)))
-        .write.parquet(codes))
-      writeCodebooks(spark, merged, codebooks)
-      Await.result(codesF, scala.concurrent.duration.Duration.Inf)
+        .write.parquet(codes),
+        () => writeCodebooks(spark, merged, codebooks))
       // stats: re-baseline ONLY the flagged rows (driver-sized, from the
       // write's observed metrics); unflagged rows keep their stored
       // baseline

@@ -96,17 +96,16 @@ object StreamOps {
     * The other writes then run concurrently, each repartitioned to the
     * generation width (a coalesce would pull their compute into that
     * few tasks): Spark schedules concurrent jobs FIFO, so the later
-    * ones back-fill the earlier ones' task tails (guide §2.6). EVERY
-    * write is awaited before the first failure rethrows: propagating
-    * out of a foreachBatch body while a sibling write still runs would
-    * let Structured Streaming replay the batch against a zombie writer
-    * on the same staging path. Last, the shared relations are
-    * released.
+    * ones back-fill the earlier ones' task tails (guide §2.6). They
+    * run through [[Publish.concurrently]], which attributes their jobs
+    * to the trigger and awaits EVERY write before the first failure
+    * rethrows: propagating out of a foreachBatch body while a sibling
+    * write still runs would let Structured Streaming replay the batch
+    * against a zombie writer on the same staging path. Last, the
+    * shared relations are released.
     */
   private def writeGenerations(batch: DataFrame, shared: Seq[DataFrame],
                                gens: (String, DataFrame)*): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
     val width = Publish.generationWidth(batch)
     try Publish.dirs(batch.sparkSession, gens.map(_._1)) { staged =>
       val (own, rest) = gens.map(_._2).zip(staged)
@@ -117,10 +116,8 @@ object StreamOps {
           case None => rel.count()
         }
       }
-      rest.map { case (rows, at) => Future(rows.repartition(width).write.parquet(at)) }
-        .map(f => scala.util.Try(Await.result(f, scala.concurrent.duration.Duration.Inf)))
-        .collectFirst { case scala.util.Failure(e) => throw e }
-      ()
+      Publish.concurrently(batch.sparkSession)(rest.map { case (rows, at) =>
+        () => rows.repartition(width).write.parquet(at) }: _*)
     } finally shared.foreach(_.unpersist())
   }
 
@@ -131,14 +128,13 @@ object StreamOps {
     * signal at any scale (the same signal the generation writes
     * already use): a bench-SF trigger reads one file and gets width 1;
     * a 100 TB trigger has thousands of splits and keeps the session
-    * width. Rationale (optimization guide §2.2/§2.4): streaming
-    * micro-batch plans run with AQE disabled, and the trigger bodies
-    * persist intermediate relations (shingles, bands, survivors)
-    * whose cached plans pin whatever width they were planned at —
-    * `canChangeCachedPlanOutputPartitioning=true` (the Sessions.tuned
-    * default since round 17) cannot help a plan AQE never touches, so
-    * every downstream job of the trigger otherwise launches
-    * session-width near-empty tasks. Measured (ProbeTrigW, sf0.1,
+    * width. The trigger bodies' queries are batch queries and run
+    * under AQE like any other: an ingest event log shows every
+    * trigger's writes planned as `AdaptiveSparkPlan`, and the cached
+    * shingle relation's plan holding a `ShuffleQueryStage`. AQE
+    * coalesces a stage's shuffle READ, though, after its map side has
+    * already partitioned its output session-wide, so the planned
+    * width still costs a tiny trigger. Measured (ProbeTrigW, sf0.1,
     * local[32]): q199's 4-trigger replay 11.2-11.6 s at width 32 →
     * 6.7-7.8 s at width 1, identical results. Results are
     * width-independent by construction — the bodies' aggregations are

@@ -6,8 +6,7 @@ import java.util.concurrent.TimeUnit
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
 import graft.api.{ClientApi, GraphQl, KnowledgeGraph}
 
@@ -46,22 +45,7 @@ class CodegenCacheSpec extends SparkSpec {
   * many classes each pass compiled.
   */
 object CodegenCacheCheck {
-  private val Docs: Seq[(String, String)] = Seq(
-    "disease" -> """query ($id: String!) { disease(efoId: $id) {
-        id name knownDrugs { count rows { phase drug { id name } } } } }""",
-    "disease" -> """query ($id: String!) { disease(efoId: $id) {
-        associatedTargets { rows { target { id approvedSymbol } score } } } }""",
-    "target" -> """query ($id: String!) { target(ensemblId: $id) {
-        associatedDiseases { rows { disease { id name } score } } } }""",
-    "target" -> """query ($id: String!) { target(ensemblId: $id) { knownDrugs { rows {
-        drug { id name synonyms drugType isApproved maximumClinicalTrialPhase } } } } }""",
-    "drug" -> """query ($id: String!) { drug(chemblId: $id) {
-        id name linkedTargets { count rows { rank target { id approvedSymbol } } } } }""")
-
   private def compiled: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-
-  private def json(df: DataFrame): Unit =
-    df.select(to_json(struct(df.columns.map(col).toIndexedSeq: _*))).collect()
 
   def main(args: Array[String]): Unit = {
     val dir = args(0)
@@ -73,11 +57,12 @@ object CodegenCacheCheck {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val index = java.nio.file.Files.createTempDirectory("graft_codegen_check")
+    import KgLookupDocs.json
     def pass(ids: Map[String, String]): Long = {
       val c0 = compiled
       val kg = KnowledgeGraph(spark, dir, s"$index/kgidx")
-      Docs.foreach { case (kind, doc) =>
-        json(GraphQl.execute(kg, doc, Map("id" -> ids(kind)))) }
+      KgLookupDocs.all.foreach(d =>
+        json(GraphQl.execute(kg, d.text, Map("id" -> ids(d.kind)))))
       json(ClientApi.getDrugFirstTarget(kg, Seq(ids("drug")).toDF("id")).orderBy("id"))
       Seq("q153_", "q165_").foreach(p => json(SparkEntry.queries(
         SparkEntry.queries.keys.filter(_.startsWith(p)).min)(spark, dir)))

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.EmptyRelationExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, LogicalQueryStage}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Plan-quality regression guards: correctness rows prove WHAT each
@@ -16,11 +17,19 @@ class PlanAuditSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def query(name: String): DataFrame =
     SparkEntry.queries(name)(spark, sfDir)
 
-  /** Final (AQE-resolved) physical plan string after execution. */
+  /** Final (AQE-resolved) physical plan string after execution: `df`'s
+    * own QueryExecution runs (a `noop` write would run a separate one
+    * and leave this one's adaptive plan initial). A subtree AQE found
+    * empty prints as its logical plan only, so the query stages that
+    * ran under it follow, as the physical plans they ran.
+    */
   private def executedPlan(df: DataFrame): String = {
-    df.write.format("noop").mode("overwrite").save()
+    df.queryExecution.toRdd.count()
     df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan.toString()
+      case a: AdaptiveSparkPlanExec =>
+        val ranUnderEmpty = collect(a.executedPlan) { case EmptyRelationExec(l) =>
+          l.collect { case s: LogicalQueryStage => s.physicalPlan.toString() } }.flatten
+        (a.executedPlan.toString() +: ranUnderEmpty).mkString("\n")
       case p => p.toString()
     }
   }

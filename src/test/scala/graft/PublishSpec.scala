@@ -111,6 +111,15 @@ class PublishSpec extends SparkSpec {
       .forall(!_.getName.startsWith(".t.")), "publish left debris")
   }
 
+  test("concurrently: every write finishes before the first failure rethrows, unwrapped") {
+    val slowDone = new java.util.concurrent.atomic.AtomicBoolean
+    val e = intercept[IllegalStateException](Publish.concurrently(spark)(
+      () => throw new IllegalStateException("first write failed"),
+      () => { Thread.sleep(500); slowDone.set(true) }))
+    assert(e.getMessage == "first write failed")
+    assert(slowDone.get, "the failure rethrew while a sibling write still ran")
+  }
+
   test("a path republished in-session is re-resolved through Tables, not served stale") {
     val dir = tmp("memo")
     val path = s"$dir/region.parquet"

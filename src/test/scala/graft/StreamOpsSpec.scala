@@ -183,6 +183,40 @@ class StreamOpsSpec extends SparkSpec {
       "replaying a committed batch changed the accumulated state")
   }
 
+  test("neardupBatch: every job of a trigger carries the caller's job group") {
+    // the pair and state writes run concurrently on pool threads; each
+    // must run under the calling trigger's local properties, not those
+    // of whichever query first created the thread
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(Option(e.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_ndgroup_spec").toString
+    def groupsOf(group: String, bid: Long, rows: Seq[(Long, String)]): Seq[String] = {
+      org.apache.spark.graftbridge.Listeners.drain(sc)
+      seen.clear()
+      sc.setJobGroup(group, group)
+      try StreamOps.neardupBatch(rows.toDF("doc_id", "text"), bid, s"$dir/state",
+        "doc_id", "text", threshold = 0.6, k = 32, bands = 8, shingleN = 3)
+      finally sc.clearJobGroup()
+      org.apache.spark.graftbridge.Listeners.drain(sc)
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toSeq
+    }
+    sc.addSparkListener(listener)
+    try {
+      val a = groupsOf("ndgroup-a", 0L, Seq(1L -> "the quick brown fox jumps over the dog",
+        2L -> "completely unrelated text about shuffles"))
+      val b = groupsOf("ndgroup-b", 1L, Seq(3L -> "the quick brown fox jumps over the dog",
+        4L -> "another unrelated note about parquet footers"))
+      assert(a.nonEmpty && a.forall(_ == "ndgroup-a"), s"first trigger's job groups: $a")
+      assert(b.nonEmpty && b.forall(_ == "ndgroup-b"), s"second trigger's job groups: $b")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("neardup state compaction mid-ingest: later batches band against the base generation; replay idempotent") {
     implicit val sc = spark.sqlContext
     val mk = (id: Long, t: String) => (id, t)
