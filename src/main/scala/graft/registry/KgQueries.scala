@@ -1,7 +1,7 @@
 package graft
 package registry
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.api.{ClientApi, KnowledgeGraph}
@@ -59,16 +59,7 @@ private[graft] object KgQueries {
         ClientApi.getDiseaseIds(kg, "BUILDING"), minScore = 0.33)
         .orderBy("id")
     }, oracle =
-      """WITH pair AS (
-           SELECT c_mktsegment AS m, l_partkey AS p, sum(l_quantity) AS q
-           FROM lineitem
-           JOIN orders ON o_orderkey = l_orderkey
-           JOIN customer ON c_custkey = o_custkey
-           GROUP BY 1, 2),
-         edges AS (
-           SELECT 'DIS_' || m AS disease_id, 'TGT_' || p AS target_id,
-             round(q / sum(q) OVER (PARTITION BY p), 6) AS score
-           FROM pair),
+      s"""WITH $SqlKgEdges,
          kept AS (
            SELECT *, row_number() OVER
              (PARTITION BY target_id ORDER BY score DESC, disease_id) AS rn
@@ -172,22 +163,8 @@ private[graft] object KgQueries {
       ClientApi.getTargetDiseases(kg, targets, minScore = 0.1, excludeDiseaseIds = mains)
         .orderBy("id")
     }, oracle =
-      """WITH pair AS (
-           SELECT c_mktsegment AS m, l_partkey AS p, sum(l_quantity) AS q
-           FROM lineitem
-           JOIN orders ON o_orderkey = l_orderkey
-           JOIN customer ON c_custkey = o_custkey
-           GROUP BY 1, 2),
-         edges AS (
-           SELECT 'DIS_' || m AS disease_id, 'TGT_' || p AS target_id,
-             round(q / sum(q) OVER (PARTITION BY p), 6) AS score
-           FROM pair),
-         main_targets AS (
-           SELECT target_id FROM (
-             SELECT *, row_number() OVER
-               (PARTITION BY target_id ORDER BY score DESC, disease_id) AS rn
-             FROM edges WHERE disease_id = 'DIS_BUILDING' AND score >= 0.33)
-           WHERE rn = 1),
+      s"""WITH $SqlKgEdges,
+         $SqlKgMainTargets,
          expanded AS (
            SELECT e.target_id, e.disease_id, e.score FROM edges e
            WHERE e.target_id IN (SELECT target_id FROM main_targets)
@@ -247,13 +224,7 @@ private[graft] object KgQueries {
       val kg = kgIndexed(s, dir)
       ClientApi.getDrugFirstTarget(kg, kg.drugs.select("id")).orderBy("id")
     }, oracle =
-      """WITH pp AS (
-           SELECT l_suppkey, l_partkey, sum(l_quantity) AS q
-           FROM lineitem GROUP BY 1, 2),
-         rk AS (
-           SELECT *, row_number() OVER
-             (PARTITION BY l_suppkey ORDER BY q DESC, l_partkey) AS rnk
-           FROM pp)
+      s"""WITH $SqlKgDrugTopTarget
          SELECT 'DRG_' || l_suppkey AS id, 'TGT_' || l_partkey AS target_id
          FROM rk WHERE rnk = 1 ORDER BY id"""),
 
@@ -262,13 +233,7 @@ private[graft] object KgQueries {
       val kg = kgIndexed(s, dir)
       ClientApi.getDrugTargets(kg, kg.drugs.select("id")).orderBy("id")
     }, oracle =
-      """WITH pp AS (
-           SELECT l_suppkey, l_partkey, sum(l_quantity) AS q
-           FROM lineitem GROUP BY 1, 2),
-         rk AS (
-           SELECT *, row_number() OVER
-             (PARTITION BY l_suppkey ORDER BY q DESC, l_partkey) AS rnk
-           FROM pp),
+      s"""WITH $SqlKgDrugTopTarget,
          kept AS (
            SELECT *, row_number() OVER
              (PARTITION BY l_partkey ORDER BY rnk, 'DRG_' || l_suppkey) AS rn2
@@ -309,22 +274,8 @@ private[graft] object KgQueries {
         ClientApi.getDiseaseIds(kg, "BUILDING"), minScore = 0.33).select("id")
       ClientApi.getTargetPathways(kg, targets).orderBy("pathwayId")
     }, oracle =
-      """WITH pair AS (
-           SELECT c_mktsegment AS m, l_partkey AS p, sum(l_quantity) AS q
-           FROM lineitem
-           JOIN orders ON o_orderkey = l_orderkey
-           JOIN customer ON c_custkey = o_custkey
-           GROUP BY 1, 2),
-         edges AS (
-           SELECT 'DIS_' || m AS disease_id, 'TGT_' || p AS target_id,
-             round(q / sum(q) OVER (PARTITION BY p), 6) AS score
-           FROM pair),
-         main_targets AS (
-           SELECT target_id FROM (
-             SELECT *, row_number() OVER
-               (PARTITION BY target_id ORDER BY score DESC, disease_id) AS rn
-             FROM edges WHERE disease_id = 'DIS_BUILDING' AND score >= 0.33)
-           WHERE rn = 1),
+      s"""WITH $SqlKgEdges,
+         $SqlKgMainTargets,
          pw AS (
            SELECT 'TGT_' || p_partkey AS target_id,
              'PWY_' || p_brand AS "pathwayId",
@@ -359,14 +310,7 @@ private[graft] object KgQueries {
                }
              }
            }""")
-      res.select(col("id").as("disease_id"), col("name").as("disease_name"),
-          col("knownDrugs.count").as("n_rows"),
-          posexplode(col("knownDrugs.rows")).as(Seq("rn", "r")))
-        .select(col("disease_id"), col("disease_name"), col("n_rows"),
-          (col("rn") + 1).cast("long").as("rn"),
-          col("r.phase").as("phase"),
-          col("r.drug.id").as("drug_id"), col("r.drug.name").as("drug_name"))
-        .orderBy("rn")
+      knownDrugsRows(res)
     }, oracle = SqlKnownDrugsFold),
 
     // the query_opentargets.py example query, id constants aside
@@ -453,16 +397,7 @@ private[graft] object KgQueries {
       // score-descending rows with the executor's (−score, target_id)
       // tie-break; score is the q58-q63 convention (segment share of
       // the part's volume, round 6); unpaginated ⇒ default first page
-      """WITH pair AS (
-           SELECT c_mktsegment AS m, l_partkey AS p, sum(l_quantity) AS q
-           FROM lineitem
-           JOIN orders ON o_orderkey = l_orderkey
-           JOIN customer ON c_custkey = o_custkey
-           GROUP BY 1, 2),
-         edges AS (
-           SELECT 'DIS_' || m AS disease_id, 'TGT_' || p AS target_id,
-             round(q / sum(q) OVER (PARTITION BY p), 6) AS score
-           FROM pair),
+      s"""WITH $SqlKgEdges,
          mine AS (
            SELECT e.target_id, e.score,
              row_number() OVER (ORDER BY e.score DESC, e.target_id) AS rn
@@ -502,16 +437,11 @@ private[graft] object KgQueries {
       // tie-break; one target touches at most the 5 segments, so the
       // default page covers the whole connection here — the rn <= 25
       // guard mirrors the executor's contract anyway
-      """WITH pair AS (
-           SELECT c_mktsegment AS m, l_partkey AS p, sum(l_quantity) AS q
-           FROM lineitem
-           JOIN orders ON o_orderkey = l_orderkey
-           JOIN customer ON c_custkey = o_custkey
-           GROUP BY 1, 2),
+      s"""WITH $SqlKgPairs,
          edges AS (
            SELECT 'TGT_' || p AS target_id, 'DIS_' || m AS disease_id,
              m AS disease_name,
-             round(q / sum(q) OVER (PARTITION BY p), 6) AS score
+             $SqlKgScore
            FROM pair),
          mine AS (
            SELECT disease_id, disease_name, score,
@@ -691,15 +621,7 @@ private[graft] object KgQueries {
         .orderBy("rn"), oracle =
       // q152's fold, sliced to rows 11-20 (page index 1, size 10) with
       // the count still the TOTAL
-      """WITH kd AS (
-           SELECT 'DRG_' || l_suppkey AS drug_id,
-             'TGT_' || l_partkey AS tgt_id,
-             round(least(4.0, count(*) / 10.0), 1) AS phase
-           FROM lineitem
-           JOIN orders ON o_orderkey = l_orderkey
-           JOIN customer ON c_custkey = o_custkey
-           WHERE c_mktsegment = 'BUILDING'
-           GROUP BY 1, 2),
+      s"""WITH $SqlKgKnownDrugs,
          r AS (
            SELECT row_number() OVER (ORDER BY drug_id, tgt_id) AS rn0,
              phase, drug_id
@@ -809,16 +731,7 @@ private[graft] object KgQueries {
         .orderBy("rn"), oracle =
       // the q155 association device + the pushed-down threshold: the
       // filter precedes the rank cut, and count is the filtered total
-      """WITH pair AS (
-           SELECT c_mktsegment AS m, l_partkey AS p, sum(l_quantity) AS q
-           FROM lineitem
-           JOIN orders ON o_orderkey = l_orderkey
-           JOIN customer ON c_custkey = o_custkey
-           GROUP BY 1, 2),
-         edges AS (
-           SELECT 'DIS_' || m AS disease_id, 'TGT_' || p AS target_id,
-             round(q / sum(q) OVER (PARTITION BY p), 6) AS score
-           FROM pair),
+      s"""WITH $SqlKgEdges,
          mine AS (
            SELECT e.target_id, e.score,
              row_number() OVER (ORDER BY e.score DESC, e.target_id) AS rn
@@ -855,14 +768,7 @@ private[graft] object KgQueries {
                }
              }
            }""", Map("withRows" -> "true"))
-      res.select(col("id").as("disease_id"), col("name").as("disease_name"),
-          col("knownDrugs.count").as("n_rows"),
-          posexplode(col("knownDrugs.rows")).as(Seq("rn", "r")))
-        .select(col("disease_id"), col("disease_name"), col("n_rows"),
-          (col("rn") + 1).cast("long").as("rn"),
-          col("r.phase").as("phase"),
-          col("r.drug.id").as("drug_id"), col("r.drug.name").as("drug_name"))
-        .orderBy("rn")
+      knownDrugsRows(res)
     }, oracle = SqlKnownDrugsFold),
 
     // ---------------- GraphQL union object (inline fragments) ----------------
@@ -960,17 +866,7 @@ private[graft] object KgQueries {
         .orderBy("rn"), oracle =
       // facets: hits narrowed to one category, counts over the full
       // query scope riding every row
-      """WITH scope AS (
-           SELECT 'DIS_' || c_mktsegment AS id, c_mktsegment AS name,
-             'disease' AS entity
-           FROM (SELECT DISTINCT c_mktsegment FROM customer)
-           WHERE lower(c_mktsegment) LIKE '%r%'
-           UNION ALL
-           SELECT 'TGT_' || p_partkey, p_name, 'target'
-           FROM part WHERE lower(p_name) LIKE '%r%'
-           UNION ALL
-           SELECT 'DRG_' || s_suppkey, s_name, 'drug'
-           FROM supplier WHERE lower(s_name) LIKE '%r%'),
+      s"""WITH $SqlKgScope,
          h AS (SELECT * FROM scope WHERE entity = 'disease'),
          sel AS (
            SELECT id, name, entity,
@@ -1018,17 +914,7 @@ private[graft] object KgQueries {
             .getField("total").as("drug_cat_total"))
         .orderBy("rn"), oracle =
       // search aggregations: full-scope facet counts next to a page
-      """WITH scope AS (
-           SELECT 'DIS_' || c_mktsegment AS id, c_mktsegment AS name,
-             'disease' AS entity
-           FROM (SELECT DISTINCT c_mktsegment FROM customer)
-           WHERE lower(c_mktsegment) LIKE '%r%'
-           UNION ALL
-           SELECT 'TGT_' || p_partkey, p_name, 'target'
-           FROM part WHERE lower(p_name) LIKE '%r%'
-           UNION ALL
-           SELECT 'DRG_' || s_suppkey, s_name, 'drug'
-           FROM supplier WHERE lower(s_name) LIKE '%r%'),
+      s"""WITH $SqlKgScope,
          sel AS (
            SELECT id, entity,
              row_number() OVER (ORDER BY name, id) AS rn FROM scope)
@@ -1240,15 +1126,7 @@ private[graft] object KgQueries {
         .orderBy("rn")
     }, oracle =
       // q152's fold + the schema type names as constants at every level
-      """WITH kd AS (
-           SELECT 'DRG_' || l_suppkey AS drug_id,
-             'TGT_' || l_partkey AS tgt_id,
-             round(least(4.0, count(*) / 10.0), 1) AS phase
-           FROM lineitem
-           JOIN orders ON o_orderkey = l_orderkey
-           JOIN customer ON c_custkey = o_custkey
-           WHERE c_mktsegment = 'BUILDING'
-           GROUP BY 1, 2),
+      s"""WITH $SqlKgKnownDrugs,
          r AS (
            SELECT row_number() OVER (ORDER BY drug_id, tgt_id) AS rn,
              phase, drug_id
@@ -1289,14 +1167,7 @@ private[graft] object KgQueries {
                }
              }
            }""", Map("efoId" -> "DIS_BUILDING"))
-      res.select(col("id").as("disease_id"), col("name").as("disease_name"),
-          col("knownDrugs.count").as("n_rows"),
-          posexplode(col("knownDrugs.rows")).as(Seq("rn", "r")))
-        .select(col("disease_id"), col("disease_name"), col("n_rows"),
-          (col("rn") + 1).cast("long").as("rn"),
-          col("r.phase").as("phase"),
-          col("r.drug.id").as("drug_id"), col("r.drug.name").as("drug_name"))
-        .orderBy("rn")
+      knownDrugsRows(res)
     }, oracle =
       // variables resolve at parse time to exactly q152's AST → the
       // same oracle verbatim
@@ -1457,16 +1328,7 @@ private[graft] object KgQueries {
       // evidences — the q155 association derivation filtered to the
       // requested targets; count before the size cut, rows ranked
       // (score desc, evidence id) like the executor's sort keys
-      """WITH pair AS (
-           SELECT c_mktsegment AS m, l_partkey AS p, sum(l_quantity) AS q
-           FROM lineitem
-           JOIN orders ON o_orderkey = l_orderkey
-           JOIN customer ON c_custkey = o_custkey
-           GROUP BY 1, 2),
-         edges AS (
-           SELECT 'DIS_' || m AS disease_id, 'TGT_' || p AS target_id,
-             round(q / sum(q) OVER (PARTITION BY p), 6) AS score
-           FROM pair),
+      s"""WITH $SqlKgEdges,
          ev AS (
            SELECT 'EVD_' || disease_id || '_' || target_id AS eid,
              target_id, score
@@ -1544,4 +1406,19 @@ private[graft] object KgQueries {
          FROM rk LEFT JOIN part p ON p.p_partkey = rk.vec_id
          ORDER BY rn"""),
   )
+
+  /** A disease's knownDrugs connection (id, name, count, rows of phase
+    * and drug id/name) as one row per drug, in page order and numbered
+    * from 1: q152's fold, also served through directives (q221) and a
+    * declared variable (q205). The oracle is `SqlKnownDrugsFold`.
+    */
+  private def knownDrugsRows(res: DataFrame): DataFrame =
+    res.select(col("id").as("disease_id"), col("name").as("disease_name"),
+        col("knownDrugs.count").as("n_rows"),
+        posexplode(col("knownDrugs.rows")).as(Seq("rn", "r")))
+      .select(col("disease_id"), col("disease_name"), col("n_rows"),
+        (col("rn") + 1).cast("long").as("rn"),
+        col("r.phase").as("phase"),
+        col("r.drug.id").as("drug_id"), col("r.drug.name").as("drug_name"))
+      .orderBy("rn")
 }

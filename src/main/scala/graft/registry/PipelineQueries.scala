@@ -1,7 +1,7 @@
 package graft
 package registry
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
@@ -215,32 +215,10 @@ private[graft] object PipelineQueries {
           sum(TextFns.tokenCount(col("text")).cast("long")).as("total_tokens"))
         .orderBy("lang")
     }, oracle =
-      """WITH RECURSIVE toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         inter AS (
-           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS i
-           FROM ex l JOIN ex r ON l.g = r.g AND l.doc_id < r.doc_id
-           GROUP BY 1, 2),
-         sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         pairs AS (
-           SELECT id_a, id_b FROM inter
-           JOIN sz sa ON sa.doc_id = id_a
-           JOIN sz sb ON sb.doc_id = id_b
-           WHERE round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) >= 0.6),
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(id, lbl) AS (
-           SELECT DISTINCT src, src FROM edges
-           UNION
-           SELECT e.src, r.lbl FROM edges e JOIN reach r ON r.id = e.dst),
+      s"""WITH RECURSIVE $SqlDocShingles,
+         $SqlShingleOverlap,
+         $SqlJaccardPairs,
+         $SqlPairComponents,
          labels AS (SELECT id, min(lbl) AS canonical_id FROM reach GROUP BY id),
          dup_drop AS (SELECT id FROM labels WHERE id <> canonical_id),
          bex AS (SELECT doc_id AS bench_id, g FROM ex WHERE doc_id % 50 = 0),
@@ -742,15 +720,9 @@ private[graft] object PipelineQueries {
       val media = Multimodal.mediaFromDocuments(t(s, dir).documents)
       val hashes = Multimodal.imageHashes(s, media)
       val pairs = Multimodal.imageNearDups(hashes, maxHamming = 3)
-      val parts = pairs.select(col("id_a").as("media_id"))
-        .unionByName(pairs.select(col("id_b").as("media_id")))
-        .groupBy("media_id").agg(count(lit(1)).as("n_neardups"))
-      hashes.join(parts, Seq("media_id"), "left")
-        .select(col("media_id"), col("h1"), col("h2"),
-          coalesce(col("n_neardups"), lit(0L)).as("n_neardups"))
-        .orderBy("media_id")
+      nearDupCounts(hashes, pairs)
     }, oracle =
-      """WITH src AS (
+      s"""WITH src AS (
            SELECT doc_id, text, octet_length(encode(text)) AS len,
              greatest(1, octet_length(encode(text)) // 48) AS h
            FROM documents WHERE doc_id % 3 = 0),
@@ -774,30 +746,7 @@ private[graft] object PipelineQueries {
                    CAST(sum(gray) AS BIGINT) AS bs,
                    CAST(count(*) AS BIGINT) AS bn
                  FROM g GROUP BY 1, 2),
-         bits AS (
-           SELECT blk.doc_id, CAST(b AS BIGINT) AS b,
-             CASE WHEN bs * nb.n > nb.tot * bn THEN 1 ELSE 0 END AS bit
-           FROM blk JOIN nb ON blk.doc_id = nb.doc_id),
-         hsh AS (
-           SELECT doc_id,
-             CAST(coalesce(sum(CASE WHEN b < 32
-               THEN bit * (1::BIGINT << CAST(b AS INT)) END), 0) AS BIGINT) AS h1,
-             CAST(coalesce(sum(CASE WHEN b >= 32
-               THEN bit * (1::BIGINT << CAST(b - 32 AS INT)) END), 0) AS BIGINT) AS h2
-           FROM bits GROUP BY 1),
-         prs AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM hsh a JOIN hsh b ON a.doc_id < b.doc_id
-           WHERE bit_count(xor(a.h1, b.h1)) + bit_count(xor(a.h2, b.h2)) <= 3),
-         cnt AS (
-           SELECT doc_id, count(*) AS nd
-           FROM (SELECT id_a AS doc_id FROM prs
-                 UNION ALL SELECT id_b FROM prs)
-           GROUP BY 1)
-         SELECT h.doc_id AS media_id, h1, h2,
-           CAST(coalesce(c.nd, 0) AS BIGINT) AS n_neardups
-         FROM hsh h LEFT JOIN cnt c ON h.doc_id = c.doc_id
-         ORDER BY media_id"""),
+         $SqlHashNearDups"""),
 
     // ---------------- continuous-ingest capstone ----------------
     // The round's incremental family composed as ONE batch-ingest
@@ -846,7 +795,7 @@ private[graft] object PipelineQueries {
           round(col("p_keep"), 6).as("p_keep"))
         .orderBy("doc_id")
     }, oracle =
-      """WITH fpt AS (
+      s"""WITH fpt AS (
            SELECT doc_id, md5(trim(regexp_replace(regexp_replace(
              lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS fp
            FROM documents),
@@ -858,15 +807,7 @@ private[graft] object PipelineQueries {
              FROM (SELECT * FROM fpt WHERE doc_id % 4 = 3) b
              ANTI JOIN seen s ON b.fp = s.fp)
            WHERE rn = 1),
-         toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
+         $SqlDocShingles,
          sz AS (SELECT doc_id, len(s) AS n FROM sh),
          ninter AS (
            SELECT l.doc_id AS id_l, r.doc_id AS id_r, count(*) AS i
@@ -978,15 +919,9 @@ private[graft] object PipelineQueries {
       val media = Multimodal.mediaFromDocuments(t(s, dir).documents)
       val hashes = Multimodal.audioHashes(s, media)
       val pairs = Multimodal.hammingNearDups(hashes, maxHamming = 3)
-      val parts = pairs.select(col("id_a").as("media_id"))
-        .unionByName(pairs.select(col("id_b").as("media_id")))
-        .groupBy("media_id").agg(count(lit(1)).as("n_neardups"))
-      hashes.join(parts, Seq("media_id"), "left")
-        .select(col("media_id"), col("h1"), col("h2"),
-          coalesce(col("n_neardups"), lit(0L)).as("n_neardups"))
-        .orderBy("media_id")
+      nearDupCounts(hashes, pairs)
     }, oracle =
-      """WITH src AS (
+      s"""WITH src AS (
            SELECT doc_id, text, octet_length(encode(text)) AS len,
              greatest(1, octet_length(encode(text)) // 2) AS n
            FROM documents WHERE doc_id % 3 = 1),
@@ -1005,30 +940,7 @@ private[graft] object PipelineQueries {
                    CAST(sum(e) AS BIGINT) AS bs,
                    CAST(count(*) AS BIGINT) AS bn
                  FROM smp GROUP BY 1, 2),
-         bits AS (
-           SELECT blk.doc_id, CAST(b AS BIGINT) AS b,
-             CASE WHEN bs * nb.n > nb.tot * bn THEN 1 ELSE 0 END AS bit
-           FROM blk JOIN nb ON blk.doc_id = nb.doc_id),
-         hsh AS (
-           SELECT doc_id,
-             CAST(coalesce(sum(CASE WHEN b < 32
-               THEN bit * (1::BIGINT << CAST(b AS INT)) END), 0) AS BIGINT) AS h1,
-             CAST(coalesce(sum(CASE WHEN b >= 32
-               THEN bit * (1::BIGINT << CAST(b - 32 AS INT)) END), 0) AS BIGINT) AS h2
-           FROM bits GROUP BY 1),
-         prs AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM hsh a JOIN hsh b ON a.doc_id < b.doc_id
-           WHERE bit_count(xor(a.h1, b.h1)) + bit_count(xor(a.h2, b.h2)) <= 3),
-         cnt AS (
-           SELECT doc_id, count(*) AS nd
-           FROM (SELECT id_a AS doc_id FROM prs
-                 UNION ALL SELECT id_b FROM prs)
-           GROUP BY 1)
-         SELECT h.doc_id AS media_id, h1, h2,
-           CAST(coalesce(c.nd, 0) AS BIGINT) AS n_neardups
-         FROM hsh h LEFT JOIN cnt c ON h.doc_id = c.doc_id
-         ORDER BY media_id"""),
+         $SqlHashNearDups"""),
 
     // ---------------- schema-evolution merged read ----------------
     // A 100 TB lake has generations of writers: the fixture holds two
@@ -1104,15 +1016,7 @@ private[graft] object PipelineQueries {
       val vals = DictPatterns.map(p => s"('$p')").mkString(",")
       s"""WITH RECURSIVE
          pats(pattern) AS (VALUES $vals),
-         m(doc_id, lang, pattern, pos) AS (
-           SELECT d.doc_id, d.lang, p.pattern, strpos(d.text, p.pattern)
-           FROM documents d CROSS JOIN pats p
-           WHERE strpos(d.text, p.pattern) > 0
-           UNION ALL
-           SELECT m.doc_id, m.lang, m.pattern,
-             m.pos + strpos(substr(d.text, m.pos + 1), m.pattern)
-           FROM m JOIN documents d ON d.doc_id = m.doc_id
-           WHERE strpos(substr(d.text, m.pos + 1), m.pattern) > 0),
+         $SqlDictMatches,
          tg AS (SELECT lang, CAST(count(*) AS BIGINT) AS blocklist_hits
                 FROM m GROUP BY lang),
          d AS (
@@ -1207,25 +1111,10 @@ private[graft] object PipelineQueries {
     }, oracle =
       // the q194 full-corpus BM25 relation (the fold must not change a
       // single posting row), plus the fold contracts pinned TRUE
-      """WITH tok AS (
+      s"""WITH tok AS (
            SELECT doc_id, unnest(string_split(text, ' ')) AS term
            FROM documents WHERE doc_id % 2 = 0),
-         post AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-         dl AS (SELECT doc_id, sum(tf) AS dl FROM post GROUP BY 1),
-         stats AS (SELECT count(*) AS nd,
-             CAST(sum(dl) AS DOUBLE)/count(*) AS avgdl FROM dl),
-         idf AS (SELECT term, avgdl,
-             CAST(floor(ln((nd - df + 0.5e0)/(df + 0.5e0) + 1.0e0)*1e4 + 0.5e0)
-               AS BIGINT) AS idf4
-           FROM (SELECT term, count(*) AS df FROM post
-                 WHERE term IN ('dup','spark','window') GROUP BY 1)
-           CROSS JOIN stats),
-         contrib AS (
-           SELECT p.doc_id,
-             i.idf4 * CAST(floor(p.tf*2.2e0/(p.tf + 1.2e0*(0.25e0 + 0.75e0*d.dl/i.avgdl))
-               *1e6 + 0.5e0) AS BIGINT) AS c
-           FROM post p JOIN dl d USING (doc_id) JOIN idf i USING (term)
-           WHERE p.term IN ('dup','spark','window'))
+         $SqlBm25Contrib
          SELECT doc_id, count(*) AS n_terms, CAST(sum(c) AS DOUBLE)/1e10 AS bm25,
            TRUE AS folded_identical, TRUE AS files_collapsed
          FROM contrib GROUP BY doc_id ORDER BY bm25 DESC, doc_id LIMIT 10"""),
@@ -1243,28 +1132,8 @@ private[graft] object PipelineQueries {
       // per-column profile re-derived column by column (the engine does
       // it in ONE aggregation; the oracle's 5-way union is the check,
       // not the plan)
-      """SELECT * FROM (
-           SELECT 'doc_id' AS col_name, count(*) AS n_rows,
-             count(*) - count(doc_id) AS n_null,
-             count(DISTINCT doc_id) AS n_distinct,
-             CAST(min(doc_id) AS VARCHAR) AS min_s,
-             CAST(max(doc_id) AS VARCHAR) AS max_s FROM documents
-           UNION ALL
-           SELECT 'lang', count(*), count(*) - count(lang),
-             count(DISTINCT lang), CAST(min(lang) AS VARCHAR),
-             CAST(max(lang) AS VARCHAR) FROM documents
-           UNION ALL
-           SELECT 'n_chars', count(*), count(*) - count(n_chars),
-             count(DISTINCT n_chars), CAST(min(n_chars) AS VARCHAR),
-             CAST(max(n_chars) AS VARCHAR) FROM documents
-           UNION ALL
-           SELECT 'source', count(*), count(*) - count(source),
-             count(DISTINCT source), CAST(min(source) AS VARCHAR),
-             CAST(max(source) AS VARCHAR) FROM documents
-           UNION ALL
-           SELECT 'text', count(*), count(*) - count(text),
-             count(DISTINCT text), CAST(min(text) AS VARCHAR),
-             CAST(max(text) AS VARCHAR) FROM documents)
+      s"""SELECT * FROM (
+           ${SqlColumnProfile("documents")})
          ORDER BY col_name"""),
 
     // the profile as a GATE: reference profile vs a corrupted
@@ -1284,55 +1153,15 @@ private[graft] object PipelineQueries {
     }, oracle =
       // both profiles replayed column by column, then the gate's
       // rounded-rate / ratio / range arithmetic verbatim
-      """WITH corr AS (
+      s"""WITH corr AS (
            SELECT doc_id,
              CASE WHEN doc_id % 10 = 0 THEN NULL ELSE lang END AS lang,
              least(n_chars, 100) AS n_chars, source, text
            FROM documents),
          pa AS (
-           SELECT 'doc_id' AS col_name, count(*) AS n_rows,
-             count(*) - count(doc_id) AS n_null,
-             count(DISTINCT doc_id) AS n_distinct,
-             CAST(min(doc_id) AS VARCHAR) AS min_s,
-             CAST(max(doc_id) AS VARCHAR) AS max_s FROM documents
-           UNION ALL
-           SELECT 'lang', count(*), count(*) - count(lang),
-             count(DISTINCT lang), CAST(min(lang) AS VARCHAR),
-             CAST(max(lang) AS VARCHAR) FROM documents
-           UNION ALL
-           SELECT 'n_chars', count(*), count(*) - count(n_chars),
-             count(DISTINCT n_chars), CAST(min(n_chars) AS VARCHAR),
-             CAST(max(n_chars) AS VARCHAR) FROM documents
-           UNION ALL
-           SELECT 'source', count(*), count(*) - count(source),
-             count(DISTINCT source), CAST(min(source) AS VARCHAR),
-             CAST(max(source) AS VARCHAR) FROM documents
-           UNION ALL
-           SELECT 'text', count(*), count(*) - count(text),
-             count(DISTINCT text), CAST(min(text) AS VARCHAR),
-             CAST(max(text) AS VARCHAR) FROM documents),
+           ${SqlColumnProfile("documents")}),
          pb AS (
-           SELECT 'doc_id' AS col_name, count(*) AS n_rows,
-             count(*) - count(doc_id) AS n_null,
-             count(DISTINCT doc_id) AS n_distinct,
-             CAST(min(doc_id) AS VARCHAR) AS min_s,
-             CAST(max(doc_id) AS VARCHAR) AS max_s FROM corr
-           UNION ALL
-           SELECT 'lang', count(*), count(*) - count(lang),
-             count(DISTINCT lang), CAST(min(lang) AS VARCHAR),
-             CAST(max(lang) AS VARCHAR) FROM corr
-           UNION ALL
-           SELECT 'n_chars', count(*), count(*) - count(n_chars),
-             count(DISTINCT n_chars), CAST(min(n_chars) AS VARCHAR),
-             CAST(max(n_chars) AS VARCHAR) FROM corr
-           UNION ALL
-           SELECT 'source', count(*), count(*) - count(source),
-             count(DISTINCT source), CAST(min(source) AS VARCHAR),
-             CAST(max(source) AS VARCHAR) FROM corr
-           UNION ALL
-           SELECT 'text', count(*), count(*) - count(text),
-             count(DISTINCT text), CAST(min(text) AS VARCHAR),
-             CAST(max(text) AS VARCHAR) FROM corr),
+           ${SqlColumnProfile("corr")}),
          d AS (
            SELECT pa.col_name, 'common' AS status,
              round(CAST(pa.n_null AS DOUBLE)/pa.n_rows, 6) AS null_rate_a,
@@ -1349,4 +1178,18 @@ private[graft] object PipelineQueries {
              OR range_changed) AS drifted
          FROM d ORDER BY col_name"""),
   )
+
+  /** Each media hash (media_id, h1, h2) with its number of near-dup
+    * partners in `pairs` (id_a, id_b), 0 for none — the image and audio
+    * hash rows (q188, q190).
+    */
+  private def nearDupCounts(hashes: DataFrame, pairs: DataFrame): DataFrame = {
+    val parts = pairs.select(col("id_a").as("media_id"))
+      .unionByName(pairs.select(col("id_b").as("media_id")))
+      .groupBy("media_id").agg(count(lit(1)).as("n_neardups"))
+    hashes.join(parts, Seq("media_id"), "left")
+      .select(col("media_id"), col("h1"), col("h2"),
+        coalesce(col("n_neardups"), lit(0L)).as("n_neardups"))
+      .orderBy("media_id")
+  }
 }

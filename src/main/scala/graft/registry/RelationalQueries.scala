@@ -265,10 +265,7 @@ private[graft] object RelationalQueries {
         .agg(round(avg(col("k")), 4).as("avg_k"), count(lit(1)).as("n"))
         .orderBy("event_type")
     }, oracle =
-      """SELECT event_type,
-         round(avg(CAST(json_extract_string(props,'$.k') AS INT)),4) AS avg_k,
-         count(*) AS n
-         FROM events GROUP BY event_type ORDER BY event_type"""),
+      SqlEventAvgK),
 
     // ---------------- SO4 union-all accumulate ----------------
     Query("q18_union_status", (s, dir) => {
@@ -417,10 +414,7 @@ private[graft] object RelationalQueries {
         .agg(round(avg(col("j.k")), 4).as("avg_k"), count(lit(1)).as("n"))
         .orderBy("event_type")
     }, oracle =
-      """SELECT event_type,
-         round(avg(CAST(json_extract_string(props,'$.k') AS INT)),4) AS avg_k,
-         count(*) AS n
-         FROM events GROUP BY event_type ORDER BY event_type"""),
+      SqlEventAvgK),
 
     // ---------------- O4 pagination: page 2 by relevance ----------------
     // offset+limit (not a global row_number window): Spark plans this

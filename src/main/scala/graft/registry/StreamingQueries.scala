@@ -408,28 +408,7 @@ private[graft] object StreamingQueries {
     }, oracle =
       // stream near-dup envelope = q31's oracle: rows are the exact
       // pair relation, the stream-accumulated LSH verdicts pinned TRUE
-      """WITH toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         inter AS (
-           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS i
-           FROM ex l JOIN ex r ON l.g = r.g AND l.doc_id < r.doc_id
-           GROUP BY 1, 2),
-         sz AS (SELECT doc_id, len(s) AS n FROM sh)
-         SELECT id_a, id_b,
-           round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) AS jaccard,
-           TRUE AS subset_of_exact, TRUE AS recall_ok
-         FROM inter
-         JOIN sz sa ON sa.doc_id = id_a
-         JOIN sz sb ON sb.doc_id = id_b
-         WHERE round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) >= 0.6
-         ORDER BY id_a, id_b"""),
+      SqlJaccardEnvelope),
 
     // ---------------- streaming search-index maintenance ----------------
     // q194's stream twin: the corpus arrives as a 4-file backlog, one
@@ -456,26 +435,7 @@ private[graft] object StreamingQueries {
         s.read.parquet(s"${r.dir}/idx").drop("batch"), "doc_id",
         Seq("dup", "spark", "window"), k = 10)
     }, oracle =
-      """WITH tok AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-         post AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-         dl AS (SELECT doc_id, sum(tf) AS dl FROM post GROUP BY 1),
-         stats AS (SELECT count(*) AS nd,
-             CAST(sum(dl) AS DOUBLE)/count(*) AS avgdl FROM dl),
-         idf AS (SELECT term, avgdl,
-             CAST(floor(ln((nd - df + 0.5e0)/(df + 0.5e0) + 1.0e0)*1e4 + 0.5e0)
-               AS BIGINT) AS idf4
-           FROM (SELECT term, count(*) AS df FROM post
-                 WHERE term IN ('dup','spark','window') GROUP BY 1)
-           CROSS JOIN stats),
-         contrib AS (
-           SELECT p.doc_id,
-             i.idf4 * CAST(floor(p.tf*2.2e0/(p.tf + 1.2e0*(0.25e0 + 0.75e0*d.dl/i.avgdl))
-               *1e6 + 0.5e0) AS BIGINT) AS c
-           FROM post p JOIN dl d USING (doc_id) JOIN idf i USING (term)
-           WHERE p.term IN ('dup','spark','window'))
-         SELECT doc_id, count(*) AS n_terms, CAST(sum(c) AS DOUBLE)/1e10 AS bm25
-         FROM contrib GROUP BY doc_id ORDER BY bm25 DESC, doc_id LIMIT 10"""),
+      SqlBm25TopK),
 
     // ---------------- streaming SQ8 vector ingest ----------------
     // The continuous-ingest family's VECTOR member (q195 = index,
@@ -585,10 +545,7 @@ private[graft] object StreamingQueries {
                (PARTITION BY fp ORDER BY doc_id) AS rn
              FROM fpt)
            WHERE rn = 1),
-         toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
+         $SqlDocTokens,
          shng AS (
            SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
              i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
@@ -619,40 +576,7 @@ private[graft] object StreamingQueries {
              m.pos + strpos(substr(d.text, m.pos + 1), m.pattern)
            FROM m JOIN documents d ON d.doc_id = m.doc_id
            WHERE strpos(substr(d.text, m.pos + 1), m.pattern) > 0),
-         ml AS MATERIALIZED (
-           SELECT doc_id,
-             list({'s': CAST(pos AS BIGINT), 'nl': -CAST(len(pattern) AS BIGINT)}
-               ORDER BY pos, -len(pattern)) AS ms
-           FROM m GROUP BY doc_id),
-         sel AS (
-           SELECT doc_id, ms,
-             CAST([] AS STRUCT(s BIGINT, nl BIGINT)[]) AS picks,
-             CAST(1 AS BIGINT) AS cur
-           FROM ml
-           UNION ALL
-           SELECT doc_id, ms, list_append(picks, nxt), nxt.s - nxt.nl
-           FROM (SELECT doc_id, ms, picks, cur,
-                   list_filter(ms, x -> x.s >= cur)[1] AS nxt
-                 FROM sel)
-           WHERE nxt IS NOT NULL),
-         fin AS MATERIALIZED (
-           SELECT doc_id, arg_max(picks, len(picks)) AS picks
-           FROM sel GROUP BY doc_id),
-         px AS (
-           SELECT f.doc_id, t.e['i'] AS i, t.e['s'] AS s, -t.e['nl'] AS l
-           FROM fin f, unnest(list_transform(range(1, len(picks) + 1), j ->
-             {'i': j, 's': picks[j].s, 'nl': picks[j].nl})) t(e)),
-         seg AS (
-           SELECT p.doc_id, p.i, p.s, p.l,
-             coalesce(lag(p.s + p.l) OVER (PARTITION BY p.doc_id ORDER BY p.i), 1) AS pe
-           FROM px p),
-         red AS (
-           SELECT s.doc_id,
-             string_agg(substr(d.text, CAST(s.pe AS INT), CAST(s.s - s.pe AS INT)) || '[X]', ''
-               ORDER BY s.i) || substr(max(d.text), CAST(max(s.s + s.l) AS INT)) AS redacted,
-             count(*) AS n_red
-           FROM seg s JOIN documents d ON d.doc_id = s.doc_id
-           GROUP BY s.doc_id),
+         $SqlDictRedaction,
          d2 AS (
            SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
              CAST(unnest(embedding) AS DOUBLE) AS x

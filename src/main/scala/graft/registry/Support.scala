@@ -448,42 +448,243 @@ FROM pr$iters p JOIN v$iters v USING (piece)
 ORDER BY n_uses DESC, piece"""
   }
 
-  /** The binary two-stage serve replayed (thresholds + bits + Hamming
-    * cut + cosine re-rank) — shared by q217 (ad-hoc), q218 (persisted
-    * index, spec-pinned bit-identical) and q225 (the streamed code
-    * table, bit-identical under the same frozen thresholds).
-    */
-  val SqlBinaryTwoStage =
-    """WITH d AS (
-           SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings),
-         t AS (SELECT dim, (min(x) + max(x)) / 2 AS thr FROM d GROUP BY dim),
-         b AS (SELECT vec_id, d.dim,
-                 CASE WHEN x > thr THEN 1 ELSE 0 END AS bit
-               FROM d JOIN t ON d.dim = t.dim),
-         q AS (SELECT dim, bit AS qb FROM b WHERE vec_id = 0),
-         h AS (SELECT b.vec_id,
-                 CAST(sum(CASE WHEN b.bit <> q.qb THEN 1 ELSE 0 END) AS BIGINT)
-                   AS hamming
-               FROM b JOIN q ON b.dim = q.dim
-               WHERE b.vec_id <> 0
-               GROUP BY b.vec_id
-               ORDER BY hamming ASC, b.vec_id LIMIT 50),
-         qv AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-         SELECT h.vec_id,
-           round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-             CAST(qv.qe AS DOUBLE[])), 6) AS cosine,
-           h.hamming
-         FROM h JOIN embeddings e ON e.vec_id = h.vec_id CROSS JOIN qv
-         ORDER BY cosine DESC, h.vec_id LIMIT 10"""
+  // Shared oracle steps. Each text is one or more CTEs (or a whole
+  // oracle) written out once, byte for byte as every oracle that uses
+  // it renders it, and composed by interpolation. A step is defined
+  // before the texts that use it: a later val would render null.
 
-  /** NB training + inference replayed — shared by q219 (single-pass
-    * train) and q227 (the incremental count-generation model, whose
-    * summed generations equal the union's counts bit for bit).
+  /** A document's normalised tokens `toks(doc_id, ts)`: lower-cased,
+    * every non-alphanumeric blanked, space runs collapsed.
     */
-  val SqlNbPredict =
-    """WITH tr AS (SELECT doc_id, text, lang FROM documents
+  val SqlDocTokens =
+    """toks AS (
+           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
+             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
+           FROM documents)"""
+
+  /** `toks` → `sh(doc_id, s)`, each document's distinct word 3-shingle
+    * set ([[JaccardShingleN]]), → `ex(doc_id, g)`, one row per shingle —
+    * the exact side of the whole n-gram Jaccard family.
+    */
+  val SqlDocShingles =
+    s"""$SqlDocTokens,
+         sh AS (
+           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
+             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
+           FROM toks WHERE len(ts) >= 3),
+         ex AS (SELECT doc_id, unnest(s) AS g FROM sh)"""
+
+  /** Over `ex` and `sh`: `inter(id_a, id_b, i)`, the shared-shingle count
+    * of each pair id_a < id_b, and `sz(doc_id, n)`, each set's size.
+    */
+  val SqlShingleOverlap =
+    """inter AS (
+           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS i
+           FROM ex l JOIN ex r ON l.g = r.g AND l.doc_id < r.doc_id
+           GROUP BY 1, 2),
+         sz AS (SELECT doc_id, len(s) AS n FROM sh)"""
+
+  /** `pairs(id_a, id_b)`: the `inter` pairs whose rounded Jaccard
+    * |a∩b| / (|a|+|b|−|a∩b|) is at least 0.6, the corpus's dedup threshold.
+    */
+  val SqlJaccardPairs =
+    """pairs AS (
+           SELECT id_a, id_b FROM inter
+           JOIN sz sa ON sa.doc_id = id_a
+           JOIN sz sb ON sb.doc_id = id_b
+           WHERE round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) >= 0.6)"""
+
+  /** Connected components over `pairs` (needs `WITH RECURSIVE`): `edges`
+    * both ways, `reach(id, lbl)` every label reachable from each id; an
+    * id's component label is its min(lbl).
+    */
+  val SqlPairComponents =
+    """edges AS (
+           SELECT id_a AS src, id_b AS dst FROM pairs
+           UNION SELECT id_b, id_a FROM pairs),
+         reach(id, lbl) AS (
+           SELECT DISTINCT src, src FROM edges
+           UNION
+           SELECT e.src, r.lbl FROM edges e JOIN reach r ON r.id = e.dst)"""
+
+  /** The exact Jaccard ≥ 0.6 pair rows with the LSH verdicts pinned
+    * TRUE — q31's oracle and its streaming twin's (q199).
+    */
+  val SqlJaccardEnvelope =
+    s"""WITH $SqlDocShingles,
+         $SqlShingleOverlap
+         SELECT id_a, id_b,
+           round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) AS jaccard,
+           TRUE AS subset_of_exact, TRUE AS recall_ok
+         FROM inter
+         JOIN sz sa ON sa.doc_id = id_a
+         JOIN sz sb ON sb.doc_id = id_b
+         WHERE round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) >= 0.6
+         ORDER BY id_a, id_b"""
+
+  /** BM25 (k1 1.2, b 0.75) over `tok(doc_id, term)`: `post` term
+    * frequencies, `dl` lengths, `stats`, the fixed-point `idf` and
+    * `contrib(doc_id, c)` per hit of the query terms dup, spark and
+    * window. Fractional literals carry e0 so DuckDB types them DOUBLE
+    * (a bare 2.2 is DECIMAL, and tf*DECIMAL is not the IEEE product Spark
+    * computes); the fixed-point floors make both engines' sums exact.
+    */
+  val SqlBm25Contrib =
+    """post AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
+         dl AS (SELECT doc_id, sum(tf) AS dl FROM post GROUP BY 1),
+         stats AS (SELECT count(*) AS nd,
+             CAST(sum(dl) AS DOUBLE)/count(*) AS avgdl FROM dl),
+         idf AS (SELECT term, avgdl,
+             CAST(floor(ln((nd - df + 0.5e0)/(df + 0.5e0) + 1.0e0)*1e4 + 0.5e0)
+               AS BIGINT) AS idf4
+           FROM (SELECT term, count(*) AS df FROM post
+                 WHERE term IN ('dup','spark','window') GROUP BY 1)
+           CROSS JOIN stats),
+         contrib AS (
+           SELECT p.doc_id,
+             i.idf4 * CAST(floor(p.tf*2.2e0/(p.tf + 1.2e0*(0.25e0 + 0.75e0*d.dl/i.avgdl))
+               *1e6 + 0.5e0) AS BIGINT) AS c
+           FROM post p JOIN dl d USING (doc_id) JOIN idf i USING (term)
+           WHERE p.term IN ('dup','spark','window'))"""
+
+  /** The BM25 top-10 over the whole corpus — the batch index (q137),
+    * its append-built twin (q194) and the streamed index (q195).
+    */
+  val SqlBm25TopK =
+    s"""WITH tok AS (
+           SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
+         $SqlBm25Contrib
+         SELECT doc_id, count(*) AS n_terms, CAST(sum(c) AS DOUBLE)/1e10 AS bm25
+         FROM contrib GROUP BY doc_id ORDER BY bm25 DESC, doc_id LIMIT 10"""
+
+  /** `tok(doc_id, token)` over space-split text, the `freq` and `tot`
+    * counts, and `lp(token, lp4)`: each token's surprisal −ln p in fixed
+    * point 1e-4 (q84, q203).
+    */
+  val SqlUnigramLogProbs =
+    """tok AS (
+           SELECT doc_id, unnest(string_split(text,' ')) AS token FROM documents),
+         freq AS (SELECT token, count(*) AS c FROM tok GROUP BY 1),
+         tot AS (SELECT count(*) AS n FROM tok),
+         lp AS (SELECT token,
+             CAST(floor(-ln(CAST(c AS DOUBLE)/t.n)*1e4 + 0.5) AS BIGINT) AS lp4
+           FROM freq CROSS JOIN tot t)"""
+
+  /** Gear-style content-defined chunking over `toks(doc_id, ts)`: `wds`
+    * one word per position, `flg` the boundary bit, `cid(doc_id, pos, w,
+    * ci)` each word's chunk index (q185, q233).
+    */
+  val SqlWordChunks =
+    """wds0 AS (
+           SELECT doc_id, unnest(range(1, len(ts)+1)) AS pos, ts FROM toks),
+         wds AS (
+           SELECT doc_id, CAST(pos AS BIGINT) AS pos, ts[pos] AS w FROM wds0),
+         flg AS (
+           SELECT doc_id, pos, w,
+             CASE WHEN ('0x' || substr(md5(w), 1, 2))::BIGINT < 32
+                  THEN 1 ELSE 0 END AS b
+           FROM wds),
+         cid AS (
+           SELECT doc_id, pos, w,
+             COALESCE(sum(b) OVER (PARTITION BY doc_id ORDER BY pos
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS ci
+           FROM flg)"""
+
+  /** Duplicate spans `iv(doc_id, s, e)` merged into islands (`op` → `reg`
+    * → `agg`), then per document of `w(doc_id, ws)`: words, regions,
+    * duplicate words, their ppm and the md5 of the text without them
+    * (q180, q181; the caller adds its filter and order).
+    */
+  val SqlIslandMerge =
+    """op AS (SELECT doc_id, s, e,
+                       CASE WHEN s > coalesce(max(e) OVER (PARTITION BY doc_id
+                              ORDER BY s, e
+                              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+                            CAST(-2 AS BIGINT)) + 1 THEN 1 ELSE 0 END AS opens
+                FROM iv),
+         reg AS (SELECT doc_id, min(s) AS rs, max(e) AS re
+                 FROM (SELECT doc_id, s, e,
+                              sum(opens) OVER (PARTITION BY doc_id
+                                ORDER BY s, e) AS isl
+                       FROM op)
+                 GROUP BY doc_id, isl),
+         agg AS (SELECT doc_id, count(*) AS nreg, sum(re - rs + 1) AS ndup,
+                        list({'s': rs, 'e': re} ORDER BY rs, re) AS ivs
+                 FROM reg GROUP BY doc_id)
+         SELECT w.doc_id,
+           CAST(len(w.ws) AS BIGINT) AS total_words,
+           CAST(coalesce(a.nreg, 0) AS BIGINT) AS dup_regions,
+           CAST(coalesce(a.ndup, 0) AS BIGINT) AS dup_words,
+           CAST(coalesce(a.ndup, 0) * 1000000 // len(w.ws) AS BIGINT) AS dup_ppm,
+           md5(coalesce(array_to_string(
+             list_transform(
+               list_filter(range(1, len(w.ws) + 1),
+                 i -> len(list_filter(coalesce(a.ivs, []),
+                        v -> i >= v.s AND i <= v.e)) = 0),
+               i -> w.ws[CAST(i AS INT)]),
+             ' '), '')) AS clean_fp
+         FROM w LEFT JOIN agg a USING (doc_id)"""
+
+  /** Every occurrence `m(doc_id, lang, pattern, pos)` of a `pats` pattern
+    * in each document (recursive; q200, q210).
+    */
+  val SqlDictMatches =
+    """m(doc_id, lang, pattern, pos) AS (
+           SELECT d.doc_id, d.lang, p.pattern, strpos(d.text, p.pattern)
+           FROM documents d CROSS JOIN pats p
+           WHERE strpos(d.text, p.pattern) > 0
+           UNION ALL
+           SELECT m.doc_id, m.lang, m.pattern,
+             m.pos + strpos(substr(d.text, m.pos + 1), m.pattern)
+           FROM m JOIN documents d ON d.doc_id = m.doc_id
+           WHERE strpos(substr(d.text, m.pos + 1), m.pattern) > 0)"""
+
+  /** From all matches `m(doc_id, pattern, pos)`: the greedy leftmost-
+    * longest selection (`ml` → `sel` → `fin`) and the per-segment rebuild
+    * `red(doc_id, redacted, n_red)` (q209, q216).
+    */
+  val SqlDictRedaction =
+    """ml AS MATERIALIZED (
+           SELECT doc_id,
+             list({'s': CAST(pos AS BIGINT), 'nl': -CAST(len(pattern) AS BIGINT)}
+               ORDER BY pos, -len(pattern)) AS ms
+           FROM m GROUP BY doc_id),
+         sel AS (
+           SELECT doc_id, ms,
+             CAST([] AS STRUCT(s BIGINT, nl BIGINT)[]) AS picks,
+             CAST(1 AS BIGINT) AS cur
+           FROM ml
+           UNION ALL
+           SELECT doc_id, ms, list_append(picks, nxt), nxt.s - nxt.nl
+           FROM (SELECT doc_id, ms, picks, cur,
+                   list_filter(ms, x -> x.s >= cur)[1] AS nxt
+                 FROM sel)
+           WHERE nxt IS NOT NULL),
+         fin AS MATERIALIZED (
+           SELECT doc_id, arg_max(picks, len(picks)) AS picks
+           FROM sel GROUP BY doc_id),
+         px AS (
+           SELECT f.doc_id, t.e['i'] AS i, t.e['s'] AS s, -t.e['nl'] AS l
+           FROM fin f, unnest(list_transform(range(1, len(picks) + 1), j ->
+             {'i': j, 's': picks[j].s, 'nl': picks[j].nl})) t(e)),
+         seg AS (
+           SELECT p.doc_id, p.i, p.s, p.l,
+             coalesce(lag(p.s + p.l) OVER (PARTITION BY p.doc_id ORDER BY p.i), 1) AS pe
+           FROM px p),
+         red AS (
+           SELECT s.doc_id,
+             string_agg(substr(d.text, CAST(s.pe AS INT), CAST(s.s - s.pe AS INT)) || '[X]', ''
+               ORDER BY s.i) || substr(max(d.text), CAST(max(s.s + s.l) AS INT)) AS redacted,
+             count(*) AS n_red
+           FROM seg s JOIN documents d ON d.doc_id = s.doc_id
+           GROUP BY s.doc_id)"""
+
+  /** Naive Bayes over documents, trained on the even ids (`tc`, `den`,
+    * `lp`, `lp0`, `pri`) and scoring the odd ones: `sc(doc_id, c,
+    * score4)` per class, fixed point 1e-4 (q219, q220, q227).
+    */
+  val SqlNbScores =
+    """tr AS (SELECT doc_id, text, lang FROM documents
                      WHERE doc_id % 2 = 0),
          te AS (SELECT doc_id, text, lang FROM documents
                 WHERE doc_id % 2 = 1),
@@ -514,7 +715,234 @@ ORDER BY n_uses DESC, piece"""
          sc AS (SELECT te.doc_id, pri.c,
                   pri.prior4 + coalesce(ts.s4, 0) AS score4
                 FROM te CROSS JOIN pri
-                LEFT JOIN ts ON ts.doc_id = te.doc_id AND ts.c = pri.c),
+                LEFT JOIN ts ON ts.doc_id = te.doc_id AND ts.c = pri.c)"""
+
+  /** The one-pass column profile (q255, q256) re-derived column by column
+    * over `table`, a relation with the documents columns: one row per
+    * column of rows, nulls, exact distincts and min/max as text.
+    */
+  def SqlColumnProfile(table: String) =
+    s"""SELECT 'doc_id' AS col_name, count(*) AS n_rows,
+             count(*) - count(doc_id) AS n_null,
+             count(DISTINCT doc_id) AS n_distinct,
+             CAST(min(doc_id) AS VARCHAR) AS min_s,
+             CAST(max(doc_id) AS VARCHAR) AS max_s FROM $table
+           UNION ALL
+           SELECT 'lang', count(*), count(*) - count(lang),
+             count(DISTINCT lang), CAST(min(lang) AS VARCHAR),
+             CAST(max(lang) AS VARCHAR) FROM $table
+           UNION ALL
+           SELECT 'n_chars', count(*), count(*) - count(n_chars),
+             count(DISTINCT n_chars), CAST(min(n_chars) AS VARCHAR),
+             CAST(max(n_chars) AS VARCHAR) FROM $table
+           UNION ALL
+           SELECT 'source', count(*), count(*) - count(source),
+             count(DISTINCT source), CAST(min(source) AS VARCHAR),
+             CAST(max(source) AS VARCHAR) FROM $table
+           UNION ALL
+           SELECT 'text', count(*), count(*) - count(text),
+             count(DISTINCT text), CAST(min(text) AS VARCHAR),
+             CAST(max(text) AS VARCHAR) FROM $table"""
+
+  /** From the block sums `blk` and totals `nb`: the 64 hash bits, the
+    * hashes `hsh(doc_id, h1, h2)`, their hamming ≤ 3 pairs and each
+    * hash's partner count — the rows of the image and audio hash
+    * queries (q188, q190).
+    */
+  val SqlHashNearDups =
+    """bits AS (
+           SELECT blk.doc_id, CAST(b AS BIGINT) AS b,
+             CASE WHEN bs * nb.n > nb.tot * bn THEN 1 ELSE 0 END AS bit
+           FROM blk JOIN nb ON blk.doc_id = nb.doc_id),
+         hsh AS (
+           SELECT doc_id,
+             CAST(coalesce(sum(CASE WHEN b < 32
+               THEN bit * (1::BIGINT << CAST(b AS INT)) END), 0) AS BIGINT) AS h1,
+             CAST(coalesce(sum(CASE WHEN b >= 32
+               THEN bit * (1::BIGINT << CAST(b - 32 AS INT)) END), 0) AS BIGINT) AS h2
+           FROM bits GROUP BY 1),
+         prs AS (
+           SELECT a.doc_id AS id_a, b.doc_id AS id_b
+           FROM hsh a JOIN hsh b ON a.doc_id < b.doc_id
+           WHERE bit_count(xor(a.h1, b.h1)) + bit_count(xor(a.h2, b.h2)) <= 3),
+         cnt AS (
+           SELECT doc_id, count(*) AS nd
+           FROM (SELECT id_a AS doc_id FROM prs
+                 UNION ALL SELECT id_b FROM prs)
+           GROUP BY 1)
+         SELECT h.doc_id AS media_id, h1, h2,
+           CAST(coalesce(c.nd, 0) AS BIGINT) AS n_neardups
+         FROM hsh h LEFT JOIN cnt c ON h.doc_id = c.doc_id
+         ORDER BY media_id"""
+
+  /** `d(vec_id, dim, x)`: one row per embedding coordinate, dim 1-based,
+    * x as DOUBLE.
+    */
+  val SqlEmbeddingDims =
+    """d AS (
+           SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
+             CAST(unnest(embedding) AS DOUBLE) AS x
+           FROM embeddings)"""
+
+  /** Over `d`: SQ8's per-dim scale `m(dim, mx)` and the codes `c(vec_id,
+    * dim, code)`, round(x · 127 / mx) (q206, q207, q208, q211).
+    */
+  val SqlSq8Codes =
+    """m AS (SELECT dim, max(abs(x)) AS mx FROM d GROUP BY dim),
+         c AS (
+           SELECT vec_id, d.dim,
+             CASE WHEN mx > 0 THEN CAST(round(x * 127.0 / mx) AS BIGINT)
+                  ELSE 0 END AS code
+           FROM d JOIN m ON d.dim = m.dim)"""
+
+  /** JL projection inputs over `d`: `vq` coordinates quantised to 1e-6
+    * and `s(dim, j, sgn)`, the md5 sign matrix onto 16 dims (q228, q239).
+    */
+  val SqlJlSigns =
+    """vq AS (SELECT vec_id, dim,
+                  CAST(round(x * 1e6) AS BIGINT) AS q
+                FROM d),
+         s AS (SELECT dim, j,
+                 CASE WHEN substring(md5('jl_7_' || (dim - 1) || '_' || j),
+                     1, 1) IN ('0','2','4','6','8','a','c','e')
+                   THEN 1 ELSE -1 END AS sgn
+               FROM (SELECT DISTINCT dim FROM vq)
+               CROSS JOIN range(16) r(j))"""
+
+  /** The exact cosine top-10 of vector 0 with the IVF recall verdict
+    * pinned TRUE (q50, q186).
+    */
+  val SqlIvfEnvelope =
+    """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0)
+         SELECT e.vec_id,
+           round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+             CAST(q.embedding AS DOUBLE[])), 6) AS cosine,
+           TRUE AS ivf_recall_ok
+         FROM embeddings e, q WHERE e.vec_id <> 0
+         ORDER BY cosine DESC, e.vec_id LIMIT 10"""
+
+  /** `pair(m, p, q)`: quantity per market segment and part — the
+    * evidence of the KG's disease–target associations.
+    */
+  val SqlKgPairs =
+    """pair AS (
+           SELECT c_mktsegment AS m, l_partkey AS p, sum(l_quantity) AS q
+           FROM lineitem
+           JOIN orders ON o_orderkey = l_orderkey
+           JOIN customer ON c_custkey = o_custkey
+           GROUP BY 1, 2)"""
+
+  /** A `pair` row's association score: its share of the part's total
+    * quantity, rounded to 6.
+    */
+  val SqlKgScore =
+    """round(q / sum(q) OVER (PARTITION BY p), 6) AS score"""
+
+  /** `pair` → `edges(disease_id, target_id, score)`, the KG association
+    * edges (q49, q58, q63, q155, q214, q252; q178 orders the columns its
+    * own way).
+    */
+  val SqlKgEdges =
+    s"""$SqlKgPairs,
+         edges AS (
+           SELECT 'DIS_' || m AS disease_id, 'TGT_' || p AS target_id,
+             $SqlKgScore
+           FROM pair)"""
+
+  /** `main_targets(target_id)`: targets whose best-scoring disease is
+    * DIS_BUILDING at score ≥ 0.33 (q58, q63).
+    */
+  val SqlKgMainTargets =
+    """main_targets AS (
+           SELECT target_id FROM (
+             SELECT *, row_number() OVER
+               (PARTITION BY target_id ORDER BY score DESC, disease_id) AS rn
+             FROM edges WHERE disease_id = 'DIS_BUILDING' AND score >= 0.33)
+           WHERE rn = 1)"""
+
+  /** `pp` → `rk`: each drug's targets ranked by quantity, `rnk` 1 its
+    * first target (q61, q62).
+    */
+  val SqlKgDrugTopTarget =
+    """pp AS (
+           SELECT l_suppkey, l_partkey, sum(l_quantity) AS q
+           FROM lineitem GROUP BY 1, 2),
+         rk AS (
+           SELECT *, row_number() OVER
+             (PARTITION BY l_suppkey ORDER BY q DESC, l_partkey) AS rnk
+           FROM pp)"""
+
+  /** `scope(id, name, entity)`: every disease, target and drug whose name
+    * contains an r — the search hits of q232 and q235.
+    */
+  val SqlKgScope =
+    """scope AS (
+           SELECT 'DIS_' || c_mktsegment AS id, c_mktsegment AS name,
+             'disease' AS entity
+           FROM (SELECT DISTINCT c_mktsegment FROM customer)
+           WHERE lower(c_mktsegment) LIKE '%r%'
+           UNION ALL
+           SELECT 'TGT_' || p_partkey, p_name, 'target'
+           FROM part WHERE lower(p_name) LIKE '%r%'
+           UNION ALL
+           SELECT 'DRG_' || s_suppkey, s_name, 'drug'
+           FROM supplier WHERE lower(s_name) LIKE '%r%')"""
+
+  /** `kd(drug_id, tgt_id, phase)`: DIS_BUILDING's known drugs with their
+    * phase (q164, q229).
+    */
+  val SqlKgKnownDrugs =
+    """kd AS (
+           SELECT 'DRG_' || l_suppkey AS drug_id,
+             'TGT_' || l_partkey AS tgt_id,
+             round(least(4.0, count(*) / 10.0), 1) AS phase
+           FROM lineitem
+           JOIN orders ON o_orderkey = l_orderkey
+           JOIN customer ON c_custkey = o_custkey
+           WHERE c_mktsegment = 'BUILDING'
+           GROUP BY 1, 2)"""
+
+  /** Mean of the events' JSON `k` per event type (q17, q42).
+    */
+  val SqlEventAvgK =
+    """SELECT event_type,
+         round(avg(CAST(json_extract_string(props,'$.k') AS INT)),4) AS avg_k,
+         count(*) AS n
+         FROM events GROUP BY event_type ORDER BY event_type"""
+
+  /** The binary two-stage serve replayed (thresholds + bits + Hamming
+    * cut + cosine re-rank) — shared by q217 (ad-hoc), q218 (persisted
+    * index, spec-pinned bit-identical) and q225 (the streamed code
+    * table, bit-identical under the same frozen thresholds).
+    */
+  val SqlBinaryTwoStage =
+    s"""WITH $SqlEmbeddingDims,
+         t AS (SELECT dim, (min(x) + max(x)) / 2 AS thr FROM d GROUP BY dim),
+         b AS (SELECT vec_id, d.dim,
+                 CASE WHEN x > thr THEN 1 ELSE 0 END AS bit
+               FROM d JOIN t ON d.dim = t.dim),
+         q AS (SELECT dim, bit AS qb FROM b WHERE vec_id = 0),
+         h AS (SELECT b.vec_id,
+                 CAST(sum(CASE WHEN b.bit <> q.qb THEN 1 ELSE 0 END) AS BIGINT)
+                   AS hamming
+               FROM b JOIN q ON b.dim = q.dim
+               WHERE b.vec_id <> 0
+               GROUP BY b.vec_id
+               ORDER BY hamming ASC, b.vec_id LIMIT 50),
+         qv AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
+         SELECT h.vec_id,
+           round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+             CAST(qv.qe AS DOUBLE[])), 6) AS cosine,
+           h.hamming
+         FROM h JOIN embeddings e ON e.vec_id = h.vec_id CROSS JOIN qv
+         ORDER BY cosine DESC, h.vec_id LIMIT 10"""
+
+  /** NB training + inference replayed — shared by q219 (single-pass
+    * train) and q227 (the incremental count-generation model, whose
+    * summed generations equal the union's counts bit for bit).
+    */
+  val SqlNbPredict =
+    s"""WITH $SqlNbScores,
          best AS (SELECT doc_id, c AS predicted, score4,
                     row_number() OVER (PARTITION BY doc_id
                       ORDER BY score4 ASC, c ASC) AS rn

@@ -125,20 +125,8 @@ private[graft] object TextQueries {
         shingles = Some(sharedShingles(s, dir)))
         .orderBy("id_a", "id_b")
     }, oracle =
-      """WITH toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         inter AS (
-           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS i
-           FROM ex l JOIN ex r ON l.g = r.g AND l.doc_id < r.doc_id
-           GROUP BY 1, 2),
-         sz AS (SELECT doc_id, len(s) AS n FROM sh)
+      s"""WITH $SqlDocShingles,
+         $SqlShingleOverlap
          SELECT id_a, id_b,
            round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) AS jaccard
          FROM inter
@@ -193,28 +181,7 @@ private[graft] object TextQueries {
       // pair set recomputed (the q30 relation) keyed-hash-identical,
       // with the LSH guarantees — subset-of-exact (verification
       // exactness) and the 0.8 recall floor — pinned TRUE
-      """WITH toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         inter AS (
-           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS i
-           FROM ex l JOIN ex r ON l.g = r.g AND l.doc_id < r.doc_id
-           GROUP BY 1, 2),
-         sz AS (SELECT doc_id, len(s) AS n FROM sh)
-         SELECT id_a, id_b,
-           round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) AS jaccard,
-           TRUE AS subset_of_exact, TRUE AS recall_ok
-         FROM inter
-         JOIN sz sa ON sa.doc_id = id_a
-         JOIN sz sb ON sb.doc_id = id_b
-         WHERE round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) >= 0.6
-         ORDER BY id_a, id_b"""),
+      SqlJaccardEnvelope),
 
     // ---------------- dedup: SimHash (FULL-oracle envelope) ----------------
     // SimHash values are engine hashes (not SQL-recomputable), so the
@@ -317,15 +284,7 @@ private[graft] object TextQueries {
         benchShingles = Some(sh.filter(col("id") % 50 === 0)))
         .orderBy("doc_id", "bench_id")
     }, oracle =
-      """WITH toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
+      s"""WITH $SqlDocShingles,
          bex AS (SELECT doc_id AS bench_id, g FROM ex WHERE doc_id % 50 = 0)
          SELECT e.doc_id, b.bench_id, count(*) AS n_shared
          FROM ex e JOIN bex b ON e.g = b.g AND e.doc_id <> b.bench_id
@@ -414,32 +373,10 @@ private[graft] object TextQueries {
       // persisted: q90 (corpus pruning) consumes the same relation.
       jaccardLabels(s, dir).orderBy("id")
     }, oracle =
-      """WITH RECURSIVE toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         inter AS (
-           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS i
-           FROM ex l JOIN ex r ON l.g = r.g AND l.doc_id < r.doc_id
-           GROUP BY 1, 2),
-         sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         pairs AS (
-           SELECT id_a, id_b FROM inter
-           JOIN sz sa ON sa.doc_id = id_a
-           JOIN sz sb ON sb.doc_id = id_b
-           WHERE round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) >= 0.6),
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(id, lbl) AS (
-           SELECT DISTINCT src, src FROM edges
-           UNION
-           SELECT e.src, r.lbl FROM edges e JOIN reach r ON r.id = e.dst)
+      s"""WITH RECURSIVE $SqlDocShingles,
+         $SqlShingleOverlap,
+         $SqlJaccardPairs,
+         $SqlPairComponents
          SELECT id, min(lbl) AS canonical_id FROM reach
          GROUP BY id ORDER BY id"""),
 
@@ -552,13 +489,7 @@ private[graft] object TextQueries {
       TextMetrics.unigramSurprisal(t(s, dir).documents, "doc_id", col("text"))
         .orderBy("doc_id")
     }, oracle =
-      """WITH tok AS (
-           SELECT doc_id, unnest(string_split(text,' ')) AS token FROM documents),
-         freq AS (SELECT token, count(*) AS c FROM tok GROUP BY 1),
-         tot AS (SELECT count(*) AS n FROM tok),
-         lp AS (SELECT token,
-             CAST(floor(-ln(CAST(c AS DOUBLE)/t.n)*1e4 + 0.5) AS BIGINT) AS lp4
-           FROM freq CROSS JOIN tot t),
+      s"""WITH $SqlUnigramLogProbs,
          per AS (SELECT doc_id, sum(lp4) AS slp, count(*) AS nt
            FROM tok JOIN lp USING (token) GROUP BY doc_id)
          SELECT doc_id, nt AS n_tokens,
@@ -632,32 +563,10 @@ private[graft] object TextQueries {
         .agg(count(lit(1)).as("n_kept"), sum(col("n_chars")).as("kept_chars"))
         .orderBy("lang")
     }, oracle =
-      """WITH RECURSIVE toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         inter AS (
-           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS i
-           FROM ex l JOIN ex r ON l.g = r.g AND l.doc_id < r.doc_id
-           GROUP BY 1, 2),
-         sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         pairs AS (
-           SELECT id_a, id_b FROM inter
-           JOIN sz sa ON sa.doc_id = id_a
-           JOIN sz sb ON sb.doc_id = id_b
-           WHERE round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) >= 0.6),
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(id, lbl) AS (
-           SELECT DISTINCT src, src FROM edges
-           UNION
-           SELECT e.src, r.lbl FROM edges e JOIN reach r ON r.id = e.dst),
+      s"""WITH RECURSIVE $SqlDocShingles,
+         $SqlShingleOverlap,
+         $SqlJaccardPairs,
+         $SqlPairComponents,
          labels AS (SELECT id, min(lbl) AS canonical_id FROM reach GROUP BY id),
          dropped AS (SELECT id FROM labels WHERE id <> canonical_id)
          SELECT lang, count(*) AS n_kept,
@@ -970,19 +879,13 @@ private[graft] object TextQueries {
         .select(col("p_partkey"), col("entity_id"), col("canonical_name"))
         .orderBy("p_partkey")
     }, oracle =
-      """WITH RECURSIVE p AS (
+      s"""WITH RECURSIVE p AS (
            SELECT p_partkey, p_name FROM part WHERE p_size = 1),
          pairs AS (
            SELECT a.p_partkey AS id_a, b.p_partkey AS id_b
            FROM p a JOIN p b ON a.p_partkey < b.p_partkey
            WHERE levenshtein(a.p_name, b.p_name) <= 3),
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(id, lbl) AS (
-           SELECT DISTINCT src, src FROM edges
-           UNION
-           SELECT e.src, r.lbl FROM edges e JOIN reach r ON r.id = e.dst),
+         $SqlPairComponents,
          labels AS (SELECT id, min(lbl) AS canonical_id FROM reach GROUP BY id)
          SELECT p.p_partkey,
            coalesce(l.canonical_id, p.p_partkey) AS entity_id,
@@ -998,30 +901,7 @@ private[graft] object TextQueries {
     Query("q137_bm25_topk", (s, dir) =>
       InvertedIndex.bm25TopK(t(s, dir).documents, "doc_id", col("text"),
         Seq("dup", "spark", "window"), k = 10), oracle =
-      // BM25: fractional literals carry e0 so DuckDB types them DOUBLE
-      // (bare 2.2 is DECIMAL, and tf*DECIMAL is exact decimal math —
-      // NOT the IEEE product Spark computes); the fixed-point floors
-      // then make both engines' sums exact integer math.
-      """WITH tok AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-         post AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-         dl AS (SELECT doc_id, sum(tf) AS dl FROM post GROUP BY 1),
-         stats AS (SELECT count(*) AS nd,
-             CAST(sum(dl) AS DOUBLE)/count(*) AS avgdl FROM dl),
-         idf AS (SELECT term, avgdl,
-             CAST(floor(ln((nd - df + 0.5e0)/(df + 0.5e0) + 1.0e0)*1e4 + 0.5e0)
-               AS BIGINT) AS idf4
-           FROM (SELECT term, count(*) AS df FROM post
-                 WHERE term IN ('dup','spark','window') GROUP BY 1)
-           CROSS JOIN stats),
-         contrib AS (
-           SELECT p.doc_id,
-             i.idf4 * CAST(floor(p.tf*2.2e0/(p.tf + 1.2e0*(0.25e0 + 0.75e0*d.dl/i.avgdl))
-               *1e6 + 0.5e0) AS BIGINT) AS c
-           FROM post p JOIN dl d USING (doc_id) JOIN idf i USING (term)
-           WHERE p.term IN ('dup','spark','window'))
-         SELECT doc_id, count(*) AS n_terms, CAST(sum(c) AS DOUBLE)/1e10 AS bm25
-         FROM contrib GROUP BY doc_id ORDER BY bm25 DESC, doc_id LIMIT 10"""),
+      SqlBm25TopK),
 
     // ---------------- fuzzy dimension linkage (Jaro-Winkler) ----------------
     // Probe × small-dimension linkage: every customer scored against
@@ -1250,7 +1130,7 @@ private[graft] object TextQueries {
       // the q168-style island fold (maxGap=1: touching spans are one
       // region), and the cleaned-text md5 rebuilt by dropping words
       // whose position falls in a removed region
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+      s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
          g AS (SELECT doc_id, CAST(i AS BIGINT) AS pos,
                       md5(array_to_string(ws[i:i+7], ' ')) AS h
                FROM w, unnest(range(1, len(ws) - 6)) AS t(i)),
@@ -1260,34 +1140,7 @@ private[graft] object TextQueries {
                FROM g),
          iv AS (SELECT doc_id, pos AS s, pos + 7 AS e
                 FROM m WHERE n_occ > 1 AND rn > 1),
-         op AS (SELECT doc_id, s, e,
-                       CASE WHEN s > coalesce(max(e) OVER (PARTITION BY doc_id
-                              ORDER BY s, e
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                            CAST(-2 AS BIGINT)) + 1 THEN 1 ELSE 0 END AS opens
-                FROM iv),
-         reg AS (SELECT doc_id, min(s) AS rs, max(e) AS re
-                 FROM (SELECT doc_id, s, e,
-                              sum(opens) OVER (PARTITION BY doc_id
-                                ORDER BY s, e) AS isl
-                       FROM op)
-                 GROUP BY doc_id, isl),
-         agg AS (SELECT doc_id, count(*) AS nreg, sum(re - rs + 1) AS ndup,
-                        list({'s': rs, 'e': re} ORDER BY rs, re) AS ivs
-                 FROM reg GROUP BY doc_id)
-         SELECT w.doc_id,
-           CAST(len(w.ws) AS BIGINT) AS total_words,
-           CAST(coalesce(a.nreg, 0) AS BIGINT) AS dup_regions,
-           CAST(coalesce(a.ndup, 0) AS BIGINT) AS dup_words,
-           CAST(coalesce(a.ndup, 0) * 1000000 // len(w.ws) AS BIGINT) AS dup_ppm,
-           md5(coalesce(array_to_string(
-             list_transform(
-               list_filter(range(1, len(w.ws) + 1),
-                 i -> len(list_filter(coalesce(a.ivs, []),
-                        v -> i >= v.s AND i <= v.e)) = 0),
-               i -> w.ws[CAST(i AS INT)]),
-             ' '), '')) AS clean_fp
-         FROM w LEFT JOIN agg a USING (doc_id)
+         $SqlIslandMerge
          ORDER BY w.doc_id"""),
 
     // ---------------- incremental span dedup (batch vs archive) ----------------
@@ -1312,7 +1165,7 @@ private[graft] object TextQueries {
       // spans (doc_id % 4 <> 3) form the hash archive; batch
       // occurrences in the archive are removed outright, the rest
       // keep-first within the batch
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+      s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
          g AS (SELECT doc_id, CAST(i AS BIGINT) AS pos,
                       md5(array_to_string(ws[i:i+7], ' ')) AS h
                FROM w, unnest(range(1, len(ws) - 6)) AS t(i)),
@@ -1329,34 +1182,7 @@ private[graft] object TextQueries {
          iv AS (SELECT * FROM hits
                 UNION ALL
                 SELECT doc_id, pos, pos + 7 FROM f2 WHERE n_occ > 1 AND rn > 1),
-         op AS (SELECT doc_id, s, e,
-                       CASE WHEN s > coalesce(max(e) OVER (PARTITION BY doc_id
-                              ORDER BY s, e
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                            CAST(-2 AS BIGINT)) + 1 THEN 1 ELSE 0 END AS opens
-                FROM iv),
-         reg AS (SELECT doc_id, min(s) AS rs, max(e) AS re
-                 FROM (SELECT doc_id, s, e,
-                              sum(opens) OVER (PARTITION BY doc_id
-                                ORDER BY s, e) AS isl
-                       FROM op)
-                 GROUP BY doc_id, isl),
-         agg AS (SELECT doc_id, count(*) AS nreg, sum(re - rs + 1) AS ndup,
-                        list({'s': rs, 'e': re} ORDER BY rs, re) AS ivs
-                 FROM reg GROUP BY doc_id)
-         SELECT w.doc_id,
-           CAST(len(w.ws) AS BIGINT) AS total_words,
-           CAST(coalesce(a.nreg, 0) AS BIGINT) AS dup_regions,
-           CAST(coalesce(a.ndup, 0) AS BIGINT) AS dup_words,
-           CAST(coalesce(a.ndup, 0) * 1000000 // len(w.ws) AS BIGINT) AS dup_ppm,
-           md5(coalesce(array_to_string(
-             list_transform(
-               list_filter(range(1, len(w.ws) + 1),
-                 i -> len(list_filter(coalesce(a.ivs, []),
-                        v -> i >= v.s AND i <= v.e)) = 0),
-               i -> w.ws[CAST(i AS INT)]),
-             ' '), '')) AS clean_fp
-         FROM w LEFT JOIN agg a USING (doc_id)
+         $SqlIslandMerge
          WHERE w.doc_id % 4 = 3
          ORDER BY w.doc_id"""),
 
@@ -1383,15 +1209,7 @@ private[graft] object TextQueries {
         benchShingles = Some(sh.filter(col("id") % 50 === 0)))
         .orderBy("doc_id", "bench_id")
     }, oracle =
-      """WITH toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
+      s"""WITH $SqlDocShingles,
          sz AS (SELECT doc_id, len(s) AS n FROM sh),
          bex AS (SELECT doc_id AS bench_id, g FROM ex WHERE doc_id % 50 = 0),
          inter AS (
@@ -1459,20 +1277,8 @@ private[graft] object TextQueries {
           col("subset_of_exact"), col("recall_ok"))
         .orderBy("id_a", "id_b")
     }, oracle =
-      """WITH toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         inter AS (
-           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS i
-           FROM ex l JOIN ex r ON l.g = r.g AND l.doc_id < r.doc_id
-           GROUP BY 1, 2),
-         sz AS (SELECT doc_id, len(s) AS n FROM sh),
+      s"""WITH $SqlDocShingles,
+         $SqlShingleOverlap,
          sel AS (
            SELECT id_a, id_b,
              round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) AS jaccard
@@ -1542,22 +1348,9 @@ private[graft] object TextQueries {
           col("start_pos"), col("n_words"), col("chunk_md5"), col("is_dup"))
         .orderBy("doc_id", "chunk_idx")
     }, oracle =
-      """WITH toks AS (
+      s"""WITH toks AS (
            SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
-         wds0 AS (
-           SELECT doc_id, unnest(range(1, len(ts)+1)) AS pos, ts FROM toks),
-         wds AS (
-           SELECT doc_id, CAST(pos AS BIGINT) AS pos, ts[pos] AS w FROM wds0),
-         flg AS (
-           SELECT doc_id, pos, w,
-             CASE WHEN ('0x' || substr(md5(w), 1, 2))::BIGINT < 32
-                  THEN 1 ELSE 0 END AS b
-           FROM wds),
-         cid AS (
-           SELECT doc_id, pos, w,
-             COALESCE(sum(b) OVER (PARTITION BY doc_id ORDER BY pos
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS ci
-           FROM flg),
+         $SqlWordChunks,
          ch AS (
            SELECT doc_id, CAST(ci AS BIGINT) AS chunk_idx,
              CAST(min(pos) AS BIGINT) AS start_pos,
@@ -1589,15 +1382,7 @@ private[graft] object TextQueries {
           rightShingles = Some(sh.filter(col("id") % 4 =!= 3)))
         .orderBy("id_l", "id_r")
     }, oracle =
-      """WITH toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
+      s"""WITH $SqlDocShingles,
          sz AS (SELECT doc_id, len(s) AS n FROM sh),
          inter AS (
            SELECT l.doc_id AS id_l, r.doc_id AS id_r, count(*) AS i
@@ -1634,26 +1419,7 @@ private[graft] object TextQueries {
       InvertedIndex.bm25TopKIndexed(s.read.parquet(idx), "doc_id",
         Seq("dup", "spark", "window"), k = 10)
     }, oracle =
-      """WITH tok AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-         post AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-         dl AS (SELECT doc_id, sum(tf) AS dl FROM post GROUP BY 1),
-         stats AS (SELECT count(*) AS nd,
-             CAST(sum(dl) AS DOUBLE)/count(*) AS avgdl FROM dl),
-         idf AS (SELECT term, avgdl,
-             CAST(floor(ln((nd - df + 0.5e0)/(df + 0.5e0) + 1.0e0)*1e4 + 0.5e0)
-               AS BIGINT) AS idf4
-           FROM (SELECT term, count(*) AS df FROM post
-                 WHERE term IN ('dup','spark','window') GROUP BY 1)
-           CROSS JOIN stats),
-         contrib AS (
-           SELECT p.doc_id,
-             i.idf4 * CAST(floor(p.tf*2.2e0/(p.tf + 1.2e0*(0.25e0 + 0.75e0*d.dl/i.avgdl))
-               *1e6 + 0.5e0) AS BIGINT) AS c
-           FROM post p JOIN dl d USING (doc_id) JOIN idf i USING (term)
-           WHERE p.term IN ('dup','spark','window'))
-         SELECT doc_id, count(*) AS n_terms, CAST(sum(c) AS DOUBLE)/1e10 AS bm25
-         FROM contrib GROUP BY doc_id ORDER BY bm25 DESC, doc_id LIMIT 10"""),
+      SqlBm25TopK),
 
     // ---------------- per-group PPS weighted sampling ----------------
     // q184's gate with PER-LANGUAGE normalization: every language is
@@ -1716,32 +1482,10 @@ private[graft] object TextQueries {
         .filter(col("id_a") % 4 === 3 || col("id_b") % 4 === 3)
       Dedup.dupClustersIncremental(newPairs, oldLabels).orderBy("id")
     }, oracle =
-      """WITH RECURSIVE toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         inter AS (
-           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS i
-           FROM ex l JOIN ex r ON l.g = r.g AND l.doc_id < r.doc_id
-           GROUP BY 1, 2),
-         sz AS (SELECT doc_id, len(s) AS n FROM sh),
-         pairs AS (
-           SELECT id_a, id_b FROM inter
-           JOIN sz sa ON sa.doc_id = id_a
-           JOIN sz sb ON sb.doc_id = id_b
-           WHERE round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) >= 0.6),
-         edges AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(id, lbl) AS (
-           SELECT DISTINCT src, src FROM edges
-           UNION
-           SELECT e.src, r.lbl FROM edges e JOIN reach r ON r.id = e.dst)
+      s"""WITH RECURSIVE $SqlDocShingles,
+         $SqlShingleOverlap,
+         $SqlJaccardPairs,
+         $SqlPairComponents
          SELECT id, min(lbl) AS canonical_id FROM reach
          GROUP BY id ORDER BY id"""),
 
@@ -1882,18 +1626,10 @@ private[graft] object TextQueries {
       // all-occurrence (overlapping) multi-pattern counts: the
       // recursive step advances one char past each hit's START, so
       // self-overlapping hits are found; rows = occurrences
-      """WITH RECURSIVE
+      s"""WITH RECURSIVE
          pats(pattern) AS (VALUES ('data'),('data data'),('the join'),
            ('spark'),('query query'),('window scan')),
-         m(doc_id, lang, pattern, pos) AS (
-           SELECT d.doc_id, d.lang, p.pattern, strpos(d.text, p.pattern)
-           FROM documents d CROSS JOIN pats p
-           WHERE strpos(d.text, p.pattern) > 0
-           UNION ALL
-           SELECT m.doc_id, m.lang, m.pattern,
-             m.pos + strpos(substr(d.text, m.pos + 1), m.pattern)
-           FROM m JOIN documents d ON d.doc_id = m.doc_id
-           WHERE strpos(substr(d.text, m.pos + 1), m.pattern) > 0),
+         $SqlDictMatches,
          occ AS (SELECT doc_id, lang, pattern, count(*) AS n
                  FROM m GROUP BY 1, 2, 3)
          SELECT lang, pattern, CAST(sum(n) AS BIGINT) AS occurrences,
@@ -1930,13 +1666,7 @@ private[graft] object TextQueries {
     }, oracle =
       // perplexity pruning = the q84 surprisal replay + exact rank-band
       // selection per language
-      """WITH tok AS (
-           SELECT doc_id, unnest(string_split(text,' ')) AS token FROM documents),
-         freq AS (SELECT token, count(*) AS c FROM tok GROUP BY 1),
-         tot AS (SELECT count(*) AS n FROM tok),
-         lp AS (SELECT token,
-             CAST(floor(-ln(CAST(c AS DOUBLE)/t.n)*1e4 + 0.5) AS BIGINT) AS lp4
-           FROM freq CROSS JOIN tot t),
+      s"""WITH $SqlUnigramLogProbs,
          per AS (SELECT doc_id, sum(lp4) AS slp, count(*) AS nt
            FROM tok JOIN lp USING (token) GROUP BY doc_id),
          sc AS (SELECT p.doc_id, d.lang, p.nt,
@@ -2041,40 +1771,7 @@ private[graft] object TextQueries {
              m.pos + strpos(substr(d.text, m.pos + 1), m.pattern)
            FROM m JOIN documents d ON d.doc_id = m.doc_id
            WHERE strpos(substr(d.text, m.pos + 1), m.pattern) > 0),
-         ml AS MATERIALIZED (
-           SELECT doc_id,
-             list({'s': CAST(pos AS BIGINT), 'nl': -CAST(len(pattern) AS BIGINT)}
-               ORDER BY pos, -len(pattern)) AS ms
-           FROM m GROUP BY doc_id),
-         sel AS (
-           SELECT doc_id, ms,
-             CAST([] AS STRUCT(s BIGINT, nl BIGINT)[]) AS picks,
-             CAST(1 AS BIGINT) AS cur
-           FROM ml
-           UNION ALL
-           SELECT doc_id, ms, list_append(picks, nxt), nxt.s - nxt.nl
-           FROM (SELECT doc_id, ms, picks, cur,
-                   list_filter(ms, x -> x.s >= cur)[1] AS nxt
-                 FROM sel)
-           WHERE nxt IS NOT NULL),
-         fin AS MATERIALIZED (
-           SELECT doc_id, arg_max(picks, len(picks)) AS picks
-           FROM sel GROUP BY doc_id),
-         px AS (
-           SELECT f.doc_id, t.e['i'] AS i, t.e['s'] AS s, -t.e['nl'] AS l
-           FROM fin f, unnest(list_transform(range(1, len(picks) + 1), j ->
-             {'i': j, 's': picks[j].s, 'nl': picks[j].nl})) t(e)),
-         seg AS (
-           SELECT p.doc_id, p.i, p.s, p.l,
-             coalesce(lag(p.s + p.l) OVER (PARTITION BY p.doc_id ORDER BY p.i), 1) AS pe
-           FROM px p),
-         red AS (
-           SELECT s.doc_id,
-             string_agg(substr(d.text, CAST(s.pe AS INT), CAST(s.s - s.pe AS INT)) || '[X]', ''
-               ORDER BY s.i) || substr(max(d.text), CAST(max(s.s + s.l) AS INT)) AS redacted,
-             count(*) AS n_red
-           FROM seg s JOIN documents d ON d.doc_id = s.doc_id
-           GROUP BY s.doc_id)
+         $SqlDictRedaction
          SELECT d.doc_id,
            CAST(coalesce(r.n_red, 0) AS BIGINT) AS n_redactions,
            md5(coalesce(r.redacted, d.text)) AS redacted_fp,
@@ -2138,38 +1835,7 @@ private[graft] object TextQueries {
           d.filter(col("doc_id") % 2 === 1), "doc_id", "lang", col("text")),
         "lang")
     }, oracle =
-      """WITH tr AS (SELECT doc_id, text, lang FROM documents
-                     WHERE doc_id % 2 = 0),
-         te AS (SELECT doc_id, text, lang FROM documents
-                WHERE doc_id % 2 = 1),
-         trtok AS (SELECT lang AS c, unnest(string_split(text, ' ')) AS token
-                   FROM tr),
-         tc AS (SELECT c, token, count(*) AS ct FROM trtok GROUP BY 1, 2),
-         tot AS (SELECT c, count(*) AS tot FROM trtok GROUP BY 1),
-         voc AS (SELECT count(DISTINCT token) AS v FROM trtok),
-         den AS (SELECT c, tot + v AS den FROM tot CROSS JOIN voc),
-         lp AS (SELECT tc.c, tc.token,
-             CAST(floor(-ln(CAST(ct + 1 AS DOUBLE) / den) * 1e4 + 0.5)
-               AS BIGINT) AS lp4
-           FROM tc JOIN den ON tc.c = den.c),
-         lp0 AS (SELECT c, CAST(floor(-ln(1.0 / den) * 1e4 + 0.5) AS BIGINT)
-                   AS lp0
-                 FROM den),
-         pri AS (SELECT lang AS c,
-             CAST(floor(-ln(CAST(count(*) AS DOUBLE)
-               / (SELECT count(*) FROM tr)) * 1e4 + 0.5) AS BIGINT) AS prior4
-           FROM tr GROUP BY 1),
-         tetok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-                   FROM te),
-         ts AS (SELECT tetok.doc_id, lp0.c,
-                  CAST(sum(coalesce(lp.lp4, lp0.lp0)) AS BIGINT) AS s4
-                FROM tetok CROSS JOIN lp0
-                LEFT JOIN lp ON lp.c = lp0.c AND lp.token = tetok.token
-                GROUP BY 1, 2),
-         sc AS (SELECT te.doc_id, pri.c,
-                  pri.prior4 + coalesce(ts.s4, 0) AS score4
-                FROM te CROSS JOIN pri
-                LEFT JOIN ts ON ts.doc_id = te.doc_id AND ts.c = pri.c),
+      s"""WITH $SqlNbScores,
          best AS (SELECT doc_id, c AS predicted,
                     row_number() OVER (PARTITION BY doc_id
                       ORDER BY score4 ASC, c ASC) AS rn
@@ -2230,20 +1896,8 @@ private[graft] object TextQueries {
       // point-serve lookup envelope: the exact pair relation (q31's
       // device) restricted to probe ends, both orientations; the
       // lookup's subset/recall verdicts ride pinned TRUE
-      """WITH toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         inter AS (
-           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS i
-           FROM ex l JOIN ex r ON l.g = r.g AND l.doc_id < r.doc_id
-           GROUP BY 1, 2),
-         sz AS (SELECT doc_id, len(s) AS n FROM sh),
+      s"""WITH $SqlDocShingles,
+         $SqlShingleOverlap,
          pairs AS (
            SELECT id_a, id_b,
              round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) AS jaccard
@@ -2284,25 +1938,12 @@ private[graft] object TextQueries {
       // CDC segment dedup over the corpus + its prefix-shifted twin:
       // boundary flags -> prefix-count window -> chunk fingerprints ->
       // keep-first by (doc, seg) -> position-ordered reassembly
-      """WITH corpus AS (
+      s"""WITH corpus AS (
            SELECT doc_id, text FROM documents
            UNION ALL
            SELECT doc_id + 1000000, 'zq ' || text FROM documents),
          toks AS (SELECT doc_id, string_split(text, ' ') AS ts FROM corpus),
-         wds0 AS (
-           SELECT doc_id, unnest(range(1, len(ts)+1)) AS pos, ts FROM toks),
-         wds AS (
-           SELECT doc_id, CAST(pos AS BIGINT) AS pos, ts[pos] AS w FROM wds0),
-         flg AS (
-           SELECT doc_id, pos, w,
-             CASE WHEN ('0x' || substr(md5(w), 1, 2))::BIGINT < 32
-                  THEN 1 ELSE 0 END AS b
-           FROM wds),
-         cid AS (
-           SELECT doc_id, pos, w,
-             COALESCE(sum(b) OVER (PARTITION BY doc_id ORDER BY pos
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS ci
-           FROM flg),
+         $SqlWordChunks,
          ch AS (
            SELECT doc_id, CAST(ci AS BIGINT) AS seg,
              string_agg(w, ' ' ORDER BY pos) AS ctext,
@@ -2431,20 +2072,8 @@ private[graft] object TextQueries {
     }, oracle =
       // leakage audit = the q31 exact-pair device + the q174 md5-split
       // device, joined — both engine-exact
-      """WITH toks AS (
-           SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')), ' ') AS ts
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_transform(range(1, len(ts)-1),
-             i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2])) AS s
-           FROM toks WHERE len(ts) >= 3),
-         ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         inter AS (
-           SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS i
-           FROM ex l JOIN ex r ON l.g = r.g AND l.doc_id < r.doc_id
-           GROUP BY 1, 2),
-         sz AS (SELECT doc_id, len(s) AS n FROM sh),
+      s"""WITH $SqlDocShingles,
+         $SqlShingleOverlap,
          prs AS (
            SELECT id_a, id_b FROM inter
            JOIN sz sa ON sa.doc_id = id_a

@@ -1,7 +1,7 @@
 package graft
 package registry
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VecFns
@@ -79,27 +79,11 @@ private[graft] object VectorQueries {
         .head().getSeq[Float](0).toArray
       val idx = fixturePath("ivf", dir, "embeddings")
       Similarity.ensureIvfIndex(emb, "vec_id", "embedding", nlist = 16, idx)
-      val brute = Similarity.bruteTopK(emb, "vec_id", "embedding", q, 10,
-        excludeId = 0L)
-      val ivf = Similarity.ivfTopKIndexed(s, idx, "vec_id", "embedding", q, 10,
-          nprobe = 4, excludeId = 0L)
-        .select(col("vec_id"))
-      val verdict = brute.select(col("vec_id"))
-        .join(ivf, Seq("vec_id"), "left_semi")
-        .agg((count(lit(1)) >= 6L).as("ivf_recall_ok"))
-      brute.crossJoin(broadcast(verdict))
-        .select(col("vec_id"), col("cosine"), col("ivf_recall_ok"))
-        .orderBy(col("cosine").desc, col("vec_id"))
+      ivfRecallEnvelope(s, emb, q, idx)
     }, oracle =
       // IVF envelope: same exact top-10, the pruned-scan recall floor
       // pinned TRUE
-      """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0)
-         SELECT e.vec_id,
-           round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-             CAST(q.embedding AS DOUBLE[])), 6) AS cosine,
-           TRUE AS ivf_recall_ok
-         FROM embeddings e, q WHERE e.vec_id <> 0
-         ORDER BY cosine DESC, e.vec_id LIMIT 10"""),
+      SqlIvfEnvelope),
 
     // ---------------- similarity: per-label centroids ----------------
     Query("q35_label_centroids", (s, dir) => {
@@ -413,25 +397,10 @@ private[graft] object VectorQueries {
         .select(col("vec_id").as("doc_id"), col("cosine").as("score"))
       Retrieval.rrf(Seq(lex, sem), "doc_id", "score", k = 10)
     }, oracle =
-      """WITH tok AS (
+      s"""WITH tok AS (
            SELECT doc_id, unnest(string_split(text, ' ')) AS term
            FROM documents WHERE doc_id <> 0),
-         post AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-         dl AS (SELECT doc_id, sum(tf) AS dl FROM post GROUP BY 1),
-         stats AS (SELECT count(*) AS nd,
-             CAST(sum(dl) AS DOUBLE)/count(*) AS avgdl FROM dl),
-         idf AS (SELECT term, avgdl,
-             CAST(floor(ln((nd - df + 0.5e0)/(df + 0.5e0) + 1.0e0)*1e4 + 0.5e0)
-               AS BIGINT) AS idf4
-           FROM (SELECT term, count(*) AS df FROM post
-                 WHERE term IN ('dup','spark','window') GROUP BY 1)
-           CROSS JOIN stats),
-         contrib AS (
-           SELECT p.doc_id,
-             i.idf4 * CAST(floor(p.tf*2.2e0/(p.tf + 1.2e0*(0.25e0 + 0.75e0*d.dl/i.avgdl))
-               *1e6 + 0.5e0) AS BIGINT) AS c
-           FROM post p JOIN dl d USING (doc_id) JOIN idf i USING (term)
-           WHERE p.term IN ('dup','spark','window')),
+         $SqlBm25Contrib,
          lex AS (SELECT doc_id, CAST(sum(c) AS DOUBLE)/1e10 AS score
            FROM contrib GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 50),
          q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
@@ -493,26 +462,7 @@ private[graft] object VectorQueries {
         .head().getSeq[Float](0).toArray
       val idx = fixturePath("pq", dir, "embeddings")
       Similarity.ensurePqIndex(emb, "vec_id", "embedding", numSub = 8, k = 16, idx)
-      val exact = emb.filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), round(sqrt(
-          VecFns.dot(col("embedding"), col("embedding"))
-            - lit(2.0) * VecFns.dot(col("embedding"), typedlit(q))
-            + lit(q.map(x => x.toDouble * x).sum)), 6).as("l2"))
-        .orderBy(col("l2").asc, col("vec_id").asc).limit(10)
-      val pq = Similarity.pqTopK(s, idx, emb, "vec_id", "embedding", q, 10,
-        rerank = 100, excludeId = 0L)
-      def ranked(df: DataFrame, prefix: String): DataFrame =
-        df.agg(sort_array(collect_list(struct(col("l2").as("__d"),
-            col("vec_id").as("__id")))).as("a"))
-          .select(posexplode(col("a")).as(Seq("rk", "r")))
-          .select(col("rk"), col("r.__d").as(s"${prefix}_d"))
-      val dominated = ranked(exact, "ex").join(ranked(pq, "pq"), Seq("rk"))
-        .agg(coalesce(every(col("pq_d") >= col("ex_d") - 1e-9), lit(true))
-          .as("pq_dominated_ok"))
-      val recall = exact.select(col("vec_id"))
-        .join(pq.select(col("vec_id")), Seq("vec_id"), "left_semi")
-        .agg((count(lit(1)) >= 6L).as("pq_recall_ok"))
-      exact.crossJoin(broadcast(recall)).crossJoin(broadcast(dominated))
+      pqEnvelope(s, idx, emb, q, "pq_recall_ok", "pq_dominated_ok")
         .select(col("vec_id"), col("l2"), col("pq_recall_ok"),
           col("pq_dominated_ok"))
         .orderBy(col("l2").asc, col("vec_id"))
@@ -550,25 +500,9 @@ private[graft] object VectorQueries {
         Similarity.appendIvfIndex(s, tmp,
           emb.filter(col("vec_id") % 4 === 3), "vec_id", "embedding")
       }
-      val brute = Similarity.bruteTopK(emb, "vec_id", "embedding", q, 10,
-        excludeId = 0L)
-      val ivf = Similarity.ivfTopKIndexed(s, idx, "vec_id", "embedding", q, 10,
-          nprobe = 4, excludeId = 0L)
-        .select(col("vec_id"))
-      val verdict = brute.select(col("vec_id"))
-        .join(ivf, Seq("vec_id"), "left_semi")
-        .agg((count(lit(1)) >= 6L).as("ivf_recall_ok"))
-      brute.crossJoin(broadcast(verdict))
-        .select(col("vec_id"), col("cosine"), col("ivf_recall_ok"))
-        .orderBy(col("cosine").desc, col("vec_id"))
+      ivfRecallEnvelope(s, emb, q, idx)
     }, oracle =
-      """WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0)
-         SELECT e.vec_id,
-           round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-             CAST(q.embedding AS DOUBLE[])), 6) AS cosine,
-           TRUE AS ivf_recall_ok
-         FROM embeddings e, q WHERE e.vec_id <> 0
-         ORDER BY cosine DESC, e.vec_id LIMIT 10"""),
+      SqlIvfEnvelope),
 
     // ---------------- SQ8 scalar-quantized similarity (FULL oracle, bit-exact) ----------------
     // The fourth ANN tier, and the only one that needs NO recall
@@ -704,16 +638,8 @@ private[graft] object VectorQueries {
     }, oracle =
       // two-stage serve: q197's code-dot stage feeding an exact rounded
       // cosine re-rank — both stages deterministic, replayed verbatim
-      """WITH d AS (
-           SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings),
-         m AS (SELECT dim, max(abs(x)) AS mx FROM d GROUP BY dim),
-         c AS (
-           SELECT vec_id, d.dim,
-             CASE WHEN mx > 0 THEN CAST(round(x * 127.0 / mx) AS BIGINT)
-                  ELSE 0 END AS code
-           FROM d JOIN m ON d.dim = m.dim),
+      s"""WITH $SqlEmbeddingDims,
+         $SqlSq8Codes,
          q AS (SELECT dim, code AS qc FROM c WHERE vec_id = 0),
          s1 AS (
            SELECT c.vec_id, CAST(sum(c.code * q.qc) AS BIGINT) AS qscore
@@ -782,16 +708,8 @@ private[graft] object VectorQueries {
     }, oracle =
       // IVF-SQ8 envelope: the UNPRUNED SQ8 ranking replayed bit-exactly
       // (q197's device), the two pruning guarantees pinned TRUE
-      """WITH d AS (
-           SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings),
-         m AS (SELECT dim, max(abs(x)) AS mx FROM d GROUP BY dim),
-         c AS (
-           SELECT vec_id, d.dim,
-             CASE WHEN mx > 0 THEN CAST(round(x * 127.0 / mx) AS BIGINT)
-                  ELSE 0 END AS code
-           FROM d JOIN m ON d.dim = m.dim),
+      s"""WITH $SqlEmbeddingDims,
+         $SqlSq8Codes,
          q AS (SELECT dim, code AS qc FROM c WHERE vec_id = 0)
          SELECT c.vec_id, CAST(sum(c.code * q.qc) AS BIGINT) AS qscore,
            TRUE AS ivfsq8_recall_ok, TRUE AS ivfsq8_dominated_ok
@@ -820,16 +738,8 @@ private[graft] object VectorQueries {
     }, oracle =
       // filtered search: the same bit-exact code ranking restricted to
       // the predicate's id set (pre-filter semantics)
-      """WITH d AS (
-           SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings),
-         m AS (SELECT dim, max(abs(x)) AS mx FROM d GROUP BY dim),
-         c AS (
-           SELECT vec_id, d.dim,
-             CASE WHEN mx > 0 THEN CAST(round(x * 127.0 / mx) AS BIGINT)
-                  ELSE 0 END AS code
-           FROM d JOIN m ON d.dim = m.dim),
+      s"""WITH $SqlEmbeddingDims,
+         $SqlSq8Codes,
          q AS (SELECT dim, code AS qc FROM c WHERE vec_id = 0)
          SELECT c.vec_id, CAST(sum(c.code * q.qc) AS BIGINT) AS qscore
          FROM c JOIN q ON c.dim = q.dim
@@ -853,16 +763,8 @@ private[graft] object VectorQueries {
     }, oracle =
       // batch serve: q197's quantization device crossed with the probe
       // set, per-probe rank cut — all integer, bit-exact
-      """WITH d AS (
-           SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings),
-         m AS (SELECT dim, max(abs(x)) AS mx FROM d GROUP BY dim),
-         c AS (
-           SELECT vec_id, d.dim,
-             CASE WHEN mx > 0 THEN CAST(round(x * 127.0 / mx) AS BIGINT)
-                  ELSE 0 END AS code
-           FROM d JOIN m ON d.dim = m.dim),
+      s"""WITH $SqlEmbeddingDims,
+         $SqlSq8Codes,
          q AS (SELECT vec_id AS query_id, dim, code AS qc FROM c
                WHERE vec_id IN (0, 7, 13, 21)),
          sc AS (
@@ -1005,10 +907,7 @@ private[graft] object VectorQueries {
     }, oracle =
       // the three-tier funnel: 1-bit Hamming cut -> SQ8 code-dot cut ->
       // exact cosine final, replayed stage by stage
-      """WITH d AS (
-           SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings),
+      s"""WITH $SqlEmbeddingDims,
          t AS (SELECT dim, (min(x) + max(x)) / 2 AS thr FROM d GROUP BY dim),
          b AS (SELECT vec_id, d.dim,
                  CASE WHEN x > thr THEN 1 ELSE 0 END AS bit
@@ -1067,19 +966,8 @@ private[graft] object VectorQueries {
     }, oracle =
       // JL projection: the md5 sign matrix, the 1e-6 input quantization,
       // and the integer projected-space L2 ranking all replayed
-      """WITH d AS (
-           SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings),
-         vq AS (SELECT vec_id, dim,
-                  CAST(round(x * 1e6) AS BIGINT) AS q
-                FROM d),
-         s AS (SELECT dim, j,
-                 CASE WHEN substring(md5('jl_7_' || (dim - 1) || '_' || j),
-                     1, 1) IN ('0','2','4','6','8','a','c','e')
-                   THEN 1 ELSE -1 END AS sgn
-               FROM (SELECT DISTINCT dim FROM vq)
-               CROSS JOIN range(16) r(j)),
+      s"""WITH $SqlEmbeddingDims,
+         $SqlJlSigns,
          p AS (SELECT vec_id, j, CAST(sum(q * sgn) AS BIGINT) AS pj
                FROM vq JOIN s USING (dim) GROUP BY 1, 2),
          qp AS (SELECT j, pj AS qj FROM p WHERE vec_id = 0),
@@ -1117,26 +1005,7 @@ private[graft] object VectorQueries {
         Similarity.appendPqIndex(s, tmp,
           emb.filter(col("vec_id") % 4 === 3), "vec_id", "embedding")
       }
-      val exact = emb.filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), round(sqrt(
-          VecFns.dot(col("embedding"), col("embedding"))
-            - lit(2.0) * VecFns.dot(col("embedding"), typedlit(q))
-            + lit(q.map(x => x.toDouble * x).sum)), 6).as("l2"))
-        .orderBy(col("l2").asc, col("vec_id").asc).limit(10)
-      val pq = Similarity.pqTopK(s, idx, emb, "vec_id", "embedding", q, 10,
-        rerank = 100, excludeId = 0L)
-      def ranked(df: DataFrame, prefix: String): DataFrame =
-        df.agg(sort_array(collect_list(struct(col("l2").as("__d"),
-            col("vec_id").as("__id")))).as("a"))
-          .select(posexplode(col("a")).as(Seq("rk", "r")))
-          .select(col("rk"), col("r.__d").as(s"${prefix}_d"))
-      val dominated = ranked(exact, "ex").join(ranked(pq, "pq"), Seq("rk"))
-        .agg(coalesce(every(col("pq_d") >= col("ex_d") - 1e-9), lit(true))
-          .as("pq_recall_dominated_ok"))
-      val recall = exact.select(col("vec_id"))
-        .join(pq.select(col("vec_id")), Seq("vec_id"), "left_semi")
-        .agg((count(lit(1)) >= 6L).as("pq_append_recall_ok"))
-      exact.crossJoin(broadcast(recall)).crossJoin(broadcast(dominated))
+      pqEnvelope(s, idx, emb, q, "pq_append_recall_ok", "pq_recall_dominated_ok")
         .select(col("vec_id"), col("l2"), col("pq_append_recall_ok"),
           col("pq_recall_dominated_ok"))
         .orderBy(col("l2").asc, col("vec_id"))
@@ -1264,19 +1133,8 @@ private[graft] object VectorQueries {
         .orderBy("vec_id", "j"), oracle =
       // the kernel's every projected coordinate vs the md5 sign device
       // (q228's quantization idiom)
-      """WITH d AS (
-           SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings),
-         vq AS (SELECT vec_id, dim,
-                  CAST(round(x * 1e6) AS BIGINT) AS q
-                FROM d),
-         s AS (SELECT dim, j,
-                 CASE WHEN substring(md5('jl_7_' || (dim - 1) || '_' || j),
-                     1, 1) IN ('0','2','4','6','8','a','c','e')
-                   THEN 1 ELSE -1 END AS sgn
-               FROM (SELECT DISTINCT dim FROM vq)
-               CROSS JOIN range(16) r(j))
+      s"""WITH $SqlEmbeddingDims,
+         $SqlJlSigns
          SELECT vec_id, CAST(j AS BIGINT) AS j,
            CAST(sum(q * sgn) AS BIGINT) AS p
          FROM vq JOIN s USING (dim) GROUP BY 1, 2 ORDER BY 1, 2"""),
@@ -1434,26 +1292,7 @@ private[graft] object VectorQueries {
         .select(col("vec_id"),
           col("embedding").cast("array<double>").as("embedding"))
         .unionByName(shiftedD)
-      val exact = grownD.filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), round(sqrt(
-          VecFns.dot(col("embedding"), col("embedding"))
-            - lit(2.0) * VecFns.dot(col("embedding"), typedlit(q0))
-            + lit(q0.map(x => x.toDouble * x).sum)), 6).as("l2"))
-        .orderBy(col("l2").asc, col("vec_id").asc).limit(10)
-      val pq = Similarity.pqTopK(s, idx, grownD, "vec_id", "embedding",
-        q0, 10, rerank = 100, excludeId = 0L)
-      def ranked(df: DataFrame, prefix: String): DataFrame =
-        df.agg(sort_array(collect_list(struct(col("l2").as("__d"),
-            col("vec_id").as("__id")))).as("a"))
-          .select(posexplode(col("a")).as(Seq("rk", "r")))
-          .select(col("rk"), col("r.__d").as(s"${prefix}_d"))
-      val dominated = ranked(exact, "ex").join(ranked(pq, "pq"), Seq("rk"))
-        .agg(coalesce(every(col("pq_d") >= col("ex_d") - 1e-9), lit(true))
-          .as("pq_dominated_ok"))
-      val recall = exact.select(col("vec_id"))
-        .join(pq.select(col("vec_id")), Seq("vec_id"), "left_semi")
-        .agg((count(lit(1)) >= 6L).as("pq_recall_ok"))
-      exact.crossJoin(broadcast(recall)).crossJoin(broadcast(dominated))
+      pqEnvelope(s, idx, grownD, q0, "pq_recall_ok", "pq_dominated_ok")
         .select(col("vec_id"), col("l2"),
           lit(pre.getBoolean(0)).as("one_sub_flagged"),
           lit(pre.getBoolean(1)).as("flagged_is_shifted_sub"),
@@ -1491,4 +1330,55 @@ private[graft] object VectorQueries {
          FROM gl g, ql q WHERE g.vec_id <> 0
          ORDER BY l2 ASC, g.vec_id LIMIT 10"""),
   )
+
+  /** The IVF envelope's rows (q50, q186): the exact brute top-10 of `q`
+    * over `emb` beside the index's recall verdict — the IVF scan of
+    * `idx` (nprobe 4) recovers at least 6 of those 10.
+    */
+  private def ivfRecallEnvelope(s: SparkSession, emb: DataFrame, q: Array[Float],
+                                idx: String): DataFrame = {
+    val brute = Similarity.bruteTopK(emb, "vec_id", "embedding", q, 10,
+      excludeId = 0L)
+    val ivf = Similarity.ivfTopKIndexed(s, idx, "vec_id", "embedding", q, 10,
+        nprobe = 4, excludeId = 0L)
+      .select(col("vec_id"))
+    val verdict = brute.select(col("vec_id"))
+      .join(ivf, Seq("vec_id"), "left_semi")
+      .agg((count(lit(1)) >= 6L).as("ivf_recall_ok"))
+    brute.crossJoin(broadcast(verdict))
+      .select(col("vec_id"), col("cosine"), col("ivf_recall_ok"))
+      .orderBy(col("cosine").desc, col("vec_id"))
+  }
+
+  /** The PQ envelope (q148, q234, q247): the exact L2 top-10 of `q` over
+    * `emb` (id 0 excluded), crossed with two one-row verdicts over the
+    * PQ serve of `idx` — `recallOk`, at least 6 of the 10 recovered, and
+    * `dominatedOk`, no PQ rank beats the exact distance at that rank.
+    * Rankings align through sorted-array folds (10-row aggregations, no
+    * unpartitioned window).
+    */
+  private def pqEnvelope(s: SparkSession, idx: String, emb: DataFrame,
+                         q: Array[Float], recallOk: String,
+                         dominatedOk: String): DataFrame = {
+    val exact = emb.filter(col("vec_id") =!= 0)
+      .select(col("vec_id"), round(sqrt(
+        VecFns.dot(col("embedding"), col("embedding"))
+          - lit(2.0) * VecFns.dot(col("embedding"), typedlit(q))
+          + lit(q.map(x => x.toDouble * x).sum)), 6).as("l2"))
+      .orderBy(col("l2").asc, col("vec_id").asc).limit(10)
+    val pq = Similarity.pqTopK(s, idx, emb, "vec_id", "embedding", q, 10,
+      rerank = 100, excludeId = 0L)
+    def ranked(df: DataFrame, prefix: String): DataFrame =
+      df.agg(sort_array(collect_list(struct(col("l2").as("__d"),
+          col("vec_id").as("__id")))).as("a"))
+        .select(posexplode(col("a")).as(Seq("rk", "r")))
+        .select(col("rk"), col("r.__d").as(s"${prefix}_d"))
+    val dominated = ranked(exact, "ex").join(ranked(pq, "pq"), Seq("rk"))
+      .agg(coalesce(every(col("pq_d") >= col("ex_d") - 1e-9), lit(true))
+        .as(dominatedOk))
+    val recall = exact.select(col("vec_id"))
+      .join(pq.select(col("vec_id")), Seq("vec_id"), "left_semi")
+      .agg((count(lit(1)) >= 6L).as(recallOk))
+    exact.crossJoin(broadcast(recall)).crossJoin(broadcast(dominated))
+  }
 }

@@ -14,8 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `materialized`, the exact Jaccard verify, the segment keep-first
   * and the prior-generation archive filter — are pinned to one
   * definition each the same way, as are the streaming family's replay
-  * runner and centroid-sidecar resolve, and the registry's scratch
-  * directory rule.
+  * runner and centroid-sidecar resolve, the registry's scratch
+  * directory rule and its shared oracle steps.
   */
 class PublishAuditSpec extends AnyFunSuite {
 
@@ -76,6 +76,31 @@ class PublishAuditSpec extends AnyFunSuite {
     val raised = offenders(java.util.regex.Pattern.quote("Publish.raise(").r,
       _ != "StreamOps.scala")
     assert(raised.isEmpty, raised.mkString("\n"))
+  }
+
+  test("each shared oracle step of the registry is written once") {
+    // the DuckDB texts several oracles share are Support fragments that
+    // each oracle composes; a step's defining text, and each shared
+    // builder step, appears once under graft/registry
+    val registry = new java.io.File(srcDir, "graft/registry").getPath
+    Seq(
+      "string_split(trim(regexp_replace(regexp_replace(", // document tokens
+      "reach(id, lbl) AS (", // connected components
+      "ln((nd - df + 0.5e0)", // BM25 idf
+      "sum(q) OVER (PARTITION BY p)", // KG association score
+      "CASE WHEN bs * nb.n > nb.tot * bn", // media hash bits
+      "md5('jl_7_'", // JL sign matrix
+      "list_filter(ms, x -> x.s >= cur)", // leftmost-longest redaction
+      "lp0 AS (SELECT c", // Naive Bayes scores
+      "count(DISTINCT doc_id) AS n_distinct", // column profile
+      "count(*) AS c FROM tok GROUP BY 1", // unigram log-probs
+      """as("ivf_recall_ok")""", // IVF recall envelope
+      """agg(count(lit(1)).as("n_neardups"))""" // media near-dup counts
+    ).foreach { text =>
+      val hits = offenders(java.util.regex.Pattern.quote(text).r, _ => false)
+        .filter(_.startsWith(registry))
+      assert(hits.size == 1, s"expected one `$text` under $registry:\n" + hits.mkString("\n"))
+    }
   }
 
   test("every registry row's scratch directory comes from one rule") {
