@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
 """Repeated-code scan over Scala sources.
 
-Every file is read as a sequence of stripped lines. A window is WIDTH
-consecutive lines; a window that holds a blank, short (< MIN_LEN
+Every file is read as a sequence of stripped lines. A window is WIDTH (6)
+consecutive lines; a window that holds a blank, short (< MIN_LEN (4)
 characters) or comment line is skipped. The first occurrence of a
 window's text, in path order, is the original; every later one is a
 copy, and each line that lies in at least one copy counts once. The
@@ -10,12 +10,10 @@ count is split into lines inside a triple-quoted string (the registry's
 SQL texts) and lines of Scala code.
 
 Usage:
-  python3 tools/dupscan.py [--width N] [--min-len N] [--top N] PATH...
+  python3 tools/dupscan.py PATH...
     PATH is a .scala file or a directory searched for them. Prints one
-    line per file with copied lines (total, sql, code), then the totals;
-    --top N also prints the N most-copied windows.
+    line per file with copied lines (total, sql, code), then the totals.
 """
-import argparse
 import os
 import sys
 from collections import defaultdict
@@ -53,50 +51,41 @@ def is_comment(text):
     return text.startswith(("//", "/*", "*"))
 
 
-def scan(files, width, min_len):
-    seen = {}
+def scan(files):
+    seen = set()
     copied = defaultdict(set)  # path -> line numbers in a copy
-    windows = defaultdict(int)
     contents = {}
     for path in files:
         lines = read_lines(path)
         contents[path] = lines
-        ok = [len(t) >= min_len and not is_comment(t) for t, _ in lines]
-        for i in range(len(lines) - width + 1):
-            if not all(ok[i:i + width]):
+        ok = [len(t) >= MIN_LEN and not is_comment(t) for t, _ in lines]
+        for i in range(len(lines) - WIDTH + 1):
+            if not all(ok[i:i + WIDTH]):
                 continue
-            key = tuple(t for t, _ in lines[i:i + width])
+            key = tuple(t for t, _ in lines[i:i + WIDTH])
             if key in seen:
-                copied[path].update(range(i, i + width))
-                windows[key] += 1
+                copied[path].update(range(i, i + WIDTH))
             else:
-                seen[key] = (path, i)
+                seen.add(key)
     rows = []
     for path in files:
         nums = copied.get(path, set())
         if nums:
             sql = sum(1 for n in nums if contents[path][n][1])
             rows.append((path, len(nums), sql, len(nums) - sql))
-    return rows, windows, seen
+    return rows
 
 
-def main(argv):
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("paths", nargs="+")
-    ap.add_argument("--width", type=int, default=WIDTH)
-    ap.add_argument("--min-len", type=int, default=MIN_LEN)
-    ap.add_argument("--top", type=int, default=0)
-    args = ap.parse_args(argv)
-    rows, windows, seen = scan(scala_files(args.paths), args.width, args.min_len)
+def main(paths):
+    if not paths:
+        sys.exit(__doc__)
+    rows = scan(scala_files(paths))
     print(f"{'lines':>6} {'sql':>6} {'code':>6}  file")
     for path, n, sql, code in sorted(rows, key=lambda r: -r[1]):
         print(f"{n:6d} {sql:6d} {code:6d}  {path}")
     total = sum(r[1] for r in rows)
     sql = sum(r[2] for r in rows)
     print(f"{total:6d} {sql:6d} {total - sql:6d}  total")
-    for key, n in sorted(windows.items(), key=lambda kv: -kv[1])[:args.top]:
-        path, i = seen[key]
-        print(f"\n{n} copies of {path}:{i + 1}\n  " + "\n  ".join(key))
 
 
 if __name__ == "__main__":
